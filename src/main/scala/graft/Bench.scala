@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 object Bench {
@@ -89,64 +89,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the engine's recommended production confs (AQE + coalescing +
     // skew-join, UTC, nanos-as-long) — the bench measures the session
     // posture the scaladocs prescribe, not a bare-defaults session
-    val spark = graft.conf.Sessions.recommendedConfs(
-        shufflePartitions = cpus.toInt, maxPartitionBytes = 128L << 20)
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: the first query in a fresh JVM otherwise absorbs
-    // 5-8s of classloading/codegen/parquet-footer setup and its number
-    // becomes uninterpretable. q1 touches the scan + shuffle + agg
-    // machinery; a 4-row Word2Vec fit touches the MLlib trainer's
-    // classload/codegen path (q37's pass-1 number was otherwise ~2x its
-    // steady state — measuring initialization, not the query). Failures
-    // here surface in the timed run instead.
-    try {
-      val w = SparkEntry.queries("q1_pricing_summary")(spark, sfDir)
-      w.select(xxhash64(w.columns.toIndexedSeq.map(col): _*).as("__h"))
-        .agg(bit_xor(col("__h"))).collect()
-      import spark.implicits._
-      val toy = Seq(Seq("a", "b"), Seq("a", "c"), Seq("b", "c"), Seq("a", "b"))
-        .toDF("tokens")
-      graft.ml.Prod2Vec.train(toy,
-        graft.ml.Prod2Vec.Params(vectorSize = 4, minCount = 1,
-          numPartitions = 1)).getVectors.count()
-    } catch { case _: Throwable => () }
+    val spark = graft.conf.Sessions.forMain("graft-bench")
+    warmUp(spark, sfDir)
     var errors = Map.empty[String, String]
     // sorted order: deterministic run sequence run-to-run and round-to-
     // round (Map iteration order is arbitrary and changes with the
     // query count)
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // (elapsed seconds, error message if the pass failed)
-    def timeOnce(name: String): (Double, Option[String]) = {
-      // collect the previous query's garbage OUTSIDE the timed region —
-      // recorded r2-r4 benches all carried late-run GC noise (a 0.4 s
-      // query billed 5 s for its predecessors' allocations)
-      System.gc()
-      val t0 = System.nanoTime()
-      val err = try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        // Checksum over EVERY output column — a bare .count() lets
-        // Catalyst prune expensive computed columns out of the plan, so
-        // the "benchmark" would never evaluate them.
-        // bit_xor fold: order-independent and cannot overflow (sum of
-        // xxhash64 Longs throws ARITHMETIC_OVERFLOW under ANSI mode).
-        df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*).as("__h"))
-          .agg(bit_xor(col("__h"))).collect()
-        None
-      } catch {
-        case e: Throwable =>
-          Some(e.toString.replaceAll("""["\\\n\r\t]""", " ").take(200))
-      }
-      ((System.nanoTime() - t0) / 1e9, err)
-    }
     // Two BACK-TO-BACK timings per query, report the per-query MIN over
     // the runs that SUCCEEDED: any transient contention (driver
     // activity, JIT recompiles, stray GC) inflates one run but almost
@@ -162,7 +114,8 @@ object Bench {
     // (its `queries` time then measures failures, not the query) — so
     // `errors` membership IS the per-query failed/measured signal; an
     // all-fail entry keeps every run's message.
-    val obs = names.map { n => n -> (timeOnce(n), timeOnce(n)) }
+    val obs = names.map { n =>
+      n -> (timeOnce(spark, sfDir, n), timeOnce(spark, sfDir, n)) }
     val pass1 = obs.map { case (n, (a, _)) => n -> a }.toMap
     val pass2 = obs.map { case (n, (_, b)) => n -> b }.toMap
     // Contention self-defense: pass totals agreeing (within ~15% past
@@ -200,7 +153,8 @@ object Bench {
             case _ => if (x._1 <= y._1) x else y
           }
         val pass3 = names.map { n =>
-          n -> betterOf(timeOnce(n), timeOnce(n)) }.toMap
+          n -> betterOf(timeOnce(spark, sfDir, n),
+            timeOnce(spark, sfDir, n)) }.toMap
         val sus = suspects(pass2, pass3, factor = 3.0)
         wireTotals23 = divergent(passTotal(pass2), passTotal(pass3))
         (Seq(pass1, pass2, pass3), wireTotals23 || sus.nonEmpty, sus)
@@ -262,5 +216,51 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write target/bench.json: $e") }
     spark.stop()
+  }
+
+  /** Untimed warmup: the first query in a fresh JVM otherwise absorbs
+    * 5-8s of classloading/codegen/parquet-footer setup and its number
+    * becomes uninterpretable. q1 touches the scan + shuffle + agg
+    * machinery; a 4-row Word2Vec fit touches the MLlib trainer's
+    * classload/codegen path (q37's pass-1 number was otherwise ~2x its
+    * steady state — measuring initialization, not the query). Failures
+    * here surface in the timed run instead. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      checksum(SparkEntry.queries("q1_pricing_summary")(spark, sfDir))
+      import spark.implicits._
+      val toy = Seq(Seq("a", "b"), Seq("a", "c"), Seq("b", "c"), Seq("a", "b"))
+        .toDF("tokens")
+      graft.ml.Prod2Vec.train(toy,
+        graft.ml.Prod2Vec.Params(vectorSize = 4, minCount = 1,
+          numPartitions = 1)).getVectors.count()
+    } catch { case _: Throwable => () }
+
+  /** Checksum over EVERY output column — a bare .count() lets Catalyst
+    * prune expensive computed columns out of the plan, so the
+    * "benchmark" would never evaluate them. bit_xor fold:
+    * order-independent and cannot overflow (sum of xxhash64 Longs
+    * throws ARITHMETIC_OVERFLOW under ANSI mode). */
+  def checksum(df: DataFrame): Unit =
+    df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*).as("__h"))
+      .agg(bit_xor(col("__h"))).collect()
+
+  /** One timed build + [[checksum]] of query `name`: (elapsed seconds,
+    * error message if it failed). */
+  def timeOnce(spark: SparkSession, sfDir: String,
+               name: String): (Double, Option[String]) = {
+    // collect the previous query's garbage OUTSIDE the timed region —
+    // recorded r2-r4 benches all carried late-run GC noise (a 0.4 s
+    // query billed 5 s for its predecessors' allocations)
+    System.gc()
+    val t0 = System.nanoTime()
+    val err = try {
+      checksum(SparkEntry.queries(name)(spark, sfDir))
+      None
+    } catch {
+      case e: Throwable =>
+        Some(e.toString.replaceAll("""["\\\n\r\t]""", " ").take(200))
+    }
+    ((System.nanoTime() - t0) / 1e9, err)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling-study fixture generator (not part of the driver contract):
@@ -49,14 +48,7 @@ object GenScale {
       s"unknown table(s) ${unknown.mkString(",")}; valid: ${knownTables.toSeq.sorted.mkString(",")}")
     def want(t: String): Boolean =
       only.contains("all") || only.contains(t)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.conf.Sessions.forMain("graft-genscale")
     import spark.implicits._
 
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")

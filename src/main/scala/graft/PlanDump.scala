@@ -1,28 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scratch plan-capture harness (not part of the driver contract):
   * writes `.explain("formatted")` output for the named queries to
   * `plans/<tag>/<query>_<suffix>.txt` — the optimization rounds' plan
-  * evidence files. Uses the same session confs as [[Bench]] so the
-  * captured plan is the plan the bench actually runs.
+  * evidence files. Runs in [[Bench]]'s session
+  * ([[graft.conf.Sessions.forMain]]) so the captured plan is the plan
+  * the bench actually runs.
   *
   * Usage: runMain graft.PlanDump <tag> <suffix> <query...>
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val Array(tag, suffix) = args.take(2)
     val names = args.drop(2).toSeq
-    val spark = graft.conf.Sessions.recommendedConfs(
-        shufflePartitions = cpus.toInt, maxPartitionBytes = 128L << 20)
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.conf.Sessions.forMain("graft-plandump")
     val dir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(dir)
     names.foreach { n =>

@@ -1,12 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Scratch profiling harness (not part of the driver contract).
   *
-  * Times each named query with the EXACT Bench method — full-output
-  * xxhash64 checksum (a bare count would let Catalyst prune the
-  * expensive computed columns), System.gc() outside the timed region,
+  * Times each named query in Bench's session, after [[Bench.warmUp]],
+  * with [[Bench.timeOnce]] (full-output xxhash64 checksum, System.gc()
+  * outside the timed region), over
   * two BACK-TO-BACK timings per query — and prints pass1/pass2/min, so
   * its numbers are directly comparable to the driver's BENCH artifact
   * when adjudicating a drift. Heap comes from the forked JVM's -Xmx
@@ -19,42 +17,16 @@ import org.apache.spark.sql.functions._
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // EXACTLY Bench's session (recommendedConfs: AQE + coalescing +
-    // skew-join + UTC + nanos-as-long) — r15 found Profile's old
-    // bare-conf session made funnel timings incomparable to the
-    // driver's BENCH artifact (no AQE coalescing = 32-task exchanges
-    // over tiny post-shuffle partitions)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.conf.Sessions.recommendedConfs(
-        shufflePartitions = cpus.toInt, maxPartitionBytes = 128L << 20)
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Bench's untimed warmup (q1 checksum) so pass1 of the first named
-    // query is not billed the fresh JVM's classload/codegen setup
-    try {
-      val w = SparkEntry.queries("q1_pricing_summary")(spark, sfDir)
-      w.select(xxhash64(w.columns.toIndexedSeq.map(col): _*).as("__h"))
-        .agg(bit_xor(col("__h"))).collect()
-    } catch { case _: Throwable => () }
+    val spark = graft.conf.Sessions.forMain("graft-profile")
+    Bench.warmUp(spark, sfDir)
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    def once(n: String): Double = {
-      System.gc()
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*).as("__h"))
-        .agg(bit_xor(col("__h"))).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
     names.foreach { n =>
-      val t1 = once(n)
-      val t2 = once(n)
-      println(f"$n%-28s pass1=$t1%8.2f s  pass2=$t2%8.2f s  " +
-        f"min=${math.min(t1, t2)}%8.2f s")
+      val passes = Seq.fill(2)(Map(n -> Bench.timeOnce(spark, sfDir, n)))
+      val Seq((_, min)) = Bench.minFold(Seq(n), passes)
+      val err = Bench.allFailMessage(n, passes).fold("")(e => s"  error=${e._2}")
+      println(f"$n%-28s pass1=${passes(0)(n)._1}%8.2f s  " +
+        f"pass2=${passes(1)(n)._1}%8.2f s  min=$min%8.2f s$err")
     }
     spark.stop()
   }

@@ -38,9 +38,10 @@ object SparkEntry {
     * enough that a store's per-micro-batch delta write + commit stays
     * one small file and its in-memory map a few MB, large enough that a
     * fixture-scale stream (10^1..10^5 keys) runs 1–2 stores instead of
-    * one per core. A 100 TB stream with 10^9-key state derives ~15k
-    * partitions — the same order a hand-tuned production job would
-    * set; SPARK_GRAFT_STREAM_STATE_PARTITIONS overrides either way. */
+    * one per core. The derived count never exceeds the session's
+    * `spark.sql.shuffle.partitions`: a 10^9-key stream asks for ~15k
+    * stores and gets the session setting, so a production deployment
+    * sizes its state by sizing that setting. */
   val StreamStateKeysPerPartition = 65536L
 
   /** Run `body` (a stream-start/processAllAvailable harness) with
@@ -60,10 +61,10 @@ object SparkEntry {
     * columns of the batch frame it is about to stage, or a row-count
     * upper bound where the key is a computed column — and the store
     * count is ⌈keyCard / [[StreamStateKeysPerPartition]]⌉ clamped to
-    * [`floor`, session setting]. The r15 constant 4 was honest only
-    * for the fixture's key space; the derivation sizes itself UP at
-    * any scale, and SPARK_GRAFT_STREAM_STATE_PARTITIONS still
-    * overrides (skipping the probe).
+    * [min(`floor`, session setting), session setting]. The r15
+    * constant 4 was honest only for the fixture's key space; the
+    * derivation grows with the key space up to the session's
+    * `spark.sql.shuffle.partitions`, which is its ceiling.
     *
     * Why the default floor is 4 and not 1: a STATEFUL operator's
     * per-trigger work (join probes, session merges, timeout scans) is
@@ -85,11 +86,9 @@ object SparkEntry {
                                            keyCard: => Long,
                                            floor: Int = 4)(body: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val n = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-      .map(_.toInt).getOrElse(math.max(math.min(floor, prev.toInt),
-        math.ceil(keyCard.toDouble / StreamStateKeysPerPartition).toInt))
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.max(1, math.min(n, prev.toInt)).toString)
+    val n = math.max(math.min(floor, prev.toInt),
+      math.ceil(keyCard.toDouble / StreamStateKeysPerPartition).toInt)
+    s.conf.set("spark.sql.shuffle.partitions", math.min(n, prev.toInt).toString)
     try body
     finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }

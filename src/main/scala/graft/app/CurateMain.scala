@@ -16,8 +16,8 @@ import scala.jdk.CollectionConverters._
   * Usage (local test rig):
   *   sbt "runMain graft.app.CurateMain <docsDir> <outDir> [config.yaml]"
   * On a cluster the same jar goes through spark-submit with a real
-  * master; the session builder only fills in a local master when none
-  * is configured, so `--master yarn`/`k8s://…` wins.
+  * master; [[graft.conf.Sessions.forMain]] only fills in a local
+  * master when none is configured, so `--master yarn`/`k8s://…` wins.
   *
   * YAML shape (every key optional — absent keys keep the
   * [[CorpusPipeline.Config]] defaults; section header `curate:`):
@@ -61,18 +61,10 @@ object CurateMain {
       .map(p => configFromYaml(
         new String(Files.readAllBytes(Paths.get(p)), UTF_8)))
       .getOrElse(CorpusPipeline.Config())
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // only stop the session we created — under a test harness (or any
     // host app) getOrCreate returns the caller's live session
     val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = graft.conf.Sessions.recommendedConfs(
-        shufflePartitions = cpus.toInt, maxPartitionBytes = 128L << 20)
-      .foldLeft(SparkSession.builder()
-        .master(sys.props.getOrElse("spark.master", s"local[$cpus]"))
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.conf.Sessions.forMain("graft-curate")
     val docs = spark.read.parquet(docsDir)
       .select("doc_id", "text", "lang", "source")
     val result = CorpusPipeline.curateToParquet(docs, outDir, cfg)

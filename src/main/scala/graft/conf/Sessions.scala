@@ -27,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  /** The conf map applied by [[builder]] — exposed for tests and for
+  /** The conf map applied by [[forMain]] — exposed for tests and for
     * callers who assemble their own builder/spark-submit. */
   def recommendedConfs(shufflePartitions: Int,
                        maxPartitionBytes: Long): Map[String, String] = {
@@ -46,22 +46,23 @@ object Sessions {
       "spark.sql.legacy.parquet.nanosAsLong" -> "true")
   }
 
-  /** A pre-tuned builder. `master` stays caller-supplied (None = let
-    * spark-submit decide — the cluster path); `checkpointDir` arms the
-    * [[graft.ops.Barrier]] reliable mode on the created session. Note
-    * `getOrCreate` reuses any live session WITHOUT re-applying confs —
-    * call this before anything else creates one. */
-  def build(appName: String,
-            shufflePartitions: Int,
-            maxPartitionBytes: Long = 128L << 20,
-            master: Option[String] = None,
-            checkpointDir: Option[String] = None): SparkSession = {
-    val b0 = SparkSession.builder().appName(appName)
-    val b1 = master.fold(b0)(b0.master)
-    val b = recommendedConfs(shufflePartitions, maxPartitionBytes)
-      .foldLeft(b1) { case (acc, (k, v)) => acc.config(k, v) }
-    val spark = b.getOrCreate()
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
+  /** The one session posture of the graft mains (Bench, Verify, Smoke,
+    * Profile, PlanDump, GenScale, CurateMain): [[recommendedConfs]] with
+    * `SPARK_GRAFT_CPUS` (default 4) shuffle partitions on
+    * `local[SPARK_GRAFT_CPUS]` — or on the master spark-submit set,
+    * which wins — UI off, WARN logging. The correctness dump therefore
+    * runs under exactly the confs the bench times. Note `getOrCreate`
+    * reuses any live session WITHOUT re-applying confs — call this
+    * before anything else creates one. */
+  def forMain(appName: String): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+    val master = sys.props.getOrElse("spark.master", s"local[$cpus]")
+    val spark = recommendedConfs(cpus, 128L << 20)
+      .foldLeft(SparkSession.builder().appName(appName).master(master)) {
+        case (b, (k, v)) => b.config(k, v) }
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
 }

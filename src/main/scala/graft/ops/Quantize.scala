@@ -268,7 +268,9 @@ object Quantize {
                      k: Int): Seq[(Int, DataFrame)] = {
     require(nprobes.nonEmpty && nprobes.forall(_ >= 1),
       s"nprobes must all be >= 1, got $nprobes")
+    require(m >= 1, s"m must be >= 1, got $m")
     val dim = df.select(size(col(vecCol)).as("n")).head().getInt(0)
+    require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val w = dim / m
     val cut = graft.ops.Barrier.cut _
     val cells = cut(ivfAssign(df, idCol, vecCol, coarse))

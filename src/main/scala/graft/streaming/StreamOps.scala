@@ -511,10 +511,14 @@ object StreamOps {
 
   /** Streaming twin of [[graft.ops.Quality.psi]] — continuous drift
     * monitoring of a score stream against a STATIC baseline (whose
-    * quantile boundaries are fixed by definition): the stream folds
+    * quantile boundaries are fixed by definition). The baseline's
+    * bounds, total and per-bin counts are derived and barriered ONCE,
+    * at wiring time: calling this runs those Spark jobs eagerly,
+    * before the caller starts the returned writer. The stream folds
     * into its distinct-score count frame (Complete-mode groupBy,
-    * vocab-bounded state), and each micro-batch re-derives the full
-    * PSI via [[graft.ops.Quality.psiFromCounts]] — equal to the batch
+    * vocab-bounded state), and each micro-batch re-bins only that
+    * stream side against the barriered baseline frames via
+    * [[graft.ops.Quality.psiFromBaselineFrames]] — equal to the batch
     * op over all rows seen so far. */
   def psiStream(baseline: DataFrame, scored: DataFrame, scoreCol: String,
                 bins: Int)(

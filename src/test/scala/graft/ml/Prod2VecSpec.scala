@@ -98,12 +98,13 @@ class Prod2VecSpec extends SparkSpec {
     val a = top20(1)
     assert(a.nonEmpty && a == top20(1))
     // np=8: per-iteration gradient averaging across partitions is only
-    // SEED-level reproducible (the W2vProfile trade: 3-4.5x throughput
-    // for statistical, not bit-level, identity). The priced claim: a
-    // double fit's top-20 neighbor SETS stay substantially overlapping
-    // per probe — mean Jaccard-style overlap >= 0.5 of k. (A bit-equal
-    // replay — common in-session where input splits repeat — passes at
-    // overlap 1.0; the law bounds the DRIFT, it does not demand drift.)
+    // SEED-level reproducible (the trade README's "Word2Vec.fit decade
+    // slope" prices: 3-4.5x throughput for statistical, not bit-level,
+    // identity). The priced claim: a double fit's top-20 neighbor SETS
+    // stay substantially overlapping per probe — mean Jaccard-style
+    // overlap >= 0.5 of k. (A bit-equal replay — common in-session where
+    // input splits repeat — passes at overlap 1.0; the law bounds the
+    // DRIFT, it does not demand drift.)
     def nbrSets(rows: Seq[(Long, Int, Long, Double)]): Map[Long, Set[Long]] =
       rows.groupBy(_._1).map { case (p, rs) => p -> rs.map(_._3).toSet }
     def doubleFitMean(): Double = {
