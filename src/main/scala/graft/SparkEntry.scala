@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.app.CorpusPipeline
 import graft.ops._
 import graft.ml.Prod2Vec
-import graft.streaming.StreamOps
+import graft.streaming.{Replay, StreamOps}
+import graft.streaming.Replay.{distinctKeys, withStreamStatePartitions}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, with matching DuckDB-runnable SQL in `oracleSql`.
@@ -22,123 +23,6 @@ object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Sources.table(s, dir, name)
-
-  /** Remove a temp staging tree (the q255/q256 stream-source dirs) —
-    * best-effort; a leftover temp dir must never fail a query. */
-  private def deleteRecursively(path: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(path)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-
-  /** State-store keys one shuffle partition is sized to hold: small
-    * enough that a store's per-micro-batch delta write + commit stays
-    * one small file and its in-memory map a few MB, large enough that a
-    * fixture-scale stream (10^1..10^5 keys) runs 1–2 stores instead of
-    * one per core. The derived count never exceeds the session's
-    * `spark.sql.shuffle.partitions`: a 10^9-key stream asks for ~15k
-    * stores and gets the session setting, so a production deployment
-    * sizes its state by sizing that setting. */
-  val StreamStateKeysPerPartition = 65536L
-
-  /** Run `body` (a stream-start/processAllAvailable harness) with
-    * `spark.sql.shuffle.partitions` sized to the stream's STATE KEY
-    * CARDINALITY, restoring the session value after (r15 optimization,
-    * r16 derivation).
-    *
-    * Why: a stateful micro-batch operator instantiates one state store
-    * per shuffle partition, and EVERY store pays a delta-file write +
-    * commit per micro-batch — cost proportional to the partition
-    * count, not the data (measured on the q261 replay shape: 5.6–12.4 s
-    * at 32 partitions vs 2.8–3.2 s at 2, same rows, same results).
-    * Stream-static joins pay the same per-trigger exchange tax. This
-    * is the guide's fewer-larger-partitions rule (§2.2) applied to
-    * state stores: `keyCard` is the harness's own (cheap) probe of its
-    * state key domain — an `approx_count_distinct` over the key
-    * columns of the batch frame it is about to stage, or a row-count
-    * upper bound where the key is a computed column — and the store
-    * count is ⌈keyCard / [[StreamStateKeysPerPartition]]⌉ clamped to
-    * [min(`floor`, session setting), session setting]. The r15
-    * constant 4 was honest only for the fixture's key space; the
-    * derivation grows with the key space up to the session's
-    * `spark.sql.shuffle.partitions`, which is its ceiling.
-    *
-    * Why the default floor is 4 and not 1: a STATEFUL operator's
-    * per-trigger work (join probes, session merges, timeout scans) is
-    * parallelized by the same partition count that prices the store
-    * commits, and below ~4 the saved delta-file commits no longer pay
-    * for the lost compute parallelism — measured on this fixture:
-    * q259's stream-stream interval join read 8.1 s at the derived 2
-    * partitions vs 5.7 s at 4; q262's session windows 5.6 s at 1 vs
-    * 4.5 s at 4 (while 32 partitions cost 5.6–12.4 s — the r15
-    * finding stands). Harnesses with NO state store (stateless gate
-    * chains whose wrapper exists only for the per-trigger
-    * stream-static exchange tax) pass `floor = 1` — for them fewer
-    * exchange tasks is pure win (q270 5.2 → 3.5 s at 1 partition).
-    * States are hash-partitioned, so the setting changes layout,
-    * never results — the oracle gates pin that. Never raises above
-    * the session's batch setting, so the driver's lower-core bench
-    * runs keep their proportions. */
-  private def withStreamStatePartitions[A](s: SparkSession,
-                                           keyCard: => Long,
-                                           floor: Int = 4)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val n = math.max(math.min(floor, prev.toInt),
-      math.ceil(keyCard.toDouble / StreamStateKeysPerPartition).toInt)
-    s.conf.set("spark.sql.shuffle.partitions", math.min(n, prev.toInt).toString)
-    try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** The [[withStreamStatePartitions]] key probe for a real key-column
-    * set: one map-side-combined HLL aggregate over the key columns —
-    * a pruned-scan pass, ~1% of the stream run it sizes. */
-  private def distinctKeys(df: org.apache.spark.sql.DataFrame,
-                           keys: org.apache.spark.sql.Column*): Long =
-    df.agg(approx_count_distinct(struct(keys: _*)).as("c"))
-      .head().getLong(0)
-
-  /** Stage the 5-column events frame as 4 parquet files plus two
-    * far-future sentinel rows (user_id −1 / event_type
-    * "__wm_sentinel__" — key values absent from the fixture), for the
-    * watermark-driven streaming certifications (q257/q261/q262). The
-    * file source replays files in MODIFICATION-TIME order, so the
-    * sentinels' mtimes are pushed explicitly after the fixture files —
-    * a deterministic two-extra-batch tail, no sleeps. With watermark
-    * delay `delayMs` the sentinels advance the final watermark to
-    * max(ts) + 3·widthMs — past every real window/session end — while
-    * their own key's window/session stays OPEN forever (wm never
-    * reaches maxTs + delayMs + 2·widthMs), so sentinels flush every
-    * real group and emit nothing themselves, in stream OR batch. */
-  private def stageEventsWithSentinels(s: SparkSession, ev: DataFrame,
-                                       tag: String, delayMs: Long,
-                                       widthMs: Long): String = {
-    val staged = java.nio.file.Files
-      .createTempDirectory(s"${tag}_stream_src").toString
-    ev.repartition(4).write.mode("overwrite").parquet(staged)
-    val maxTs = ev.agg(org.apache.spark.sql.functions.max(
-      org.apache.spark.sql.functions.col("ts"))).head.getLong(0)
-    val s1 = maxTs + (delayMs + 2 * widthMs) * 1000000L
-    def listed() = new java.io.File(staged).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).map(_.toPath).toSet
-    import s.implicits._
-    def appendSentinel(ts: Long, mtimeBump: Long): Unit = {
-      val before = listed()
-      Seq((-1L, ts, -1L, "__wm_sentinel__", 0.0))
-        .toDF("event_id", "ts", "user_id", "event_type", "value")
-        .repartition(1).write.mode("append").parquet(staged)
-      val t = java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() + mtimeBump)
-      (listed() -- before).foreach(
-        java.nio.file.Files.setLastModifiedTime(_, t))
-    }
-    appendSentinel(s1, 60000L)
-    appendSentinel(s1 + widthMs * 1000000L, 120000L)
-    staged
-  }
 
   /** Vocab size including the reserved UNK index — kept below the distinct
     * part count of every fixture SF so the OOV path is exercised. */
@@ -186,18 +70,6 @@ object SparkEntry {
        |  ) v WHERE idx <= ${VocabK - 1}
        |)""".stripMargin
 
-  /** Skip-gram positive pairs (A6'+P7+A9): encode lineitem through the
-    * vocab, shuffled-deterministic positions per order (seeded hash order,
-    * l_partkey tiebreak — hash ties can only occur between rows of the
-    * same item, so the pair multiset is well-defined), cap at
-    * [[MaxBasketLen]], window [[WindowW]].
-    *
-    * Zero-shuffle-after-groupBy form: one hash agg builds the ordered
-    * basket arrays, pair expansion is a per-row array expression
-    * ([[Pairs.orderedBaskets]] + [[Pairs.skipGramPairsFromBaskets]]) —
-    * the relational window+self-join form ([[Pairs.positions]] +
-    * [[Pairs.skipGramPairs]]) computes the identical pair multiset
-    * (PairsSpec proves it) but shuffles twice. */
   /** J2/J3 name joins + ordering shared by q14 (manual salts) and q147
     * (auto-salted): ranked (target, context, cnt, rnk) -> the named
     * co-purchase report. */
@@ -219,6 +91,18 @@ object SparkEntry {
       .orderBy("target_pid", "rnk")
   }
 
+  /** Skip-gram positive pairs (A6'+P7+A9): encode lineitem through the
+    * vocab, shuffled-deterministic positions per order (seeded hash order,
+    * l_partkey tiebreak — hash ties can only occur between rows of the
+    * same item, so the pair multiset is well-defined), cap at
+    * [[MaxBasketLen]], window [[WindowW]].
+    *
+    * Zero-shuffle-after-groupBy form: one hash agg builds the ordered
+    * basket arrays, pair expansion is a per-row array expression
+    * ([[Pairs.orderedBaskets]] + [[Pairs.skipGramPairsFromBaskets]]) —
+    * the relational window+self-join form ([[Pairs.positions]] +
+    * [[Pairs.skipGramPairs]]) computes the identical pair multiset
+    * (PairsSpec proves it) but shuffles twice. */
   private def pairs(s: SparkSession, dir: String): DataFrame = {
     val enc = Vocab.encode(t(s, dir, "lineitem"), "l_partkey", vocab(s, dir))
     val baskets = Pairs.orderedBaskets(enc, "l_orderkey", "idx",
@@ -429,6 +313,14 @@ object SparkEntry {
   val CurateMinQualityPct = 0.3
   val CurateChunkTokens = 64
   val CurateLangs = Set("en")
+  /** The q62 funnel config built from the constants above; the
+    * q62-family queries `.copy` it with the fields they change. */
+  private val CurateCfg = CorpusPipeline.Config(
+    keepLangs = CurateLangs, minQuality = CurateMinQuality,
+    shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
+    rowsPerBand = LshRows, jaccardTau = JaccardTau,
+    chunkTokens = CurateChunkTokens,
+    maxDupNgramRatio = Some(CurateMaxDupRatio), repetitionN = RepetitionN)
   /** q90/q93 CCNet perplexity tiers: 3 equal-count tiers per language;
     * the funnel keeps head+middle (the canonical recipe — the tail is
     * the rare-token/noise region). */
@@ -778,6 +670,10 @@ object SparkEntry {
   /** Tumbling window width / session gap for event analytics (ms). */
   val WindowMs = 3600000L
   val SessionGapMs = 1800000L
+  /** Watermark delay of the event-log stream certifications (their
+    * "60 days"): covers the fixture's span, so the staged files'
+    * arbitrary arrival order never drops an event. */
+  private val ReplayDelayMs = 60L * 24 * 3600 * 1000
   /** Time-bucket width for the range-bucketed as-of join (q50): 6h — the
     * fixture's one-week event span splits into ~28 buckets per key. */
   val AsofBucketMs = 6L * 3600000L
@@ -890,6 +786,12 @@ object SparkEntry {
     t(s, dir, "documents")
       .select(col("doc_id"), Text.tokens(col("text")).as("__t"))
       .select(col("doc_id"), Text.shingles(col("__t"), ShingleN).as("shingles"))
+
+  /** The q20 Jaccard-verified MinHash/LSH near-dup pairs over
+    * [[shingled]] at the shared constants. */
+  private def lshPairs(s: SparkSession, dir: String): DataFrame =
+    Dedup.nearDupPairs(shingled(s, dir), "doc_id", NumPerms, LshBands,
+      LshRows, JaccardTau)
 
   /** DuckDB CTE bodies (no WITH prefix) mirroring [[shingled]] over an
     * arbitrary (doc_id, text) source relation: tokens → distinct
@@ -2892,28 +2794,11 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // pin ("stateless prefix = batch gates on every micro-batch")
     // becomes a driver-gate fact, not just a spec claim.
     "q255_curate_stream" -> ((s, dir) => {
-      // stage the single-file fixture as a 4-file directory so the
-      // file source has a directory to watch and maxFilesPerTrigger=1
-      // genuinely exercises MULTIPLE micro-batches (fixture plumbing,
-      // the q41 CSV-leg pattern — a production stream would watch the
-      // landing directory directly)
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val staged = java.nio.file.Files
-        .createTempDirectory("q255_stream_src").toString
-      docs.repartition(4).write.mode("overwrite").parquet(staged)
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val out = graft.streaming.StreamOps.curateStream(sdf,
-        CurateLangs, CurateMinQuality)
-      val sink = s"q255_sink_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      val q = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // the memory sink owns the rows now — drop the staged files
-      deleteRecursively(staged)
-      s.table(sink)
-        .select(col("doc_id"), col("text"), col("pred_lang"),
+      Replay.replay(docs, "q255") { sdf =>
+        Replay.toMemory(StreamOps.curateStream(sdf,
+          CurateLangs, CurateMinQuality), "q255")
+      }.select(col("doc_id"), col("text"), col("pred_lang"),
           col("n_tokens"), col("quality_score"))
         .orderBy("doc_id")
     }),
@@ -2929,34 +2814,14 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       // state = one row per distinct 9-dp quality score; the document
       // count (a metadata-only parquet count) is its cheap upper bound
       withStreamStatePartitions(s, docs.count()) {
-      val staged = java.nio.file.Files
-        .createTempDirectory("q256_stream_src").toString
-      docs.repartition(4).write.mode("overwrite").parquet(staged)
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val scored = Text.qualityScore(sdf, "text", Seq("lang"))
-        .select(col("lang"), col("quality_score"))
-      val last = new java.util.concurrent.atomic.AtomicReference[
-        (Array[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType)]()
-      val q = graft.streaming.StreamOps.thresholdSweepStream(scored,
-        "quality_score", col("lang") === "en") { (sweep, _) =>
-          last.set((sweep.collect(), sweep.schema))
-        }.start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(staged)
-      val (rows, schema) = {
-        // a stream that produced zero micro-batches (e.g. an empty
-        // filtered frame staged no part files) leaves the ref null —
-        // fail diagnosably, not with an opaque NPE downstream
-        val v = last.get()
-        require(v != null,
-          s"stream produced no micro-batches (staged dir was $staged)")
-        v
+        Replay.replay(docs, "q256") { sdf =>
+          val scored = Text.qualityScore(sdf, "text", Seq("lang"))
+            .select(col("lang"), col("quality_score"))
+          Replay.lastBatch(s)(StreamOps.thresholdSweepStream(scored,
+            "quality_score", col("lang") === "en"))
+        }.orderBy("threshold")
       }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .orderBy("threshold")
-    }}),
+    }),
 
     // The STATEFUL/WATERMARKED twin under the driver gate (q255/q256
     // certified the stateless prefix and Complete-mode aggregation —
@@ -2977,20 +2842,14 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
           col("event_type"), col("value"))
       // flatMapGroupsWithState keys on event_type — probe that domain
       withStreamStatePartitions(s, distinctKeys(ev, col("event_type"))) {
-      val staged = stageEventsWithSentinels(s, ev, "q257",
-        60L * 24 * 3600 * 1000, WindowMs)
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val out = graft.streaming.StreamOps.robustAnomalyStream(sdf,
-        WindowMs, AnomalyTrailing, RobustKNum, RobustKDen, "60 days")
-      val sink = s"q257_sink_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      val q = out.toDF().writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(staged)
-      s.table(sink).orderBy("event_type", "window_start_ms")
-    }}),
+        Replay.replayWithSentinels(ev, "q257", ReplayDelayMs, WindowMs) {
+          sdf =>
+            Replay.toMemory(StreamOps.robustAnomalyStream(sdf, WindowMs,
+              AnomalyTrailing, RobustKNum, RobustKDen, "60 days").toDF(),
+              "q257")
+        }.orderBy("event_type", "window_start_ms")
+      }
+    }),
 
     // The BUILT-IN streaming windowed aggregation under the driver
     // gate (q257 certified custom flatMapGroupsWithState state; this
@@ -3008,24 +2867,17 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       // state = one row per open (tumbling window, event_type) pair
       withStreamStatePartitions(s, distinctKeys(ev,
         expr(s"ts div ${WindowMs * 1000000L}"), col("event_type"))) {
-      val staged = stageEventsWithSentinels(s, ev, "q261",
-        60L * 24 * 3600 * 1000, WindowMs)
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val out = graft.streaming.StreamOps.windowedCounts(sdf,
-          s"$WindowMs milliseconds", "60 days")
-        .select(unix_millis(col("window_start")).as("window_start_ms"),
-          col("event_type"), col("n_events"),
-          floor(col("sum_value") * lit(100) + lit(0.5)).cast("long")
-            .as("sum_cents"))
-      val sink = s"q261_sink_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      val q = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(staged)
-      s.table(sink).orderBy("window_start_ms", "event_type")
-    }}),
+        Replay.replayWithSentinels(ev, "q261", ReplayDelayMs, WindowMs) {
+          sdf =>
+            Replay.toMemory(StreamOps.windowedCounts(sdf,
+                s"$WindowMs milliseconds", "60 days")
+              .select(unix_millis(col("window_start")).as("window_start_ms"),
+                col("event_type"), col("n_events"),
+                floor(col("sum_value") * lit(100) + lit(0.5)).cast("long")
+                  .as("sum_cents")), "q261")
+        }.orderBy("window_start_ms", "event_type")
+      }
+    }),
 
     // The BUILT-IN session_window under the driver gate: gap-merged
     // per-user sessions emitted as the watermark passes each session
@@ -3041,33 +2893,26 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
           col("event_type"), col("value"))
       // session-window state is per-user — probe the user domain
       withStreamStatePartitions(s, distinctKeys(ev, col("user_id"))) {
-      val staged = stageEventsWithSentinels(s, ev, "q262",
-        60L * 24 * 3600 * 1000, SessionGapMs)
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      // NOTE: no post-agg filter — a comparison filter above a
-      // streaming session aggregation empties the append output
-      // (observed on 4.1.2; the session-window operator's output
-      // rows don't survive a pushed-down predicate), and none is
-      // needed: the sentinel user's session never closes (its end
-      // sits ~60 days past the final watermark), so it cannot reach
-      // the sink.
-      val out = graft.streaming.StreamOps.sessionWindows(sdf,
-          s"$SessionGapMs milliseconds", "60 days")
-        .select(col("user_id"),
-          unix_millis(col("session_start")).as("session_start_ms"),
-          unix_millis(col("session_end")).as("session_end_ms"),
-          col("n_events"),
-          floor(col("sum_value") * lit(100) + lit(0.5)).cast("long")
-            .as("sum_cents"))
-      val sink = s"q262_sink_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      val q = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(staged)
-      s.table(sink).orderBy("user_id", "session_start_ms")
-    }}),
+        Replay.replayWithSentinels(ev, "q262", ReplayDelayMs, SessionGapMs) {
+          sdf =>
+            // NOTE: no post-agg filter — a comparison filter above a
+            // streaming session aggregation empties the append output
+            // (observed on 4.1.2; the session-window operator's output
+            // rows don't survive a pushed-down predicate), and none is
+            // needed: the sentinel user's session never closes (its end
+            // sits ~60 days past the final watermark), so it cannot
+            // reach the sink.
+            Replay.toMemory(StreamOps.sessionWindows(sdf,
+                s"$SessionGapMs milliseconds", "60 days")
+              .select(col("user_id"),
+                unix_millis(col("session_start")).as("session_start_ms"),
+                unix_millis(col("session_end")).as("session_end_ms"),
+                col("n_events"),
+                floor(col("sum_value") * lit(100) + lit(0.5)).cast("long")
+                  .as("sum_cents")), "q262")
+        }.orderBy("user_id", "session_start_ms")
+      }
+    }),
 
     // scd2Stream under the driver gate — the NO-watermark keyed-state
     // case (closed versions emit the moment the next version arrives,
@@ -3085,47 +2930,40 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
           col("event_type"))
       // scd2 keyed state is per-user — probe the user domain
       withStreamStatePartitions(s, distinctKeys(ev, col("user_id"))) {
-      val staged = java.nio.file.Files
-        .createTempDirectory("q258_stream_src").toString
-      val slices = 4
-      val cnt = ev.count()
-      // certification plumbing: one bounded fixture-sized sort to cut
-      // the history into ordered slices — persisted, because each of
-      // the 4 slice writes below consumes it (without the persist every
-      // write re-ran the global history sort, 4 passes for 1)
-      val sliced = ev.withColumn("__rn", row_number()
-        .over(Window.orderBy(col("ts"), col("event_id"))).cast("long"))
-        .persist()
-      val base = System.currentTimeMillis()
-      for (i <- 0 until slices) {
-        val lo = i.toLong * cnt / slices
-        val hi = (i + 1).toLong * cnt / slices
-        val tmp = java.nio.file.Files
-          .createTempDirectory(s"q258_slice$i").toString
-        sliced.filter(col("__rn") > lo && col("__rn") <= hi).drop("__rn")
-          .repartition(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(staged, f"slice_$i%02d.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-        deleteRecursively(tmp)
+        val slices = 4
+        val cnt = ev.count()
+        // certification plumbing: one bounded fixture-sized sort to cut
+        // the history into ordered slices — persisted, because each of
+        // the 4 slice writes below consumes it (without the persist every
+        // write re-ran the global history sort, 4 passes for 1)
+        val sliced = ev.withColumn("__rn", row_number()
+          .over(Window.orderBy(col("ts"), col("event_id"))).cast("long"))
+          .persist()
+        def stage(staged: String): Unit = {
+          val base = System.currentTimeMillis()
+          for (i <- 0 until slices) {
+            val lo = i.toLong * cnt / slices
+            val hi = (i + 1).toLong * cnt / slices
+            val dst = java.nio.file.Paths.get(staged, f"slice_$i%02d.parquet")
+            Replay.withTempDir(s"q258_slice$i") { tmp =>
+              sliced.filter(col("__rn") > lo && col("__rn") <= hi)
+                .drop("__rn").repartition(1).write.mode("overwrite")
+                .parquet(tmp)
+              val part = new java.io.File(tmp).listFiles()
+                .filter(_.getName.endsWith(".parquet")).head
+              java.nio.file.Files.copy(part.toPath, dst)
+            }
+            java.nio.file.Files.setLastModifiedTime(dst,
+              java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
+          }
+        }
+        val out =
+          try Replay.replayStaged(s, ev.schema, "q258")(stage) { sdf =>
+            Replay.toMemory(StreamOps.scd2Stream(sdf).toDF(), "q258")
+          } finally sliced.unpersist(blocking = false)
+        out.orderBy("user_id", "version")
       }
-      val sdf = s.readStream.schema(sliced.drop("__rn").schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val out = graft.streaming.StreamOps.scd2Stream(sdf)
-      val sink = s"q258_sink_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      val q = out.toDF().writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally {
-        q.stop()
-        sliced.unpersist(blocking = false)
-      }
-      deleteRecursively(staged)
-      s.table(sink).orderBy("user_id", "version")
-    }}),
+    }),
 
     // The STREAM-STREAM join case under the driver gate: both sides of
     // intervalJoin replay the event log as independent micro-batched
@@ -3142,33 +2980,20 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       // join state buffers WHOLE ROWS per side under the 60-day
       // watermark, so the row count (not a key domain) sizes the stores
       withStreamStatePartitions(s, ev.count()) {
-      def stage(tag: String): String = {
-        val d = java.nio.file.Files
-          .createTempDirectory(s"q259_${tag}_src").toString
-        ev.repartition(2).write.mode("overwrite").parquet(d)
-        d
+        Replay.replay(ev, "q259_l", files = 2) { l =>
+          Replay.replay(ev, "q259_r", files = 2) { r =>
+            Replay.toMemory(StreamOps.intervalJoin(
+                l, r, "user_id", 0L, WindowMs, "60 days")
+              .select(col("user_id"), col("event_id").as("l_id"),
+                col("r_event_id").as("r_id"),
+                expr("(ts - pmod(ts, 1000000)) div 1000000").cast("long")
+                  .as("l_ms"),
+                expr("(r_ts - pmod(r_ts, 1000000)) div 1000000").cast("long")
+                  .as("r_ms")), "q259")
+          }
+        }.orderBy("user_id", "l_id", "r_id")
       }
-      val ldir = stage("l")
-      val rdir = stage("r")
-      def src(d: String) = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
-      val out = graft.streaming.StreamOps.intervalJoin(
-          src(ldir), src(rdir), "user_id", 0L, WindowMs, "60 days")
-        .select(col("user_id"), col("event_id").as("l_id"),
-          col("r_event_id").as("r_id"),
-          expr("(ts - pmod(ts, 1000000)) div 1000000").cast("long")
-            .as("l_ms"),
-          expr("(r_ts - pmod(r_ts, 1000000)) div 1000000").cast("long")
-            .as("r_ms"))
-      val sink = s"q259_sink_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      val q = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(ldir)
-      deleteRecursively(rdir)
-      s.table(sink).orderBy("user_id", "l_id", "r_id")
-    }}),
+    }),
 
     // The INCREMENTAL-ingest composition under the driver gate: the
     // odd half of the corpus streams through the full curateStream
@@ -3189,35 +3014,24 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       // floor 1: no state store here, so fewer exchange tasks is pure
       // win (see withStreamStatePartitions)
       withStreamStatePartitions(s, docs.count(), floor = 1) {
-      // stored-index-at-rest: the hash index re-enters the anti join
-      // every micro-batch — persist it once
-      val idx = docs
-        .filter(col("doc_id") % 2 === 0 || col("doc_id") % 8 === 1)
-        .select(md5(graft.ops.Text.normalize(col("text")).cast("binary"))
-          .as("content_hash")).distinct()
-        .persist()
-      val staged = java.nio.file.Files
-        .createTempDirectory("q260_stream_src").toString
-      docs.filter(col("doc_id") % 2 === 1)
-        .repartition(4).write.mode("overwrite").parquet(staged)
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val out = graft.streaming.StreamOps.curateStream(sdf,
-        CurateLangs, CurateMinQuality, existingHashes = Some(idx))
-      val sink = s"q260_sink_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      val q = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally {
-        q.stop()
-        idx.unpersist(blocking = false)
+        // stored-index-at-rest: the hash index re-enters the anti join
+        // every micro-batch — persist it once
+        val idx = docs
+          .filter(col("doc_id") % 2 === 0 || col("doc_id") % 8 === 1)
+          .select(md5(graft.ops.Text.normalize(col("text")).cast("binary"))
+            .as("content_hash")).distinct()
+          .persist()
+        val out =
+          try Replay.replay(docs.filter(col("doc_id") % 2 === 1), "q260") {
+            sdf =>
+              Replay.toMemory(StreamOps.curateStream(sdf, CurateLangs,
+                CurateMinQuality, existingHashes = Some(idx)), "q260")
+          } finally idx.unpersist(blocking = false)
+        out.select(col("doc_id"), col("text"), col("pred_lang"),
+            col("n_tokens"), col("quality_score"))
+          .orderBy("doc_id")
       }
-      deleteRecursively(staged)
-      s.table(sink)
-        .select(col("doc_id"), col("text"), col("pred_lang"),
-          col("n_tokens"), col("quality_score"))
-        .orderBy("doc_id")
-    }}),
+    }),
 
     // EXACTLY-ONCE RESTART under the driver gate (the kill/recover
     // spec's production property, now hash-certified): the first half
@@ -3231,33 +3045,26 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // breaks the hash.
     "q263_curate_stream_restart" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val staged = java.nio.file.Files
-        .createTempDirectory("q263_stream_src").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory("q263_sink").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("q263_ckpt").toString
-      def start() = {
-        val sdf = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(staged)
-        graft.streaming.StreamOps.curateStream(sdf,
-            CurateLangs, CurateMinQuality)
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").start()
+      // the parquet SINK is the result, read after the harness exits —
+      // only the source staging and the checkpoint go; /tmp owns the
+      // sink dir's lifetime
+      val outDir = Replay.tempDir("q263_sink")
+      Replay.withTempDir("q263_stream_src") { staged =>
+        Replay.withTempDir("q263_ckpt") { ckpt =>
+          // one start per half: the odd half lands while the query is
+          // down, and the second start resumes from the checkpoint
+          for (parity <- Seq(0, 1)) {
+            Replay.stageFiles(docs.filter(col("doc_id") % 2 === parity),
+              staged, files = 2)
+            Replay.drain(StreamOps.curateStream(
+                Replay.source(s, docs.schema, staged),
+                CurateLangs, CurateMinQuality)
+              .writeStream.format("parquet").option("path", outDir)
+              .option("checkpointLocation", ckpt)
+              .outputMode("append").start())
+          }
+        }
       }
-      docs.filter(col("doc_id") % 2 === 0)
-        .repartition(2).write.mode("append").parquet(staged)
-      val q1 = start()
-      try { q1.processAllAvailable() } finally { q1.stop() }
-      docs.filter(col("doc_id") % 2 === 1)
-        .repartition(2).write.mode("append").parquet(staged)
-      val q2 = start()
-      try { q2.processAllAvailable() } finally { q2.stop() }
-      // the parquet SINK is the result — only the source staging and
-      // the checkpoint can go; /tmp owns the sink dir's lifetime
-      deleteRecursively(staged)
-      deleteRecursively(ckpt)
       s.read.parquet(outDir)
         .select(col("doc_id"), col("text"), col("pred_lang"),
           col("n_tokens"), col("quality_score"))
@@ -3284,37 +3091,15 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       // sizes the stores and pre-materializes the cache
       withStreamStatePartitions(s,
         distinctKeys(baseline, col("quality_score"))) {
-      val staged = java.nio.file.Files
-        .createTempDirectory("q264_stream_src").toString
-      docs.repartition(4).write.mode("overwrite").parquet(staged)
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val scored = Text.qualityScore(sdf, "text", Seq("source"))
-        .filter(col("source") === KsSourceA)
-        .select(col("quality_score"))
-      val last = new java.util.concurrent.atomic.AtomicReference[
-        (Array[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType)]()
-      val q = graft.streaming.StreamOps.psiStream(baseline, scored,
-        "quality_score", PsiBins) { (p, _) =>
-          last.set((p.collect(), p.schema))
-        }.start()
-      try { q.processAllAvailable() } finally {
-        q.stop()
-        baseline.unpersist(blocking = false)
+        try Replay.replay(docs, "q264") { sdf =>
+          val scored = Text.qualityScore(sdf, "text", Seq("source"))
+            .filter(col("source") === KsSourceA)
+            .select(col("quality_score"))
+          Replay.lastBatch(s)(StreamOps.psiStream(baseline, scored,
+            "quality_score", PsiBins))
+        } finally baseline.unpersist(blocking = false)
       }
-      deleteRecursively(staged)
-      val (rows, schema) = {
-        // a stream that produced zero micro-batches (e.g. an empty
-        // filtered frame staged no part files) leaves the ref null —
-        // fail diagnosably, not with an opaque NPE downstream
-        val v = last.get()
-        require(v != null,
-          s"stream produced no micro-batches (staged dir was $staged)")
-        v
-      }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    }}),
+    }),
 
     // Wald's sequential test run the way Wald designed it — ON the
     // stream: the event log rides a micro-batched file stream into
@@ -3329,32 +3114,12 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       // Complete-mode state is one row per (day, user) — probe that
       withStreamStatePartitions(s, distinctKeys(ev,
         expr("ts div 86400000000000"), col("user_id"))) {
-      val staged = java.nio.file.Files
-        .createTempDirectory("q265_stream_src").toString
-      ev.repartition(4).write.mode("overwrite").parquet(staged)
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val last = new java.util.concurrent.atomic.AtomicReference[
-        (Array[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType)]()
-      val q = graft.streaming.StreamOps.sprtStream(sdf, "purchase",
-        SprtP0, SprtP1, SprtAlpha, SprtBeta) { (tr, _) =>
-          last.set((tr.collect(), tr.schema))
-        }.start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(staged)
-      val (rows, schema) = {
-        // a stream that produced zero micro-batches (e.g. an empty
-        // filtered frame staged no part files) leaves the ref null —
-        // fail diagnosably, not with an opaque NPE downstream
-        val v = last.get()
-        require(v != null,
-          s"stream produced no micro-batches (staged dir was $staged)")
-        v
+        Replay.replay(ev, "q265") { sdf =>
+          Replay.lastBatch(s)(StreamOps.sprtStream(sdf, "purchase",
+            SprtP0, SprtP1, SprtAlpha, SprtBeta))
+        }.orderBy("day")
       }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .orderBy("day")
-    }}),
+    }),
 
     // The live data card: documents ride a micro-batched file stream
     // into corpusReportStream's monoid state (slice-bounded, never
@@ -3366,32 +3131,12 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       // monoid state is one row per (source, lang) slice — probe that
       withStreamStatePartitions(s,
         distinctKeys(docs, col("source"), col("lang"))) {
-      val staged = java.nio.file.Files
-        .createTempDirectory("q266_stream_src").toString
-      docs.repartition(4).write.mode("overwrite").parquet(staged)
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val last = new java.util.concurrent.atomic.AtomicReference[
-        (Array[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType)]()
-      val q = graft.streaming.StreamOps.corpusReportStream(sdf,
-        "source", "lang", "text") { (card, _) =>
-          last.set((card.collect(), card.schema))
-        }.start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(staged)
-      val (rows, schema) = {
-        // a stream that produced zero micro-batches (e.g. an empty
-        // filtered frame staged no part files) leaves the ref null —
-        // fail diagnosably, not with an opaque NPE downstream
-        val v = last.get()
-        require(v != null,
-          s"stream produced no micro-batches (staged dir was $staged)")
-        v
+        Replay.replay(docs, "q266") { sdf =>
+          Replay.lastBatch(s)(StreamOps.corpusReportStream(sdf,
+            "source", "lang", "text"))
+        }.orderBy("source", "lang")
       }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .orderBy("source", "lang")
-    }}),
+    }),
 
     // dropDuplicatesWithinWatermark under the driver gate: the event
     // log replays as a micro-batched file stream through dedupStream
@@ -3413,22 +3158,12 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       // dedup state is one row per distinct content key — probe it
       withStreamStatePartitions(s,
         distinctKeys(ev, col("user_id"), col("event_type"))) {
-      val staged = java.nio.file.Files
-        .createTempDirectory("q267_stream_src").toString
-      ev.repartition(4).write.mode("overwrite").parquet(staged)
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val out = graft.streaming.StreamOps.dedupStream(sdf, "content",
-          "60 days")
-        .select(col("content_hash"))
-      val sink = s"q267_sink_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      val q = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(staged)
-      s.table(sink).orderBy("content_hash")
-    }}),
+        Replay.replay(ev, "q267") { sdf =>
+          Replay.toMemory(StreamOps.dedupStream(sdf, "content", "60 days")
+            .select(col("content_hash")), "q267")
+        }.orderBy("content_hash")
+      }
+    }),
 
     // The z-score anomaly monitor's streaming twin under the driver
     // gate (q257 certified the Hampel variant; this is the classical
@@ -3443,20 +3178,13 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
           col("event_type"), col("value"))
       // flatMapGroupsWithState keys on event_type — probe that domain
       withStreamStatePartitions(s, distinctKeys(ev, col("event_type"))) {
-      val staged = stageEventsWithSentinels(s, ev, "q268",
-        60L * 24 * 3600 * 1000, WindowMs)
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val out = graft.streaming.StreamOps.anomalyStream(sdf,
-        WindowMs, AnomalyTrailing, AnomalyZ, "60 days")
-      val sink = s"q268_sink_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      val q = out.toDF().writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(staged)
-      s.table(sink).orderBy("event_type", "window_start_ms")
-    }}),
+        Replay.replayWithSentinels(ev, "q268", ReplayDelayMs, WindowMs) {
+          sdf =>
+            Replay.toMemory(StreamOps.anomalyStream(sdf, WindowMs,
+              AnomalyTrailing, AnomalyZ, "60 days").toDF(), "q268")
+        }.orderBy("event_type", "window_start_ms")
+      }
+    }),
 
     // mapGroupsWithState running per-user totals under the driver
     // gate — the Update-mode keyed-state case (q257/q268 certified
@@ -3473,28 +3201,24 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
         .select(col("user_id"), col("value"))
       // mapGroupsWithState keys on user_id — probe the user domain
       withStreamStatePartitions(s, distinctKeys(ev, col("user_id"))) {
-      val staged = java.nio.file.Files
-        .createTempDirectory("q269_stream_src").toString
-      ev.repartition(4).write.mode("overwrite").parquet(staged)
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-        .select(col("user_id"), col("value")).as[(Long, Double)]
-      val finalState = new java.util.concurrent.ConcurrentHashMap[
-        Long, (Long, Double)]()
-      val q = graft.streaming.StreamOps.runningUserState(sdf)
-        .toDF().writeStream.outputMode("update")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.collect().foreach { r =>
-            finalState.put(r.getLong(0), (r.getLong(1), r.getDouble(2)))
-          }
-        }.start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(staged)
-      val rows = finalState.asScala.toSeq.map { case (u, (n, sv)) =>
-        (u, n, math.floor(sv * 100 + 0.5).toLong)
+        val finalState = new java.util.concurrent.ConcurrentHashMap[
+          Long, (Long, Double)]()
+        Replay.replay(ev, "q269") { sdf =>
+          Replay.drain(StreamOps.runningUserState(
+              sdf.select(col("user_id"), col("value")).as[(Long, Double)])
+            .toDF().writeStream.outputMode("update")
+            .foreachBatch { (b: DataFrame, _: Long) =>
+              b.collect().foreach { r =>
+                finalState.put(r.getLong(0), (r.getLong(1), r.getDouble(2)))
+              }
+            }.start())
+        }
+        val rows = finalState.asScala.toSeq.map { case (u, (n, sv)) =>
+          (u, n, math.floor(sv * 100 + 0.5).toLong)
+        }
+        rows.toDF("user_id", "n_events", "sum_cents").orderBy("user_id")
       }
-      rows.toDF("user_id", "n_events", "sum_cents").orderBy("user_id")
-    }}),
+    }),
 
     // The near-dedup gate on a REAL stream (q124 certifies the same
     // function on a batch frame): odd-id docs ride a micro-batched
@@ -3508,32 +3232,22 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       // (metadata-only parquet count); floor 1: no state store, fewer
       // exchange tasks is pure win (measured 5.2 → 3.5 s)
       withStreamStatePartitions(s, docs.count(), floor = 1) {
-      // the static SimHash index re-enters the band join every
-      // micro-batch — persist it once (the stored-index-at-rest
-      // posture; without it each trigger re-fingerprints the corpus)
-      val idx = Dedup.simhashes(docs.filter(col("doc_id") % 2 === 0),
-        "doc_id", "text").persist()
-      val staged = java.nio.file.Files
-        .createTempDirectory("q270_stream_src").toString
-      docs.filter(col("doc_id") % 2 === 1)
-        .repartition(4).write.mode("overwrite").parquet(staged)
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val out = graft.streaming.StreamOps.dedupNearStreamAgainst(sdf,
-          "text", idx, MaxHamming)
-        .select(col("doc_id"), col("lang"), col("source"),
-          col("n_chars"))
-      val sink = s"q270_sink_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      val q = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally {
-        q.stop()
-        idx.unpersist(blocking = false)
+        // the static SimHash index re-enters the band join every
+        // micro-batch — persist it once (the stored-index-at-rest
+        // posture; without it each trigger re-fingerprints the corpus)
+        val idx = Dedup.simhashes(docs.filter(col("doc_id") % 2 === 0),
+          "doc_id", "text").persist()
+        val out =
+          try Replay.replay(docs.filter(col("doc_id") % 2 === 1), "q270") {
+            sdf =>
+              Replay.toMemory(StreamOps.dedupNearStreamAgainst(sdf,
+                  "text", idx, MaxHamming)
+                .select(col("doc_id"), col("lang"), col("source"),
+                  col("n_chars")), "q270")
+          } finally idx.unpersist(blocking = false)
+        out.orderBy("doc_id")
       }
-      deleteRecursively(staged)
-      s.table(sink).orderBy("doc_id")
-    }}),
+    }),
 
     // The aggregation-side skew lever under the driver gate: the q10
     // co-occurrence counts re-derived through saltedCounts' two-stage
@@ -3746,13 +3460,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // by the unordered source pair they bridge.
     "q130_dup_source_matrix" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val sh = shingled(s, dir)
-      val sigs = Dedup.minhashSignatures(sh, "doc_id", NumPerms)
-      val cands = Dedup.lshCandidatePairs(
-        Dedup.lshBands(sigs, "doc_id", LshBands, LshRows), "doc_id")
-      Dedup.dupSourceMatrix(
-        Dedup.jaccardVerify(cands, sh, "doc_id", JaccardTau),
-        docs, "doc_id", "source")
+      Dedup.dupSourceMatrix(lshPairs(s, dir), docs, "doc_id", "source")
         .orderBy("source_a", "source_b")
     }),
 
@@ -3951,12 +3659,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
 
     // MinHash+LSH near-dup pairs, Jaccard-verified at tau.
     "q20_lsh_near_pairs" -> ((s, dir) => {
-      val sh = shingled(s, dir)
-      val sigs = Dedup.minhashSignatures(sh, "doc_id", NumPerms)
-      val cands = Dedup.lshCandidatePairs(
-        Dedup.lshBands(sigs, "doc_id", LshBands, LshRows), "doc_id")
-      Dedup.jaccardVerify(cands, sh, "doc_id", JaccardTau)
-        .orderBy("id_a", "id_b")
+      lshPairs(s, dir).orderBy("id_a", "id_b")
     }),
 
     // EXACT n-gram-Jaccard pairs via the inverted shingle index —
@@ -4010,12 +3713,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // label propagation to fixpoint) over the Jaccard-verified pair list —
     // the transitive complement of q43's greedy drop policy.
     "q51_near_dup_clusters" -> ((s, dir) => {
-      val sh = shingled(s, dir)
-      val sigs = Dedup.minhashSignatures(sh, "doc_id", NumPerms)
-      val cands = Dedup.lshCandidatePairs(
-        Dedup.lshBands(sigs, "doc_id", LshBands, LshRows), "doc_id")
-      val verified = Dedup.jaccardVerify(cands, sh, "doc_id", JaccardTau)
-      Dedup.nearDupClusters(verified, "doc_id")
+      Dedup.nearDupClusters(lshPairs(s, dir), "doc_id")
         .orderBy("doc_id")
     }),
 
@@ -4024,11 +3722,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // loss-reweighting alternative to q53's hard drop. Singletons
     // (docs in no verified pair) weigh 1.
     "q91_softdedup_weights" -> ((s, dir) => {
-      val sh = shingled(s, dir)
-      val sigs = Dedup.minhashSignatures(sh, "doc_id", NumPerms)
-      val cands = Dedup.lshCandidatePairs(
-        Dedup.lshBands(sigs, "doc_id", LshBands, LshRows), "doc_id")
-      val verified = Dedup.jaccardVerify(cands, sh, "doc_id", JaccardTau)
+      val verified = lshPairs(s, dir)
       Dedup.softDedupWeights(t(s, dir, "documents"), "doc_id",
           Dedup.nearDupClusters(verified, "doc_id"))
         .orderBy("doc_id")
@@ -4037,11 +3731,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // Per-source near-duplication audit: docs, dup docs, post-dedup
     // count and dup rate per source slice.
     "q99_dup_stats" -> ((s, dir) => {
-      val sh = shingled(s, dir)
-      val sigs = Dedup.minhashSignatures(sh, "doc_id", NumPerms)
-      val cands = Dedup.lshCandidatePairs(
-        Dedup.lshBands(sigs, "doc_id", LshBands, LshRows), "doc_id")
-      val verified = Dedup.jaccardVerify(cands, sh, "doc_id", JaccardTau)
+      val verified = lshPairs(s, dir)
       Dedup.dupStats(t(s, dir, "documents"), "doc_id", "source",
           Dedup.nearDupClusters(verified, "doc_id"))
         .orderBy("source")
@@ -4101,8 +3791,8 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // Streaming near-dedup gate, batch-twin form: odd-id docs arrive
     // as the "stream", even-id docs are the stored SimHash index —
     // survivors are arrivals with no index fingerprint within
-    // MaxHamming. The same function runs on a readStream frame
-    // (StreamOpsSpec drives it); with MaxHamming < SimHashBands the
+    // MaxHamming. The same function runs on a streaming frame
+    // (StreamOpsSpec and q270 drive it); with MaxHamming < SimHashBands the
     // band join is exhaustive by pigeonhole, so the oracle's
     // brute-force min-hamming form is exact.
     "q124_near_dedup_stream" -> ((s, dir) => {
@@ -4469,13 +4159,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // frames curate persists internally (survivors/shingles — all
     // survivor-sized) stay cached for the query's lifetime.
     "q62_corpus_curate" -> ((s, dir) => {
-      val cfg = CorpusPipeline.Config(
-        keepLangs = CurateLangs, minQuality = CurateMinQuality,
-        shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
-        rowsPerBand = LshRows, jaccardTau = JaccardTau,
-        chunkTokens = CurateChunkTokens,
-        maxDupNgramRatio = Some(CurateMaxDupRatio), repetitionN = RepetitionN)
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
+      CorpusPipeline.curate(t(s, dir, "documents"), CurateCfg,
         collectFunnel = false).chunks
         .orderBy("doc_id", "chunk_idx")
     }),
@@ -4488,13 +4172,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // A manifest hash match certifies the entire raw-docs →
     // training-shards product end to end — the one-call loader story.
     "q274_corpus_export" -> ((s, dir) => {
-      val cfg = CorpusPipeline.Config(
-        keepLangs = CurateLangs, minQuality = CurateMinQuality,
-        shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
-        rowsPerBand = LshRows, jaccardTau = JaccardTau,
-        chunkTokens = CurateChunkTokens,
-        maxDupNgramRatio = Some(CurateMaxDupRatio), repetitionN = RepetitionN)
-      val r = CorpusPipeline.curate(t(s, dir, "documents"), cfg,
+      val r = CorpusPipeline.curate(t(s, dir, "documents"), CurateCfg,
         collectFunnel = false)
       val (_, manifest) = CorpusPipeline.exportShards(r.survivors.get,
         EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
@@ -4513,20 +4191,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // hashes the streamed manifest. Closes the last batch/stream
     // asymmetry: every public stage now has a streaming twin.
     "q277_corpus_export_stream" -> ((s, dir) => {
-      val cfg = CorpusPipeline.Config(
-        keepLangs = CurateLangs, minQuality = CurateMinQuality,
-        shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
-        rowsPerBand = LshRows, jaccardTau = JaccardTau,
-        chunkTokens = CurateChunkTokens,
-        maxDupNgramRatio = Some(CurateMaxDupRatio), repetitionN = RepetitionN)
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val staged = java.nio.file.Files
-        .createTempDirectory("q277_stream_src").toString
-      val atRest = java.nio.file.Files
-        .createTempDirectory("q277_at_rest").toString
-      docs.repartition(4).write.mode("overwrite").parquet(staged)
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
       // Production refresh cadence (r15 optimization): the landing
       // writes run per trigger as before, but the funnel + export
       // re-derivation — a full batch export per refresh — runs ON
@@ -4536,40 +4201,25 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       // so the on-demand refresh is bit-identical to the last
       // per-trigger refresh the previous harness collected — same
       // rows, same hash — for ONE funnel derivation instead of four.
-      val q = graft.streaming.StreamOps.exportStream(sdf, atRest, cfg,
-        EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
-        PackShards, refreshEvery = 0) { (_, _) => () }.start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      deleteRecursively(staged)
-      val last = new java.util.concurrent.atomic.AtomicReference[
-        (Array[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType)]()
-      graft.streaming.StreamOps.refreshExport(s, atRest, cfg,
-        EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
-        PackShards) { manifest =>
-          last.set((manifest.collect(), manifest.schema))
+      Replay.replay(docs, "q277") { sdf =>
+        Replay.withTempDir("q277_at_rest") { atRest =>
+          Replay.drain(StreamOps.exportStream(sdf, atRest, CurateCfg,
+            EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
+            PackShards, refreshEvery = 0) { (_, _) => () }.start())
+          Replay.lastFrame(s, "final refresh produced no manifest") {
+            keep => StreamOps.refreshExport(s, atRest, CurateCfg,
+              EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
+              PackShards)(keep)
+          }
         }
-      deleteRecursively(atRest)
-      val (rows, schema) = {
-        val v = last.get()
-        require(v != null,
-          s"final refresh produced no manifest (staged dir was $staged)")
-        v
-      }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .orderBy("shard")
+      }.orderBy("shard")
     }),
 
     // q62's funnel with the CCNet perplexity-tier gate live between the
     // repetition gate and exact dedup: per-language NLL tiers over the
     // gate survivors, only head+middle continue into dedup/chunking.
     "q93_corpus_curate_ppl" -> ((s, dir) => {
-      val cfg = CorpusPipeline.Config(
-        keepLangs = CurateLangs, minQuality = CurateMinQuality,
-        shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
-        rowsPerBand = LshRows, jaccardTau = JaccardTau,
-        chunkTokens = CurateChunkTokens,
-        maxDupNgramRatio = Some(CurateMaxDupRatio), repetitionN = RepetitionN,
+      val cfg = CurateCfg.copy(
         pplKeepTiers = Some(CuratePplTiers), pplBuckets = PplBuckets)
       CorpusPipeline.curate(t(s, dir, "documents"), cfg,
         collectFunnel = false).chunks
@@ -4579,13 +4229,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // q62's funnel with the quality-aware survivor policy: each near-dup
     // cluster keeps its highest-quality copy instead of its min id.
     "q98_corpus_curate_best" -> ((s, dir) => {
-      val cfg = CorpusPipeline.Config(
-        keepLangs = CurateLangs, minQuality = CurateMinQuality,
-        shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
-        rowsPerBand = LshRows, jaccardTau = JaccardTau,
-        chunkTokens = CurateChunkTokens,
-        maxDupNgramRatio = Some(CurateMaxDupRatio), repetitionN = RepetitionN,
-        keepBestQuality = true)
+      val cfg = CurateCfg.copy(keepBestQuality = true)
       CorpusPipeline.curate(t(s, dir, "documents"), cfg,
         collectFunnel = false).chunks
         .orderBy("doc_id", "chunk_idx")
@@ -4594,13 +4238,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // q62's funnel with the per-source relative quality cut ANDed into
     // the quality gate: keep each source's top (1 - pct) slice.
     "q102_corpus_curate_pct" -> ((s, dir) => {
-      val cfg = CorpusPipeline.Config(
-        keepLangs = CurateLangs, minQuality = CurateMinQuality,
-        shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
-        rowsPerBand = LshRows, jaccardTau = JaccardTau,
-        chunkTokens = CurateChunkTokens,
-        maxDupNgramRatio = Some(CurateMaxDupRatio), repetitionN = RepetitionN,
-        minQualityPct = Some(CurateMinQualityPct))
+      val cfg = CurateCfg.copy(minQualityPct = Some(CurateMinQualityPct))
       CorpusPipeline.curate(t(s, dir, "documents"), cfg,
         collectFunnel = false).chunks
         .orderBy("doc_id", "chunk_idx")
@@ -4610,13 +4248,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // and chunking: surviving text is rewritten (cross-survivor k-token
     // spans removed, first occurrence kept) before the chunker reads it.
     "q80_corpus_curate_scrubbed" -> ((s, dir) => {
-      val cfg = CorpusPipeline.Config(
-        keepLangs = CurateLangs, minQuality = CurateMinQuality,
-        shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
-        rowsPerBand = LshRows, jaccardTau = JaccardTau,
-        chunkTokens = CurateChunkTokens,
-        maxDupNgramRatio = Some(CurateMaxDupRatio), repetitionN = RepetitionN,
-        scrubSpanK = Some(CurateScrubK))
+      val cfg = CurateCfg.copy(scrubSpanK = Some(CurateScrubK))
       CorpusPipeline.curate(t(s, dir, "documents"), cfg,
         collectFunnel = false).chunks
         .orderBy("doc_id", "chunk_idx")
@@ -4628,12 +4260,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // and chunking — the composed decontamination under the oracle.
     "q70_corpus_curate_decon" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val cfg = CorpusPipeline.Config(
-        keepLangs = CurateLangs, minQuality = CurateMinQuality,
-        shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
-        rowsPerBand = LshRows, jaccardTau = JaccardTau,
-        chunkTokens = CurateChunkTokens,
-        maxDupNgramRatio = Some(CurateMaxDupRatio), repetitionN = RepetitionN,
+      val cfg = CurateCfg.copy(
         evalDocs = Some(docs.filter(col("doc_id") < EvalSetDocs)
           .select(col("doc_id"), col("text"))),
         contaminationMinShared = ContaminationMinShared)
@@ -4645,12 +4272,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // the survivors' tokens cut into fixed-length training sequences —
     // the composed raw-docs→training-sequences product under the oracle.
     "q77_corpus_curate_packed" -> ((s, dir) => {
-      val cfg = CorpusPipeline.Config(
-        keepLangs = CurateLangs, minQuality = CurateMinQuality,
-        shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
-        rowsPerBand = LshRows, jaccardTau = JaccardTau,
-        chunkTokens = CurateChunkTokens,
-        maxDupNgramRatio = Some(CurateMaxDupRatio), repetitionN = RepetitionN,
+      val cfg = CurateCfg.copy(
         packSeqTokens = Some(PackSeqTokens), packShards = PackShards)
       CorpusPipeline.curate(t(s, dir, "documents"), cfg,
         collectFunnel = false).packed.get
@@ -5054,11 +4676,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // by an md5 of the cluster representative, so near-duplicate docs
     // can never straddle the eval boundary.
     "q95_leakage_free_split" -> ((s, dir) => {
-      val sh = shingled(s, dir)
-      val sigs = Dedup.minhashSignatures(sh, "doc_id", NumPerms)
-      val cands = Dedup.lshCandidatePairs(
-        Dedup.lshBands(sigs, "doc_id", LshBands, LshRows), "doc_id")
-      val verified = Dedup.jaccardVerify(cands, sh, "doc_id", JaccardTau)
+      val verified = lshPairs(s, dir)
       Dedup.leakageFreeSplit(t(s, dir, "documents"), "doc_id",
           Dedup.nearDupClusters(verified, "doc_id"), SplitValidFrac)
         .orderBy("doc_id")
@@ -5136,11 +4754,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     // Quality-aware near-dedup: per cluster keep the HIGHEST-quality
     // copy (ties -> min id) instead of q53's min-id survivor.
     "q97_near_dedup_best" -> ((s, dir) => {
-      val sh = shingled(s, dir)
-      val sigs = Dedup.minhashSignatures(sh, "doc_id", NumPerms)
-      val cands = Dedup.lshCandidatePairs(
-        Dedup.lshBands(sigs, "doc_id", LshBands, LshRows), "doc_id")
-      val verified = Dedup.jaccardVerify(cands, sh, "doc_id", JaccardTau)
+      val verified = lshPairs(s, dir)
       val scored = t(s, dir, "documents").join(
         Text.qualityScore(t(s, dir, "documents"), "text")
           .select(col("doc_id"), col("quality_score")), Seq("doc_id"))

@@ -464,13 +464,8 @@ object CorpusPipeline {
         Dedup.dedupNearClustered(exact, "doc_id", shingled,
           cfg.minhashPerms, cfg.bands, cfg.rowsPerBand, cfg.jaccardTau)
       else {
-        val sigs = Dedup.minhashSignatures(shingled, "doc_id",
-          cfg.minhashPerms)
-        val cands = Dedup.lshCandidatePairs(
-          Dedup.lshBands(sigs, "doc_id", cfg.bands, cfg.rowsPerBand),
-          "doc_id")
-        val verified = Dedup.jaccardVerify(cands, shingled, "doc_id",
-          cfg.jaccardTau)
+        val verified = Dedup.nearDupPairs(shingled, "doc_id",
+          cfg.minhashPerms, cfg.bands, cfg.rowsPerBand, cfg.jaccardTau)
         // score as a scalar column over the persisted exact frame —
         // value-identical to the relational qualityScore and saves
         // its doc_id self-join (r15; guide §2.4)

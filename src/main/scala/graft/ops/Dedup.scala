@@ -248,6 +248,18 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
+  /** The verified near-dup pair list of a shingled frame — the full
+    * MinHash→LSH→Jaccard chain ([[minhashSignatures]] → [[lshBands]] →
+    * [[lshCandidatePairs]] → [[jaccardVerify]]): (id_a, id_b, jaccard),
+    * id_a < id_b, jaccard ≥ tau. */
+  private[graft] def nearDupPairs(shingled: DataFrame, idCol: String,
+                                  numPerms: Int, bands: Int, rpb: Int,
+                                  tau: Double): DataFrame = {
+    val sigs = minhashSignatures(shingled, idCol, numPerms)
+    val cands = lshCandidatePairs(lshBands(sigs, idCol, bands, rpb), idCol)
+    jaccardVerify(cands, shingled, idCol, tau)
+  }
+
   /** Chunk-level dedup-rate audit — the storage/training-mass savings
     * estimate over a chunked corpus (the consumer
     * [[graft.ops.Text.chunkContentDefined]] exists for): chunks
@@ -625,11 +637,7 @@ object Dedup {
                       maxDf: Long): DataFrame = {
     val sh = Barrier.cut(shingled)
     val exact = jaccardPairsExact(sh, idCol, tau, maxDf)
-    val found = jaccardVerify(
-        lshCandidatePairs(lshBands(
-          minhashSignatures(sh, idCol, numPerms), idCol, bands, rpb),
-          idCol),
-        sh, idCol, tau)
+    val found = nearDupPairs(sh, idCol, numPerms, bands, rpb, tau)
       .select(col("id_a").as("__fa"), col("id_b").as("__fb"),
         lit(1L).as("__hit"))
     exact
@@ -763,8 +771,7 @@ object Dedup {
   }
 
   /** Near-dedup applied: the corpus with near-duplicates REMOVED —
-    * the full MinHash→LSH→Jaccard pipeline ([[minhashSignatures]] →
-    * [[lshBands]] → [[lshCandidatePairs]] → [[jaccardVerify]]) driving a
+    * the full MinHash→LSH→Jaccard pipeline ([[nearDupPairs]]) driving a
     * greedy keep-smallest-id policy: a document is dropped iff it
     * Jaccard-matches (≥ tau) ANY smaller-id document. Greedy on the
     * verified pair list, not transitive-closure clustering — the
@@ -779,9 +786,7 @@ object Dedup {
     * id. */
   def dedupNear(df: DataFrame, idCol: String, shingled: DataFrame,
                 numPerms: Int, bands: Int, rpb: Int, tau: Double): DataFrame = {
-    val sigs = minhashSignatures(shingled, idCol, numPerms)
-    val cands = lshCandidatePairs(lshBands(sigs, idCol, bands, rpb), idCol)
-    val drops = jaccardVerify(cands, shingled, idCol, tau)
+    val drops = nearDupPairs(shingled, idCol, numPerms, bands, rpb, tau)
       .select(col("id_b").as(idCol)).distinct()
     df.join(drops, Seq(idCol), "left_anti")
   }
@@ -896,9 +901,7 @@ object Dedup {
   def dedupNearClustered(df: DataFrame, idCol: String, shingled: DataFrame,
                          numPerms: Int, bands: Int, rpb: Int, tau: Double,
                          maxIters: Int = 30): DataFrame = {
-    val sigs = minhashSignatures(shingled, idCol, numPerms)
-    val cands = lshCandidatePairs(lshBands(sigs, idCol, bands, rpb), idCol)
-    val verified = jaccardVerify(cands, shingled, idCol, tau)
+    val verified = nearDupPairs(shingled, idCol, numPerms, bands, rpb, tau)
     val drops = nearDupClusters(verified, idCol, maxIters)
       .filter(col(idCol) =!= col("cluster_rep"))
       .select(col(idCol))

@@ -105,27 +105,21 @@ object Text {
   }
 
   /** [[repetitionStats]]'s `dup_ngram_ratio` as ONE scalar column over
-    * a materialized token array: `1 − distinct/total` of the
-    * (non-distinct) n-gram multiset, NULL when the document has no
-    * n-grams (fewer than n tokens) — exactly the relational op's
-    * semantics (left-join NULL there, guarded `when` here; TextSpec
-    * pins value equality). Map-only: the funnel's repetition gate
-    * computes this once into its persisted frame instead of paying
-    * the explode + two doc-keyed shuffles + join-back of the full
-    * relational report. Pass a PRE-MATERIALIZED token column (its own
-    * projection) — inlining `split` here re-runs it per `element_at`
-    * (the documented fingerprints trap). */
-  def dupNgramRatioColumn(toks: Column, n: Int): Column = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    dupNgramRatioFromGrams(shinglesAll(toks, n))
-  }
-
-  /** [[dupNgramRatioColumn]] over an already-materialized gram ARRAY
-    * column — the hot-path form: the ratio references its gram input
-    * three times (two sizes + distinct), so passing the expression
-    * itself re-builds the grams per reference; a column attribute from
-    * a lower projection is referenced for free (the funnel computes
-    * `__g` once next to `__t`). */
+    * an already-materialized gram ARRAY (e.g. `shinglesAll(toks, n)`):
+    * `1 − distinct/total` of the (non-distinct) n-gram multiset, NULL
+    * when the document has no n-grams (fewer than n tokens) — exactly
+    * the relational op's semantics (left-join NULL there, guarded
+    * `when` here; TextSpec pins value equality). Map-only: the funnel's
+    * repetition gate computes this once into its persisted frame
+    * instead of paying the explode + two doc-keyed shuffles + join-back
+    * of the full relational report.
+    *
+    * Pass a column attribute from a lower projection, not the gram
+    * expression itself: the ratio references its input three times (two
+    * sizes + distinct), so an inlined expression re-builds the grams per
+    * reference (the funnel computes `__g` once next to `__t`; likewise
+    * the tokens under it — inlining `split` re-runs it per `element_at`,
+    * the documented fingerprints trap). */
   def dupNgramRatioFromGrams(grams: Column): Column = {
     val total = size(grams).cast("long")
     when(total > 0, Portable.intRatio9(

@@ -483,8 +483,6 @@ object StreamOps {
       dedupNearStreamAgainst(exactClean, "text", idx, nearMaxHam))
   }
 
-  /** Convenience: wire a streaming DataFrame to an in-memory sink (specs
-    * and smoke runs) and return the query name to select from. */
   /** Streaming twin of [[graft.ops.Quality.thresholdSweep]] — the
     * monitoring loop's continuous operating-point table: the scored
     * stream folds into the distinct-score count frame (a streaming
@@ -667,6 +665,9 @@ object StreamOps {
     finally r.persisted.foreach(_.unpersist(blocking = false))
   }
 
+  /** Wire a streaming DataFrame to an in-memory sink named `name` (specs
+    * and the [[Replay]] certifications) and start it; select from
+    * `spark.table(name)`. */
   def toMemorySink(df: DataFrame, name: String, mode: OutputMode)
       : org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream.format("memory").queryName(name).outputMode(mode).start()

@@ -22,17 +22,17 @@ class SessionsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { Sessions.recommendedConfs(64, 1024L) }
   }
 
-  // Comments are blanked first, so a scaladoc that names the builder
-  // does not count. The match spans layout (`SparkSession\n.builder()`)
-  // and also catches the `SparkSession.Builder` class and a selector
-  // import of `builder`. Limits: a `//` or `/*` inside a string literal
-  // is read as a comment start, and a bare `builder()` after a wildcard
+  // Comments are blanked first (graft.SourceScan), so a scaladoc that
+  // names the builder does not count. The match spans layout
+  // (`SparkSession\n.builder()`) and also catches the
+  // `SparkSession.Builder` class and a selector import of `builder`.
+  // Limits: a `//` or `/*` inside a string literal is read as a comment
+  // start, and a bare `builder()` after a wildcard
   // `import SparkSession._` is not caught.
-  private val comment = raw"(?s)/\*.*?\*/|//[^\n]*".r
   private val builderCall =
     raw"SparkSession\s*\.\s*(?:\{[^}]*)?\b[Bb]uilder\b".r
   private def buildsSession(src: String): Boolean =
-    builderCall.findFirstIn(comment.replaceAllIn(src, " ")).isDefined
+    builderCall.findFirstIn(graft.SourceScan.stripComments(src)).isDefined
 
   test("only conf/Sessions.scala builds a SparkSession under src/main") {
     assert(buildsSession("val s = SparkSession\n  .builder()\n  .getOrCreate()"))
@@ -40,17 +40,7 @@ class SessionsSpec extends AnyFunSuite {
     assert(buildsSession("new SparkSession.Builder()"))
     assert(!buildsSession("/** use SparkSession.builder here */ val x = 1"))
     assert(!buildsSession("// SparkSession.builder\nval x = 1"))
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"run from the repository root: ${root.toAbsolutePath} is missing")
-    val walk = java.nio.file.Files.walk(root)
-    val builders = try walk.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => buildsSession(java.nio.file.Files.readString(p)))
-        .map(p => root.relativize(p).toString.replace('\\', '/'))
-        .toSet
-      finally walk.close()
+    val builders = graft.SourceScan.mainFilesMatching(builderCall)
     assert(builders == Set("graft/conf/Sessions.scala"),
       s"SparkSession.builder outside conf/Sessions.scala: " +
         (builders - "graft/conf/Sessions.scala").toSeq.sorted.mkString(", "))

@@ -209,6 +209,30 @@ class TextSpec extends SparkSpec {
     }
   }
 
+  test("dupNgramRatioFromGrams over shinglesAll equals repetitionStats' " +
+      "dup_ngram_ratio per document, NULL below n tokens") {
+    val corpus = docs.select($"doc_id", $"text").union(Seq(
+      (11L, "a b a b c"),
+      (12L, "the cat the cat the cat sat"),
+      (13L, "z")
+    ).toDF("doc_id", "text"))
+    val nTokens = corpus.select($"doc_id", size(Text.tokens($"text")))
+      .as[(Long, Int)].collect().toMap
+    for (n <- 1 to 4) {
+      val scalar = corpus
+        .select($"doc_id", Text.tokens($"text").as("__t"))
+        .select($"doc_id", Text.shinglesAll($"__t", n).as("__g"))
+        .select($"doc_id", Text.dupNgramRatioFromGrams($"__g"))
+        .as[(Long, Option[Double])].collect().toMap
+      val relational = Text.repetitionStats(corpus, "text", n)
+        .select($"doc_id", $"dup_ngram_ratio")
+        .as[(Long, Option[Double])].collect().toMap
+      assert(scalar == relational, s"n=$n")
+      for ((doc, r) <- scalar)
+        assert(r.isEmpty == (nTokens(doc) < n), s"doc=$doc n=$n")
+    }
+  }
+
   test("maskPii: URL -> email -> phone -> IP -> digits; counts never double-bill") {
     val corpus = Seq(
       (1L, "mail me at bob.smith+x@corp.example.com today"),

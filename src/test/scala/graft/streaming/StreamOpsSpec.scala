@@ -528,6 +528,36 @@ class StreamOpsSpec extends SparkSpec {
     assert(got.map(_._1) == Seq(1L, 4L, 6L))
   }
 
+  test("a stateful query restarted from its checkpoint keeps its first " +
+      "start's state partition count, whatever the session says") {
+    // the withStreamStatePartitions contract: state sizing is decided
+    // at a query's first start — Spark restores the checkpointed
+    // spark.sql.shuffle.partitions on restart
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[(Long, Long, Long, String, Double)]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ss-parts")
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    def start(partitions: Int, row: (Long, Long, Long, String, Double)) = {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      val q = StreamOps.sessionWindows(
+          in.toDF().toDF("event_id", "ts", "user_id", "event_type", "value"),
+          "30 minutes", "1 hour")
+        .writeStream.format("noop")
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode(OutputMode.Append).start()
+      try {
+        in.addData(row)
+        q.processAllAvailable()
+        q.recentProgress.filter(_.stateOperators.nonEmpty).last
+          .stateOperators(0).numShufflePartitions
+      } finally q.stop()
+    }
+    try {
+      assert(start(3, (1L, 0L, 1L, "click", 1.0)) == 3L)
+      assert(start(7, (2L, 3 * H, 2L, "view", 2.0)) == 3L)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   test("hllRegisters runs UNCHANGED as a streaming aggregation with no " +
       "watermark — state is bounded by construction — and the final " +
       "register table equals the batch twin") {
