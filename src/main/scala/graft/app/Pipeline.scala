@@ -32,8 +32,7 @@ object Pipeline {
   /** Stage 2 of the reference (`run_data_quality_checks`,
     * `data_quality_checks.py:136-189`): hard gates before any compute. */
   def qualityGates(lineitem: DataFrame, part: DataFrame): Unit = {
-    Quality.checkNoNulls(lineitem, "l_orderkey")
-    Quality.checkNoNulls(lineitem, "l_partkey")
+    Quality.checkNoNulls(lineitem, "l_orderkey", "l_partkey")
     Quality.checkColumnCount(part, 6)
     Quality.checkPrimaryKey(part, "p_partkey")
   }

@@ -1,52 +1,160 @@
 package graft.ml
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Similarity
+import graft.ops.{Barrier, Portable, Similarity}
 
-/** IVF (inverted-file) approximate nearest-neighbor index: a KMeans
+/** IVF (inverted-file) approximate nearest-neighbor index: a k-means
   * coarse quantizer assigns every corpus vector to its nearest centroid;
   * a probe searches only the `nprobe` closest centroid lists. The
-  * centroid count ~ sqrt(corpus) keeps both the assignment join and the
-  * per-probe candidate set ~sqrt-sized — the classic FAISS IVF-Flat
-  * layout expressed relationally.
+  * centroid count ~ sqrt(corpus) keeps the per-probe candidate set
+  * ~sqrt-sized — the classic FAISS IVF-Flat layout expressed
+  * relationally.
+  *
+  * Training follows FAISS's IVF recipe: the coarse quantizer is fitted
+  * once, on the driver, on a bounded sample, and the corpus is then
+  * added in one assignment pass.
+  *  - Sample: at most 256·k vectors (FAISS's `max_points_per_centroid`),
+  *    the first in [[graft.ops.Portable.seededHash]]`(id, seed)` order —
+  *    one top-k job, no count. Driver memory is bounded by the sample,
+  *    256·k × dim doubles, whatever the corpus size.
+  *  - Fit: seeded k-means++ init, then Lloyd in double squared L2 until
+  *    no sample point changes cell or 20 rounds pass. Each round costs
+  *    ∝ 256·k²·dim on the driver, independent of the corpus size, and
+  *    runs no Spark job. Ties go to the smaller cell; a cell that loses
+  *    every point keeps its centre. When the sample holds fewer distinct
+  *    points than k, the surplus cells copy cell 0's centre, so by the
+  *    tie rule they get no vectors: `centroids` still has k rows.
+  *  - Assign: one map-only pass (no Exchange) over the corpus with the
+  *    centroids broadcast, same argmin and tie rule, materialized behind
+  *    [[graft.ops.Barrier.cut]].
   *
   * Complements [[graft.ops.Ann]] (SRP-LSH, deterministic/oracle-able)
   * and [[LshIndex]] (MLlib LSH): IVF adapts to the data distribution
   * (learned centroids) where LSH is data-oblivious. Training is seeded
-  * but not cross-engine reproducible — spec-verified, not oracle-backed.
+  * and deterministic (the same seed gives the same centroids and
+  * assignments) but not replayed by the oracle — spec-verified, not
+  * oracle-backed.
   *
-  * Scale posture: centroids (k × dim) broadcast; the corpus is assigned
-  * in one map-only pass and the search is a broadcast join from probes
-  * to their nprobe lists — the corpus never reshuffles per query.
+  * Scale posture: the index holds its inverted lists materialized, so
+  * every search reads the checkpointed (vec_id, cell, v) table and never
+  * re-reads or re-assigns the corpus; centroids (k × dim) broadcast, and
+  * the search is a broadcast join from probes to their nprobe lists.
   */
 object IvfIndex {
+
+  /** FAISS's `max_points_per_centroid`: the sample holds at most this
+    * many vectors per cell. */
+  private val SamplePerCell = 256
+  /** MLlib KMeans' default `maxIter`. */
+  private val MaxRounds = 20
 
   /** Assignment table (vec_id, cell, v: array<double>) + centroid table
     * (cell, c: array<double>). */
   case class Index(assignments: DataFrame, centroids: DataFrame)
 
-  /** Build the index: fit seeded KMeans on the vectors, assign each to
-    * its cell. */
+  /** Build the index: fit the coarse quantizer on a seeded sample of at
+    * most 256·k vectors, then assign every vector to its cell and
+    * materialize the inverted lists (see the object doc). */
   def build(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
             seed: Long = 42L): Index = {
+    require(k >= 1, s"IvfIndex.build: k = $k, need at least one cell")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val toVec = udf((a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
-    val vecs = corpus.select(col(idCol), toVec(col(vecCol)).as("features"))
-    val model = new KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol("features").setPredictionCol("cell").fit(vecs)
-    val assignments = model.transform(vecs)
-      .select(col(idCol), col("cell"),
-        vector_to_array(col("features")).as("v"))
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
+    val vecs = corpus.select(col(idCol),
+      transform(col(vecCol), _.cast("double")).as("v"))
+    val sample = vecs
+      .orderBy(Portable.seededHash(col(idCol), lit(seed)), col(idCol))
+      .limit(SamplePerCell * k).collect()
+      .map(_.getSeq[Double](1).toArray)
+    require(sample.nonEmpty, "IvfIndex.build: empty corpus")
+    val centres = train(sample, k, seed)
+    val bc = spark.sparkContext.broadcast(centres)
+    val cellOf = udf((v: Seq[Double]) => nearest(v.toArray, bc.value))
+    val assignments = Barrier.cut(
+      vecs.select(col(idCol), cellOf(col("v")).as("cell"), col("v")))
+    val centroids = centres.zipWithIndex
+      .map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "c")
     Index(assignments, centroids)
+  }
+
+  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+    s
+  }
+
+  /** Index of the centre nearest to `v` in squared L2; ties go to the
+    * smaller index. */
+  private def nearest(v: Array[Double], centres: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = sqDist(v, centres(0))
+    var j = 1
+    while (j < centres.length) {
+      val d = sqDist(v, centres(j))
+      if (d < bestD) { best = j; bestD = d }
+      j += 1
+    }
+    best
+  }
+
+  /** The Spark-free coarse-quantizer fit on a non-empty sample: seeded
+    * k-means++ init, then Lloyd until no point changes cell or
+    * [[MaxRounds]] rounds (see the object doc for ties, empty cells and
+    * a sample with fewer distinct points than k). Returns k centres. */
+  private[ml] def train(sample: Array[Array[Double]], k: Int,
+                        seed: Long): Array[Array[Double]] = {
+    val n = sample.length
+    val rnd = new java.util.Random(seed)
+    val centres = new Array[Array[Double]](k)
+    centres(0) = sample(rnd.nextInt(n)).clone()
+    // d2(i): squared distance from point i to its nearest chosen centre
+    val d2 = sample.map(sqDist(_, centres(0)))
+    for (j <- 1 until k) {
+      val total = d2.sum
+      centres(j) = if (total == 0.0) centres(0).clone() else {
+        // draw a point with probability d2(i) / total
+        val r = rnd.nextDouble() * total
+        var acc = 0.0
+        var pick = -1
+        var i = 0
+        while (i < n && pick < 0) {
+          acc += d2(i)
+          if (d2(i) > 0.0 && r < acc) pick = i
+          i += 1
+        }
+        sample(if (pick >= 0) pick else d2.lastIndexWhere(_ > 0.0)).clone()
+      }
+      for (i <- 0 until n) d2(i) = math.min(d2(i), sqDist(sample(i), centres(j)))
+    }
+    val dim = sample(0).length
+    val cell = Array.fill(n)(-1)
+    var changed = true
+    var round = 0
+    while (changed && round < MaxRounds) {
+      changed = false
+      for (i <- 0 until n) {
+        val c = nearest(sample(i), centres)
+        if (c != cell(i)) { cell(i) = c; changed = true }
+      }
+      if (changed) {
+        val sums = Array.fill(k)(new Array[Double](dim))
+        val counts = new Array[Int](k)
+        for (i <- 0 until n) {
+          val s = sums(cell(i))
+          var d = 0
+          while (d < dim) { s(d) += sample(i)(d); d += 1 }
+          counts(cell(i)) += 1
+        }
+        for (j <- 0 until k if counts(j) > 0)
+          centres(j) = sums(j).map(_ / counts(j))
+      }
+      round += 1
+    }
+    centres
   }
 
   /** ANN search: per probe, rank cells by centroid distance, take the
@@ -78,11 +186,11 @@ object IvfIndex {
   /** SemDeDup with LEARNED centroids — the paper's actual recipe
     * (k-means cells, then within-cell duplicate pruning): the coarse
     * quantizer's centers feed [[graft.ops.Dedup.semanticDedup]] as the
-    * centroid frame. Seeded-deterministic but not cross-engine
-    * reproducible (KMeans), so this form is spec-verified while the
-    * fixed-centroid form carries the oracle (q73). Centers are cast
-    * back to float so within-cell cosines run the same float-array
-    * FoldDot path as the oracle'd form. */
+    * centroid frame. Seeded-deterministic but not replayed by the
+    * oracle (driver-side k-means on a sample), so this form is
+    * spec-verified while the fixed-centroid form carries the oracle
+    * (q73). Centers are cast back to float so within-cell cosines run
+    * the same float-array FoldDot path as the oracle'd form. */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
                     k: Int, tau: Double, seed: Long = 42L): DataFrame = {
     val centers = build(corpus, idCol, vecCol, k, seed).centroids

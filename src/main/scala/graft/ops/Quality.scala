@@ -14,19 +14,26 @@ import org.apache.spark.sql.types.StructType
   * `data_quality_checks.py:49-57`).
   *
   * Scale posture: Q3/Q4 are metadata-only (no job). Q1/Q2/Q5 are single
-  * aggregations; [[report]] fuses all column null-counts into ONE pass over
-  * the data instead of a count() per column.
+  * aggregations (Q1 over all its columns at once); [[report]] fuses all
+  * column null-counts into ONE pass over the data instead of a count()
+  * per column.
   */
 object Quality {
 
   final case class QualityError(msg: String) extends RuntimeException(msg)
 
-  /** Q1: `check_miss` — fail if any nulls in column
-    * (`data_quality_checks.py:7-26`). */
-  def checkNoNulls(df: DataFrame, column: String): Unit = {
-    val n = df.filter(col(column).isNull).count()
-    if (n != 0) throw QualityError(s"column $column has $n null values")
-  }
+  /** Q1: `check_miss` — fail if any nulls in the columns
+    * (`data_quality_checks.py:7-26`). All columns' null counts are one
+    * aggregation (one scan); the error names the first failing column in
+    * argument order. */
+  def checkNoNulls(df: DataFrame, columns: String*): Unit =
+    if (columns.nonEmpty) {
+      val nulls = columns.map(c => count(when(col(c).isNull, 1)))
+      val r = df.agg(nulls.head, nulls.tail: _*).head()
+      columns.indices.find(r.getLong(_) != 0).foreach { i =>
+        throw QualityError(s"column ${columns(i)} has ${r.getLong(i)} null values")
+      }
+    }
 
   /** Q2: `check_product_counts` — distinct count within an exclusive range
     * (`data_quality_checks.py:29-57`). */

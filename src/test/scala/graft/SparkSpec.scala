@@ -7,6 +7,39 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Call sites of the Spark jobs `body` starts, in start order (each
+    * job's result stage is named for its call site): a listener over a
+    * job group, drained by a marker job. */
+  def jobSites(group: String)(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val marker = "at SparkSpec.scala"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          sites.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      body
+      // the listener bus delivers in order: once the marker job is
+      // seen, every job `body` started has been seen before it
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!sites.asScala.exists(_.contains(marker)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(sites.asScala.exists(_.contains(marker)), "marker job not seen")
+    sites.asScala.toSeq.takeWhile(!_.contains(marker))
+  }
 }
 
 object SparkSpec {

@@ -23,6 +23,21 @@ class QualitySpec extends SparkSpec {
     assert(e.getMessage.contains("product_id"))
   }
 
+  test("Q1 checkNoNulls over several columns names the first failing one") {
+    val df = Seq((1L, Some(10L)), (2L, None), (3L, None))
+      .toDF("l_orderkey", "l_partkey")
+    Quality.checkNoNulls(df, "l_orderkey")
+    val e = intercept[Quality.QualityError](
+      Quality.checkNoNulls(df, "l_orderkey", "l_partkey"))
+    assert(e.getMessage == "column l_partkey has 2 null values")
+    Quality.checkNoNulls(df.filter(col("l_partkey").isNotNull),
+      "l_orderkey", "l_partkey")
+    // both columns fail: argument order decides which one is named
+    val both = Seq((Option.empty[Long], Option.empty[Long])).toDF("a", "b")
+    assert(intercept[Quality.QualityError](Quality.checkNoNulls(both, "b", "a"))
+      .getMessage == "column b has 1 null values")
+  }
+
   test("Q2 checkDistinctInRange: exclusive bounds like the reference") {
     Quality.checkDistinctInRange(good, "product_id", 2, 4)
     intercept[Quality.QualityError](

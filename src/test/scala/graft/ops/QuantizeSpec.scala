@@ -180,39 +180,15 @@ class QuantizeSpec extends SparkSpec {
 
   test("ivfPqTopKSweep: an m that does not divide dim fails after the " +
       "dim probe, before any barrier job") {
-    import scala.jdk.CollectionConverters._
     val emb = Sources.table(spark, sf("sf0.001"), "embeddings")
-    val sc = spark.sparkContext
-    val group = "quantize-sweep-precondition"
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          // the result stage is named for the job's call site
-          sites.add(e.stageInfos.maxBy(_.stageId).name)
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "m does not divide dim")
-    try {
+    val sweep = jobSites("quantize-sweep-precondition") {
       // the fixture's vectors are 64-dim; 5 does not divide 64
       intercept[IllegalArgumentException] {
         Quantize.ivfPqTopKSweep(emb, "vec_id", "embedding",
           emb.filter(col("vec_id") < 5), 5, emb.filter(col("vec_id") < 16),
           emb.filter(col("vec_id") < 8), Seq(1, 2), 10)
       }
-      // the listener bus delivers in order: once this marker job is
-      // seen, every job the sweep started has been seen before it
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!sites.asScala.exists(_.contains("QuantizeSpec")) &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
-    val sweep = sites.asScala.toSeq.takeWhile(!_.contains("QuantizeSpec"))
     assert(sweep.nonEmpty && sweep.forall(_.startsWith("head at Quantize.scala")),
       s"the sweep ran jobs beyond the dim probe: $sweep")
   }
