@@ -4,12 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.app.CorpusPipeline
 import graft.ops._
-import graft.ml.Prod2Vec
-import graft.streaming.{Replay, StreamOps}
-import graft.streaming.Replay.{distinctKeys, withStreamStatePartitions}
+import graft.queries._
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, with matching DuckDB-runnable SQL in `oracleSql`.
+/** The query contract: every implemented operator from SURVEY.md §2 is
+  * one [[graft.queries.Query]] record, its Spark body beside its
+  * DuckDB-runnable SQL, in its family's registry under `graft.queries`;
+  * `queries` and `oracleSql` are their union. This object holds
+  * `entry`, the constants specs read, and the constants and building
+  * blocks more than one family uses.
   *
   * Conventions for oracle parity:
   *  - every query ends in a full deterministic ORDER BY (both sides), so
@@ -21,33 +23,15 @@ import graft.streaming.Replay.{distinctKeys, withStreamStatePartitions}
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Sources.table(s, dir, name)
 
   /** Vocab size including the reserved UNK index — kept below the distinct
     * part count of every fixture SF so the OOV path is exercised. */
   val VocabK = 100
 
-  /** Skip-gram window (reference `config/prod2vec_config.yaml:26`; N1). */
-  val WindowW = 4
-  /** Basket cap (reference `config/prod2vec_config.yaml:28`). */
-  val MaxBasketLen = 50
-  /** Negatives per positive pair (`config/prod2vec_config.yaml:27`). */
-  val NumNs = 4
-  /** Subsampling factor (Keras default 1e-5 is tuned for 35k-word corpora;
-    * 1e-3 keeps fixture-scale pair counts meaningful). */
-  val SamplingFactor = 1e-3
   /** Neighbors per target in the similarity reports. */
   val TopK = 10
-  /** Salts for the flagship co-occurrence count (the hot-pair skew
-    * lever, [[graft.ops.Pairs.saltedCounts]]): counts are algebraic so
-    * any value yields the identical result — running the oracle gate
-    * with salts > 1 keeps the lever exercised, not just spec'd. The
-    * constant is not taken on faith either: q147 runs the SAME report
-    * through [[graft.ops.Similarity.coPurchaseTopKAuto]], where the
-    * [[graft.ops.Quality.autoSalts]] skew pre-flight chooses the count
-    * (this value as floor), and hash-matches the same oracle. */
-  val CoocSalts = 4
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Top co-purchase neighbors per part (SURVEY.md §7.2). */
@@ -58,86 +42,8 @@ object SparkEntry {
 
   /** Top-(K-1) vocab with dense idx 1..K-1 (UNK reserved at 0), pinned
     * tiebreak (cnt DESC, product_id ASC). SURVEY §2.4 A2+A3. */
-  private def vocab(s: SparkSession, dir: String): DataFrame =
+  private[graft] def vocab(s: SparkSession, dir: String): DataFrame =
     Vocab.withIndex(Vocab.topK(t(s, dir, "lineitem"), "l_partkey", VocabK))
-
-  private val vocabSqlCte =
-    s"""WITH vocab AS (
-       |  SELECT product_id AS pid, cnt, idx FROM (
-       |    SELECT l_partkey AS product_id, count(*) AS cnt,
-       |           row_number() OVER (ORDER BY count(*) DESC, l_partkey ASC) AS idx
-       |    FROM lineitem GROUP BY l_partkey
-       |  ) v WHERE idx <= ${VocabK - 1}
-       |)""".stripMargin
-
-  /** J2/J3 name joins + ordering shared by q14 (manual salts) and q147
-    * (auto-salted): ranked (target, context, cnt, rnk) -> the named
-    * co-purchase report. */
-  private def copurchaseReport(s: SparkSession, dir: String,
-                               topk: DataFrame): DataFrame = {
-    val v = vocab(s, dir).select(col("idx"), col("product_id"))
-    val p = t(s, dir, "part").select(col("p_partkey"), col("p_name"))
-    topk
-      .join(broadcast(v.withColumnRenamed("idx", "target")
-        .withColumnRenamed("product_id", "target_pid")), Seq("target"))
-      .join(broadcast(v.withColumnRenamed("idx", "context")
-        .withColumnRenamed("product_id", "neighbor_pid")), Seq("context"))
-      .join(broadcast(p.withColumnRenamed("p_partkey", "target_pid")
-        .withColumnRenamed("p_name", "target_name")), Seq("target_pid"))
-      .join(broadcast(p.withColumnRenamed("p_partkey", "neighbor_pid")
-        .withColumnRenamed("p_name", "neighbor_name")), Seq("neighbor_pid"))
-      .select(col("target_pid"), col("neighbor_pid"), col("target_name"),
-        col("neighbor_name"), col("cnt"), col("rnk").cast("long").as("rnk"))
-      .orderBy("target_pid", "rnk")
-  }
-
-  /** Skip-gram positive pairs (A6'+P7+A9): encode lineitem through the
-    * vocab, shuffled-deterministic positions per order (seeded hash order,
-    * l_partkey tiebreak — hash ties can only occur between rows of the
-    * same item, so the pair multiset is well-defined), cap at
-    * [[MaxBasketLen]], window [[WindowW]].
-    *
-    * Zero-shuffle-after-groupBy form: one hash agg builds the ordered
-    * basket arrays, pair expansion is a per-row array expression
-    * ([[Pairs.orderedBaskets]] + [[Pairs.skipGramPairsFromBaskets]]) —
-    * the relational window+self-join form ([[Pairs.positions]] +
-    * [[Pairs.skipGramPairs]]) computes the identical pair multiset
-    * (PairsSpec proves it) but shuffles twice. */
-  private def pairs(s: SparkSession, dir: String): DataFrame = {
-    val enc = Vocab.encode(t(s, dir, "lineitem"), "l_partkey", vocab(s, dir))
-    val baskets = Pairs.orderedBaskets(enc, "l_orderkey", "idx",
-      Seq(Portable.seededHash(col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey")).as("__h"), col("l_partkey").as("__pid")),
-      MaxBasketLen)
-    Pairs.skipGramPairsFromBaskets(baskets, WindowW)
-  }
-
-  /** DuckDB CTEs mirroring [[pairs]] bit-for-bit (extends [[vocabSqlCte]]
-    * with enc → seq → pairs). */
-  private val pairsSqlCte: String = {
-    val h = Portable.sqlHash("order_id", "ln", "pid")
-    s"""$vocabSqlCte,
-       |enc AS (
-       |  SELECT l.l_orderkey AS order_id, l.l_linenumber AS ln,
-       |         l.l_partkey AS pid, coalesce(v.idx, 0) AS item
-       |  FROM lineitem l LEFT JOIN vocab v ON l.l_partkey = v.pid
-       |),
-       |seq AS (
-       |  SELECT order_id, item, pos FROM (
-       |    SELECT order_id, item,
-       |           row_number() OVER (PARTITION BY order_id
-       |             ORDER BY $h, pid) - 1 AS pos
-       |    FROM enc
-       |  ) WHERE pos < $MaxBasketLen
-       |),
-       |pairs AS (
-       |  SELECT t.order_id, t.pos AS pos_t, c.pos AS pos_c,
-       |         t.item AS target, c.item AS context
-       |  FROM seq t JOIN seq c ON t.order_id = c.order_id
-       |  WHERE t.pos <> c.pos AND abs(t.pos - c.pos) <= $WindowW
-       |    AND t.item <> 0 AND c.item <> 0
-       |)""".stripMargin
-  }
 
   // ---- extension constants (SURVEY.md §7.4) ----------------------------
 
@@ -149,102 +55,15 @@ object SparkEntry {
   val LshRows = 4
   /** Jaccard acceptance threshold for near-dup verification. */
   val JaccardTau = 0.5
-  /** q55 posting-list prune bound — far above any fixture shingle's
-    * document frequency, so the exact-Jaccard join prunes nothing. */
-  val JaccardMaxDf = 100000L
-  /** q120 containment acceptance threshold. Containment ≥ Jaccard for
-    * every pair, so at the same 0.5 the containment join returns a
-    * superset of q55's pairs — the delta IS the subset-duplication
-    * signal the asymmetric score exists to find. */
-  val ContainTau = 0.5
-  /** q126 Zipf fit width — the top-N frequency ranks the ln-ln
-    * regression runs over (fixed-size at any corpus scale). */
-  val ZipfFitTopK = 500
-  /** q127 ICT query-span length in tokens. */
-  val IctSpanTokens = 8
-  /** q129 calibration bin count (margin deciles). */
-  val CalibBins = 10
-  /** q132 top-token concentration gate bound. */
-  val ConcMax = 0.2
-  /** q134 interleave stream shards. */
-  val InterleaveShards = 4
   /** q135 CDC boundary divisor (expected chunk length in tokens). */
   val CdcDivisor = 16
-  /** q136 conversion-latency quantiles. */
-  val FunnelLatencyProbs = Seq(0.25, 0.5, 0.95)
-  /** q142 journey-prefix length and top-k. */
-  val PathLen = 3
-  val PathTopK = 20
   /** q133 anomaly baseline: previous day of observed hourly windows. */
   val AnomalyTrailing = 24
   /** q133 |z| flag threshold. */
   val AnomalyZ = 2.0
-  /** q121 count–min sketch: depth 3 × width 64 against the fixture's
-    * ~40-term vocabulary forces real counter collisions, so the audit's
-    * overestimate column is non-trivially positive while the est ≥
-    * exact law still holds row-for-row. */
-  val CmsDepth = 3
-  val CmsWidth = 64
-  val CmsMinCount = 10L
-  val CmsSalt = "q121"
-  /** q163 HyperLogLog: 2^6 = 64 registers (≈13% standard error) against
-    * per-language vocabularies of a few dozen types — small enough that
-    * the raw estimator's error is visibly non-zero, which is what the
-    * audit exists to show. */
-  val HllBits = 6
-  val HllSalt = "q163"
-  /** q164 Z-order: 21 bits per dimension (keys to ~2M — headroom past
-    * every fixture SF) interleaved into a 42-bit Morton code; 8 range-
-    * split files so per-file envelopes are visibly tiled at sf0.01. */
-  val ZorderBits = 21
-  val ZorderFiles = 8
-  /** q166 product quantization: 4 subspaces × 16 first-K centroids over
-    * the 64-dim fixture vectors — 2 bytes/vector (128× vs float32),
-    * coarse enough that the recall report shows a real, non-trivial
-    * loss against the exact-L2 truth. */
-  val PqM = 4
-  val PqCent = 16
-  /** q167 IVF: 8 coarse cells (first-8 centroids), 3 probed per query —
-    * candidates ∝ nprobe/nCells, the knob that bounds corpus touched. */
-  val IvfCells = 8
-  val IvfNprobe = 3
-  /** q168 k-means: 8 clusters from the first-8 init, 2 Lloyd updates —
-    * enough to move every centroid off its init while keeping the
-    * oracle's unrolled-CTE replay readable. */
-  val KmeansK = 8
-  val KmeansIters = 2
-  /** q169 offline rec-eval: hash-keyed order split (fold 0 of 10 is the
-    * eval set) and the hit-rate curve up to the report's TopK. */
-  val RecEvalSalt = "recEval"
-  val RecEvalFolds = 10L
-  /** q119 audit threshold: the fixture's pair similarity is bimodal
-    * (background mass under 0.1, planted near-dups above 0.9), so the
-    * audit runs at a tau low enough to see BOTH ends of the banding
-    * S-curve — the bottom band where (4,4)-banding recalls ~nothing
-    * and the top band where it recalls everything. */
-  val LshAuditTau = 0.01
-  /** q56 keywords per document. */
-  val TopKeywordsK = 3
   /** q58 repetition-stats n-gram size (Gopher's duplication filters use
     * n in 2..4; bigrams are the most sensitive on short documents). */
   val RepetitionN = 2
-  /** q63 multi-n repetition sizes — the full Gopher duplication-gate
-    * set, computed in one corpus scan. */
-  val RepetitionNs = Seq(2, 3, 4)
-  /** q72 boilerplate gate: trigrams seen in more than `BoilerMaxDf`
-    * documents are corpus boilerplate (the fixture's trigram df is
-    * median 1 / p99 ≈ 4, so 3 marks a real minority of grams). */
-  val BoilerN = 3
-  val BoilerMaxDf = 3L
-  /** q76 stratified sample: exact docs-per-source count and the draw's
-    * salt. */
-  val SampleNPerSource = 12
-  val SampleSalt = "q76"
-  /** q111 weighted sample: selection ∝ n_chars (≈ token mass). */
-  val WeightedSampleSalt = "q111"
-  /** q112 blocklist: two fixture-frequent terms + one absent, so hit,
-    * multi-hit and clean documents all occur. */
-  val BlockTerms: Seq[String] = Seq("slow", "spam", "stale")
   /** q114: the fractional-epoch lottery's draw salt. */
   val EpochRealizeSalt = "q114"
   /** q84 tf-idf cosine pairs: 0.88 keeps the tail of the word-soup
@@ -258,49 +77,10 @@ object SparkEntry {
     * fixture join is ~450M products for a 31-term vocabulary — the
     * degenerate all-pairs case the lever exists for; measured 64.7 s →
     * ~1 s at sf0.1). Norms keep every term, so pruning only ever
-    * underestimates the cosine, same contract as [[JaccardMaxDf]]. */
+    * underestimates the cosine, same contract as
+    * `DedupQueries.JaccardMaxDf`. */
   val TfidfTau = 0.88
   val TfidfMaxDf = 1000L
-  /** q86 PageRank over the tf-idf similarity graph: τ = 0.8 keeps a
-    * ~4k-edge fixture graph (dense enough that rank differentiates,
-    * sparse enough for an unrolled oracle); 8 rounds is comfortably
-    * inside convergence for a graph of this diameter; ranks are
-    * BIGINT numerators over 10^12 (see [[graft.ops.Graph]]). */
-  val PrTau = 0.8
-  val PrIters = 8
-  val PrScale = 1000000000000L
-  /** q83 temperature-scaled mixture: α = 0.5 visibly flattens the
-    * fixture's source-size distribution, and the token target keeps
-    * big-source rates < 1 while small sources saturate at 1 — both
-    * regimes of the min() live in the oracle. */
-  val TempAlpha = 0.5
-  val TempTargetTokens = 15000L
-  /** q81/q82 BPE merge rounds. 6 keeps the unrolled oracle CTE chain
-    * readable while exercising multi-char merges (round 2+ pairs contain
-    * round-1 outputs) on the fixture vocabulary. */
-  val BpeNumMerges = 6
-  /** BPE batched-learning width (q81/q82/q116): up to this many merges
-    * accepted per round under the sequential-equivalence guard
-    * ([[graft.ops.Bpe.learn]]) — the result is bit-identical to
-    * batch = 1, which the sequential unrolled-CTE oracle re-proves
-    * every round. */
-  val BpeBatch = 4
-  /** q79 bigram-LM interpolation weight on the bigram term. 0.75 is
-    * exactly representable in binary, so 1−λ is too — the interpolation
-    * constants can never drift between the engines' float parsers. */
-  val BigramLambda = 0.75
-  /** q78 repeated-span scrub window (tokens). 4 on the fixture corpus
-    * marks a real minority of windows as cross-doc duplicates (~6% of
-    * windows, 235/500 docs touched at sf0.01), exercising both the
-    * scrub path and the clean-doc passthrough. */
-  val ScrubK = 4
-  /** q74 DSIR: hashed-bigram buckets and the "high-quality target"
-    * slice (the first four sources) the importance weights point at. */
-  val DsirBuckets = 1024
-  val DsirN = 2
-  val DsirTargetSources = Seq("src0", "src1", "src2", "src3")
-  /** q57 conversion-funnel stage order. */
-  val FunnelStages = Seq("signup", "click", "purchase")
   /** q62 end-to-end curation Config, pinned so the Spark funnel and the
     * chained DuckDB oracle can never drift: quality cut at the score
     * median-ish 0.5, Gopher bigram gate at 0.1 (the sf0.01 corpus's
@@ -315,7 +95,7 @@ object SparkEntry {
   val CurateLangs = Set("en")
   /** The q62 funnel config built from the constants above; the
     * q62-family queries `.copy` it with the fields they change. */
-  private val CurateCfg = CorpusPipeline.Config(
+  private[graft] val CurateCfg = CorpusPipeline.Config(
     keepLangs = CurateLangs, minQuality = CurateMinQuality,
     shingleN = ShingleN, minhashPerms = NumPerms, bands = LshBands,
     rowsPerBand = LshRows, jaccardTau = JaccardTau,
@@ -326,19 +106,6 @@ object SparkEntry {
     * the rare-token/noise region). */
   val PplBuckets = 3
   val CuratePplTiers = Set("head", "middle")
-  /** q94 strided context windows: 48-token windows every 32 tokens
-    * (16-token overlap) — stride < chunk budget so consecutive windows
-    * demonstrably overlap on the fixture docs. */
-  val StrideWindowTokens = 48
-  val StrideTokens = 32
-  /** q95 leakage-free split: a quarter of near-dup CLUSTERS to valid. */
-  val SplitValidFrac = 0.25
-  /** q96 OOV gate vocabulary size — small enough that the fixture
-    * corpus has demonstrable OOV mass outside the top-500 tokens. */
-  val OovVocabSize = 500
-  /** q103 corpus-drift report: top-100 KL-contributing tokens between
-    * the even- and odd-doc_id halves of the fixture corpus. */
-  val DriftTopK = 100
   /** q104 epoch-factor mixture: three explicit sources with 3:1:1
     * target shares (exact-decimal weights, so the Scala-side wsum = 5.0
     * inlined into both engines carries no float drift), 100k-token
@@ -347,70 +114,19 @@ object SparkEntry {
   val EpochWeights: Map[String, Double] =
     Map("src0" -> 3.0, "src1" -> 1.0, "src2" -> 1.0)
   val EpochBudget = 100000L
-  /** q80 in-funnel span-scrub window — smaller than q78's standalone
-    * [[ScrubK]] because the funnel's survivors are already document-
-    * deduped (the big cross-doc span mass is gone); 3 still rewrites a
-    * demonstrable share of survivor text at sf0.01. */
-  val CurateScrubK = 3
-  /** q60 retention cohort period: daily — the fixture's one-week event
-    * span yields a full 8×8 retention triangle. */
-  val RetentionPeriodMs = 86400000L
   /** q61 decontamination: the "eval set" is the first docs of the
     * corpus (simulating benchmark leakage), flagged at ≥ 5 shared
     * distinct shingles. */
   val EvalSetDocs = 20L
   val ContaminationMinShared = 5L
-  /** q64 domain-mixing rates: even-indexed sources sampled at 0.9,
-    * odd at 0.3 — a deliberately non-uniform mixture over the
-    * fixture's 20 sources. */
-  val MixRates: Seq[(String, Double)] =
-    (0 until 20).map(i => s"src$i" -> (if (i % 2 == 0) 0.9 else 0.3))
-  /** q65/q66 per-source token budget (sf0.01 carries ~1.4k whitespace
-    * tokens per source, so 800 keeps a strict subset) and the bucket
-    * count for the bucketed variant. */
-  val TokenBudgetPerSource = 800L
-  val TokenBudgetBuckets = 8
   /** q67 packing: 128-token training sequences over 4 hash shards. */
   val PackSeqTokens = 128
   val PackShards = 4
-  /** q122 no-split packing: the cap sits inside the fixture's token-
-    * length range, so full bins, multi-doc bins and oversized-doc
-    * overflow bins all occur. */
-  val PackWholeCap = 120L
-  val PackWholeSalt = "q122"
-  /** q123 length buckets: 8..64 against token lengths ~20..90 keeps
-    * every branch live — small-doc clamp-up, mid buckets, and >max
-    * overflow. */
-  val LenMinBucket = 8
-  val LenMaxBucket = 64
-  /** q68 incremental dedup: docs below the split are the "historical
-    * corpus", the rest are the incoming batch. */
-  val IncrementalSplitId = 250L
-  /** q69 relative quality gate: keep each source's top half. */
-  val QualityKeepFrac = 0.5
-  /** q107 sharded-export manifest: shard count of the training export. */
-  val ManifestShards = 8
   /** Placeholder the sink-interchange oracles (q41/q106/q144) embed in
     * their read paths; [[Verify]] substitutes the ACTIVE sf dir's
     * basename at dump time, so the oracle always reads the files the
     * Spark side just wrote — valid at every SF, never stale. */
   val SfToken = "__SF__"
-
-  /** q106's JSONL fixture directory — keyed on the sf dir so concurrent
-    * SFs never clobber each other (same convention as [[q41CsvPath]]). */
-  def q106JsonlPath(dir: String): String =
-    "/root/repo/target/q106_jsonl_" + dir.split('/').last
-
-  /** q250 ORC round-trip scratch dir (one per SF, like q106's). */
-  def q250OrcPath(dir: String): String =
-    "/root/repo/target/q250_orc_" + dir.split('/').last
-
-  /** q251 RAKE: corpus keyphrase count. */
-  val RakeK = 20
-
-  /** q252 anisotropy: unrolled power-iteration rounds (mirrored
-    * CTE-for-CTE in the oracle). */
-  val PowerRounds = 3
 
   /** q254 robust anomaly: Hampel threshold k = kNum/kDen (3 is the
     * classic), kept rational so the decision stays pure-integer. */
@@ -420,125 +136,14 @@ object SparkEntry {
   /** SimHash near-dup Hamming radius (4×15-bit banding is exact to ≤3). */
   val MaxHamming = 2
 
-  /** q148 image side: 8×8 = 64 gray samples ≥ the 60 aHash positions. */
-  val MediaGridSide = 8
-
-  /** q273 audio: PCM samples per synthetic WAV payload. */
-  val AudioSamples = 256
-  /** q273 audio: sample rate stamped into (and decoded back out of)
-    * every synthetic WAV's fmt chunk. */
-  val AudioRateHz = 8000
-
-  /** q275 video: synthetic Y4M geometry — width × height luma plane
-    * per frame, frames per payload. 8×6×4 = 192 pixels/doc keeps the
-    * oracle's cross-join modest while exercising multi-frame demux. */
-  val VideoW = 8
-  val VideoH = 6
-  val VideoFrames = 4
-  /** q279: sampleFrames stride over the Y4M payloads — every 2nd frame
-    * of the 4, so the demuxed indices (0, 2) prove stride sampling
-    * runs on REAL container frames. */
-  val VideoStride = 2
-  /** q280: resize block factor over the 8×8 PNGs — 2×2 exact blocks,
-    * output 4×4, every output pixel an integer block average the
-    * oracle recomputes from the pixel law. */
-  val ResizeFactor = 2
-
-  /** q276: synthetic calibration-frame size and bucket count, sized so
-    * every bucket (~N/bins = 4e5 rows) crosses the ≤2.2e5-rows-per-
-    * bucket DECIMAL(38,0) operand bound and the Brier REL
-    * divide-before-square fallback FIRES under the oracle gate
-    * ([[graft.ops.Quality.brierDecomposition]]; q213's real buckets
-    * stay on the exact path). */
-  val BrierScaleN = 2000000L
-  val BrierScaleBins = 5
-
-  /** Shared q148/q154 oracle chain: the aHash every document's REAL
-    * decoded pixels must produce, recomputed straight from the source
-    * text bytes (encodePng's pixel layout × decodeGrayGrid's identity
-    * resample at w = h = side) — ends in `msim(doc_id, simhash)`. */
-  private def mediaAHashSqlCte: String = {
-    val n = Dedup.SimHashBits
-    s"""WITH g AS (
-       |  SELECT doc_id, list_transform(range(0, $n), k ->
-       |    CASE WHEN len(text) = 0 THEN 0
-       |         ELSE ascii(substring(text, (1 + (k % len(text)))::INT, 1))
-       |    END) AS bs
-       |  FROM documents
-       |),
-       |gm AS (SELECT doc_id, bs, list_sum(bs)::BIGINT AS sm FROM g),
-       |msim AS (
-       |  SELECT doc_id, list_sum(list_transform(range(0, $n), k ->
-       |    CASE WHEN bs[(k + 1)::INT] * $n >= sm
-       |         THEN (1::BIGINT << k::INT) ELSE 0::BIGINT END))::BIGINT
-       |    AS simhash
-       |  FROM gm
-       |)""".stripMargin
-  }
   /** SRP planes for embedding near-dup / ANN bucketing. */
   val SrpPlanes = 4
-  /** q149's id shift for the synthetic "re-added" snapshot docs — far
-    * above any fixture doc_id, so shifted ids never collide. */
-  val DiffAddIdOffset = 10000000L
   /** q150 matryoshka prefix: keep 16 of the fixture's 64 dims (4× the
     * memory/dot-product savings an MRL index would bank). */
   val TruncDims = 16
-  /** q151 curve: every power-of-two prefix up to the full 64 dims (the
-    * last entry is the reference dimension). */
-  val MatryoshkaDims = Seq(8, 16, 32, 64)
-  /** q161 margin mining: per-endpoint neighborhood size (k nearest on
-    * each side feed the ratio penalty). */
-  val MarginK = 4
-  /** q161 margin threshold — τ just above 1: a mined pair must beat
-    * the average of its own two neighborhoods (Artetxe & Schwenk's
-    * published operating regime). */
-  val MarginTau = 1.05
-  /** q152 Heaps audit: decile document prefixes. */
-  val HeapsBuckets = 10
-  /** q153 order2vec: part key → fixture vec_id mapping modulus (the
-    * fixture embedding table's id range; parts whose mapped id is
-    * absent at a small SF drop identically on both engines). */
-  val PoolMod = 500L
-  /** q153 probes: orders with id below this. */
-  val OrderProbeMax = 8L
   /** Fixture embedding width (pinned — q151's reference dimension and
     * the q153 oracle's unnest bound). */
   val EmbDims = 64
-  /** q155 JL output width — same 16-dim budget as q150's matryoshka
-    * truncation, so the two recall reports price the two reduction
-    * strategies head-to-head. */
-  val JlDims = 16
-  /** q175/q176 retrieval split: documents below this id are the query
-    * set, the rest are the retrieved corpus (disjoint, so no self-match
-    * filter is needed on either list). */
-  val RetrievalQueryDocs = 16L
-  /** q175 BM25 df prune share — the fixture's ~31-token vocabulary has
-    * df between 0.75·N and 0.81·N, so 0.78 genuinely splits it: the
-    * head terms drop (the stopword lever fires) while the tail scores. */
-  val Bm25MaxDfShare = 0.78
-  /** q176 reciprocal-rank-fusion constant (Cormack et al., SIGIR'09's
-    * published k = 60). */
-  val RrfC = 60
-  /** q177 triangle graph: co-purchase edges keep only parts below this
-    * id — a FIXED node universe at every SF (the graph densifies as SF
-    * grows instead of exploding in nodes), non-degenerate at sf0.01
-    * (≈390 nodes / 4.7k edges / 3.5k triangles measured). */
-  val TriPartMax = 400L
-
-  /** q229 k-core: the membership threshold and the unrolled peel
-    * rounds (mirrored round-for-round in the oracle CTE chain). */
-  val KCoreK = 3
-  val KCoreRounds = 4
-
-  /** q228 Poisson bootstrap: resample count and the draw salt. */
-  val BootstrapB = 64
-  val BootstrapSalt = "boot"
-
-  /** q227 Neyman allocation: total sample budget to split. */
-  val NeymanBudget = 1000L
-
-  /** q235 attribution: touch lookback before a conversion (1 day). */
-  val AttribLookbackMs = 86400000L
 
   /** q236 SPRT: null/alternative conversion rates and error budget —
     * the integer walk constants derive from these via
@@ -548,266 +153,32 @@ object SparkEntry {
   val SprtAlpha = 0.05
   val SprtBeta = 0.05
 
-  /** q238 HITS: unrolled mutual-reinforcement rounds (mirrored
-    * round-for-round in the oracle CTE chain). */
-  val HitsRounds = 2
-
-  /** q243 weighted WOR sample: draw count and the Gumbel-key salt. */
-  val WorK = 100
-  val WorSalt = "wor"
-
-  /** q246 Apriori triples: minimum basket support (user-day
-    * event-type baskets). */
-  val TriSupport = 50L
-  /** q179 range-sorted layout file count — [[ZorderFiles]]' twin so the
-    * one-column and two-column layouts are comparable. */
-  val RangeFiles = 8
-  /** q181 collocation count floor — PMI's hapax-pair pathology gate. */
-  val PmiMinCount = 5L
-  /** q188 association-rule co-presence floor — 2 keeps a live rule set
-    * on the sparse part-capped fixture (246 directional rules at
-    * sf0.01; a floor of 5 empties it). */
-  val AssocMinOrders = 2L
-  /** q189 Markov next-event eval: user-keyed folds (the q169
-    * protocol applied to event sequences). */
-  val MarkovSalt = "markovEval"
-  val MarkovFolds = 5
-  /** q190 embedding-drift split: vectors below this id are corpus A,
-    * the rest corpus B (fixed A size at every SF, B grows). */
-  val DriftSplitId = 250L
-
   /** q191 KS-drift split: the named source vs the rest of the corpus. */
   val KsSourceA = "src0"
-  /** q196 conformal miscoverage α = 1/10 (90% coverage gates). */
-  val ConformalAlphaNum = 1L
-  val ConformalAlphaDen = 10L
   /** q200 PSI bin count (the industry-standard 10 deciles). */
   val PsiBins = 10
-  /** q202 trim fraction (10% per tail). */
-  val TrimNum = 1L
-  val TrimDen = 10L
-  /** q203 MAD multiplier (the classic 3-MAD outlier band). */
-  val MadK = 3
-  /** q204 anonymity floor (groups below k violate). */
-  val KAnonK = 5L
-  /** q206 edit-distance threshold for catalog fuzzy matching. */
-  val ErMaxDist = 2
-  /** q208 RBO persistence parameter (Webber et al.'s p = 0.9: ~86% of
-    * the weight mass in the top 10). */
-  val RboP = 0.9
-  /** q207 isotonic-calibration score buckets — 200 (not 20) because
-    * the fixture's quality scores concentrate in [0.80, 0.85]: at 20
-    * bins the whole corpus lands in one bucket and the PAV lattice is
-    * never exercised; at 200 the populated ~9 buckets carry a
-    * genuinely non-monotone rate profile that PAV must pool. */
-  val IsoBins = 200
-  /** q210 winnowing window: w=4 gram hashes per window over ShingleN
-    * word grams — guarantee threshold t = w + ShingleN − 1 = 6 shared
-    * tokens, expected density ~2/(w+1) = 40% of grams. */
-  val WinnowW = 4
-  /** q211 fingerprint document-frequency prune (boilerplate lever) and
-    * minimum shared fingerprints for a reported pair. */
-  val WinnowMaxDf = 1000L
-  val WinnowMinShared = 2L
-  /** q215 CUPED split instant: 2024-01-15 00:00 UTC in epoch-ns —
-    * mid-fixture, so both periods are populated at every SF. */
-  val CupedSplitNs = 1705276800000000000L
-  /** q214 WordPiece mining: max piece length, occurrence-mass floor,
-    * word-length cap (degenerate megatoken guard), report size. */
-  val WpMaxPiece = 6
-  val WpMinCount = 20L
-  val WpMaxWordLen = 30
-  val WpTopOut = 300
-  /** q205 decay half-life (7 days) and report instant (2024-01-31
-    * 00:00 UTC — just past the fixture's last event, so every event
-    * counts and the instant is SF-independent). */
-  val DecayHalfLifeMs = 604800000L
-  val DecayAsOfMs = 1706659200000L
 
-  /** q193 skip-estimate band: the middle fifth of the key range
-    * (numerators over [[SkipBandDen]]). */
-  val SkipBandLo = 2L
-  val SkipBandHi = 3L
-  val SkipBandDen = 5L
-  /** q194 join-size CMS geometry + salt. */
-  val CmsJoinDepth = 4
-  val CmsJoinWidth = 256
-  val CmsJoinSalt = "cmsJoin"
-  /** q192 A/B arm-assignment salt (an A/A split on untreated fixture
-    * data — the null check an experimentation stack must pass). */
-  val AbSalt = "abArm"
-
-  /** q183 time split (2024-01-16 00:00 UTC, ~the fixture median):
-    * events before it build the "current" SCD2 table, the rest arrive
-    * as the merge batch — a global time split satisfies scd2Merge's
-    * append-only contract at every SF. */
-  val Scd2CutMs = 1705363200000L
-  /** q182 coverage-set size (the oracle unrolls this many greedy
-    * rounds, the q168 discipline). */
-  val KCenterK = 4
-
-  /** q156 attribution window (48 h) — sits inside the fixture's
-    * conversion-gap distribution (median signup→click ≈ 29 h), so the
-    * window visibly bites without zeroing the funnel. */
-  val FunnelWindowMs = 172800000L
-  /** Independent SRP tables for the OR-amplified ANN (q42). */
-  val AnnTables = 2
-  /** Embedding near-dup cosine threshold. */
-  val CosTau = 0.3
   /** q73 SemDeDup centroid count — the first-k-rows centroid choice the
     * oracle pins (a real run passes k-means centers instead); within-
     * cluster pairs stay ~N²/k, and the fixture's within-cluster cosine
     * p99 ≈ 0.32 makes the CosTau gate drop a real minority. */
   val SemClusters = 8L
-  /** q118 cluster-balanced sample: 20 per cluster over the q73
-    * centroids — the fixture's ~62-vector clusters downsample ~3× while
-    * any sparse cluster survives whole, so both branches are live. */
-  val ClusterSampleN = 20
-  val ClusterSampleSalt = "q118"
-  /** Winnowing fingerprint parameters (k-gram size, window). */
-  val FpK = 4
-  val FpW = 4
   /** Tumbling window width / session gap for event analytics (ms). */
   val WindowMs = 3600000L
   val SessionGapMs = 1800000L
-  /** Watermark delay of the event-log stream certifications (their
-    * "60 days"): covers the fixture's span, so the staged files'
-    * arbitrary arrival order never drops an event. */
-  private val ReplayDelayMs = 60L * 24 * 3600 * 1000
-  /** Time-bucket width for the range-bucketed as-of join (q50): 6h — the
-    * fixture's one-week event span splits into ~28 buckets per key. */
-  val AsofBucketMs = 6L * 3600000L
-  /** A12 probe sample: validSize draws from the validWindow most
-    * frequent items (`prod2vec_config.yaml:38-39`, scaled to fixtures). */
-  val ValidWindow = 50
-  val ValidSize = 10
 
-  /** q41's CSV fixture directory — keyed on the sf dir so concurrent
-    * Verify/Bench runs at different scales never clobber each other. The
-    * oracle SQL carries [[SfToken]] so it follows the active SF. */
-  def q41CsvPath(dir: String): String =
-    "/root/repo/target/q41_csv_" + dir.split('/').last
-
-  /** q59/q146's planted-PII frame: the fixture text (which carries no
-    * natural PII) augmented with one deterministic identifier of each
-    * maskable type, keyed on doc_id — both the mask round-trip and the
-    * per-source rollup read the same frame. */
-  private def piiAugmented(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"), col("source"),
-      concat(col("text"), lit(" contact user"),
-        col("doc_id").cast("string"),
-        lit("@mail.example.org via https://ex.org/u/"),
-        col("doc_id").cast("string"), lit(" tel 555"),
-        lpad(col("doc_id").cast("string"), 7, "0"),
-        lit(" ph 555-"),
-        lpad(pmod(col("doc_id"), lit(1000)).cast("string"), 3, "0"),
-        lit("-"), lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"),
-        lit(" ip 10."), pmod(col("doc_id"), lit(256)).cast("string"),
-        lit(".0.7")).as("text"))
-
-  /** q144's stored chunk-index directory — same per-SF keying as
-    * [[q41CsvPath]]; the oracle carries [[SfToken]]. */
-  def q144IdxPath(dir: String): String =
-    "/root/repo/target/q144_chunk_idx_" + dir.split('/').last
-
-  /** q37's stored embedding-table directory (M4 at rest) — same per-SF
-    * keying and [[SfToken]] oracle convention as [[q144IdxPath]]. */
-  def q37EmbPath(dir: String): String =
-    "/root/repo/target/q37_emb_" + dir.split('/').last
-
-  /** q158's audited multi-file parquet directory — written by the query
-    * itself (4 hash partitions of lineitem), same per-SF keying and
-    * [[SfToken]] oracle convention as [[q144IdxPath]]. */
-  def q158LayoutPath(dir: String): String =
-    "/root/repo/target/q158_layout_" + dir.split('/').last
-
-  /** q159's audited Hive-partitioned directory — [[q158LayoutPath]]'s
-    * convention, one subdirectory per partition value. */
-  def q159LayoutPath(dir: String): String =
-    "/root/repo/target/q159_layout_" + dir.split('/').last
-
-  /** q164's Z-ordered sink directory — [[q158LayoutPath]]'s convention. */
-  def q164LayoutPath(dir: String): String =
-    "/root/repo/target/q164_zorder_" + dir.split('/').last
-
-  /** q165's JSONL ingest fixture (good export + planted torn lines) —
-    * [[q106JsonlPath]]'s convention. */
-  def q165JsonlPath(dir: String): String =
-    "/root/repo/target/q165_jsonl_" + dir.split('/').last
-
-  /** q172's deliberately fragmented sink — [[q158LayoutPath]]'s
-    * convention. */
-  def q172LayoutPath(dir: String): String =
-    "/root/repo/target/q172_frag_" + dir.split('/').last
-
-  /** q179's range-sorted sink directory — [[q158LayoutPath]]'s
-    * convention. */
-  def q179LayoutPath(dir: String): String =
-    "/root/repo/target/q179_range_" + dir.split('/').last
-
-  /** q193's skip-estimate layout directory — own path so the q179/q193
-    * writes can never race under a parallel Verify. */
-  def q193LayoutPath(dir: String): String =
-    "/root/repo/target/q193_range_" + dir.split('/').last
-
-  /** q172 compaction target: quarter of the fixture sink's compressed
-    * mass, so the plan visibly folds ~32 fragments into ~4 groups. */
-  val CompactTargetFrac = 4L
-  /** q173 label propagation: 3 synchronous rounds over the q86 edge
-    * set — enough for the planted near-dup groups to close while the
-    * unrolled oracle stays readable. */
-  val LpaIters = 3
-  /** q174 nprobe sweep: every power of two up to all 8 cells (the last
-    * row = plain ADC by the q167 reduction law — the curve's ceiling). */
-  val NprobeSweep = Seq(1, 2, 4, 8)
-
-  /** q37's persisted MODEL directory (S8 at rest) — the trained model
-    * round-trips through [[graft.ml.Prod2Vec.save]]/`load` before the
-    * embedding table is extracted, so model persistence sits INSIDE the
-    * oracle-verified chain (the reference's train → save → load →
-    * post-process handoff, `model_train.py:131` / `post_process.py:89`). */
-  def q37ModelPath(dir: String): String =
-    "/root/repo/target/q37_model_" + dir.split('/').last
-
-  /** `events` with ts truncated to whole microseconds — the precision
-    * DuckDB actually reads from TIMESTAMP(NANOS) parquet. Queries whose
-    * oracle arithmetic touches raw ns (the sessionize pair) go through
-    * this so both engines compute over identical values; ms-floor-only
-    * queries (windows, as-of) don't need it. */
-  private def eventsUs(s: SparkSession, dir: String): DataFrame =
-    Sources.eventsNs(s, dir).withColumn("ts", expr("ts - pmod(ts, 1000L)"))
-
-  /** Shingled documents (doc_id, shingles) shared by the MinHash path.
-    * Tokens are materialized in their own projection first: HOF lambdas
-    * evaluate interpreted with NO common-subexpression elimination, so an
-    * inlined split(text) would re-run for every element_at inside the
-    * shingle lambda (3x per gram — measured ~2x the whole query). */
-  private def shingled(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), Text.tokens(col("text")).as("__t"))
-      .select(col("doc_id"), Text.shingles(col("__t"), ShingleN).as("shingles"))
-
-  /** The q20 Jaccard-verified MinHash/LSH near-dup pairs over
-    * [[shingled]] at the shared constants. */
-  private def lshPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.nearDupPairs(shingled(s, dir), "doc_id", NumPerms, LshBands,
-      LshRows, JaccardTau)
-
-  /** DuckDB CTE bodies (no WITH prefix) mirroring [[shingled]] over an
-    * arbitrary (doc_id, text) source relation: tokens → distinct
-    * shingles. Parametrized so q62 can run the identical chain over the
-    * curation funnel's exact-dedup survivors instead of raw
-    * `documents`. */
-  private def shingleCtesFrom(src: String): String =
+  /** DuckDB CTE bodies (no WITH prefix) mirroring
+    * `DedupQueries.shingled` over an arbitrary (doc_id, text) source
+    * relation: tokens → distinct shingles. Parametrized so q62 can
+    * run the identical chain over the curation funnel's exact-dedup
+    * survivors instead of raw `documents`. */
+  private[graft] def shingleCtesFrom(src: String): String =
     s"""toks AS (
        |  SELECT doc_id, string_split(text, ' ') AS t FROM $src
        |),
        |sh AS (
        |  SELECT doc_id, ${Text.shinglesSql("t", ShingleN)} AS shingles FROM toks
        |)""".stripMargin
-
-  /** DuckDB CTEs mirroring [[shingled]]: tokens → distinct shingles. */
-  private val shingleSqlCte: String = s"WITH ${shingleCtesFrom("documents")}"
 
   /** [[shingleCtesFrom]] + MinHash signatures (no WITH prefix).
     * Kernel-lockstep with [[graft.functions.MinHashSig]]: ONE md5-based
@@ -817,7 +188,7 @@ object SparkEntry {
     * [[graft.functions.MinHashSig.coefA]]/[[graft.functions.MinHashSig.coefB]]
     * the Spark expression uses, so the engines' signatures are
     * bit-equal by construction. */
-  private def minhashCtesFrom(src: String): String = {
+  private[graft] def minhashCtesFrom(src: String): String = {
     val M = graft.functions.MinHashSig.Prime
     val sigExpr = (0 until NumPerms).map { p =>
       val a = graft.functions.MinHashSig.coefA(p)
@@ -835,13 +206,10 @@ object SparkEntry {
        |)""".stripMargin
   }
 
-  /** [[shingleSqlCte]] + MinHash signatures. */
-  private val minhashSqlCte: String = s"WITH ${minhashCtesFrom("documents")}"
-
   /** DuckDB CTE body: LSH band hashes from the `sig` CTE — shared by
     * the self-join near-dup chain and q68's cross-side (new × existing)
     * candidate join. */
-  private val bandsCteSql: String = {
+  private[graft] val bandsCteSql: String = {
     val bandKeys = (1 to LshRows).map(r => s"sig[$LshRows*b + $r]") :+ "b"
     s"""bands AS (
        |  SELECT doc_id, shingles, b, ${Portable.sqlHash(bandKeys: _*)} AS bh
@@ -853,7 +221,7 @@ object SparkEntry {
     * over an arbitrary (doc_id, text) source (no WITH prefix; extends
     * [[minhashCtesFrom]] with bands → candidate pairs → verified
     * jaccard). */
-  private def lshJacCtesFrom(src: String): String = {
+  private[graft] def lshJacCtesFrom(src: String): String = {
     s"""${minhashCtesFrom(src)},
        |$bandsCteSql,
        |cand AS (
@@ -872,79 +240,13 @@ object SparkEntry {
        |)""".stripMargin
   }
 
-  /** The [[lshJacCtesFrom]] chain over `documents` — shared by q20
-    * (pair report), q43 (dedup apply), q51/q53 (clustering). */
-  private val lshJacSqlCte: String = s"WITH ${lshJacCtesFrom("documents")}"
-
-  /** Gaps-and-islands sessionization oracle — shared by q30 (direct,
-    * per-user window) and q52 (two-phase bucketed build): both engine
-    * forms compute the same sessions by construction. */
-  private val sessionizeOracleSql: String =
-    s"""WITH e AS (
-       |  SELECT user_id, event_id, value, epoch_ns(ts) AS tns,
-       |    CASE WHEN lag(epoch_ns(ts)) OVER w IS NULL
-       |           OR epoch_ns(ts) - lag(epoch_ns(ts)) OVER w > ${SessionGapMs}000000
-       |         THEN 1 ELSE 0 END AS new_sess
-       |  FROM events
-       |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)
-       |),
-       |s AS (
-       |  SELECT user_id, event_id, value, tns,
-       |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY tns, event_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-       |  FROM e
-       |)
-       |SELECT user_id, session_id::BIGINT AS session_id,
-       |  count(*) AS n_events,
-       |  (min(tns) // 1000000)::BIGINT AS start_ms,
-       |  (max(tns) // 1000000)::BIGINT AS end_ms,
-       |  ((max(tns) // 1000000) - (min(tns) // 1000000))::BIGINT AS duration_ms,
-       |  ${Portable.sqlIntRatioSigned9("sum(CAST(floor(value * 100 + 0.5) AS BIGINT))", "100")} AS sum_value
-       |FROM s GROUP BY user_id, session_id
-       |ORDER BY user_id, session_id""".stripMargin
-
-  /** q48/q50 shared as-of inputs: events as (event_id, event_type, ms)
-    * on the left; completed-hourly-window stats keyed by availability
-    * time (window END) on the right. One definition so the direct and
-    * range-bucketed forms can never drift apart. */
-  private def asofInputs(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val ev = Sources.eventsNs(s, dir)
-    val left = ev.select(col("event_id"), col("event_type"),
-      expr("ts div 1000000").cast("long").as("ms"))
-    val right = Events.tumbling(ev, WindowMs)
-      .select(col("event_type"),
-        (col("window_start_ms") + WindowMs).cast("long").as("avail_ms"),
-        col("avg_value").as("prev_avg"))
-    (left, right)
-  }
-
-  /** As-of enrichment oracle (native DuckDB ASOF LEFT JOIN) — shared by
-    * q48 (union+window form) and q50 (range-bucketed form): both are
-    * result-identical by construction. */
-  private val asofOracleSql: String =
-    s"""WITH wdw AS (
-       |  SELECT event_type,
-       |    ((epoch_ms(ts) - (epoch_ms(ts) % $WindowMs)) + $WindowMs)::BIGINT AS avail_ms,
-       |    ${Portable.sqlIntRatioSigned9("sum(CAST(floor(value * 100 + 0.5) AS BIGINT))", "CAST(count(*) AS HUGEINT) * 100")} AS prev_avg
-       |  FROM events GROUP BY 1, 2
-       |),
-       |e AS (
-       |  SELECT event_id, event_type,
-       |         (epoch_ns(ts) // 1000000)::BIGINT AS ms
-       |  FROM events
-       |)
-       |SELECT e.event_type, e.event_id, e.ms, w.avail_ms, w.prev_avg
-       |FROM e ASOF LEFT JOIN wdw w
-       |  ON e.event_type = w.event_type AND e.ms >= w.avail_ms
-       |ORDER BY e.event_id""".stripMargin
-
   /** Recursive transitive-reachability CTE over the verified near-dup
     * pairs — shared by q51 (cluster table) and q53 (cluster-policy
     * apply), so the reachability definition can never drift between
-    * them. Expects the `jac` CTE ([[lshJacSqlCte]]) in scope; yields
-    * `reach(id, r)` = every (vertex, reachable vertex) pair. */
-  private val nearDupReachCte: String =
+    * them. Expects the `jac` CTE (`DedupQueries.lshJacSqlCte`) in
+    * scope; yields `reach(id, r)` = every (vertex, reachable vertex)
+    * pair. */
+  private[graft] val nearDupReachCte: String =
     s"""edges AS (
        |  SELECT id_a AS s, id_b AS d FROM jac WHERE jaccard >= $JaccardTau
        |  UNION
@@ -957,164 +259,9 @@ object SparkEntry {
        |  FROM edges e JOIN reach ON e.d = reach.id
        |)""".stripMargin
 
-  /** DuckDB CTE chain for the q214/q216 WordPiece pipeline: word
-    * counts → substring mine → minCount prune (singles always kept) →
-    * per-position argmax jump table → the greedy chain as a recursive
-    * pointer-chase (one jump per state — no aggregate inside the
-    * recursion). Yields `chain(word, s)` + `jump`/`w` in scope; the
-    * whole chain must be headed by WITH RECURSIVE. */
-  private lazy val wordpieceCtesSql: String =
-    s"""wc AS (
-       |  SELECT word, count(*)::BIGINT AS cnt FROM (
-       |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-       |  WHERE word <> '' GROUP BY 1
-       |),
-       |w AS (SELECT word, cnt FROM wc WHERE length(word) <= $WpMaxWordLen),
-       |c1 AS (
-       |  SELECT word, cnt, length(word) AS len,
-       |    unnest(range(1, length(word) + 1)) AS s
-       |  FROM w
-       |),
-       |cp AS (
-       |  SELECT word, cnt, s, l, substring(word, CAST(s AS INT),
-       |      CAST(l AS INT)) AS piece, (s = 1) AS ini
-       |  FROM (
-       |    SELECT word, cnt, s,
-       |      unnest(range(1, least($WpMaxPiece, len - s + 1) + 1)) AS l
-       |    FROM c1)
-       |),
-       |voc AS (
-       |  SELECT piece, ini FROM cp GROUP BY piece, ini
-       |  HAVING sum(cnt) >= $WpMinCount OR max(l) = 1
-       |),
-       |jump AS (
-       |  SELECT cp.word, cp.cnt, cp.s, max(cp.l) AS jl
-       |  FROM cp JOIN voc ON cp.piece = voc.piece AND cp.ini = voc.ini
-       |  GROUP BY 1, 2, 3
-       |),
-       |chain AS (
-       |  SELECT word, 1 AS s FROM w
-       |  UNION ALL
-       |  SELECT c.word, CAST(c.s + j.jl AS INTEGER) FROM chain c
-       |  JOIN jump j ON j.word = c.word AND j.s = c.s
-       |)""".stripMargin
-
-  /** DuckDB CTE chain for the q212/q213 calibration buckets: the
-    * [[Quality.reliabilityDiagram]] bucket agg — per-row 1e9
-    * integerization, exact DECIMAL sums of score mass and squared
-    * error. Yields `b(bin, n, pos, ss, se)`; expects the
-    * quality-score `qs` CTE prefix (included). */
-  private lazy val calibBinsSqlCte: String =
-    s"""$qualityScoreSqlCtes,
-       |bk AS (
-       |  SELECT least(floor(quality_score * $IsoBins), ${IsoBins - 1})
-       |      ::BIGINT AS bin,
-       |    CAST(floor(round(quality_score, 9) * 1e9 + 0.5) AS BIGINT)
-       |      AS s9,
-       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-       |  FROM qs
-       |),
-       |b AS (
-       |  SELECT bin, count(*)::BIGINT AS n, sum(y)::BIGINT AS pos,
-       |    sum(CAST(s9 AS DECIMAL(38,0))) AS ss,
-       |    sum(CAST((s9 - 1000000000*y)*(s9 - 1000000000*y)
-       |      AS DECIMAL(38,0))) AS se
-       |  FROM bk GROUP BY 1
-       |)""".stripMargin
-
-  /** DuckDB tail shared by q213/q276: the Murphy-decomposition terms
-    * over a prepared bucket frame `b(bin, n, pos, ss, se)` — per-bucket
-    * REL/RES integerized at 1e9 and summed in BIGINT, with the
-    * divide-before-square pinned-double fallback past the DECIMAL
-    * operand bounds, branch for branch the
-    * [[graft.ops.Quality.brierDecomposition]] plan. Prefix must END
-    * with the `b` CTE and a trailing comma. */
-  private lazy val brierDecompSqlTail: String =
-    s"""t AS (SELECT sum(n)::BIGINT AS nn, sum(pos)::BIGINT AS pp,
-       |        sum(se) AS sse FROM b),
-       |terms AS (
-       |  SELECT t.nn, t.pp, t.sse,
-       |    CASE WHEN CAST(b.n AS DOUBLE) <= 2.2e5 THEN
-       |      ${Portable.sqlIntRatioScaled(
-            "(CAST(b.ss AS HUGEINT) - CAST(b.pos AS HUGEINT)" +
-              " * 1000000000) * (CAST(b.ss AS HUGEINT)" +
-              " - CAST(b.pos AS HUGEINT) * 1000000000)",
-            "CAST(b.n AS HUGEINT) * t.nn * 1000000000 * 1000000000",
-            9)}
-       |    ELSE CAST(floor(
-       |      (CAST(CAST(b.ss AS HUGEINT) - CAST(b.pos AS HUGEINT)
-       |         * 1000000000 AS DOUBLE)
-       |       / (CAST(b.n AS DOUBLE) * 1e9))
-       |      * (CAST(CAST(b.ss AS HUGEINT) - CAST(b.pos AS HUGEINT)
-       |           * 1000000000 AS DOUBLE)
-       |         / (CAST(b.n AS DOUBLE) * 1e9))
-       |      * CAST(b.n AS DOUBLE) / CAST(t.nn AS DOUBLE) * 1e9
-       |      + 0.5) AS BIGINT)
-       |    END AS rel9,
-       |    CASE WHEN CAST(b.n AS DOUBLE) * CAST(t.nn AS DOUBLE)
-       |        <= 2.2e14 THEN
-       |      ${Portable.sqlIntRatioScaled(
-            "(CAST(b.pos AS HUGEINT) * t.nn - CAST(t.pp AS HUGEINT)" +
-              " * b.n) * (CAST(b.pos AS HUGEINT) * t.nn" +
-              " - CAST(t.pp AS HUGEINT) * b.n)",
-            "CAST(b.n AS HUGEINT) * t.nn * t.nn * t.nn", 9)}
-       |    ELSE CAST(floor(
-       |      (CAST(CAST(b.pos AS HUGEINT) * t.nn
-       |         - CAST(t.pp AS HUGEINT) * b.n AS DOUBLE)
-       |       / (CAST(b.n AS DOUBLE) * CAST(t.nn AS DOUBLE)))
-       |      * (CAST(CAST(b.pos AS HUGEINT) * t.nn
-       |           - CAST(t.pp AS HUGEINT) * b.n AS DOUBLE)
-       |         / (CAST(b.n AS DOUBLE) * CAST(t.nn AS DOUBLE)))
-       |      * CAST(b.n AS DOUBLE) / CAST(t.nn AS DOUBLE) * 1e9
-       |      + 0.5) AS BIGINT)
-       |    END AS res9
-       |  FROM b CROSS JOIN t
-       |)
-       |SELECT nn AS n, pp AS pos,
-       |  ${Portable.sqlIntRatio9("pp", "nn")} AS pos_rate,
-       |  ${Portable.sqlIntRatio9("sse",
-           "CAST(nn AS HUGEINT) * 1000000000 * 1000000000")} AS brier,
-       |  round(CAST(CAST(floor(round(CAST(sum(rel9) AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS reliability,
-       |  round(CAST(CAST(floor(round(CAST(sum(res9) AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS resolution,
-       |  ${Portable.sqlIntRatio9("CAST(pp AS HUGEINT) * (nn - pp)",
-           "CAST(nn AS HUGEINT) * nn")} AS uncertainty
-       |FROM terms GROUP BY nn, pp, sse
-       |ORDER BY n""".stripMargin
-
-  /** DuckDB CTE chain computing per-doc winnowing fingerprints
-    * (relational twin of [[Text.winnowFingerprints]]): positional
-    * grams, the same 60-bit hash, a per-doc ROWS window min, the
-    * window-start filter, distinct. Yields `fp(doc_id, fp)`. */
-  private val winnowFpSqlCte: String = {
-    val gram = (0 until ShingleN).map(o => s"t[i+$o]").mkString(", ")
-    s"""WITH tok AS (
-       |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-       |),
-       |gr AS (
-       |  SELECT doc_id, t,
-       |    unnest(range(1, greatest(0, len(t) - ${ShingleN - 2}))) AS i
-       |  FROM tok WHERE len(t) >= $ShingleN
-       |),
-       |gh AS (
-       |  SELECT doc_id, i AS p, len(t) - ${ShingleN - 1} AS np,
-       |    ${Portable.sqlHash(s"concat_ws(' ', $gram)")} AS h
-       |  FROM gr
-       |),
-       |wm AS (
-       |  SELECT doc_id, p, np,
-       |    min(h) OVER (PARTITION BY doc_id ORDER BY p
-       |      ROWS BETWEEN CURRENT ROW AND ${WinnowW - 1} FOLLOWING) AS fp
-       |  FROM gh
-       |),
-       |fp AS (
-       |  SELECT DISTINCT doc_id, fp FROM wm
-       |  WHERE p <= greatest(np - ${WinnowW - 1}, 1)
-       |)""".stripMargin
-  }
-
   /** DuckDB CTE computing per-doc SimHash (relational form of
     * [[Text.simhash]]). */
-  private val simhashSqlCte: String =
+  private[graft] val simhashSqlCte: String =
     s"""WITH tok AS (
        |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
        |),
@@ -1131,7 +278,7 @@ object SparkEntry {
 
   /** DuckDB CTE: SRP bucket per embedding vector (mirror of
     * [[Dedup.srpBuckets]]). */
-  private val srpSqlCte: String =
+  private[graft] val srpSqlCte: String =
     // d is an ordered list_sum fold (not a relational SUM) so the float
     // accumulation order matches Spark's sequential `aggregate` fold
     // bit-for-bit — a relational SUM could flip the sign of a near-zero
@@ -1151,38 +298,11 @@ object SparkEntry {
        |  FROM embeddings
        |)""".stripMargin
 
-  /** q16's oracle (exact brute-force cosine top-k) — a val so q109's
-    * recall report can embed the identical exact side. */
-  /** q14's oracle — a val because q147 (the auto-salted form of the
-    * same report) shares it verbatim. */
-  private def q14OracleSql: String =
-    s"""$pairsSqlCte,
-       |cooc AS (
-       |  SELECT target, context, count(*) AS cnt
-       |  FROM pairs GROUP BY target, context
-       |),
-       |topk AS (
-       |  SELECT target, context, cnt,
-       |         row_number() OVER (PARTITION BY target
-       |           ORDER BY cnt DESC, context ASC) AS rnk
-       |  FROM cooc
-       |)
-       |SELECT vt.pid AS target_pid, vc.pid AS neighbor_pid,
-       |       pt.p_name AS target_name, pc.p_name AS neighbor_name,
-       |       t.cnt, t.rnk
-       |FROM topk t
-       |JOIN vocab vt ON t.target = vt.idx
-       |JOIN vocab vc ON t.context = vc.idx
-       |JOIN part pt ON vt.pid = pt.p_partkey
-       |JOIN part pc ON vc.pid = pc.p_partkey
-       |WHERE t.rnk <= $TopK
-       |ORDER BY target_pid, rnk""".stripMargin
-
   /** Exact-cosine top-k oracle body (probes = vec_id < 5), parametrized
     * on the embedding expression so q150 can run the IDENTICAL report
     * over the matryoshka prefix (`embedding[1:dims]`) — the truncation
     * is the only delta between the q150 oracle's two sides. */
-  private def exactTopKSqlOn(vecExpr: String): String =
+  private[graft] def exactTopKSqlOn(vecExpr: String): String =
     s"""WITH c AS (
        |  SELECT vec_id,
        |         list_transform($vecExpr, x -> CAST(x AS DOUBLE)) AS v
@@ -1211,39 +331,19 @@ object SparkEntry {
        |QUALIFY rnk <= $TopK
        |ORDER BY probe_id, rnk""".stripMargin
 
-  private val q16OracleSql: String = exactTopKSqlOn("embedding")
-
-  /** q28's oracle (SRP-bucketed ANN top-k) — a val so q109's recall
-    * report can embed the identical approximate side. */
-  private def q28OracleSql: String =
-    s"""$srpSqlCte,
-       |scored AS (
-       |  SELECT p.vec_id AS probe_id, c.vec_id,
-       |         ${Portable.sqlRatio9(cosSql("ec.v", "ep.v"))} AS cos
-       |  FROM buck p JOIN buck c ON p.bucket = c.bucket
-       |    AND c.vec_id <> p.vec_id
-       |  JOIN ev ep ON p.vec_id = ep.vec_id
-       |  JOIN ev ec ON c.vec_id = ec.vec_id
-       |  WHERE p.vec_id < 5
-       |)
-       |SELECT probe_id, vec_id, cos,
-       |       CAST(row_number() OVER (PARTITION BY probe_id
-       |         ORDER BY cos DESC, vec_id ASC) AS BIGINT) AS rnk
-       |FROM scored
-       |QUALIFY rnk <= $TopK
-       |ORDER BY probe_id, rnk""".stripMargin
+  private[graft] val q16OracleSql: String = exactTopKSqlOn("embedding")
 
   /** The q62 oracle's CTE chain (WITH RECURSIVE .. surv): the full
     * curation funnel down to the near-dedup survivors — shared by q62
     * (chunk the survivors) and q70 (decontaminate, then chunk). */
-  private def curateOracleCtes: String = curateOracleCtesWith(pplGate = false)
+  private[graft] def curateOracleCtes: String = curateOracleCtesWith(pplGate = false)
 
   /** The shared funnel chain, optionally with the CCNet perplexity-tier
     * gate (q93) between the repetition gate and exact dedup: NLL over
     * the gkeep survivors (the model trains on the post-gate subset,
     * exactly like the Spark stage), per-lang ntile on the rounded
     * score, tiers in [[CuratePplTiers]] kept. */
-  private def curateOracleCtesWith(pplGate: Boolean,
+  private[graft] def curateOracleCtesWith(pplGate: Boolean,
                                    bestSurvivor: Boolean = false,
                                    pctGate: Boolean = false): String = {
     val stopList = Text.EnStopwords.map(w => s"'$w'").mkString(", ")
@@ -1402,132 +502,11 @@ object SparkEntry {
          |  ) WHERE rn = 1
          |)""".stripMargin
 
-  /** BPE oracle: the word-frequency CTE plus `k` UNROLLED learning
-    * rounds. Round j reads `bseg(j-1)` (word, count, s=symbols list) and
-    * produces `bb j` (the argmax pair: count DESC, l ASC, r ASC) and
-    * `bseg j` (the segmentation after greedily applying it). The greedy
-    * left-to-right non-overlapping apply is expressed with windows:
-    * consecutive matches only arise for l = r (runs of one symbol), and
-    * there the applied positions are the even offsets within each
-    * gaps-and-islands run — exactly the Spark side's fold semantics. */
-  private def bpeCtesSql(k: Int): String = {
-    val head =
-      s"""bwc AS MATERIALIZED (
-         |  SELECT w AS word, count(*)::BIGINT AS count
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) _
-         |  WHERE w <> '' GROUP BY w
-         |),
-         |bseg0 AS MATERIALIZED (
-         |  SELECT word, count,
-         |    list_transform(range(1, length(word) + 1), i -> word[i:i]) AS s
-         |  FROM bwc
-         |)""".stripMargin
-    val rounds = (1 to k).map { j =>
-      val prev = s"bseg${j - 1}"
-      s"""bp$j AS MATERIALIZED (
-         |  SELECT s[i] AS l, s[i+1] AS r, sum(count)::BIGINT AS c
-         |  FROM $prev, LATERAL (SELECT unnest(range(1, len(s))) AS i) _
-         |  GROUP BY l, r
-         |),
-         |bb$j AS MATERIALIZED (SELECT l, r, c FROM bp$j ORDER BY c DESC, l, r LIMIT 1),
-         |be$j AS MATERIALIZED (
-         |  SELECT word, count, i, s[i] AS sym,
-         |    CASE WHEN i < len(s) AND s[i] = (SELECT l FROM bb$j)
-         |              AND s[i+1] = (SELECT r FROM bb$j)
-         |         THEN 1 ELSE 0 END AS mt
-         |  FROM $prev, LATERAL (SELECT unnest(range(1, len(s) + 1)) AS i) _
-         |),
-         |bm$j AS MATERIALIZED (
-         |  SELECT word, i FROM (
-         |    SELECT word, i, min(i) OVER (PARTITION BY word, isl) AS run_start
-         |    FROM (
-         |      SELECT word, i,
-         |        i - row_number() OVER (PARTITION BY word ORDER BY i) AS isl
-         |      FROM be$j WHERE mt = 1
-         |    ) a
-         |  ) b
-         |  WHERE (i - run_start) % 2 = 0
-         |),
-         |bseg$j AS MATERIALIZED (
-         |  SELECT e.word, e.count,
-         |    list(CASE WHEN m.i IS NOT NULL
-         |              THEN (SELECT l FROM bb$j) || (SELECT r FROM bb$j)
-         |              ELSE e.sym END ORDER BY e.i) AS s
-         |  FROM be$j e
-         |  LEFT JOIN bm$j m ON e.word = m.word AND e.i = m.i
-         |  LEFT JOIN bm$j p ON e.word = p.word AND e.i = p.i + 1
-         |  WHERE p.i IS NULL
-         |  GROUP BY e.word, e.count
-         |)""".stripMargin
-    }
-    (head +: rounds).mkString(",\n")
-  }
-
-  /** q78's repeated-span scrub as an oracle tail over an arbitrary
-    * (doc_id, text) CTE — ends in `sscrub` (doc_id, text) holding the
-    * scrubbed non-empty survivors, for the q80 composed funnel. */
-  private def scrubTailSql(src: String): String = {
-    val k = CurateScrubK
-    val kg = "concat_ws(' ', " +
-      (0 until k).map(o => s"t[i+$o]").mkString(", ") + ")"
-    s"""stoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM $src),
-       |swins AS (
-       |  SELECT doc_id, i AS pos, ${Portable.sqlHash(kg)} AS hh
-       |  FROM stoks, LATERAL (SELECT unnest(range(1,
-       |    greatest(0, len(t) - ${k - 2}))) AS i) _
-       |),
-       |smarked AS (
-       |  SELECT doc_id, pos, row_number() OVER (PARTITION BY hh
-       |    ORDER BY doc_id, pos) AS rn
-       |  FROM swins
-       |),
-       |sdup AS (SELECT doc_id, pos FROM smarked WHERE rn > 1),
-       |srem AS (
-       |  SELECT DISTINCT doc_id, pos + o AS idx
-       |  FROM sdup, LATERAL (SELECT unnest(range(0, $k)) AS o) _
-       |),
-       |stsp AS (
-       |  SELECT doc_id, i AS idx, t[i] AS tok
-       |  FROM stoks, LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) _
-       |),
-       |sdirty AS (SELECT DISTINCT doc_id FROM srem),
-       |sreb AS (
-       |  SELECT stsp.doc_id,
-       |    coalesce(string_agg(stsp.tok, ' ' ORDER BY stsp.idx)
-       |      FILTER (WHERE srem.idx IS NULL), '') AS text
-       |  FROM stsp
-       |  JOIN sdirty ON stsp.doc_id = sdirty.doc_id
-       |  LEFT JOIN srem ON stsp.doc_id = srem.doc_id AND stsp.idx = srem.idx
-       |  GROUP BY stsp.doc_id
-       |),
-       |sscrub AS (
-       |  SELECT s.doc_id, coalesce(sreb.text, s.text) AS text
-       |  FROM $src s LEFT JOIN sreb ON s.doc_id = sreb.doc_id
-       |  WHERE length(coalesce(sreb.text, s.text)) > 0
-       |)""".stripMargin
-  }
-
-  /** q47's chunking tail over an arbitrary (doc_id, text) CTE. */
-  private def chunkTailSql(src: String): String = {
-    val c = CurateChunkTokens
-    s"""ctoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM $src),
-       |ch AS (
-       |  SELECT doc_id, i AS chunk_idx,
-       |    array_to_string(t[i*$c+1 : i*$c+$c], ' ') AS chunk,
-       |    len(t[i*$c+1 : i*$c+$c])::BIGINT AS n_tokens
-       |  FROM ctoks, LATERAL (SELECT unnest(range(0, (len(t) + ${c - 1}) // $c)) AS i) _
-       |)
-       |SELECT doc_id, chunk_idx, n_tokens, chunk FROM ch
-       |ORDER BY doc_id, chunk_idx""".stripMargin
-  }
-
-  /** Packing oracle tail — shared by q67 (over raw documents) and q77
-    * (over the curation funnel's survivors): the same shard/cumsum/
-    * span-explode/reassemble chain as [[graft.ops.Sampling.pack]]. */
-  /** The [[packTailSql]]/[[packAuditTailSql]] shared CTE chain: per
+  /** The shared CTE chain of the `CurationQueries` pack tails
+    * (`packTailSql`, `packAuditTailSql`) and the q274 export: per
     * (document, touched sequence) one row with the piece's token span —
     * the oracle twin of `Sampling.packPieces`. */
-  private def packPiecesSql(src: String): String = {
+  private[graft] def packPiecesSql(src: String): String = {
     val L = PackSeqTokens
     s"""pd AS (
        |  SELECT doc_id,
@@ -1556,34 +535,9 @@ object SparkEntry {
        |)""".stripMargin
   }
 
-  private def packTailSql(src: String): String =
-    s"""${packPiecesSql(src)}
-       |SELECT shard, seq_idx::BIGINT AS seq_idx,
-       |  sum(pe2 - ps)::BIGINT AS n_tokens,
-       |  string_agg(array_to_string(part, ' '), ' ' ORDER BY ps) AS seq
-       |FROM pp GROUP BY shard, seq_idx
-       |ORDER BY shard, seq_idx""".stripMargin
-
-  /** q128: same piece fan-out, counted instead of reassembled. */
-  private def packAuditTailSql(src: String): String =
-    s"""${packPiecesSql(src)},
-       |pseq AS (
-       |  SELECT shard, seq_idx, count(*)::BIGINT AS docs,
-       |    sum(pe2 - ps)::BIGINT AS tok
-       |  FROM pp GROUP BY shard, seq_idx
-       |)
-       |SELECT shard, count(*)::BIGINT AS n_seqs,
-       |  sum(CASE WHEN tok = $PackSeqTokens THEN 1 ELSE 0 END)::BIGINT
-       |    AS full_seqs,
-       |  sum(CASE WHEN docs > 1 THEN 1 ELSE 0 END)::BIGINT
-       |    AS multi_doc_seqs,
-       |  sum(docs - 1)::BIGINT AS doc_boundaries,
-       |  max(docs)::BIGINT AS max_docs_per_seq
-       |FROM pseq GROUP BY shard ORDER BY shard""".stripMargin
-
   /** q135/q137 shared CDC chunk chain, ending at `cdcch`
     * (doc_id, chunk_idx, n_tokens, chunk). */
-  private val cdcChunkCtes: String =
+  private[graft] val cdcChunkCtes: String =
     s"""ct AS (
        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
        |),
@@ -1607,97 +561,10 @@ object SparkEntry {
        |  FROM cc GROUP BY doc_id, chunk_idx
        |)""".stripMargin
 
-  /** q139: the q25 / q58 / q71 signal chains integerized (half-up at
-    * 1e9 over the already-9dp-rounded values), every moment an exact
-    * DECIMAL(38,0) sum, the 6 pair correlations formed from the one
-    * moment row — the same fixed-expression-shape discipline as the
-    * Spark side, so even the float correlations hash-match. */
-  private def q139OracleSql: String = {
-    val sigs = Seq("quality", "rep", "nll", "len")
-    val prs = for {
-      i <- sigs.indices; j <- (i + 1) until sigs.size
-    } yield (sigs(i), sigs(j))
-    def d(e: String) = s"CAST($e AS DECIMAL(38,0))"
-    val moments =
-      (Seq(s"${d("count(*)")} AS n") ++
-        sigs.flatMap(s0 => Seq(
-          s"${d(s"sum(${d(s0)})")} AS s_$s0",
-          s"${d(s"sum(${d(s0)} * ${d(s0)})")} AS ss_$s0")) ++
-        prs.map { case (a, b) =>
-          s"${d(s"sum(${d(a)} * ${d(b)})")} AS sp_${a}_$b" }).mkString(",\n    ")
-    def dd(e: String) = s"CAST($e AS DOUBLE)"
-    val pairSelects = prs.map { case (a, b) =>
-      val da = dd(s"n * ss_$a - s_$a * s_$a")
-      val db = dd(s"n * ss_$b - s_$b * s_$b")
-      val num = dd(s"n * sp_${a}_$b - s_$a * s_$b")
-      s"""SELECT '$a' AS sig_a, '$b' AS sig_b,
-         |  CAST(n AS BIGINT) AS n_docs,
-         |  CASE WHEN $da > 0 AND $db > 0 THEN
-         |    ${Portable.sqlRatio9(s"$num / (sqrt($da) * sqrt($db))")}
-         |  END AS corr
-         |FROM agg1""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    val stopList = Text.EnStopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH qm AS (
-       |  SELECT doc_id,
-       |    len(string_split(text, ' '))::BIGINT AS lenv,
-       |    $qMetricColsSql
-       |  FROM documents
-       |),
-       |qx AS (
-       |  SELECT doc_id, lenv,
-       |    $qScoreSqlExpr
-       |      AS score
-       |  FROM qm
-       |),
-       |rg AS (SELECT doc_id,
-       |         unnest(${Text.shinglesAllSql("string_split(text, ' ')",
-                  RepetitionN)}) AS g
-       |       FROM documents),
-       |rc AS (SELECT doc_id, g, count(*) AS c FROM rg GROUP BY doc_id, g),
-       |rp AS (SELECT doc_id, sum(c)::BIGINT AS total,
-       |              count(*)::BIGINT AS n_distinct
-       |       FROM rc GROUP BY doc_id),
-       |rx AS (
-       |  SELECT d.doc_id,
-       |    ${Portable.sqlIntRatio9("rp.total - rp.n_distinct", "rp.total")} AS ratio
-       |  FROM documents d LEFT JOIN rp USING (doc_id)
-       |),
-       |utf AS (
-       |  SELECT doc_id, w, count(*)::BIGINT AS c
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-       |        FROM documents)
-       |  GROUP BY doc_id, w
-       |),
-       |ucw AS (SELECT doc_id, c, sum(c) OVER (PARTITION BY w) AS cnt
-       |        FROM utf),
-       |utot AS (SELECT CAST(sum(len(string_split(text, ' '))) AS DOUBLE)
-       |               AS total FROM documents),
-       |ux AS (
-       |  SELECT doc_id, round(CAST(CAST(floor(round(sum(c * -ln(cnt / total)) / sum(c), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS nllv
-       |  FROM ucw, utot GROUP BY doc_id
-       |),
-       |sigf AS (
-       |  SELECT q.doc_id,
-       |    CAST(floor(q.score * 1e9 + 0.5) AS BIGINT) AS quality,
-       |    CAST(floor(r.ratio * 1e9 + 0.5) AS BIGINT) AS rep,
-       |    CAST(floor(u.nllv * 1e9 + 0.5) AS BIGINT) AS nll,
-       |    q.lenv AS len
-       |  FROM qx q JOIN rx r USING (doc_id) JOIN ux u USING (doc_id)
-       |  WHERE r.ratio IS NOT NULL
-       |),
-       |agg1 AS (
-       |  SELECT $moments
-       |  FROM sigf
-       |)
-       |$pairSelects
-       |ORDER BY sig_a, sig_b""".stripMargin
-  }
-
   /** Naive-Bayes train + score + rank CTE chain ending at `rk` (per
     * (doc, label) ranked avg-log-posterior with runner-up) — shared by
     * q85 (the classify report) and q129 (the calibration binning). */
-  private val nbRankSqlCte: String =
+  private[graft] val nbRankSqlCte: String =
     """WITH tok AS (
       |  SELECT doc_id, lang, w AS token
       |  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
@@ -1741,30 +608,10 @@ object SparkEntry {
       |  FROM sc
       |)""".stripMargin
 
-  /** Token-budget oracle — shared by q65 (direct window form) and q66
-    * (two-phase bucketed build): both engine forms compute the same
-    * prefix by construction (SamplingSpec proves the law). */
-  private val tokenBudgetOracleSql: String =
-    s"""WITH d AS (
-       |  SELECT doc_id, source,
-       |    len(string_split(text, ' '))::BIGINT AS n_tokens,
-       |    ${Portable.sqlHash("doc_id", "'budget'")} AS h
-       |  FROM documents
-       |),
-       |c AS (
-       |  SELECT doc_id, source, n_tokens,
-       |    sum(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
-       |  FROM d
-       |)
-       |SELECT doc_id, source, n_tokens, cum_tokens::BIGINT AS cum_tokens
-       |FROM c WHERE cum_tokens <= $TokenBudgetPerSource
-       |ORDER BY doc_id""".stripMargin
-
   /** DuckDB CTE chain (no leading WITH) ending in
     * `tfpairs(id_a, id_b, cos_tfidf)` — the [[Similarity.tfidfCosinePairs]]
     * twin, shared by q84 (pairs) and q86 (PageRank edges). */
-  private def tfidfPairsCtes(tau: Double, maxDf: Long): String =
+  private[graft] def tfidfPairsCtes(tau: Double, maxDf: Long): String =
     s"""ttf AS (
        |  SELECT doc_id, w AS term, count(*)::BIGINT AS tf
        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
@@ -1792,193 +639,7 @@ object SparkEntry {
        |  HAVING round(CAST(CAST(floor(round(sum(a.u * b.u), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) >= $tau
        |)""".stripMargin
 
-  /** q86's unrolled PageRank rounds r1..rK (damping 85/100 — the
-    * [[graft.ops.Graph.pageRank]] default), integer-only arithmetic. */
-  private def prRoundCtes(k: Int): String =
-    (1 to k).map { i =>
-      s"""r$i AS (
-         |  SELECT sym.d AS id,
-         |    (((15 * ($PrScale // nn.cnt)) // 100)
-         |      + ((85 * sum(r${i - 1}.r // deg.deg)) // 100))::BIGINT AS r
-         |  FROM sym JOIN deg ON sym.s = deg.s
-         |  JOIN r${i - 1} ON r${i - 1}.id = sym.s
-         |  CROSS JOIN nn GROUP BY sym.d, nn.cnt
-         |)""".stripMargin
-    }.mkString(",\n")
-
-  /** DuckDB fragment: sequential-fold cosine between list columns a, b —
-    * same operand order as [[Similarity.cosine]]. */
-  /** Shared mining tail for q161/q162 (mirror of
-    * `Similarity.mineScored`): expects a CTE `si(x_id, y_id, cos, ci)`
-    * already open, appends the exact-integer top-k penalties, the
-    * one-division margin, and the mutual-best + τ gate. Lines carry no
-    * margin bar on purpose — the host string's `stripMargin` must leave
-    * them untouched. */
-  private def marginMineSqlTail: String =
-    s""",
-r AS (
-  SELECT *,
-    row_number() OVER (PARTITION BY x_id ORDER BY ci DESC, y_id) AS rx,
-    row_number() OVER (PARTITION BY y_id ORDER BY ci DESC, x_id) AS ry
-  FROM si
-),
-sx AS (SELECT x_id, sum(ci) AS sx FROM r
-       WHERE rx <= $MarginK GROUP BY x_id),
-sy AS (SELECT y_id, sum(ci) AS sy FROM r
-       WHERE ry <= $MarginK GROUP BY y_id),
-m AS (
-  SELECT si.x_id, si.y_id, si.cos,
-    ${Portable.sqlIntRatioSigned9(
-      s"CASE WHEN sx.sx + sy.sy < 0 THEN -(si.ci * ${2 * MarginK})" +
-        s" ELSE si.ci * ${2 * MarginK} END",
-      "abs(sx.sx + sy.sy)")} AS margin
-  FROM si JOIN sx USING (x_id) JOIN sy USING (y_id)
-  WHERE sx.sx + sy.sy <> 0
-),
-b AS (
-  SELECT *,
-    row_number() OVER (PARTITION BY x_id ORDER BY margin DESC, y_id) AS bx,
-    row_number() OVER (PARTITION BY y_id ORDER BY margin DESC, x_id) AS byy
-  FROM m
-)
-SELECT x_id, y_id, cos, margin FROM b
-WHERE bx = 1 AND byy = 1 AND margin >= $MarginTau
-ORDER BY x_id"""
-
-  /** Shared q166/q167 PQ oracle prefix: doubles view, subspace slices,
-    * first-K codebooks, argmin codes, probe×codebook distance table.
-    * Bar-margined — interpolates at the TOP of a stripMargin host. */
-  private def pqSqlPrefix: String = {
-    val w = 64 / PqM
-    s"""WITH ev AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings
-       |),
-       |sub AS (
-       |  SELECT vec_id, s, v[(s*$w+1):(s*$w+$w)] AS sv
-       |  FROM ev, (SELECT unnest(range(0, $PqM)) AS s)
-       |),
-       |cen AS (SELECT vec_id AS cid, s, sv AS cv FROM sub
-       |        WHERE vec_id < $PqCent),
-       |enc AS (
-       |  SELECT vec_id, s, cid AS code FROM (
-       |    SELECT a.vec_id, a.s, c.cid,
-       |      row_number() OVER (PARTITION BY a.vec_id, a.s
-       |        ORDER BY ${l2iSql("a.sv", "c.cv")}, c.cid) AS rn
-       |    FROM sub a JOIN cen c USING (s))
-       |  WHERE rn = 1
-       |),
-       |tab AS (
-       |  SELECT p.vec_id AS probe_id, p.s, c.cid,
-       |         ${l2iSql("p.sv", "c.cv")} AS d
-       |  FROM sub p JOIN cen c USING (s) WHERE p.vec_id < 5
-       |)""".stripMargin
-  }
-
-  /** Shared q166/q167 oracle suffix: approximate top-k from the `ad`
-    * CTE, the exact-L2 twin, and q109's recall-join shape. Margins
-    * pre-stripped — safe inside a stripMargin host (no leading bars). */
-  private def pqRecallSqlSuffix: String =
-    s""",
-atop AS (
-  SELECT probe_id, vec_id,
-    row_number() OVER (PARTITION BY probe_id
-      ORDER BY adist, vec_id) AS rnk
-  FROM ad WHERE vec_id <> probe_id
-  QUALIFY rnk <= $TopK
-),
-exd AS (
-  SELECT p.vec_id AS probe_id, c.vec_id,
-         ${l2iSql("c.v", "p.v")} AS d
-  FROM ev c, ev p WHERE p.vec_id < 5 AND c.vec_id <> p.vec_id
-),
-etop AS (
-  SELECT probe_id, vec_id,
-    row_number() OVER (PARTITION BY probe_id
-      ORDER BY d, vec_id) AS rnk
-  FROM exd QUALIFY rnk <= $TopK
-)
-SELECT e.probe_id, count(*) AS n_exact,
-  CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-    AS BIGINT) AS n_hit,
-  round(CAST(CAST(floor(round(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) / count(*)::DOUBLE, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS recall
-FROM etop e LEFT JOIN atop a
-  ON a.probe_id = e.probe_id AND a.vec_id = e.vec_id
-GROUP BY e.probe_id ORDER BY e.probe_id"""
-
-  /** Shared q169/q170 rec-eval oracle prefix: vocab, fold-split enc,
-    * trainer-ordered baskets per fold, train-fold cooc, leave-last-out
-    * held-outs, candidate ranks (rh) and the eligible-order total
-    * (tot). Bar-margined — interpolate at the TOP of a stripMargin
-    * host. */
-  private def recEvalSqlPrefix: String = {
-    val h = Portable.sqlHash("order_id", "ln", "pid")
-    def seqSql(cond: String, as: String): String =
-      s"""$as AS (
-         |  SELECT order_id, item, pos FROM (
-         |    SELECT order_id, item,
-         |           row_number() OVER (PARTITION BY order_id
-         |             ORDER BY $h, pid) - 1 AS pos
-         |    FROM enc WHERE $cond
-         |  ) WHERE pos < $MaxBasketLen
-         |)""".stripMargin
-    s"""$vocabSqlCte,
-       |enc AS (
-       |  SELECT l.l_orderkey AS order_id, l.l_linenumber AS ln,
-       |         l.l_partkey AS pid, coalesce(v.idx, 0) AS item,
-       |         ${Portable.sqlHash(s"'$RecEvalSalt'", "l.l_orderkey")}
-       |           % $RecEvalFolds AS fold
-       |  FROM lineitem l LEFT JOIN vocab v ON l.l_partkey = v.pid
-       |),
-       |${seqSql("fold <> 0", "seqt")},
-       |cooc AS (
-       |  SELECT t.item AS target, c.item AS context,
-       |         count(*)::BIGINT AS cnt
-       |  FROM seqt t JOIN seqt c ON t.order_id = c.order_id
-       |  WHERE t.pos <> c.pos AND abs(t.pos - c.pos) <= $WindowW
-       |    AND t.item <> 0 AND c.item <> 0
-       |  GROUP BY 1, 2
-       |),
-       |${seqSql("fold = 0", "seqe")},
-       |eb AS (SELECT order_id, max(pos) AS lastpos FROM seqe
-       |       GROUP BY 1 HAVING count(*) >= 2),
-       |held AS (SELECT e.order_id, s.item AS heldout
-       |         FROM eb e JOIN seqe s ON s.order_id = e.order_id
-       |           AND s.pos = e.lastpos),
-       |ctx AS (SELECT s.order_id, s.item AS c
-       |        FROM eb e JOIN seqe s ON s.order_id = e.order_id
-       |          AND s.pos < e.lastpos),
-       |scf AS (
-       |  SELECT s.order_id, s.cand, sum(s.cnt)::BIGINT AS score
-       |  FROM (SELECT x.order_id, co.context AS cand, co.cnt
-       |        FROM ctx x JOIN cooc co ON co.target = x.c) s
-       |  WHERE NOT EXISTS (SELECT 1 FROM ctx x
-       |    WHERE x.order_id = s.order_id AND x.c = s.cand)
-       |  GROUP BY 1, 2
-       |),
-       |rk AS (
-       |  SELECT order_id, cand,
-       |    row_number() OVER (PARTITION BY order_id
-       |      ORDER BY score DESC, cand) AS rnk
-       |  FROM scf
-       |),
-       |rh AS (SELECT r.order_id, r.rnk FROM rk r
-       |       JOIN held h ON h.order_id = r.order_id
-       |         AND r.cand = h.heldout),
-       |tot AS (SELECT count(*)::BIGINT AS n_orders FROM eb)""".stripMargin
-  }
-
-  /** DuckDB mirror of `Quantize.l2i`: squared L2 expanded as
-    * a·a − 2(a·b) + b·b over ordered list_sum folds, 9-dp rounded and
-    * integerized at 1e9 — identical IEEE op shape to the engine. */
-  private def l2iSql(a: String, b: String): String =
-    s"""CAST(floor(round(
-       |  list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $a[i]))
-       |  - 2 * list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i]))
-       |  + list_sum(list_transform(range(1, len($b) + 1), i -> $b[i] * $b[i])),
-       |  9) * 1e9 + 0.5) AS BIGINT)""".stripMargin
-
-  private def cosSql(a: String, b: String): String =
+  private[graft] def cosSql(a: String, b: String): String =
     s"""(list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])) /
        | (sqrt(list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $a[i]))) *
        |  sqrt(list_sum(list_transform(range(1, len($b) + 1), i -> $b[i] * $b[i])))))""".stripMargin
@@ -1987,7 +648,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     * exact counts): qcl chars, qca alpha-chars, qcd digit-chars, qcs
     * stopwords, qct tokens, qok length-flag — the inputs every
     * quality-score CTE derives the EXACT-integer score from. */
-  private val qMetricColsSql: String = {
+  private[graft] val qMetricColsSql: String = {
     val stopList = Text.EnStopwords.map(w => s"'$w'").mkString(", ")
     s"""length(text)::BIGINT AS qcl,
        |    (length(text) - length(regexp_replace(text, '[a-z A-Z]', '', 'g')))::BIGINT AS qca,
@@ -2004,7 +665,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     * 0.4·ok + 0.3·a/L + 0.2·s/T + 0.1·(L−d)/L — clamped in integer
     * land, one IEEE division to the emitted double. No double round()
     * anywhere (the q218/q219 driver-version-sensitivity class). */
-  private val qScoreSqlExpr: String = {
+  private[graft] val qScoreSqlExpr: String = {
     val num = "4 * qok * CAST(qcl AS HUGEINT) * qct" +
       " + 3 * CAST(qca AS HUGEINT) * qct" +
       " + 2 * CAST(qcs AS HUGEINT) * qcl" +
@@ -2018,7 +679,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
   /** q101/q184 shared oracle prefix: the per-doc quality score
     * ([[graft.ops.Text.qualityScore]]'s exact DuckDB twin) as CTE `qs`
     * = (doc_id, source, quality_score). */
-  private val qualityScoreSqlCtes: String = {
+  private[graft] val qualityScoreSqlCtes: String = {
     val stopList = Text.EnStopwords.map(w => s"'$w'").mkString(", ")
     s"""WITH m AS (
        |  SELECT doc_id, source, lang,
@@ -2038,7 +699,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     * s9 recovered from the 9dp-integerized score by one exact IEEE
     * multiply + floor. q256 hashes a STREAM-fed re-derivation of the
     * same table against this. */
-  private val thresholdSweepOracleSql: String =
+  private[graft] val thresholdSweepOracleSql: String =
     s"""$qualityScoreSqlCtes,
        |g AS (
        |  SELECT quality_score AS threshold, count(*)::BIGINT AS n,
@@ -2075,7 +736,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     * classBalance integerization; any empty bin on either side nulls
     * the statistic. q264 hashes a STREAM-fed re-derivation of the
     * same one-row statistic against this. */
-  private val psiOracleSql: String =
+  private[graft] val psiOracleSql: String =
     s"""$qualityScoreSqlCtes,
        |av AS (SELECT quality_score AS v FROM qs
        |       WHERE source <> '$KsSourceA'),
@@ -2139,7 +800,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     * SAME literal constants (sprtConstants is called by both
     * builders). q265 hashes the stream's final-batch re-derivation
     * against this. */
-  private val sprtTraceOracleSql: String = {
+  private[graft] val sprtTraceOracleSql: String = {
     val (c09, c19, a9, b9) =
       Events.sprtConstants(SprtP0, SprtP1, SprtAlpha, SprtBeta)
     s"""WITH ud AS (
@@ -2176,7 +837,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     * (source, lang) — means taken over the 9-dp-rounded per-doc
     * scores on both sides. q266 hashes the stream's final-batch
     * rendered card against this. */
-  private val corpusReportOracleSql: String =
+  private[graft] val corpusReportOracleSql: String =
     s"""WITH m AS (
        |  SELECT doc_id, source, lang,
        |    len(string_split(text, ' '))::DOUBLE AS n_toks,
@@ -2200,25 +861,11 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
        |FROM q GROUP BY source, lang
        |ORDER BY source, lang""".stripMargin
 
-  /** q124/q270 shared oracle: odd-id survivors by brute-force min
-    * hamming vs the even-id fingerprints — exact because MaxHamming <
-    * SimHashBands makes the engine's band join exhaustive
-    * (pigeonhole). q270 hashes the REAL-stream run of the same gate
-    * against it. */
-  private val nearDedupAgainstOracleSql: String =
-    s"""$simhashSqlCte
-       |SELECT d.doc_id, d.lang, d.source, d.n_chars
-       |FROM documents d JOIN sim s USING (doc_id)
-       |WHERE d.doc_id % 2 = 1 AND NOT EXISTS (
-       |  SELECT 1 FROM sim c WHERE c.doc_id % 2 = 0
-       |    AND bit_count(xor(s.simhash, c.simhash)) <= $MaxHamming)
-       |ORDER BY doc_id""".stripMargin
-
   /** q133/q268 shared oracle: exact-integer baseline moments; the z
     * expression shape is identical to the Spark side so even the
     * floats are bit-equal. q268 hashes the streaming twin's
     * watermark-closed emissions against the same SQL. */
-  private val windowAnomalyOracleSql: String =
+  private[graft] val windowAnomalyOracleSql: String =
     s"""WITH wc AS (
        |  SELECT event_type,
        |    (epoch_ms(ts) - (epoch_ms(ts) % $WindowMs))::BIGINT
@@ -2260,7 +907,7 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
     * against it, q257 hashes the `flatMapGroupsWithState` streaming
     * twin's watermark-closed emissions against the SAME SQL (the
     * stream-equals-batch law under the driver's gate). */
-  private val robustAnomalyOracleSql: String = {
+  private[graft] val robustAnomalyOracleSql: String = {
     val T = AnomalyTrailing
     val h = T / 2
     s"""WITH wc AS (
@@ -2302,59 +949,12 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
        |FROM z ORDER BY event_type, window_start_ms""".stripMargin
   }
 
-  /** q255/q260 shared oracle chain: curateStream's stateless gate
-    * prefix (normalize → non-empty → language gate → quality metrics)
-    * over the `documents` rows matching `docFilter`, ending at CTE
-    * `sc` (doc_id, text, pred_lang, n_tokens, quality_score). Callers
-    * append further CTEs with a leading comma or the final SELECT. */
-  private def curateStreamPrefixSql(docFilter: String): String = {
-    val langList = CurateLangs.toSeq.sorted.map(l => s"'$l'")
-      .mkString(", ")
-    s"""WITH norm AS (
-       |  SELECT doc_id,
-       |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-       |         ' +', ' ', 'g')) AS text
-       |  FROM documents WHERE $docFilter
-       |),
-       |nz AS (SELECT doc_id, text FROM norm WHERE length(text) > 0),
-       |profile(plang, w) AS (VALUES ${Text.langProfileSql}),
-       |ltok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-       |         FROM nz),
-       |lhits AS (
-       |  SELECT t.doc_id, p.plang, count(*) AS n
-       |  FROM ltok t JOIN profile p ON t.w = p.w
-       |  GROUP BY t.doc_id, p.plang
-       |),
-       |lbest AS (
-       |  SELECT doc_id, plang FROM (
-       |    SELECT doc_id, plang, row_number() OVER (PARTITION BY doc_id
-       |      ORDER BY n DESC, plang ASC) AS r
-       |    FROM lhits
-       |  ) WHERE r = 1
-       |),
-       |lk AS (
-       |  SELECT nz.doc_id, nz.text, b.plang FROM nz
-       |  JOIN lbest b USING (doc_id)
-       |  WHERE b.plang IN ($langList)
-       |),
-       |m AS (
-       |  SELECT doc_id, text, plang,
-       |    $qMetricColsSql
-       |  FROM lk
-       |),
-       |sc AS (
-       |  SELECT doc_id, text, plang AS pred_lang, qct AS n_tokens,
-       |    $qScoreSqlExpr AS quality_score
-       |  FROM m
-       |)""".stripMargin
-  }
-
   /** q178/q183 shared oracle: the SCD2 FULL rebuild over the whole
     * event log — change detection then versioning, both ordered by the
     * original (ts, event_id); timestamps leave as ms-floors (the
     * sessionize cross-engine contract). q183's merge path hashing
     * against this IS the merge-equals-rebuild law. */
-  private val scd2OracleSql: String =
+  private[graft] val scd2OracleSql: String =
     """WITH ev AS (
       |  SELECT user_id, event_id, event_type, epoch_ns(ts) AS tns
       |  FROM events
@@ -2381,9948 +981,82 @@ GROUP BY e.probe_id ORDER BY e.probe_id"""
       |  (to_ms IS NULL) AS is_current
       |FROM v ORDER BY user_id, version""".stripMargin
 
-  /** DuckDB CTE chain mirroring [[graft.ops.Text.bm25TopK]] on the
-    * q175 query/corpus split — ends with `rk` = (query_id, doc_id,
-    * score_i, rnk ≤ [[TopK]]). Shared by q175 and q176 (the fusion
-    * oracle embeds the UNCHANGED lexical body, the q109 discipline). */
-  private val bm25SqlCtes: String =
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  WHERE doc_id >= $RetrievalQueryDocs
+  // q274: the q62 survivor chain → q143's epoch plan/realization
+  // (token counts over the SURVIVORS, source joined back from
+  // documents) → the q67 pack pieces → per-shard manifest rollup
+  // with an order-independent content hash over (seq_idx, seq) —
+  // the composed export, same CTEs, same constants, no drift.
+  private[graft] def corpusExportOracleSql: String = {
+    val vals = EpochWeights.toSeq.sorted
+      .map { case (s, w) => s"('$s', ${w}::DOUBLE)" }.mkString(", ")
+    val wsum = EpochWeights.values.sum
+    s"""$curateOracleCtes,
+       |wt(source, weight) AS (VALUES $vals),
+       |esrc AS (
+       |  SELECT s.doc_id, d.source, s.text
+       |  FROM surv s JOIN documents d USING (doc_id)
        |),
-       |q AS (
-       |  SELECT doc_id AS query_id, text FROM documents
-       |  WHERE doc_id < $RetrievalQueryDocs
+       |tc AS (
+       |  SELECT source, sum(len(string_split(text, ' ')))::BIGINT
+       |    AS n_tokens
+       |  FROM esrc GROUP BY source
        |),
-       |tf AS (
-       |  SELECT doc_id, w, count(*)::BIGINT AS tf FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus)
-       |  GROUP BY 1, 2
+       |fac AS (
+       |  SELECT t.source,
+       |    ${Portable.sqlIntRatio9(s"CAST(floor(coalesce(w.weight, 0.0)" +
+               s" / $wsum * ${EpochBudget.toDouble} + 0.5) AS BIGINT)",
+             "t.n_tokens")} AS factor
+       |  FROM tc t LEFT JOIN wt w USING (source)
        |),
-       |st AS (
-       |  SELECT doc_id, w, tf,
-       |    sum(tf) OVER (PARTITION BY doc_id) AS dl,
-       |    count(*) OVER (PARTITION BY w) AS df
-       |  FROM tf
+       |nn AS (
+       |  SELECT e.doc_id, e.text,
+       |    (floor(f.factor) + CASE WHEN
+       |        ${Portable.sqlUnif("e.doc_id", s"'$EpochRealizeSalt'")}
+       |        < f.factor - floor(f.factor) THEN 1 ELSE 0 END)::BIGINT
+       |      AS n
+       |  FROM esrc e JOIN fac f USING (source)
        |),
-       |tot AS (
-       |  SELECT count(*)::BIGINT AS n_docs,
-       |    sum(len(string_split(text, ' ')))::BIGINT AS l_tot
-       |  FROM corpus
+       |ee AS (
+       |  SELECT doc_id, text,
+       |    unnest(range(1, n + 1))::BIGINT AS epoch_copy
+       |  FROM nn WHERE n >= 1
        |),
-       |qt AS (
-       |  SELECT query_id, w, count(*)::BIGINT AS qtf FROM (
-       |    SELECT query_id, unnest(string_split(text, ' ')) AS w FROM q)
-       |  GROUP BY 1, 2
+       |erz AS (
+       |  SELECT (doc_id * 1024 + epoch_copy)::BIGINT AS doc_id, text
+       |  FROM ee
        |),
-       |terms AS (
-       |  SELECT qt.query_id, st.doc_id,
-       |    qt.qtf * CAST(floor(
-       |      round(CAST(CAST(floor(round(ln(1 + CAST(2 * tot.n_docs - 2 * st.df + 1 AS DOUBLE)
-       |                  / CAST(2 * st.df + 1 AS DOUBLE)), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9)
-       |      * (CAST(22 * st.tf * tot.l_tot AS DOUBLE)
-       |         / CAST(10 * st.tf * tot.l_tot + 3 * tot.l_tot
-       |                + 9 * st.dl * tot.n_docs AS DOUBLE))
-       |      * 1e9 + 0.5) AS BIGINT) AS contrib
-       |  FROM st JOIN qt USING (w) CROSS JOIN tot
-       |  WHERE CAST(st.df AS DOUBLE)
-       |    <= $Bm25MaxDfShare * CAST(tot.n_docs AS DOUBLE)
-       |),
-       |sc AS (
-       |  SELECT query_id, doc_id, sum(contrib)::BIGINT AS score_i
-       |  FROM terms GROUP BY 1, 2
-       |),
-       |rk AS (
-       |  SELECT query_id, doc_id, score_i,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY score_i DESC, doc_id ASC) AS BIGINT) AS rnk
-       |  FROM sc QUALIFY rnk <= $TopK
-       |)""".stripMargin
+       |${packPiecesSql("erz")},
+       |pseq AS (
+       |  SELECT shard::BIGINT AS shard, seq_idx::BIGINT AS seq_idx,
+       |    sum(pe2 - ps)::BIGINT AS n_tokens,
+       |    string_agg(array_to_string(part, ' '), ' ' ORDER BY ps) AS seq
+       |  FROM pp GROUP BY shard, seq_idx
+       |)
+       |SELECT shard, count(*)::BIGINT AS n_seqs,
+       |  sum(n_tokens)::BIGINT AS n_tokens,
+       |  sum(length(seq))::BIGINT AS n_chars,
+       |  min(seq_idx)::BIGINT AS min_seq,
+       |  max(seq_idx)::BIGINT AS max_seq,
+       |  bit_xor(${Portable.sqlHash("seq_idx", "seq")})::BIGINT
+       |    AS content_hash
+       |FROM pseq GROUP BY shard ORDER BY shard""".stripMargin
+  }
 
   // ---- queries ----------------------------------------------------------
 
+  /** Every certified query, one [[Query]] record each, family by
+    * family. Names and q-numbers are unique: checked on first
+    * access, since a repeated name would drop a body or an oracle
+    * from the maps below. */
+  private[graft] lazy val registry: Seq[Query] = Query.distinct(
+    Prod2VecQueries.all ++ DedupQueries.all ++ TextQueries.all ++
+      CurationQueries.all ++ VectorQueries.all ++ EventQueries.all ++
+      QualityQueries.all ++ StreamQueries.all ++ MediaQueries.all ++
+      StorageQueries.all)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    coreQueries ++ extQueries
+    registry.map(q => q.name -> q.run).toMap
 
-  def oracleSql: Map[String, String] = {
-    val base = coreOracleSql ++ extOracleSql
-    // q277 streams raw documents into micro-batch ingest and re-derives
-    // the funnel+export over everything at rest — its FINAL refresh must
-    // equal the one-shot batch export over the same documents, so the
-    // batch entry's oracle is its oracle, verbatim.
-    base + ("q277_corpus_export_stream" -> base("q274_corpus_export"))
-  }
-
-  private def coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // S1+P1+A1-ish pricing rollup (scan, project, hash agg) — also the
-    // bench headline. Catalyst prunes the scan to the 6 referenced columns.
-    "q1_pricing_summary" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "lineitem")
-        .groupBy($"l_returnflag", $"l_linestatus")
-        .agg(
-          sum($"l_quantity").as("sum_qty"),
-          sum($"l_extendedprice").as("sum_base_price"),
-          sum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("sum_disc_price"),
-          avg($"l_quantity").as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy($"l_returnflag", $"l_linestatus")
-    }),
-
-    // A2: frequency count + top-K with pinned tiebreak (SURVEY N2).
-    "q2_vocab_topk" -> ((s, dir) => {
-      Vocab.topK(t(s, dir, "lineitem"), "l_partkey", VocabK)
-    }),
-
-    // A3: dense index assignment, UNK reserved at 0.
-    "q3_vocab_index" -> ((s, dir) => {
-      vocab(s, dir).withColumn("idx", col("idx").cast("long"))
-        .orderBy("idx")
-    }),
-
-    // J4+A4: integer-encode the fact table through the vocab, OOV → 0.
-    // Broadcast left join — fact side streams, no shuffle.
-    "q4_unk_recode" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      Vocab.encode(li, "l_partkey", vocab(s, dir))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey").as("product_id"), col("idx").cast("long").as("idx"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // A4 standalone: OOV occurrence count (unk_count, data_prep.py:103).
-    "q5_unk_count" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val v = vocab(s, dir).select(col("product_id"))
-      li.join(broadcast(v), li("l_partkey") === v("product_id"), "left_anti")
-        .agg(count(lit(1)).as("unk_count"))
-    }),
-
-    // A1 canonical: group-collect baskets (sorted-array string form so the
-    // oracle hash is order-insensitive within the basket).
-    "q6_baskets" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "lineitem")
-        .groupBy($"l_orderkey".as("order_id"))
-        .agg(count(lit(1)).as("basket_size"),
-          concat_ws(",", sort_array(collect_list($"l_partkey"))).as("basket"))
-        .orderBy("order_id")
-    }),
-
-    // A1 profile: basket-size histogram off the collected baskets —
-    // the distribution a data team reads before choosing P7's
-    // truncation cap.
-    "q222_basket_lengths" -> ((s, dir) => {
-      Baskets.lengthHistogram(
-        Baskets.sortedBaskets(t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey")),
-          "l_orderkey", "l_partkey"))
-        .orderBy("basket_len")
-    }),
-
-    // Wasserstein-1 drift: how much score mass moves how far between
-    // one source and the rest — the magnitude twin of q191's KS.
-    "q223_wasserstein_drift" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("source"), col("quality_score"))
-      Quality.wassersteinDrift(qs.filter(col("source") === KsSourceA),
-        qs.filter(col("source") =!= KsSourceA), "quality_score")
-    }),
-
-    // Jensen–Shannon divergence between the two corpus halves'
-    // unigram mixes — the symmetric, bounded summary of q103's
-    // one-way KL table.
-    "q224_jensen_shannon" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Text.jensenShannon(d.filter(col("doc_id") % 2 === 0),
-        d.filter(col("doc_id") % 2 === 1), "text")
-    }),
-
-    // Token-frequency concentration: Gini + head-mass shares over the
-    // corpus unigram distribution — the assumption-free companion of
-    // q126's fitted Zipf slope.
-    "q225_token_concentration" -> ((s, dir) => {
-      Text.tokenConcentration(t(s, dir, "documents"), "text")
-    }),
-
-    // Hour-of-day periodicity per event type: peak hour/share and the
-    // exact-integer chi-square against the uniform-over-24 null.
-    "q226_hour_profile" -> ((s, dir) => {
-      Events.hourOfDayProfile(Sources.eventsNs(s, dir))
-        .orderBy("event_type")
-    }),
-
-    // Neyman-optimal stratified allocation of a labeling budget
-    // across sources by quality-score variance.
-    "q227_neyman_allocation" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("source"), col("quality_score"))
-      Sampling.neymanAllocation(qs, "source", "quality_score",
-          NeymanBudget)
-        .orderBy("stratum")
-    }),
-
-    // Poisson-bootstrap percentile CI for the corpus mean quality —
-    // keyed-hash resampling, exact order-statistic bounds.
-    "q228_bootstrap_ci" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text", Nil)
-        .select(col("doc_id"), col("quality_score"))
-      Quality.bootstrapMeanCi(qs, "doc_id", "quality_score",
-        BootstrapB, BootstrapSalt)
-    }),
-
-    // k-core membership over the q177 co-purchase graph: the dense
-    // cluster vs stringy periphery split, synchronous peel.
-    "q229_kcore" -> ((s, dir) => {
-      val lp = t(s, dir, "lineitem")
-        .filter(col("l_partkey") < TriPartMax)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = lp.toDF("o", "pa").join(lp.toDF("o", "pb"), Seq("o"))
-        .filter(col("pa") < col("pb"))
-        .select(col("pa"), col("pb"))
-      Graph.kCore(edges, "pa", "pb", KCoreK, KCoreRounds).orderBy("id")
-    }),
-
-    // Exact tie-correct Spearman between quality score and token
-    // count — "do longer documents score higher", monotone-transform-
-    // robust; both axes come out of the one qualityScore pass.
-    "q230_spearman" -> ((s, dir) => {
-      Quality.spearman(Text.qualityScore(t(s, dir, "documents"), "text"),
-        "quality_score", "n_tokens")
-    }),
-
-    // Cohen's kappa of the q85/q186 self-classifier against truth —
-    // chance-corrected agreement over the same confusion grid the
-    // per-class report reads.
-    "q231_cohen_kappa" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pred = graft.ml.NaiveBayesText
-        .classify(graft.ml.NaiveBayesText.train(docs, "text", "lang"),
-          docs, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      Quality.cohenKappa(pred, "lang", "pred_label")
-    }),
-
-    // Kish effective sample size of the quality score used as an
-    // importance weight, per source — how many equal-weight docs each
-    // source's reweighted mass is really worth.
-    "q232_effective_sample_size" -> ((s, dir) => {
-      Sampling.effectiveSampleSize(
-        Text.qualityScore(t(s, dir, "documents"), "text", Seq("source")),
-        "source", "quality_score").orderBy("group")
-    }),
-
-    // Mutual information (and NMI) between source and language — the
-    // information-theoretic twin of q198's chi-square on the same
-    // grid.
-    "q233_mutual_information" -> ((s, dir) => {
-      Quality.mutualInformation(t(s, dir, "documents"), "source", "lang")
-    }),
-
-    // Benford first-digit audit of extended price — digit extraction
-    // by integer-string head on exact cents, expectation from the
-    // literal integer table.
-    "q234_benford" -> ((s, dir) => {
-      Quality.benfordAudit(t(s, dir, "lineitem"), "l_extendedprice")
-        .orderBy("digit")
-    }),
-
-    // First/last-touch purchase attribution with a 1-day lookback —
-    // which touch types open and close converting journeys.
-    "q235_touch_attribution" -> ((s, dir) => {
-      Events.touchAttribution(Sources.eventsNs(s, dir), "purchase",
-        AttribLookbackMs).orderBy("event_type")
-    }),
-
-    // Wald SPRT daily trace on the purchase rate — a pure integer
-    // LLR random walk on both engines via the literal constants.
-    "q236_sprt_trace" -> ((s, dir) => {
-      Events.sprtTrace(Sources.eventsNs(s, dir), "purchase",
-        SprtP0, SprtP1, SprtAlpha, SprtBeta).orderBy("day")
-    }),
-
-    // Bucketed interval-overlap join: user sessions x anomalous
-    // hourly windows — "which sessions ran during an incident",
-    // cell-equality candidates then the exact overlap predicate.
-    "q237_overlap_join" -> ((s, dir) => {
-      val sess = Events.sessionize(eventsUs(s, dir), SessionGapMs)
-        .select(concat_ws("#", col("user_id"), col("session_id"))
-          .as("a_id"),
-          col("start_ms").as("a_start"), col("end_ms").as("a_end"))
-      val anom = Events.windowAnomaly(Sources.eventsNs(s, dir),
-          WindowMs, AnomalyTrailing, AnomalyZ)
-        .filter(col("is_anomaly"))
-        .select(concat_ws("#", col("event_type"), col("window_start_ms"))
-          .as("b_id"),
-          col("window_start_ms").as("b_start"),
-          (col("window_start_ms") + WindowMs - 1L).as("b_end"))
-      Events.overlapJoin(sess, anom, WindowMs).orderBy("a_id", "b_id")
-    }),
-
-    // HITS on the order->product bipartite graph — hub orders and
-    // authority products, an all-integer normalized walk.
-    "q238_hits" -> ((s, dir) => {
-      val lp = t(s, dir, "lineitem")
-        .filter(col("l_partkey") < TriPartMax)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      Graph.hits(lp, "o", "p", HitsRounds).orderBy("role", "id")
-    }),
-
-    // Cochran-Armitage: is the daily purchase rate drifting
-    // monotonically over the calendar — the ordered-alternative
-    // complement of q236's level test.
-    "q239_trend_test" -> ((s, dir) => {
-      Events.trendTest(Sources.eventsNs(s, dir), "purchase")
-    }),
-
-    // ECE/MCE over the q212 reliability bins — the one-number
-    // calibration gates, every per-bin gap an exact integer.
-    "q240_calibration_error" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("lang"))
-        .select(col("lang"), col("quality_score"))
-      Quality.calibrationError(qs, "quality_score",
-        col("lang") === "en", IsoBins)
-    }),
-
-    // Token-weighted median quality per source — the median TOKEN's
-    // quality, where the row median overweights short docs.
-    "q241_weighted_median" -> ((s, dir) => {
-      Quality.weightedMedian(
-        Text.qualityScore(t(s, dir, "documents"), "text", Seq("source")),
-        "source", "quality_score", "n_tokens").orderBy("group")
-    }),
-
-    // Mann-Kendall on the daily purchase-event counts — monotone
-    // drift without a slope model, k bounded by the calendar.
-    "q242_mann_kendall" -> ((s, dir) => {
-      val daily = Sources.eventsNs(s, dir)
-        .filter(col("event_type") === "purchase")
-        .groupBy(expr("ts div 86400000000000").as("day"))
-        .agg(count(lit(1)).cast("double").as("n"))
-      Quality.mannKendall(daily, "day", "n")
-    }),
-
-    // Gumbel-top-k weighted WOR sample: 100 docs drawn proportional
-    // to token mass, one scan + one distributed top-k.
-    "q243_weighted_sample" -> ((s, dir) => {
-      Sampling.weightedSampleWor(
-        Text.qualityScore(t(s, dir, "documents"), "text"),
-        "doc_id", "n_tokens", WorK, WorSalt)
-        .orderBy(desc("draw_key"), col("doc_id"))
-    }),
-
-    // Flesch-Kincaid grade per doc — map-only regex counts, one
-    // pinned grade chain.
-    "q244_readability" -> ((s, dir) => {
-      Text.readability(t(s, dir, "documents"), "text").orderBy("doc_id")
-    }),
-
-    // Fano overdispersion of daily counts per event type — zero-fill
-    // via the calendar spine, one exact-integer division.
-    "q245_dispersion" -> ((s, dir) => {
-      Events.dispersionProfile(Sources.eventsNs(s, dir))
-        .orderBy("event_type")
-    }),
-
-    // Apriori frequent triples over user-day event-type baskets —
-    // which activity triads co-occur within a user's day; the
-    // level-wise prune that makes level 3 feasible.
-    "q246_frequent_triples" -> ((s, dir) => {
-      val ud = Sources.eventsNs(s, dir)
-        .select(concat_ws("#", col("user_id"),
-          expr("ts div 86400000000000")).as("bk"), col("event_type"))
-      Baskets.frequentTriples(ud, "bk", "event_type", TriSupport)
-        .orderBy("item_a", "item_b", "item_c")
-    }),
-
-    // Per-dimension embedding feature health: dead dims, scale
-    // drift, stuck-at-zero — one wide-agg pass, d rows out.
-    "q247_embedding_dim_stats" -> ((s, dir) => {
-      Quality.embeddingDimStats(t(s, dir, "embeddings"), "embedding")
-        .orderBy("dim")
-    }),
-
-    // L2-norm distribution audit: exact order-statistic quantiles
-    // off the distinct-norm CDF — collapse / stray-giant detector.
-    "q248_embedding_norms" -> ((s, dir) => {
-      Quality.embeddingNormProfile(t(s, dir, "embeddings"), "embedding")
-    }),
-
-    // RAKE corpus keyphrases: stopword-delimited phrase runs,
-    // deg/freq word scores, exact integer phrase sums, one top-k.
-    "q251_rake_keyphrases" -> ((s, dir) => {
-      Text.rakeKeyphrases(t(s, dir, "documents"), "text", RakeK)
-    }),
-
-    // Anisotropy: top principal direction of the coordinate
-    // covariance by unrolled power iteration; the all-but-the-top
-    // pre-flight for any cosine-based pipeline.
-    "q252_anisotropy" -> ((s, dir) => {
-      Quality.embeddingAnisotropy(t(s, dir, "embeddings"), "embedding",
-        EmbDims, PowerRounds).orderBy("dim")
-    }),
-
-    // Join-fanout pre-flight on the q14 co-purchase self-join: the
-    // exact output cardinality and the hottest part key, priced from
-    // two count aggs before any wide join runs.
-    "q253_join_fanout" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      Quality.joinFanout(li, "l_partkey", li, "l_partkey")
-    }),
-
-    // Robust median/MAD window anomaly (Hampel rule) — the fix q245's
-    // overdispersion diagnosis calls for; the decision is pure
-    // integer compares, no float anywhere.
-    "q254_window_anomaly_robust" -> ((s, dir) => {
-      Events.windowAnomalyRobust(Sources.eventsNs(s, dir), WindowMs,
-          AnomalyTrailing, RobustKNum, RobustKDen)
-        .orderBy("event_type", "window_start_ms")
-    }),
-
-    // Streaming curation gate prefix, ORACLE-certified end to end: the
-    // documents table rides a real file-source micro-batch stream
-    // (maxFilesPerTrigger=1 forces multiple batches) through
-    // StreamOps.curateStream's stateless normalize→langid→quality
-    // prefix into a memory sink; the collected output hashes against
-    // the batch funnel's own gate-prefix SQL. The twin law the specs
-    // pin ("stateless prefix = batch gates on every micro-batch")
-    // becomes a driver-gate fact, not just a spec claim.
-    "q255_curate_stream" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      Replay.replay(docs, "q255") { sdf =>
-        Replay.toMemory(StreamOps.curateStream(sdf,
-          CurateLangs, CurateMinQuality), "q255")
-      }.select(col("doc_id"), col("text"), col("pred_lang"),
-          col("n_tokens"), col("quality_score"))
-        .orderBy("doc_id")
-    }),
-
-    // The round-9/10 driver-gate fail, STREAM-certified: the scored
-    // documents ride a micro-batched file stream into
-    // thresholdSweepStream's Complete-mode distinct-score count state;
-    // the FINAL micro-batch's sweep (the table over all rows seen)
-    // hashes against q218's own exact-integer oracle — the stateful
-    // twin law under the driver's gate.
-    "q256_threshold_sweep_stream" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      // state = one row per distinct 9-dp quality score; the document
-      // count (a metadata-only parquet count) is its cheap upper bound
-      withStreamStatePartitions(s, docs.count()) {
-        Replay.replay(docs, "q256") { sdf =>
-          val scored = Text.qualityScore(sdf, "text", Seq("lang"))
-            .select(col("lang"), col("quality_score"))
-          Replay.lastBatch(s)(StreamOps.thresholdSweepStream(scored,
-            "quality_score", col("lang") === "en"))
-        }.orderBy("threshold")
-      }
-    }),
-
-    // The STATEFUL/WATERMARKED twin under the driver gate (q255/q256
-    // certified the stateless prefix and Complete-mode aggregation —
-    // this is the flatMapGroupsWithState case): the event log rides a
-    // micro-batched file stream into robustAnomalyStream; windows
-    // close as the watermark passes and the emitted Hampel anomaly
-    // rows hash against q254's own batch oracle. A 60-day watermark
-    // delay covers the staged files' arbitrary arrival order
-    // (certification replays history; a live deployment would run the
-    // documented minutes-scale delay), and two far-future sentinel
-    // events on a FRESH key — the StreamOpsSpec pattern — advance the
-    // watermark past every real window so event-time timeouts flush
-    // them; the sentinel key itself never accumulates a full trailing
-    // baseline, so it emits nothing in stream OR batch.
-    "q257_window_anomaly_robust_stream" -> ((s, dir) => {
-      val ev = Sources.eventsNs(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      // flatMapGroupsWithState keys on event_type — probe that domain
-      withStreamStatePartitions(s, distinctKeys(ev, col("event_type"))) {
-        Replay.replayWithSentinels(ev, "q257", ReplayDelayMs, WindowMs) {
-          sdf =>
-            Replay.toMemory(StreamOps.robustAnomalyStream(sdf, WindowMs,
-              AnomalyTrailing, RobustKNum, RobustKDen, "60 days").toDF(),
-              "q257")
-        }.orderBy("event_type", "window_start_ms")
-      }
-    }),
-
-    // The BUILT-IN streaming windowed aggregation under the driver
-    // gate (q257 certified custom flatMapGroupsWithState state; this
-    // is Spark's own watermark-closed window agg): tumbling counts +
-    // cents-rounded value sums per (window, event_type), emitted in
-    // Append mode as the watermark passes each window end; sentinels
-    // flush the tail, and the sink hashes against a plain batch
-    // GROUP BY. The sum certifies at exact cents: per-window double
-    // accumulation error (≤ n·ε·Σ|v| ≈ 1e-10) is five orders below
-    // the 0.005 rounding margin, so both engines land the same LONG.
-    "q261_windowed_counts_stream" -> ((s, dir) => {
-      val ev = Sources.eventsNs(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      // state = one row per open (tumbling window, event_type) pair
-      withStreamStatePartitions(s, distinctKeys(ev,
-        expr(s"ts div ${WindowMs * 1000000L}"), col("event_type"))) {
-        Replay.replayWithSentinels(ev, "q261", ReplayDelayMs, WindowMs) {
-          sdf =>
-            Replay.toMemory(StreamOps.windowedCounts(sdf,
-                s"$WindowMs milliseconds", "60 days")
-              .select(unix_millis(col("window_start")).as("window_start_ms"),
-                col("event_type"), col("n_events"),
-                floor(col("sum_value") * lit(100) + lit(0.5)).cast("long")
-                  .as("sum_cents")), "q261")
-        }.orderBy("window_start_ms", "event_type")
-      }
-    }),
-
-    // The BUILT-IN session_window under the driver gate: gap-merged
-    // per-user sessions emitted as the watermark passes each session
-    // end (last event + gap); the sentinel user's own session never
-    // closes. The oracle is an independent gaps-and-islands SQL with
-    // session_window's boundary rule (an event at EXACTLY last + gap
-    // starts a new session — the window is [start, last+gap); the
-    // ns-resolution fixture cannot sit on the boundary, but the SQL
-    // states the operator's own contract).
-    "q262_session_windows_stream" -> ((s, dir) => {
-      val ev = Sources.eventsNs(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      // session-window state is per-user — probe the user domain
-      withStreamStatePartitions(s, distinctKeys(ev, col("user_id"))) {
-        Replay.replayWithSentinels(ev, "q262", ReplayDelayMs, SessionGapMs) {
-          sdf =>
-            // NOTE: no post-agg filter — a comparison filter above a
-            // streaming session aggregation empties the append output
-            // (observed on 4.1.2; the session-window operator's output
-            // rows don't survive a pushed-down predicate), and none is
-            // needed: the sentinel user's session never closes (its end
-            // sits ~60 days past the final watermark), so it cannot
-            // reach the sink.
-            Replay.toMemory(StreamOps.sessionWindows(sdf,
-                s"$SessionGapMs milliseconds", "60 days")
-              .select(col("user_id"),
-                unix_millis(col("session_start")).as("session_start_ms"),
-                unix_millis(col("session_end")).as("session_end_ms"),
-                col("n_events"),
-                floor(col("sum_value") * lit(100) + lit(0.5)).cast("long")
-                  .as("sum_cents")), "q262")
-        }.orderBy("user_id", "session_start_ms")
-      }
-    }),
-
-    // scd2Stream under the driver gate — the NO-watermark keyed-state
-    // case (closed versions emit the moment the next version arrives,
-    // so a finite replay needs no sentinels): the event log replays in
-    // (ts, event_id) order as four mtime-ordered file-stream slices
-    // (scd2Merge's append-only arrival contract; a production CDC feed
-    // is in-order by construction), and the sink's accumulated closed
-    // rows hash against q178's own batch SQL restricted to
-    // is_current = false. The open tail lives in the state store — the
-    // append-correct projection q178's scaladoc describes.
-    "q258_scd2_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = Sources.eventsNs(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-      // scd2 keyed state is per-user — probe the user domain
-      withStreamStatePartitions(s, distinctKeys(ev, col("user_id"))) {
-        val slices = 4
-        val cnt = ev.count()
-        // certification plumbing: one bounded fixture-sized sort to cut
-        // the history into ordered slices — persisted, because each of
-        // the 4 slice writes below consumes it (without the persist every
-        // write re-ran the global history sort, 4 passes for 1)
-        val sliced = ev.withColumn("__rn", row_number()
-          .over(Window.orderBy(col("ts"), col("event_id"))).cast("long"))
-          .persist()
-        def stage(staged: String): Unit = {
-          val base = System.currentTimeMillis()
-          for (i <- 0 until slices) {
-            val lo = i.toLong * cnt / slices
-            val hi = (i + 1).toLong * cnt / slices
-            val dst = java.nio.file.Paths.get(staged, f"slice_$i%02d.parquet")
-            Replay.withTempDir(s"q258_slice$i") { tmp =>
-              sliced.filter(col("__rn") > lo && col("__rn") <= hi)
-                .drop("__rn").repartition(1).write.mode("overwrite")
-                .parquet(tmp)
-              val part = new java.io.File(tmp).listFiles()
-                .filter(_.getName.endsWith(".parquet")).head
-              java.nio.file.Files.copy(part.toPath, dst)
-            }
-            java.nio.file.Files.setLastModifiedTime(dst,
-              java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-          }
-        }
-        val out =
-          try Replay.replayStaged(s, ev.schema, "q258")(stage) { sdf =>
-            Replay.toMemory(StreamOps.scd2Stream(sdf).toDF(), "q258")
-          } finally sliced.unpersist(blocking = false)
-        out.orderBy("user_id", "version")
-      }
-    }),
-
-    // The STREAM-STREAM join case under the driver gate: both sides of
-    // intervalJoin replay the event log as independent micro-batched
-    // file streams; inner-join matches emit as the later side arrives
-    // (no sentinels needed — the watermark only bounds state, and the
-    // 60-day delay keeps the finite replay lossless), and the sink
-    // hashes against a plain batch self-join oracle. Per user, every
-    // (left, right) event pair with the right event 0..1 window after
-    // the left — the "what followed within the hour" join.
-    "q259_interval_join_stream" -> ((s, dir) => {
-      val ev = Sources.eventsNs(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      // join state buffers WHOLE ROWS per side under the 60-day
-      // watermark, so the row count (not a key domain) sizes the stores
-      withStreamStatePartitions(s, ev.count()) {
-        Replay.replay(ev, "q259_l", files = 2) { l =>
-          Replay.replay(ev, "q259_r", files = 2) { r =>
-            Replay.toMemory(StreamOps.intervalJoin(
-                l, r, "user_id", 0L, WindowMs, "60 days")
-              .select(col("user_id"), col("event_id").as("l_id"),
-                col("r_event_id").as("r_id"),
-                expr("(ts - pmod(ts, 1000000)) div 1000000").cast("long")
-                  .as("l_ms"),
-                expr("(r_ts - pmod(r_ts, 1000000)) div 1000000").cast("long")
-                  .as("r_ms")), "q259")
-          }
-        }.orderBy("user_id", "l_id", "r_id")
-      }
-    }),
-
-    // The INCREMENTAL-ingest composition under the driver gate: the
-    // odd half of the corpus streams through the full curateStream
-    // gate chain with the stream-static exact-dedup gate LIVE — the
-    // static index is the stored content hashes (of normalized text,
-    // the form the batch funnel stores) of the even half PLUS the
-    // doc_id % 8 = 1 slice of the stream itself (a re-crawl: part of
-    // the delta batch was already ingested, so the gate PROVABLY
-    // drops those rows — the fixture's halves share no exact dups, so
-    // an even-only index would leave the anti-join vacuous), joined
-    // stateless anti per micro-batch. The daily delta-crawl ingest
-    // path, certified end to end against a batch oracle.
-    "q260_curate_stream_incremental" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      // stateless gates, but the per-trigger stream-static anti join
-      // pays the exchange tax — size it to the index's key domain,
-      // bounded by the document count (metadata-only parquet count);
-      // floor 1: no state store here, so fewer exchange tasks is pure
-      // win (see withStreamStatePartitions)
-      withStreamStatePartitions(s, docs.count(), floor = 1) {
-        // stored-index-at-rest: the hash index re-enters the anti join
-        // every micro-batch — persist it once
-        val idx = docs
-          .filter(col("doc_id") % 2 === 0 || col("doc_id") % 8 === 1)
-          .select(md5(graft.ops.Text.normalize(col("text")).cast("binary"))
-            .as("content_hash")).distinct()
-          .persist()
-        val out =
-          try Replay.replay(docs.filter(col("doc_id") % 2 === 1), "q260") {
-            sdf =>
-              Replay.toMemory(StreamOps.curateStream(sdf, CurateLangs,
-                CurateMinQuality, existingHashes = Some(idx)), "q260")
-          } finally idx.unpersist(blocking = false)
-        out.select(col("doc_id"), col("text"), col("pred_lang"),
-            col("n_tokens"), col("quality_score"))
-          .orderBy("doc_id")
-      }
-    }),
-
-    // EXACTLY-ONCE RESTART under the driver gate (the kill/recover
-    // spec's production property, now hash-certified): the first half
-    // of the corpus streams through the gate prefix into a REAL
-    // parquet file sink with a checkpoint, the query STOPS, the second
-    // half lands while it is down, and the restarted query resumes
-    // from the checkpoint — consuming only the unseen files, never
-    // re-emitting the first half. The sink directory read back must
-    // hash against the same batch oracle as an uninterrupted run
-    // (q255's chain): any loss or duplication across the restart
-    // breaks the hash.
-    "q263_curate_stream_restart" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      // the parquet SINK is the result, read after the harness exits —
-      // only the source staging and the checkpoint go; /tmp owns the
-      // sink dir's lifetime
-      val outDir = Replay.tempDir("q263_sink")
-      Replay.withTempDir("q263_stream_src") { staged =>
-        Replay.withTempDir("q263_ckpt") { ckpt =>
-          // one start per half: the odd half lands while the query is
-          // down, and the second start resumes from the checkpoint
-          for (parity <- Seq(0, 1)) {
-            Replay.stageFiles(docs.filter(col("doc_id") % 2 === parity),
-              staged, files = 2)
-            Replay.drain(StreamOps.curateStream(
-                Replay.source(s, docs.schema, staged),
-                CurateLangs, CurateMinQuality)
-              .writeStream.format("parquet").option("path", outDir)
-              .option("checkpointLocation", ckpt)
-              .outputMode("append").start())
-          }
-        }
-      }
-      s.read.parquet(outDir)
-        .select(col("doc_id"), col("text"), col("pred_lang"),
-          col("n_tokens"), col("quality_score"))
-        .orderBy("doc_id")
-    }),
-
-    // The remaining Complete-mode foreachBatch monitors under the
-    // driver gate (q256 proved the pattern for the threshold sweep):
-    // the src0 score stream folds into its distinct-score count state
-    // and the FINAL micro-batch's PSI re-derivation hashes against
-    // q200's own exact-integer oracle — the static baseline (corpus
-    // minus src0) keeps its quantile boundaries fixed by definition.
-    "q264_psi_stream" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      // the static baseline re-enters psiFromCounts every micro-batch —
-      // persist it once (the stored-baseline-at-rest posture; without
-      // it each trigger re-scores the whole baseline corpus)
-      val baseline = Text.qualityScore(docs, "text", Seq("source"))
-        .filter(col("source") =!= KsSourceA)
-        .select(col("quality_score"))
-        .persist()
-      // stream state = one row per distinct 9-dp score; the persisted
-      // baseline shares the stream's score domain, so probing it both
-      // sizes the stores and pre-materializes the cache
-      withStreamStatePartitions(s,
-        distinctKeys(baseline, col("quality_score"))) {
-        try Replay.replay(docs, "q264") { sdf =>
-          val scored = Text.qualityScore(sdf, "text", Seq("source"))
-            .filter(col("source") === KsSourceA)
-            .select(col("quality_score"))
-          Replay.lastBatch(s)(StreamOps.psiStream(baseline, scored,
-            "quality_score", PsiBins))
-        } finally baseline.unpersist(blocking = false)
-      }
-    }),
-
-    // Wald's sequential test run the way Wald designed it — ON the
-    // stream: the event log rides a micro-batched file stream into
-    // sprtStream's (day, user) Complete-mode state and the FINAL
-    // micro-batch's LLR walk hashes against q236's own integer-walk
-    // oracle, so the live stopping rule is certified equal to the
-    // batch trace.
-    "q265_sprt_stream" -> ((s, dir) => {
-      val ev = Sources.eventsNs(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      // Complete-mode state is one row per (day, user) — probe that
-      withStreamStatePartitions(s, distinctKeys(ev,
-        expr("ts div 86400000000000"), col("user_id"))) {
-        Replay.replay(ev, "q265") { sdf =>
-          Replay.lastBatch(s)(StreamOps.sprtStream(sdf, "purchase",
-            SprtP0, SprtP1, SprtAlpha, SprtBeta))
-        }.orderBy("day")
-      }
-    }),
-
-    // The live data card: documents ride a micro-batched file stream
-    // into corpusReportStream's monoid state (slice-bounded, never
-    // document-bounded) and the FINAL micro-batch's rendered card
-    // hashes against q75's own batch oracle — the merge-equals-rebuild
-    // law (q249) running continuously.
-    "q266_corpus_report_stream" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      // monoid state is one row per (source, lang) slice — probe that
-      withStreamStatePartitions(s,
-        distinctKeys(docs, col("source"), col("lang"))) {
-        Replay.replay(docs, "q266") { sdf =>
-          Replay.lastBatch(s)(StreamOps.corpusReportStream(sdf,
-            "source", "lang", "text"))
-        }.orderBy("source", "lang")
-      }
-    }),
-
-    // dropDuplicatesWithinWatermark under the driver gate: the event
-    // log replays as a micro-batched file stream through dedupStream
-    // on the (user, type) content key (13× duplicated in the fixture)
-    // and the emitted DISTINCT-HASH SET hashes against a batch
-    // SELECT DISTINCT — exactly one survivor per content across
-    // micro-batches, none lost, none duplicated. (WHICH row survives
-    // a same-batch collision is explicitly unguaranteed — the specs
-    // pin that — so the certification projects the hash, the
-    // deterministic part of the contract.) The 60-day watermark
-    // covers the fixture's 30-day span, so state never evicts
-    // mid-replay.
-    "q267_dedup_stream" -> ((s, dir) => {
-      val ev = Sources.eventsNs(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"))
-        .withColumn("content",
-          concat_ws("#", col("user_id"), col("event_type")))
-      // dedup state is one row per distinct content key — probe it
-      withStreamStatePartitions(s,
-        distinctKeys(ev, col("user_id"), col("event_type"))) {
-        Replay.replay(ev, "q267") { sdf =>
-          Replay.toMemory(StreamOps.dedupStream(sdf, "content", "60 days")
-            .select(col("content_hash")), "q267")
-        }.orderBy("content_hash")
-      }
-    }),
-
-    // The z-score anomaly monitor's streaming twin under the driver
-    // gate (q257 certified the Hampel variant; this is the classical
-    // moment-based one, the same flatMapGroupsWithState state
-    // discipline): watermark-closed emissions hash against q133's own
-    // exact-integer batch oracle. Sentinels flush the tail as in
-    // q257; the sentinel key never accumulates a full trailing
-    // baseline, so it emits nothing in stream OR batch.
-    "q268_window_anomaly_stream" -> ((s, dir) => {
-      val ev = Sources.eventsNs(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      // flatMapGroupsWithState keys on event_type — probe that domain
-      withStreamStatePartitions(s, distinctKeys(ev, col("event_type"))) {
-        Replay.replayWithSentinels(ev, "q268", ReplayDelayMs, WindowMs) {
-          sdf =>
-            Replay.toMemory(StreamOps.anomalyStream(sdf, WindowMs,
-              AnomalyTrailing, AnomalyZ, "60 days").toDF(), "q268")
-        }.orderBy("event_type", "window_start_ms")
-      }
-    }),
-
-    // mapGroupsWithState running per-user totals under the driver
-    // gate — the Update-mode keyed-state case (q257/q268 certified
-    // Append with event-time timeouts): each micro-batch emits the
-    // UPDATED state for keys it touched; last-write-wins over the
-    // sequential batch ids reconstructs the final state table, which
-    // must equal a plain batch GROUP BY. Sums certify at exact cents
-    // (the q261 argument: per-user double accumulation error is five
-    // orders below the 0.005 rounding margin).
-    "q269_running_state_stream" -> ((s, dir) => {
-      import s.implicits._
-      import scala.jdk.CollectionConverters._
-      val ev = Sources.eventsNs(s, dir)
-        .select(col("user_id"), col("value"))
-      // mapGroupsWithState keys on user_id — probe the user domain
-      withStreamStatePartitions(s, distinctKeys(ev, col("user_id"))) {
-        val finalState = new java.util.concurrent.ConcurrentHashMap[
-          Long, (Long, Double)]()
-        Replay.replay(ev, "q269") { sdf =>
-          Replay.drain(StreamOps.runningUserState(
-              sdf.select(col("user_id"), col("value")).as[(Long, Double)])
-            .toDF().writeStream.outputMode("update")
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.collect().foreach { r =>
-                finalState.put(r.getLong(0), (r.getLong(1), r.getDouble(2)))
-              }
-            }.start())
-        }
-        val rows = finalState.asScala.toSeq.map { case (u, (n, sv)) =>
-          (u, n, math.floor(sv * 100 + 0.5).toLong)
-        }
-        rows.toDF("user_id", "n_events", "sum_cents").orderBy("user_id")
-      }
-    }),
-
-    // The near-dedup gate on a REAL stream (q124 certifies the same
-    // function on a batch frame): odd-id docs ride a micro-batched
-    // file stream through dedupNearStreamAgainst vs the even-id
-    // SimHash index; stateless per micro-batch, so the accumulated
-    // sink must equal the batch run — q124's own oracle.
-    "q270_near_dedup_stream_live" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      // stateless, but the per-trigger band joins against the static
-      // index pay the exchange tax — size to the index side's rows
-      // (metadata-only parquet count); floor 1: no state store, fewer
-      // exchange tasks is pure win (measured 5.2 → 3.5 s)
-      withStreamStatePartitions(s, docs.count(), floor = 1) {
-        // the static SimHash index re-enters the band join every
-        // micro-batch — persist it once (the stored-index-at-rest
-        // posture; without it each trigger re-fingerprints the corpus)
-        val idx = Dedup.simhashes(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text").persist()
-        val out =
-          try Replay.replay(docs.filter(col("doc_id") % 2 === 1), "q270") {
-            sdf =>
-              Replay.toMemory(StreamOps.dedupNearStreamAgainst(sdf,
-                  "text", idx, MaxHamming)
-                .select(col("doc_id"), col("lang"), col("source"),
-                  col("n_chars")), "q270")
-          } finally idx.unpersist(blocking = false)
-        out.orderBy("doc_id")
-      }
-    }),
-
-    // The aggregation-side skew lever under the driver gate: the q10
-    // co-occurrence counts re-derived through saltedCounts' two-stage
-    // (keys, salt) → keys shape must hash against q10's own oracle —
-    // counts are algebraic, so salting is IDENTITY on the result (the
-    // PairsSpec law, now driver-certified). The salt is a keyed
-    // Portable hash of the pair's identity columns, so placement is
-    // deterministic across runs and partitionings.
-    "q271_salted_cooc" -> ((s, dir) => {
-      Pairs.saltedCounts(pairs(s, dir), Seq("target", "context"),
-          Seq(col("order_id"), col("pos_t"), col("pos_c")), 8)
-        .withColumn("target", col("target").cast("long"))
-        .withColumn("context", col("context").cast("long"))
-        .orderBy("target", "context")
-    }),
-
-    // Bucketed-sink roundtrip under the driver gate (the q250 protocol
-    // for the CO-LOCATED-JOIN layout): the interchange slice saved as
-    // a bucketed+sorted parquet table, read back through the catalog,
-    // aggregated — content-equal to the parquet original. The rows
-    // collect before the table drops (the catalog owns the files).
-    "q272_bucketed_roundtrip" -> ((s, dir) => {
-      val tbl = s"q272_bucketed_${java.util.UUID.randomUUID().toString
-        .replace("-", "")}"
-      // try/finally: a failure anywhere between write and collect must
-      // still drop the UUID-named managed table, or its bucketed files
-      // leak into the warehouse for the rest of the Verify run
-      val (rows, schema) = try {
-        Sources.writeBucketed(t(s, dir, "documents")
-            .filter(col("doc_id") % 8 === 1)
-            .select(col("doc_id"), col("text"), col("lang"), col("source")),
-          tbl, "doc_id", 8)
-        val out = s.table(tbl)
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(length(col("text"))).cast("long").as("n_chars"),
-            countDistinct(col("lang")).as("n_langs"),
-            max(col("doc_id")).as("max_id"))
-          .orderBy("source")
-        (out.collect(), out.schema)
-      } finally s.sql(s"DROP TABLE IF EXISTS $tbl")
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .orderBy("source")
-    }),
-
-    // ORC round-trip: the interchange slice written as ORC, read
-    // back, aggregated — hashed against the parquet original, so the
-    // format conversion is content-equal under the driver's gate.
-    "q250_orc_roundtrip" -> ((s, dir) => {
-      val path = q250OrcPath(dir)
-      Sources.writeOrc(t(s, dir, "documents")
-        .filter(col("doc_id") % 8 === 0)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-        .repartition(1), path)
-      Sources.orc(s, path)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text"))).cast("long").as("n_chars"),
-          countDistinct(col("lang")).as("n_langs"),
-          max(col("doc_id")).as("max_id"))
-        .orderBy("source")
-    }),
-
-    // Incremental data card: state built on the even half, the odd
-    // half MERGED in, rendered — hashed against a full-corpus rebuild
-    // oracle, so merge-equals-rebuild runs under the driver's gate.
-    "q249_data_card_merge" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val st = Quality.corpusReportState(
-        docs.filter(col("doc_id") % 2 === 0), "source", "lang", "text")
-      Quality.corpusReportFinish(Quality.corpusReportMerge(st,
-          docs.filter(col("doc_id") % 2 === 1), "source", "lang", "text"))
-        .orderBy("source", "lang")
-    }),
-
-    // Q1 (quality): one-pass per-column null profile of lineitem.
-    "q7_quality_nulls" -> ((s, dir) => {
-      Quality.report(t(s, dir, "lineitem"))
-    }),
-
-    // Q5 (quality): primary-key uniqueness on the catalog dim.
-    "q8_pk_check" -> ((s, dir) => {
-      t(s, dir, "part")
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("p_partkey")).as("n_distinct"))
-    }),
-
-    // P2/A6: distinct-count gates (data_quality_checks.py:45-46).
-    "q9_distinct_counts" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .agg(countDistinct(col("l_partkey")).as("n_products"),
-          countDistinct(col("l_orderkey")).as("n_orders"))
-    }),
-
-    // A6'+P7+A9: skip-gram pair co-occurrence counts (deterministic
-    // shuffled positions, window W, UNK excluded).
-    "q10_skipgram_cooc" -> ((s, dir) => {
-      pairs(s, dir)
-        .groupBy(col("target"), col("context"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("target", col("target").cast("long"))
-        .withColumn("context", col("context").cast("long"))
-        .orderBy("target", "context")
-    }),
-
-    // A8: Zipf-rank subsampling table (Keras make_sampling_table formula).
-    "q11_sampling_table" -> ((s, dir) => {
-      Pairs.samplingTable(s, VocabK, SamplingFactor)
-        .withColumn("keep_prob", Portable.ratio9(col("keep_prob")))
-        .orderBy("idx")
-    }),
-
-    // A8 applied: pairs surviving the frequent-target subsampling draw.
-    "q12_subsampled_pairs" -> ((s, dir) => {
-      Pairs.subsample(pairs(s, dir), Pairs.samplingTable(s, VocabK, SamplingFactor))
-        .groupBy(col("target").cast("long").as("target"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy("target")
-    }),
-
-    // A10+A11: log-uniform negatives per positive pair, exploded.
-    "q13_negatives" -> ((s, dir) => {
-      Pairs.negatives(pairs(s, dir), NumNs, VocabK)
-        .select(col("order_id"), col("pos_t").cast("long").as("pos_t"),
-          col("pos_c").cast("long").as("pos_c"),
-          col("target").cast("long").as("target"),
-          col("context").cast("long").as("context"),
-          posexplode(col("negatives")).as(Seq("k", "neg")))
-        .withColumn("k", col("k").cast("long"))
-        .withColumn("neg", col("neg").cast("long"))
-        .orderBy("order_id", "pos_t", "pos_c", "k")
-    }),
-
-    // §7.2 flagship (M3 relational): top-K co-purchase neighbors per part,
-    // ranked by co-occurrence, names joined back (J2+J3).
-    "q14_copurchase_topk" -> ((s, dir) =>
-      copurchaseReport(s, dir,
-        Similarity.coPurchaseTopK(pairs(s, dir), TopK, CoocSalts))),
-
-    // q14 through the AUTO-salted production wiring: the keySkew
-    // pre-flight chooses the salt count (floor = CoocSalts keeps the
-    // salted path open on the uniform fixture) — same report, same
-    // oracle SQL, because salted counts are salt-invariant; the probe's
-    // cost is this query's own bench row, not a tax on q14.
-    "q147_auto_salted_topk" -> ((s, dir) =>
-      copurchaseReport(s, dir,
-        Similarity.coPurchaseTopKAuto(pairs(s, dir), TopK,
-          s.sparkContext.defaultParallelism, floorSalts = CoocSalts))),
-
-    // A7: ordered "; "-concat neighbor report per target (model_train.py:48).
-    "q15_neighbor_report" -> ((s, dir) => {
-      val ranked = queries("q14_copurchase_topk")(s, dir)
-        .select(col("target_pid").as("target"),
-          col("neighbor_name").as("name"), col("rnk"))
-      Similarity.neighborReport(ranked)
-        .withColumnRenamed("target", "target_pid")
-        .orderBy("target_pid")
-    }),
-
-    // J5/M3 vector form: exact cosine top-K of 5 probe vectors against the
-    // embeddings corpus (brute-force ANN baseline, SURVEY §7.4).
-    "q16_cosine_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.cosineTopK(emb, emb.filter(col("vec_id") < 5), TopK)
-        .withColumn("rnk", col("rnk").cast("long"))
-        .orderBy("probe_id", "rnk")
-    })
-  )
-
-  // ---- extension queries (SURVEY.md §7.4: dedup, text, ANN, events,
-  // multimodal, ML) -------------------------------------------------------
-
-  private def extQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // Corpus-health Zipf audit: one-row token-frequency profile with an
-    // exact-integer least-squares ln-ln fit over the top-500 terms.
-    "q126_zipf_audit" -> ((s, dir) => {
-      Text.zipfAudit(t(s, dir, "documents"), "text", ZipfFitTopK)
-    }),
-
-    // Inverse-Cloze-Task contrastive pairs: deterministic span-out
-    // (query, passage-with-span-removed) retrieval pretraining pairs.
-    "q127_ict_pairs" -> ((s, dir) => {
-      Text.ictPairs(t(s, dir, "documents"), "doc_id", "text", IctSpanTokens)
-        .orderBy("doc_id")
-    }),
-
-    // Attention-bleed audit of the q67 packing layout: per shard, how
-    // many packed sequences mix documents and how many boundaries a
-    // boundary-unaware attention mask would cross.
-    "q128_pack_audit" -> ((s, dir) => {
-      Sampling.packAudit(t(s, dir, "documents"), "doc_id", "text",
-        PackSeqTokens, PackShards, "pack").orderBy("shard")
-    }),
-
-    // Margin-calibration report of the q85 classifier: decile bins by
-    // 9-dp-rounded margin, exact per-bin accuracy.
-    "q129_nb_calibration" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val model = graft.ml.NaiveBayesText.train(docs, "text", "lang")
-      val scored = graft.ml.NaiveBayesText
-        .classify(model, docs, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .withColumn("correct", col("pred_label") === col("lang"))
-      graft.ml.NaiveBayesText.calibration(scored, "doc_id", CalibBins)
-        .orderBy("bin")
-    }),
-
-    // Cross-source duplication matrix: the q20 near-dup pairs rolled up
-    // by the unordered source pair they bridge.
-    "q130_dup_source_matrix" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.dupSourceMatrix(lshPairs(s, dir), docs, "doc_id", "source")
-        .orderBy("source_a", "source_b")
-    }),
-
-    // Dedup threshold-sensitivity curve over the exact-Jaccard pairs
-    // (tau = 0: every meeting pair feeds the histogram).
-    "q145_dedup_sensitivity" -> ((s, dir) => {
-      Dedup.dedupSensitivity(
-        Dedup.jaccardPairsExact(shingled(s, dir), "doc_id", 0.0,
-          JaccardMaxDf))
-        .orderBy("tau_floor")
-    }),
-
-    // Chunk-index-at-rest interchange: the q140 flow's persistent
-    // artifact — the CDC chunk-hash index written as parquet by Spark,
-    // read back, and (via the oracle reading the SAME files) proven
-    // DuckDB-readable with identical values. The WRITE is fixture
-    // plumbing; the stored-index SCAN is the operator under test.
-    "q144_chunk_index_roundtrip" -> ((s, dir) => {
-      val path = q144IdxPath(dir)
-      Text.chunkContentDefined(t(s, dir, "documents"), "text",
-          CdcDivisor, "cdc")
-        .groupBy(md5(col("chunk").cast("binary")).as("chunk_hash"))
-        .agg(count(lit(1)).as("n_refs"), sum(col("n_tokens")).as("n_tokens"))
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
-        .agg(count(lit(1)).as("n_unique_chunks"),
-          sum(col("n_refs")).as("n_chunk_refs"),
-          sum(col("n_tokens")).as("n_tokens"),
-          countDistinct(col("chunk_hash")).as("n_hashes"))
-    }),
-
-    // Loader-side end-to-end: the q114 epoch plan realized into the
-    // repeated corpus, then cut into fixed training sequences by the
-    // q67 packer — raw docs + mixture weights → the actual token
-    // stream a trainer consumes, one hash. Copy identity
-    // doc_id·1024 + epoch_copy keeps packing order deterministic
-    // (epoch copies of a doc pack adjacently, different docs by id).
-    "q143_epoch_pack" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val realized = Sampling.applyEpochFactors(
-          docs.select(col("doc_id"), col("source"), col("text")),
-          "doc_id", "source",
-          Sampling.epochFactors(docs, "source", "text", EpochWeights,
-            EpochBudget),
-          EpochRealizeSalt)
-        .select((col("doc_id") * 1024 + col("epoch_copy")).as("doc_id"),
-          col("text"))
-      Sampling.pack(realized, "doc_id", "text", PackSeqTokens, PackShards,
-        "pack").orderBy("shard", "seq_idx")
-    }),
-
-    // Top user-journey prefixes (first-3-event paths, top-20).
-    "q142_top_paths" -> ((s, dir) => {
-      Events.topPaths(Sources.eventsNs(s, dir), PathLen, PathTopK)
-        .orderBy("rank")
-    }),
-
-    // Key-skew audit over the pair-gen hot key (the "should I salt
-    // this join" pre-flight the q14 salted variant answers).
-    "q141_key_skew" -> ((s, dir) => {
-      Quality.keySkew(t(s, dir, "lineitem"), "l_partkey")
-    }),
-
-    // Incremental chunk-level scrub: the q61 train/eval doc split as
-    // stored-corpus vs new-batch; new docs rewritten from the chunks
-    // whose hash is NOT in the stored index.
-    "q140_chunk_scrub_incr" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val stored = Text.chunkContentDefined(
-          docs.filter(col("doc_id") < EvalSetDocs), "text",
-          CdcDivisor, "cdc")
-        .select(md5(col("chunk").cast("binary")).as("chunk_hash"))
-        .distinct()
-      Dedup.scrubChunksAgainst(docs.filter(col("doc_id") >= EvalSetDocs),
-        "doc_id", "text", CdcDivisor, "cdc", stored)
-        .orderBy("doc_id")
-    }),
-
-    // Chunk-level dedup-rate rollup over the q135 CDC chunks: the
-    // storage/training-mass savings estimate.
-    "q137_cdc_dedup_rate" -> ((s, dir) => {
-      Dedup.chunkDedupRate(
-        Text.chunkContentDefined(t(s, dir, "documents"), "text",
-          CdcDivisor, "cdc"), "chunk", "n_tokens")
-    }),
-
-    // First-order event-transition matrix with row-normalized
-    // probabilities.
-    "q138_transition_matrix" -> ((s, dir) => {
-      Events.transitionMatrix(Sources.eventsNs(s, dir))
-        .orderBy("from_type", "to_type")
-    }),
-
-    // Pairwise Pearson correlation of four curation signals, exact
-    // decimal moments (do the stacked filters measure different
-    // things?).
-    "q139_signal_corr" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      def i9(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e9) + lit(0.5)).cast("long")
-      val sig = Text.qualityScore(docs, "text")
-        .select(col("doc_id"), col("n_tokens").as("len"),
-          i9(col("quality_score")).as("quality"))
-        .join(Text.repetitionStats(docs, "text", RepetitionN)
-          .select(col("doc_id"), i9(col("dup_ngram_ratio")).as("rep")),
-          Seq("doc_id"))
-        .join(Text.unigramLogProb(docs, "text")
-          .select(col("doc_id"), i9(col("unigram_nll")).as("nll")),
-          Seq("doc_id"))
-      Quality.signalCorrelation(sig, Seq("quality", "rep", "nll", "len"))
-        .orderBy("sig_a", "sig_b")
-    }),
-
-    // Content-defined chunking: CDC boundaries at adjacent-token-pair
-    // hash ≡ 0 mod divisor — revision-stable chunk dedup units.
-    "q135_chunks_cdc" -> ((s, dir) => {
-      Text.chunkContentDefined(t(s, dir, "documents"), "text",
-        CdcDivisor, "cdc").orderBy("doc_id", "chunk_idx")
-    }),
-
-    // Funnel conversion-latency quantiles per stage transition.
-    "q136_funnel_latency" -> ((s, dir) => {
-      Events.funnelLatency(Sources.eventsNs(s, dir), FunnelStages,
-        FunnelLatencyProbs).orderBy("step_idx")
-    }),
-
-    // Stride-scheduled mixture interleave: the deterministic
-    // data-loader order over hash shards, weights a keyed-hash draw
-    // per source (so the fixture's uniform sources differentiate).
-    "q134_interleave" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val w = docs.select(col("source")).distinct()
-        .withColumn("weight",
-          (pmod(Portable.seededHash(col("source"), lit("w")), lit(5L)) + 1L)
-            .cast("double"))
-      Sampling.interleave(docs, "doc_id", "source", w,
-        InterleaveShards, "il").orderBy("shard", "pos")
-    }),
-
-    // Per-doc marginal novelty: fraction of each doc's distinct
-    // shingles first seen in that doc (corpus id order).
-    "q131_novelty" -> ((s, dir) => {
-      Dedup.noveltyStats(shingled(s, dir), "doc_id").orderBy("doc_id")
-    }),
-
-    // Independent-gate overlap matrix: every (lang, length,
-    // top-token-concentration) pass/fail combination with counts —
-    // the ablation view the sequential funnel can't produce.
-    "q132_gate_overlap" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val conc = docs
-        .select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id"))
-        .agg((max(col("c")).cast("double") / sum(col("c"))).as("topfrac"))
-      Quality.gateOverlap(docs.join(conc, Seq("doc_id")), Seq(
-          "lang_ok" -> (col("lang") === "en"),
-          "len_ok" -> size(Text.tokens(col("text"))).between(10, 1000),
-          "conc_ok" -> (col("topfrac") <= ConcMax)))
-        .orderBy("lang_ok", "len_ok", "conc_ok")
-    }),
-
-    // Trailing-baseline window anomaly: hourly counts per type z-scored
-    // against the previous day of observed windows.
-    "q133_window_anomaly" -> ((s, dir) => {
-      Events.windowAnomaly(Sources.eventsNs(s, dir), WindowMs,
-        AnomalyTrailing, AnomalyZ).orderBy("event_type", "window_start_ms")
-    }),
-
-    // Exact dedup: content-hash duplicate groups with canonical survivor.
-    "q17_exact_dup_groups" -> ((s, dir) => {
-      Dedup.exactGroups(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("content_hash")
-    }),
-
-    // Exact dedup applied: surviving rows only (deterministic keep-min).
-    "q18_dedup_keep_first" -> ((s, dir) => {
-      Dedup.dedupExact(t(s, dir, "documents"), "doc_id", "text")
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // MinHash signatures (16 keyed permutations over 3-gram shingles).
-    // posexplode_OUTER + isNotNull instead of posexplode: the non-outer
-    // generate makes the optimizer infer size(sig) > 0 and push it below
-    // the projection, re-deriving the full 16-perm hash tree at the scan
-    // (signatures are never empty here, so results are identical).
-    "q19_minhash_sig" -> ((s, dir) => {
-      Dedup.minhashSignatures(shingled(s, dir), "doc_id", NumPerms)
-        .select(col("doc_id"), posexplode_outer(col("sig")).as(Seq("p", "h")))
-        .filter(col("h").isNotNull)
-        .withColumn("p", col("p").cast("long"))
-        .orderBy("doc_id", "p")
-    }),
-
-    // MinHash+LSH near-dup pairs, Jaccard-verified at tau.
-    "q20_lsh_near_pairs" -> ((s, dir) => {
-      lshPairs(s, dir).orderBy("id_a", "id_b")
-    }),
-
-    // EXACT n-gram-Jaccard pairs via the inverted shingle index —
-    // the ground-truth twin of q20 (no banding recall loss). MaxDf
-    // exceeds every fixture shingle's document frequency, so no
-    // posting list is pruned and the result is the full exact set.
-    "q55_jaccard_exact" -> ((s, dir) => {
-      Dedup.jaccardPairsExact(shingled(s, dir), "doc_id", JaccardTau,
-        JaccardMaxDf)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // EXACT n-gram CONTAINMENT pairs — q55's asymmetric sibling:
-    // |A∩B| / min(|A|,|B|) finds subset duplication (a short doc
-    // quoted whole inside a long one) that Jaccard's union
-    // denominator dilutes away.
-    "q120_containment_pairs" -> ((s, dir) => {
-      Dedup.containmentPairsExact(shingled(s, dir), "doc_id", ContainTau,
-        JaccardMaxDf)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Count–min sketch heavy-hitter audit: every token with true
-    // frequency >= CmsMinCount, exact count vs sketch estimate —
-    // the one-sided (est >= exact) commissioning report for the
-    // bounded-state frequency path.
-    "q121_cms_audit" -> ((s, dir) => {
-      Sketch.heavyHitterAudit(t(s, dir, "documents"), "text",
-        CmsDepth, CmsWidth, CmsMinCount, CmsSalt)
-        .orderBy("token")
-    }),
-
-    // LSH recall audit: q20's banding vs q55's exact ground truth, the
-    // empirical recall S-curve per jaccard decile.
-    "q119_lsh_recall" -> ((s, dir) => {
-      Dedup.lshRecallReport(shingled(s, dir), "doc_id", NumPerms,
-        LshBands, LshRows, LshAuditTau, JaccardMaxDf)
-        .orderBy("sim_band")
-    }),
-
-    // Near-dedup applied: corpus minus LSH-found near-duplicates
-    // (greedy keep-smallest-id over the verified pair list).
-    "q43_near_dedup" -> ((s, dir) => {
-      Dedup.dedupNear(t(s, dir, "documents"), "doc_id", shingled(s, dir),
-        NumPerms, LshBands, LshRows, JaccardTau)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // Near-dup cluster-representative table: connected components (min-id
-    // label propagation to fixpoint) over the Jaccard-verified pair list —
-    // the transitive complement of q43's greedy drop policy.
-    "q51_near_dup_clusters" -> ((s, dir) => {
-      Dedup.nearDupClusters(lshPairs(s, dir), "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // Soft dedup: keep every near-dup copy but weight it 1/|cluster| so
-    // each component contributes one unit of training mass — the
-    // loss-reweighting alternative to q53's hard drop. Singletons
-    // (docs in no verified pair) weigh 1.
-    "q91_softdedup_weights" -> ((s, dir) => {
-      val verified = lshPairs(s, dir)
-      Dedup.softDedupWeights(t(s, dir, "documents"), "doc_id",
-          Dedup.nearDupClusters(verified, "doc_id"))
-        .orderBy("doc_id")
-    }),
-
-    // Per-source near-duplication audit: docs, dup docs, post-dedup
-    // count and dup rate per source slice.
-    "q99_dup_stats" -> ((s, dir) => {
-      val verified = lshPairs(s, dir)
-      Dedup.dupStats(t(s, dir, "documents"), "doc_id", "source",
-          Dedup.nearDupClusters(verified, "doc_id"))
-        .orderBy("source")
-    }),
-
-    // Near-dedup applied with transitive clustering: one survivor (min
-    // id) per connected component — q43's greedy policy can keep several
-    // docs of one component; this keeps exactly the representative.
-    "q53_near_dedup_clustered" -> ((s, dir) => {
-      Dedup.dedupNearClustered(t(s, dir, "documents"), "doc_id",
-        shingled(s, dir), NumPerms, LshBands, LshRows, JaccardTau)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // TPC-H Q5-shaped multi-way join: revenue by (region, nation) with
-    // the local-supplier condition — exercises Catalyst join planning
-    // (broadcast dims, shuffle joins between facts, partial aggs).
-    "q44_region_revenue" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
-      val cust = t(s, dir, "customer")
-      val supp = t(s, dir, "supplier")
-      val nat = t(s, dir, "nation")
-      val reg = t(s, dir, "region")
-      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(cust, ord("o_custkey") === cust("c_custkey"))
-        .join(supp, li("l_suppkey") === supp("s_suppkey")
-          && cust("c_nationkey") === supp("s_nationkey"))
-        .join(broadcast(nat), supp("s_nationkey") === nat("n_nationkey"))
-        .join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        // per-row round to integer cents, then an integer sum: a plain
-        // double SUM's accumulation order differs between engines (and
-        // between partitionings) in the low bits — integer cents are
-        // exact, order-free, and hash-stable
-        .agg(sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100, 0).cast("long")).as("revenue_cents"),
-          count(lit(1)).as("n_items"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    // Per-doc 60-bit SimHash fingerprint.
-    "q21_simhash" -> ((s, dir) => {
-      Dedup.simhashes(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // SimHash near-dup pairs (Hamming <= 2) via 15-bit banding.
-    "q22_simhash_pairs" -> ((s, dir) => {
-      Dedup.simhashPairs(
-        Dedup.simhashes(t(s, dir, "documents"), "doc_id", "text"),
-        "doc_id", MaxHamming)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Streaming near-dedup gate, batch-twin form: odd-id docs arrive
-    // as the "stream", even-id docs are the stored SimHash index —
-    // survivors are arrivals with no index fingerprint within
-    // MaxHamming. The same function runs on a streaming frame
-    // (StreamOpsSpec and q270 drive it); with MaxHamming < SimHashBands the
-    // band join is exhaustive by pigeonhole, so the oracle's
-    // brute-force min-hamming form is exact.
-    "q124_near_dedup_stream" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val idx = Dedup.simhashes(docs.filter(col("doc_id") % 2 === 0),
-        "doc_id", "text")
-      StreamOps.dedupNearStreamAgainst(
-          docs.filter(col("doc_id") % 2 === 1), "text", idx, MaxHamming)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // Media near-dup commissioning audit (LAION-style): perceptual
-    // aHash per payload, then the band-collision Hamming histogram —
-    // where the corpus's collision mass sits before picking a maxHam
-    // for the banded pair join (which is q22's machinery verbatim).
-    "q125_media_phash_audit" -> ((s, dir) => {
-      Dedup.simhashBandAudit(
-        Multimodal.perceptualHashes(
-          Multimodal.payloads(t(s, dir, "documents"), "doc_id", "text")),
-        "doc_id")
-        .orderBy("hamming")
-    }),
-
-    // REAL image decode end-to-end: deterministic per-doc pixels (text
-    // bytes) -> javax.imageio PNG ENCODE -> magic-byte detect -> REAL
-    // PNG DECODE -> 8x8 gray grid -> integer aHash. The oracle computes
-    // the same aHash straight from the text bytes, so a hash match
-    // PROVES decode(encode(pixels)) returned the exact pixels — the
-    // decode itself is inside the verified chain, not just spec'd.
-    // ASCII-FIXTURE ASSUMPTION (shared with the q148 oracle): the pixel
-    // source is charAt(k % len) & 0xff over UTF-16 units on the Spark
-    // side vs ascii(substring) over codepoints + len() over codepoints
-    // in DuckDB — identical ONLY for ASCII text, which the synthetic
-    // documents fixture guarantees. Non-ASCII corpora would need a
-    // UTF-8-byte pixel source on both engines before this oracle holds.
-    "q148_media_ahash_real" -> ((s, dir) => {
-      val png = Multimodal.encodePng(t(s, dir, "documents"),
-        "doc_id", "text", MediaGridSide)
-      Multimodal.aHashFromGrid(
-          Multimodal.decodeGrayGrid(png, MediaGridSide))
-        .orderBy("doc_id")
-    }),
-
-    // q148's verified real-decode chain driven to its PRODUCT: the
-    // decoded-pixel aHashes feed the q22 SimHash band join — which
-    // images are near-copies, computed from actually-decoded bytes.
-    "q154_media_neardup_real" -> ((s, dir) => {
-      val png = Multimodal.encodePng(t(s, dir, "documents"),
-        "doc_id", "text", MediaGridSide)
-      Dedup.simhashPairs(
-          Multimodal.aHashFromGrid(
-            Multimodal.decodeGrayGrid(png, MediaGridSide)),
-          "doc_id", MaxHamming)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // REAL audio decode under the driver gate (the q148 protocol
-    // applied to WAV/PCM): every document renders as a real RIFF/WAV
-    // payload (sample k = (text byte at k mod len − 128)·256, a source
-    // both engines can recompute), decodePcm parses the container and
-    // PCM frames back, and the per-doc sample aggregates — count, sum,
-    // min, max, and a position-weighted sum that catches any
-    // permutation — hash against the oracle's recomputation straight
-    // from the text. A match PROVES decode(encode(samples)) returned
-    // the exact samples; the decode is inside the verified chain.
-    // Same ASCII-fixture assumption as q148 (charAt vs ascii()).
-    "q273_audio_pcm_real" -> ((s, dir) => {
-      val wav = Multimodal.encodeWav(t(s, dir, "documents"),
-        "doc_id", "text", AudioSamples, AudioRateHz)
-      Multimodal.decodePcm(wav)
-        .select(col("doc_id"), col("sample_rate").cast("long"),
-          col("n_channels").cast("long"),
-          posexplode(col("samples")).as(Seq("pos", "s")))
-        .groupBy("doc_id", "sample_rate", "n_channels")
-        .agg(count(lit(1)).as("n_samples"),
-          sum(col("s")).as("sum_s"),
-          min(col("s")).as("min_s"),
-          max(col("s")).as("max_s"),
-          sum((col("pos") + 1) * col("s")).as("pos_sum"))
-        .orderBy("doc_id")
-    }),
-
-    // REAL video decode under the driver gate (the q148/q273 protocol
-    // applied to Y4M): every document renders as a real YUV4MPEG2
-    // payload (mono luma plane; pixel p of frame f = text byte at
-    // (f·w·h + p) mod len — a source both engines can recompute),
-    // decodeY4mFrames demuxes the header + FRAME markers and decodes
-    // the planes back, and the per-frame pixel aggregates — count,
-    // sum, min, max, and a position-weighted sum that catches any
-    // permutation — hash against the oracle's recomputation straight
-    // from the text. A match PROVES decode(encode(frames)) returned
-    // every plane bit-exact, frame order intact (frame_idx), with the
-    // header geometry (width/height) parsed right. Same ASCII-fixture
-    // assumption as q148/q273 (charAt vs ascii()).
-    "q275_video_y4m_real" -> ((s, dir) => {
-      val y4m = Multimodal.encodeY4m(t(s, dir, "documents"),
-        "doc_id", "text", VideoW, VideoH, VideoFrames)
-      Multimodal.decodeY4mFrames(y4m)
-        .select(col("doc_id"), col("width"), col("height"),
-          col("frame_idx"), posexplode(col("pixels")).as(Seq("pos", "v")))
-        .groupBy("doc_id", "width", "height", "frame_idx")
-        .agg(count(lit(1)).as("n_px"),
-          sum(col("v")).as("sum_v"),
-          min(col("v")).as("min_v"),
-          max(col("v")).as("max_v"),
-          sum((col("pos") + 1) * col("v")).as("pos_sum"))
-        .orderBy("doc_id", "frame_idx")
-    }),
-
-    // The retired-stub gate for extractFeatures (r15): all three REAL
-    // feature kernels — imageio pixel histogram over decoded PNG,
-    // RIFF-walked int16 amplitude-band histogram over decoded WAV,
-    // demuxed all-frames luma histogram over Y4M — verified in one
-    // query against oracles that recompute each histogram straight
-    // from the encoders' pixel/sample laws. A hash match proves the
-    // features came from DECODED content, not payload bytes (the
-    // payload bytes of a PNG are deflate output — a byte histogram
-    // could not match). Same ASCII-fixture assumption as q148.
-    "q278_media_features_real" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      def feats(payloads: DataFrame, kind: String): DataFrame =
-        Multimodal.extractFeatures(payloads).toDF()
-          .select(col("doc_id"), lit(kind).as("kind"),
-            posexplode(col("features")).as(Seq("bin", "feat")))
-          .withColumn("bin", col("bin").cast("long"))
-      feats(Multimodal.encodePng(docs, "doc_id", "text", MediaGridSide),
-          "png")
-        .unionByName(feats(Multimodal.encodeWav(docs, "doc_id", "text",
-          AudioSamples, AudioRateHz), "wav"))
-        .unionByName(feats(Multimodal.encodeY4m(docs, "doc_id", "text",
-          VideoW, VideoH, VideoFrames), "y4m"))
-        .orderBy("doc_id", "kind", "bin")
-    }),
-
-    // The retired-stub gate for sampleFrames (r15): stride-sampling
-    // over REAL Y4M payloads demuxes actual container frames — emitted
-    // frame_idx are the STREAM indices (0, 2, … — stride over the
-    // container's frame sequence, not byte chunks; frameBytes is
-    // ignored on this path), and each frame's bytes are the exact
-    // decoded luma plane, proven by the q275 aggregate protocol
-    // (count/sum/min/max/position-weighted sum per plane) against the
-    // oracle's recomputation from the pixel law.
-    "q279_video_frames_real" -> ((s, dir) => {
-      import s.implicits._
-      val y4m = Multimodal.encodeY4m(t(s, dir, "documents"),
-        "doc_id", "text", VideoW, VideoH, VideoFrames)
-      Multimodal.sampleFrames(y4m, frameBytes = 1, stride = VideoStride)
-        .map { fr =>
-          val px = fr.frame
-          var sum = 0L; var mn = 256L; var mx = -1L; var ps = 0L
-          var i = 0
-          while (i < px.length) {
-            val v = (px(i) & 0xff).toLong
-            sum += v
-            if (v < mn) mn = v
-            if (v > mx) mx = v
-            ps += (i + 1) * v
-            i += 1
-          }
-          (fr.doc_id, fr.frame_idx, px.length.toLong, sum, mn, mx, ps)
-        }
-        .toDF("doc_id", "frame_idx", "n_px", "sum_v", "min_v", "max_v",
-          "pos_sum")
-        .orderBy("doc_id", "frame_idx")
-    }),
-
-    // The retired-stub gate for resize (r15): REAL image resize —
-    // imageio decode, exact 2×2 integer box averages, grayscale-PNG
-    // re-encode — driven through the q148-verified decodeGrayGrid
-    // chain. The oracle recomputes every output pixel as
-    // (Σ 2×2 block of the encoder's text-byte pixels) // 4, so a hash
-    // match proves the resize averaged DECODED pixels (byte decimation
-    // of deflate output could not match). Same ASCII-fixture
-    // assumption as q148.
-    "q280_media_resize_real" -> ((s, dir) => {
-      val png = Multimodal.encodePng(t(s, dir, "documents"),
-        "doc_id", "text", MediaGridSide)
-      val rs = Multimodal.resize(png, ResizeFactor)
-        .select(col("doc_id"), col("payload_resized").as("payload"))
-      Multimodal.decodeGrayGrid(rs, MediaGridSide / ResizeFactor)
-        .select(col("doc_id"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          posexplode(col("gray")).as(Seq("pos", "v")))
-        .withColumn("pos", col("pos").cast("long"))
-        .orderBy("doc_id", "pos")
-    }),
-
-    // Embedding-cosine near-dup pairs via SRP buckets.
-    "q23_embed_near_pairs" -> ((s, dir) => {
-      Dedup.embeddingNearDup(t(s, dir, "embeddings"), "vec_id", "embedding",
-        SrpPlanes, CosTau)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // SemDeDup: argmax-cosine cluster assignment over first-k centroids,
-    // then within-cluster semantic-duplicate pruning (keep-min id).
-    "q73_semantic_dedup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Dedup.semanticDedup(emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < SemClusters), CosTau)
-        .orderBy("vec_id")
-    }),
-
-    // Cluster-balanced sample: q73's centroid assignment driving an
-    // exact per-cluster hash-priority budget — uniform over semantic
-    // regions, not over documents.
-    "q118_cluster_sample" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Sampling.sampleBalanced(emb, "vec_id", "embedding",
-          emb.filter(col("vec_id") < SemClusters), ClusterSampleN,
-          ClusterSampleSalt)
-        .select(col("vec_id"), col("label"), col("cluster"),
-          col("cos_centroid"), col("sample_rank"))
-        .orderBy("vec_id")
-    }),
-
-    // Token statistics (whitespace + word-regex + BPE estimate).
-    "q24_token_stats" -> ((s, dir) => {
-      Text.tokenStats(t(s, dir, "documents"), "text").orderBy("doc_id")
-    }),
-
-    // Quality scoring (length / alpha / digit / stopword heuristics).
-    "q25_quality_score" -> ((s, dir) => {
-      Text.qualityScore(t(s, dir, "documents"), "text").orderBy("doc_id")
-    }),
-
-    // Per-source percentile calibration of the quality score — SQL
-    // percent_rank tie semantics, computed over the compact
-    // (source, score) frame (never a corpus-sized window partition).
-    "q101_quality_percentiles" -> ((s, dir) => {
-      val scored = Text.qualityScore(t(s, dir, "documents"), "text",
-        Seq("source"))
-      Text.scorePercentiles(scored, "quality_score", "source")
-        .select(col("doc_id"), col("source"), col("quality_score"),
-          col("pct_rank"))
-        .orderBy("doc_id")
-    }),
-
-    // Language ID via stopword profiles with pinned tiebreak.
-    "q26_langid" -> ((s, dir) => {
-      Text.languageId(t(s, dir, "documents"), "text").orderBy("doc_id")
-    }),
-
-    // Corpus document-frequency / IDF table.
-    "q45_idf_table" -> ((s, dir) => {
-      Text.idfTable(t(s, dir, "documents"), "text").orderBy("w")
-    }),
-
-    // Per-doc top-k TF-IDF keywords (tf x corpus idf, deterministic
-    // lexicographic tie-break).
-    "q56_top_keywords" -> ((s, dir) => {
-      Text.topKeywords(t(s, dir, "documents"), "text", TopKeywordsK)
-        .orderBy("doc_id", "rank")
-    }),
-
-    // Gopher-style repetition quality signals (bigram dup / top-gram
-    // concentration).
-    "q58_repetition" -> ((s, dir) => {
-      Text.repetitionStats(t(s, dir, "documents"), "text", RepetitionN)
-        .orderBy("doc_id")
-    }),
-
-    // Domain-mixing sample: per-source Bernoulli rates over a keyed
-    // uniform draw — the data-mixture step; broadcast rate spec, no
-    // corpus shuffle.
-    "q64_domain_mix" -> ((s, dir) => {
-      import s.implicits._
-      val rates = MixRates.toDF("source", "rate")
-      Sampling.domainMix(t(s, dir, "documents"), "doc_id", "source",
-        rates, "mix")
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // Per-source token budget: hash-priority prefix under a running
-    // token total — the exact-cap twin of q64's expected-rate mixing.
-    "q65_token_budget" -> ((s, dir) => {
-      Sampling.tokenBudget(t(s, dir, "documents"), "doc_id", "source",
-        "text", TokenBudgetPerSource, "budget")
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          col("cum_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // Same cap via the bucketed two-phase build — identical result
-    // (same oracle SQL), per-task sort bounded by bucket, parallelism
-    // ∝ source × bucket (the q65 scale lever, like q50/q52).
-    "q66_token_budget_bucketed" -> ((s, dir) => {
-      Sampling.tokenBudgetBucketed(t(s, dir, "documents"), "doc_id",
-        "source", "text", TokenBudgetPerSource, "budget",
-        TokenBudgetBuckets)
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          col("cum_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // Per-source RELATIVE quality gate: each source keeps its top half
-    // by quality score (percent_rank, deterministic id tiebreak) — the
-    // distribution-aware twin of the absolute minQuality gate.
-    "q69_quality_top_fraction" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = docs.select(col("doc_id"), col("source"))
-        .join(Text.qualityScore(docs, "text")
-          .select(col("doc_id"), col("quality_score")), Seq("doc_id"))
-      Sampling.topFraction(scored, "doc_id", "source", "quality_score",
-        QualityKeepFrac)
-        .orderBy("doc_id")
-    }),
-
-    // Incremental dedup: the incoming batch (doc_id >= split) scrubbed
-    // of exact AND near duplicates of the historical corpus
-    // (doc_id < split) — cross-side band join only, never new-vs-new
-    // or existing-vs-existing pairs. In-batch dups survive by contract
-    // (compose with q18/q43/q53 forms for those).
-    "q68_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val sh = shingled(s, dir)
-      val exactClean = Dedup.dedupExactAgainst(
-        docs.filter(col("doc_id") >= IncrementalSplitId),
-        docs.filter(col("doc_id") < IncrementalSplitId), "doc_id", "text")
-      Dedup.dedupNearAgainst(exactClean, "doc_id",
-        sh.filter(col("doc_id") >= IncrementalSplitId),
-        sh.filter(col("doc_id") < IncrementalSplitId),
-        NumPerms, LshBands, LshRows, JaccardTau)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // GPT-2-style token packing: the corpus token stream cut into
-    // fixed-length training sequences across hash shards — zero
-    // padding waste, documents span boundaries, every token lands
-    // exactly once (spec-pinned).
-    "q67_pack_sequences" -> ((s, dir) => {
-      Sampling.pack(t(s, dir, "documents"), "doc_id", "text",
-        PackSeqTokens, PackShards, "pack")
-        .orderBy("shard", "seq_idx")
-    }),
-
-    // NO-SPLIT greedy packing: q67's document-integrity alternative —
-    // whole docs first-fit into fixed-capacity bins in keyed-hash
-    // order, oversized docs in bins of their own.
-    "q122_pack_whole" -> ((s, dir) => {
-      Sampling.packWhole(t(s, dir, "documents"), "doc_id", "text",
-        PackWholeCap, PackShards, PackWholeSalt)
-        .orderBy("shard", "bin_idx", "pos_in_bin")
-    }),
-
-    // Length-bucketed batching audit: per power-of-two capacity
-    // bucket, the docs/tokens/padding/overflow a dynamic-batching
-    // loader would pay — the report that prices q67 vs q122 policies.
-    "q123_length_buckets" -> ((s, dir) => {
-      Text.lengthBuckets(t(s, dir, "documents"), "text",
-        LenMinBucket, LenMaxBucket)
-        .orderBy("bucket")
-    }),
-
-    // End-to-end corpus curation under the oracle: the COMPOSED funnel
-    // (normalize → language gate → quality gate → Gopher repetition
-    // gate → exact dedup → clustered near-dedup → 64-token chunking)
-    // with the pinned q62 Config, hash-matched on the final chunk
-    // table — the integration check no per-stage oracle can give.
-    // collectFunnel=false keeps the whole thing one lazy pipeline; the
-    // frames curate persists internally (survivors/shingles — all
-    // survivor-sized) stay cached for the query's lifetime.
-    "q62_corpus_curate" -> ((s, dir) => {
-      CorpusPipeline.curate(t(s, dir, "documents"), CurateCfg,
-        collectFunnel = false).chunks
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // The composed funnel-to-training-shards EXPORT under one hash:
-    // q62's survivor chain feeding exportShards — epoch plan over the
-    // survivors' own token mass (q104), realized copies (q114), packed
-    // sequences (q67/q143), and the per-shard manifest (q107) with an
-    // order-independent content hash over every (seq_idx, seq) pair.
-    // A manifest hash match certifies the entire raw-docs →
-    // training-shards product end to end — the one-call loader story.
-    "q274_corpus_export" -> ((s, dir) => {
-      val r = CorpusPipeline.curate(t(s, dir, "documents"), CurateCfg,
-        collectFunnel = false)
-      val (_, manifest) = CorpusPipeline.exportShards(r.survivors.get,
-        EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
-        PackShards)
-      manifest.orderBy("shard")
-    }),
-
-    // q274's export composed into the STREAMING story: raw documents
-    // ride a micro-batched file stream into exportStream, which appends
-    // each batch to a documents-at-rest dir and re-derives the whole
-    // funnel + exportShards over everything at rest (the landing-zone
-    // posture — a global packer is a batch view over data at rest, not
-    // executor state). Every refresh is a certified snapshot of the
-    // corpus-so-far; the FINAL refresh (all 4 files ingested) must
-    // equal the one-shot batch export bit-for-bit — q274's own oracle
-    // hashes the streamed manifest. Closes the last batch/stream
-    // asymmetry: every public stage now has a streaming twin.
-    "q277_corpus_export_stream" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      // Production refresh cadence (r15 optimization): the landing
-      // writes run per trigger as before, but the funnel + export
-      // re-derivation — a full batch export per refresh — runs ON
-      // DEMAND once, after ingest, instead of once per micro-batch
-      // (refreshEvery = 0, the never-in-stream cadence). The manifest
-      // is a pure function of the at-rest SET (the Rq277b spec law),
-      // so the on-demand refresh is bit-identical to the last
-      // per-trigger refresh the previous harness collected — same
-      // rows, same hash — for ONE funnel derivation instead of four.
-      Replay.replay(docs, "q277") { sdf =>
-        Replay.withTempDir("q277_at_rest") { atRest =>
-          Replay.drain(StreamOps.exportStream(sdf, atRest, CurateCfg,
-            EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
-            PackShards, refreshEvery = 0) { (_, _) => () }.start())
-          Replay.lastFrame(s, "final refresh produced no manifest") {
-            keep => StreamOps.refreshExport(s, atRest, CurateCfg,
-              EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
-              PackShards)(keep)
-          }
-        }
-      }.orderBy("shard")
-    }),
-
-    // q62's funnel with the CCNet perplexity-tier gate live between the
-    // repetition gate and exact dedup: per-language NLL tiers over the
-    // gate survivors, only head+middle continue into dedup/chunking.
-    "q93_corpus_curate_ppl" -> ((s, dir) => {
-      val cfg = CurateCfg.copy(
-        pplKeepTiers = Some(CuratePplTiers), pplBuckets = PplBuckets)
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
-        collectFunnel = false).chunks
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // q62's funnel with the quality-aware survivor policy: each near-dup
-    // cluster keeps its highest-quality copy instead of its min id.
-    "q98_corpus_curate_best" -> ((s, dir) => {
-      val cfg = CurateCfg.copy(keepBestQuality = true)
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
-        collectFunnel = false).chunks
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // q62's funnel with the per-source relative quality cut ANDed into
-    // the quality gate: keep each source's top (1 - pct) slice.
-    "q102_corpus_curate_pct" -> ((s, dir) => {
-      val cfg = CurateCfg.copy(minQualityPct = Some(CurateMinQualityPct))
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
-        collectFunnel = false).chunks
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // q62's funnel with the repeated-span scrub live between near-dedup
-    // and chunking: surviving text is rewritten (cross-survivor k-token
-    // spans removed, first occurrence kept) before the chunker reads it.
-    "q80_corpus_curate_scrubbed" -> ((s, dir) => {
-      val cfg = CurateCfg.copy(scrubSpanK = Some(CurateScrubK))
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
-        collectFunnel = false).chunks
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // q62's funnel with the eval-scrub stage live: docs below the q61
-    // split double as the "benchmark" (self-contamination by
-    // construction), so surviving leaked docs drop between near-dedup
-    // and chunking — the composed decontamination under the oracle.
-    "q70_corpus_curate_decon" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val cfg = CurateCfg.copy(
-        evalDocs = Some(docs.filter(col("doc_id") < EvalSetDocs)
-          .select(col("doc_id"), col("text"))),
-        contaminationMinShared = ContaminationMinShared)
-      CorpusPipeline.curate(docs, cfg, collectFunnel = false).chunks
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // q62's funnel with the packed-sequence consumer as the output:
-    // the survivors' tokens cut into fixed-length training sequences —
-    // the composed raw-docs→training-sequences product under the oracle.
-    "q77_corpus_curate_packed" -> ((s, dir) => {
-      val cfg = CurateCfg.copy(
-        packSeqTokens = Some(PackSeqTokens), packShards = PackShards)
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
-        collectFunnel = false).packed.get
-        .orderBy("shard", "seq_idx")
-    }),
-
-    // Multi-n repetition stats: the full Gopher gate set n in {2,3,4}
-    // in ONE corpus scan (PlanSpec pins the single tokenization).
-    "q63_repetition_multi" -> ((s, dir) => {
-      Text.repetitionStatsMulti(t(s, dir, "documents"), "text", RepetitionNs)
-        .orderBy("doc_id", "n")
-    }),
-
-    // Exact-N stratified sample: 12 docs per source by keyed-hash draw.
-    "q76_stratified_sample" -> ((s, dir) => {
-      Sampling.sampleN(t(s, dir, "documents"), "doc_id", "source",
-        SampleNPerSource, SampleSalt).orderBy("doc_id")
-    }),
-
-    // Corpus fingerprint: order/partitioning-invariant one-row identity
-    // stamp (XOR-fold of portable per-row hashes) — "trained on the
-    // same data" made checkable.
-    "q115_corpus_fingerprint" -> ((s, dir) => {
-      Quality.corpusFingerprint(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    // Corpus version diff: the detailed twin of q115's stamp — one row
-    // per status (added/removed/changed/unchanged) between two corpus
-    // snapshots, with doc counts and token mass per side. The "new"
-    // snapshot is derived deterministically from the fixture (every
-    // 7th doc removed, every 5th survivor's text refreshed, every 11th
-    // doc re-added under a shifted id), so both engines diff the SAME
-    // two corpora and the full-outer-join classify is oracle-checked
-    // across all four statuses.
-    "q149_corpus_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val refreshed = docs.filter(col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 0,
-            concat(col("text"), lit(" refreshed")))
-            .otherwise(col("text")).as("text"))
-      val added = docs.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + lit(DiffAddIdOffset)).as("doc_id"),
-          col("text"))
-      Quality.corpusDiff(docs, refreshed.unionByName(added),
-          "doc_id", "text")
-        .orderBy("status")
-    }),
-
-    // Matryoshka truncation audit (the report truncateEmbeddings'
-    // scaladoc promises): per-probe recall of the exact top-k computed
-    // on the FIRST TruncDims of each embedding against the
-    // full-dimension exact top-k — what an index sized at dims/D of
-    // the memory would actually cost in retrieval quality.
-    "q150_matryoshka_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      Ann.recallReport(
-        Similarity.cosineTopK(
-          Similarity.truncateEmbeddings(
-            emb.select(col("vec_id"), col("embedding")), TruncDims),
-          Similarity.truncateEmbeddings(
-            probes.select(col("vec_id"), col("embedding")), TruncDims),
-          TopK),
-        Similarity.cosineTopK(emb, probes, TopK))
-        .orderBy("probe_id")
-    }),
-
-    // The full matryoshka CURVE: q150's question asked at every
-    // power-of-two prefix in one corpus pass — per (dims, probe) recall
-    // vs the full 64-dim exact top-k; the index-sizing decision table.
-    "q151_matryoshka_curve" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.matryoshkaCurve(emb, emb.filter(col("vec_id") < 5),
-          MatryoshkaDims, TopK)
-        .orderBy("dims", "probe_id")
-    }),
-
-    // Heaps-law corpus-health audit: cumulative vocabulary-growth curve
-    // over decile document prefixes + exact-integer ln-ln fit of the
-    // Heaps exponent — the growth twin of q126's Zipf shape check.
-    "q152_heaps_audit" -> ((s, dir) => {
-      Text.heapsAudit(t(s, dir, "documents"), "doc_id", "text",
-        HeapsBuckets).orderBy("bucket")
-    }),
-
-    // JL ±1 random projection at q150's width: recall of the exact
-    // top-k under the 16-dim PROJECTION against the full 64-dim exact
-    // top-k — the reduction path for non-matryoshka embeddings, priced
-    // by the same report so q150 vs q155 is a fair head-to-head.
-    "q155_jl_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val proj = Barrier.cut(Similarity.randomProject(
-        emb.select(col("vec_id"), col("embedding")), JlDims))
-      Ann.recallReport(
-        Similarity.cosineTopK(proj,
-          proj.filter(col("vec_id") < 5), TopK),
-        Similarity.cosineTopK(emb, emb.filter(col("vec_id") < 5), TopK))
-        .orderBy("probe_id")
-    }),
-
-    // order2vec serving: baskets mean-pool their items' embeddings
-    // (exact-decimal per-dimension means — bit-stable at any
-    // partitioning) and the pooled ORDER vectors feed the same exact
-    // top-k report the item embeddings use — similar orders from item
-    // embeddings, no second training. Items map to the fixture
-    // embedding table by pmod(part, PoolMod).
-    "q153_order2vec_topk" -> ((s, dir) => {
-      val mem = t(s, dir, "lineitem").select(
-        col("l_orderkey").cast("long").as("order_id"),
-        pmod(col("l_partkey"), lit(PoolMod)).cast("long").as("vec_id"))
-      val pooled = Barrier.cut(Similarity.meanPoolEmbeddings(
-        mem, "order_id", "vec_id", t(s, dir, "embeddings")))
-      Similarity.cosineTopK(pooled,
-          pooled.filter(col("vec_id") < OrderProbeMax), TopK)
-        .withColumn("rnk", col("rnk").cast("long"))
-        .orderBy("probe_id", "rnk")
-    }),
-
-    // Epoch-plan realization: q104's mixture plan materialized as the
-    // repeated-document corpus — integer epochs for every doc, the
-    // fractional epoch as a deterministic per-doc Bernoulli lottery;
-    // expected emitted tokens per source = the plan's target.
-    "q114_epoch_realize" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Sampling.applyEpochFactors(
-          docs.select(col("doc_id"), col("source")), "doc_id", "source",
-          Sampling.epochFactors(docs, "source", "text", EpochWeights,
-            EpochBudget),
-          EpochRealizeSalt)
-        .select(col("doc_id"), col("source"), col("epoch_copy"))
-        .orderBy("doc_id", "epoch_copy")
-    }),
-
-    // Embedding-table data-quality audit: one-pass single-row profile
-    // (id uniqueness, dim consistency, NULL/NaN/zero vectors) — the
-    // ingest gate a similarity index runs before building.
-    "q113_embedding_checks" -> ((s, dir) => {
-      Quality.embeddingChecks(t(s, dir, "embeddings"), "vec_id",
-        "embedding")
-    }),
-
-    // C4-style blocklist report: per-doc occurrence/type counts of
-    // blocklisted tokens — map-only, the list rides as a codegen
-    // literal; the canonical gate is n_blocked == 0.
-    "q112_blocklist" -> ((s, dir) => {
-      Text.blocklistStats(t(s, dir, "documents"), "text", BlockTerms)
-        .orderBy("doc_id")
-    }),
-
-    // Blocklist scrub: the rewrite companion to q112 — listed tokens
-    // removed from the text instead of dropping the document.
-    "q117_blocklist_scrub" -> ((s, dir) => {
-      Text.blocklistScrub(t(s, dir, "documents"), "text", BlockTerms)
-        .orderBy("doc_id")
-    }),
-
-    // Weighted exact-N stratified sample (A-ES exponential keys):
-    // selection probability ∝ n_chars, i.e. ≈ token-uniform document
-    // sampling; keyed-hash deterministic, without replacement.
-    "q111_weighted_sample" -> ((s, dir) => {
-      Sampling.sampleNWeighted(t(s, dir, "documents"), "doc_id", "source",
-        "n_chars", SampleNPerSource, WeightedSampleSalt).orderBy("doc_id")
-    }),
-
-    // TF-IDF cosine document pairs: inverted-index weighted similarity
-    // (rare shared terms dominate), the q55 Jaccard path's complement.
-    "q84_tfidf_pairs" -> ((s, dir) => {
-      Similarity.tfidfCosinePairs(t(s, dir, "documents"), "doc_id", "text",
-        TfidfTau, TfidfMaxDf)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Graph centrality over the similarity graph: integer-scaled
-    // PageRank on the τ=0.8 tf-idf edges — boilerplate-adjacent docs
-    // (many well-connected near-dup neighbors) surface at the top,
-    // isolated/novel docs at the bottom. Bit-exact by construction
-    // (integer fixpoint), so the 8-round result hash-matches an
-    // unrolled CTE oracle.
-    "q86_pagerank" -> ((s, dir) => {
-      val edges = Similarity.tfidfCosinePairs(t(s, dir, "documents"),
-        "doc_id", "text", PrTau, TfidfMaxDf)
-      Graph.pageRank(edges, "id_a", "id_b", PrIters, PrScale)
-        .select(col("id").as("doc_id"), col("r").as("rank_int"),
-          Portable.intRatio9(col("r"), lit(PrScale)).as("pr"))
-        .orderBy("doc_id")
-    }),
-
-    // Density-sensitive communities on the q86 similarity graph:
-    // synchronous LPA with closed tie-breaks — unlike connected
-    // components, a single stray edge cannot fuse two dense near-dup
-    // groups; unlike PageRank, the output PARTITIONS the graph.
-    "q173_lpa_communities" -> ((s, dir) => {
-      val edges = Similarity.tfidfCosinePairs(t(s, dir, "documents"),
-        "doc_id", "text", PrTau, TfidfMaxDf)
-      Graph.labelPropagation(edges, "id_a", "id_b", LpaIters)
-        .select(col("id").as("doc_id"), col("community"))
-        .orderBy("doc_id")
-    }),
-
-    // Trained Naive-Bayes language classifier: exact-count train on the
-    // labeled corpus, argmax score per doc with the runner-up margin and
-    // a label-agreement flag — the learned quality-filter slot, and a
-    // label-noise report (margin ~ confidence, !correct ~ suspect label).
-    "q85_nb_classify" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val model = graft.ml.NaiveBayesText.train(docs, "text", "lang")
-      graft.ml.NaiveBayesText.classify(model, docs, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("pred_label"),
-          (col("pred_label") === col("lang")).as("correct"),
-          Portable.ratio9(col("avg_logp")).as("avg_logp"),
-          Portable.ratio9(col("margin")).as("margin"))
-        .orderBy("doc_id")
-    }),
-
-    // kNN label-agreement over the SRP buckets: the label-noise report —
-    // a vector whose nearest (approximate) neighbors mostly carry a
-    // different label is a suspect annotation. Bucket singletons stay in
-    // the report with zero neighbors and NULL agreement.
-    "q87_knn_label_agreement" -> ((s, dir) => {
-      Ann.knnLabelAgreement(t(s, dir, "embeddings"), "vec_id", "embedding",
-          "label", SrpPlanes, TopK)
-        .withColumn("suspect",
-          coalesce(col("agreement") < 0.5, lit(false)))
-        .orderBy("vec_id")
-    }),
-
-    // Symmetric int8 embedding quantization: the 4× storage cut for the
-    // embedding column, with the per-vector reconstruction MSE computed
-    // from three dot products (never a materialized reconstruction).
-    // The quantized codes serialize to a comma string for the compare
-    // (q34's array convention).
-    "q88_int8_quant" -> ((s, dir) => {
-      Quantize.int8(t(s, dir, "embeddings"), "vec_id", "embedding")
-        .select(col("vec_id"), Portable.ratio9(col("scale")).as("scale"),
-          array_join(transform(col("q"), _.cast("string")), ",").as("q_str"),
-          Portable.ratio9(col("mse")).as("mse"))
-        .orderBy("vec_id")
-    }),
-
-    // ANN entirely in the quantized domain: SRP buckets and cosines
-    // computed from the int8 codes alone (the positive per-vector scale
-    // cancels from both), so the float vectors never load — the
-    // memory-resident-index serving path for the q88 artifact.
-    "q92_ann_quantized" -> ((s, dir) => {
-      Ann.annTopKQuantized(t(s, dir, "embeddings"), "vec_id", "embedding",
-          SrpPlanes, TopK)
-        .orderBy("probe_id", "rnk")
-    }),
-
-    // Label-prototype agreement: each vector's quantized-domain cosine
-    // to its own label's centroid (low = probable mislabel/outlier).
-    "q100_label_prototypes" -> ((s, dir) => {
-      Ann.labelPrototypes(t(s, dir, "embeddings"), "vec_id", "embedding",
-          "label")
-        .orderBy("vec_id")
-    }),
-
-    // Hard-negative mining: per anchor, the top-k most-cosine-similar
-    // vectors with a DIFFERENT label from the same SRP bucket — the
-    // near-miss negatives a contrastive loss actually learns from.
-    "q89_hard_negatives" -> ((s, dir) => {
-      Ann.hardNegatives(t(s, dir, "embeddings"), "vec_id", "embedding",
-          "label", SrpPlanes, TopK)
-        .orderBy("anchor_id", "rnk")
-    }),
-
-    // Temperature-scaled corpus mixture: p_i ∝ n_i^α rates feeding the
-    // q64 Bernoulli domain-mix gate — the mT5/XLM-R sampling recipe.
-    "q83_temperature_mix" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val rates = Sampling.ratesForTemperature(docs, "source", "text",
-        TempAlpha, TempTargetTokens)
-      Sampling.domainMix(docs, "doc_id", "source",
-        rates.select(col("source"), col("rate")), "q83")
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id")
-    }),
-
-    // BPE merge learning: the subword-tokenizer training loop over the
-    // corpus word-frequency table — deterministic (count DESC, pair ASC
-    // tiebreak), so the learned merge table is oracle-checkable.
-    "q81_bpe_merges" -> ((s, dir) => {
-      Bpe.learn(Bpe.wordCounts(t(s, dir, "documents"), "text"),
-          BpeNumMerges, batch = BpeBatch)
-        .merges.orderBy("rank")
-    }),
-
-    // BPE encoding: every document re-segmented through the learned
-    // word→subword table (dictionary join, corpus never char-split).
-    "q82_bpe_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val learned = Bpe.learn(Bpe.wordCounts(docs, "text"),
-        BpeNumMerges, batch = BpeBatch)
-      Bpe.encode(docs, "text", learned.vocab).orderBy("doc_id")
-    }),
-
-    // Tokenizer fertility report: subword tokens per word and chars per
-    // token for each (source, lang) slice — the tokenizer-evaluation
-    // rollup that flags slices the merges under-serve.
-    "q116_tokenizer_fertility" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val learned = Bpe.learn(Bpe.wordCounts(docs, "text"),
-        BpeNumMerges, batch = BpeBatch)
-      Bpe.fertility(docs, "text", learned.vocab, Seq("source", "lang"))
-        .orderBy("source", "lang")
-    }),
-
-    // Interpolated bigram LM NLL: corpus-trained KenLM-lite fluency
-    // score; first token scores unigram, the rest λ·P(w|v)+(1−λ)·P(w).
-    "q79_bigram_nll" -> ((s, dir) => {
-      Text.bigramLogProb(t(s, dir, "documents"), "text", BigramLambda)
-        .orderBy("doc_id")
-    }),
-
-    // Repeated-span scrub (ExactSubstr-style): k-token windows seen
-    // earlier anywhere in the corpus are removed from the text; the
-    // globally-first occurrence survives.
-    "q78_scrub_spans" -> ((s, dir) => {
-      Dedup.scrubRepeatedSpans(t(s, dir, "documents"), "doc_id", "text",
-        ScrubK).orderBy("doc_id")
-    }),
-
-    // Corpus data card: per-(source, lang) doc/token/quality rollup.
-    "q75_corpus_report" -> ((s, dir) => {
-      Quality.corpusReport(t(s, dir, "documents"), "source", "lang", "text")
-        .orderBy("source", "lang")
-    }),
-
-    // DSIR importance scores: hashed-bigram bucket weights
-    // ln p_target − ln p_raw (Laplace-smoothed), summed per document.
-    "q74_dsir_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Sampling.dsirScores(docs, "doc_id", "text",
-        docs.filter(col("source").isin(DsirTargetSources: _*)),
-        DsirBuckets, DsirN).orderBy("doc_id")
-    }),
-
-    // CCNet-style unigram-LM quality proxy: mean negative log-likelihood
-    // of each doc's tokens under the corpus unigram distribution.
-    "q71_unigram_nll" -> ((s, dir) => {
-      Text.unigramLogProb(t(s, dir, "documents"), "text").orderBy("doc_id")
-    }),
-
-    // CCNet perplexity buckets: per-language head/middle/tail NLL
-    // terciles — the canonical quality-mixture tiers (train on
-    // head+middle, downsample tail). Deterministic tie-break on the
-    // rounded NLL then doc_id.
-    "q90_ppl_buckets" -> ((s, dir) => {
-      Text.perplexityBuckets(t(s, dir, "documents"), "text", "lang")
-        .orderBy("doc_id")
-    }),
-
-    // Cross-document boilerplate fractions: trigrams with corpus df >
-    // BoilerMaxDf are boilerplate; per-doc occurrence + distinct ratios.
-    "q72_boilerplate" -> ((s, dir) => {
-      Text.boilerplateStats(t(s, dir, "documents"), "text", BoilerN,
-        BoilerMaxDf).orderBy("doc_id")
-    }),
-
-    // PII masking over deterministically injected emails/URLs/phones/
-    // IPs/digit runs (the fixture corpus is PII-free, so both engines
-    // append the same synthetic contact block per doc before masking).
-    // The pmod bounds keep every lpad input at or under the pad width —
-    // lpad truncation semantics for over-long inputs are engine-specific.
-    "q59_pii_mask" -> ((s, dir) => {
-      Text.maskPii(piiAugmented(s, dir), "text").orderBy("doc_id")
-    }),
-
-    // Per-source PII-density rollup over the same planted-PII frame:
-    // the data-card line saying which sources leak identifiers.
-    "q146_pii_by_source" -> ((s, dir) => {
-      Text.piiReport(piiAugmented(s, dir), "text", "source")
-        .orderBy("source")
-    }),
-
-    // C4-style normalization (lowercase, strip, collapse whitespace).
-    "q46_normalize" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), Text.normalize(col("text")).as("norm"))
-        .withColumn("n_chars", length(col("norm")).cast("long"))
-        .orderBy("doc_id")
-    }),
-
-    // Token-budget chunking: documents -> <=64-token training rows.
-    "q47_chunks" -> ((s, dir) => {
-      Text.chunk(t(s, dir, "documents"), "text", 64)
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // Strided context windows: 48-token windows every 32 tokens — the
-    // overlapping long-context-LM variant of q47's disjoint chunks.
-    "q94_chunks_strided" -> ((s, dir) => {
-      Text.chunkStrided(t(s, dir, "documents"), "text",
-        StrideWindowTokens, StrideTokens)
-        .orderBy("doc_id", "window_idx")
-    }),
-
-    // Leakage-free split: whole near-dup clusters assigned train/valid
-    // by an md5 of the cluster representative, so near-duplicate docs
-    // can never straddle the eval boundary.
-    "q95_leakage_free_split" -> ((s, dir) => {
-      val verified = lshPairs(s, dir)
-      Dedup.leakageFreeSplit(t(s, dir, "documents"), "doc_id",
-          Dedup.nearDupClusters(verified, "doc_id"), SplitValidFrac)
-        .orderBy("doc_id")
-    }),
-
-    // Per-doc OOV stats against the corpus top-500 token vocabulary.
-    "q96_oov_stats" -> ((s, dir) => {
-      Text.oovStats(t(s, dir, "documents"), "text", OovVocabSize)
-        .orderBy("doc_id")
-    }),
-
-    // Corpus drift: top KL(A||B)-contributing tokens between the even-
-    // and odd-doc_id halves of the corpus (snapshot-vs-snapshot audit).
-    "q103_unigram_drift" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Text.unigramDrift(d.filter(col("doc_id") % 2 === 0),
-          d.filter(col("doc_id") % 2 === 1), "text", DriftTopK)
-        .orderBy(col("kl_term").desc, col("w").asc)
-    }),
-
-    // Epoch-factor planning table: per-source available tokens vs the
-    // target mixture share of a total token budget.
-    "q104_epoch_factors" -> ((s, dir) => {
-      Sampling.epochFactors(t(s, dir, "documents"), "source", "text",
-          EpochWeights, EpochBudget)
-        .orderBy("source")
-    }),
-
-    // Bloom-prefiltered incremental exact dedup: q68's exact stage with
-    // the sketch fast-path — batch rows the index Bloom filter rejects
-    // skip the anti-join map-side; positives verify exactly, so the
-    // result is the anti-join's, hash-checked here end-to-end.
-    "q105_dedup_bloom" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.dedupExactAgainstBloom(
-        docs.filter(col("doc_id") >= IncrementalSplitId),
-        docs.filter(col("doc_id") < IncrementalSplitId),
-        "doc_id", "text", expectedItems = 1L << 16)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // JSONL interchange round-trip: write a documents slice as JSON
-    // lines once (the corpus-release boundary format), read it back
-    // through Sources.jsonl with the PINNED schema (no inference), and
-    // aggregate — DuckDB hash-verifies the Spark-written files. The
-    // single-partition write is fixture plumbing; the READ is the
-    // operator under test and globs directories like any corpus.
-    "q106_jsonl_roundtrip" -> ((s, dir) => {
-      val path = q106JsonlPath(dir)
-      t(s, dir, "documents")
-        .filter(col("doc_id") % 8 === 0)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-        .repartition(1)
-        .write.mode("overwrite").json(path)
-      Sources.jsonl(s, path, Sources.documentsJsonlSchema)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text"))).cast("long").as("n_chars"),
-          countDistinct(col("lang")).as("n_langs"),
-          max(col("doc_id")).as("max_id"))
-        .orderBy("source")
-    }),
-
-    // Sharded-export manifest: deterministic hash-shard assignment plus
-    // the per-shard (docs, tokens, chars, id-range) sidecar a training
-    // loader plans epochs from — all relational, oracle-recomputable.
-    "q107_shard_manifest" -> ((s, dir) => {
-      Sources.shardManifest(
-        Sources.shardAssign(t(s, dir, "documents"), "doc_id",
-          ManifestShards),
-        "doc_id", "text")
-    }),
-
-    // Quality-aware near-dedup: per cluster keep the HIGHEST-quality
-    // copy (ties -> min id) instead of q53's min-id survivor.
-    "q97_near_dedup_best" -> ((s, dir) => {
-      val verified = lshPairs(s, dir)
-      val scored = t(s, dir, "documents").join(
-        Text.qualityScore(t(s, dir, "documents"), "text")
-          .select(col("doc_id"), col("quality_score")), Seq("doc_id"))
-      Dedup.dedupNearClusteredBest(scored, "doc_id", "quality_score",
-          Dedup.nearDupClusters(verified, "doc_id"))
-        .select(col("doc_id"), col("cluster_rep"), col("lang"),
-          col("source"), col("quality_score"))
-        .orderBy("doc_id")
-    }),
-
-    // Winnowing fingerprints (k=4 grams, window 4).
-    "q27_fingerprints" -> ((s, dir) => {
-      Text.fingerprints(t(s, dir, "documents"), "text", FpK, FpW)
-        .orderBy("doc_id", "fp")
-    }),
-
-    // ANN: SRP-bucketed approximate cosine top-k (probes vec_id < 5).
-    "q28_ann_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Ann.annTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        SrpPlanes, TopK)
-        .withColumn("rnk", col("rnk").cast("long"))
-        .orderBy("probe_id", "rnk")
-    }),
-
-    // ANN with multi-table OR-amplification (recall lever over q28).
-    "q42_ann_multi" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Ann.annTopKMulti(emb, emb.filter(col("vec_id") < 5), "vec_id",
-        "embedding", SrpPlanes, TopK, AnnTables)
-        .withColumn("rnk", col("rnk").cast("long"))
-        .orderBy("probe_id", "rnk")
-    }),
-
-    // Tumbling-window event aggregation (1h windows).
-    "q29_event_windows" -> ((s, dir) => {
-      Events.tumbling(Sources.eventsNs(s, dir), WindowMs)
-        .orderBy("event_type", "window_start_ms")
-    }),
-
-    // Gap-based sessionization (30 min gap). ts truncated to µs for
-    // oracle parity: DuckDB reads TIMESTAMP(NANOS) parquet at µs
-    // precision, so the engines must sessionize IDENTICAL timestamps —
-    // otherwise sub-µs bits flip gap/duration arithmetic at exact
-    // boundaries (surfaced at sf0.1). The operator itself stays
-    // exact-ns for engine use.
-    "q30_sessionize" -> ((s, dir) => {
-      Events.sessionize(eventsUs(s, dir), SessionGapMs)
-        .orderBy("user_id", "session_id")
-    }),
-
-    // Same sessions via the two-phase bucketed build — identical result
-    // (same oracle SQL as q30), per-user sort bound removed.
-    "q52_sessionize_bucketed" -> ((s, dir) => {
-      Events.sessionizeBucketed(eventsUs(s, dir), SessionGapMs, AsofBucketMs)
-        .orderBy("user_id", "session_id")
-    }),
-
-    // As-of join: each event enriched with the latest COMPLETED hourly
-    // window stats of its type (stats become visible at window END —
-    // nontrivial temporal match, not a self-floor).
-    "q48_asof_enrich" -> ((s, dir) => {
-      val (left, right) = asofInputs(s, dir)
-      Events.asofJoin(left, right, Seq("event_type"), "ms", "avail_ms")
-        .orderBy("event_id")
-    }),
-
-    // Same enrichment via the range-bucketed as-of join — identical
-    // result (same oracle SQL), parallelism ∝ key × time-bucket instead
-    // of per-key (the q48 scale fix; 6h buckets here).
-    "q50_asof_bucketed" -> ((s, dir) => {
-      val (left, right) = asofInputs(s, dir)
-      Events.asofJoinBucketed(left, right, Seq("event_type"), "ms", "avail_ms",
-        AsofBucketMs)
-        .orderBy("event_id")
-    }),
-
-    // Stream-stream interval join, batch form (same code path as the
-    // streaming twin, StreamOpsSpec pins their equality): each click
-    // paired with the same user's purchases in the following 30 min.
-    // Event time is µs on both engines, so boundaries agree.
-    "q54_interval_join" -> ((s, dir) => {
-      val ev = Sources.eventsNs(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("ts"), col("user_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("ts"), col("user_id"))
-      StreamOps.intervalJoin(clicks, purchases, "user_id", 0L, SessionGapMs,
-        "1 hour")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          col("r_event_id").as("purchase_id"),
-          (unix_micros(col("r_event_time")) - unix_micros(col("event_time")))
-            .as("delta_us"))
-        .orderBy("user_id", "click_id", "purchase_id")
-    }),
-
-    // Sequential conversion funnel (strict first-occurrence ordering).
-    // Strict ts comparisons must agree with DuckDB's µs read, hence
-    // eventsUs (same reasoning as the sessionize pair).
-    "q57_funnel" -> ((s, dir) => {
-      Events.funnel(eventsUs(s, dir), FunnelStages).orderBy("stage_idx")
-    }),
-
-    // The funnel under a 48-hour attribution window: each stage only
-    // credits conversions landing within FunnelWindowMs of the
-    // previous reach — q57 is its upper bound, q136's latency
-    // distribution is how the window gets chosen. ns events like q136
-    // (gap arithmetic needs the ns longs).
-    "q156_funnel_windowed" -> ((s, dir) => {
-      Events.funnelWindowed(Sources.eventsNs(s, dir), FunnelStages,
-        FunnelWindowMs).orderBy("stage_idx")
-    }),
-
-    // Daily cohort retention triangle (cohort = period of first event).
-    "q60_retention" -> ((s, dir) => {
-      Events.retention(Sources.eventsNs(s, dir), RetentionPeriodMs)
-        .orderBy("cohort_start_ms", "period_offset")
-    }),
-
-    // Benchmark decontamination: training docs sharing >= 5 distinct
-    // shingles with the (broadcast) eval set.
-    "q61_contamination" -> ((s, dir) => {
-      val sh = shingled(s, dir)
-      Dedup.contamination(sh, sh.filter(col("doc_id") < EvalSetDocs),
-        "doc_id", ContaminationMinShared)
-        .orderBy("doc_id", "eval_id")
-    }),
-
-    // Parquet layout audit: write a 4-file hash-partitioned table, then
-    // read ONLY its footers back — per file row groups / rows /
-    // compressed / uncompressed bytes. The oracle reads the same
-    // footers through DuckDB's parquet_metadata(), so the audit is
-    // verified bit-for-bit against an independent parquet
-    // implementation (the q144 sink-interchange pattern for METADATA).
-    "q158_parquet_layout" -> ((s, dir) => {
-      val path = q158LayoutPath(dir)
-      t(s, dir, "lineitem").repartition(4, col("l_orderkey"))
-        .write.mode("overwrite").parquet(path)
-      Sources.parquetLayoutAudit(s, path).orderBy("file_name")
-    }),
-
-    // Per-language HLL cardinality audit: portable registers (keyed
-    // hash, integer-only rho), exact-BIGINT harmonic denominator, raw
-    // estimate next to the exact distinct and its error — the
-    // commissioning report for the constant-state distinct-count path.
-    "q163_hll_audit" -> ((s, dir) => {
-      Sketch.hllAudit(t(s, dir, "documents"), "text", "lang",
-          HllBits, HllSalt)
-        .withColumnRenamed("key", "lang")
-        .orderBy("lang")
-    }),
-
-    // The layout audit over a Hive-PARTITIONED sink: the recursive walk
-    // surfaces per-partition layout (file_name carries the partition
-    // subdir), which is where the small-files problem actually lives —
-    // a fine-grained partition key multiplies the file count by its
-    // cardinality.
-    "q159_partitioned_layout" -> ((s, dir) => {
-      val path = q159LayoutPath(dir)
-      Sources.writeParquetPartitioned(
-        t(s, dir, "lineitem").repartition(2, col("l_orderkey")),
-        path, Seq("l_returnflag"))
-      Sources.parquetLayoutAudit(s, path).orderBy("file_name")
-    }),
-
-    // The schema-drift audit over heterogeneous tables: distinct leaf
-    // columns straight from the parquet footers — flat scalars
-    // (lineitem), strings + timestamps (events), and a nested
-    // list<float> (embeddings, whose `element` leaf is the row that
-    // proves nesting walks correctly). The storage-level form of the
-    // reference's column-count/dtype gates (Q3/Q4): what the FILES
-    // declare, not what a reader inferred.
-    "q160_schema_audit" -> ((s, dir) => {
-      Seq("lineitem", "events", "embeddings").map { name =>
-        Sources.parquetSchemaAudit(s, s"$dir/$name.parquet")
-          .withColumn("table_name", lit(name))
-      }.reduce(_.unionByName(_))
-        .select(col("table_name"), col("field_name"), col("physical_type"),
-          col("repetition"), col("converted_type"))
-        .orderBy("table_name", "field_name")
-    }),
-
-    // Margin-based cross-corpus pair mining: label-0 vectors vs label-1
-    // vectors, each candidate cosine ratio-normalized by its two
-    // endpoints' top-k neighborhoods, mutual-best + τ gate. The exact
-    // ground-truth form; the 100 TB path buckets candidates via SRP.
-    "q161_margin_mining" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.marginMine(emb.filter(col("label") === 0),
-          emb.filter(col("label") === 1), MarginK, MarginTau)
-        .orderBy("x_id")
-    }),
-
-    // The same mining through SRP-bucket candidates — neither side
-    // broadcast, shuffle keyed on the bucket code, penalties computed
-    // within retrieved sets: the shape that mines two 100 TB corpora.
-    // q161 is its exact-recall audit twin.
-    "q162_margin_mining_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.marginMineBucketed(emb.filter(col("label") === 0),
-          emb.filter(col("label") === 1), MarginK, MarginTau, SrpPlanes)
-        .orderBy("x_id")
-    }),
-
-    // Product-quantization recall audit: PQ codes (4 subspaces, first-16
-    // codebooks), ADC top-k against the exact-L2 truth in shared
-    // integer distance units — what 2 bytes/vector costs in retrieval.
-    "q166_pq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val cen = emb.filter(col("vec_id") < PqCent)
-      Ann.recallReport(
-        Quantize.pqAdcTopK(emb, "vec_id", "embedding", probes, PqM,
-          cen, TopK),
-        Quantize.l2TopKExact(emb, "vec_id", "embedding", probes, TopK))
-        .orderBy("probe_id")
-    }),
-
-    // Offline recommender evaluation — closes the loop the reference
-    // leaves open: train the co-occurrence model on 9/10 of the orders
-    // (hash fold), hold out each eval basket's last item in trainer
-    // order, and report hit-rate@k for k = 1..10. Leakage-free by
-    // construction (eval pairs never enter the model).
-    "q169_rec_eval" -> ((s, dir) => {
-      val enc = Vocab.encode(t(s, dir, "lineitem"), "l_partkey",
-        vocab(s, dir))
-      val fold = pmod(Portable.seededHash(lit(RecEvalSalt),
-        col("l_orderkey")), lit(RecEvalFolds))
-      def baskets(e: DataFrame) =
-        Pairs.orderedBaskets(e, "l_orderkey", "idx",
-          Seq(Portable.seededHash(col("l_orderkey"), col("l_linenumber"),
-            col("l_partkey")).as("__h"), col("l_partkey").as("__pid")),
-          MaxBasketLen)
-      val cooc = Pairs.skipGramPairsFromBaskets(
-          baskets(enc.filter(fold =!= 0)), WindowW)
-        .groupBy(col("target"), col("context"))
-        .agg(count(lit(1)).as("cnt"))
-      RecEval.hitRateCurve(baskets(enc.filter(fold === 0)), cooc, TopK)
-        .orderBy("k")
-    }),
-
-    // Graded rank metrics over the q169 protocol: MRR and NDCG at the
-    // report cutoff, plus coverage (held-outs scored at all) — the
-    // numbers that separate "ranked it somewhere" from "ranked it
-    // first", in exact shared-literal integer units.
-    "q170_rec_eval_graded" -> ((s, dir) => {
-      val enc = Vocab.encode(t(s, dir, "lineitem"), "l_partkey",
-        vocab(s, dir))
-      val fold = pmod(Portable.seededHash(lit(RecEvalSalt),
-        col("l_orderkey")), lit(RecEvalFolds))
-      def baskets(e: DataFrame) =
-        Pairs.orderedBaskets(e, "l_orderkey", "idx",
-          Seq(Portable.seededHash(col("l_orderkey"), col("l_linenumber"),
-            col("l_partkey")).as("__h"), col("l_partkey").as("__pid")),
-          MaxBasketLen)
-      val cooc = Pairs.skipGramPairsFromBaskets(
-          baskets(enc.filter(fold =!= 0)), WindowW)
-        .groupBy(col("target"), col("context"))
-        .agg(count(lit(1)).as("cnt"))
-      RecEval.rankMetrics(baskets(enc.filter(fold === 0)), cooc, TopK)
-    }),
-
-    // Deterministic Lloyd k-means: 2 exact-replayable updates from the
-    // first-8 init (integerized argmin, exact-integer centroid means,
-    // empty clusters keep their centroid), then the final centroids
-    // exploded per dimension next to the final membership counts —
-    // the trainer for every centroid table the vector ops consume.
-    "q168_kmeans" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cen = Kmeans.fit(emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < KmeansK), KmeansIters)
-      val counts = Kmeans.assign(emb, "vec_id", "embedding", cen)
-        .groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
-      cen.select(col("vec_id").as("cluster"),
-          posexplode(col("embedding")).as(Seq("d", "val")))
-        .withColumn("d", col("d").cast("long") + lit(1L))
-        .join(counts, Seq("cluster"), "left")
-        .select(col("cluster"),
-          coalesce(col("n_members"), lit(0L)).as("n_members"),
-          col("d"), col("val"))
-        .orderBy("cluster", "d")
-    }),
-
-    // IVF-PQ: the production ANN stack — inverted-file cells gate
-    // candidacy (nprobe of nCells), ADC ranks the survivors from the
-    // q166 codes; the q166-vs-q167 recall gap prices the visit bound.
-    "q167_ivfpq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      Ann.recallReport(
-        Quantize.ivfPqTopK(emb, "vec_id", "embedding", probes, PqM,
-          emb.filter(col("vec_id") < PqCent),
-          emb.filter(col("vec_id") < IvfCells), IvfNprobe, TopK),
-        Quantize.l2TopKExact(emb, "vec_id", "embedding", probes, TopK))
-        .orderBy("probe_id")
-    }),
-
-    // PQ with TRAINED codebooks: per-subspace deterministic k-means
-    // (q168's trainer, m times) replaces q166's first-K pin; same ADC
-    // search, same exact twin — the q166-vs-q171 recall delta is what
-    // training the codebooks buys. (On the isotropic fixture that
-    // delta is ~0 — random vectors have no density for Lloyd to find;
-    // the guaranteed win is the objective itself, and QuantizeSpec
-    // pins trained-cost ≤ init-cost. Clustered real embeddings are
-    // where the recall delta appears.)
-    "q171_pq_trained_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val books = Quantize.pqTrain(emb, "vec_id", "embedding", PqM,
-        emb.filter(col("vec_id") < PqCent), KmeansIters)
-      Ann.recallReport(
-        Quantize.pqAdcTopKFrom(emb, "vec_id", "embedding", probes,
-          PqM, 64 / PqM, books, TopK),
-        Quantize.l2TopKExact(emb, "vec_id", "embedding", probes, TopK))
-        .orderBy("probe_id")
-    }),
-
-    // The IVF tuning decision table: q167's recall at every nprobe in
-    // the sweep, one row per (nprobe, probe) — how much corpus must be
-    // visited for how much recall; the last row equals plain ADC by
-    // the reduction law. A commissioning query: production would share
-    // the codes/cells frames across the sweep. (And the curve is NOT
-    // guaranteed monotone — at 2-byte codes the ADC misranks freely,
-    // and the cell gate filters its false positives too: on the
-    // fixture, nprobe=1 beats nprobe=8. Exactly the non-obvious fact
-    // a commissioning table exists to surface.)
-    "q174_ivf_nprobe_curve" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val cen = emb.filter(col("vec_id") < PqCent)
-      val coarse = emb.filter(col("vec_id") < IvfCells)
-      // the exact reference is read once per sweep point — barrier it,
-      // and run the sweep through the shared-frame form (cells, codes,
-      // distance table derived ONCE — the sharing this query's comment
-      // always named as the production posture; per-point results are
-      // bit-identical to the one-shot ivfPqTopK)
-      val exact = graft.ops.Barrier.cut(
-        Quantize.l2TopKExact(emb, "vec_id", "embedding", probes, TopK))
-      Quantize.ivfPqTopKSweep(emb, "vec_id", "embedding", probes, PqM,
-          cen, coarse, NprobeSweep, TopK)
-        .map { case (np, topk) =>
-          Ann.recallReport(topk, exact).withColumn("nprobe", lit(np.toLong))
-        }.reduce(_.unionByName(_))
-        .select(col("nprobe"), col("probe_id"), col("n_exact"),
-          col("n_hit"), col("recall"))
-        .orderBy("nprobe", "probe_id")
-    }),
-
-    // Malformed-record quarantine on JSONL ingest: a clean export plus
-    // a planted file of torn lines (one GOOD line among them proving
-    // location doesn't matter), read under the PERMISSIVE contract —
-    // per-source counts with an id checksum, corrupt lines as their
-    // own auditable bucket instead of a silent drop or a dead job.
-    "q165_jsonl_quarantine" -> ((s, dir) => {
-      val path = q165JsonlPath(dir)
-      Sources.writeJsonl(t(s, dir, "documents")
-        .filter(col("doc_id") < 50)
-        .select("doc_id", "text", "lang", "source"), path)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, "zz_corrupt.json"),
-        "{\"doc_id\": 9001, \"text\": \"ok line\", " +
-          "\"lang\": \"en\", \"source\": \"web\"}\n" +
-          "{not json at all\n" +
-          "]]]{{\n" +
-          "{\"doc_id\": \n")
-      Sources.jsonlQuarantine(s, path, Sources.documentsJsonlSchema)
-        .withColumn("bucket",
-          when(col("_corrupt_record").isNotNull, lit("__corrupt__"))
-            .otherwise(col("source")))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_lines"),
-          coalesce(sum("doc_id"), lit(0L)).as("id_sum"))
-        .orderBy("bucket")
-    }),
-
-    // Compaction plan: a deliberately fragmented sink (32 small files)
-    // audited, then cut into ~4 contiguous byte-range groups of ≈¼ the
-    // total mass — the metadata-only OPTIMIZE plan whose groups are
-    // rewrite tasks. The 1-row total probe is a bounded driver read.
-    "q172_compaction_plan" -> ((s, dir) => {
-      val path = q172LayoutPath(dir)
-      Sources.writeParquet(t(s, dir, "lineitem").repartition(32), path)
-      val audit = Sources.parquetLayoutAudit(s, path)
-      val total = audit.agg(sum(col("compressed_bytes"))).head.getLong(0)
-      Sources.compactionPlan(audit,
-          math.max(1L, total / CompactTargetFrac))
-        .orderBy("file_name")
-    }),
-
-    // Z-order layout + stats audit: lineitem written along the Morton
-    // curve of (l_orderkey, l_partkey), then the per-file min/max
-    // envelopes of BOTH dimensions read back from the same footer
-    // stats a scan planner prunes with — the multi-dimension
-    // data-skipping lever, quantified. (SourcesSpec proves the curve
-    // actually tiles: a mid-range band on EITHER dimension overlaps
-    // strictly fewer files than a one-dimension sort gives the other.)
-    "q164_zorder_stats" -> ((s, dir) => {
-      val path = q164LayoutPath(dir)
-      Sources.writeZOrdered(t(s, dir, "lineitem"), path,
-        "l_orderkey", "l_partkey", ZorderBits, ZorderFiles)
-      Sources.parquetStatsAudit(s, path, Seq("l_orderkey", "l_partkey"))
-        .orderBy("file_name", "col_name")
-    }),
-
-    // Decontamination threshold sensitivity: per observed worst-overlap
-    // value, how many training docs a minShared bar set there would
-    // flag — every candidate threshold priced in one pass (q145's
-    // pattern applied to the q61 bar).
-    "q157_contamination_sens" -> ((s, dir) => {
-      val sh = shingled(s, dir)
-      Dedup.contaminationSensitivity(sh,
-          sh.filter(col("doc_id") < EvalSetDocs), "doc_id")
-        .orderBy("max_shared")
-    }),
-
-    // ANN index-quality audit: per-probe recall of the SRP top-k (q28)
-    // against the exact top-k (q16) — the continuous production check
-    // that tunes the plane/table count; the scalar average hides the
-    // sparse-bucket tail this report surfaces.
-    "q109_ann_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      Ann.recallReport(
-        Ann.annTopK(emb, probes, "vec_id", "embedding", SrpPlanes, TopK),
-        Similarity.cosineTopK(emb, probes, TopK))
-        .orderBy("probe_id")
-    }),
-
-    // Per-source lexical-diversity data-card rollup: token/type/hapax
-    // counts, TTR, hapax share — template-heavy and noisy sources
-    // surface even when per-doc quality averages look fine.
-    "q110_lexical_diversity" -> ((s, dir) => {
-      Text.lexicalDiversity(t(s, dir, "documents"), "text", "source")
-        .orderBy("source")
-    }),
-
-    // Eval-integrity audit: per-eval-doc fraction of its distinct
-    // shingles found ANYWHERE in the (disjoint) training corpus —
-    // catches leakage spread across many training docs, which the
-    // pairwise q61 report structurally misses.
-    "q108_contamination_coverage" -> ((s, dir) => {
-      val sh = shingled(s, dir)
-      Dedup.contaminationCoverage(
-        sh.filter(col("doc_id") >= EvalSetDocs),
-        sh.filter(col("doc_id") < EvalSetDocs), "doc_id")
-        .orderBy("eval_id")
-    }),
-
-    // Per-type value distribution profile (exact quantiles = order
-    // statistics, engine-stable; no float-sum drift).
-    "q49_value_quantiles" -> ((s, dir) => {
-      Events.quantileProfile(Sources.eventsNs(s, dir), Seq(0.25, 0.5, 0.95))
-        .orderBy("event_type")
-    }),
-
-    // M7: run table with dense iteration index in start order.
-    "q31_run_table" -> ((s, dir) => {
-      Events.runTable(Sources.eventsNs(s, dir)).orderBy("iteration")
-    }),
-
-    // M6: best-run selection — explicit orderBy().limit(1) (SURVEY N3).
-    "q32_best_run" -> ((s, dir) => {
-      Similarity.bestRow(Events.runTable(Sources.eventsNs(s, dir)), "objective")
-        .select(col("job_name"), col("objective"))
-    }),
-
-    // A12: deterministic validation-probe sample from the frequent head.
-    "q33_valid_sample" -> ((s, dir) => {
-      vocab(s, dir)
-        .filter(col("idx") <= ValidWindow)
-        .orderBy(Portable.unif(col("product_id"), lit("valid")), col("idx"))
-        .limit(ValidSize)
-        .withColumn("idx", col("idx").cast("long"))
-        .select(col("idx"), col("product_id"))
-        .orderBy("idx")
-    }),
-
-    // A11: assembled (contexts, labels) training tensors.
-    "q34_tensors" -> ((s, dir) => {
-      Pairs.assemble(Pairs.negatives(pairs(s, dir), NumNs, VocabK), NumNs)
-        .select(col("order_id"),
-          col("pos_t").cast("long").as("pos_t"),
-          col("pos_c").cast("long").as("pos_c"),
-          col("target").cast("long").as("target"),
-          array_join(col("contexts"), ",").as("contexts"),
-          array_join(col("labels"), ",").as("labels"))
-        .orderBy("order_id", "pos_t", "pos_c")
-    }),
-
-    // Multimodal: binary-payload metadata extraction (size, hash, magic).
-    "q35_mm_meta" -> ((s, dir) => {
-      Multimodal.metaTable(
-        Multimodal.payloads(t(s, dir, "documents"), "doc_id", "text"))
-        .orderBy("doc_id")
-    }),
-
-    // Multimodal: per-partition stub feature extraction (mapPartitions).
-    // The stub histogram is deterministic, so even this non-relational
-    // path gets a DuckDB oracle: features exploded to (bin, feat) rows —
-    // doubles compare via the shared round-to-9 convention, no
-    // engine-specific array-of-double string formatting.
-    "q36_mm_features" -> ((s, dir) => {
-      Multimodal.extractFeatures(
-        Multimodal.payloads(t(s, dir, "documents"), "doc_id", "text"))
-        .toDF()
-        .select(col("doc_id"), col("n_bytes"),
-          posexplode(col("features")).as(Seq("bin", "feat")))
-        .withColumn("bin", col("bin").cast("long"))
-        .orderBy("doc_id", "bin")
-    }),
-
-    // JSON column parsing: events.props is a JSON string — typed extract
-    // then aggregate (the from_json path a props/metadata column takes).
-    "q38_props_json" -> ((s, dir) => {
-      Sources.eventsNs(s, dir)
-        .select(col("event_type"),
-          from_json(col("props"), lit("k INT")).getField("k").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("k")).cast("long").as("sum_k"),
-          min(col("k")).cast("long").as("min_k"),
-          max(col("k")).cast("long").as("max_k"))
-        .orderBy("event_type")
-    }),
-
-    // Analytic ranks: rank/dense_rank over per-user engagement within
-    // each event_type (value-determined, tie-stable).
-    "q39_user_rank" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val peruser = Sources.eventsNs(s, dir)
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("event_type")).orderBy(desc("n"))
-      peruser
-        .withColumn("rnk", rank().over(w).cast("long"))
-        .withColumn("drnk", dense_rank().over(w).cast("long"))
-        .filter(col("rnk") <= 10)
-        .select(col("event_type"), col("user_id"), col("n"), col("rnk"),
-          col("drnk"))
-        .orderBy("event_type", "rnk", "user_id")
-    }),
-
-    // Window frames + lag/lead: per-user previous/next event gap and a
-    // 3-row moving sum, in (ts, event_id) order.
-    "q40_moving_window" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Sources.eventsNs(s, dir)
-        .withColumn("ms", expr("ts div 1000000"))
-        .withColumn("prev_gap_ms",
-          (col("ms") - lag(col("ms"), 1).over(w)).cast("long"))
-        .withColumn("next_gap_ms",
-          (lead(col("ms"), 1).over(w) - col("ms")).cast("long"))
-        .withColumn("mov_sum3",
-          Portable.intRatioSigned9(
-            sum(floor(col("value") * lit(100) + lit(0.5)).cast("long"))
-              .over(w.rowsBetween(-2, 0)), lit(100L)))
-        .select(col("user_id"), col("event_id"), col("ms"),
-          col("prev_gap_ms"), col("next_gap_ms"), col("mov_sum3"))
-        .orderBy("user_id", "ms", "event_id")
-    }),
-
-    // S1 literal CSV path: write a fixture slice as header CSV once (the
-    // reference's order_products__train.csv shape), read it back through
-    // Sources.csv with the PINNED orderProductsSchema (no inference —
-    // the exact production read), aggregate. The single-partition write
-    // is fixture plumbing, not the scale path; the READ is the operator
-    // under test and globs directories like any 100 TB table.
-    "q41_csv_roundtrip" -> ((s, dir) => {
-      val path = q41CsvPath(dir)
-      // S3/S6/S7 carrier: the CSV leg goes through Sources.writeCsv —
-      // the same sink the embeddings/tuning-table exports use.
-      Sources.writeCsv(
-        t(s, dir, "lineitem")
-          // deterministic ~1/16 slice: the fixture write is plumbing,
-          // not the operator under test — keep it cheap at any SF
-          .filter(col("l_orderkey") % 16 === 0)
-          .select(col("l_orderkey").as("order_id"),
-            col("l_partkey").as("product_id"),
-            col("l_linenumber").as("add_to_cart_order"),
-            (col("l_linenumber") % 2).as("reordered"))
-          .repartition(1),
-        path)
-      Sources.csv(s, path, Sources.orderProductsSchema)
-        .groupBy(col("reordered"))
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("product_id")).as("n_products"),
-          sum(col("add_to_cart_order")).as("sum_pos"))
-        .orderBy("reordered")
-    }),
-
-    // M1-M4 + S8 verified end-to-end (the round-7 red cell): train
-    // Word2Vec single-partition on deterministically ordered baskets
-    // (first 10k by order_id — a stable vocab at bounded, jitter-free
-    // cost at any SF; the library path has no cap), PERSIST the model
-    // and reload it (S8 — the reference's train/post-process process
-    // boundary), STORE the reloaded model's embedding table (M4) as
-    // parquet, then compute the model_train.py:14-49 report —
-    // self-excluded cosine top-5 with the J3 name joins — FROM the
-    // stored table. The oracle reads the SAME Spark-written parquet
-    // (q144 interchange pattern), so the compare hash-verifies
-    // save + load + extraction + store + scan + report exactly,
-    // independent of SGD stochasticity; training determinism itself is
-    // the seeded single-partition law in Prod2VecSpec.
-    "q37_w2v_synonyms" -> ((s, dir) => {
-      val path = q37EmbPath(dir)
-      val li = t(s, dir, "lineitem")
-      val basketDf = Prod2Vec.baskets(li).orderBy("order_id").limit(10000)
-      val model = Prod2Vec.train(basketDf,
-        Prod2Vec.Params(numPartitions = 1))
-      Prod2Vec.save(model, q37ModelPath(dir))
-      val loaded = Prod2Vec.load(q37ModelPath(dir))
-      Prod2Vec.embeddings(loaded).repartition(1)
-        .write.mode("overwrite").parquet(path)
-      val emb = s.read.parquet(path)
-      val probes = emb.orderBy("vec_id").limit(3)
-      val p = t(s, dir, "part")
-        .select(col("p_partkey").cast("long"), col("p_name"))
-      Similarity.cosineTopK(emb, probes, 5)
-        .join(broadcast(p.toDF("probe_id", "probe_name")), Seq("probe_id"))
-        .join(broadcast(p.toDF("vec_id", "neighbor_name")), Seq("vec_id"))
-        .select(col("probe_id"), col("probe_name"), col("vec_id"),
-          col("neighbor_name"), col("cos"),
-          col("rnk").cast("long").as("rnk"))
-        .orderBy("probe_id", "rnk")
-    }),
-
-    // BM25 ranked retrieval: the low-id documents query the rest of
-    // the corpus — exact rational tf-norm, 9dp idf, per-term
-    // integerized contributions summed in LONG (lexical retrieval the
-    // hybrid/hard-negative/decontamination stacks build on).
-    "q175_bm25_topk" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Text.bm25TopK(
-          docs.filter(col("doc_id") >= RetrievalQueryDocs)
-            .select(col("doc_id"), col("text")),
-          docs.filter(col("doc_id") < RetrievalQueryDocs)
-            .select(col("doc_id").as("query_id"), col("text")),
-          "text", TopK, Bm25MaxDfShare)
-        .orderBy("query_id", "rnk")
-    }),
-
-    // Hybrid retrieval: the q175 lexical list fused with the exact
-    // embedding-cosine list (same query/corpus split on the embeddings
-    // table) by reciprocal-rank fusion — ranks only, exact integer
-    // weights 1e9 div (60 + rank).
-    "q176_rrf_hybrid" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val lex = Text.bm25TopK(
-          docs.filter(col("doc_id") >= RetrievalQueryDocs)
-            .select(col("doc_id"), col("text")),
-          docs.filter(col("doc_id") < RetrievalQueryDocs)
-            .select(col("doc_id").as("query_id"), col("text")),
-          "text", TopK, Bm25MaxDfShare)
-        .select(col("query_id"), col("doc_id"), col("rnk"))
-      val emb = t(s, dir, "embeddings")
-      val sem = Similarity.cosineTopK(
-          emb.filter(col("vec_id") >= RetrievalQueryDocs),
-          emb.filter(col("vec_id") < RetrievalQueryDocs), TopK)
-        .select(col("probe_id").as("query_id"),
-          col("vec_id").as("doc_id"), col("rnk"))
-      RecEval.rrfFuse(Seq(lex, sem), RrfC, TopK)
-        .orderBy("query_id", "rnk")
-    }),
-
-    // Per-node triangle count + local clustering coefficient over the
-    // part-capped co-purchase graph — degree-ordered orientation, two
-    // equi-joins, exact integer counts (clique-vs-hub separation the
-    // pairwise dedup scores can't see).
-    "q177_triangles" -> ((s, dir) => {
-      val lp = t(s, dir, "lineitem")
-        .filter(col("l_partkey") < TriPartMax)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = lp.toDF("o", "pa").join(lp.toDF("o", "pb"), Seq("o"))
-        .filter(col("pa") < col("pb"))
-        .select(col("pa"), col("pb"))
-      Graph.triangles(edges, "pa", "pb").orderBy("id")
-    }),
-
-    // Type-2 SCD build from the event log: per user the event_type
-    // change history as versioned [from, to) rows — the versioned
-    // dimension a reproducible pipeline as-of joins against.
-    "q178_scd2" -> ((s, dir) => {
-      Events.scd2(Sources.eventsNs(s, dir), "user_id", "event_type")
-        .orderBy("user_id", "version")
-    }),
-
-    // Incremental SCD2 maintenance: the dimension built from the first
-    // half-month of events, then MERGED with the rest — the oracle is
-    // the full recompute (q178's own SQL over all events), so the hash
-    // match IS the merge-equals-rebuild law at fixture scale.
-    "q183_scd2_merge" -> ((s, dir) => {
-      val ev = Sources.eventsNs(s, dir)
-      val cutNs = Scd2CutMs * 1000000L
-      val cur = Events.scd2(ev.filter(col("ts") < cutNs),
-        "user_id", "event_type")
-      Events.scd2Merge(cur, ev.filter(col("ts") >= cutNs),
-          "user_id", "event_type")
-        .orderBy("user_id", "version")
-    }),
-
-    // Range-sorted layout + disjointness audit: lineitem written
-    // range-partitioned and sorted on l_orderkey, then each file's
-    // footer [min, max] envelope checked against its predecessor —
-    // the single-dimension data-skipping twin of q164's Z-order.
-    "q179_range_layout" -> ((s, dir) => {
-      val path = q179LayoutPath(dir)
-      Sources.writeRangeSorted(t(s, dir, "lineitem"), path,
-        "l_orderkey", RangeFiles)
-      Sources.rangeLayoutAudit(s, path, "l_orderkey")
-        .orderBy("min_val", "file_name")
-    }),
-
-    // Exact embedding covariance (upper triangle, long form): the
-    // Gramian one-pass over integerized coordinates — whitening/PCA
-    // input and the anisotropy audit, bit-reproducible by exact LONG
-    // accumulation.
-    "q180_embed_cov" -> ((s, dir) => {
-      Quality.embeddingCovariance(t(s, dir, "embeddings"), "embedding",
-          EmbDims)
-        .orderBy("i", "j")
-    }),
-
-    // PMI collocation table: adjacent-pair mutual information over the
-    // corpus (count-floored), with the normalized [-1,1] variant —
-    // the phrase-mining table a phrase-aware tokenizer consumes.
-    "q181_pmi_collocations" -> ((s, dir) => {
-      Text.pmiCollocations(t(s, dir, "documents"), "text", PmiMinCount)
-        .orderBy("w1", "w2")
-    }),
-
-    // Cross-source quantile normalization of the quality score: each
-    // doc's score mapped to the global score at its within-source
-    // quantile — exact tie-aware integer index arithmetic over
-    // distinct-score CDFs (the calibration before one threshold can
-    // gate a mixed corpus).
-    "q184_quantile_norm" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("doc_id"), col("source"), col("quality_score"))
-      Sampling.quantileNormalize(qs, "doc_id", "source", "quality_score")
-        .orderBy("doc_id")
-    }),
-
-    // Directional association rules over order baskets: support /
-    // confidence / lift from exact per-transaction-distinct counts —
-    // the retail twin of q181's PMI (lift = e^PMI), floored at 5
-    // co-present orders.
-    "q188_assoc_rules" -> ((s, dir) => {
-      Pairs.associationRules(t(s, dir, "lineitem")
-          .filter(col("l_partkey") < TriPartMax),
-          "l_orderkey", "l_partkey", AssocMinOrders)
-        .orderBy("antecedent", "consequent")
-    }),
-
-    // First-order Markov next-event baseline, evaluated on a held-out
-    // user fold: per previous state the argmax-transition prediction
-    // and its hit rate — the number a sequence model must beat.
-    "q189_markov_eval" -> ((s, dir) => {
-      Events.nextEventEval(Sources.eventsNs(s, dir), MarkovFolds,
-          MarkovSalt)
-        .orderBy("prev")
-    }),
-
-    // Per-dimension embedding mean drift between the two id-split
-    // corpora — exact LONG sums, one double chain per mean, the
-    // first-order re-embedding monitor.
-    "q190_embed_drift" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Quality.embeddingDrift(emb.filter(col("vec_id") < DriftSplitId),
-          emb.filter(col("vec_id") >= DriftSplitId), "embedding", EmbDims)
-        .orderBy("d")
-    }),
-
-    // Data-skipping estimate on the range-sorted layout: how many
-    // files a middle-fifth band predicate actually touches — the
-    // number the layout writers exist to move, from the same footer
-    // stats the planner prunes with.
-    "q193_skip_estimate" -> ((s, dir) => {
-      val path = q193LayoutPath(dir)
-      Sources.writeRangeSorted(t(s, dir, "lineitem"), path,
-        "l_orderkey", RangeFiles)
-      Sources.skipEstimate(
-        Sources.rangeLayoutAudit(s, path, "l_orderkey"),
-        SkipBandLo, SkipBandHi, SkipBandDen)
-    }),
-
-    // Join-size pre-flight: the exact self-join cardinality on
-    // l_orderkey (= the pair-expansion cost) next to the CMS
-    // inner-product estimate — est >= exact by construction, the
-    // ratio prices the sketch width.
-    "q194_join_size" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      // both sides of the self-join estimate read the SAME sketch —
-      // materialize the d×w table once instead of running the
-      // corpus-sized explode+count build per side (guide §1.2)
-      val cms = graft.ops.Barrier.cut(
-        Sketch.cmsTableKeyed(li, "l_orderkey", CmsJoinDepth,
-          CmsJoinWidth, CmsJoinSalt))
-      Sketch.joinSizeExact(li, li, "l_orderkey")
-        .crossJoin(Sketch.joinSizeEstimate(cms, cms))
-        .select(col("n_left"), col("n_right"), col("join_size"),
-          col("est_size"),
-          (col("est_size") - col("join_size")).as("overestimate"),
-          Portable.intRatio9(col("est_size"), col("join_size"))
-            .as("ratio"))
-    }),
-
-    // k-anonymity / l-diversity release gate on the customer table:
-    // QI = (nation, balance-thousand bucket), sensitive = segment —
-    // exact group sizes and distinct-sensitive minima in one pass.
-    "q204_k_anonymity" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .withColumn("bal_bucket",
-          floor(col("c_acctbal") / lit(1000.0)).cast("long"))
-      Quality.kAnonymity(c, Seq("c_nationkey", "bal_bucket"),
-        "c_mktsegment", KAnonK)
-    }),
-
-    // Exponentially decayed event mass per type as of just past the
-    // fixture's horizon — per-row decay integerized before the sum,
-    // so the trending table is bit-portable.
-    "q205_decayed_counts" -> ((s, dir) => {
-      Events.decayedCounts(Sources.eventsNs(s, dir), DecayHalfLifeMs,
-          DecayAsOfMs)
-        .orderBy("event_type")
-    }),
-
-    // Catalog fuzzy matching: every pair of distinct part names within
-    // edit distance 2, found via loss-free PassJoin segment filtering
-    // (never all-pairs); the oracle is the INDEPENDENT brute-force
-    // cross join, so a hash match certifies completeness on real data.
-    "q206_fuzzy_names" -> ((s, dir) => {
-      Er.editJoin(t(s, dir, "part"), "p_name", ErMaxDist)
-        .orderBy("name_a", "name_b")
-    }),
-
-    // Entity resolution end-to-end: the q206 match graph closed
-    // transitively into entity clusters, canonicalized by the
-    // most-frequent-variant survivorship rule — the name→canonical
-    // rewrite table a catalog normalization pass joins on.
-    "q209_entity_resolution" -> ((s, dir) => {
-      Er.resolveEntities(t(s, dir, "part"), "p_name", ErMaxDist)
-        .orderBy("name")
-    }),
-
-    // Rank-Biased Overlap between the full-dim exact top-10 and the
-    // 16-dim matryoshka top-10 per probe — q150 asks "did the
-    // neighbors survive truncation", this asks "in the same ORDER":
-    // rbo_norm = 1 means the truncated index ranks identically.
-    "q208_rank_rbo" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      RecEval.rboAtDepth(
-        Similarity.cosineTopK(emb, probes, TopK),
-        Similarity.cosineTopK(
-          Similarity.truncateEmbeddings(
-            emb.select(col("vec_id"), col("embedding")), TruncDims),
-          Similarity.truncateEmbeddings(
-            probes.select(col("vec_id"), col("embedding")), TruncDims),
-          TopK),
-        "probe_id", "vec_id", "rnk", TopK, RboP)
-        .orderBy("probe_id")
-    }),
-
-    // Winnowing (MOSS) fingerprints per document: window-min selected
-    // k-gram hashes — the position-robust local fingerprint set, at
-    // ~2/(w+1) the density of the full q55 shingle index.
-    "q210_winnow_fps" -> ((s, dir) => {
-      Text.winnowFingerprints(t(s, dir, "documents"), "doc_id", "text",
-          ShingleN, WinnowW)
-        .orderBy("doc_id", "fp")
-    }),
-
-    // Shared-fingerprint overlap pairs over the winnowed index —
-    // quote/plagiarism detection at fingerprint (not full-shingle)
-    // cost; maxDf prunes boilerplate posting lists, the same
-    // restricted-universe contract as q55.
-    "q211_winnow_overlap" -> ((s, dir) => {
-      Text.winnowOverlap(
-        Text.winnowFingerprints(t(s, dir, "documents"), "doc_id",
-          "text", ShingleN, WinnowW),
-        "doc_id", WinnowMaxDf, WinnowMinShared)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Isotonic (PAV) calibration of the quality score against the
-    // lang=en label — the q199 ranker turned into a monotone
-    // probability table, via the minimax closed form (no driver loop).
-    "q207_isotonic_calibration" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("lang"))
-        .select(col("lang"), col("quality_score"))
-      Quality.isotonicCalibration(qs, "quality_score",
-          col("lang") === "en", IsoBins)
-        .orderBy("bucket")
-    }),
-
-    // Threshold sweep: every distinct quality score as an operating
-    // point with exact confusion counts; the F1-argmax row flagged
-    // (tie → highest threshold) — how the score becomes a gate.
-    "q218_threshold_sweep" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("lang"))
-        .select(col("lang"), col("quality_score"))
-      Quality.thresholdSweep(qs, "quality_score", col("lang") === "en")
-        .orderBy("threshold")
-    }),
-
-    // Cumulative gains / lift at decile cuts from exact order
-    // statistics — "gate the top k/10 of the corpus by score, how
-    // much of the target class is captured".
-    "q219_gains_table" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("lang"))
-        .select(col("lang"), col("quality_score"))
-      Quality.gainsTable(qs, "quality_score", col("lang") === "en", 10)
-        .orderBy("tile")
-    }),
-
-    // Per-source ROC-AUC leaderboard: within-group tie-adjusted AUC —
-    // which slices the quality score actually ranks well on (q199 is
-    // the global number; this is its fairness/robustness breakdown).
-    "q220_auc_by_source" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source", "lang"))
-        .select(col("source"), col("lang"), col("quality_score"))
-      Quality.aucByGroup(qs, "source", col("lang") === "en",
-          "quality_score")
-        .orderBy("source")
-    }),
-
-    // Kaplan–Meier retention: censoring-aware survival over user
-    // PURCHASE lifetimes at hour granularity (last purchase within
-    // the final 72 hours = right-censored, still alive), with
-    // Greenwood standard errors — the churn curve a naive "fraction
-    // active after t hours" biases down by death-marking users who
-    // simply ran out of observation. Hour periods, not days: this
-    // fixture's users are all daily-active, so day-granularity
-    // degenerates to a 3-row curve.
-    "q221_survival_curve" -> ((s, dir) => {
-      Events.survivalCurve(
-        Sources.eventsNs(s, dir)
-          .filter(col("event_type") === "purchase"),
-        3600000000000L, 72)
-    }),
-
-    // Rolling active-user curves: DAU / trailing-7-day WAU /
-    // stickiness plus the new/cumulative-user growth ledger — the
-    // engagement dashboard over the events stream.
-    "q217_active_users" -> ((s, dir) => {
-      Events.activeUsers(Sources.eventsNs(s, dir), 7)
-        .orderBy("day")
-    }),
-
-    // WordPiece fertility: the q116 tokenizer-evaluation rollup per
-    // (source, lang) slice, with the mined-vocab greedy segmentation
-    // instead of learned BPE merges — the head-to-head that prices
-    // the one-pass vocab against the learning loop.
-    "q216_wordpiece_fertility" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val wcnt = Bpe.wordCounts(docs, "text")
-        .filter(length(col("word")) <= WpMaxWordLen)
-      val vocab = Bpe.wordpieceVocab(wcnt, WpMaxPiece, WpMinCount)
-      val seg = Bpe.wordpieceSegment(wcnt, vocab, WpMaxPiece)
-        .select(col("word"), col("pieces").as("symbols"))
-      Bpe.fertility(docs, "text", seg, Seq("source", "lang"))
-        .orderBy("source", "lang")
-    }),
-
-    // CUPED variance-reduced A/B readout: q192's arms and conversion
-    // metric, with each user's pre-period purchase count as the
-    // covariate — theta, adjusted means, the variance reduction won,
-    // and the z on the adjusted difference.
-    "q215_cuped_ab" -> ((s, dir) => {
-      Events.cuped(Sources.eventsNs(s, dir), "purchase", AbSalt,
-          CupedSplitNs)
-        .orderBy("n_a")
-    }),
-
-    // WordPiece tokenizer end-to-end on the corpus vocabulary:
-    // frequency-mined position-aware pieces, greedy longest-match
-    // segmentation (no learning loop — the one-pass alternative to
-    // q81's BPE), reported as the corpus subword-frequency table.
-    "q214_wordpiece_tokens" -> ((s, dir) => {
-      val wcnt = Bpe.wordCounts(t(s, dir, "documents"), "text")
-        .filter(length(col("word")) <= WpMaxWordLen)
-      val vocab = Bpe.wordpieceVocab(wcnt, WpMaxPiece, WpMinCount)
-      Bpe.wordpieceSegment(wcnt, vocab, WpMaxPiece)
-        .select(explode(col("pieces")).as("token"), col("count"))
-        .groupBy(col("token")).agg(sum(col("count")).as("n"))
-        .orderBy(col("n").desc, col("token"))
-        .limit(WpTopOut)
-    }),
-
-    // Reliability diagram of the quality score vs the lang=en label —
-    // the per-bucket calibration table (mean forecast vs observed
-    // rate vs bucket Brier) q207's PAV fit repairs.
-    "q212_reliability_diagram" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("lang"))
-        .select(col("lang"), col("quality_score"))
-      Quality.reliabilityDiagram(qs, "quality_score",
-          col("lang") === "en", IsoBins)
-        .orderBy("bin")
-    }),
-
-    // Murphy decomposition of the same score's Brier: reliability /
-    // resolution / uncertainty in one summary row — is the score
-    // badly calibrated (fixable by q207) or just undiscriminating
-    // (not fixable by any monotone map)?
-    "q213_brier_decomposition" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("lang"))
-        .select(col("lang"), col("quality_score"))
-      Quality.brierDecomposition(qs, "quality_score",
-          col("lang") === "en", IsoBins)
-        .orderBy("n")
-    }),
-
-    // The >2.2e5-rows-per-bucket REL fallback (divide-before-square
-    // pinned double chain, Quality.scala's operand-bound contract)
-    // driven through the driver gate where it actually FIRES: a
-    // synthetic 2M-row calibration frame — score = keyed-hash ‰,
-    // label = a second keyed draw below the first, both recomputable
-    // in either engine — puts ~400k rows in each of 5 buckets, past
-    // the DECIMAL(38,0) bound q213's small real buckets never cross.
-    // A hash match here proves the fallback chain's bit-parity in
-    // production, not just in the spec fixture.
-    "q276_brier_at_scale" -> ((s, _) => {
-      val k1 = (Portable.seededHash(col("id"), lit("bscore")) % 1000L)
-        .as("__k1")
-      val k2 = (Portable.seededHash(col("id"), lit("blabel")) % 1000L)
-        .as("__k2")
-      val cal = s.range(BrierScaleN).select(k1, k2)
-        .select((col("__k1").cast("double") / lit(1000.0)).as("score"),
-          (col("__k2") < col("__k1")).as("__y"))
-      Quality.brierDecomposition(cal, "score", col("__y"), BrierScaleBins)
-        .orderBy("n")
-    }),
-
-    // Leave-one-source-out ablation of the mean quality score —
-    // algebra over exact integer sums, no per-source re-scan; the
-    // ablation leaderboard ("removing which source raises the mean").
-    "q201_loo_ablation" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("source"), col("quality_score"))
-      Quality.leaveOneOut(qs, "source", "quality_score")
-        .orderBy(desc("delta"), col("source"))
-    }),
-
-    // Exact 10%-trimmed mean per source — interval arithmetic over
-    // the per-source distinct-value CDF, no data sort.
-    "q202_trimmed_mean" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("source"), col("quality_score"))
-      Quality.trimmedMean(qs, "source", "quality_score", TrimNum, TrimDen)
-        .orderBy("source")
-    }),
-
-    // Median / 3-MAD outlier report per source — exact lower medians
-    // over integerized scores, both for the center and the deviation.
-    "q203_mad_outliers" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("source"), col("quality_score"))
-      Quality.madOutliers(qs, "source", "quality_score", MadK)
-        .orderBy("source")
-    }),
-
-    // ROC-AUC of the quality score as a ranker for lang = en — exact
-    // through the tie-adjusted U (no curve discretization).
-    "q199_auc" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("lang"))
-        .select(col("lang"), col("quality_score"))
-      Quality.auc(qs, col("lang") === "en", "quality_score")
-    }),
-
-    // Population Stability Index of the quality score: the corpus
-    // minus src0 as the baseline deciles, src0 as the comparison —
-    // the model-monitoring standard next to KS/MWU.
-    "q200_psi" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("source"), col("quality_score"))
-      Quality.psi(qs.filter(col("source") =!= KsSourceA),
-        qs.filter(col("source") === KsSourceA), "quality_score", PsiBins)
-    }),
-
-    // Split-conformal (Mondrian, per-source) gate thresholds at 90%
-    // coverage: the k = ceil((n+1)(1-alpha)) order statistic of each
-    // source's calibration scores — a quality cut with a
-    // distribution-free coverage contract.
-    "q196_conformal_gate" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("source"), col("quality_score"))
-      Sampling.conformalGate(qs, "source", "quality_score",
-          ConformalAlphaNum, ConformalAlphaDen)
-        .orderBy("source")
-    }),
-
-    // Tie-corrected Mann-Whitney U on the q191 split — the LOCATION
-    // drift test next to KS's shape test, exact 2x-rank integers.
-    "q197_mann_whitney" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("source"), col("quality_score"))
-      Quality.mannWhitney(qs.filter(col("source") === KsSourceA),
-        qs.filter(col("source") =!= KsSourceA), "quality_score")
-    }),
-
-    // Chi-square independence of source x lang with Cramer's V — "is
-    // the language mix different across sources", every cell term an
-    // exact integer ratio integerized then summed in LONG.
-    "q198_chi_square" -> ((s, dir) => {
-      Quality.chiSquare(t(s, dir, "documents"), "source", "lang")
-    }),
-
-    // The q191 statistic for EVERY source against its complement in
-    // one pass — the drift leaderboard that answers "which source
-    // moved" without a per-source corpus re-scan.
-    "q195_ks_by_source" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("source"), col("quality_score"))
-      Quality.ksDriftByGroup(qs, "source", "quality_score")
-        .orderBy(desc("ks"), col("source"))
-    }),
-
-    // Exact two-sample KS statistic between src0's quality-score
-    // distribution and the rest of the corpus — integer CDF gaps over
-    // merged distinct scores, one division at the end.
-    "q191_ks_drift" -> ((s, dir) => {
-      val qs = Text.qualityScore(t(s, dir, "documents"), "text",
-          Seq("source"))
-        .select(col("source"), col("quality_score"))
-      Quality.ksDrift(qs.filter(col("source") === KsSourceA),
-        qs.filter(col("source") =!= KsSourceA), "quality_score")
-    }),
-
-    // Two-proportion z-test on hash-assigned user arms (purchase
-    // conversion) — an A/A null check on the fixture: the arms differ
-    // only by hash, so |z| should be unremarkable.
-    "q192_ab_test" -> ((s, dir) => {
-      Events.abTest(Sources.eventsNs(s, dir), "purchase", AbSalt)
-    }),
-
-    // Label-balance audit on the embedding labels: share, integerized
-    // Shannon entropy, max/min imbalance — the pre-training read on
-    // any label column.
-    "q185_class_balance" -> ((s, dir) => {
-      Quality.classBalance(t(s, dir, "embeddings"), "label")
-        .orderBy("label")
-    }),
-
-    // Per-class precision/recall/F1 of the q85 self-classifier —
-    // exact rational metrics from the confusion cells (F1 in its
-    // single-fraction 2tp/(2tp+fp+fn) form).
-    "q186_classifier_report" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val model = graft.ml.NaiveBayesText.train(docs, "text", "lang")
-      val pred = graft.ml.NaiveBayesText
-        .classify(model, docs, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      Quality.classifierReport(pred, "lang", "pred_label")
-        .orderBy("label")
-    }),
-
-    // One CUBE pass over (source, lang): every composition margin plus
-    // the grand total with doc/token mass, grouping_id-disambiguated.
-    "q187_corpus_cube" -> ((s, dir) => {
-      Quality.corpusCube(t(s, dir, "documents"), Seq("source", "lang"),
-          "text")
-        .orderBy("grouping_id", "source", "lang")
-    }),
-
-    // Greedy k-center coreset over the embeddings: 4 exact-replayable
-    // selection rounds (min-id seed, integerized-L2 argmax, min-id
-    // ties), reported with each center's coverage count and radius.
-    "q182_kcenter_coreset" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val sel = Kmeans.kCenterGreedy(emb, "vec_id", "embedding", KCenterK)
-      val cen = sel.join(emb.select(col("vec_id"), col("embedding")),
-        Seq("vec_id"))
-      val cov = Kmeans.coverage(emb, "vec_id", "embedding",
-        cen.select(col("vec_id"), col("embedding")))
-      sel.join(cov, sel("vec_id") === cov("cluster"))
-        .select(col("round"), col("vec_id"), col("n_assigned"),
-          col("radius_i"))
-        .orderBy("round")
-    })
-  )
-
-  private def coreOracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  sum(l_extendedprice) AS sum_base_price,
-        |  sum(l_extendedprice * (1.0 - l_discount)) AS sum_disc_price,
-        |  avg(l_quantity) AS avg_qty,
-        |  count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q2_vocab_topk" ->
-      s"""SELECT l_partkey AS product_id, count(*) AS cnt
-         |FROM lineitem GROUP BY l_partkey
-         |ORDER BY cnt DESC, product_id ASC LIMIT ${VocabK - 1}""".stripMargin,
-
-    "q3_vocab_index" ->
-      s"""$vocabSqlCte
-         |SELECT pid AS product_id, cnt, idx FROM vocab ORDER BY idx""".stripMargin,
-
-    "q4_unk_recode" ->
-      s"""$vocabSqlCte
-         |SELECT l.l_orderkey, l.l_linenumber, l.l_partkey AS product_id,
-         |       coalesce(v.idx, 0) AS idx
-         |FROM lineitem l LEFT JOIN vocab v ON l.l_partkey = v.pid
-         |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin,
-
-    "q5_unk_count" ->
-      s"""$vocabSqlCte
-         |SELECT count(*) AS unk_count
-         |FROM lineitem l LEFT JOIN vocab v ON l.l_partkey = v.pid
-         |WHERE v.pid IS NULL""".stripMargin,
-
-    "q6_baskets" ->
-      """SELECT l_orderkey AS order_id, count(*) AS basket_size,
-        |  array_to_string(list(l_partkey ORDER BY l_partkey), ',') AS basket
-        |FROM lineitem GROUP BY l_orderkey ORDER BY order_id""".stripMargin,
-
-    "q222_basket_lengths" ->
-      """SELECT basket_len, count(*)::BIGINT AS n_baskets FROM (
-        |  SELECT count(*)::BIGINT AS basket_len
-        |  FROM lineitem GROUP BY l_orderkey)
-        |GROUP BY basket_len ORDER BY basket_len""".stripMargin,
-
-    // q223: the q191 CDF-merge machinery plus lead(v9) step widths;
-    // per-step exact-integer terms in DECIMAL(38,0), one division.
-    "q223_wasserstein_drift" ->
-      s"""$qualityScoreSqlCtes,
-         |av AS (SELECT quality_score AS v FROM qs
-         |       WHERE source = '$KsSourceA'),
-         |bv AS (SELECT quality_score AS v FROM qs
-         |       WHERE source <> '$KsSourceA'),
-         |ca2 AS (
-         |  SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-         |    PRECEDING AND CURRENT ROW)::BIGINT AS cum
-         |  FROM (SELECT v, count(*)::BIGINT AS c FROM av GROUP BY v)
-         |),
-         |cb2 AS (
-         |  SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-         |    PRECEDING AND CURRENT ROW)::BIGINT AS cum
-         |  FROM (SELECT v, count(*)::BIGINT AS c FROM bv GROUP BY v)
-         |),
-         |na AS (SELECT count(*)::BIGINT AS n FROM av),
-         |nb AS (SELECT count(*)::BIGINT AS n FROM bv),
-         |mg AS (
-         |  SELECT v, ca2.cum AS ca, cb2.cum AS cb
-         |  FROM ca2 FULL JOIN cb2 USING (v)
-         |),
-         |f AS (
-         |  SELECT v,
-         |    coalesce(last_value(ca IGNORE NULLS) OVER w, 0)::BIGINT AS ca,
-         |    coalesce(last_value(cb IGNORE NULLS) OVER w, 0)::BIGINT AS cb
-         |  FROM mg WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED
-         |    PRECEDING AND CURRENT ROW)
-         |),
-         |g AS (
-         |  SELECT ca, cb,
-         |    lead(CAST(floor(v * 1e9 + 0.5) AS BIGINT)) OVER (ORDER BY v)
-         |      - CAST(floor(v * 1e9 + 0.5) AS BIGINT) AS dv9
-         |  FROM f
-         |),
-         |t AS (
-         |  SELECT count(*)::BIGINT AS nv,
-         |    CAST(sum(CASE WHEN dv9 IS NOT NULL THEN
-         |      CAST(abs(ca * nb.n - cb * na.n) AS DECIMAL(38,0))
-         |        * CAST(dv9 AS DECIMAL(38,0)) END) AS DECIMAL(38,0)) AS w
-         |  FROM g CROSS JOIN na CROSS JOIN nb
-         |)
-         |SELECT na.n AS n_a, nb.n AS n_b, t.nv AS n_values,
-         |  CASE WHEN na.n > 0 AND nb.n > 0 THEN
-         |    ${Portable.sqlIntRatio9("coalesce(t.w, 0)",
-             "CAST(na.n AS HUGEINT) * nb.n * 1000000000")}
-         |  END AS w1
-         |FROM t CROSS JOIN na CROSS JOIN nb""".stripMargin,
-
-    // q224: no smoothing — M > 0 wherever a term exists; per-token
-    // terms integerized through identical double chains, LONG-summed.
-    "q224_jensen_shannon" -> {
-      val pa = "(CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))"
-      val pb = "(CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))"
-      def term(p: String, q: String, c: String) =
-        s"""CASE WHEN $c > 0 THEN
-           |      CAST(floor(round($p * ln(CAST(2 AS DOUBLE) * $p
-           |        / ($p + $q)), 9) * 1e9 + 0.5) AS BIGINT)
-           |    ELSE 0 END""".stripMargin
-      s"""WITH ta AS (
-         |  SELECT w, count(*)::BIGINT AS c FROM (
-         |    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-         |    WHERE doc_id % 2 = 0) _ GROUP BY w
-         |),
-         |tb AS (
-         |  SELECT w, count(*)::BIGINT AS c FROM (
-         |    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-         |    WHERE doc_id % 2 = 1) _ GROUP BY w
-         |),
-         |j AS (
-         |  SELECT coalesce(ta.c, 0)::BIGINT AS ca,
-         |         coalesce(tb.c, 0)::BIGINT AS cb
-         |  FROM ta FULL JOIN tb ON ta.w = tb.w
-         |),
-         |tot AS (SELECT sum(ca)::BIGINT AS na, sum(cb)::BIGINT AS nb,
-         |        count(*)::BIGINT AS v FROM j),
-         |terms AS (
-         |  SELECT na, nb, v,
-         |    ${term(pa, pb, "ca")} AS t_a,
-         |    ${term(pb, pa, "cb")} AS t_b
-         |  FROM j CROSS JOIN tot
-         |)
-         |SELECT na AS n_a, nb AS n_b, v AS vocab,
-         |  ${Portable.sqlIntRatioSigned9("sum(t_a) + sum(t_b)",
-             "2000000000")} AS jsd
-         |FROM terms GROUP BY na, nb, v""".stripMargin
-    },
-
-    // q225: ranks ascending over the vocab frame; Gini numerator in
-    // exact DECIMAL; head shares by integer ceil-div rank cuts.
-    "q225_token_concentration" ->
-      s"""WITH c AS (
-         |  SELECT w, count(*)::BIGINT AS c FROM (
-         |    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-         |  ) _ GROUP BY w
-         |),
-         |r AS (
-         |  SELECT c, row_number() OVER (ORDER BY c ASC, w ASC)::BIGINT
-         |      AS r,
-         |    count(*) OVER ()::BIGINT AS v
-         |  FROM c
-         |),
-         |a AS (
-         |  SELECT v, sum(c)::BIGINT AS n,
-         |    CAST(sum(CAST(r AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0)))
-         |      AS DECIMAL(38,0)) AS rc,
-         |    sum(CASE WHEN r > v - (v + 99) // 100 THEN c ELSE 0 END)
-         |      ::BIGINT AS t1,
-         |    sum(CASE WHEN r > v - (v + 9) // 10 THEN c ELSE 0 END)
-         |      ::BIGINT AS t10
-         |  FROM r GROUP BY v
-         |)
-         |SELECT v AS vocab, n AS n_tokens,
-         |  CASE WHEN v > 0 AND n > 0 THEN
-         |    ${Portable.sqlIntRatioSigned9(
-             "2 * CAST(rc AS HUGEINT) - CAST(v + 1 AS HUGEINT) * n",
-             "CAST(v AS HUGEINT) * n")}
-         |  END AS gini,
-         |  CASE WHEN n > 0 THEN ${Portable.sqlIntRatio9("t1", "n")}
-         |  END AS top1pct_share,
-         |  CASE WHEN n > 0 THEN ${Portable.sqlIntRatio9("t10", "n")}
-         |  END AS top10pct_share
-         |FROM a""".stripMargin,
-
-    // q226: 24-cell uniform chi-square clears to (24·Σo² − n²)/n in
-    // exact DECIMAL; peak by (count DESC, hour ASC).
-    "q226_hour_profile" ->
-      s"""WITH cells AS (
-         |  SELECT event_type,
-         |    (epoch_ns(ts) // 1000000 // 3600000) % 24 AS hour,
-         |    count(*)::BIGINT AS o
-         |  FROM events GROUP BY 1, 2
-         |),
-         |pk AS (
-         |  SELECT event_type, hour AS peak_hour, o AS peak_o,
-         |    row_number() OVER (PARTITION BY event_type
-         |      ORDER BY o DESC, hour ASC) AS rn
-         |  FROM cells QUALIFY rn = 1
-         |),
-         |ag AS (
-         |  SELECT event_type, sum(o)::BIGINT AS n_events,
-         |    CAST(sum(CAST(o AS DECIMAL(38,0)) * CAST(o AS DECIMAL(38,0)))
-         |      AS DECIMAL(38,0)) AS ss
-         |  FROM cells GROUP BY 1
-         |)
-         |SELECT ag.event_type, ag.n_events, pk.peak_hour,
-         |  ${Portable.sqlIntRatio9("pk.peak_o", "ag.n_events")}
-         |    AS peak_share,
-         |  ${Portable.sqlIntRatioSigned9(
-             "24 * CAST(ag.ss AS HUGEINT)" +
-             " - CAST(ag.n_events AS HUGEINT) * ag.n_events",
-             "ag.n_events")} AS chi2_uniform
-         |FROM ag JOIN pk USING (event_type)
-         |ORDER BY ag.event_type""".stripMargin,
-
-    // q227: exact integer moments per stratum, IEEE sqrt, integerized
-    // N·σ summed in LONG, allocation by floor(·+½).
-    "q227_neyman_allocation" -> {
-      val x9 = "CAST(floor(round(CAST(quality_score AS DOUBLE), 9)" +
-        " * 1e9 + 0.5) AS BIGINT)"
-      val sigma = "sqrt(greatest(CAST(0 AS DOUBLE)," +
-        " CAST(CAST(n_rows AS DECIMAL(38,0)) * ss - s * s AS DOUBLE)))" +
-        " / CAST(n_rows AS DOUBLE) / 1e9"
-      s"""$qualityScoreSqlCtes,
-         |per AS (
-         |  SELECT source AS stratum, count(*)::BIGINT AS n_rows,
-         |    CAST(sum(CAST($x9 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s,
-         |    CAST(sum(CAST($x9 AS DECIMAL(38,0))
-         |      * CAST($x9 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS ss
-         |  FROM qs GROUP BY 1
-         |),
-         |ns AS (
-         |  SELECT stratum, n_rows, $sigma AS sigma,
-         |    CAST(floor(round(CAST(n_rows AS DOUBLE) * ($sigma), 9)
-         |      * 1e9 + 0.5) AS BIGINT) AS nsig9
-         |  FROM per
-         |),
-         |t AS (SELECT sum(nsig9)::BIGINT AS tot9 FROM ns)
-         |SELECT stratum, n_rows,
-         |  ${Portable.sqlRatio9("sigma")} AS sigma,
-         |  CASE WHEN tot9 > 0 THEN
-         |    ${Portable.sqlIntRatio9("nsig9", "tot9")}
-         |    ELSE CAST(0 AS DOUBLE) END AS alloc_share,
-         |  CASE WHEN tot9 > 0 THEN
-         |    CAST(${Portable.sqlIntRatioScaled(
-              s"CAST(nsig9 AS HUGEINT) * $NeymanBudget", "tot9", 0)}
-         |      AS BIGINT)
-         |    ELSE 0 END AS alloc_n
-         |FROM ns CROSS JOIN t ORDER BY stratum""".stripMargin
-    },
-
-    // q228: the Poisson(1) inverse-CDF compares the RAW 60-bit hash
-    // against Scala-computed literal thresholds in hash units (the
-    // q170 literal discipline — pure integer comparisons, no float
-    // scaling); resample means integerize; CI = exact order stats.
-    "q228_bootstrap_ci" -> {
-      val wExpr = Quality.BootstrapCumHash
-        .map(c => s"(CASE WHEN h >= $c THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""$qualityScoreSqlCtes,
-         |rows_ AS (
-         |  SELECT doc_id,
-         |    CAST(floor(round(CAST(quality_score AS DOUBLE), 9) * 1e9
-         |      + 0.5) AS BIGINT) AS x9
-         |  FROM qs
-         |),
-         |bs AS (SELECT unnest(range(0, $BootstrapB)) AS b),
-         |u AS (
-         |  SELECT b, x9,
-         |    ${Portable.sqlHash("doc_id", s"'$BootstrapSalt'", "b")} AS h
-         |  FROM rows_ CROSS JOIN bs
-         |),
-         |bm AS (
-         |  SELECT b,
-         |    ${Portable.sqlIntRatioScaledSigned("sum(w * x9)",
-              "CAST(sum(w) AS HUGEINT) * 1000000000", 9)} AS m9
-         |  FROM (SELECT b, x9, ($wExpr) AS w FROM u) _
-         |  GROUP BY b HAVING sum(w) > 0
-         |),
-         |r AS (
-         |  SELECT m9, row_number() OVER (ORDER BY m9, b)::BIGINT AS r,
-         |    count(*) OVER ()::BIGINT AS nb
-         |  FROM bm
-         |),
-         |ci AS (
-         |  SELECT nb,
-         |    min(CASE WHEN r = (nb * 25 + 999) // 1000 THEN m9 END)
-         |      ::BIGINT AS lo9,
-         |    min(CASE WHEN r = (nb * 975 + 999) // 1000 THEN m9 END)
-         |      ::BIGINT AS hi9
-         |  FROM r GROUP BY nb
-         |),
-         |nm AS (SELECT count(*)::BIGINT AS n, sum(x9)::BIGINT AS sx
-         |       FROM rows_)
-         |SELECT nm.n, ci.nb AS n_resamples,
-         |  CASE WHEN nm.n > 0 THEN ${Portable.sqlRatio9(
-             "CAST(nm.sx AS DOUBLE) / CAST(nm.n AS DOUBLE) / 1e9")}
-         |  END AS mean,
-         |  round(CAST(ci.lo9 AS DOUBLE) / 1e9, 9) AS lo95,
-         |  round(CAST(ci.hi9 AS DOUBLE) / 1e9, 9) AS hi95
-         |FROM ci CROSS JOIN nm""".stripMargin
-    },
-
-    // q229: the q177 edge build, then the synchronous peel unrolled
-    // round-for-round; membership from the final round's degrees,
-    // converged = the last round removed nothing.
-    "q229_kcore" -> {
-      def degs(e: String, d: String) =
-        s"""$d AS (
-           |  SELECT id, count(*)::BIGINT AS deg FROM (
-           |    SELECT lo AS id FROM $e UNION ALL SELECT hi FROM $e) _
-           |  GROUP BY id
-           |)""".stripMargin
-      def round(i: Int) =
-        s"""k$i AS (SELECT id FROM d${i - 1} WHERE deg >= $KCoreK),
-           |e$i AS (
-           |  SELECT e.lo, e.hi FROM e${i - 1} e
-           |  JOIN k$i a ON e.lo = a.id JOIN k$i b ON e.hi = b.id
-           |),
-           |${degs(s"e$i", s"d$i")}""".stripMargin
-      s"""WITH lp AS (
-         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem WHERE l_partkey < $TriPartMax
-         |),
-         |e0 AS (
-         |  SELECT DISTINCT a.p AS lo, b.p AS hi
-         |  FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p
-         |),
-         |${degs("e0", "d0")},
-         |${(1 to KCoreRounds).map(round).mkString(",\n")},
-         |core AS (SELECT id FROM d$KCoreRounds WHERE deg >= $KCoreK),
-         |cnt3 AS (SELECT count(*)::BIGINT AS c
-         |         FROM e${KCoreRounds - 1}),
-         |cnt4 AS (SELECT count(*)::BIGINT AS c FROM e$KCoreRounds)
-         |SELECT d0.id, d0.deg AS degree,
-         |  core.id IS NOT NULL AS in_kcore,
-         |  cnt3.c = cnt4.c AS converged
-         |FROM d0 LEFT JOIN core ON d0.id = core.id
-         |CROSS JOIN cnt3 CROSS JOIN cnt4
-         |ORDER BY d0.id""".stripMargin
-    },
-
-    // q230: the identical 2x-midrank frames (2·cum − c + 1 per
-    // distinct 1e9-integerized value), HUGEINT moment sums (exact,
-    // like Spark's DECIMAL(38,0)), one num/(√d₁·√d₂) chain.
-    "q230_spearman" ->
-      s"""$qualityScoreSqlCtes,
-         |b AS (
-         |  SELECT
-         |    CAST(floor(round(q.quality_score, 9) * 1e9 + 0.5)
-         |      AS BIGINT) AS x,
-         |    CAST(floor(round(len(string_split(d.text, ' '))::DOUBLE, 9)
-         |      * 1e9 + 0.5) AS BIGINT) AS y
-         |  FROM qs q JOIN documents d ON d.doc_id = q.doc_id
-         |),
-         |rx AS (
-         |  SELECT x, (2 * cum - c + 1)::BIGINT AS r FROM (
-         |    SELECT x, c, sum(c) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
-         |      PRECEDING AND CURRENT ROW)::BIGINT AS cum
-         |    FROM (SELECT x, count(*)::BIGINT AS c FROM b GROUP BY x) _) _
-         |),
-         |ry AS (
-         |  SELECT y, (2 * cum - c + 1)::BIGINT AS r FROM (
-         |    SELECT y, c, sum(c) OVER (ORDER BY y ROWS BETWEEN UNBOUNDED
-         |      PRECEDING AND CURRENT ROW)::BIGINT AS cum
-         |    FROM (SELECT y, count(*)::BIGINT AS c FROM b GROUP BY y) _) _
-         |),
-         |mo AS (
-         |  SELECT count(*)::BIGINT AS n,
-         |    sum(CAST(rx.r AS HUGEINT)) AS sx,
-         |    sum(CAST(ry.r AS HUGEINT)) AS sy,
-         |    sum(CAST(rx.r AS HUGEINT) * rx.r) AS sxx,
-         |    sum(CAST(ry.r AS HUGEINT) * ry.r) AS syy,
-         |    sum(CAST(rx.r AS HUGEINT) * ry.r) AS sxy
-         |  FROM b JOIN rx USING (x) JOIN ry USING (y)
-         |)
-         |SELECT n,
-         |  CASE WHEN CAST(n AS HUGEINT) * sxx - sx * sx > 0
-         |        AND CAST(n AS HUGEINT) * syy - sy * sy > 0 THEN
-         |    ${Portable.sqlRatio9(
-              "CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DOUBLE)" +
-                " / (sqrt(CAST(CAST(n AS HUGEINT) * sxx - sx * sx" +
-                " AS DOUBLE)) * sqrt(CAST(CAST(n AS HUGEINT) * syy" +
-                " - sy * sy AS DOUBLE)))")}
-         |  END AS rho
-         |FROM mo""".stripMargin,
-
-    // q231: the q186 NB pred chain, then kappa's exact integer form
-    // (N·agree − Σrc) / (N² − Σrc) with full-outer margins.
-    "q231_cohen_kappa" ->
-      s"""$nbRankSqlCte,
-         |pr AS (
-         |  SELECT d.lang AS a, r.label AS b
-         |  FROM rk r JOIN documents d ON d.doc_id = r.doc_id
-         |  WHERE r.rk = 1
-         |),
-         |cells AS (SELECT a, b, count(*)::BIGINT AS c
-         |          FROM pr GROUP BY 1, 2),
-         |ra AS (SELECT a AS l, sum(c)::BIGINT AS ra FROM cells GROUP BY 1),
-         |cb AS (SELECT b AS l, sum(c)::BIGINT AS cb FROM cells GROUP BY 1),
-         |pec AS (
-         |  SELECT sum(CAST(coalesce(ra, 0) AS HUGEINT)
-         |    * coalesce(cb, 0)) AS pev
-         |  FROM ra FULL JOIN cb USING (l)
-         |),
-         |tt AS (SELECT sum(c)::BIGINT AS n,
-         |  sum(CASE WHEN a = b THEN c ELSE 0 END)::BIGINT AS agree
-         |  FROM cells)
-         |SELECT n, agree,
-         |  CASE WHEN n > 0 THEN ${Portable.sqlIntRatio9("agree", "n")}
-         |  END AS po,
-         |  CASE WHEN n > 0 THEN ${Portable.sqlIntRatio9("pev",
-              "CAST(n AS HUGEINT) * n")}
-         |  END AS pe,
-         |  CASE WHEN CAST(n AS HUGEINT) * n - pev > 0 THEN
-         |    ${Portable.sqlIntRatioSigned9(
-              "CAST(n AS HUGEINT) * agree - pev",
-              "CAST(n AS HUGEINT) * n - pev")}
-         |  END AS kappa
-         |FROM tt CROSS JOIN pec""".stripMargin,
-
-    // q232: exact HUGEINT Σw, Σw² per source, one s·s/ss chain.
-    "q232_effective_sample_size" ->
-      s"""$qualityScoreSqlCtes,
-         |w AS (
-         |  SELECT source AS "group",
-         |    CAST(floor(round(quality_score, 9) * 1e9 + 0.5) AS BIGINT)
-         |      AS w9
-         |  FROM qs
-         |),
-         |g AS (
-         |  SELECT "group", count(*)::BIGINT AS n_rows,
-         |    sum(CAST(w9 AS HUGEINT)) AS s,
-         |    sum(CAST(w9 AS HUGEINT) * w9) AS ss
-         |  FROM w GROUP BY 1
-         |)
-         |SELECT "group", n_rows,
-         |  CASE WHEN ss > 0 THEN ${Portable.sqlIntRatio9("s * s", "ss")}
-         |  END AS ess,
-         |  CASE WHEN ss > 0 THEN
-         |    ${Portable.sqlIntRatio9("s * s", "ss * n_rows")}
-         |  END AS ess_ratio
-         |FROM g ORDER BY "group"""".stripMargin,
-
-    // q233: per-cell and per-margin 1e9-integerized p·ln terms summed
-    // in BIGINT, NMI as one MI9/√(Ha9·Hb9) chain.
-    "q233_mutual_information" ->
-      s"""WITH cells AS (
-         |  SELECT source AS a, lang AS b, count(*)::BIGINT AS c
-         |  FROM documents GROUP BY 1, 2
-         |),
-         |nt AS (SELECT sum(c)::BIGINT AS n FROM cells),
-         |ra AS (SELECT a, sum(c)::BIGINT AS ra FROM cells GROUP BY 1),
-         |cb AS (SELECT b, sum(c)::BIGINT AS cb FROM cells GROUP BY 1),
-         |mi AS (
-         |  SELECT count(*)::BIGINT AS n_cells,
-         |    sum(CAST(floor(round(
-         |      (CAST(c AS DOUBLE) / CAST(nt.n AS DOUBLE))
-         |      * ln(CAST(c AS DOUBLE) * CAST(nt.n AS DOUBLE)
-         |        / (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE))), 9)
-         |      * 1e9 + 0.5) AS BIGINT))::BIGINT AS mi9
-         |  FROM cells JOIN ra USING (a) JOIN cb USING (b) CROSS JOIN nt
-         |),
-         |ha AS (
-         |  SELECT sum(CAST(floor(round(
-         |    -(CAST(ra AS DOUBLE) / CAST(nt.n AS DOUBLE))
-         |    * ln(CAST(ra AS DOUBLE) / CAST(nt.n AS DOUBLE)), 9)
-         |    * 1e9 + 0.5) AS BIGINT))::BIGINT AS h9
-         |  FROM ra CROSS JOIN nt
-         |),
-         |hb AS (
-         |  SELECT sum(CAST(floor(round(
-         |    -(CAST(cb AS DOUBLE) / CAST(nt.n AS DOUBLE))
-         |    * ln(CAST(cb AS DOUBLE) / CAST(nt.n AS DOUBLE)), 9)
-         |    * 1e9 + 0.5) AS BIGINT))::BIGINT AS h9
-         |  FROM cb CROSS JOIN nt
-         |)
-         |SELECT nt.n AS n, mi.n_cells,
-         |  round(CAST(mi.mi9 AS DOUBLE) / 1e9, 9) AS mi,
-         |  round(CAST(ha.h9 AS DOUBLE) / 1e9, 9) AS h_a,
-         |  round(CAST(hb.h9 AS DOUBLE) / 1e9, 9) AS h_b,
-         |  CASE WHEN ha.h9 > 0 AND hb.h9 > 0 THEN ${Portable.sqlRatio9(
-              "CAST(mi.mi9 AS DOUBLE) / (sqrt(CAST(ha.h9 AS DOUBLE))" +
-                " * sqrt(CAST(hb.h9 AS DOUBLE)))")}
-         |  END AS nmi
-         |FROM mi CROSS JOIN nt CROSS JOIN ha CROSS JOIN hb""".stripMargin,
-
-    // q234: first digit of exact cents by integer-string head; the
-    // Benford expectation from the SAME literal integers as the
-    // engine ([[Quality.Benford9]]).
-    "q234_benford" -> {
-      val grid = Quality.Benford9.zipWithIndex
-        .map { case (p9, i) => s"(${i + 1}, ${p9})" }.mkString(", ")
-      val share9 =
-        Portable.sqlIntRatioScaled("coalesce(observed, 0)", "n", 9)
-      s"""WITH v AS (
-         |  SELECT CAST(floor(round(CAST(l_extendedprice AS DOUBLE), 2)
-         |    * 1e2 + 0.5) AS BIGINT) AS cents
-         |  FROM lineitem
-         |),
-         |d AS (
-         |  SELECT CAST(substring(CAST(cents AS VARCHAR), 1, 1) AS INT)
-         |    AS digit
-         |  FROM v WHERE cents > 0
-         |),
-         |cnt AS (SELECT digit, count(*)::BIGINT AS observed
-         |        FROM d GROUP BY 1),
-         |grid AS (SELECT digit::INT AS digit, p9::BIGINT AS p9
-         |         FROM (VALUES $grid) t(digit, p9)),
-         |tot AS (SELECT sum(observed)::BIGINT AS n FROM cnt)
-         |SELECT g.digit, coalesce(observed, 0)::BIGINT AS observed, n,
-         |  CASE WHEN n > 0 THEN
-         |    round(CAST($share9 AS DOUBLE) / 1e9, 9) END AS share,
-         |  round(CAST(p9 AS DOUBLE) / 1e9, 9) AS benford_p,
-         |  CASE WHEN n > 0 THEN
-         |    round(CAST($share9 - p9 AS DOUBLE) / 1e9, 9) END AS excess
-         |FROM grid g LEFT JOIN cnt USING (digit) CROSS JOIN tot
-         |ORDER BY g.digit""".stripMargin
-    },
-
-    // q235: journeys by prior-conversion count, first/last eligible
-    // touch via per-journey row_numbers (the (tns, event_id) order is
-    // unique, so min/max struct and rank-1 agree exactly).
-    "q235_touch_attribution" ->
-      s"""WITH ev AS (
-         |  SELECT user_id, event_id, event_type, epoch_ns(ts) AS tns,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS isc
-         |  FROM events
-         |),
-         |tg AS (
-         |  SELECT *, coalesce(sum(isc) OVER (PARTITION BY user_id
-         |    ORDER BY tns, event_id ROWS BETWEEN UNBOUNDED PRECEDING
-         |    AND 1 PRECEDING), 0)::BIGINT AS j
-         |  FROM ev
-         |),
-         |convs AS (SELECT user_id, j, tns AS cts FROM tg WHERE isc = 1),
-         |nc AS (SELECT count(*)::BIGINT AS n_conversions FROM convs),
-         |el AS (
-         |  SELECT t.user_id, t.j, t.event_type, t.tns, t.event_id
-         |  FROM tg t JOIN convs c ON c.user_id = t.user_id AND c.j = t.j
-         |  WHERE t.isc = 0 AND c.cts - t.tns <= ${AttribLookbackMs}000000
-         |),
-         |rk1 AS (
-         |  SELECT event_type,
-         |    row_number() OVER (PARTITION BY user_id, j
-         |      ORDER BY tns, event_id) AS rf,
-         |    row_number() OVER (PARTITION BY user_id, j
-         |      ORDER BY tns DESC, event_id DESC) AS rl
-         |  FROM el
-         |),
-         |f AS (SELECT event_type, count(*)::BIGINT AS first_touch
-         |      FROM rk1 WHERE rf = 1 GROUP BY 1),
-         |l AS (SELECT event_type, count(*)::BIGINT AS last_touch
-         |      FROM rk1 WHERE rl = 1 GROUP BY 1)
-         |SELECT event_type,
-         |  coalesce(first_touch, 0)::BIGINT AS first_touch,
-         |  coalesce(last_touch, 0)::BIGINT AS last_touch,
-         |  nc.n_conversions
-         |FROM f FULL JOIN l USING (event_type) CROSS JOIN nc
-         |ORDER BY event_type""".stripMargin,
-
-    // q236: the identical integer LLR walk over the SAME literal
-    // constants (sprtConstants is called by both builders).
-    "q236_sprt_trace" -> sprtTraceOracleSql,
-
-    // q237: native range join over the q30 session spans and the q133
-    // anomalous windows — the exact semantics the bucketed
-    // cell-equality join must reproduce.
-    "q237_overlap_join" ->
-      s"""WITH se AS (
-         |  SELECT user_id, event_id, epoch_ns(ts) AS tns,
-         |    CASE WHEN lag(epoch_ns(ts)) OVER w IS NULL
-         |           OR epoch_ns(ts) - lag(epoch_ns(ts)) OVER w
-         |             > ${SessionGapMs}000000
-         |         THEN 1 ELSE 0 END AS new_sess
-         |  FROM events
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts),
-         |    event_id)
-         |),
-         |sg AS (
-         |  SELECT user_id, tns,
-         |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY tns,
-         |      event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT
-         |      ROW) AS session_id
-         |  FROM se
-         |),
-         |sess AS (
-         |  SELECT CAST(user_id AS VARCHAR) || '#'
-         |      || CAST(session_id AS VARCHAR) AS a_id,
-         |    (min(tns) // 1000000)::BIGINT AS a_start,
-         |    (max(tns) // 1000000)::BIGINT AS a_end
-         |  FROM sg GROUP BY user_id, session_id
-         |),
-         |wc AS (
-         |  SELECT event_type,
-         |    (epoch_ms(ts) - (epoch_ms(ts) % $WindowMs))::BIGINT
-         |      AS window_start_ms,
-         |    count(*)::BIGINT AS n_events
-         |  FROM events GROUP BY 1, 2
-         |),
-         |wt AS (
-         |  SELECT event_type, window_start_ms, n_events,
-         |    count(*) OVER tw AS k,
-         |    (sum(n_events) OVER tw)::BIGINT AS s,
-         |    (sum(n_events * n_events) OVER tw)::BIGINT AS ss
-         |  FROM wc
-         |  WINDOW tw AS (PARTITION BY event_type ORDER BY window_start_ms
-         |    ROWS BETWEEN $AnomalyTrailing PRECEDING AND 1 PRECEDING)
-         |),
-         |anom AS (
-         |  SELECT event_type || '#' || CAST(window_start_ms AS VARCHAR)
-         |      AS b_id,
-         |    window_start_ms AS b_start,
-         |    (window_start_ms + $WindowMs - 1)::BIGINT AS b_end
-         |  FROM wt
-         |  WHERE k = $AnomalyTrailing AND (
-         |    CASE WHEN ss * $AnomalyTrailing - s * s > 0 THEN
-         |      abs((n_events::DOUBLE - s::DOUBLE / $AnomalyTrailing)
-         |        / sqrt((ss * $AnomalyTrailing - s * s)::DOUBLE
-         |            / (${AnomalyTrailing.toLong * AnomalyTrailing})))
-         |        >= $AnomalyZ
-         |    ELSE n_events * $AnomalyTrailing <> s END)
-         |)
-         |SELECT a_id, a_start, a_end, b_id, b_start, b_end
-         |FROM sess JOIN anom
-         |  ON a_start <= b_end AND b_start <= a_end
-         |ORDER BY a_id, b_id""".stripMargin,
-
-    // q238: the HITS half-rounds unrolled — HUGEINT raw sums and the
-    // same integer floor-division normalizer each half-round.
-    "q238_hits" -> {
-      def half(i: Int) =
-        s"""ar$i AS (SELECT dst, sum(h) AS raw
-           |  FROM lp JOIN h${i - 1} USING (src) GROUP BY dst),
-           |at$i AS (SELECT sum(raw) AS tot FROM ar$i),
-           |a$i AS (SELECT dst,
-           |  CAST((CAST(raw AS HUGEINT) * 1000000000) // tot AS BIGINT)
-           |    AS a
-           |  FROM ar$i CROSS JOIN at$i),
-           |hr$i AS (SELECT src, sum(a) AS raw
-           |  FROM lp JOIN a$i USING (dst) GROUP BY src),
-           |ht$i AS (SELECT sum(raw) AS tot FROM hr$i),
-           |h$i AS (SELECT src,
-           |  CAST((CAST(raw AS HUGEINT) * 1000000000) // tot AS BIGINT)
-           |    AS h
-           |  FROM hr$i CROSS JOIN ht$i)""".stripMargin
-      s"""WITH lp AS (
-         |  SELECT DISTINCT l_orderkey AS src, l_partkey AS dst
-         |  FROM lineitem WHERE l_partkey < $TriPartMax
-         |),
-         |h0 AS (SELECT DISTINCT src, 1000000000::BIGINT AS h FROM lp),
-         |${(1 to HitsRounds).map(half).mkString(",\n")}
-         |SELECT src AS id, 'hub' AS role,
-         |  round(CAST(h AS DOUBLE) / 1e9, 9) AS score FROM h$HitsRounds
-         |UNION ALL
-         |SELECT dst AS id, 'authority' AS role,
-         |  round(CAST(a AS DOUBLE) / 1e9, 9) AS score FROM a$HitsRounds
-         |ORDER BY role, id""".stripMargin
-    },
-
-    // q239: exact HUGEINT moments over relative-day scores, the one
-    // z chain (A·N − R·B)/√(R(N−R)(CN−B²)/N).
-    "q239_trend_test" ->
-      s"""WITH ud AS (
-         |  SELECT epoch_ns(ts) // 86400000000000 AS day, user_id,
-         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-         |      END)::BIGINT AS conv
-         |  FROM events GROUP BY 1, 2
-         |),
-         |d AS (SELECT day, count(*)::BIGINT AS n,
-         |        sum(conv)::BIGINT AS r
-         |      FROM ud GROUP BY 1),
-         |d0 AS (SELECT min(day) AS dd FROM d),
-         |mm AS (
-         |  SELECT count(*)::BIGINT AS n_days,
-         |    sum(n)::BIGINT AS trials, sum(r)::BIGINT AS successes,
-         |    sum(CAST(day - dd AS HUGEINT) * r) AS a,
-         |    sum(CAST(day - dd AS HUGEINT) * n) AS b,
-         |    sum(CAST(day - dd AS HUGEINT) * (day - dd) * n) AS c
-         |  FROM d CROSS JOIN d0
-         |)
-         |SELECT n_days, trials, successes,
-         |  CASE WHEN CAST(successes AS HUGEINT)
-         |      * (trials - successes) * (c * trials - b * b) > 0 THEN
-         |    ${Portable.sqlRatio9(
-              "CAST(a * trials - successes * b AS DOUBLE)" +
-                " / sqrt(CAST(CAST(successes AS HUGEINT)" +
-                " * (trials - successes) * (c * trials - b * b)" +
-                " AS DOUBLE) / CAST(trials AS DOUBLE))")}
-         |  END AS z
-         |FROM mm""".stripMargin,
-
-    // q240: the q212 bins, per-bin gap |pos·1e9 − Σs9| exact, one
-    // division for ECE, integer-backed max for MCE.
-    "q240_calibration_error" ->
-      s"""$calibBinsSqlCte,
-         |g AS (
-         |  SELECT n,
-         |    abs(CAST(pos AS HUGEINT) * 1000000000 - ss) AS gap
-         |  FROM b
-         |)
-         |SELECT sum(n)::BIGINT AS n, count(*)::BIGINT AS n_bins,
-         |  CASE WHEN sum(n) > 0 THEN ${Portable.sqlIntRatio9("sum(gap)",
-              "CAST(sum(n) AS HUGEINT) * 1000000000")}
-         |  END AS ece,
-         |  round(CAST(max(${Portable.sqlIntRatioScaled("gap",
-             "CAST(n AS HUGEINT) * 1000000000", 9)})
-         |    AS DOUBLE) / 1e9, 9) AS mce
-         |FROM g""".stripMargin,
-
-    // q241: weighted distinct-value CDF per source, lower weighted
-    // median by the integer 2·cum ≥ W compare.
-    "q241_weighted_median" ->
-      s"""$qualityScoreSqlCtes,
-         |wv AS (
-         |  SELECT q.source AS "group", q.quality_score AS v,
-         |    len(string_split(d.text, ' '))::BIGINT AS w
-         |  FROM qs q JOIN documents d ON d.doc_id = q.doc_id
-         |),
-         |gv AS (SELECT "group", v, count(*)::BIGINT AS n,
-         |         sum(w)::BIGINT AS gw
-         |       FROM wv GROUP BY 1, 2),
-         |cm AS (
-         |  SELECT "group", v, n, gw,
-         |    (sum(gw) OVER (PARTITION BY "group" ORDER BY v
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         |      ::BIGINT AS cum,
-         |    (sum(gw) OVER (PARTITION BY "group"))::BIGINT AS tot
-         |  FROM gv
-         |)
-         |SELECT "group", sum(n)::BIGINT AS n_rows,
-         |  max(tot)::BIGINT AS w_total,
-         |  min(CASE WHEN 2 * cum >= tot THEN v END) AS median
-         |FROM cm GROUP BY "group" ORDER BY "group"""".stripMargin,
-
-    // q242: the k² pair sign sum (k calendar-bounded), tie-corrected
-    // variance numerator exact, continuity-corrected z.
-    "q242_mann_kendall" ->
-      s"""WITH d AS (
-         |  SELECT epoch_ns(ts) // 86400000000000 AS t,
-         |    count(*)::BIGINT AS n
-         |  FROM events WHERE event_type = 'purchase' GROUP BY 1
-         |),
-         |bb AS (SELECT t, CAST(floor(round(CAST(n AS DOUBLE), 9) * 1e9
-         |         + 0.5) AS BIGINT) AS v
-         |       FROM d),
-         |p AS (SELECT sum(CASE WHEN j.v > i.v THEN 1
-         |        WHEN j.v < i.v THEN -1 ELSE 0 END)::BIGINT AS s
-         |      FROM bb i JOIN bb j ON i.t < j.t),
-         |t2 AS (
-         |  SELECT count(*)::BIGINT AS nv, sum(u)::BIGINT AS k,
-         |    sum(u * (u - 1) * (2 * u + 5))::BIGINT AS tc
-         |  FROM (SELECT v, count(*)::BIGINT AS u FROM bb GROUP BY v) _
-         |)
-         |SELECT k, s,
-         |  CASE WHEN k >= 2 AND k * (k - 1) * (2 * k + 5) - tc > 0 THEN
-         |    ${Portable.sqlRatio9(
-              "CAST(s - sign(s) AS DOUBLE)" +
-                " / sqrt(CAST(k * (k - 1) * (2 * k + 5) - tc AS DOUBLE)" +
-                " / CAST(18 AS DOUBLE))")}
-         |  END AS z
-         |FROM p CROSS JOIN t2""".stripMargin,
-
-    // q243: the identical Gumbel-key chain — u strictly inside (0,1),
-    // key integerized once, (k9 DESC, id) rank, LIMIT k.
-    "q243_weighted_sample" ->
-      s"""WITH w AS (
-         |  SELECT doc_id, len(string_split(text, ' '))::BIGINT AS weight
-         |  FROM documents
-         |),
-         |kk AS (
-         |  SELECT doc_id, weight,
-         |    CAST(floor(round(ln(CAST(weight AS DOUBLE))
-         |      - ln(-ln((CAST(${Portable.sqlHash(s"'$WorSalt'", "doc_id")}
-         |        AS DOUBLE) + CAST(0.5 AS DOUBLE))
-         |        / CAST(1152921504606846976 AS DOUBLE))), 9) * 1e9
-         |      + 0.5) AS BIGINT) AS k9
-         |  FROM w WHERE weight > 0
-         |)
-         |SELECT doc_id, weight,
-         |  round(CAST(k9 AS DOUBLE) / 1e9, 9) AS draw_key
-         |FROM kk ORDER BY k9 DESC, doc_id LIMIT $WorK""".stripMargin,
-
-    // q244: the identical RE2 counts and the identical 0.39/11.8/15.59
-    // double chain (constants CAST to DOUBLE — DuckDB decimal-literal
-    // hazard).
-    "q244_readability" ->
-      s"""WITH c AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split(text, ' '), w -> w <> ''))
-        |      ::BIGINT AS n_words,
-        |    greatest(1, len(regexp_extract_all(text, '[.!?]+')))
-        |      ::BIGINT AS n_sentences,
-        |    len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |      ::BIGINT AS n_syllables
-        |  FROM documents
-        |)
-        |SELECT doc_id, n_words, n_sentences, n_syllables,
-        |  ${Portable.sqlIntRatioSigned9(
-            "39 * CAST(n_words AS HUGEINT) * n_words" +
-              " + 1180 * CAST(n_syllables AS HUGEINT) * n_sentences" +
-              " - 1559 * CAST(n_sentences AS HUGEINT) * n_words",
-            "100 * CAST(n_sentences AS HUGEINT) * n_words")} AS fk_grade
-        |FROM c WHERE n_words > 0 ORDER BY doc_id""".stripMargin,
-
-    // q245: the same zero-filled calendar spine and the one
-    // (k·Q − S²)/((k−1)·S) division.
-    "q245_dispersion" ->
-      s"""WITH cells AS (
-         |  SELECT event_type, epoch_ns(ts) // 86400000000000 AS day,
-         |    count(*)::BIGINT AS x
-         |  FROM events GROUP BY 1, 2
-         |),
-         |sp AS (SELECT unnest(range(lo, hi + 1)) AS day
-         |       FROM (SELECT min(day) AS lo, max(day) AS hi
-         |             FROM cells) _),
-         |ty AS (SELECT DISTINCT event_type FROM cells),
-         |fl AS (
-         |  SELECT t.event_type, s.day, coalesce(c.x, 0)::BIGINT AS x
-         |  FROM ty t CROSS JOIN sp s
-         |  LEFT JOIN cells c ON c.event_type = t.event_type
-         |    AND c.day = s.day
-         |),
-         |ag AS (
-         |  SELECT event_type, count(*)::BIGINT AS n_days,
-         |    sum(x)::BIGINT AS n_events, sum(CAST(x AS HUGEINT) * x) AS q
-         |  FROM fl GROUP BY 1
-         |)
-         |SELECT event_type, n_days, n_events,
-         |  CASE WHEN n_days > 0 THEN
-         |    ${Portable.sqlIntRatio9("n_events", "n_days")}
-         |  END AS mean,
-         |  CASE WHEN n_days >= 2 AND n_events > 0 THEN
-         |    ${Portable.sqlIntRatioSigned9(
-              "CAST(n_days AS HUGEINT) * q" +
-                " - CAST(n_events AS HUGEINT) * n_events",
-              "CAST(n_days - 1 AS HUGEINT) * n_events")}
-         |  END AS fano
-         |FROM ag ORDER BY event_type""".stripMargin,
-
-    // q246: the ground-truth 3-way ordered basket self-join — the
-    // Apriori-pruned engine plan must return exactly this set.
-    "q246_frequent_triples" ->
-      s"""WITH bi AS (
-         |  SELECT DISTINCT CAST(user_id AS VARCHAR) || '#'
-         |      || CAST(epoch_ns(ts) // 86400000000000 AS VARCHAR) AS b,
-         |    event_type AS i
-         |  FROM events
-         |)
-         |SELECT x.i AS item_a, y.i AS item_b, z.i AS item_c,
-         |  count(*)::BIGINT AS support
-         |FROM bi x
-         |JOIN bi y ON x.b = y.b AND x.i < y.i
-         |JOIN bi z ON x.b = z.b AND y.i < z.i
-         |GROUP BY 1, 2, 3 HAVING count(*) >= $TriSupport
-         |ORDER BY item_a, item_b, item_c""".stripMargin,
-
-    // q247: a dimension spine (data-driven length) indexes each
-    // coordinate; identical integerized moment sums per dim.
-    "q247_embedding_dim_stats" ->
-      s"""WITH dm AS (
-         |  SELECT unnest(range(1,
-         |    (SELECT len(embedding) FROM embeddings LIMIT 1) + 1))
-         |    AS dim
-         |),
-         |x AS (
-         |  SELECT d.dim,
-         |    CAST(floor(round(CAST(embedding[d.dim] AS DOUBLE), 9)
-         |      * 1e9 + 0.5) AS BIGINT) AS x9
-         |  FROM embeddings CROSS JOIN dm d
-         |  WHERE embedding IS NOT NULL
-         |    AND len(embedding) =
-         |      (SELECT len(embedding) FROM embeddings LIMIT 1)
-         |),
-         |a AS (
-         |  SELECT dim, count(*)::BIGINT AS n, sum(x9)::BIGINT AS s,
-         |    sum(CAST(x9 AS HUGEINT) * x9) AS q,
-         |    min(x9)::BIGINT AS lo, max(x9)::BIGINT AS hi,
-         |    sum(CASE WHEN x9 = 0 THEN 1 ELSE 0 END)::BIGINT AS z
-         |  FROM x GROUP BY dim
-         |)
-         |SELECT dim::INT AS dim, n,
-         |  CASE WHEN n > 0 THEN ${Portable.sqlIntRatioSigned9("s",
-              "CAST(n AS HUGEINT) * 1000000000")}
-         |  END AS mean,
-         |  CASE WHEN n > 0 THEN ${Portable.sqlRatio9(
-              "sqrt(greatest(CAST(0 AS DOUBLE)," +
-                " CAST(CAST(n AS HUGEINT) * q" +
-                " - CAST(s AS HUGEINT) * s AS DOUBLE)))" +
-                " / CAST(n AS DOUBLE) / 1e9")}
-         |  END AS std,
-         |  round(CAST(lo AS DOUBLE) / 1e9, 9) AS min,
-         |  round(CAST(hi AS DOUBLE) / 1e9, 9) AS max,
-         |  CASE WHEN n > 0 THEN ${Portable.sqlIntRatio9("z", "n")}
-         |  END AS zero_frac
-         |FROM a ORDER BY dim""".stripMargin,
-
-    // q248: per-vector exact Σx9², one sqrt chain to the 1e9 norm,
-    // exact ⌈p·n⌉ order statistics off the distinct-norm CDF.
-    "q248_embedding_norms" -> {
-      def qq(num: Int, name: String) =
-        s"""round(CAST(min(CASE WHEN cum * 100 >= tt.n * $num
-           |    THEN n9 END) AS DOUBLE) / 1e9, 9) AS $name""".stripMargin
-      s"""WITH xs AS (
-         |  SELECT vec_id,
-         |    CAST(floor(round(CAST(unnest(embedding) AS DOUBLE), 9)
-         |      * 1e9 + 0.5) AS BIGINT) AS y
-         |  FROM embeddings WHERE embedding IS NOT NULL
-         |),
-         |rn AS (
-         |  SELECT vec_id,
-         |    CAST(floor(round(sqrt(CAST(sum(CAST(y AS HUGEINT) * y)
-         |      AS DOUBLE)) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS n9
-         |  FROM xs GROUP BY vec_id
-         |),
-         |g AS (SELECT n9, count(*)::BIGINT AS c FROM rn GROUP BY n9),
-         |cd AS (
-         |  SELECT n9, c, (sum(c) OVER (ORDER BY n9 ROWS BETWEEN
-         |    UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS cum
-         |  FROM g
-         |),
-         |tt AS (
-         |  SELECT sum(c)::BIGINT AS n,
-         |    sum(CAST(n9 AS HUGEINT) * c) AS sn,
-         |    sum(CASE WHEN n9 = 0 THEN c ELSE 0 END)::BIGINT AS n_zero
-         |  FROM g
-         |)
-         |SELECT tt.n, tt.n_zero,
-         |  CASE WHEN tt.n > 0 THEN ${Portable.sqlIntRatio9("tt.sn",
-              "CAST(tt.n AS HUGEINT) * 1000000000")}
-         |  END AS mean,
-         |  ${qq(1, "p01")},
-         |  ${qq(25, "p25")},
-         |  ${qq(50, "p50")},
-         |  ${qq(75, "p75")},
-         |  ${qq(99, "p99")},
-         |  round(CAST(min(n9) AS DOUBLE) / 1e9, 9) AS min,
-         |  round(CAST(max(n9) AS DOUBLE) / 1e9, 9) AS max
-         |FROM cd CROSS JOIN tt
-         |GROUP BY tt.n, tt.sn, tt.n_zero""".stripMargin
-    },
-
-    // q254: sorted trailing lists per window, twice-the-median
-    // element reads, the identical integer Hampel compare.
-    // q255: the batch gate-prefix SQL (normalize → langid → quality,
-    // the q62 funnel's own CTEs) — hashing the STREAM's micro-batched
-    // output against it certifies the stateless-prefix twin law under
-    // the driver's gate.
-    "q255_curate_stream" ->
-      s"""${curateStreamPrefixSql("TRUE")}
-         |SELECT doc_id, text, pred_lang, n_tokens, quality_score
-         |FROM sc WHERE quality_score >= $CurateMinQuality
-         |ORDER BY doc_id""".stripMargin,
-
-    // q263: loss- and duplicate-free across the restart ⇔ the sink
-    // equals the uninterrupted batch result — q255's own oracle.
-    "q263_curate_stream_restart" ->
-      s"""${curateStreamPrefixSql("TRUE")}
-         |SELECT doc_id, text, pred_lang, n_tokens, quality_score
-         |FROM sc WHERE quality_score >= $CurateMinQuality
-         |ORDER BY doc_id""".stripMargin,
-
-    // q260: the same gate prefix over the ODD half with the
-    // stream-static exact-dedup gate live — survivors are the gated
-    // odd docs whose NORMALIZED text hash is absent from the stored
-    // index (even half + the already-ingested % 8 = 1 re-crawl slice).
-    "q260_curate_stream_incremental" ->
-      s"""${curateStreamPrefixSql("doc_id % 2 = 1")},
-         |ev AS (
-         |  SELECT DISTINCT md5(
-         |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-         |         ' +', ' ', 'g'))) AS content_hash
-         |  FROM documents WHERE doc_id % 2 = 0 OR doc_id % 8 = 1
-         |)
-         |SELECT doc_id, text, pred_lang, n_tokens, quality_score
-         |FROM sc WHERE quality_score >= $CurateMinQuality
-         |  AND md5(sc.text) NOT IN (SELECT content_hash FROM ev)
-         |ORDER BY doc_id""".stripMargin,
-
-    // q264/q265/q266: the Complete-mode foreachBatch monitors hash
-    // their FINAL micro-batch re-derivation against the batch twins'
-    // own oracles (stream-equals-batch over all rows seen).
-    "q264_psi_stream" -> psiOracleSql,
-    "q265_sprt_stream" -> sprtTraceOracleSql,
-    "q266_corpus_report_stream" -> corpusReportOracleSql,
-
-    // q267: exactly one survivor per content key across micro-batches
-    // ⇔ the emitted hash set equals a batch SELECT DISTINCT (which
-    // ROW survives a same-batch collision is unguaranteed, so the
-    // deterministic projection is the hash itself).
-    "q267_dedup_stream" ->
-      """SELECT DISTINCT
-        |  md5(CAST(user_id AS VARCHAR) || '#' || event_type)
-        |    AS content_hash
-        |FROM events
-        |ORDER BY content_hash""".stripMargin,
-
-    // q268: the streaming z-score twin hashes against q133's batch
-    // SQL; q269: last-write-wins over the Update-mode emissions must
-    // equal the plain batch GROUP BY (sums at exact cents).
-    "q268_window_anomaly_stream" -> windowAnomalyOracleSql,
-    "q269_running_state_stream" ->
-      """SELECT user_id, count(*)::BIGINT AS n_events,
-        |  CAST(floor(sum(value) * 100 + 0.5) AS BIGINT) AS sum_cents
-        |FROM events GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "q254_window_anomaly_robust" -> robustAnomalyOracleSql,
-
-    // q257: the streaming Hampel twin hashes against the SAME batch
-    // SQL — the watermark-closed emissions must reproduce the batch
-    // anomaly table exactly.
-    "q257_window_anomaly_robust_stream" -> robustAnomalyOracleSql,
-
-    // q253: the same two compact key frames; the hottest key by
-    // (pairs DESC, key ASC).
-    "q253_join_fanout" ->
-      """WITH ca AS (
-        |  SELECT CAST(l_partkey AS VARCHAR) AS k, count(*)::BIGINT AS ca
-        |  FROM lineitem GROUP BY 1
-        |),
-        |cb AS (
-        |  SELECT CAST(l_partkey AS VARCHAR) AS k, count(*)::BIGINT AS cb
-        |  FROM lineitem GROUP BY 1
-        |),
-        |j AS (
-        |  SELECT ca.k, CAST(ca AS HUGEINT) * cb AS p
-        |  FROM ca JOIN cb USING (k)
-        |),
-        |tp AS (SELECT
-        |         (SELECT p FROM j ORDER BY p DESC, k LIMIT 1)
-        |           AS max_key_pairs,
-        |         (SELECT k FROM j ORDER BY p DESC, k LIMIT 1)
-        |           AS top_key),
-        |sa AS (SELECT count(*)::BIGINT AS n_keys_a,
-        |         sum(ca)::BIGINT AS rows_a FROM ca),
-        |sb AS (SELECT count(*)::BIGINT AS n_keys_b,
-        |         sum(cb)::BIGINT AS rows_b FROM cb),
-        |sj AS (SELECT count(*)::BIGINT AS n_common,
-        |         sum(p) AS est_pairs FROM j)
-        |SELECT n_keys_a, n_keys_b, n_common, rows_a, rows_b,
-        |  CAST(est_pairs AS BIGINT) AS est_pairs,
-        |  CAST(max_key_pairs AS BIGINT) AS max_key_pairs, top_key
-        |FROM sj CROSS JOIN sa CROSS JOIN sb CROSS JOIN tp""".stripMargin,
-
-    // q252: the q180 Gramian chain to integerized covariance entries,
-    // then the power-iteration rounds unrolled CTE-for-CTE with the
-    // identical normalize / sign / Rayleigh chains.
-    "q252_anisotropy" -> {
-      def rnd(r: Int) =
-        s"""w$r AS (SELECT cf.i, sum(CAST(c9 AS HUGEINT) * v) AS w
-           |  FROM cf JOIN v${r - 1} USING (j) GROUP BY cf.i),
-           |m$r AS (SELECT max(abs(w)) AS m FROM w$r),
-           |v$r AS (SELECT i AS j,
-           |  CAST(${Portable.sqlIntRatioScaledSigned("w", "m", 9)}
-           |    AS BIGINT) AS v
-           |  FROM w$r CROSS JOIN m$r)""".stripMargin
-      s"""WITH ev AS (
-         |  SELECT list_transform(embedding,
-         |      x -> CAST(floor(CAST(x AS DOUBLE) * 1e6 + 0.5) AS BIGINT))
-         |    AS xi
-         |  FROM embeddings
-         |  WHERE embedding IS NOT NULL AND len(embedding) = $EmbDims
-         |),
-         |n AS (SELECT count(*)::BIGINT AS n FROM ev),
-         |d AS (SELECT unnest(range(1, ${EmbDims + 1}))::BIGINT AS i),
-         |sums AS (
-         |  SELECT i, sum(xi[i])::BIGINT AS s FROM ev, d GROUP BY i
-         |),
-         |prods AS (
-         |  SELECT di.i AS i, dj.i AS j,
-         |    sum(xi[di.i] * xi[dj.i])::BIGINT AS sp
-         |  FROM ev, d di, d dj WHERE dj.i >= di.i GROUP BY 1, 2
-         |),
-         |tri AS (
-         |  SELECT p.i, p.j,
-         |    CAST(${Portable.sqlIntRatioScaledSigned(
-              "CAST(n.n AS HUGEINT) * p.sp - CAST(si.s AS HUGEINT) * sj.s",
-              "CAST(n.n AS HUGEINT) * n.n * 1000000000000", 9)}
-         |      AS BIGINT) AS c9
-         |  FROM prods p
-         |  JOIN sums si ON si.i = p.i
-         |  JOIN sums sj ON sj.i = p.j
-         |  CROSS JOIN n
-         |),
-         |cf AS (SELECT i, j, c9 FROM tri
-         |       UNION ALL
-         |       SELECT j AS i, i AS j, c9 FROM tri WHERE i <> j),
-         |v0 AS (SELECT i AS j, 1000000000::BIGINT AS v FROM d),
-         |${(1 to PowerRounds).map(rnd).mkString(",\n")},
-         |sg AS (SELECT CASE WHEN (SELECT v FROM v$PowerRounds
-         |         ORDER BY abs(v) DESC, j ASC LIMIT 1) < 0
-         |       THEN -1 ELSE 1 END AS s),
-         |vs AS (SELECT j, (v * s)::BIGINT AS v
-         |       FROM v$PowerRounds CROSS JOIN sg),
-         |nm AS (SELECT sum(CAST(c9 AS HUGEINT) * vj.v * vi.v) AS num
-         |       FROM cf JOIN vs vj ON vj.j = cf.j
-         |       JOIN vs vi ON vi.j = cf.i),
-         |dn AS (SELECT sum(CAST(v AS HUGEINT) * v) AS den FROM vs),
-         |tr AS (SELECT sum(c9)::BIGINT AS tr9 FROM tri WHERE i = j)
-         |SELECT j AS dim,
-         |  round(CAST(v AS DOUBLE) / 1e9, 9) AS loading,
-         |  CASE WHEN den > 0 THEN ${Portable.sqlIntRatioSigned9("num",
-              "CAST(den AS HUGEINT) * 1000000000")}
-         |  END AS eigenvalue,
-         |  CASE WHEN den > 0 AND tr9 > 0 THEN ${Portable.sqlIntRatioSigned9(
-              "num", "CAST(den AS HUGEINT) * tr9")}
-         |  END AS explained_share
-         |FROM vs CROSS JOIN nm CROSS JOIN dn CROSS JOIN tr
-         |ORDER BY dim""".stripMargin
-    },
-
-    // q251: the same break/score/assembly chain — zipped unnest for
-    // positions, window phrase ids, deg/freq integerized once,
-    // ordered string_agg assembly.
-    "q251_rake_keyphrases" -> {
-      val stopList = Text.EnStopwords.map(w => s"'$w'").mkString(", ")
-      s"""WITH tok AS (
-         |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w,
-         |    unnest(range(1, len(string_split(lower(text), ' ')) + 1))
-         |      AS pos
-         |  FROM documents
-         |),
-         |mk AS (
-         |  SELECT doc_id, pos, w,
-         |    CASE WHEN w IN ($stopList) OR w = '' THEN 1 ELSE 0 END
-         |      AS st
-         |  FROM tok
-         |),
-         |ph AS (
-         |  SELECT doc_id, pos, w, st,
-         |    sum(st) OVER (PARTITION BY doc_id ORDER BY pos ROWS
-         |      BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pid
-         |  FROM mk
-         |),
-         |wl AS (
-         |  SELECT doc_id, pid, pos, w,
-         |    count(*) OVER (PARTITION BY doc_id, pid) AS len
-         |  FROM ph WHERE st = 0
-         |),
-         |ws AS (
-         |  SELECT w, CAST(${Portable.sqlIntRatioScaled("sum(len)",
-              "count(*)", 9)} AS BIGINT) AS ws9
-         |  FROM wl GROUP BY w
-         |),
-         |pr AS (
-         |  SELECT wl.doc_id, wl.pid,
-         |    string_agg(wl.w, ' ' ORDER BY wl.pos) AS phrase,
-         |    count(*)::BIGINT AS n_words, sum(ws.ws9)::BIGINT AS s9
-         |  FROM wl JOIN ws USING (w)
-         |  GROUP BY wl.doc_id, wl.pid
-         |),
-         |ag AS (
-         |  SELECT phrase, max(n_words)::BIGINT AS n_words,
-         |    count(*)::BIGINT AS n_occurrences, max(s9)::BIGINT AS s9
-         |  FROM pr GROUP BY phrase
-         |)
-         |SELECT phrase, n_words, n_occurrences,
-         |  round(CAST(s9 AS DOUBLE) / 1e9, 9) AS score
-         |FROM ag ORDER BY s9 DESC, phrase LIMIT $RakeK""".stripMargin
-    },
-
-    // q250: DuckDB cannot read ORC, and doesn't need to — the oracle
-    // aggregates the PARQUET original of the same slice; matching
-    // hashes prove the ORC write→read preserved content exactly.
-    "q250_orc_roundtrip" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(length(text)) AS BIGINT) AS n_chars,
-        |  count(DISTINCT lang) AS n_langs, max(doc_id) AS max_id
-        |FROM documents WHERE doc_id % 8 = 0
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    // q271: salting is identity on algebraic counts — q10's own SQL.
-    "q271_salted_cooc" ->
-      s"""$pairsSqlCte
-         |SELECT target, context, count(*) AS cnt
-         |FROM pairs GROUP BY target, context
-         |ORDER BY target, context""".stripMargin,
-
-    // q272: the q250 content-equality protocol over the bucketed slice.
-    "q272_bucketed_roundtrip" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(length(text)) AS BIGINT) AS n_chars,
-        |  count(DISTINCT lang) AS n_langs, max(doc_id) AS max_id
-        |FROM documents WHERE doc_id % 8 = 1
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    // q249: the FULL-corpus rebuild of the exact-integer card — the
-    // engine's state-merge path must hash to this, which is the
-    // merge-equals-rebuild law under the driver's gate.
-    "q249_data_card_merge" ->
-      s"""$qualityScoreSqlCtes,
-         |st AS (
-         |  SELECT q.source AS source, q.lang AS lang,
-         |    count(*)::BIGINT AS n_docs,
-         |    sum(len(string_split(d.text, ' ')))::BIGINT AS n_tokens,
-         |    sum(CAST(CAST(floor(round(quality_score, 9) * 1e9 + 0.5)
-         |      AS BIGINT) AS HUGEINT)) AS sum_q9,
-         |    min(CAST(floor(round(quality_score, 9) * 1e9 + 0.5)
-         |      AS BIGINT))::BIGINT AS min_q9,
-         |    max(CAST(floor(round(quality_score, 9) * 1e9 + 0.5)
-         |      AS BIGINT))::BIGINT AS max_q9
-         |  FROM qs q JOIN documents d ON d.doc_id = q.doc_id
-         |  GROUP BY q.source, q.lang
-         |)
-         |SELECT source, lang, n_docs, n_tokens,
-         |  CASE WHEN n_docs > 0 THEN ${Portable.sqlIntRatio9(
-              "n_tokens", "n_docs")}
-         |  END AS mean_tokens,
-         |  CASE WHEN n_docs > 0 THEN ${Portable.sqlIntRatio9("sum_q9",
-              "CAST(n_docs AS HUGEINT) * 1000000000")}
-         |  END AS mean_quality,
-         |  round(CAST(min_q9 AS DOUBLE) / 1e9, 9) AS min_quality,
-         |  round(CAST(max_q9 AS DOUBLE) / 1e9, 9) AS max_quality
-         |FROM st ORDER BY source, lang""".stripMargin,
-
-    "q7_quality_nulls" -> {
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      "SELECT count(*) AS n_rows, " +
-        cols.map(c =>
-          s"CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_$c")
-          .mkString(", ") +
-        " FROM lineitem"
-    },
-
-    "q8_pk_check" ->
-      "SELECT count(*) AS n_rows, count(DISTINCT p_partkey) AS n_distinct FROM part",
-
-    "q9_distinct_counts" ->
-      """SELECT count(DISTINCT l_partkey) AS n_products,
-        |       count(DISTINCT l_orderkey) AS n_orders FROM lineitem""".stripMargin,
-
-    "q10_skipgram_cooc" ->
-      s"""$pairsSqlCte
-         |SELECT target, context, count(*) AS cnt
-         |FROM pairs GROUP BY target, context
-         |ORDER BY target, context""".stripMargin,
-
-    "q11_sampling_table" ->
-      s"""SELECT idx, round(CAST(CAST(floor(round(keep_prob, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS keep_prob FROM (
-         |${Pairs.samplingTableSql(VocabK, SamplingFactor)}
-         |) ORDER BY idx""".stripMargin,
-
-    "q12_subsampled_pairs" ->
-      s"""$pairsSqlCte,
-         |sampling AS (
-         |${Pairs.samplingTableSql(VocabK, SamplingFactor)}
-         |)
-         |SELECT p.target, count(*) AS n_pairs
-         |FROM pairs p JOIN sampling s ON p.target = s.idx
-         |WHERE ${Portable.sqlUnif("p.order_id", "p.pos_t", "p.target")} < s.keep_prob
-         |GROUP BY p.target ORDER BY p.target""".stripMargin,
-
-    "q13_negatives" -> {
-      val u = Portable.sqlUnif("order_id", "pos_t", "pos_c", "k")
-      s"""$pairsSqlCte
-         |SELECT order_id, pos_t, pos_c, target, context, k,
-         |       least(${VocabK - 1},
-         |         CAST(floor(exp($u * ln(${VocabK + 1}.0))) AS BIGINT) - 1) AS neg
-         |FROM pairs, (SELECT unnest(generate_series(0, ${NumNs - 1})) AS k) ks
-         |ORDER BY order_id, pos_t, pos_c, k""".stripMargin
-    },
-
-    "q14_copurchase_topk" -> q14OracleSql,
-
-    // identical SQL by design: the auto-chosen salt count changes only
-    // the physical shuffle, never a value (saltedCounts law)
-    "q147_auto_salted_topk" -> q14OracleSql,
-
-    "q15_neighbor_report" ->
-      s"""$pairsSqlCte,
-         |cooc AS (
-         |  SELECT target, context, count(*) AS cnt
-         |  FROM pairs GROUP BY target, context
-         |),
-         |topk AS (
-         |  SELECT target, context, cnt,
-         |         row_number() OVER (PARTITION BY target
-         |           ORDER BY cnt DESC, context ASC) AS rnk
-         |  FROM cooc
-         |)
-         |SELECT vt.pid AS target_pid,
-         |       string_agg(pc.p_name, '; ' ORDER BY t.rnk) AS neighbors
-         |FROM topk t
-         |JOIN vocab vt ON t.target = vt.idx
-         |JOIN vocab vc ON t.context = vc.idx
-         |JOIN part pc ON vc.pid = pc.p_partkey
-         |WHERE t.rnk <= $TopK
-         |GROUP BY vt.pid ORDER BY target_pid""".stripMargin,
-
-    "q16_cosine_topk" -> q16OracleSql
-  )
-
-  private def extOracleSql: Map[String, String] = Map(
-
-    // q126: every regression sum runs exactly over integers/DECIMAL(38,0)
-    // and the normal equations are formed in exact decimal before ONE
-    // cast to double — bit-identical slope/intercept/r2 cross-engine
-    // (the 1e6-scaled floor(+0.5) per-term ln rounding absorbs libm's
-    // 1-ulp differences).
-    "q126_zipf_audit" ->
-      s"""WITH ztf AS (
-         |  SELECT w, count(*)::BIGINT AS c
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS w
-         |        FROM documents) _
-         |  GROUP BY w
-         |),
-         |zroll AS (
-         |  SELECT count(*)::BIGINT AS vocab_size,
-         |    sum(c)::BIGINT AS total_tokens,
-         |    sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)::BIGINT AS hapax_count
-         |  FROM ztf
-         |),
-         |ztop AS (
-         |  SELECT c, row_number() OVER (ORDER BY c DESC, w ASC) AS rank
-         |  FROM ztf ORDER BY c DESC, w ASC LIMIT $ZipfFitTopK
-         |),
-         |zxy AS (
-         |  SELECT rank, c,
-         |    CAST(floor(ln(rank) * 1e6 + 0.5) AS BIGINT) AS x,
-         |    CAST(floor(ln(c) * 1e6 + 0.5) AS BIGINT) AS y
-         |  FROM ztop
-         |),
-         |zfit AS (
-         |  SELECT count(*)::BIGINT AS n,
-         |    sum(x)::BIGINT AS sx,
-         |    sum(y)::BIGINT AS sy,
-         |    sum(x * y)::BIGINT AS sxy,
-         |    sum(x * x)::BIGINT AS sxx,
-         |    sum(y * y)::BIGINT AS syy,
-         |    sum(CASE WHEN rank <= 100 THEN c ELSE 0 END)::BIGINT
-         |      AS top100_tokens
-         |  FROM zxy
-         |),
-         |zd AS (
-         |  SELECT n, top100_tokens,
-         |    CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS dxy,
-         |    CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS dxx,
-         |    CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS dyy,
-         |    CAST(sy AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sxy
-         |      AS anum
-         |  FROM zfit
-         |)
-         |SELECT zroll.vocab_size, zroll.total_tokens, zroll.hapax_count,
-         |  zd.top100_tokens, zd.n AS fit_terms,
-         |  CASE WHEN dxx <> 0 THEN
-         |    ${Portable.sqlIntRatioSigned9("dxy", "dxx")}
-         |  END AS zipf_slope,
-         |  CASE WHEN dxx <> 0 THEN
-         |    ${Portable.sqlIntRatioSigned9("anum", "dxx * 1000000")}
-         |  END AS zipf_intercept,
-         |  CASE WHEN dxx <> 0 AND dyy <> 0 THEN
-         |    round(CAST(CAST(floor(round(CAST(dxy AS DOUBLE)
-         |      * CAST(dxy AS DOUBLE) / (CAST(dxx AS DOUBLE)
-         |      * CAST(dyy AS DOUBLE)), 9) * 1e9 + 0.5) AS BIGINT)
-         |      AS DOUBLE) / 1e9, 9) END AS zipf_r2
-         |FROM zroll CROSS JOIN zd""".stripMargin,
-
-    // q127: same keyed-hash offset draw as the Spark side; DuckDB list
-    // slices are 1-based inclusive, l[1:0] is empty.
-    "q127_ict_pairs" ->
-      s"""WITH it AS (
-         |  SELECT doc_id, string_split(text, ' ') AS t,
-         |    len(string_split(text, ' '))::BIGINT AS n
-         |  FROM documents
-         |),
-         |ia AS (
-         |  SELECT doc_id, t, n,
-         |    ${Portable.sqlHash("doc_id", "'ict'")}
-         |      % (n - $IctSpanTokens + 1) AS a
-         |  FROM it WHERE n >= ${2 * IctSpanTokens}
-         |)
-         |SELECT doc_id, n AS n_tokens, a AS span_start,
-         |  array_to_string(t[(a + 1):(a + $IctSpanTokens)], ' ') AS query,
-         |  array_to_string(
-         |    list_concat(t[1:a], t[(a + $IctSpanTokens + 1):n]), ' ')
-         |    AS passage
-         |FROM ia ORDER BY doc_id""".stripMargin,
-
-    "q128_pack_audit" -> s"WITH ${packAuditTailSql("documents")}",
-
-    // q135: the CDC pair-hash boundary and its running sum, relational
-    // on both sides.
-    "q135_chunks_cdc" ->
-      s"""WITH $cdcChunkCtes
-         |SELECT doc_id, chunk_idx, n_tokens, chunk
-         |FROM cdcch ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // q137: the q135 chunks grouped by content hash, rolled to totals.
-    "q137_cdc_dedup_rate" ->
-      s"""WITH $cdcChunkCtes,
-         |ch AS (
-         |  SELECT md5(chunk) AS h, count(*)::BIGINT AS c,
-         |    max(n_tokens)::BIGINT AS t
-         |  FROM cdcch GROUP BY md5(chunk)
-         |)
-         |SELECT sum(c)::BIGINT AS n_chunks,
-         |  count(*)::BIGINT AS n_unique_chunks,
-         |  sum(c - 1)::BIGINT AS dup_chunks,
-         |  ${Portable.sqlIntRatio9("sum(c - 1)", "sum(c)")}
-         |    AS dup_chunk_ratio,
-         |  sum(c * t)::BIGINT AS n_tokens,
-         |  sum((c - 1) * t)::BIGINT AS dup_tokens,
-         |  ${Portable.sqlIntRatio9("sum((c - 1) * t)", "sum(c * t)")}
-         |    AS dup_token_ratio
-         |FROM ch""".stripMargin,
-
-    // q138: user-keyed lag + matrix count + row-normalizing window.
-    "q138_transition_matrix" ->
-      s"""WITH tp AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM events
-        |),
-        |tc AS (
-        |  SELECT prev AS from_type, event_type AS to_type,
-        |    count(*)::BIGINT AS n
-        |  FROM tp WHERE prev IS NOT NULL GROUP BY 1, 2
-        |)
-        |SELECT from_type, to_type, n,
-        |  ${Portable.sqlIntRatio9("n",
-            "sum(n) OVER (PARTITION BY from_type)")} AS p
-        |FROM tc ORDER BY from_type, to_type""".stripMargin,
-
-    "q139_signal_corr" -> q139OracleSql,
-
-    // q146: the q59 planted-PII chain (source carried through), rolled
-    // up per source with the same staged counts.
-    "q146_pii_by_source" ->
-      s"""WITH aug AS (
-         |  SELECT doc_id, source,
-         |    text || ' contact user' || doc_id::VARCHAR ||
-         |    '@mail.example.org via https://ex.org/u/' || doc_id::VARCHAR ||
-         |    ' tel 555' || lpad(doc_id::VARCHAR, 7, '0') ||
-         |    ' ph 555-' || lpad((doc_id % 1000)::VARCHAR, 3, '0') ||
-         |    '-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') ||
-         |    ' ip 10.' || (doc_id % 256)::VARCHAR || '.0.7' AS text
-         |  FROM documents
-         |), st AS (
-         |  SELECT doc_id, source, text,
-         |    regexp_replace(text, '${Text.UrlRe}', '<URL>', 'g') AS u
-         |  FROM aug
-         |), st2 AS (
-         |  SELECT doc_id, source, text, u,
-         |    regexp_replace(u, '${Text.EmailRe}', '<EMAIL>', 'g') AS e
-         |  FROM st
-         |), st3 AS (
-         |  SELECT doc_id, source, text, u, e,
-         |    regexp_replace(e, '${Text.PhoneRe}', '<PHONE>', 'g') AS p
-         |  FROM st2
-         |), st4 AS (
-         |  SELECT doc_id, source, text, u, e, p,
-         |    regexp_replace(p, '${Text.Ipv4Re}', '<IP>', 'g') AS i
-         |  FROM st3
-         |), pcn AS (
-         |  SELECT source,
-         |    len(regexp_extract_all(text, '${Text.UrlRe}'))::BIGINT AS nu,
-         |    len(regexp_extract_all(u, '${Text.EmailRe}'))::BIGINT AS ne,
-         |    len(regexp_extract_all(e, '${Text.PhoneRe}'))::BIGINT AS np,
-         |    len(regexp_extract_all(p, '${Text.Ipv4Re}'))::BIGINT AS ni,
-         |    len(regexp_extract_all(i, '${Text.LongNumRe}'))::BIGINT AS nn
-         |  FROM st4
-         |)
-         |SELECT source, count(*)::BIGINT AS n_docs,
-         |  sum(CASE WHEN nu + ne + np + ni + nn > 0 THEN 1 ELSE 0 END)
-         |    ::BIGINT AS docs_with_pii,
-         |  sum(nu)::BIGINT AS n_urls, sum(ne)::BIGINT AS n_emails,
-         |  sum(np)::BIGINT AS n_phones, sum(ni)::BIGINT AS n_ips,
-         |  sum(nn)::BIGINT AS n_long_nums,
-         |  ${Portable.sqlIntRatio9(
-             "sum(CASE WHEN nu + ne + np + ni + nn > 0 THEN 1 ELSE 0 END)",
-             "count(*)")} AS pii_doc_ratio
-         |FROM pcn GROUP BY source ORDER BY source""".stripMargin,
-
-    // q145: the q55 chain unfiltered, per-doc max, integer-edge bins,
-    // descending cumulative.
-    "q145_dedup_sensitivity" ->
-      s"""$shingleSqlCte,
-         |posts AS (
-         |  SELECT doc_id, unnest(shingles) AS s FROM sh
-         |),
-         |keep AS (
-         |  SELECT s FROM posts GROUP BY s HAVING count(*) <= $JaccardMaxDf
-         |),
-         |p AS (
-         |  SELECT posts.doc_id, posts.s FROM posts JOIN keep USING (s)
-         |),
-         |inter AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-         |  FROM p a JOIN p b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM p GROUP BY doc_id),
-         |jacall AS (
-         |  SELECT id_a, id_b,
-         |    ${Portable.sqlIntRatio9("i", "sa.sz + sb.sz - i")}
-         |      AS jaccard
-         |  FROM inter JOIN sz sa ON inter.id_a = sa.doc_id
-         |             JOIN sz sb ON inter.id_b = sb.doc_id
-         |),
-         |mxj AS (
-         |  SELECT id, max(jaccard) AS mj FROM (
-         |    SELECT id_a AS id, jaccard FROM jacall
-         |    UNION ALL SELECT id_b, jaccard FROM jacall) _
-         |  GROUP BY id
-         |),
-         |bk AS (
-         |  SELECT CAST(floor(mj * 20) AS BIGINT) AS bucket,
-         |    count(*)::BIGINT AS n_docs
-         |  FROM mxj GROUP BY 1
-         |)
-         |SELECT ${Portable.sqlIntRatio9("bucket", "20")} AS tau_floor,
-         |  n_docs,
-         |  (sum(n_docs) OVER (ORDER BY bucket DESC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT
-         |    AS cum_docs_ge
-         |FROM bk ORDER BY tau_floor""".stripMargin,
-
-    // q144: the oracle reads the SPARK-WRITTEN parquet files — the
-    // interchange check that the stored index is engine-portable.
-    "q144_chunk_index_roundtrip" ->
-      s"""SELECT count(*)::BIGINT AS n_unique_chunks,
-         |  sum(n_refs)::BIGINT AS n_chunk_refs,
-         |  sum(n_tokens)::BIGINT AS n_tokens,
-         |  count(DISTINCT chunk_hash)::BIGINT AS n_hashes
-         |FROM read_parquet('${q144IdxPath(SfToken)}/*.parquet')
-         |""".stripMargin,
-
-    // q143: the q114 realization CTEs (text carried through) feeding
-    // the q67 packing tail over composite copy ids.
-    "q143_epoch_pack" -> {
-      val vals = EpochWeights.toSeq.sorted
-        .map { case (s, w) => s"('$s', ${w}::DOUBLE)" }.mkString(", ")
-      val wsum = EpochWeights.values.sum
-      s"""WITH wt(source, weight) AS (VALUES $vals),
-         |tc AS (
-         |  SELECT source, sum(len(string_split(text, ' ')))::BIGINT
-         |    AS n_tokens
-         |  FROM documents GROUP BY source
-         |),
-         |fac AS (
-         |  SELECT t.source,
-         |    ${Portable.sqlIntRatio9(s"CAST(floor(coalesce(w.weight, 0.0)" +
-                 s" / $wsum * ${EpochBudget.toDouble} + 0.5) AS BIGINT)",
-               "t.n_tokens")} AS factor
-         |  FROM tc t LEFT JOIN wt w USING (source)
-         |),
-         |nn AS (
-         |  SELECT d.doc_id, d.text,
-         |    (floor(f.factor) + CASE WHEN
-         |        ${Portable.sqlUnif("d.doc_id", s"'$EpochRealizeSalt'")}
-         |        < f.factor - floor(f.factor) THEN 1 ELSE 0 END)::BIGINT
-         |      AS n
-         |  FROM documents d JOIN fac f USING (source)
-         |),
-         |ee AS (
-         |  SELECT doc_id, text,
-         |    unnest(range(1, n + 1))::BIGINT AS epoch_copy
-         |  FROM nn WHERE n >= 1
-         |),
-         |erz AS (
-         |  SELECT (doc_id * 1024 + epoch_copy)::BIGINT AS doc_id, text
-         |  FROM ee
-         |),
-         |${packTailSql("erz")}""".stripMargin
-    },
-
-    // q142: per-user ordered prefix → path count → deterministic top-k.
-    "q142_top_paths" ->
-      s"""WITH pr AS (
-         |  SELECT user_id, event_type,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS rn
-         |  FROM events
-         |),
-         |pp AS (
-         |  SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path
-         |  FROM pr WHERE rn <= $PathLen GROUP BY user_id
-         |),
-         |pc AS (SELECT path, count(*)::BIGINT AS n_users
-         |       FROM pp GROUP BY path)
-         |SELECT path, n_users,
-         |  row_number() OVER (ORDER BY n_users DESC, path ASC)::BIGINT
-         |    AS rank
-         |FROM pc ORDER BY n_users DESC, path ASC LIMIT $PathTopK""".stripMargin,
-
-    // q141: exact count moments; entropy from the integerized-ln sum
-    // (H = ln N − Σ c·x_c / (N·1e6)), identical shape both engines.
-    "q141_key_skew" ->
-      s"""WITH kc AS (
-        |  SELECT l_partkey AS k, count(*)::BIGINT AS c
-        |  FROM lineitem GROUP BY l_partkey
-        |),
-        |kt AS (
-        |  SELECT sum(c)::BIGINT AS top10_rows
-        |  FROM (SELECT c FROM kc ORDER BY c DESC, k ASC LIMIT 10) _
-        |),
-        |km AS (
-        |  SELECT count(*)::BIGINT AS n_keys, sum(c)::BIGINT AS n_rows,
-        |    max(c)::BIGINT AS max_key_rows,
-        |    CAST(sum(CAST(c AS DECIMAL(38,0)) *
-        |      CAST(floor(ln(c) * 1e6 + 0.5) AS DECIMAL(38,0)))
-        |      AS DECIMAL(38,0)) AS sclnc
-        |  FROM kc
-        |)
-        |SELECT km.n_rows, km.n_keys, km.max_key_rows,
-        |  ${Portable.sqlIntRatio9("km.max_key_rows", "km.n_rows")}
-        |    AS max_key_share,
-        |  kt.top10_rows,
-        |  ${Portable.sqlIntRatio9("kt.top10_rows", "km.n_rows")}
-        |    AS top10_share,
-        |  ${Portable.sqlRatio9("ln(km.n_rows::DOUBLE)" +
-            " - CAST(km.sclnc AS DOUBLE) / (km.n_rows::DOUBLE * 1e6)")}
-        |    AS entropy
-        |FROM km CROSS JOIN kt""".stripMargin,
-
-    // q140: chunk the whole corpus once (boundaries are per-document,
-    // so chunking the union equals chunking each split), hash-split
-    // into stored index vs new batch, anti-join, reassemble.
-    "q140_chunk_scrub_incr" ->
-      s"""WITH $cdcChunkCtes,
-         |st AS (SELECT DISTINCT md5(chunk) AS h FROM cdcch
-         |       WHERE doc_id < $EvalSetDocs),
-         |nw AS (SELECT * FROM cdcch WHERE doc_id >= $EvalSetDocs),
-         |tot AS (SELECT doc_id, count(*)::BIGINT AS n_chunks
-         |        FROM nw GROUP BY doc_id),
-         |kp AS (SELECT nw.* FROM nw LEFT JOIN st ON md5(nw.chunk) = st.h
-         |       WHERE st.h IS NULL),
-         |rb AS (SELECT doc_id, count(*)::BIGINT AS kept,
-         |         string_agg(chunk, ' ' ORDER BY chunk_idx)
-         |           AS text_scrubbed
-         |       FROM kp GROUP BY doc_id)
-         |SELECT t.doc_id, t.n_chunks,
-         |  (t.n_chunks - coalesce(rb.kept, 0))::BIGINT AS n_dropped,
-         |  coalesce(rb.text_scrubbed, '') AS text_scrubbed
-         |FROM tot t LEFT JOIN rb USING (doc_id)
-         |ORDER BY t.doc_id""".stripMargin,
-
-    // q136: the q57 reach chain + per-transition exact quantiles of
-    // ms-floor reach-time differences.
-    "q136_funnel_latency" ->
-      s"""WITH s1 AS (
-         |  SELECT user_id, min(ts) AS rt FROM events
-         |  WHERE event_type = '${FunnelStages(0)}' GROUP BY user_id
-         |),
-         |s2 AS (
-         |  SELECT e.user_id, min(e.ts) AS rt FROM events e
-         |  JOIN s1 ON e.user_id = s1.user_id
-         |  WHERE e.event_type = '${FunnelStages(1)}' AND e.ts > s1.rt
-         |  GROUP BY e.user_id
-         |),
-         |s3 AS (
-         |  SELECT e.user_id, min(e.ts) AS rt FROM events e
-         |  JOIN s2 ON e.user_id = s2.user_id
-         |  WHERE e.event_type = '${FunnelStages(2)}' AND e.ts > s2.rt
-         |  GROUP BY e.user_id
-         |),
-         |l1 AS (
-         |  SELECT epoch_ms(s2.rt) - epoch_ms(s1.rt) AS lat_ms
-         |  FROM s2 JOIN s1 USING (user_id)
-         |),
-         |l2 AS (
-         |  SELECT epoch_ms(s3.rt) - epoch_ms(s2.rt) AS lat_ms
-         |  FROM s3 JOIN s2 USING (user_id)
-         |)
-         |SELECT 1::BIGINT AS step_idx, '${FunnelStages(0)}' AS from_stage,
-         |  '${FunnelStages(1)}' AS to_stage, count(*)::BIGINT AS n_users,
-         |  round(CAST(CAST(floor(round(quantile_cont(lat_ms, 0.25), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS p25,
-         |  round(CAST(CAST(floor(round(quantile_cont(lat_ms, 0.5), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS p50,
-         |  round(CAST(CAST(floor(round(quantile_cont(lat_ms, 0.95), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS p95,
-         |  min(lat_ms)::BIGINT AS min_ms, max(lat_ms)::BIGINT AS max_ms
-         |FROM l1
-         |UNION ALL
-         |SELECT 2::BIGINT, '${FunnelStages(1)}', '${FunnelStages(2)}',
-         |  count(*)::BIGINT,
-         |  round(CAST(CAST(floor(round(quantile_cont(lat_ms, 0.25), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9),
-         |  round(CAST(CAST(floor(round(quantile_cont(lat_ms, 0.5), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9),
-         |  round(CAST(CAST(floor(round(quantile_cont(lat_ms, 0.95), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9),
-         |  min(lat_ms)::BIGINT, max(lat_ms)::BIGINT
-         |FROM l2
-         |ORDER BY step_idx""".stripMargin,
-
-    // q134: identical vt arithmetic and total tiebreak both engines.
-    "q134_interleave" ->
-      s"""WITH iw AS (
-         |  SELECT source,
-         |    (${Portable.sqlHash("source", "'w'")} % 5 + 1)::DOUBLE AS weight
-         |  FROM (SELECT DISTINCT source FROM documents) _
-         |),
-         |ib AS (
-         |  SELECT d.doc_id, d.source,
-         |    ${Portable.sqlHash("doc_id", "'il'")} AS h,
-         |    ${Portable.sqlHash("doc_id", "'il'", "'shard'")}
-         |      % $InterleaveShards AS shard,
-         |    iw.weight
-         |  FROM documents d JOIN iw USING (source)
-         |),
-         |ii AS (
-         |  SELECT *, row_number() OVER
-         |    (PARTITION BY source ORDER BY h, doc_id)::BIGINT AS i
-         |  FROM ib
-         |),
-         |iv AS (
-         |  SELECT shard, doc_id, source, i::DOUBLE / weight AS vt FROM ii
-         |)
-         |SELECT shard, doc_id, source,
-         |  row_number() OVER
-         |    (PARTITION BY shard ORDER BY vt, source, doc_id)::BIGINT AS pos,
-         |  round(CAST(CAST(floor(round(vt, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS vt
-         |FROM iv ORDER BY shard, pos""".stripMargin,
-
-    // q131: first owner of each shingle as a window min; docs without
-    // shingles keep 0 counts and a NULL ratio.
-    "q131_novelty" ->
-      s"""$shingleSqlCte,
-         |nv AS (SELECT doc_id, unnest(shingles) AS g FROM sh),
-         |nf AS (
-         |  SELECT doc_id, min(doc_id) OVER (PARTITION BY g) AS first_doc
-         |  FROM nv
-         |),
-         |np AS (
-         |  SELECT doc_id, count(*)::BIGINT AS n_distinct,
-         |    sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END)::BIGINT
-         |      AS n_novel
-         |  FROM nf GROUP BY doc_id
-         |)
-         |SELECT d.doc_id,
-         |  coalesce(np.n_distinct, 0)::BIGINT AS n_distinct,
-         |  coalesce(np.n_novel, 0)::BIGINT AS n_novel,
-         |  ${Portable.sqlIntRatio9("np.n_novel", "np.n_distinct")}
-         |    AS novelty_ratio
-         |FROM documents d LEFT JOIN np ON np.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // q132: gates evaluated independently; the flag tuple is the key.
-    "q132_gate_overlap" ->
-      s"""WITH gc AS (
-         |  SELECT doc_id, max(c)::DOUBLE / sum(c) AS topfrac
-         |  FROM (SELECT doc_id, w, count(*)::BIGINT AS c
-         |        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-         |              FROM documents) _
-         |        GROUP BY doc_id, w) _
-         |  GROUP BY doc_id
-         |),
-         |fl AS (
-         |  SELECT (d.lang = 'en') AS lang_ok,
-         |    (len(string_split(d.text, ' ')) BETWEEN 10 AND 1000) AS len_ok,
-         |    (gc.topfrac <= $ConcMax) AS conc_ok
-         |  FROM documents d JOIN gc USING (doc_id)
-         |)
-         |SELECT lang_ok, len_ok, conc_ok, count(*)::BIGINT AS n_docs,
-         |  (CASE WHEN lang_ok THEN 0 ELSE 1 END
-         |   + CASE WHEN len_ok THEN 0 ELSE 1 END
-         |   + CASE WHEN conc_ok THEN 0 ELSE 1 END)::BIGINT AS n_gates_failed
-         |FROM fl GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    // q133: exact-integer baseline moments; the z expression shape is
-    // identical to the Spark side so even the floats are bit-equal.
-    "q133_window_anomaly" -> windowAnomalyOracleSql,
-
-    // q130: the q20 jac pairs bridged to their sources; unordered cells.
-    "q130_dup_source_matrix" ->
-      s"""$lshJacSqlCte,
-         |ndp AS (
-         |  SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= $JaccardTau
-         |)
-         |SELECT least(da.source, db.source) AS source_a,
-         |  greatest(da.source, db.source) AS source_b,
-         |  count(*)::BIGINT AS n_pairs,
-         |  ${Portable.sqlIntRatio9(
-             "sum(CAST(floor(jaccard * 1e9 + 0.5) AS BIGINT))",
-             "CAST(count(*) AS HUGEINT) * 1000000000")} AS avg_jaccard
-         |FROM ndp
-         |JOIN documents da ON da.doc_id = ndp.id_a
-         |JOIN documents db ON db.doc_id = ndp.id_b
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q17_exact_dup_groups" ->
-      """SELECT md5(text) AS content_hash, count(*) AS n_docs,
-        |       min(doc_id) AS keep_id
-        |FROM documents GROUP BY md5(text) ORDER BY content_hash""".stripMargin,
-
-    "q18_dedup_keep_first" ->
-      """SELECT d.doc_id, d.lang, d.source, d.n_chars
-        |FROM documents d
-        |JOIN (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)) k
-        |  USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q19_minhash_sig" ->
-      s"""$minhashSqlCte
-         |SELECT doc_id, p, sig[p + 1] AS h
-         |FROM sig, (SELECT unnest(range(0, $NumPerms)) AS p)
-         |ORDER BY doc_id, p""".stripMargin,
-
-    "q20_lsh_near_pairs" ->
-      s"""$lshJacSqlCte
-         |SELECT id_a, id_b, jaccard FROM jac
-         |WHERE jaccard >= $JaccardTau ORDER BY id_a, id_b""".stripMargin,
-
-    // q55: same inverted-index construction as the Spark side — shared
-    // shingle COUNT + set sizes, no per-pair list intersection.
-    "q55_jaccard_exact" ->
-      s"""$shingleSqlCte,
-         |posts AS (
-         |  SELECT doc_id, unnest(shingles) AS s FROM sh
-         |),
-         |keep AS (
-         |  SELECT s FROM posts GROUP BY s HAVING count(*) <= $JaccardMaxDf
-         |),
-         |p AS (
-         |  SELECT posts.doc_id, posts.s FROM posts JOIN keep USING (s)
-         |),
-         |inter AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-         |  FROM p a JOIN p b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM p GROUP BY doc_id)
-         |SELECT id_a, id_b,
-         |  ${Portable.sqlIntRatio9("i", "sa.sz + sb.sz - i")}
-         |    AS jaccard
-         |FROM inter JOIN sz sa ON inter.id_a = sa.doc_id
-         |           JOIN sz sb ON inter.id_b = sb.doc_id
-         |WHERE ${Portable.sqlIntRatio9("i", "sa.sz + sb.sz - i")}
-         |  >= $JaccardTau
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // q120: q55's posting-list join with the min-size denominator —
-    // identical CTE chain, asymmetric final scalar.
-    "q120_containment_pairs" ->
-      s"""$shingleSqlCte,
-         |posts AS (
-         |  SELECT doc_id, unnest(shingles) AS s FROM sh
-         |),
-         |keep AS (
-         |  SELECT s FROM posts GROUP BY s HAVING count(*) <= $JaccardMaxDf
-         |),
-         |p AS (
-         |  SELECT posts.doc_id, posts.s FROM posts JOIN keep USING (s)
-         |),
-         |inter AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-         |  FROM p a JOIN p b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM p GROUP BY doc_id)
-         |SELECT id_a, id_b, sa.sz AS sz_a, sb.sz AS sz_b,
-         |  ${Portable.sqlIntRatio9("i", "least(sa.sz, sb.sz)")}
-         |    AS containment
-         |FROM inter JOIN sz sa ON inter.id_a = sa.doc_id
-         |           JOIN sz sb ON inter.id_b = sb.doc_id
-         |WHERE ${Portable.sqlIntRatio9("i", "least(sa.sz, sb.sz)")}
-         |  >= $ContainTau
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // q121: the identical CMS table (portable keyed hash per (salt, r,
-    // token)), exact counts as the candidate set, min-over-rows
-    // estimates.
-    "q121_cms_audit" ->
-      s"""WITH tok AS (
-         |  SELECT unnest(string_split(text, ' ')) AS w FROM documents
-         |),
-         |rs AS (SELECT unnest(range(0, $CmsDepth)) AS r),
-         |sk AS (
-         |  SELECT r, ${Portable.sqlHash(s"'$CmsSalt'", "r", "w")}
-         |           % $CmsWidth AS c,
-         |         count(*)::BIGINT AS cnt
-         |  FROM tok CROSS JOIN rs GROUP BY 1, 2
-         |),
-         |exact AS (
-         |  SELECT w AS token, count(*)::BIGINT AS exact FROM tok
-         |  GROUP BY w HAVING count(*) >= $CmsMinCount
-         |),
-         |cells AS (
-         |  SELECT e.token, rs.r,
-         |    ${Portable.sqlHash(s"'$CmsSalt'", "rs.r", "e.token")}
-         |      % $CmsWidth AS c
-         |  FROM exact e CROSS JOIN rs
-         |),
-         |est AS (
-         |  SELECT token, min(coalesce(sk.cnt, 0))::BIGINT AS est
-         |  FROM cells LEFT JOIN sk ON cells.r = sk.r AND cells.c = sk.c
-         |  GROUP BY token
-         |)
-         |SELECT token, exact, est, est - exact AS overestimate
-         |FROM exact JOIN est USING (token)
-         |ORDER BY token""".stripMargin,
-
-    // q119: q55's exact pairs LEFT JOIN q20's LSH-verified pairs,
-    // rolled up per jaccard decile — the empirical banding-recall
-    // curve (identical double math, so the band floor agrees).
-    "q119_lsh_recall" ->
-      s"""$lshJacSqlCte,
-         |lshp AS (SELECT id_a AS fa, id_b AS fb, 1 AS hit FROM jac
-         |         WHERE jaccard >= $LshAuditTau),
-         |posts AS (
-         |  SELECT doc_id, unnest(shingles) AS s FROM sh
-         |),
-         |keep AS (
-         |  SELECT s FROM posts GROUP BY s HAVING count(*) <= $JaccardMaxDf
-         |),
-         |p AS (
-         |  SELECT posts.doc_id, posts.s FROM posts JOIN keep USING (s)
-         |),
-         |inter AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-         |  FROM p a JOIN p b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM p GROUP BY doc_id),
-         |ex AS (
-         |  SELECT id_a, id_b,
-         |    ${Portable.sqlIntRatio9("i", "sa.sz + sb.sz - i")}
-         |      AS jaccard
-         |  FROM inter JOIN sz sa ON inter.id_a = sa.doc_id
-         |             JOIN sz sb ON inter.id_b = sb.doc_id
-         |  WHERE ${Portable.sqlIntRatio9("i", "sa.sz + sb.sz - i")}
-         |    >= $LshAuditTau
-         |)
-         |SELECT floor(ex.jaccard * 10)::BIGINT AS sim_band,
-         |  count(*)::BIGINT AS n_true,
-         |  count(l.hit)::BIGINT AS n_found,
-         |  ${Portable.sqlIntRatio9("count(l.hit)", "count(*)")}
-         |    AS recall
-         |FROM ex LEFT JOIN lshp l ON ex.id_a = l.fa AND ex.id_b = l.fb
-         |GROUP BY sim_band ORDER BY sim_band""".stripMargin,
-
-    // q43: anti-join against the larger ids of the verified near-pairs
-    // (id_a < id_b in jac, so id_b is always the drop candidate).
-    "q43_near_dedup" ->
-      s"""$lshJacSqlCte,
-         |drops AS (
-         |  SELECT DISTINCT id_b FROM jac WHERE jaccard >= $JaccardTau
-         |)
-         |SELECT d.doc_id, d.lang, d.source, d.n_chars
-         |FROM documents d LEFT JOIN drops k ON d.doc_id = k.id_b
-         |WHERE k.id_b IS NULL
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // q51: transitive closure via recursive CTE — rep = min id reachable
-    // over the verified-pair edges (both directions; UNION dedups rows,
-    // so the recursion terminates on the finite reachability set).
-    // RECURSIVE must head the whole WITH chain in DuckDB, hence the
-    // replaceFirst on the shared CTE prefix.
-    "q51_near_dup_clusters" ->
-      s"""${lshJacSqlCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |$nearDupReachCte
-         |SELECT id AS doc_id, min(r) AS cluster_rep
-         |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-
-    // q91: q51's recursive component labels, completed to the full
-    // corpus (singleton = own label), window-counted per cluster.
-    "q91_softdedup_weights" ->
-      s"""${lshJacSqlCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |$nearDupReachCte,
-         |cl AS (SELECT id, min(r) AS cluster_rep FROM reach GROUP BY id),
-         |fc AS (SELECT d.doc_id, coalesce(cl.cluster_rep, d.doc_id)
-         |         AS cluster_rep
-         |       FROM documents d LEFT JOIN cl ON cl.id = d.doc_id),
-         |sz AS (SELECT doc_id, cluster_rep,
-         |         count(*) OVER (PARTITION BY cluster_rep)::BIGINT AS csize
-         |       FROM fc)
-         |SELECT doc_id, cluster_rep, csize,
-         |  ${Portable.sqlIntRatio9("1", "csize")} AS weight
-         |FROM sz ORDER BY doc_id""".stripMargin,
-
-    // q99: per-source rollup of the cluster labels — docs in any
-    // cluster are dup docs; distinct coalesce(rep, id) is the
-    // post-dedup count attributable to the source.
-    "q99_dup_stats" ->
-      s"""${lshJacSqlCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |$nearDupReachCte,
-         |cl AS (SELECT id, min(r) AS cluster_rep FROM reach GROUP BY id),
-         |fc AS (SELECT d.doc_id, d.source, cl.cluster_rep,
-         |         coalesce(cl.cluster_rep, d.doc_id) AS eff
-         |       FROM documents d LEFT JOIN cl ON cl.id = d.doc_id)
-         |SELECT source, count(*)::BIGINT AS n_docs,
-         |  count(cluster_rep)::BIGINT AS n_dup_docs,
-         |  count(DISTINCT eff)::BIGINT AS n_post_dedup,
-         |  ${Portable.sqlIntRatio9("count(cluster_rep)", "count(*)")}
-         |    AS dup_rate
-         |FROM fc GROUP BY source ORDER BY source""".stripMargin,
-
-    // q95: q91's full-corpus cluster labels, split by the md5-hex
-    // prefix of the representative — lexicographic hex compare is
-    // engine-portable and uniform.
-    "q95_leakage_free_split" ->
-      s"""${lshJacSqlCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |$nearDupReachCte,
-         |cl AS (SELECT id, min(r) AS cluster_rep FROM reach GROUP BY id),
-         |fc AS (SELECT d.doc_id, coalesce(cl.cluster_rep, d.doc_id)
-         |         AS cluster_rep
-         |       FROM documents d LEFT JOIN cl ON cl.id = d.doc_id)
-         |SELECT doc_id, cluster_rep,
-         |  CASE WHEN substr(md5(cluster_rep::VARCHAR), 1, 4)
-         |         < '${f"${math.floor(SplitValidFrac * 65536).toInt}%04x"}'
-         |       THEN 'valid' ELSE 'train' END AS split
-         |FROM fc ORDER BY doc_id""".stripMargin,
-
-    // q97: full-corpus cluster labels (as q91/q95) + the q25 quality
-    // score; per cluster the row_number-1 row on (score DESC, id ASC).
-    "q97_near_dedup_best" -> {
-      val stopList = Text.EnStopwords.map(w => s"'$w'").mkString(", ")
-      s"""${lshJacSqlCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |$nearDupReachCte,
-         |cl AS (SELECT id, min(r) AS cluster_rep FROM reach GROUP BY id),
-         |fc AS (SELECT d.doc_id, coalesce(cl.cluster_rep, d.doc_id)
-         |         AS cluster_rep
-         |       FROM documents d LEFT JOIN cl ON cl.id = d.doc_id),
-         |qm AS (
-         |  SELECT doc_id,
-         |    $qMetricColsSql
-         |  FROM documents
-         |),
-         |qs AS (
-         |  SELECT doc_id, $qScoreSqlExpr
-         |    AS quality_score
-         |  FROM qm
-         |),
-         |ranked AS (
-         |  SELECT d.doc_id, fc.cluster_rep, d.lang, d.source, qs.quality_score,
-         |    row_number() OVER (PARTITION BY fc.cluster_rep
-         |      ORDER BY qs.quality_score DESC, d.doc_id ASC) AS rn
-         |  FROM documents d JOIN fc USING (doc_id) JOIN qs USING (doc_id)
-         |)
-         |SELECT doc_id, cluster_rep, lang, source, quality_score
-         |FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin
-    },
-
-    // q53: drop every doc whose component min-id (recursive reach, as
-    // q51) is not itself; unpaired docs never enter `reach` and survive.
-    "q53_near_dedup_clustered" ->
-      s"""${lshJacSqlCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |$nearDupReachCte,
-         |drops AS (
-         |  SELECT id FROM reach GROUP BY id HAVING min(r) <> id
-         |)
-         |SELECT d.doc_id, d.lang, d.source, d.n_chars
-         |FROM documents d LEFT JOIN drops k ON d.doc_id = k.id
-         |WHERE k.id IS NULL
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // per-row integer cents (see the Spark side): order-free exact sum
-    "q44_region_revenue" ->
-      """SELECT r_name, n_name,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100, 0)
-        |    AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "q21_simhash" ->
-      s"""$simhashSqlCte
-         |SELECT doc_id, simhash FROM sim ORDER BY doc_id""".stripMargin,
-
-    "q22_simhash_pairs" ->
-      s"""$simhashSqlCte,
-         |bands AS (
-         |  SELECT doc_id, simhash, b,
-         |    (simhash >> (${Dedup.SimHashBandBits}*b)) & ${(1L << Dedup.SimHashBandBits) - 1} AS bv
-         |  FROM sim, (SELECT unnest(range(0, ${Dedup.SimHashBands})) AS b)
-         |),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
-         |         bit_count(xor(a.simhash, c.simhash))::BIGINT AS hamming
-         |  FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv
-         |    AND a.doc_id < c.doc_id
-         |)
-         |SELECT id_a, id_b, hamming FROM cand
-         |WHERE hamming <= $MaxHamming ORDER BY id_a, id_b""".stripMargin,
-
-    // q125: the aHash recomputed from the payload text (integer grid
-    // positions, integer mean compare), then q22's band join verbatim,
-    // rolled up per Hamming distance.
-    // q148: gray grid sample k = text byte at k mod len (encodePng pixel
-    // layout x decodeGrayGrid identity resample at w = h = side), then
-    // the integer-mean aHash over the first SimHashBits positions.
-    "q148_media_ahash_real" ->
-      s"""$mediaAHashSqlCte
-         |SELECT doc_id, simhash FROM msim ORDER BY doc_id""".stripMargin,
-
-    // q273: the expected PCM samples recomputed straight from the text
-    // bytes (encodeWav's sample law), aggregated identically — a hash
-    // match proves the Spark side's RIFF parse returned every sample
-    // bit-exact, in order (pos_sum), with the fmt fields intact.
-    "q273_audio_pcm_real" ->
-      s"""WITH ks AS (SELECT unnest(range(0, $AudioSamples)) AS k),
-         |smp AS (
-         |  SELECT d.doc_id, ks.k,
-         |    CASE WHEN len(d.text) = 0 THEN 0
-         |         ELSE (ascii(substring(d.text,
-         |                (1 + (ks.k % len(d.text)))::INT, 1)) - 128) * 256
-         |    END AS s
-         |  FROM documents d CROSS JOIN ks
-         |)
-         |SELECT doc_id, $AudioRateHz::BIGINT AS sample_rate,
-         |  1::BIGINT AS n_channels, count(*)::BIGINT AS n_samples,
-         |  sum(s)::BIGINT AS sum_s, min(s)::BIGINT AS min_s,
-         |  max(s)::BIGINT AS max_s,
-         |  sum((k + 1) * s)::BIGINT AS pos_sum
-         |FROM smp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // q275: the expected luma planes recomputed straight from the text
-    // bytes (encodeY4m's pixel law), aggregated identically per frame —
-    // a hash match proves the Spark side's Y4M demux returned every
-    // frame's plane bit-exact, in order, with the header geometry
-    // intact.
-    "q275_video_y4m_real" -> {
-      val fsz = VideoW * VideoH
-      s"""WITH fp AS (
-         |  SELECT f, p
-         |  FROM (SELECT unnest(range(0, $VideoFrames)) AS f),
-         |       (SELECT unnest(range(0, $fsz)) AS p)
-         |),
-         |px AS (
-         |  SELECT d.doc_id, fp.f, fp.p,
-         |    CASE WHEN len(d.text) = 0 THEN 0
-         |         ELSE ascii(substring(d.text,
-         |                (1 + ((fp.f * $fsz + fp.p) % len(d.text)))::INT, 1))
-         |    END AS v
-         |  FROM documents d CROSS JOIN fp
-         |)
-         |SELECT doc_id, $VideoW::BIGINT AS width, $VideoH::BIGINT AS height,
-         |  f AS frame_idx, count(*)::BIGINT AS n_px,
-         |  sum(v)::BIGINT AS sum_v, min(v)::BIGINT AS min_v,
-         |  max(v)::BIGINT AS max_v, sum((p + 1) * v)::BIGINT AS pos_sum
-         |FROM px GROUP BY doc_id, f ORDER BY doc_id, f""".stripMargin
-    },
-
-    // q278: the three REAL feature-kernel histograms recomputed from
-    // the encoders' laws. PNG pixels and Y4M planes both read text
-    // byte k mod len (k over side² grid / frames·w·h plane positions),
-    // bin = value>>4; WAV samples are (byte−128)·256, whose amplitude
-    // band (s+32768)>>12 collapses to byte>>4 for non-empty text and
-    // to band 8 (silence = 0) for empty text. Normalization and
-    // half-up round-to-9 mirror the Spark kernels exactly.
-    "q278_media_features_real" -> {
-      val pngN = MediaGridSide * MediaGridSide
-      val y4mN = VideoW * VideoH * VideoFrames
-      def hist(kind: String, n: Int, binExpr: String): String =
-        s"""${kind}v AS (
-           |  SELECT d.doc_id, $binExpr AS bin
-           |  FROM documents d
-           |  CROSS JOIN (SELECT unnest(range(0, $n)) AS k) p
-           |),
-           |${kind}h AS (
-           |  SELECT doc_id, bin, count(*) AS cnt
-           |  FROM ${kind}v GROUP BY doc_id, bin
-           |),
-           |$kind AS (
-           |  SELECT d.doc_id, '$kind' AS kind, bins.bin,
-           |    (CAST(CAST(floor((coalesce(h.cnt, 0) / $n::DOUBLE) * 1e9
-           |       + 0.5) AS BIGINT) AS DOUBLE) / 1e9) AS feat
-           |  FROM documents d CROSS JOIN bins
-           |  LEFT JOIN ${kind}h h
-           |    ON h.doc_id = d.doc_id AND h.bin = bins.bin
-           |)""".stripMargin
-      val byteAt =
-        "ascii(substring(d.text, (1 + (p.k % len(d.text)))::INT, 1))"
-      s"""WITH bins AS (SELECT unnest(range(0, 16)) AS bin),
-         |${hist("png", pngN,
-            s"CASE WHEN len(d.text) = 0 THEN 0 ELSE $byteAt // 16 END")},
-         |${hist("wav", AudioSamples,
-            s"CASE WHEN len(d.text) = 0 THEN 8 ELSE $byteAt // 16 END")},
-         |${hist("y4m", y4mN,
-            s"CASE WHEN len(d.text) = 0 THEN 0 ELSE $byteAt // 16 END")}
-         |SELECT * FROM png UNION ALL SELECT * FROM wav
-         |UNION ALL SELECT * FROM y4m
-         |ORDER BY doc_id, kind, bin""".stripMargin
-    },
-
-    // q279: every stride-th frame's luma plane recomputed from the
-    // pixel law (the q275 oracle restricted to f % stride = 0),
-    // aggregated identically — a hash match proves sampleFrames
-    // demuxed REAL container frames at their stream indices.
-    "q279_video_frames_real" -> {
-      val fsz = VideoW * VideoH
-      s"""WITH fp AS (
-         |  SELECT f, p
-         |  FROM (SELECT unnest(range(0, $VideoFrames)) AS f),
-         |       (SELECT unnest(range(0, $fsz)) AS p)
-         |  WHERE f % $VideoStride = 0
-         |),
-         |px AS (
-         |  SELECT d.doc_id, fp.f, fp.p,
-         |    CASE WHEN len(d.text) = 0 THEN 0
-         |         ELSE ascii(substring(d.text,
-         |                (1 + ((fp.f * $fsz + fp.p) % len(d.text)))::INT, 1))
-         |    END AS v
-         |  FROM documents d CROSS JOIN fp
-         |)
-         |SELECT doc_id, f AS frame_idx, count(*)::BIGINT AS n_px,
-         |  sum(v)::BIGINT AS sum_v, min(v)::BIGINT AS min_v,
-         |  max(v)::BIGINT AS max_v, sum((p + 1) * v)::BIGINT AS pos_sum
-         |FROM px GROUP BY doc_id, f ORDER BY doc_id, f""".stripMargin
-    },
-
-    // q280: every resized pixel recomputed straight from the text
-    // bytes — output pixel p of the (side/f)² grid is the integer
-    // average of its exact f×f source block under encodePng's pixel
-    // law (source pixel (y,x) = text byte at (y·side + x) mod len).
-    "q280_media_resize_real" -> {
-      val side = MediaGridSide
-      val f = ResizeFactor
-      val ow = side / f
-      val nOut = ow * ow
-      val nBlk = f * f
-      s"""WITH bp AS (
-         |  SELECT p, d
-         |  FROM (SELECT unnest(range(0, $nOut)) AS p),
-         |       (SELECT unnest(range(0, $nBlk)) AS d)
-         |),
-         |src AS (
-         |  SELECT doc.doc_id, bp.p,
-         |    CASE WHEN len(doc.text) = 0 THEN 0
-         |         ELSE ascii(substring(doc.text,
-         |           (1 + ((((bp.p // $ow) * $f + bp.d // $f) * $side
-         |              + ((bp.p % $ow) * $f + bp.d % $f))
-         |             % len(doc.text)))::INT, 1))
-         |    END AS v
-         |  FROM documents doc CROSS JOIN bp
-         |)
-         |SELECT doc_id, $ow::BIGINT AS width, $ow::BIGINT AS height,
-         |  p AS pos, (sum(v) // $nBlk)::BIGINT AS v
-         |FROM src GROUP BY doc_id, p ORDER BY doc_id, pos""".stripMargin
-    },
-
-    // q154: the REAL-decode media near-dup pairs — q148's verified
-    // encode→decode→aHash chain (msim) feeding q22's band join
-    // verbatim. The end-to-end "which images are near-copies" product
-    // over actually-decoded pixels.
-    "q154_media_neardup_real" ->
-      s"""$mediaAHashSqlCte,
-         |bands AS (
-         |  SELECT doc_id, simhash, b,
-         |    (simhash >> (${Dedup.SimHashBandBits}*b)) & ${(1L << Dedup.SimHashBandBits) - 1} AS bv
-         |  FROM msim, (SELECT unnest(range(0, ${Dedup.SimHashBands})) AS b)
-         |),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
-         |         bit_count(xor(a.simhash, c.simhash))::BIGINT AS hamming
-         |  FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv
-         |    AND a.doc_id < c.doc_id
-         |)
-         |SELECT id_a, id_b, hamming FROM cand
-         |WHERE hamming <= $MaxHamming ORDER BY id_a, id_b""".stripMargin,
-
-    "q125_media_phash_audit" -> {
-      val n = Dedup.SimHashBits
-      s"""WITH pb AS (
-         |  SELECT doc_id, list_transform(range(0, $n), k ->
-         |    ascii(substring(text, (1 + (k * len(text)) // $n)::INT, 1)))
-         |    AS bs
-         |  FROM documents
-         |),
-         |pm AS (SELECT doc_id, bs, list_sum(bs)::BIGINT AS sm FROM pb),
-         |sim AS (
-         |  SELECT doc_id, list_sum(list_transform(range(0, $n), k ->
-         |    CASE WHEN bs[(k + 1)::INT] * $n >= sm
-         |         THEN (1::BIGINT << k::INT) ELSE 0::BIGINT END))::BIGINT
-         |    AS simhash
-         |  FROM pm
-         |),
-         |bands AS (
-         |  SELECT doc_id, simhash, b,
-         |    (simhash >> (${Dedup.SimHashBandBits}*b)) & ${(1L << Dedup.SimHashBandBits) - 1} AS bv
-         |  FROM sim, (SELECT unnest(range(0, ${Dedup.SimHashBands})) AS b)
-         |),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
-         |         bit_count(xor(a.simhash, c.simhash))::BIGINT AS hamming
-         |  FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv
-         |    AND a.doc_id < c.doc_id
-         |)
-         |SELECT hamming, count(*)::BIGINT AS n_pairs FROM cand
-         |GROUP BY hamming ORDER BY hamming""".stripMargin
-    },
-
-    // q124: odd-id survivors by brute-force min hamming vs the even-id
-    // fingerprints — exact because MaxHamming < SimHashBands makes the
-    // engine's band join exhaustive (pigeonhole).
-    "q124_near_dedup_stream" -> nearDedupAgainstOracleSql,
-
-    // q270: the SAME gate fed by a real micro-batched file stream —
-    // stateless per micro-batch, so the union over batches must equal
-    // the batch run (q124's own oracle).
-    "q270_near_dedup_stream_live" -> nearDedupAgainstOracleSql,
-
-    "q23_embed_near_pairs" ->
-      s"""$srpSqlCte
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |       ${Portable.sqlRatio9(cosSql("ea.v", "eb.v"))} AS cos
-         |FROM buck a JOIN buck b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-         |JOIN ev ea ON a.vec_id = ea.vec_id
-         |JOIN ev eb ON b.vec_id = eb.vec_id
-         |WHERE ${Portable.sqlRatio9(cosSql("ea.v", "eb.v"))} >= $CosTau
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // q73: assignment = rn-1 over (cos DESC, cid ASC) — the same
-    // (cos, -cid) max_by ordering as the Spark side; survivors exclude
-    // any id with a smaller same-cluster neighbor at cos >= tau.
-    "q73_semantic_dedup" ->
-      s"""WITH ev AS (
-         |  SELECT vec_id,
-         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |cen AS (SELECT vec_id AS cid, v AS cv FROM ev
-         |        WHERE vec_id < $SemClusters),
-         |sc AS (SELECT e.vec_id, c.cid,
-         |              ${Portable.sqlRatio9(cosSql("e.v", "c.cv"))} AS cos
-         |       FROM ev e CROSS JOIN cen c),
-         |a1 AS (SELECT vec_id, cid AS cluster, cos AS cos_centroid FROM (
-         |         SELECT *, row_number() OVER (PARTITION BY vec_id
-         |           ORDER BY cos DESC, cid ASC) AS rn FROM sc)
-         |       WHERE rn = 1),
-         |dom AS (SELECT DISTINCT b.vec_id AS vec_id
-         |        FROM a1 a JOIN a1 b
-         |          ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-         |        JOIN ev ea ON a.vec_id = ea.vec_id
-         |        JOIN ev eb ON b.vec_id = eb.vec_id
-         |        WHERE ${Portable.sqlRatio9(cosSql("ea.v", "eb.v"))} >= $CosTau)
-         |SELECT s.vec_id, s.cluster, s.cos_centroid
-         |FROM a1 s WHERE s.vec_id NOT IN (SELECT vec_id FROM dom)
-         |ORDER BY s.vec_id""".stripMargin,
-
-    // q118: q73's assignment CTEs, then a per-cluster hash-priority
-    // row_number with the same (hash, id) ordering as sampleN.
-    "q118_cluster_sample" ->
-      s"""WITH ev AS (
-         |  SELECT vec_id,
-         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |cen AS (SELECT vec_id AS cid, v AS cv FROM ev
-         |        WHERE vec_id < $SemClusters),
-         |sc AS (SELECT e.vec_id, c.cid,
-         |              ${Portable.sqlRatio9(cosSql("e.v", "c.cv"))} AS cos
-         |       FROM ev e CROSS JOIN cen c),
-         |a1 AS (SELECT vec_id, cid AS cluster, cos AS cos_centroid FROM (
-         |         SELECT *, row_number() OVER (PARTITION BY vec_id
-         |           ORDER BY cos DESC, cid ASC) AS rn FROM sc)
-         |       WHERE rn = 1),
-         |r AS (SELECT vec_id, cluster, cos_centroid,
-         |        row_number() OVER (PARTITION BY cluster
-         |          ORDER BY ${Portable.sqlHash("vec_id",
-                      s"'$ClusterSampleSalt'")}, vec_id)::BIGINT
-         |          AS sample_rank
-         |      FROM a1)
-         |SELECT e.vec_id, e.label, r.cluster, r.cos_centroid,
-         |       r.sample_rank
-         |FROM embeddings e JOIN r USING (vec_id)
-         |WHERE r.sample_rank <= $ClusterSampleN
-         |ORDER BY e.vec_id""".stripMargin,
-
-    "q24_token_stats" ->
-      s"""SELECT doc_id,
-         |  len(string_split(text, ' '))::BIGINT AS n_ws_tokens,
-         |  len(regexp_extract_all(text, '${Text.WordPattern}'))::BIGINT AS n_word_tokens,
-         |  length(text)::BIGINT AS n_chars,
-         |  ${Portable.sqlIntRatio9("length(text)",
-             "len(string_split(text, ' '))")} AS mean_tok_len,
-         |  ceil(length(text) / 4.0)::BIGINT AS est_bpe_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q25_quality_score" ->
-      s"""WITH m AS (
-         |  SELECT doc_id,
-         |    $qMetricColsSql
-         |  FROM documents
-         |)
-         |SELECT doc_id, qct AS n_tokens,
-         |  ${Portable.sqlIntRatio9("qca", "qcl")} AS alpha_ratio,
-         |  ${Portable.sqlIntRatio9("qcd", "qcl")} AS digit_ratio,
-         |  ${Portable.sqlIntRatio9("qcs", "qct")} AS stopword_ratio,
-         |  qok::BIGINT AS len_ok,
-         |  $qScoreSqlExpr
-         |    AS quality_score
-         |FROM m ORDER BY doc_id""".stripMargin,
-
-    // q101: the q25 score + percent_rank per source — the native
-    // window IS the spec; the Spark side reproduces its tie semantics
-    // over the compact (source, score) frame.
-    "q101_quality_percentiles" ->
-      s"""$qualityScoreSqlCtes
-         |SELECT doc_id, source, quality_score,
-         |  CASE WHEN count(*) OVER (PARTITION BY source) > 1 THEN
-         |    ${Portable.sqlIntRatio9(
-             "rank() OVER (PARTITION BY source ORDER BY quality_score) - 1",
-             "count(*) OVER (PARTITION BY source) - 1")}
-         |  ELSE CAST(0 AS DOUBLE) END AS pct_rank
-         |FROM qs ORDER BY doc_id""".stripMargin,
-
-    "q26_langid" ->
-      s"""WITH profile(plang, w) AS (VALUES ${Text.langProfileSql}),
-         |tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-         |hits AS (
-         |  SELECT t.doc_id, p.plang, count(*) AS n
-         |  FROM tok t JOIN profile p ON t.w = p.w GROUP BY t.doc_id, p.plang
-         |),
-         |best AS (
-         |  SELECT doc_id, plang, n,
-         |         row_number() OVER (PARTITION BY doc_id
-         |           ORDER BY n DESC, plang ASC) AS r
-         |  FROM hits
-         |)
-         |SELECT d.doc_id, coalesce(b.plang, 'und') AS pred_lang,
-         |       coalesce(b.n, 0)::BIGINT AS n_hits, d.lang
-         |FROM documents d LEFT JOIN (SELECT * FROM best WHERE r = 1) b
-         |  USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "q58_repetition" ->
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |g AS (SELECT doc_id,
-         |        unnest(${Text.shinglesAllSql("t", RepetitionN)}) AS g
-         |      FROM toks),
-         |c AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY doc_id, g),
-         |p AS (SELECT doc_id, sum(c)::BIGINT AS total,
-         |             count(*)::BIGINT AS n_distinct, max(c) AS topc
-         |      FROM c GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  coalesce(p.total, 0)::BIGINT AS n_ngrams,
-         |  coalesce(p.n_distinct, 0)::BIGINT AS n_distinct,
-         |  ${Portable.sqlIntRatio9("p.total - p.n_distinct", "p.total")} AS dup_ngram_ratio,
-         |  ${Portable.sqlIntRatio9("p.topc", "p.total")} AS top_ngram_ratio
-         |FROM documents d LEFT JOIN p USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // q64: rate spec as a VALUES list built from the same MixRates
-    // constant as the Spark side; same keyed uniform draw.
-    "q64_domain_mix" -> {
-      val vals = MixRates.map { case (s0, r) => s"('$s0', $r)" }.mkString(", ")
-      s"""WITH rates(source, rate) AS (VALUES $vals)
-         |SELECT d.doc_id, d.lang, d.source, d.n_chars
-         |FROM documents d JOIN rates r USING (source)
-         |WHERE ${Portable.sqlUnif("d.doc_id", "'mix'")} < r.rate
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    // q65/q66: hash-priority running token total per source; the
-    // bucketed form is result-identical by construction so it shares
-    // the oracle (the q50/q52 pattern).
-    "q65_token_budget" -> tokenBudgetOracleSql,
-    "q66_token_budget_bucketed" -> tokenBudgetOracleSql,
-
-    // q69: the q25 score formula, then percent_rank per source with the
-    // identical (score DESC, doc_id ASC) order; filter on the ROUNDED
-    // pct on both sides.
-    "q69_quality_top_fraction" -> {
-      val stopList = Text.EnStopwords.map(w => s"'$w'").mkString(", ")
-      s"""WITH m AS (
-         |  SELECT doc_id, source,
-         |    $qMetricColsSql
-         |  FROM documents
-         |),
-         |sc AS (
-         |  SELECT doc_id, source,
-         |    $qScoreSqlExpr
-         |      AS quality_score
-         |  FROM m
-         |),
-         |r AS (
-         |  SELECT doc_id, source, quality_score,
-         |    CASE WHEN count(*) OVER (PARTITION BY source) > 1 THEN
-         |      ${Portable.sqlIntRatio9(
-              "row_number() OVER (PARTITION BY source" +
-                " ORDER BY quality_score DESC, doc_id ASC) - 1",
-              "count(*) OVER (PARTITION BY source) - 1")}
-         |    ELSE CAST(0 AS DOUBLE) END AS rank_pct
-         |  FROM sc
-         |)
-         |SELECT doc_id, source, quality_score, rank_pct FROM r
-         |WHERE rank_pct <= $QualityKeepFrac ORDER BY doc_id""".stripMargin
-    },
-
-    // q68: bands computed once over all docs, split into batch/corpus
-    // sides; candidates only ACROSS the split; exact side via distinct
-    // historical content hashes.
-    "q68_dedup_incremental" ->
-      s"""$minhashSqlCte,
-         |$bandsCteSql,
-         |bN AS (SELECT * FROM bands WHERE doc_id >= $IncrementalSplitId),
-         |bE AS (SELECT * FROM bands WHERE doc_id < $IncrementalSplitId),
-         |cand AS (
-         |  SELECT DISTINCT n.doc_id AS new_id, e.doc_id AS ex_id
-         |  FROM bN n JOIN bE e ON n.b = e.b AND n.bh = e.bh
-         |),
-         |jac AS (
-         |  SELECT new_id,
-         |    ${Portable.sqlIntRatio9(
-             "len(list_intersect(sa.shingles, sb.shingles))",
-             "len(list_distinct(list_concat(sa.shingles, sb.shingles)))")}
-         |      AS jaccard
-         |  FROM cand JOIN sh sa ON cand.new_id = sa.doc_id
-         |            JOIN sh sb ON cand.ex_id = sb.doc_id
-         |),
-         |ndrops AS (SELECT DISTINCT new_id FROM jac WHERE jaccard >= $JaccardTau),
-         |eh AS (SELECT DISTINCT md5(text) AS h FROM documents
-         |       WHERE doc_id < $IncrementalSplitId)
-         |SELECT d.doc_id, d.lang, d.source, d.n_chars
-         |FROM documents d
-         |LEFT JOIN eh ON md5(d.text) = eh.h
-         |LEFT JOIN ndrops nd ON d.doc_id = nd.new_id
-         |WHERE d.doc_id >= $IncrementalSplitId
-         |  AND eh.h IS NULL AND nd.new_id IS NULL
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // q67: same stream arithmetic — per-shard window cumsum gives each
-    // doc its offset, range() explodes the sequences its span touches,
-    // 1-based inclusive slices cut the parts, string_agg in offset
-    // order reassembles.
-    "q67_pack_sequences" -> s"WITH ${packTailSql("documents")}",
-
-    // q122: the greedy first-fit scan replayed as a recursive CTE —
-    // each recursion step advances every shard by one doc in the same
-    // (priority-hash, id) order the engine's sorted-group iterator
-    // walks.
-    "q122_pack_whole" ->
-      s"""WITH RECURSIVE pw AS (
-         |  SELECT doc_id,
-         |    ${Portable.sqlHash("doc_id", s"'$PackWholeSalt'")}
-         |      % $PackShards AS shard,
-         |    ${Portable.sqlHash(s"'$PackWholeSalt|pr'", "doc_id")} AS pr,
-         |    len(string_split(text, ' '))::BIGINT AS n
-         |  FROM documents
-         |),
-         |po AS (
-         |  SELECT shard, doc_id, n,
-         |    row_number() OVER (PARTITION BY shard ORDER BY pr, doc_id)
-         |      AS rn
-         |  FROM pw
-         |),
-         |rec AS (
-         |  SELECT shard, rn, doc_id, n, 0::BIGINT AS bin, n AS fill,
-         |    0::BIGINT AS pos
-         |  FROM po WHERE rn = 1
-         |  UNION ALL
-         |  SELECT o.shard, o.rn, o.doc_id, o.n,
-         |    CASE WHEN r.fill + o.n <= $PackWholeCap THEN r.bin
-         |         ELSE r.bin + 1 END,
-         |    CASE WHEN r.fill + o.n <= $PackWholeCap THEN r.fill + o.n
-         |         ELSE o.n END,
-         |    CASE WHEN r.fill + o.n <= $PackWholeCap THEN r.pos + 1
-         |         ELSE 0 END
-         |  FROM rec r JOIN po o ON o.shard = r.shard AND o.rn = r.rn + 1
-         |)
-         |SELECT shard, bin AS bin_idx, pos AS pos_in_bin, doc_id,
-         |  n AS n_tokens
-         |FROM rec ORDER BY shard, bin_idx, pos_in_bin""".stripMargin,
-
-    // q123: the identical CASE chain over the shared bucket constant
-    // list.
-    "q123_length_buckets" -> {
-      val bs = Text.lengthBucketList(LenMinBucket, LenMaxBucket)
-      val bucketCase = "CASE " +
-        bs.init.map(b => s"WHEN n <= $b THEN ${b}").mkString(" ") +
-        s" ELSE ${bs.last} END"
-      s"""WITH d AS (
-         |  SELECT len(string_split(text, ' '))::BIGINT AS n FROM documents
-         |),
-         |b AS (SELECT ($bucketCase)::BIGINT AS bucket, n FROM d)
-         |SELECT bucket, count(*)::BIGINT AS docs, sum(n)::BIGINT AS tokens,
-         |  sum(bucket - least(n, $LenMaxBucket))::BIGINT AS padding,
-         |  sum(greatest(n - $LenMaxBucket, 0))::BIGINT AS overflow
-         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin
-    },
-
-    // q62: the WHOLE curation funnel as one CTE chain — each stage is
-    // the already-proven per-stage oracle form (normalize q46, langid
-    // q26, quality q25, repetition q58, exact dedup q18, clustered
-    // near-dedup q53's recursive reach, chunk q47), composed over the
-    // previous stage's survivors exactly as CorpusPipeline sequences
-    // the operators. Constants interpolate from the same vals as the
-    // Spark Config, so the two sides cannot drift.
-    "q62_corpus_curate" ->
-      s"""$curateOracleCtes,
-         |${chunkTailSql("surv")}""".stripMargin,
-
-    // q93: the shared funnel chain with the perplexity-tier CTEs
-    // enabled (model over gkeep, per-lang ntile, head+middle kept).
-    "q93_corpus_curate_ppl" ->
-      s"""${curateOracleCtesWith(pplGate = true)},
-         |${chunkTailSql("surv")}""".stripMargin,
-
-    // q98: the shared funnel chain with the keepBestQuality survivor
-    // tail (rank-1 per cluster on quality DESC, id ASC).
-    "q98_corpus_curate_best" ->
-      s"""${curateOracleCtesWith(pplGate = false, bestSurvivor = true)},
-         |${chunkTailSql("surv")}""".stripMargin,
-
-    // q102: the shared funnel chain with the per-source percent_rank
-    // cut ANDed into the quality gate.
-    "q102_corpus_curate_pct" ->
-      s"""${curateOracleCtesWith(pplGate = false, pctGate = true)},
-         |${chunkTailSql("surv")}""".stripMargin,
-
-    // q70: q62's funnel + the decontamination stage between near-dedup
-    // and chunking — eval docs (the q61 split) pass the same normalize
-    // chain, survivors sharing >= minShared distinct shingles with any
-    // eval doc drop before chunking.
-    "q70_corpus_curate_decon" ->
-      s"""$curateOracleCtes,
-         |etoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM nz
-         |          WHERE doc_id < $EvalSetDocs),
-         |esh AS (SELECT doc_id, ${Text.shinglesSql("t", ShingleN)} AS shingles
-         |        FROM etoks),
-         |tpost AS (
-         |  SELECT s2.doc_id, unnest(s2.shingles) AS s
-         |  FROM sh s2 JOIN surv USING (doc_id)
-         |),
-         |epost AS (SELECT doc_id AS eval_id, unnest(shingles) AS s FROM esh),
-         |cont AS (
-         |  SELECT DISTINCT doc_id FROM (
-         |    SELECT tpost.doc_id, epost.eval_id
-         |    FROM tpost JOIN epost USING (s)
-         |    GROUP BY tpost.doc_id, epost.eval_id
-         |    HAVING count(*) >= $ContaminationMinShared
-         |  )
-         |),
-         |survd AS (
-         |  SELECT surv.doc_id, surv.text FROM surv
-         |  LEFT JOIN cont ON surv.doc_id = cont.doc_id
-         |  WHERE cont.doc_id IS NULL
-         |),
-         |${chunkTailSql("survd")}""".stripMargin,
-
-
-    // q80: the q62 survivor chain, passed through the q78-style span
-    // scrub (k=CurateScrubK over the surviving corpus only), then the
-    // q47 chunking tail — same CTEs, same constants, no drift.
-    "q80_corpus_curate_scrubbed" ->
-      s"""$curateOracleCtes,
-         |${scrubTailSql("surv")},
-         |${chunkTailSql("sscrub")}""".stripMargin,
-
-    // q77: the q62 survivor chain, consumed by the q67 packing tail
-    // instead of the chunker — same CTEs, same constants, no drift.
-    "q77_corpus_curate_packed" ->
-      s"""$curateOracleCtes,
-         |psrc AS (SELECT doc_id, text FROM surv),
-         |${packTailSql("psrc")}""".stripMargin,
-
-    // q274: the q62 survivor chain → q143's epoch plan/realization
-    // (token counts over the SURVIVORS, source joined back from
-    // documents) → the q67 pack pieces → per-shard manifest rollup
-    // with an order-independent content hash over (seq_idx, seq) —
-    // the composed export, same CTEs, same constants, no drift.
-    "q274_corpus_export" -> {
-      val vals = EpochWeights.toSeq.sorted
-        .map { case (s, w) => s"('$s', ${w}::DOUBLE)" }.mkString(", ")
-      val wsum = EpochWeights.values.sum
-      s"""$curateOracleCtes,
-         |wt(source, weight) AS (VALUES $vals),
-         |esrc AS (
-         |  SELECT s.doc_id, d.source, s.text
-         |  FROM surv s JOIN documents d USING (doc_id)
-         |),
-         |tc AS (
-         |  SELECT source, sum(len(string_split(text, ' ')))::BIGINT
-         |    AS n_tokens
-         |  FROM esrc GROUP BY source
-         |),
-         |fac AS (
-         |  SELECT t.source,
-         |    ${Portable.sqlIntRatio9(s"CAST(floor(coalesce(w.weight, 0.0)" +
-                 s" / $wsum * ${EpochBudget.toDouble} + 0.5) AS BIGINT)",
-               "t.n_tokens")} AS factor
-         |  FROM tc t LEFT JOIN wt w USING (source)
-         |),
-         |nn AS (
-         |  SELECT e.doc_id, e.text,
-         |    (floor(f.factor) + CASE WHEN
-         |        ${Portable.sqlUnif("e.doc_id", s"'$EpochRealizeSalt'")}
-         |        < f.factor - floor(f.factor) THEN 1 ELSE 0 END)::BIGINT
-         |      AS n
-         |  FROM esrc e JOIN fac f USING (source)
-         |),
-         |ee AS (
-         |  SELECT doc_id, text,
-         |    unnest(range(1, n + 1))::BIGINT AS epoch_copy
-         |  FROM nn WHERE n >= 1
-         |),
-         |erz AS (
-         |  SELECT (doc_id * 1024 + epoch_copy)::BIGINT AS doc_id, text
-         |  FROM ee
-         |),
-         |${packPiecesSql("erz")},
-         |pseq AS (
-         |  SELECT shard::BIGINT AS shard, seq_idx::BIGINT AS seq_idx,
-         |    sum(pe2 - ps)::BIGINT AS n_tokens,
-         |    string_agg(array_to_string(part, ' '), ' ' ORDER BY ps) AS seq
-         |  FROM pp GROUP BY shard, seq_idx
-         |)
-         |SELECT shard, count(*)::BIGINT AS n_seqs,
-         |  sum(n_tokens)::BIGINT AS n_tokens,
-         |  sum(length(seq))::BIGINT AS n_chars,
-         |  min(seq_idx)::BIGINT AS min_seq,
-         |  max(seq_idx)::BIGINT AS max_seq,
-         |  bit_xor(${Portable.sqlHash("seq_idx", "seq")})::BIGINT
-         |    AS content_hash
-         |FROM pseq GROUP BY shard ORDER BY shard""".stripMargin
-    },
-
-    // q63: per-n twin of q58 — one gram CTE per n, unioned; the (doc, n)
-    // spine cross-joins the n list so gram-less (doc, n) cells keep NULL
-    // ratios exactly like the Spark side's literal-array explode.
-    "q63_repetition_multi" -> {
-      val gramCtes = RepetitionNs.map(n =>
-        s"""  SELECT doc_id, ${n}::BIGINT AS n,
-           |    unnest(${Text.shinglesAllSql("t", n)}) AS g FROM toks""".stripMargin)
-        .mkString("\n  UNION ALL\n")
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |g AS (
-         |$gramCtes
-         |),
-         |c AS (SELECT doc_id, n, g, count(*) AS c FROM g GROUP BY doc_id, n, g),
-         |p AS (SELECT doc_id, n, sum(c)::BIGINT AS total,
-         |             count(*)::BIGINT AS n_distinct, max(c) AS topc
-         |      FROM c GROUP BY doc_id, n)
-         |SELECT d.doc_id, nn.n::BIGINT AS n,
-         |  coalesce(p.total, 0)::BIGINT AS n_ngrams,
-         |  coalesce(p.n_distinct, 0)::BIGINT AS n_distinct,
-         |  ${Portable.sqlIntRatio9("p.total - p.n_distinct", "p.total")} AS dup_ngram_ratio,
-         |  ${Portable.sqlIntRatio9("p.topc", "p.total")} AS top_ngram_ratio
-         |FROM documents d
-         |CROSS JOIN (SELECT unnest([${RepetitionNs.mkString(", ")}]) AS n) nn
-         |LEFT JOIN p ON p.doc_id = d.doc_id AND p.n = nn.n
-         |ORDER BY d.doc_id, n""".stripMargin
-    },
-
-    // q76: rank by the same keyed hash (id tiebreak) within each
-    // source; keep rank <= N; payload joins back by id.
-    "q76_stratified_sample" ->
-      s"""WITH r AS (
-         |  SELECT doc_id, row_number() OVER (PARTITION BY source
-         |    ORDER BY ${Portable.sqlHash("doc_id", s"'$SampleSalt'")},
-         |             doc_id)::BIGINT AS sample_rank
-         |  FROM documents
-         |)
-         |SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars,
-         |       r.sample_rank
-         |FROM documents d JOIN r ON d.doc_id = r.doc_id
-         |WHERE r.sample_rank <= $SampleNPerSource
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // q115: the same per-row 60-bit hash XOR-folded; XOR keeps the
-    // value in [0, 2^60) so both engines' BIGINTs agree bit-for-bit.
-    "q115_corpus_fingerprint" ->
-      s"""SELECT count(*) AS n_docs,
-         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-         |  bit_xor(${Portable.sqlHash("doc_id", "text")}) AS corpus_hash
-         |FROM documents""".stripMargin,
-
-    // q149: the same synthetic second snapshot (7-removal / 5-refresh /
-    // 11-readd), classified by DIRECT text equality — md5 equality in
-    // the engine is text equality here, so the oracle needs no hashing;
-    // token masses are the shared whitespace tokenization.
-    "q149_corpus_diff" ->
-      s"""WITH newd AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 5 = 0 THEN text || ' refreshed'
-         |         ELSE text END AS text
-         |  FROM documents WHERE doc_id % 7 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + $DiffAddIdOffset, text
-         |  FROM documents WHERE doc_id % 11 = 0
-         |),
-         |j AS (
-         |  SELECT CASE WHEN o.doc_id IS NULL THEN 'added'
-         |              WHEN n.doc_id IS NULL THEN 'removed'
-         |              WHEN o.text = n.text THEN 'unchanged'
-         |              ELSE 'changed' END AS status,
-         |    len(string_split(o.text, ' '))::BIGINT AS t_old,
-         |    len(string_split(n.text, ' '))::BIGINT AS t_new
-         |  FROM documents o FULL OUTER JOIN newd n ON o.doc_id = n.doc_id
-         |)
-         |SELECT status, count(*) AS n_docs,
-         |  coalesce(sum(t_old), 0)::BIGINT AS n_tokens_old,
-         |  coalesce(sum(t_new), 0)::BIGINT AS n_tokens_new,
-         |  (coalesce(sum(t_new), 0) - coalesce(sum(t_old), 0))::BIGINT
-         |    AS token_delta
-         |FROM j GROUP BY status ORDER BY status""".stripMargin,
-
-    // q114: q104's factor chain inline (same rounded factor), then the
-    // copy count n = floor(f) + lottery and a lateral range-unnest.
-    "q114_epoch_realize" -> {
-      val vals = EpochWeights.toSeq.sorted
-        .map { case (s, w) => s"('$s', ${w}::DOUBLE)" }.mkString(", ")
-      val wsum = EpochWeights.values.sum
-      s"""WITH wt(source, weight) AS (VALUES $vals),
-         |tc AS (
-         |  SELECT source, sum(len(string_split(text, ' ')))::BIGINT
-         |    AS n_tokens
-         |  FROM documents GROUP BY source
-         |),
-         |fac AS (
-         |  SELECT t.source,
-         |    ${Portable.sqlIntRatio9(s"CAST(floor(coalesce(w.weight, 0.0)" +
-                 s" / $wsum * ${EpochBudget.toDouble} + 0.5) AS BIGINT)",
-               "t.n_tokens")} AS factor
-         |  FROM tc t LEFT JOIN wt w USING (source)
-         |),
-         |nn AS (
-         |  SELECT d.doc_id, d.source,
-         |    (floor(f.factor) + CASE WHEN
-         |        ${Portable.sqlUnif("d.doc_id", s"'$EpochRealizeSalt'")}
-         |        < f.factor - floor(f.factor) THEN 1 ELSE 0 END)::BIGINT
-         |      AS n
-         |  FROM documents d JOIN fac f USING (source)
-         |)
-         |SELECT doc_id, source,
-         |  unnest(range(1, n + 1))::BIGINT AS epoch_copy
-         |FROM nn WHERE n >= 1
-         |ORDER BY doc_id, epoch_copy""".stripMargin
-    },
-
-    // q113: the same per-vector flags via list ops; empty vectors count
-    // as zero-vectors on both sides (coalesce matches Spark's 0.0 fold
-    // identity over an empty array).
-    "q113_embedding_checks" ->
-      """SELECT count(*) AS n_rows,
-        |  count(DISTINCT vec_id) AS n_distinct_ids,
-        |  CAST(sum(CASE WHEN embedding IS NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_null_vec,
-        |  count(DISTINCT CASE WHEN embedding IS NOT NULL
-        |    THEN len(embedding) END) AS n_dims_distinct,
-        |  CAST(min(CASE WHEN embedding IS NOT NULL
-        |    THEN len(embedding) END) AS BIGINT) AS dim_min,
-        |  CAST(max(CASE WHEN embedding IS NOT NULL
-        |    THEN len(embedding) END) AS BIGINT) AS dim_max,
-        |  CAST(sum(CASE WHEN len(list_filter(embedding,
-        |      x -> isnan(x::DOUBLE))) > 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_nan_vec,
-        |  CAST(sum(CASE WHEN coalesce(list_sum(list_transform(embedding,
-        |      x -> abs(x::DOUBLE))), 0) = 0 AND embedding IS NOT NULL
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_vec
-        |FROM embeddings""".stripMargin,
-
-    // q112: same token-membership counts via list_filter/list_distinct
-    // (list_intersect's dedup semantics are avoided on both sides: the
-    // distinct count is explicitly distinct-of-filtered).
-    "q112_blocklist" -> {
-      val lst = BlockTerms.map(t => s"'$t'").mkString("[", ", ", "]")
-      s"""SELECT doc_id,
-         |  len(string_split(text, ' '))::BIGINT AS n_tokens,
-         |  len(list_filter(string_split(text, ' '),
-         |    t -> list_contains($lst, t)))::BIGINT AS n_blocked,
-         |  len(list_distinct(list_filter(string_split(text, ' '),
-         |    t -> list_contains($lst, t))))::BIGINT AS n_blocked_types,
-         |  CASE WHEN len(string_split(text, ' ')) > 0 THEN
-         |    ${Portable.sqlIntRatio9(
-              s"len(list_filter(string_split(text, ' '), " +
-                s"t -> list_contains($lst, t)))",
-              "len(string_split(text, ' '))")}
-         |  END AS blocked_ratio
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    // q117: q112's membership test driving a rewrite — kept tokens
-    // re-join on single spaces (double-space artifacts at removal
-    // sites are identical in both engines).
-    "q117_blocklist_scrub" -> {
-      val lst = BlockTerms.map(t => s"'$t'").mkString("[", ", ", "]")
-      s"""SELECT doc_id,
-         |  array_to_string(list_filter(string_split(text, ' '),
-         |    t -> NOT list_contains($lst, t)), ' ') AS text,
-         |  len(list_filter(string_split(text, ' '),
-         |    t -> list_contains($lst, t)))::BIGINT AS n_removed
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    // q111: the same A-ES exponential key (−ln(1−u)/w rounded to 9 dp,
-    // id tiebreak) ranks within each source; n_chars > 0 on every
-    // fixture row, mirroring the op's positive-weight gate.
-    "q111_weighted_sample" ->
-      s"""WITH r AS (
-         |  SELECT doc_id, row_number() OVER (PARTITION BY source
-         |    ORDER BY round(CAST(CAST(floor(round(-ln(1 - ${Portable.sqlUnif("doc_id", s"'$WeightedSampleSalt'")}) / n_chars, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9),
-         |      doc_id)::BIGINT AS sample_rank
-         |  FROM documents WHERE n_chars > 0
-         |)
-         |SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars,
-         |       r.sample_rank
-         |FROM documents d JOIN r ON d.doc_id = r.doc_id
-         |WHERE r.sample_rank <= $SampleNPerSource
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // q84: the same tf/df/norm windows as the Spark side; pairs meet on
-    // the term posting lists, cosine compared on the rounded value.
-    "q84_tfidf_pairs" ->
-      s"""WITH ${tfidfPairsCtes(TfidfTau, TfidfMaxDf)}
-         |SELECT id_a, id_b, cos_tfidf FROM tfpairs
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // q86: same edge CTEs at τ=$PrTau, then the integer PageRank rounds
-    // unrolled — every arithmetic step is BIGINT `//` division, so the
-    // 8-round fixpoint is bit-identical to the Spark loop regardless of
-    // summation order (sum() widens to HUGEINT; the cast narrows back).
-    "q86_pagerank" ->
-      s"""WITH ${tfidfPairsCtes(PrTau, TfidfMaxDf)},
-         |sym AS (SELECT id_a AS s, id_b AS d FROM tfpairs
-         |        UNION ALL SELECT id_b, id_a FROM tfpairs),
-         |deg AS (SELECT s, count(*)::BIGINT AS deg FROM sym GROUP BY s),
-         |nn AS (SELECT count(*)::BIGINT AS cnt FROM deg),
-         |r0 AS (SELECT s AS id, ($PrScale // cnt)::BIGINT AS r
-         |       FROM deg CROSS JOIN nn),
-         |${prRoundCtes(PrIters)}
-         |SELECT id AS doc_id, r AS rank_int,
-         |  ${Portable.sqlIntRatio9("r", PrScale.toString)} AS pr
-         |FROM r$PrIters ORDER BY doc_id""".stripMargin,
-
-    // q173: the same edges, the LPA rounds unrolled — count/argmax/
-    // carry per round, ties (count DESC, community ASC) both engines.
-    "q173_lpa_communities" -> {
-      val rounds = (1 to LpaIters).map { r =>
-        s"""c$r AS (
-           |  SELECT e.s AS node, l.community, count(*) AS c
-           |  FROM sym e JOIN l${r - 1} l ON l.id = e.d
-           |  GROUP BY 1, 2
-           |),
-           |w$r AS (
-           |  SELECT node, community AS w FROM (
-           |    SELECT node, community,
-           |      row_number() OVER (PARTITION BY node
-           |        ORDER BY c DESC, community) AS rn
-           |    FROM c$r)
-           |  WHERE rn = 1
-           |),
-           |l$r AS (
-           |  SELECT p.id, coalesce(w.w, p.community) AS community
-           |  FROM l${r - 1} p LEFT JOIN w$r w ON w.node = p.id
-           |)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ${tfidfPairsCtes(PrTau, TfidfMaxDf)},
-         |sym AS (SELECT DISTINCT s, d FROM (
-         |    SELECT id_a AS s, id_b AS d FROM tfpairs
-         |    UNION ALL SELECT id_b, id_a FROM tfpairs)
-         |  WHERE s <> d),
-         |l0 AS (SELECT DISTINCT s AS id, s AS community FROM sym),
-         |$rounds
-         |SELECT id AS doc_id, community FROM l$LpaIters
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    // q85: identical NB math — the −n_d·ln(tokens_c+V) factoring keeps
-    // the seen join INNER (unseen pairs contribute exactly 0), argmax by
-    // (score DESC, label ASC) row_number, runner-up margin via lead().
-    "q85_nb_classify" ->
-      s"""$nbRankSqlCte
-         |SELECT r.doc_id, d.lang, r.label AS pred_label,
-         |  (r.label = d.lang) AS correct,
-         |  round(CAST(CAST(floor(round(r.avg_logp, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS avg_logp,
-         |  round(CAST(CAST(floor(round(r.avg_logp - r.s2, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS margin
-         |FROM rk r JOIN documents d ON d.doc_id = r.doc_id
-         |WHERE r.rk = 1
-         |ORDER BY r.doc_id""".stripMargin,
-
-    // q129: the q85 rank chain, binned — margins 9-dp-rounded BEFORE
-    // the ntile order (doc_id tiebreak) so bin boundaries are
-    // bit-deterministic cross-engine; accuracy is a ratio of exact
-    // integer counts.
-    "q129_nb_calibration" ->
-      s"""$nbRankSqlCte,
-         |cl AS (
-         |  SELECT r.doc_id, (r.label = d.lang) AS correct,
-         |    round(CAST(CAST(floor(round(r.avg_logp - r.s2, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS m
-         |  FROM rk r JOIN documents d ON d.doc_id = r.doc_id
-         |  WHERE r.rk = 1
-         |),
-         |cb AS (
-         |  SELECT doc_id, correct, m,
-         |    ntile($CalibBins) OVER (ORDER BY m DESC, doc_id ASC) AS bin
-         |  FROM cl
-         |)
-         |SELECT bin::BIGINT AS bin, count(*)::BIGINT AS n_docs,
-         |  sum(CASE WHEN correct THEN 1 ELSE 0 END)::BIGINT AS n_correct,
-         |  round(CAST(CAST(floor(round(sum(CASE WHEN correct THEN 1 ELSE 0 END)::DOUBLE
-         |    / count(*), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS accuracy,
-         |  round(CAST(CAST(floor(round(max(m), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS max_margin, round(CAST(CAST(floor(round(min(m), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS min_margin
-         |FROM cb GROUP BY bin ORDER BY bin""".stripMargin,
-
-    // q87: same SRP bucket CTEs as q28; neighbors ranked with the q28
-    // tiebreak, agreement aggregated per probe, and a LEFT JOIN keeps
-    // bucket singletons in the report with NULL agreement.
-    "q87_knn_label_agreement" ->
-      s"""$srpSqlCte,
-         |cand AS (
-         |  SELECT p.vec_id AS probe_id, c.vec_id,
-         |         ${Portable.sqlRatio9(cosSql("ec.v", "ep.v"))} AS cos
-         |  FROM buck p JOIN buck c ON p.bucket = c.bucket
-         |    AND c.vec_id <> p.vec_id
-         |  JOIN ev ep ON p.vec_id = ep.vec_id
-         |  JOIN ev ec ON c.vec_id = ec.vec_id
-         |),
-         |ranked AS (
-         |  SELECT probe_id, vec_id,
-         |    row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY cos DESC, vec_id ASC) AS rnk
-         |  FROM cand QUALIFY rnk <= $TopK
-         |),
-         |agg AS (
-         |  SELECT r.probe_id, count(*)::BIGINT AS n_neighbors,
-         |    sum(CASE WHEN enb.label = ep.label THEN 1 ELSE 0 END)::BIGINT
-         |      AS n_same
-         |  FROM ranked r
-         |  JOIN embeddings ep ON ep.vec_id = r.probe_id
-         |  JOIN embeddings enb ON enb.vec_id = r.vec_id
-         |  GROUP BY r.probe_id
-         |)
-         |SELECT e.vec_id, e.label,
-         |  coalesce(a.n_neighbors, 0)::BIGINT AS n_neighbors,
-         |  coalesce(a.n_same, 0)::BIGINT AS n_same,
-         |  CASE WHEN a.n_neighbors IS NOT NULL
-         |    THEN ${Portable.sqlIntRatio9("a.n_same", "a.n_neighbors")}
-         |    END AS agreement,
-         |  coalesce(${Portable.sqlIntRatio9("a.n_same",
-              "a.n_neighbors")} < 0.5, false)
-         |    AS suspect
-         |FROM embeddings e LEFT JOIN agg a ON a.probe_id = e.vec_id
-         |ORDER BY e.vec_id""".stripMargin,
-
-    // q88: identical quantization math — floor(+0.5) rounding (the one
-    // half-up form both engines share), the guarded zero-scale case,
-    // and the same three-fold MSE identity with matching scalar order.
-    "q88_int8_quant" ->
-      s"""WITH base AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v,
-         |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) / 127.0
-         |      AS scale
-         |  FROM embeddings
-         |),
-         |qq AS (
-         |  SELECT vec_id, v, scale,
-         |    CASE WHEN scale = 0 THEN list_transform(v, x -> 0::BIGINT)
-         |    ELSE list_transform(v, x ->
-         |      least(greatest(floor(x / scale + 0.5), -127.0), 127.0)::BIGINT)
-         |    END AS q
-         |  FROM base
-         |),
-         |qd AS (SELECT vec_id, v, scale, q,
-         |  list_transform(q, x -> x::DOUBLE) AS qdv FROM qq)
-         |SELECT vec_id, round(CAST(CAST(floor(round(scale, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS scale,
-         |  array_to_string(q, ',') AS q_str,
-         |  round(CAST(CAST(floor(round((list_sum(list_transform(range(1, len(v)+1), i -> v[i] * v[i]))
-         |    - 2.0 * scale *
-         |      list_sum(list_transform(range(1, len(v)+1), i -> v[i] * qdv[i]))
-         |    + scale * scale *
-         |      list_sum(list_transform(range(1, len(v)+1), i -> qdv[i] * qdv[i])))
-         |    / len(v), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS mse
-         |FROM qd ORDER BY vec_id""".stripMargin,
-
-    // q92: the q88 quantization CTEs feed SRP projection and scoring
-    // over the CODES (cast to double — every dot is exact-integer in
-    // doubles, so no fold-order care is needed); same plane hashes and
-    // ranking tiebreak as q28.
-    "q92_ann_quantized" ->
-      s"""WITH base AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v,
-         |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) / 127.0
-         |      AS scale
-         |  FROM embeddings
-         |),
-         |qq AS (
-         |  SELECT vec_id, v, scale,
-         |    CASE WHEN scale = 0 THEN list_transform(v, x -> 0::BIGINT)
-         |    ELSE list_transform(v, x ->
-         |      least(greatest(floor(x / scale + 0.5), -127.0), 127.0)::BIGINT)
-         |    END AS q
-         |  FROM base
-         |),
-         |qv AS (SELECT vec_id, list_transform(q, x -> x::DOUBLE) AS v
-         |       FROM qq),
-         |proj AS (
-         |  SELECT vec_id, p,
-         |    list_sum(list_transform(range(1, len(v) + 1),
-         |      i -> v[i] * (${Portable.sqlUnif("p", "i")} - 0.5))) AS d
-         |  FROM qv, (SELECT unnest(range(0, $SrpPlanes)) AS p)
-         |),
-         |buck AS (
-         |  SELECT vec_id,
-         |    sum(CASE WHEN d >= 0 THEN (1::BIGINT << p) ELSE 0 END)::BIGINT
-         |      AS bucket
-         |  FROM proj GROUP BY vec_id
-         |),
-         |scored AS (
-         |  SELECT p.vec_id AS probe_id, c.vec_id,
-         |         ${Portable.sqlRatio9(cosSql("ec.v", "ep.v"))} AS cos
-         |  FROM buck p JOIN buck c ON p.bucket = c.bucket
-         |    AND c.vec_id <> p.vec_id
-         |  JOIN qv ep ON p.vec_id = ep.vec_id
-         |  JOIN qv ec ON c.vec_id = ec.vec_id
-         |)
-         |SELECT probe_id, vec_id, cos,
-         |  row_number() OVER (PARTITION BY probe_id
-         |    ORDER BY cos DESC, vec_id ASC) AS rnk
-         |FROM scored
-         |QUALIFY rnk <= $TopK
-         |ORDER BY probe_id, rnk""".stripMargin,
-
-    // q100: q92's int8 codes, per-(label, dim) integer centroid sums
-    // (exact in any order), cosine of each code against its label's
-    // sum vector — the 1/n of the mean cancels from the cosine, so
-    // this IS the mean-centroid cosine, bit-exact cross-engine.
-    "q100_label_prototypes" ->
-      s"""WITH base AS (
-         |  SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v,
-         |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) / 127.0
-         |      AS scale
-         |  FROM embeddings
-         |),
-         |qq AS (
-         |  SELECT vec_id, label,
-         |    CASE WHEN scale = 0 THEN list_transform(v, x -> 0::BIGINT)
-         |    ELSE list_transform(v, x ->
-         |      least(greatest(floor(x / scale + 0.5), -127.0), 127.0)::BIGINT)
-         |    END AS q
-         |  FROM base
-         |),
-         |cent AS (
-         |  SELECT label, i AS pos, sum(q[i])::BIGINT AS s
-         |  FROM qq, LATERAL (SELECT unnest(range(1, len(q) + 1)) AS i) _
-         |  GROUP BY label, i
-         |),
-         |dots AS (
-         |  SELECT t.vec_id, t.label,
-         |    sum(t.q[c.pos] * c.s)::DOUBLE AS dot,
-         |    sum(t.q[c.pos] * t.q[c.pos])::DOUBLE AS qqs,
-         |    sum(c.s * c.s)::DOUBLE AS ccs
-         |  FROM qq t JOIN cent c ON t.label = c.label
-         |  GROUP BY t.vec_id, t.label
-         |)
-         |SELECT vec_id, label,
-         |  CASE WHEN qqs = 0 OR ccs = 0 THEN NULL
-         |       ELSE round(CAST(CAST(floor(round(dot / (sqrt(qqs) * sqrt(ccs)), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) END AS proto_cos
-         |FROM dots ORDER BY vec_id""".stripMargin,
-
-    // q89: same bucket CTEs; candidates restricted to cross-label
-    // bucket-mates, ranked per anchor with the q28 tiebreak.
-    "q89_hard_negatives" ->
-      s"""$srpSqlCte,
-         |scored AS (
-         |  SELECT a.vec_id AS anchor_id, ea.label AS anchor_label,
-         |         b.vec_id AS neg_id, eb.label AS neg_label,
-         |         ${Portable.sqlRatio9(cosSql("evb.v", "eva.v"))} AS cos
-         |  FROM buck a JOIN buck b ON a.bucket = b.bucket
-         |    AND b.vec_id <> a.vec_id
-         |  JOIN embeddings ea ON ea.vec_id = a.vec_id
-         |  JOIN embeddings eb ON eb.vec_id = b.vec_id
-         |  JOIN ev eva ON eva.vec_id = a.vec_id
-         |  JOIN ev evb ON evb.vec_id = b.vec_id
-         |  WHERE ea.label <> eb.label
-         |)
-         |SELECT anchor_id, anchor_label, neg_id, neg_label, cos,
-         |  row_number() OVER (PARTITION BY anchor_id
-         |    ORDER BY cos DESC, neg_id ASC) AS rnk
-         |FROM scored
-         |QUALIFY rnk <= $TopK
-         |ORDER BY anchor_id, rnk""".stripMargin,
-
-    // q83: per-source token counts → α-powered weights normalized by a
-    // window sum → rate = min(1, T·p/n), rounded BEFORE the gate so both
-    // engines threshold on identical values; same keyed-hash draw.
-    "q83_temperature_mix" ->
-      s"""WITH tc AS (
-         |  SELECT source, sum(len(string_split(text, ' ')))::BIGINT AS n_tokens
-         |  FROM documents GROUP BY source
-         |),
-         |tw AS (SELECT source, n_tokens,
-         |         pow(n_tokens::DOUBLE, $TempAlpha) AS w FROM tc),
-         |tp AS (SELECT source, n_tokens,
-         |         round(CAST(CAST(floor(round(w / sum(w) OVER (), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS p FROM tw),
-         |tr AS (SELECT source, n_tokens, p,
-         |         round(CAST(CAST(floor(round(least(1.0, ${TempTargetTokens.toDouble} * p / n_tokens), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS rate
-         |       FROM tp)
-         |SELECT d.doc_id, d.source
-         |FROM documents d JOIN tr USING (source)
-         |WHERE ${Portable.sqlUnif("d.doc_id", "'q83'")} < tr.rate
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // q81: the unrolled learning rounds; each round's argmax pair is one
-    // row of the merge table (an exhausted round's empty bb CTE simply
-    // contributes no row, mirroring the Spark loop's early stop).
-    "q81_bpe_merges" -> {
-      val rows = (1 to BpeNumMerges).map(j =>
-        s"""SELECT CAST($j AS BIGINT) AS rank, l AS "left", r AS "right",
-           |  l || r AS merged, c AS pair_count FROM bb$j""".stripMargin)
-        .mkString("\nUNION ALL\n")
-      s"""WITH ${bpeCtesSql(BpeNumMerges)}
-         |$rows
-         |ORDER BY rank""".stripMargin
-    },
-
-    // q82: documents meet the final segmentation by word; OOV words
-    // (none on the self-trained fixture, but the branch is live) fall
-    // back to character symbols.
-    "q82_bpe_encode" -> {
-      val k = BpeNumMerges
-      s"""WITH ${bpeCtesSql(k)},
-         |etok AS (
-         |  SELECT doc_id, i AS pos, t[i] AS word
-         |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents) _,
-         |       LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) __
-         |  WHERE t[i] <> ''
-         |),
-         |eseg AS (
-         |  SELECT e.doc_id, e.pos,
-         |    coalesce(v.s, list_transform(range(1, length(e.word) + 1),
-         |                                 i -> e.word[i:i])) AS syms
-         |  FROM etok e LEFT JOIN bseg$k v ON e.word = v.word
-         |)
-         |SELECT doc_id, count(*)::BIGINT AS n_words,
-         |  sum(len(syms))::BIGINT AS n_bpe_tokens,
-         |  array_to_string(flatten(list(syms ORDER BY pos)), ' ') AS bpe_text
-         |FROM eseg GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    // q116: q82's word→segmentation join rolled straight up to the
-    // (source, lang) slice — tokens per word and chars per token; only
-    // docs with at least one word count toward n_docs.
-    "q116_tokenizer_fertility" -> {
-      val k = BpeNumMerges
-      s"""WITH ${bpeCtesSql(k)},
-         |ftok AS (
-         |  SELECT source, lang, doc_id, t[i] AS word
-         |  FROM (SELECT source, lang, doc_id, string_split(text, ' ') AS t
-         |        FROM documents) _,
-         |       LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) __
-         |  WHERE t[i] <> ''
-         |),
-         |fseg AS (
-         |  SELECT f.source, f.lang, f.doc_id,
-         |    length(f.word)::BIGINT AS chars,
-         |    coalesce(len(v.s), length(f.word))::BIGINT AS toks
-         |  FROM ftok f LEFT JOIN bseg$k v ON f.word = v.word
-         |)
-         |SELECT source, lang, count(DISTINCT doc_id)::BIGINT AS n_docs,
-         |  count(*)::BIGINT AS n_words, sum(toks)::BIGINT AS n_tokens,
-         |  sum(chars)::BIGINT AS n_chars,
-         |  ${Portable.sqlIntRatio9("sum(toks)", "count(*)")} AS fertility,
-         |  ${Portable.sqlIntRatio9("sum(chars)", "sum(toks)")}
-         |    AS chars_per_token
-         |FROM fseg GROUP BY source, lang
-         |ORDER BY source, lang""".stripMargin
-    },
-
-    // q79: the per-doc (v, w, c) frame joins the corpus bigram table;
-    // the bigram denominator and unigram counts are group-bys over that
-    // compact table (= the Spark side's window sums); first-token rows
-    // carry the chr(2) sentinel predecessor and score unigram-only.
-    "q79_bigram_nll" ->
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |pairs AS (
-         |  SELECT doc_id,
-         |    CASE WHEN i = 1 THEN chr(2) ELSE t[i-1] END AS v, t[i] AS w
-         |  FROM toks, LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) _
-         |),
-         |bid AS (SELECT doc_id, v, w, count(*)::BIGINT AS c
-         |        FROM pairs GROUP BY doc_id, v, w),
-         |bic AS (SELECT v, w, sum(c)::BIGINT AS cnt_vw FROM bid GROUP BY v, w),
-         |unic AS (SELECT w, sum(cnt_vw)::BIGINT AS cnt_w FROM bic GROUP BY w),
-         |pref AS (SELECT v, sum(cnt_vw)::BIGINT AS cnt_v FROM bic GROUP BY v),
-         |tot AS (SELECT sum(cnt_vw)::DOUBLE AS total FROM bic)
-         |SELECT bid.doc_id, sum(c)::BIGINT AS n_tokens,
-         |  round(CAST(CAST(floor(round(sum(c * -ln(CASE WHEN v = chr(2) THEN cnt_w / total
-         |    ELSE CAST($BigramLambda AS DOUBLE) * cnt_vw / cnt_v +
-         |         CAST(${1 - BigramLambda} AS DOUBLE) * cnt_w / total
-         |    END)) / sum(c), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS bigram_nll
-         |FROM bid
-         |JOIN bic USING (v, w)
-         |JOIN unic USING (w)
-         |JOIN pref USING (v)
-         |CROSS JOIN tot
-         |GROUP BY bid.doc_id
-         |ORDER BY bid.doc_id""".stripMargin,
-
-    // q78: same window hashes; the canonical occurrence is rank 1 over
-    // (doc_id, pos) per hash — every later occurrence's k covered token
-    // indices are scrubbed; kept tokens re-join in position order.
-    // Fully-scrubbed documents keep an empty string (agg FILTER), and
-    // clean documents fall back to their original text.
-    "q78_scrub_spans" -> {
-      val kg = "concat_ws(' ', " +
-        (0 until ScrubK).map(o => s"t[i+$o]").mkString(", ") + ")"
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |wins AS (
-         |  SELECT doc_id, i AS pos, ${Portable.sqlHash(kg)} AS hh
-         |  FROM toks, LATERAL (SELECT unnest(range(1,
-         |    greatest(0, len(t) - ${ScrubK - 2}))) AS i) _
-         |),
-         |marked AS (
-         |  SELECT doc_id, pos, row_number() OVER (PARTITION BY hh
-         |    ORDER BY doc_id, pos) AS rn
-         |  FROM wins
-         |),
-         |dup AS (SELECT doc_id, pos FROM marked WHERE rn > 1),
-         |rem AS (
-         |  SELECT DISTINCT doc_id, pos + o AS idx
-         |  FROM dup, LATERAL (SELECT unnest(range(0, $ScrubK)) AS o) _
-         |),
-         |tsp AS (
-         |  SELECT doc_id, i AS idx, t[i] AS tok
-         |  FROM toks, LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) _
-         |),
-         |dirty AS (SELECT DISTINCT doc_id FROM rem),
-         |reb AS (
-         |  SELECT tsp.doc_id,
-         |    coalesce(string_agg(tsp.tok, ' ' ORDER BY tsp.idx)
-         |      FILTER (WHERE rem.idx IS NULL), '') AS scrubbed
-         |  FROM tsp
-         |  JOIN dirty ON tsp.doc_id = dirty.doc_id
-         |  LEFT JOIN rem ON tsp.doc_id = rem.doc_id AND tsp.idx = rem.idx
-         |  GROUP BY tsp.doc_id
-         |),
-         |remc AS (SELECT doc_id, count(*)::BIGINT AS n_removed
-         |         FROM rem GROUP BY doc_id)
-         |SELECT d.doc_id, len(t.t)::BIGINT AS n_tokens,
-         |       coalesce(remc.n_removed, 0)::BIGINT AS n_removed,
-         |       coalesce(reb.scrubbed, d.text) AS text_scrubbed
-         |FROM documents d
-         |JOIN toks t ON d.doc_id = t.doc_id
-         |LEFT JOIN remc ON d.doc_id = remc.doc_id
-         |LEFT JOIN reb ON d.doc_id = reb.doc_id
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    // q75: the q25 per-doc score CTE rolled up per (source, lang) —
-    // means taken over the 9-dp-rounded per-doc scores on both sides.
-    "q75_corpus_report" -> corpusReportOracleSql,
-
-    // q74: bucket counts per corpus slice, Laplace-smoothed log-ratio
-    // weights on the full bucket spine, per-doc occurrence sum — the
-    // same bucket hash (md5-60 mod buckets) on both engines.
-    "q74_dsir_score" -> {
-      val tgt = DsirTargetSources.map(s0 => s"'$s0'").mkString(", ")
-      s"""WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks
-         |           FROM documents),
-         |occ AS (SELECT doc_id, source,
-         |               unnest(${Text.shinglesAllSql("toks", DsirN)}) AS g
-         |        FROM t),
-         |b AS (SELECT doc_id, source,
-         |             ${Portable.sqlHash("g")} % $DsirBuckets AS bucket
-         |      FROM occ),
-         |tc AS (SELECT bucket, count(*)::BIGINT AS ct FROM b
-         |       WHERE source IN ($tgt) GROUP BY bucket),
-         |rc AS (SELECT bucket, count(*)::BIGINT AS cr FROM b GROUP BY bucket),
-         |sp AS (SELECT unnest(range(0, $DsirBuckets)) AS bucket),
-         |tt AS (SELECT count(*)::DOUBLE AS v FROM b WHERE source IN ($tgt)),
-         |rt AS (SELECT count(*)::DOUBLE AS v FROM b),
-         |w AS (SELECT sp.bucket,
-         |        round(CAST(CAST(floor(round(ln((coalesce(tc.ct, 0) + 1) / (tt.v + $DsirBuckets.0)) - ln((coalesce(rc.cr, 0) + 1) / (rt.v + $DsirBuckets.0)), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS w
-         |      FROM sp LEFT JOIN tc ON sp.bucket = tc.bucket
-         |              LEFT JOIN rc ON sp.bucket = rc.bucket, tt, rt),
-         |per AS (SELECT b.doc_id, count(*)::BIGINT AS n_grams,
-         |               sum(CAST(floor(w.w * 1e9 + 0.5) AS BIGINT)) AS s9
-         |        FROM b JOIN w ON b.bucket = w.bucket GROUP BY b.doc_id)
-         |SELECT d.doc_id, coalesce(p.n_grams, 0)::BIGINT AS n_grams,
-         |       ${Portable.sqlIntRatioSigned9("coalesce(p.s9, 0)",
-                  "1000000000")} AS dsir_score
-         |FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    // q71: corpus-wide token count per w is a window sum over the tf
-    // frame; the total-token scalar is its own aggregate — both sides
-    // compute mean NLL as sum(c * -ln(cnt/total)) / sum(c), 9 dp.
-    "q71_unigram_nll" ->
-      s"""WITH tf AS (
-         |  SELECT doc_id, w, count(*)::BIGINT AS c
-         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-         |        FROM documents)
-         |  GROUP BY doc_id, w
-         |),
-         |cw AS (SELECT doc_id, c, sum(c) OVER (PARTITION BY w) AS cnt FROM tf),
-         |tot AS (SELECT CAST(sum(len(string_split(text, ' '))) AS DOUBLE)
-         |               AS total FROM documents)
-         |SELECT doc_id, sum(c)::BIGINT AS n_tokens,
-         |       round(CAST(CAST(floor(round(sum(c * -ln(cnt / total)) / sum(c), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS unigram_nll
-         |FROM cw, tot
-         |GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin,
-
-    // q90: the q71 NLL CTEs, lang joined back, ntile(3) per language
-    // over the ROUNDED NLL (then doc_id) — both engines split the same
-    // ordering, so the tier boundary is deterministic.
-    "q90_ppl_buckets" ->
-      s"""WITH tf AS (
-         |  SELECT doc_id, w, count(*)::BIGINT AS c
-         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-         |        FROM documents)
-         |  GROUP BY doc_id, w
-         |),
-         |cw AS (SELECT doc_id, c, sum(c) OVER (PARTITION BY w) AS cnt FROM tf),
-         |tot AS (SELECT CAST(sum(len(string_split(text, ' '))) AS DOUBLE)
-         |               AS total FROM documents),
-         |nll AS (
-         |  SELECT doc_id, sum(c)::BIGINT AS n_tokens,
-         |         round(CAST(CAST(floor(round(sum(c * -ln(cnt / total)) / sum(c), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS unigram_nll
-         |  FROM cw, tot GROUP BY doc_id
-         |),
-         |b AS (
-         |  SELECT n.doc_id, n.n_tokens, n.unigram_nll, d.lang,
-         |    ntile(3) OVER (PARTITION BY d.lang
-         |      ORDER BY n.unigram_nll ASC, n.doc_id ASC) AS bucket_idx
-         |  FROM nll n JOIN documents d ON d.doc_id = n.doc_id
-         |)
-         |SELECT doc_id, n_tokens, unigram_nll, lang, bucket_idx,
-         |  CASE WHEN bucket_idx = 1 THEN 'head'
-         |       WHEN bucket_idx = 3 THEN 'tail'
-         |       ELSE 'middle' END AS bucket
-         |FROM b ORDER BY doc_id""".stripMargin,
-
-    // q72: gram df is a window count over the distinct (doc, gram)
-    // frame; ratios stay un-coalesced so gram-less docs get NULLs.
-    "q72_boilerplate" ->
-      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-         |           FROM documents),
-         |occ AS (SELECT doc_id,
-         |               unnest(${Text.shinglesAllSql("toks", BoilerN)}) AS g
-         |        FROM t),
-         |per AS (SELECT doc_id, g, count(*)::BIGINT AS c
-         |        FROM occ GROUP BY doc_id, g),
-         |wdf AS (SELECT doc_id, g, c, count(*) OVER (PARTITION BY g) AS df
-         |        FROM per),
-         |agg AS (
-         |  SELECT doc_id, sum(c)::BIGINT AS n_grams,
-         |    sum(CASE WHEN df > $BoilerMaxDf THEN c ELSE 0 END)::BIGINT
-         |      AS n_boiler_grams,
-         |    count(*)::BIGINT AS n_distinct,
-         |    sum(CASE WHEN df > $BoilerMaxDf THEN 1 ELSE 0 END)::BIGINT
-         |      AS n_boiler_distinct
-         |  FROM wdf GROUP BY doc_id
-         |)
-         |SELECT d.doc_id,
-         |  coalesce(a.n_grams, 0)::BIGINT AS n_grams,
-         |  coalesce(a.n_boiler_grams, 0)::BIGINT AS n_boiler_grams,
-         |  ${Portable.sqlIntRatio9("a.n_boiler_grams", "a.n_grams")}
-         |    AS boiler_ratio,
-         |  coalesce(a.n_distinct, 0)::BIGINT AS n_distinct,
-         |  coalesce(a.n_boiler_distinct, 0)::BIGINT AS n_boiler_distinct,
-         |  ${Portable.sqlIntRatio9("a.n_boiler_distinct",
-              "a.n_distinct")}
-         |    AS boiler_distinct_ratio
-         |FROM documents d LEFT JOIN agg a USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // q59: masking order URL -> email -> phone -> IPv4 -> long digits,
-    // each count taken on that stage's input (patterns interpolated
-    // from Text so the two engines can never drift)
-    "q59_pii_mask" ->
-      s"""WITH aug AS (
-         |  SELECT doc_id,
-         |    text || ' contact user' || doc_id::VARCHAR ||
-         |    '@mail.example.org via https://ex.org/u/' || doc_id::VARCHAR ||
-         |    ' tel 555' || lpad(doc_id::VARCHAR, 7, '0') ||
-         |    ' ph 555-' || lpad((doc_id % 1000)::VARCHAR, 3, '0') ||
-         |    '-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') ||
-         |    ' ip 10.' || (doc_id % 256)::VARCHAR || '.0.7' AS text
-         |  FROM documents
-         |), st AS (
-         |  SELECT doc_id, text,
-         |    regexp_replace(text, '${Text.UrlRe}', '<URL>', 'g') AS u
-         |  FROM aug
-         |), st2 AS (
-         |  SELECT doc_id, text, u,
-         |    regexp_replace(u, '${Text.EmailRe}', '<EMAIL>', 'g') AS e
-         |  FROM st
-         |), st3 AS (
-         |  SELECT doc_id, text, u, e,
-         |    regexp_replace(e, '${Text.PhoneRe}', '<PHONE>', 'g') AS p
-         |  FROM st2
-         |), st4 AS (
-         |  SELECT doc_id, text, u, e, p,
-         |    regexp_replace(p, '${Text.Ipv4Re}', '<IP>', 'g') AS i
-         |  FROM st3
-         |)
-         |SELECT doc_id,
-         |  regexp_replace(i, '${Text.LongNumRe}', '<NUM>', 'g') AS masked,
-         |  len(regexp_extract_all(text, '${Text.UrlRe}'))::BIGINT AS n_urls,
-         |  len(regexp_extract_all(u, '${Text.EmailRe}'))::BIGINT AS n_emails,
-         |  len(regexp_extract_all(e, '${Text.PhoneRe}'))::BIGINT AS n_phones,
-         |  len(regexp_extract_all(p, '${Text.Ipv4Re}'))::BIGINT AS n_ips,
-         |  len(regexp_extract_all(i, '${Text.LongNumRe}'))::BIGINT AS n_long_nums
-         |FROM st4 ORDER BY doc_id""".stripMargin,
-
-    "q46_normalize" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-        |       ' +', ' ', 'g')) AS norm,
-        |  length(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-        |       ' +', ' ', 'g')))::BIGINT AS n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // q47: chunk i is the 1-based inclusive slice t[i*64+1 : i*64+64]
-    "q47_chunks" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |ch AS (
-        |  SELECT doc_id, i AS chunk_idx,
-        |    array_to_string(t[i*64+1 : i*64+64], ' ') AS chunk,
-        |    len(t[i*64+1 : i*64+64])::BIGINT AS n_tokens
-        |  FROM toks, LATERAL (SELECT unnest(range(0, (len(t) + 63) // 64)) AS i) _
-        |)
-        |SELECT doc_id, chunk_idx, n_tokens, chunk FROM ch
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // q94: window i covers the 1-based inclusive slice
-    // t[i*stride+1 : i*stride+window]; starts while i*stride < len.
-    "q94_chunks_strided" ->
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |w AS (
-         |  SELECT doc_id, i AS window_idx, (i*$StrideTokens)::BIGINT AS start_tok,
-         |    array_to_string(t[i*$StrideTokens+1 : i*$StrideTokens+$StrideWindowTokens], ' ') AS chunk,
-         |    len(t[i*$StrideTokens+1 : i*$StrideTokens+$StrideWindowTokens])::BIGINT AS n_tokens
-         |  FROM toks, LATERAL
-         |    (SELECT unnest(range(0, (len(t) - 1) // $StrideTokens + 1)) AS i) _
-         |)
-         |SELECT doc_id, window_idx, start_tok, n_tokens, chunk FROM w
-         |ORDER BY doc_id, window_idx""".stripMargin,
-
-    // q96: vocab = top-500 tokens by (count DESC, token ASC) — the
-    // same deterministic tiebreak as the Spark TakeOrderedAndProject.
-    "q96_oov_stats" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-         |),
-         |vc AS (
-         |  SELECT w FROM (SELECT w, count(*) AS c FROM tok GROUP BY w
-         |                 ORDER BY c DESC, w ASC LIMIT $OovVocabSize) _
-         |)
-         |SELECT t.doc_id, count(*)::BIGINT AS n_tokens,
-         |  sum(CASE WHEN vc.w IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
-         |  ${Portable.sqlIntRatio9(
-             "sum(CASE WHEN vc.w IS NULL THEN 1 ELSE 0 END)",
-             "count(*)")} AS oov_ratio
-         |FROM tok t LEFT JOIN vc ON t.w = vc.w
-         |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
-
-    // q103: add-half smoothed unigram probs over the union vocab; every
-    // numerator/denominator is an exact x.5 double from integer counts,
-    // so the division/ln/product chain is bit-identical cross-engine.
-    "q103_unigram_drift" ->
-      s"""WITH ca AS (
-         |  SELECT w, count(*)::BIGINT AS ca FROM (
-         |    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-         |    WHERE doc_id % 2 = 0) _ GROUP BY w
-         |),
-         |cb AS (
-         |  SELECT w, count(*)::BIGINT AS cb FROM (
-         |    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-         |    WHERE doc_id % 2 = 1) _ GROUP BY w
-         |),
-         |j AS (
-         |  SELECT coalesce(ca.w, cb.w) AS w, coalesce(ca.ca, 0) AS ca,
-         |         coalesce(cb.cb, 0) AS cb
-         |  FROM ca FULL OUTER JOIN cb ON ca.w = cb.w
-         |),
-         |tot AS (SELECT sum(ca)::DOUBLE AS na, sum(cb)::DOUBLE AS nb,
-         |               count(*)::DOUBLE AS v FROM j),
-         |p AS (
-         |  SELECT w, ca, cb, na, nb, v,
-         |         (ca + 0.5) / (na + 0.5 * v) AS pa,
-         |         (cb + 0.5) / (nb + 0.5 * v) AS pb
-         |  FROM j, tot
-         |)
-         |SELECT w,
-         |  ${Portable.sqlIntRatio9("2 * ca + 1",
-             "CAST(2 * na AS BIGINT) + CAST(v AS BIGINT)")} AS p_a,
-         |  ${Portable.sqlIntRatio9("2 * cb + 1",
-             "CAST(2 * nb AS BIGINT) + CAST(v AS BIGINT)")} AS p_b,
-         |  round(CAST(CAST(floor(round(pa * ln(pa / pb), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS kl_term
-         |FROM p ORDER BY kl_term DESC, w ASC LIMIT $DriftTopK""".stripMargin,
-
-    // q104: the same mixture weights as VALUES; wsum = 5.0 inlined on
-    // both sides, target = floor(share * budget + 0.5).
-    "q104_epoch_factors" -> {
-      val vals = EpochWeights.toSeq.sorted
-        .map { case (s, w) => s"('$s', ${w}::DOUBLE)" }.mkString(", ")
-      val wsum = EpochWeights.values.sum
-      s"""WITH wt(source, weight) AS (VALUES $vals),
-         |tc AS (
-         |  SELECT source, sum(len(string_split(text, ' ')))::BIGINT
-         |    AS n_tokens
-         |  FROM documents GROUP BY source
-         |)
-         |SELECT t.source, t.n_tokens, coalesce(w.weight, 0.0) AS weight,
-         |  round(CAST(CAST(floor(round(coalesce(w.weight, 0.0) / $wsum, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS share,
-         |  floor(coalesce(w.weight, 0.0) / $wsum * ${EpochBudget.toDouble}
-         |    + 0.5)::BIGINT AS target_tokens,
-         |  ${Portable.sqlIntRatio9(s"CAST(floor(coalesce(w.weight, 0.0)" +
-               s" / $wsum * ${EpochBudget.toDouble} + 0.5) AS BIGINT)",
-             "t.n_tokens")} AS factor
-         |FROM tc t LEFT JOIN wt w USING (source)
-         |ORDER BY source""".stripMargin
-    },
-
-    // q105: Bloom prefilter + exact verify ≡ the plain anti-join — the
-    // sketch prunes work, never changes the answer, so the oracle is
-    // the anti-join itself.
-    "q105_dedup_bloom" ->
-      s"""SELECT d.doc_id, d.lang, d.source, d.n_chars
-         |FROM documents d
-         |WHERE d.doc_id >= $IncrementalSplitId AND NOT EXISTS (
-         |  SELECT 1 FROM documents e
-         |  WHERE e.doc_id < $IncrementalSplitId AND e.text = d.text)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // q106: same aggregate over the same JSONL files Spark wrote and
-    // read — read_json with explicit column types mirrors the pinned
-    // StructType (format='newline_delimited' = JSON lines).
-    "q106_jsonl_roundtrip" ->
-      s"""SELECT source, count(*) AS n_docs,
-         |  CAST(sum(length(text)) AS BIGINT) AS n_chars,
-         |  count(DISTINCT lang) AS n_langs, max(doc_id) AS max_id
-         |FROM read_json('${q106JsonlPath(SfToken)}/*.json',
-         |  format='newline_delimited',
-         |  columns={'doc_id': 'BIGINT', 'text': 'VARCHAR',
-         |           'lang': 'VARCHAR', 'source': 'VARCHAR'})
-         |GROUP BY source ORDER BY source""".stripMargin,
-
-    // q107: the portable hash keeps shard assignment engine-identical;
-    // the 60-bit hash is non-negative so % equals pmod.
-    "q107_shard_manifest" ->
-      s"""WITH s AS (
-         |  SELECT doc_id, text,
-         |    ${Portable.sqlHash("doc_id")} % $ManifestShards AS shard
-         |  FROM documents
-         |)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-         |  CAST(sum(length(text)) AS BIGINT) AS n_chars,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id
-         |FROM s GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "q45_idf_table" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-        |  FROM documents
-        |),
-        |dfreq AS (SELECT w, count(*) AS df FROM tok GROUP BY w),
-        |n AS (SELECT count(*) AS n_docs FROM documents)
-        |SELECT w, df, round(CAST(CAST(floor(round(ln(n_docs::DOUBLE / df), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS idf
-        |FROM dfreq, n ORDER BY w""".stripMargin,
-
-    // q56: tf joins the (rounded) idf on the token; rank ties break on
-    // the token string — total order per doc, so row_number agrees.
-    "q56_top_keywords" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-         |),
-         |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok GROUP BY 1, 2),
-         |dtok AS (
-         |  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-         |  FROM documents
-         |),
-         |dfreq AS (SELECT w, count(*) AS df FROM dtok GROUP BY w),
-         |n AS (SELECT count(*) AS n_docs FROM documents),
-         |idf AS (SELECT w, round(CAST(CAST(floor(round(ln(n_docs::DOUBLE / df), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS idf FROM dfreq, n),
-         |wtd AS (
-         |  SELECT tf.doc_id, tf.w, tf.tf, round(CAST(CAST(floor(round(tf.tf * idf.idf, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS tfidf
-         |  FROM tf JOIN idf USING (w)
-         |),
-         |rk AS (
-         |  SELECT doc_id, w, tf, tfidf, row_number()
-         |    OVER (PARTITION BY doc_id ORDER BY tfidf DESC, w ASC) AS rank
-         |  FROM wtd
-         |)
-         |SELECT doc_id, rank::BIGINT AS rank, w AS token, tf, tfidf
-         |FROM rk WHERE rank <= $TopKeywordsK ORDER BY doc_id, rank""".stripMargin,
-
-    "q27_fingerprints" -> {
-      val kgHash = Portable.sqlHash(
-        "concat_ws(' ', " + (0 until FpK).map(o => s"t[i+$o]").mkString(", ") + ")")
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |kg AS (
-         |  SELECT doc_id,
-         |    list_transform(range(1, greatest(0, len(t) - ${FpK - 2})),
-         |      i -> $kgHash) AS hs
-         |  FROM toks
-         |),
-         |fp AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(range(1, greatest(0, len(hs) - ${FpW - 2})),
-         |      i -> list_min(hs[i:i+${FpW - 1}]))) AS fps
-         |  FROM kg
-         |)
-         |SELECT doc_id, unnest(fps) AS fp FROM fp
-         |WHERE len(fps) >= 1 ORDER BY doc_id, fp""".stripMargin
-    },
-
-    "q28_ann_topk" -> q28OracleSql,
-
-    // q109: both top-k sides embed the UNCHANGED q28/q16 oracle bodies
-    // as named subqueries; the report is a probe-keyed left join + agg.
-    "q109_ann_recall" ->
-      s"""WITH ann AS (
-         |$q28OracleSql
-         |), ex AS (
-         |$q16OracleSql
-         |)
-         |SELECT ex.probe_id, count(*) AS n_exact,
-         |  CAST(sum(CASE WHEN ann.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_hit,
-         |  round(CAST(CAST(floor(round(sum(CASE WHEN ann.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |    / count(*)::DOUBLE, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS recall
-         |FROM ex LEFT JOIN ann
-         |  ON ann.probe_id = ex.probe_id AND ann.vec_id = ex.vec_id
-         |GROUP BY ex.probe_id ORDER BY ex.probe_id""".stripMargin,
-
-    // q151: the curve oracle scores every prefix cosine in one lateral
-    // (c × p × dims) product — range(1, dims+1) bounds each sum to the
-    // prefix — then q109's recall-join shape per dims against the
-    // dims = 64 reference rows.
-    "q151_matryoshka_curve" -> {
-      val dimsSql = MatryoshkaDims.mkString("[", ", ", "]")
-      s"""WITH c AS (
-         |  SELECT vec_id,
-         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |p AS (
-         |  SELECT vec_id AS probe_id,
-         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS pv
-         |  FROM embeddings WHERE vec_id < 5
-         |),
-         |dm AS (SELECT unnest($dimsSql) AS dims),
-         |s AS (
-         |  SELECT probe_id, vec_id, dims,
-         |    ${Portable.sqlRatio9(
-             "list_sum(list_transform(range(1, dims + 1)," +
-             " i -> v[i] * pv[i])) /" +
-             " (sqrt(list_sum(list_transform(range(1, dims + 1)," +
-             " i -> v[i] * v[i]))) *" +
-             " sqrt(list_sum(list_transform(range(1, dims + 1)," +
-             " i -> pv[i] * pv[i]))))")} AS cos
-         |  FROM c, p, dm WHERE vec_id <> probe_id
-         |),
-         |r AS (
-         |  SELECT probe_id, vec_id, dims,
-         |         row_number() OVER (PARTITION BY probe_id, dims
-         |           ORDER BY cos DESC, vec_id ASC) AS rnk
-         |  FROM s QUALIFY rnk <= $TopK
-         |),
-         |ex AS (SELECT probe_id, vec_id FROM r
-         |       WHERE dims = ${MatryoshkaDims.last}),
-         |exc AS (SELECT probe_id, count(*)::BIGINT AS n_exact
-         |        FROM ex GROUP BY probe_id),
-         |hits AS (
-         |  SELECT r.dims, r.probe_id, count(*)::BIGINT AS n_hit
-         |  FROM r JOIN ex ON r.probe_id = ex.probe_id
-         |    AND r.vec_id = ex.vec_id
-         |  GROUP BY r.dims, r.probe_id
-         |)
-         |SELECT dm.dims::BIGINT AS dims, exc.probe_id, exc.n_exact,
-         |  coalesce(h.n_hit, 0)::BIGINT AS n_hit,
-         |  ${Portable.sqlIntRatio9("coalesce(h.n_hit, 0)",
-              "exc.n_exact")} AS recall
-         |FROM exc CROSS JOIN dm
-         |LEFT JOIN hits h ON h.dims = dm.dims AND h.probe_id = exc.probe_id
-         |ORDER BY dims, exc.probe_id""".stripMargin
-    },
-
-    // q152: the same first-occurrence trick relationally — each type's
-    // birth bucket from min(doc_id), cumulative window sums over the
-    // decile rollup, and q126's exact-integer ln-ln fit discipline on
-    // the cumulative (tokens, vocab) points.
-    "q152_heaps_audit" ->
-      s"""WITH spine AS (
-         |  SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n,
-         |         ntile($HeapsBuckets) OVER (ORDER BY doc_id) AS bucket
-         |  FROM documents
-         |),
-         |fs AS (
-         |  SELECT w, min(doc_id) AS fid
-         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-         |        FROM documents) _
-         |  GROUP BY w
-         |),
-         |born AS (
-         |  SELECT s.bucket, count(*)::BIGINT AS new_types
-         |  FROM fs JOIN spine s ON fs.fid = s.doc_id
-         |  GROUP BY s.bucket
-         |),
-         |curve AS (
-         |  SELECT m.bucket::BIGINT AS bucket,
-         |    CAST(sum(m.n_docs) OVER w AS BIGINT) AS n_docs,
-         |    CAST(sum(m.n_toks) OVER w AS BIGINT) AS n_tokens,
-         |    CAST(sum(coalesce(b.new_types, 0)) OVER w AS BIGINT) AS vocab,
-         |    coalesce(b.new_types, 0)::BIGINT AS new_types
-         |  FROM (SELECT bucket, count(*)::BIGINT AS n_docs,
-         |          sum(n)::BIGINT AS n_toks
-         |        FROM spine GROUP BY bucket) m
-         |  LEFT JOIN born b USING (bucket)
-         |  WINDOW w AS (ORDER BY m.bucket
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |),
-         |pts AS (
-         |  SELECT CAST(floor(ln(n_tokens) * 1e6 + 0.5) AS BIGINT) AS x,
-         |         CAST(floor(ln(vocab) * 1e6 + 0.5) AS BIGINT) AS y
-         |  FROM curve WHERE n_tokens > 0 AND vocab > 0
-         |),
-         |fit AS (
-         |  SELECT count(*)::BIGINT AS n,
-         |    sum(x)::BIGINT AS sx, sum(y)::BIGINT AS sy,
-         |    sum(x * y)::BIGINT AS sxy, sum(x * x)::BIGINT AS sxx,
-         |    sum(y * y)::BIGINT AS syy
-         |  FROM pts
-         |),
-         |hd AS (
-         |  SELECT
-         |    CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS dxy,
-         |    CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS dxx,
-         |    CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS dyy
-         |  FROM fit
-         |)
-         |SELECT c.bucket, c.n_docs, c.n_tokens, c.vocab, c.new_types,
-         |  CASE WHEN dxx <> 0 THEN
-         |    ${Portable.sqlIntRatioSigned9("dxy", "dxx")}
-         |  END AS heaps_beta,
-         |  CASE WHEN dxx <> 0 AND dyy <> 0 THEN
-         |    round(CAST(CAST(floor(round(CAST(dxy AS DOUBLE)
-         |      * CAST(dxy AS DOUBLE) / (CAST(dxx AS DOUBLE)
-         |      * CAST(dyy AS DOUBLE)), 9) * 1e9 + 0.5) AS BIGINT)
-         |      AS DOUBLE) / 1e9, 9) END AS heaps_r2
-         |FROM curve c CROSS JOIN hd ORDER BY c.bucket""".stripMargin,
-
-    // q155: projected vectors from the same keyed-hash ±1 signs
-    // (('jl' || j, i) → sign), fold order matching FoldDot; float32
-    // narrowing, then the q16 cosine/rank shape and q109's recall join
-    // against the embedded full-dimension exact body.
-    "q155_jl_recall" ->
-      s"""WITH pj AS (
-         |  SELECT vec_id, j,
-         |    CAST(list_sum(list_transform(range(1, len(embedding) + 1),
-         |      i -> embedding[i]::DOUBLE *
-         |           (CASE WHEN ${Portable.sqlUnif("('jl' || j)", "i")} < 0.5
-         |                 THEN -1.0 ELSE 1.0 END))) AS FLOAT) AS x
-         |  FROM embeddings, (SELECT unnest(range(0, $JlDims)) AS j) d
-         |),
-         |pr AS (
-         |  SELECT vec_id, list(CAST(x AS DOUBLE) ORDER BY j) AS v
-         |  FROM pj GROUP BY vec_id
-         |),
-         |aps AS (
-         |  SELECT p.vec_id AS probe_id, c.vec_id,
-         |    ${Portable.sqlRatio9(cosSql("c.v", "p.v"))} AS cos
-         |  FROM pr c, pr p
-         |  WHERE p.vec_id < 5 AND c.vec_id <> p.vec_id
-         |),
-         |ap AS (
-         |  SELECT probe_id, vec_id,
-         |         row_number() OVER (PARTITION BY probe_id
-         |           ORDER BY cos DESC, vec_id ASC) AS rnk
-         |  FROM aps QUALIFY rnk <= $TopK
-         |),
-         |ex AS (
-         |$q16OracleSql
-         |)
-         |SELECT ex.probe_id, count(*) AS n_exact,
-         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_hit,
-         |  round(CAST(CAST(floor(round(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |    / count(*)::DOUBLE, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS recall
-         |FROM ex LEFT JOIN ap
-         |  ON ap.probe_id = ex.probe_id AND ap.vec_id = ex.vec_id
-         |GROUP BY ex.probe_id ORDER BY ex.probe_id""".stripMargin,
-
-    // q153: the pooling oracle mirrors the exact-decimal mean — widen
-    // float32 → double, integerize once at 1e9, exact integer sums per
-    // (order, dim), ONE cast back — then the q16 cosine/rank shape over
-    // the pooled lists. Dims are 1-based here vs 0-based posexplode in
-    // the engine; dim is only a group/order key, so the lists agree.
-    "q153_order2vec_topk" ->
-      s"""WITH mem AS (
-         |  SELECT l_orderkey AS gid, l_partkey % $PoolMod AS vec_id
-         |  FROM lineitem
-         |),
-         |px AS (
-         |  SELECT mem.gid, d.i AS dim,
-         |    CAST(floor(CAST(e.embedding[d.i] AS DOUBLE) * 1e9 + 0.5)
-         |      AS BIGINT) AS xi
-         |  FROM mem JOIN embeddings e ON mem.vec_id = e.vec_id,
-         |       (SELECT unnest(range(1, $EmbDims + 1)) AS i) d
-         |),
-         |pv AS (
-         |  SELECT gid, dim,
-         |    CAST(CAST(sum(xi) AS DOUBLE) / count(*) / 1e9 AS FLOAT) AS v
-         |  FROM px GROUP BY gid, dim
-         |),
-         |pool AS (
-         |  SELECT gid, list(CAST(v AS DOUBLE) ORDER BY dim) AS emb
-         |  FROM pv GROUP BY gid
-         |),
-         |sc AS (
-         |  SELECT p.gid AS probe_id, c.gid AS vec_id,
-         |    ${Portable.sqlRatio9(cosSql("c.emb", "p.emb"))} AS cos
-         |  FROM pool c, pool p
-         |  WHERE p.gid < $OrderProbeMax AND c.gid <> p.gid
-         |)
-         |SELECT probe_id, vec_id, cos,
-         |       CAST(row_number() OVER (PARTITION BY probe_id
-         |         ORDER BY cos DESC, vec_id ASC) AS BIGINT) AS rnk
-         |FROM sc
-         |QUALIFY rnk <= $TopK
-         |ORDER BY probe_id, rnk""".stripMargin,
-
-    // q150: q109's recall-join shape with the approximate side replaced
-    // by the exact top-k over the matryoshka PREFIX — embedding[1:dims]
-    // is the oracle's entire model of truncateEmbeddings (DuckDB list
-    // slices are 1-based inclusive, matching Spark's slice(e, 1, dims)).
-    "q150_matryoshka_recall" ->
-      s"""WITH ap AS (
-         |${exactTopKSqlOn(s"embedding[1:$TruncDims]")}
-         |), ex AS (
-         |$q16OracleSql
-         |)
-         |SELECT ex.probe_id, count(*) AS n_exact,
-         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_hit,
-         |  round(CAST(CAST(floor(round(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |    / count(*)::DOUBLE, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS recall
-         |FROM ex LEFT JOIN ap
-         |  ON ap.probe_id = ex.probe_id AND ap.vec_id = ex.vec_id
-         |GROUP BY ex.probe_id ORDER BY ex.probe_id""".stripMargin,
-
-    // q110: per-source type/token/hapax rollup over the same
-    // whitespace tokenization as every text oracle.
-    "q110_lexical_diversity" ->
-      s"""WITH tf AS (
-         |  SELECT source, w, count(*)::BIGINT AS c FROM (
-         |    SELECT source, unnest(string_split(text, ' ')) AS w
-         |    FROM documents) _
-         |  GROUP BY source, w
-         |),
-         |per AS (
-         |  SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
-         |    count(*)::BIGINT AS n_types,
-         |    CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_hapax
-         |  FROM tf GROUP BY source
-         |),
-         |d AS (SELECT source, count(*)::BIGINT AS n_docs
-         |      FROM documents GROUP BY source)
-         |SELECT d.source, d.n_docs,
-         |  coalesce(per.n_tokens, 0) AS n_tokens,
-         |  coalesce(per.n_types, 0) AS n_types,
-         |  ${Portable.sqlIntRatio9("per.n_types", "per.n_tokens")} AS ttr,
-         |  coalesce(per.n_hapax, 0) AS n_hapax,
-         |  ${Portable.sqlIntRatio9("per.n_hapax", "per.n_types")}
-         |    AS hapax_ratio
-         |FROM d LEFT JOIN per USING (source)
-         |ORDER BY source""".stripMargin,
-
-    // q42: multi-table SRP — global plane index p in [0, planes·tables),
-    // table = p // planes, bit = p % planes; candidates OR over tables.
-    "q42_ann_multi" ->
-      s"""WITH proj AS (
-         |  SELECT vec_id, p,
-         |    list_sum(list_transform(range(1, len(embedding) + 1),
-         |      i -> embedding[i]::DOUBLE * (${Portable.sqlUnif("p", "i")} - 0.5))) AS d
-         |  FROM embeddings, (SELECT unnest(range(0, ${SrpPlanes * AnnTables})) AS p)
-         |),
-         |buck AS (
-         |  SELECT vec_id, p // $SrpPlanes AS tbl,
-         |    sum(CASE WHEN d >= 0 THEN (1::BIGINT << (p % $SrpPlanes))
-         |        ELSE 0 END)::BIGINT AS bucket
-         |  FROM proj GROUP BY vec_id, p // $SrpPlanes
-         |),
-         |ev AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |cand AS (
-         |  SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS vec_id
-         |  FROM buck p JOIN buck c ON p.tbl = c.tbl AND p.bucket = c.bucket
-         |    AND c.vec_id <> p.vec_id
-         |  WHERE p.vec_id < 5
-         |),
-         |scored AS (
-         |  SELECT cand.probe_id, cand.vec_id,
-         |         ${Portable.sqlRatio9(cosSql("ec.v", "ep.v"))} AS cos
-         |  FROM cand
-         |  JOIN ev ep ON cand.probe_id = ep.vec_id
-         |  JOIN ev ec ON cand.vec_id = ec.vec_id
-         |)
-         |SELECT probe_id, vec_id, cos,
-         |       CAST(row_number() OVER (PARTITION BY probe_id
-         |         ORDER BY cos DESC, vec_id ASC) AS BIGINT) AS rnk
-         |FROM scored
-         |QUALIFY rnk <= $TopK
-         |ORDER BY probe_id, rnk""".stripMargin,
-
-    "q29_event_windows" ->
-      s"""SELECT event_type,
-         |  (epoch_ms(ts) - (epoch_ms(ts) % $WindowMs))::BIGINT AS window_start_ms,
-         |  count(*) AS n_events,
-         |  ${Portable.sqlIntRatioSigned9(
-             "sum(CAST(floor(value * 100 + 0.5) AS BIGINT))",
-             "CAST(count(*) AS HUGEINT) * 100")} AS avg_value,
-         |  ${Portable.sqlIntRatioSigned9(
-             "sum(CAST(floor(value * 100 + 0.5) AS BIGINT))",
-             "100")} AS sum_value
-         |FROM events GROUP BY 1, 2 ORDER BY event_type, window_start_ms""".stripMargin,
-
-    "q30_sessionize" -> sessionizeOracleSql,
-
-    // q52: the bucketed two-phase build is result-identical to q30 by
-    // construction, so it shares the oracle.
-    "q52_sessionize_bucketed" -> sessionizeOracleSql,
-
-    "q49_value_quantiles" ->
-      """SELECT event_type,
-        |  round(CAST(CAST(floor(round(quantile_cont(value, 0.25), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS p25,
-        |  round(CAST(CAST(floor(round(quantile_cont(value, 0.5), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS p50,
-        |  round(CAST(CAST(floor(round(quantile_cont(value, 0.95), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS p95,
-        |  min(value) AS min_value,
-        |  max(value) AS max_value,
-        |  count(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // q48: DuckDB native ASOF LEFT JOIN mirrors the union+last_value
-    // Spark shape (ties match: l.ms >= r.avail_ms).
-    "q48_asof_enrich" -> asofOracleSql,
-
-    // q50: same semantics as q48 (the bucketed form is result-identical
-    // by construction), so the oracle is the same native ASOF LEFT JOIN.
-    "q50_asof_bucketed" -> asofOracleSql,
-
-    // q54: DuckDB reads TIMESTAMP(NANOS) at µs precision — the same
-    // truncation intervalJoin's event_time applies — so epoch_us
-    // boundary comparisons agree bit-for-bit with the Spark side.
-    "q54_interval_join" ->
-      s"""SELECT l.user_id, l.event_id AS click_id, r.event_id AS purchase_id,
-         |  (epoch_us(r.ts) - epoch_us(l.ts))::BIGINT AS delta_us
-         |FROM events l JOIN events r ON r.user_id = l.user_id
-         |WHERE l.event_type = 'click' AND r.event_type = 'purchase'
-         |  AND epoch_us(r.ts) >= epoch_us(l.ts)
-         |  AND epoch_us(r.ts) <= epoch_us(l.ts) + ${SessionGapMs}::BIGINT * 1000
-         |ORDER BY l.user_id, click_id, purchase_id""".stripMargin,
-
-    // q57: reach times chain through strict-after min aggs, exactly as
-    // the Spark side; only counts leave, so no ts precision in output.
-    "q57_funnel" ->
-      s"""WITH s1 AS (
-         |  SELECT user_id, min(ts) AS rt FROM events
-         |  WHERE event_type = '${FunnelStages(0)}' GROUP BY user_id
-         |),
-         |s2 AS (
-         |  SELECT e.user_id, min(e.ts) AS rt FROM events e
-         |  JOIN s1 ON e.user_id = s1.user_id
-         |  WHERE e.event_type = '${FunnelStages(1)}' AND e.ts > s1.rt
-         |  GROUP BY e.user_id
-         |),
-         |s3 AS (
-         |  SELECT e.user_id, min(e.ts) AS rt FROM events e
-         |  JOIN s2 ON e.user_id = s2.user_id
-         |  WHERE e.event_type = '${FunnelStages(2)}' AND e.ts > s2.rt
-         |  GROUP BY e.user_id
-         |)
-         |SELECT 1::BIGINT AS stage_idx, '${FunnelStages(0)}' AS stage,
-         |       (SELECT count(*) FROM s1)::BIGINT AS n_users
-         |UNION ALL SELECT 2::BIGINT, '${FunnelStages(1)}',
-         |       (SELECT count(*) FROM s2)::BIGINT
-         |UNION ALL SELECT 3::BIGINT, '${FunnelStages(2)}',
-         |       (SELECT count(*) FROM s3)::BIGINT
-         |ORDER BY stage_idx""".stripMargin,
-
-    // q156: q57's chain with the window predicate on every tail stage —
-    // epoch_ms floors the µs-read timestamp to ms exactly like the
-    // engine's `ns div 1000000`.
-    "q156_funnel_windowed" ->
-      s"""WITH s1 AS (
-         |  SELECT user_id, min(ts) AS rt FROM events
-         |  WHERE event_type = '${FunnelStages(0)}' GROUP BY user_id
-         |),
-         |s2 AS (
-         |  SELECT e.user_id, min(e.ts) AS rt FROM events e
-         |  JOIN s1 ON e.user_id = s1.user_id
-         |  WHERE e.event_type = '${FunnelStages(1)}' AND e.ts > s1.rt
-         |    AND epoch_ms(e.ts) - epoch_ms(s1.rt) <= $FunnelWindowMs
-         |  GROUP BY e.user_id
-         |),
-         |s3 AS (
-         |  SELECT e.user_id, min(e.ts) AS rt FROM events e
-         |  JOIN s2 ON e.user_id = s2.user_id
-         |  WHERE e.event_type = '${FunnelStages(2)}' AND e.ts > s2.rt
-         |    AND epoch_ms(e.ts) - epoch_ms(s2.rt) <= $FunnelWindowMs
-         |  GROUP BY e.user_id
-         |)
-         |SELECT 1::BIGINT AS stage_idx, '${FunnelStages(0)}' AS stage,
-         |       (SELECT count(*) FROM s1)::BIGINT AS n_users
-         |UNION ALL SELECT 2::BIGINT, '${FunnelStages(1)}',
-         |       (SELECT count(*) FROM s2)::BIGINT
-         |UNION ALL SELECT 3::BIGINT, '${FunnelStages(2)}',
-         |       (SELECT count(*) FROM s3)::BIGINT
-         |ORDER BY stage_idx""".stripMargin,
-
-    "q61_contamination" ->
-      s"""$shingleSqlCte,
-         |tp AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-         |ep AS (SELECT doc_id AS eval_id, unnest(shingles) AS s FROM sh
-         |       WHERE doc_id < $EvalSetDocs)
-         |SELECT tp.doc_id, ep.eval_id, count(*) AS shared_ngrams
-         |FROM tp JOIN ep USING (s)
-         |GROUP BY tp.doc_id, ep.eval_id
-         |HAVING count(*) >= $ContaminationMinShared
-         |ORDER BY tp.doc_id, ep.eval_id""".stripMargin,
-
-    // q158: the same footers through DuckDB's own parquet reader —
-    // column-chunk metadata rolls up to (row group) then (file).
-    "q158_parquet_layout" ->
-      s"""WITH cc AS (
-         |  SELECT file_name, row_group_id,
-         |    max(row_group_num_rows) AS rg_rows,
-         |    sum(total_compressed_size) AS comp,
-         |    sum(total_uncompressed_size) AS unc
-         |  FROM parquet_metadata('${q158LayoutPath(SfToken)}/*.parquet')
-         |  GROUP BY file_name, row_group_id
-         |)
-         |SELECT regexp_extract(file_name, '[^/]+$$') AS file_name,
-         |  count(*)::BIGINT AS n_row_groups,
-         |  sum(rg_rows)::BIGINT AS n_rows,
-         |  sum(comp)::BIGINT AS compressed_bytes,
-         |  sum(unc)::BIGINT AS uncompressed_bytes
-         |FROM cc GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // q163: same registers from the same keyed hash; rho in pure
-    // integer ops (bit_count of the trailing-zero mask); harmonic
-    // denominator as one exact BIGINT; the estimate is a fixed IEEE
-    // op sequence on exact inputs — bit-identical across engines.
-    "q163_hll_audit" ->
-      s"""WITH tok AS (
-         |  SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents
-         |),
-         |hh AS (
-         |  SELECT lang, ${Portable.sqlHash(s"'$HllSalt'", "w")} AS h FROM tok
-         |),
-         |rr AS (
-         |  SELECT lang, h % ${1L << HllBits} AS bucket,
-         |         (h >> $HllBits) AS wb
-         |  FROM hh
-         |),
-         |regs AS (
-         |  SELECT lang, bucket,
-         |    max(CASE WHEN wb = 0 THEN ${61 - HllBits}
-         |             ELSE bit_count((wb & -wb) - 1) + 1 END)::BIGINT AS mr
-         |  FROM rr GROUP BY 1, 2
-         |),
-         |pk AS (
-         |  SELECT lang, count(*)::BIGINT AS n_registers_used,
-         |    sum((1::BIGINT << (${61 - HllBits} - mr)))::BIGINT AS zu
-         |  FROM regs GROUP BY lang
-         |),
-         |ex AS (
-         |  SELECT lang, count(DISTINCT w)::BIGINT AS exact_distinct
-         |  FROM tok GROUP BY lang
-         |),
-         |fin AS (
-         |  SELECT pk.lang, n_registers_used,
-         |    round(CAST(CAST(floor(round((CAST(709 AS DOUBLE) / CAST(1000 AS DOUBLE)) *
-         |      (CAST(${(1L << HllBits) * (1L << HllBits)} AS DOUBLE) *
-         |        CAST(${1L << (61 - HllBits)} AS DOUBLE)) /
-         |      CAST(zu + (${1L << HllBits} - n_registers_used) *
-         |        (1::BIGINT << ${61 - HllBits}) AS DOUBLE), 6) * 1e6 + 0.5) AS BIGINT) AS DOUBLE) / 1e6, 6) AS hll_est,
-         |    exact_distinct
-         |  FROM pk JOIN ex USING (lang)
-         |)
-         |SELECT lang, n_registers_used, hll_est, exact_distinct,
-         |  (CAST(${Portable.sqlIntRatioScaledSigned(
-             "(CAST(floor(hll_est * 1e6 + 0.5) AS HUGEINT)" +
-               " - CAST(exact_distinct AS HUGEINT) * 1000000) * 100",
-             "CAST(exact_distinct AS HUGEINT) * 1000000", 6)}
-         |    AS DOUBLE) / 1e6)
-         |    AS rel_err_pct
-         |FROM fin ORDER BY lang""".stripMargin,
-
-    // q169: the trainer's own basket order and pair rule rebuilt per
-    // fold — cooc from fold≠0 only, leave-last-out on fold 0, NOT
-    // EXISTS for the in-cart exclusion, q14's tie order for ranking.
-    "q169_rec_eval" ->
-      s"""$recEvalSqlPrefix,
-         |ks AS (SELECT unnest(range(1, ${TopK + 1}))::BIGINT AS k),
-         |hits AS (SELECT ks.k, count(*)::BIGINT AS n_hits
-         |         FROM ks, rh WHERE rh.rnk <= ks.k GROUP BY ks.k)
-         |SELECT ks.k AS k, tot.n_orders,
-         |  coalesce(hits.n_hits, 0)::BIGINT AS n_hits,
-         |  ${Portable.sqlIntRatio9("coalesce(hits.n_hits, 0)",
-              "tot.n_orders")}
-         |    AS hit_rate
-         |FROM ks CROSS JOIN tot LEFT JOIN hits ON hits.k = ks.k
-         |ORDER BY ks.k""".stripMargin,
-
-    // q170: the q169 prefix + the exact shared-literal metric tables —
-    // the SAME Scala-computed integers land in both engines.
-    "q170_rec_eval_graded" -> {
-      val rr = graft.ops.RecEval.rrTable(TopK).mkString("[", ", ", "]")
-      val dcg = graft.ops.RecEval.dcgTable(TopK).mkString("[", ", ", "]")
-      s"""$recEvalSqlPrefix
-         |SELECT $TopK::BIGINT AS k, tot.n_orders,
-         |  (SELECT count(*) FROM rh)::BIGINT AS n_ranked,
-         |  ${Portable.sqlIntRatio9(
-             s"(SELECT coalesce(sum(CASE WHEN rnk <= $TopK" +
-               s" THEN ($rr)[rnk] ELSE 0 END), 0) FROM rh)",
-             "CAST(tot.n_orders AS HUGEINT) * 1000000000")} AS mrr,
-         |  ${Portable.sqlIntRatio9(
-             s"(SELECT coalesce(sum(CASE WHEN rnk <= $TopK" +
-               s" THEN ($dcg)[rnk] ELSE 0 END), 0) FROM rh)",
-             "CAST(tot.n_orders AS HUGEINT) * 1000000000")} AS ndcg
-         |FROM tot""".stripMargin
-    },
-
-    // q168: the 2-iteration Lloyd replay, fully unrolled — each
-    // update = argmin assign (integerized L2, id ties) + per-dim
-    // exact-BIGINT means narrowed to FLOAT, empty clusters inherited;
-    // final = centroids exploded + membership counts.
-    "q168_kmeans" -> {
-      def assignSql(cenCte: String, as: String): String =
-        s"""$as AS (
-           |  SELECT vec_id, cid AS cluster FROM (
-           |    SELECT e.vec_id, c.cid,
-           |      row_number() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${l2iSql("e.v", "c.cv")}, c.cid) AS rn
-           |    FROM ev e, $cenCte c)
-           |  WHERE rn = 1
-           |)""".stripMargin
-      def meanSql(aCte: String, as: String): String =
-        s"""$as AS (
-           |  SELECT $aCte.cluster AS cid, i AS d,
-           |    CAST(CAST(sum(CAST(floor(e.v[i] * 1e9 + 0.5) AS BIGINT))
-           |        AS DOUBLE) / count(*) / 1e9 AS FLOAT) AS val
-           |  FROM $aCte JOIN ev e USING (vec_id),
-           |       (SELECT unnest(range(1, 65)) AS i)
-           |  GROUP BY 1, 2
-           |)""".stripMargin
-      def nextCenSql(mCte: String, prevCte: String, as: String): String =
-        s"""$as AS (
-           |  SELECT cid, list(CAST(val AS DOUBLE) ORDER BY d) AS cv
-           |  FROM $mCte GROUP BY cid
-           |  UNION ALL
-           |  SELECT cid, cv FROM $prevCte
-           |  WHERE cid NOT IN (SELECT cid FROM $mCte)
-           |)""".stripMargin
-      s"""WITH ev AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |c0 AS (SELECT vec_id AS cid, v AS cv FROM ev
-         |       WHERE vec_id < $KmeansK),
-         |${assignSql("c0", "a1")},
-         |${meanSql("a1", "m1")},
-         |${nextCenSql("m1", "c0", "c1")},
-         |${assignSql("c1", "a2")},
-         |${meanSql("a2", "m2")},
-         |${nextCenSql("m2", "c1", "c2")},
-         |${assignSql("c2", "af")},
-         |cnt AS (SELECT cluster, count(*)::BIGINT AS n_members
-         |        FROM af GROUP BY 1)
-         |SELECT x.cid AS cluster,
-         |  coalesce(cnt.n_members, 0)::BIGINT AS n_members,
-         |  x.d, x.val
-         |FROM (SELECT cid, i::BIGINT AS d, CAST(cv[i] AS FLOAT) AS val
-         |      FROM c2, (SELECT unnest(range(1, 65)) AS i)) x
-         |LEFT JOIN cnt ON cnt.cluster = x.cid
-         |ORDER BY cluster, d""".stripMargin
-    },
-
-    // q166: the same first-K codebooks, argmin encode, ADC integer
-    // sums, and exact-L2 twin rebuilt in SQL; q109's recall-join shape.
-    "q166_pq_recall" ->
-      s"""$pqSqlPrefix,
-         |ad AS (
-         |  SELECT t.probe_id, e.vec_id, sum(t.d)::BIGINT AS adist
-         |  FROM enc e JOIN tab t ON e.s = t.s AND e.code = t.cid
-         |  GROUP BY 1, 2
-         |)$pqRecallSqlSuffix""".stripMargin,
-
-    // q167: q166's prefix + the inverted file — coarse argmin cells,
-    // probe's top-nprobe cells, candidates restricted before ADC.
-    "q167_ivfpq_recall" ->
-      s"""$pqSqlPrefix,
-         |coarse AS (SELECT vec_id AS ccid, v AS ccv FROM ev
-         |           WHERE vec_id < $IvfCells),
-         |cells AS (
-         |  SELECT vec_id, ccid AS cell FROM (
-         |    SELECT e.vec_id, c.ccid,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${l2iSql("e.v", "c.ccv")}, c.ccid) AS rn
-         |    FROM ev e, coarse c)
-         |  WHERE rn = 1
-         |),
-         |pcells AS (
-         |  SELECT probe_id, ccid AS cell FROM (
-         |    SELECT p.vec_id AS probe_id, c.ccid,
-         |      row_number() OVER (PARTITION BY p.vec_id
-         |        ORDER BY ${l2iSql("p.v", "c.ccv")}, c.ccid) AS rn
-         |    FROM ev p, coarse c WHERE p.vec_id < 5)
-         |  WHERE rn <= $IvfNprobe
-         |),
-         |ad AS (
-         |  SELECT t.probe_id, e.vec_id, sum(t.d)::BIGINT AS adist
-         |  FROM enc e
-         |  JOIN cells cl ON e.vec_id = cl.vec_id
-         |  JOIN pcells pc ON cl.cell = pc.cell
-         |  JOIN tab t ON t.probe_id = pc.probe_id
-         |    AND e.s = t.s AND e.code = t.cid
-         |  GROUP BY 1, 2
-         |)$pqRecallSqlSuffix""".stripMargin,
-
-    // q171: q166's frame with the codebooks REPLACED by a per-subspace
-    // keyed replay of the q168 Lloyd recipe (assign/mean/inherit,
-    // carried through (s, cid)); enc/tab rebind to the trained c2.
-    "q171_pq_trained_recall" -> {
-      val w = 64 / PqM
-      def assignSql(cenCte: String, as: String): String =
-        s"""$as AS (
-           |  SELECT vec_id, s, cid AS cluster FROM (
-           |    SELECT a.vec_id, a.s, c.cid,
-           |      row_number() OVER (PARTITION BY a.vec_id, a.s
-           |        ORDER BY ${l2iSql("a.sv", "c.cv")}, c.cid) AS rn
-           |    FROM sub a JOIN $cenCte c USING (s))
-           |  WHERE rn = 1
-           |)""".stripMargin
-      def meanSql(aCte: String, as: String): String =
-        s"""$as AS (
-           |  SELECT $aCte.s, $aCte.cluster AS cid, i AS d,
-           |    CAST(CAST(sum(CAST(floor(b.sv[i] * 1e9 + 0.5) AS BIGINT))
-           |        AS DOUBLE) / count(*) / 1e9 AS FLOAT) AS val
-           |  FROM $aCte JOIN sub b ON b.vec_id = $aCte.vec_id
-           |    AND b.s = $aCte.s,
-           |       (SELECT unnest(range(1, ${w + 1})) AS i)
-           |  GROUP BY 1, 2, 3
-           |)""".stripMargin
-      def nextCenSql(mCte: String, prevCte: String, as: String): String =
-        s"""$as AS (
-           |  SELECT s, cid, list(CAST(val AS DOUBLE) ORDER BY d) AS cv
-           |  FROM $mCte GROUP BY s, cid
-           |  UNION ALL
-           |  SELECT p.s, p.cid, p.cv FROM $prevCte p
-           |  WHERE NOT EXISTS (SELECT 1 FROM $mCte m
-           |    WHERE m.s = p.s AND m.cid = p.cid)
-           |)""".stripMargin
-      s"""WITH ev AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |sub AS (
-         |  SELECT vec_id, s, v[(s*$w+1):(s*$w+$w)] AS sv
-         |  FROM ev, (SELECT unnest(range(0, $PqM)) AS s)
-         |),
-         |c0 AS (SELECT vec_id AS cid, s, sv AS cv FROM sub
-         |       WHERE vec_id < $PqCent),
-         |${assignSql("c0", "ka1")},
-         |${meanSql("ka1", "km1")},
-         |${nextCenSql("km1", "c0", "kc1")},
-         |${assignSql("kc1", "ka2")},
-         |${meanSql("ka2", "km2")},
-         |${nextCenSql("km2", "kc1", "kc2")},
-         |enc AS (
-         |  SELECT vec_id, s, cid AS code FROM (
-         |    SELECT a.vec_id, a.s, c.cid,
-         |      row_number() OVER (PARTITION BY a.vec_id, a.s
-         |        ORDER BY ${l2iSql("a.sv", "c.cv")}, c.cid) AS rn
-         |    FROM sub a JOIN kc2 c USING (s))
-         |  WHERE rn = 1
-         |),
-         |tab AS (
-         |  SELECT p.vec_id AS probe_id, p.s, c.cid,
-         |         ${l2iSql("p.sv", "c.cv")} AS d
-         |  FROM sub p JOIN kc2 c USING (s) WHERE p.vec_id < 5
-         |),
-         |ad AS (
-         |  SELECT t.probe_id, e.vec_id, sum(t.d)::BIGINT AS adist
-         |  FROM enc e JOIN tab t ON e.s = t.s AND e.code = t.cid
-         |  GROUP BY 1, 2
-         |)$pqRecallSqlSuffix""".stripMargin
-    },
-
-    // q174: q167's chain with pcells ranked once; per sweep point the
-    // candidate gate filters rn <= np, the recall join repeats.
-    "q174_ivf_nprobe_curve" -> {
-      val perNp = NprobeSweep.map { np =>
-        s"""ad$np AS (
-           |  SELECT t.probe_id, e.vec_id, sum(t.d)::BIGINT AS adist
-           |  FROM enc e
-           |  JOIN cells cl ON e.vec_id = cl.vec_id
-           |  JOIN pca pc ON cl.cell = pc.cell AND pc.rn <= $np
-           |  JOIN tab t ON t.probe_id = pc.probe_id
-           |    AND e.s = t.s AND e.code = t.cid
-           |  GROUP BY 1, 2
-           |),
-           |at$np AS (
-           |  SELECT probe_id, vec_id,
-           |    row_number() OVER (PARTITION BY probe_id
-           |      ORDER BY adist, vec_id) AS rnk
-           |  FROM ad$np WHERE vec_id <> probe_id
-           |  QUALIFY rnk <= $TopK
-           |)""".stripMargin
-      }.mkString(",\n")
-      val unions = NprobeSweep.map { np =>
-        s"""SELECT $np::BIGINT AS nprobe, e.probe_id,
-           |  count(*) AS n_exact,
-           |  CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_hit,
-           |  round(CAST(CAST(floor(round(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    / count(*)::DOUBLE, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS recall
-           |FROM etop e LEFT JOIN at$np a
-           |  ON a.probe_id = e.probe_id AND a.vec_id = e.vec_id
-           |GROUP BY e.probe_id""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""$pqSqlPrefix,
-         |coarse AS (SELECT vec_id AS ccid, v AS ccv FROM ev
-         |           WHERE vec_id < $IvfCells),
-         |cells AS (
-         |  SELECT vec_id, ccid AS cell FROM (
-         |    SELECT e.vec_id, c.ccid,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${l2iSql("e.v", "c.ccv")}, c.ccid) AS rn
-         |    FROM ev e, coarse c)
-         |  WHERE rn = 1
-         |),
-         |pca AS (
-         |  SELECT p.vec_id AS probe_id, c.ccid AS cell,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${l2iSql("p.v", "c.ccv")}, c.ccid) AS rn
-         |  FROM ev p, coarse c WHERE p.vec_id < 5
-         |),
-         |exd AS (
-         |  SELECT p.vec_id AS probe_id, c.vec_id,
-         |         ${l2iSql("c.v", "p.v")} AS d
-         |  FROM ev c, ev p WHERE p.vec_id < 5 AND c.vec_id <> p.vec_id
-         |),
-         |etop AS (
-         |  SELECT probe_id, vec_id,
-         |    row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY d, vec_id) AS rnk
-         |  FROM exd QUALIFY rnk <= $TopK
-         |),
-         |$perNp
-         |$unions
-         |ORDER BY nprobe, probe_id""".stripMargin
-    },
-
-    // q165: DuckDB's ignore_errors surfaces each torn line as an
-    // all-NULL row (one per line — verified behavior), so the corrupt
-    // bucket is doc_id IS NULL; good lines always carry doc_id.
-    "q165_jsonl_quarantine" ->
-      s"""WITH j AS (
-         |  SELECT * FROM read_json('${q165JsonlPath(SfToken)}/*.json',
-         |    format='newline_delimited',
-         |    columns={'doc_id':'BIGINT','text':'VARCHAR',
-         |             'lang':'VARCHAR','source':'VARCHAR'},
-         |    ignore_errors=true)
-         |)
-         |SELECT CASE WHEN doc_id IS NULL THEN '__corrupt__'
-         |            ELSE source END AS bucket,
-         |  count(*)::BIGINT AS n_lines,
-         |  coalesce(sum(doc_id), 0)::BIGINT AS id_sum
-         |FROM j GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    // q172: same footers, same cumulative-offset cut — integer byte
-    // offsets make the group function exact in both engines.
-    "q172_compaction_plan" ->
-      s"""WITH cc AS (
-         |  SELECT replace(file_name, '${q172LayoutPath(SfToken)}/', '')
-         |      AS file_name,
-         |    sum(total_compressed_size)::BIGINT AS compressed_bytes
-         |  FROM parquet_metadata('${q172LayoutPath(SfToken)}/*.parquet')
-         |  GROUP BY 1
-         |),
-         |tgt AS (SELECT greatest(1, sum(compressed_bytes)
-         |          // $CompactTargetFrac)::BIGINT AS t FROM cc),
-         |cum AS (
-         |  SELECT file_name, compressed_bytes,
-         |    coalesce(sum(compressed_bytes) OVER (ORDER BY file_name
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS off
-         |  FROM cc
-         |),
-         |g AS (SELECT file_name, compressed_bytes,
-         |        (off // tgt.t)::BIGINT AS grp FROM cum, tgt),
-         |tot AS (SELECT grp, count(*)::BIGINT AS grp_files,
-         |          sum(compressed_bytes)::BIGINT AS grp_bytes
-         |        FROM g GROUP BY 1)
-         |SELECT g.file_name, g.compressed_bytes, g.grp,
-         |       tot.grp_files, tot.grp_bytes
-         |FROM g JOIN tot USING (grp) ORDER BY file_name""".stripMargin,
-
-    // q164: DuckDB reads the same row-group statistics; per-file
-    // envelope = min/max over row groups, stats decoded from the
-    // VARCHAR projection parquet_metadata exposes.
-    "q164_zorder_stats" ->
-      s"""WITH cc AS (
-         |  SELECT replace(file_name, '${q164LayoutPath(SfToken)}/', '')
-         |      AS file_name,
-         |    path_in_schema AS col_name,
-         |    CAST(stats_min_value AS BIGINT) AS mn,
-         |    CAST(stats_max_value AS BIGINT) AS mx
-         |  FROM parquet_metadata('${q164LayoutPath(SfToken)}/*.parquet')
-         |  WHERE path_in_schema IN ('l_orderkey', 'l_partkey')
-         |)
-         |SELECT file_name, col_name,
-         |  min(mn)::BIGINT AS min_val, max(mx)::BIGINT AS max_val
-         |FROM cc GROUP BY 1, 2
-         |ORDER BY file_name, col_name""".stripMargin,
-
-    // q159: one partition level — the glob matches dir/value/file and
-    // the relative name strips the audit root, matching the engine's
-    // root-relative file_name.
-    "q159_partitioned_layout" ->
-      s"""WITH cc AS (
-         |  SELECT replace(file_name, '${q159LayoutPath(SfToken)}/', '')
-         |      AS rel_name,
-         |    row_group_id,
-         |    max(row_group_num_rows) AS rg_rows,
-         |    sum(total_compressed_size) AS comp,
-         |    sum(total_uncompressed_size) AS unc
-         |  FROM parquet_metadata('${q159LayoutPath(SfToken)}/*/*.parquet')
-         |  GROUP BY rel_name, row_group_id
-         |)
-         |SELECT rel_name AS file_name,
-         |  count(*)::BIGINT AS n_row_groups,
-         |  sum(rg_rows)::BIGINT AS n_rows,
-         |  sum(comp)::BIGINT AS compressed_bytes,
-         |  sum(unc)::BIGINT AS uncompressed_bytes
-         |FROM cc GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // q160: DuckDB reads the same footers; leaf columns are the rows
-    // with no children. DISTINCT matches the engine's cross-file
-    // distinct (single-file fixtures make it a no-op, but the CONTRACT
-    // is distinct-leaf-set, so the oracle says so too).
-    "q160_schema_audit" ->
-      Seq("lineitem", "events", "embeddings").map { name =>
-        s"""SELECT DISTINCT '$name' AS table_name, name AS field_name,
-           |  type AS physical_type, repetition_type AS repetition,
-           |  converted_type
-           |FROM parquet_schema('/root/testdata/$SfToken/$name.parquet')
-           |WHERE num_children IS NULL""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY table_name, field_name"),
-
-    // q161: the same integerize-then-exact-ratio discipline — cosines
-    // 9dp-rounded then scaled to BIGINT, top-k penalty sums exact,
-    // margin = one double division of two exact integers.
-    "q161_margin_mining" ->
-      s"""WITH x AS (
-         |  SELECT vec_id AS x_id,
-         |         list_transform(embedding, e -> CAST(e AS DOUBLE)) AS xv
-         |  FROM embeddings WHERE label = 0
-         |),
-         |y AS (
-         |  SELECT vec_id AS y_id,
-         |         list_transform(embedding, e -> CAST(e AS DOUBLE)) AS yv
-         |  FROM embeddings WHERE label = 1
-         |),
-         |si AS (
-         |  SELECT x_id, y_id, cos,
-         |         CAST(floor(cos * 1e9 + 0.5) AS BIGINT) AS ci
-         |  FROM (SELECT x_id, y_id,
-         |          ${Portable.sqlRatio9(cosSql("xv", "yv"))} AS cos
-         |        FROM x, y)
-         |)$marginMineSqlTail""".stripMargin,
-
-    // q162: identical mining tail over SRP-bucket candidates — the
-    // plane family is the shared srp CTE's, labels carried through the
-    // bucket so the sides stay disjoint.
-    "q162_margin_mining_lsh" ->
-      s"""WITH proj AS (
-         |  SELECT vec_id, label, p,
-         |    list_sum(list_transform(range(1, len(embedding) + 1),
-         |      i -> embedding[i]::DOUBLE * (${Portable.sqlUnif("p", "i")} - 0.5))) AS d
-         |  FROM embeddings, (SELECT unnest(range(0, $SrpPlanes)) AS p)
-         |  WHERE label IN (0, 1)
-         |),
-         |buck AS (
-         |  SELECT vec_id, label,
-         |    sum(CASE WHEN d >= 0 THEN (1::BIGINT << p) ELSE 0 END)::BIGINT
-         |      AS bucket
-         |  FROM proj GROUP BY vec_id, label
-         |),
-         |ev AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |si AS (
-         |  SELECT x_id, y_id, cos,
-         |         CAST(floor(cos * 1e9 + 0.5) AS BIGINT) AS ci
-         |  FROM (SELECT bx.vec_id AS x_id, by_.vec_id AS y_id,
-         |          ${Portable.sqlRatio9(cosSql("ex.v", "ey.v"))} AS cos
-         |        FROM buck bx
-         |        JOIN buck by_ ON bx.bucket = by_.bucket
-         |          AND bx.label = 0 AND by_.label = 1
-         |        JOIN ev ex ON bx.vec_id = ex.vec_id
-         |        JOIN ev ey ON by_.vec_id = ey.vec_id)
-         |)$marginMineSqlTail""".stripMargin,
-
-    // q157: q61's posting join at minShared = 1, doc-keyed max, value
-    // rollup, descending cumulative.
-    "q157_contamination_sens" ->
-      s"""$shingleSqlCte,
-         |tp AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-         |ep AS (SELECT doc_id AS eval_id, unnest(shingles) AS s FROM sh
-         |       WHERE doc_id < $EvalSetDocs),
-         |pairsh AS (
-         |  SELECT tp.doc_id, ep.eval_id, count(*) AS shared_ngrams
-         |  FROM tp JOIN ep USING (s)
-         |  GROUP BY tp.doc_id, ep.eval_id
-         |),
-         |mx AS (
-         |  SELECT doc_id, max(shared_ngrams) AS max_shared
-         |  FROM pairsh GROUP BY doc_id
-         |)
-         |SELECT max_shared, count(*)::BIGINT AS n_docs,
-         |  CAST(sum(count(*)) OVER (ORDER BY max_shared DESC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |    AS cum_docs_ge
-         |FROM mx GROUP BY max_shared
-         |ORDER BY max_shared""".stripMargin,
-
-    // q108: eval docs (and their shingle arrays' distinctness) come
-    // from the same sh CTE as the Spark side; a doc too short to
-    // shingle never enters the posting list, so its row comes from the
-    // documents spine with counts 0 and a NULL coverage.
-    "q108_contamination_coverage" ->
-      s"""$shingleSqlCte,
-         |tsp AS (SELECT DISTINCT s FROM (
-         |  SELECT unnest(shingles) AS s FROM sh
-         |  WHERE doc_id >= $EvalSetDocs) _),
-         |ep AS (SELECT doc_id AS eval_id, unnest(shingles) AS s FROM sh
-         |       WHERE doc_id < $EvalSetDocs),
-         |per AS (
-         |  SELECT eval_id, count(*)::BIGINT AS n_shingles,
-         |    CAST(sum(CASE WHEN tsp.s IS NOT NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_cont
-         |  FROM ep LEFT JOIN tsp ON ep.s = tsp.s
-         |  GROUP BY eval_id
-         |)
-         |SELECT d.doc_id AS eval_id,
-         |  coalesce(per.n_shingles, 0) AS n_shingles,
-         |  coalesce(per.n_cont, 0) AS n_contaminated,
-         |  ${Portable.sqlIntRatio9("per.n_cont", "per.n_shingles")}
-         |    AS coverage
-         |FROM (SELECT doc_id FROM documents
-         |      WHERE doc_id < $EvalSetDocs) d
-         |LEFT JOIN per ON per.eval_id = d.doc_id
-         |ORDER BY eval_id""".stripMargin,
-
-    // q60: same ms-floor period math as the Spark side. The ms→period
-    // step uses the pmod-FLOOR form (m − pmod(m, w) is an exact multiple,
-    // so // is exact) matching Spark's sign-safe floor; the ns→ms step
-    // (epoch_ms) truncates toward zero in DuckDB, so oracle parity is
-    // contracted for ts ≥ 0 (the fixture) — see Events.retention.
-    "q60_retention" ->
-      s"""WITH ms AS (
-         |  SELECT user_id, epoch_ms(ts) AS m FROM events
-         |), pd AS (
-         |  SELECT user_id,
-         |    (m - ((m % $RetentionPeriodMs) + $RetentionPeriodMs)
-         |      % $RetentionPeriodMs) // $RetentionPeriodMs AS p
-         |  FROM ms
-         |), cohorts AS (
-         |  SELECT user_id, min(p) AS cp FROM pd GROUP BY user_id
-         |), active AS (
-         |  SELECT DISTINCT user_id, p FROM pd
-         |), counts AS (
-         |  SELECT c.cp, a.p - c.cp AS period_offset, count(*) AS n_active
-         |  FROM active a JOIN cohorts c USING (user_id)
-         |  GROUP BY c.cp, a.p - c.cp
-         |), sizes AS (
-         |  SELECT cp, n_active AS cohort_size FROM counts WHERE period_offset = 0
-         |)
-         |SELECT (counts.cp * $RetentionPeriodMs)::BIGINT AS cohort_start_ms,
-         |  period_offset::BIGINT AS period_offset,
-         |  n_active::BIGINT AS n_active,
-         |  cohort_size::BIGINT AS cohort_size,
-         |  ${Portable.sqlIntRatio9("n_active", "cohort_size")}
-         |    AS retention
-         |FROM counts JOIN sizes USING (cp)
-         |ORDER BY cohort_start_ms, period_offset""".stripMargin,
-
-    "q31_run_table" ->
-      s"""WITH runs AS (
-        |  SELECT event_type AS job_name,
-        |         ${Portable.sqlIntRatioSigned9("sum(CAST(floor(value * 100 + 0.5) AS BIGINT))", "CAST(count(*) AS HUGEINT) * 100")} AS objective,
-        |         (min(epoch_ns(ts)) // 1000000)::BIGINT AS start_ms
-        |  FROM events GROUP BY event_type
-        |)
-        |SELECT job_name, objective, start_ms,
-        |       CAST(row_number() OVER (ORDER BY start_ms ASC) AS BIGINT) AS iteration
-        |FROM runs ORDER BY iteration""".stripMargin,
-
-    "q32_best_run" ->
-      s"""WITH runs AS (
-        |  SELECT event_type AS job_name, ${Portable.sqlIntRatioSigned9("sum(CAST(floor(value * 100 + 0.5) AS BIGINT))", "CAST(count(*) AS HUGEINT) * 100")} AS objective
-        |  FROM events GROUP BY event_type
-        |)
-        |SELECT job_name, objective FROM runs
-        |ORDER BY objective ASC LIMIT 1""".stripMargin,
-
-    "q33_valid_sample" ->
-      s"""$vocabSqlCte
-         |SELECT idx, pid AS product_id FROM (
-         |  SELECT idx::BIGINT AS idx, pid FROM vocab
-         |  WHERE idx <= $ValidWindow
-         |  ORDER BY ${Portable.sqlUnif("pid", "'valid'")}, idx
-         |  LIMIT $ValidSize
-         |) ORDER BY idx""".stripMargin,
-
-    "q34_tensors" -> {
-      val negs = (0 until NumNs).map { k =>
-        val u = Portable.sqlUnif("order_id", "pos_t", "pos_c", k.toString)
-        s"least(${VocabK - 1}, CAST(floor(exp($u * ln(${VocabK + 1}.0))) AS BIGINT) - 1)"
-      }
-      s"""$pairsSqlCte
-         |SELECT order_id, pos_t, pos_c, target,
-         |  concat_ws(',', context, ${negs.mkString(", ")}) AS contexts,
-         |  '1,${Seq.fill(NumNs)("0").mkString(",")}' AS labels
-         |FROM pairs
-         |ORDER BY order_id, pos_t, pos_c""".stripMargin
-    },
-
-    "q35_mm_meta" ->
-      """SELECT doc_id,
-        |  octet_length(encode(text))::BIGINT AS n_bytes,
-        |  md5(text) AS content_md5,
-        |  to_base64(encode(substring(text, 1, 8))) AS magic_b64,
-        |  lang, source
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // q36: the stub decoder's 16-bin high-nibble byte histogram,
-    // recomputed from hex(encode(text)) — the high nibble of byte i IS
-    // hex digit 2i+1 (1-based) of the blob's hex string.
-    "q36_mm_features" ->
-      """WITH hx AS (
-        |  SELECT doc_id, octet_length(encode(text))::BIGINT AS n_bytes,
-        |         hex(encode(text)) AS h
-        |  FROM documents
-        |),
-        |nib AS (
-        |  SELECT doc_id, CAST(('0x' || substring(h, 2*i + 1, 1)) AS BIGINT) AS bin
-        |  FROM hx, LATERAL (SELECT unnest(range(0, n_bytes)) AS i) p
-        |),
-        |hist AS (
-        |  SELECT doc_id, bin, count(*) AS cnt FROM nib GROUP BY doc_id, bin
-        |)
-        |SELECT d.doc_id, d.n_bytes, bins.bin,
-        |  (CAST(CAST(floor((coalesce(ht.cnt, 0)
-        |    / greatest(d.n_bytes, 1)::DOUBLE) * 1e9 + 0.5) AS BIGINT)
-        |    AS DOUBLE) / 1e9) AS feat
-        |FROM hx d
-        |CROSS JOIN (SELECT unnest(range(0, 16)) AS bin) bins
-        |LEFT JOIN hist ht ON ht.doc_id = d.doc_id AND ht.bin = bins.bin
-        |ORDER BY d.doc_id, bins.bin""".stripMargin,
-
-    // q41: same aggregate over the same CSV files Spark wrote and read —
-    // read_csv with explicit column types mirrors the pinned StructType.
-    "q41_csv_roundtrip" ->
-      s"""SELECT reordered, count(*) AS n_rows,
-         |  count(DISTINCT product_id) AS n_products,
-         |  CAST(sum(add_to_cart_order) AS BIGINT) AS sum_pos
-         |FROM read_csv('${q41CsvPath(SfToken)}/*.csv',
-         |  header=true,
-         |  columns={'order_id': 'BIGINT', 'product_id': 'BIGINT',
-         |           'add_to_cart_order': 'BIGINT', 'reordered': 'BIGINT'})
-         |GROUP BY reordered ORDER BY reordered""".stripMargin,
-
-    "q38_props_json" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-        |  max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q39_user_rank" ->
-      """WITH peruser AS (
-        |  SELECT event_type, user_id, count(*) AS n
-        |  FROM events GROUP BY event_type, user_id
-        |)
-        |SELECT event_type, user_id, n,
-        |       CAST(rank() OVER w AS BIGINT) AS rnk,
-        |       CAST(dense_rank() OVER w AS BIGINT) AS drnk
-        |FROM peruser
-        |WINDOW w AS (PARTITION BY event_type ORDER BY n DESC)
-        |QUALIFY rnk <= 10
-        |ORDER BY event_type, rnk, user_id""".stripMargin,
-
-    "q40_moving_window" ->
-      // truncate to ms BEFORE differencing (matches the Spark side, which
-      // lags the already-truncated ms column)
-      """WITH e AS (
-        |  SELECT user_id, event_id, value,
-        |         (epoch_ns(ts) // 1000000)::BIGINT AS ms,
-        |         epoch_ns(ts) AS tns
-        |  FROM events
-        |)
-        |SELECT user_id, event_id, ms,
-        |  (ms - lag(ms, 1) OVER w)::BIGINT AS prev_gap_ms,
-        |  (lead(ms, 1) OVER w - ms)::BIGINT AS next_gap_ms,
-        |  round(CAST(CAST(floor(round(sum(value) OVER (PARTITION BY user_id
-        |    ORDER BY tns, event_id
-        |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS mov_sum3
-        |FROM e
-        |WINDOW w AS (PARTITION BY user_id ORDER BY tns, event_id)
-        |ORDER BY user_id, ms, event_id""".stripMargin,
-    // q37: the oracle reads the SPARK-WRITTEN embedding parquet (q144
-    // interchange pattern) — the stored-table report is exact SQL even
-    // though the training that produced the table is not.
-    "q37_w2v_synonyms" ->
-      s"""WITH emb AS (
-         |  SELECT vec_id,
-         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM read_parquet('${q37EmbPath(SfToken)}/*.parquet')
-         |),
-         |p AS (
-         |  SELECT vec_id AS probe_id, v AS pv
-         |  FROM emb ORDER BY vec_id LIMIT 3
-         |),
-         |sc AS (
-         |  SELECT probe_id, vec_id, ${Portable.sqlRatio9(cosSql("v", "pv"))} AS cos
-         |  FROM emb, p WHERE vec_id <> probe_id
-         |),
-         |r AS (
-         |  SELECT probe_id, vec_id, cos,
-         |    CAST(row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY cos DESC, vec_id ASC) AS BIGINT) AS rnk
-         |  FROM sc QUALIFY rnk <= 5
-         |)
-         |SELECT r.probe_id, pp.p_name AS probe_name, r.vec_id,
-         |  pn.p_name AS neighbor_name, r.cos, r.rnk
-         |FROM r JOIN part pp ON r.probe_id = pp.p_partkey
-         |       JOIN part pn ON r.vec_id = pn.p_partkey
-         |ORDER BY r.probe_id, r.rnk""".stripMargin,
-
-    // q175: the exact-rational BM25 — idf 9dp-rounded (the q56 ln
-    // discipline), tf-norm a ratio of exact BIGINTs (k1 = 6/5,
-    // b = 3/4 clear every denominator), per-term contributions
-    // integerized then summed in BIGINT.
-    "q175_bm25_topk" ->
-      s"""$bm25SqlCtes
-         |SELECT query_id, rnk, doc_id, score_i,
-         |  round(CAST(CAST(floor(round(CAST(score_i AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS score
-         |FROM rk ORDER BY query_id, rnk""".stripMargin,
-
-    // q176: the UNCHANGED q175 lexical body + the q16-shaped exact
-    // cosine list on the same split, fused by exact integer
-    // 1e9 div (60 + rank) weights.
-    "q176_rrf_hybrid" ->
-      s"""$bm25SqlCtes,
-         |emb AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))
-         |    AS v
-         |  FROM embeddings
-         |),
-         |cp AS (SELECT vec_id, v FROM emb
-         |       WHERE vec_id >= $RetrievalQueryDocs),
-         |pp AS (SELECT vec_id AS query_id, v AS pv FROM emb
-         |       WHERE vec_id < $RetrievalQueryDocs),
-         |cs AS (
-         |  SELECT query_id, vec_id AS doc_id,
-         |    ${Portable.sqlRatio9(cosSql("v", "pv"))} AS cos
-         |  FROM cp, pp
-         |),
-         |semr AS (
-         |  SELECT query_id, doc_id,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, doc_id ASC) AS BIGINT) AS rnk
-         |  FROM cs QUALIFY rnk <= $TopK
-         |),
-         |u AS (
-         |  SELECT query_id, doc_id, rnk FROM rk
-         |  UNION ALL
-         |  SELECT query_id, doc_id, rnk FROM semr
-         |),
-         |f AS (
-         |  SELECT query_id, doc_id, count(*)::BIGINT AS n_lists,
-         |    sum(CAST(floor(1000000000 / ($RrfC + rnk)) AS BIGINT))::BIGINT
-         |      AS rrf_i
-         |  FROM u GROUP BY 1, 2
-         |),
-         |fr AS (
-         |  SELECT query_id, doc_id, n_lists, rrf_i,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY rrf_i DESC, doc_id ASC) AS BIGINT) AS rnk
-         |  FROM f QUALIFY rnk <= $TopK
-         |)
-         |SELECT query_id, rnk, doc_id, n_lists, rrf_i,
-         |  round(CAST(CAST(floor(round(CAST(rrf_i AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS rrf
-         |FROM fr ORDER BY query_id, rnk""".stripMargin,
-
-    // q177: degree-ordered orientation replayed relationally — every
-    // triangle counted at its unique two-out-edge source, per-node
-    // counts by exploding the three corners, coefficient = one double
-    // division over exact integers.
-    "q177_triangles" ->
-      s"""WITH lp AS (
-         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-         |  WHERE l_partkey < $TriPartMax
-         |),
-         |e AS (
-         |  SELECT DISTINCT a.p AS lo, b.p AS hi
-         |  FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p
-         |),
-         |deg AS (
-         |  SELECT id, count(*)::BIGINT AS deg FROM (
-         |    SELECT lo AS id FROM e UNION ALL SELECT hi FROM e)
-         |  GROUP BY id
-         |),
-         |o AS (
-         |  SELECT
-         |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND e.lo < e.hi)
-         |         THEN e.lo ELSE e.hi END AS src,
-         |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND e.lo < e.hi)
-         |         THEN e.hi ELSE e.lo END AS dst,
-         |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND e.lo < e.hi)
-         |         THEN dh.deg ELSE dl.deg END AS ddeg
-         |  FROM e JOIN deg dl ON dl.id = e.lo JOIN deg dh ON dh.id = e.hi
-         |),
-         |tri AS (
-         |  SELECT o1.src AS u, o1.dst AS v, o2.dst AS w
-         |  FROM o o1 JOIN o o2 ON o1.src = o2.src
-         |    AND (o1.ddeg < o2.ddeg
-         |         OR (o1.ddeg = o2.ddeg AND o1.dst < o2.dst))
-         |  JOIN o o3 ON o3.src = o1.dst AND o3.dst = o2.dst
-         |),
-         |pn AS (
-         |  SELECT id, count(*)::BIGINT AS n_triangles FROM (
-         |    SELECT u AS id FROM tri
-         |    UNION ALL SELECT v FROM tri
-         |    UNION ALL SELECT w FROM tri)
-         |  GROUP BY id
-         |)
-         |SELECT d.id, d.deg,
-         |  coalesce(pn.n_triangles, 0)::BIGINT AS n_triangles,
-         |  CASE WHEN d.deg >= 2 THEN
-         |    round(CAST(CAST(floor(round(CAST(2 * coalesce(pn.n_triangles, 0) AS DOUBLE)
-         |          / CAST(d.deg * (d.deg - 1) AS DOUBLE), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9)
-         |  END AS clustering_coeff
-         |FROM deg d LEFT JOIN pn USING (id)
-         |ORDER BY d.id""".stripMargin,
-
-    // q178: change detection then versioning, both ordered by the
-    // original (ts, event_id); timestamps leave as ms-floors (the
-    // sessionize cross-engine contract).
-    "q178_scd2" -> scd2OracleSql,
-
-    // q258: the streaming SCD2 twin's sink holds exactly the batch
-    // rebuild's CLOSED versions.
-    "q258_scd2_stream" ->
-      s"""SELECT user_id, version, attr, from_ms, to_ms, is_current
-         |FROM ($scd2OracleSql) t
-         |WHERE NOT is_current ORDER BY user_id, version""".stripMargin,
-
-    // q261: the built-in watermark-closed window agg's sink equals
-    // the plain batch GROUP BY; sums certify at exact cents (the
-    // double-accumulation error is orders below the rounding margin).
-    "q261_windowed_counts_stream" ->
-      s"""SELECT
-         |  (epoch_ms(ts) - epoch_ms(ts) % $WindowMs)::BIGINT
-         |    AS window_start_ms,
-         |  event_type, count(*)::BIGINT AS n_events,
-         |  floor(sum(value) * 100 + 0.5)::BIGINT AS sum_cents
-         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // q262: the built-in session_window's sink equals an independent
-    // gaps-and-islands rebuild with session_window's own boundary
-    // rule (new session at exactly last + gap — the window is
-    // [start, last+gap)); end = last event + gap.
-    "q262_session_windows_stream" ->
-      s"""WITH e AS (
-         |  SELECT user_id, epoch_us(ts) AS us, value FROM events
-         |),
-         |b AS (
-         |  SELECT user_id, us, value,
-         |    CASE WHEN lag(us) OVER w IS NULL
-         |         OR us - lag(us) OVER w >= ${SessionGapMs * 1000L}
-         |    THEN 1 ELSE 0 END AS brk
-         |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us)
-         |),
-         |g AS (
-         |  SELECT user_id, us, value,
-         |    sum(brk) OVER (PARTITION BY user_id ORDER BY us
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-         |  FROM b
-         |)
-         |SELECT user_id,
-         |  (min(us) // 1000)::BIGINT AS session_start_ms,
-         |  (max(us) // 1000 + $SessionGapMs)::BIGINT AS session_end_ms,
-         |  count(*)::BIGINT AS n_events,
-         |  floor(sum(value) * 100 + 0.5)::BIGINT AS sum_cents
-         |FROM g GROUP BY user_id, sid
-         |ORDER BY user_id, session_start_ms""".stripMargin,
-
-    // q259: the stream-stream interval join's sink equals the batch
-    // self-join — the time comparison runs at the engines' shared
-    // micros precision (parquet NANOS truncate to micros in both),
-    // the emitted floors at ms.
-    "q259_interval_join_stream" ->
-      s"""SELECT l.user_id, l.event_id AS l_id, r.event_id AS r_id,
-         |  epoch_ms(l.ts)::BIGINT AS l_ms, epoch_ms(r.ts)::BIGINT AS r_ms
-         |FROM events l JOIN events r ON l.user_id = r.user_id
-         |  AND epoch_us(r.ts) >= epoch_us(l.ts)
-         |  AND epoch_us(r.ts) <= epoch_us(l.ts) + ${WindowMs * 1000L}
-         |ORDER BY l.user_id, l_id, r_id""".stripMargin,
-
-    // q183: the merge result must equal the full rebuild — the oracle
-    // IS q178's full-recompute SQL over the whole log.
-    "q183_scd2_merge" -> scd2OracleSql,
-
-    // q179: the same footer stats the q164 audit reads, reduced to
-    // per-file envelopes of the one sort column, lag-checked for
-    // overlap in (min, name) order.
-    "q179_range_layout" ->
-      s"""WITH cc AS (
-         |  SELECT replace(file_name, '${q179LayoutPath(SfToken)}/', '')
-         |      AS file_name,
-         |    CAST(stats_min_value AS BIGINT) AS mn,
-         |    CAST(stats_max_value AS BIGINT) AS mx
-         |  FROM parquet_metadata('${q179LayoutPath(SfToken)}/*.parquet')
-         |  WHERE path_in_schema = 'l_orderkey'
-         |),
-         |f AS (
-         |  SELECT file_name, min(mn)::BIGINT AS min_val,
-         |    max(mx)::BIGINT AS max_val
-         |  FROM cc GROUP BY 1
-         |),
-         |w AS (
-         |  SELECT file_name, min_val, max_val,
-         |    lag(max_val) OVER (ORDER BY min_val, file_name) AS pm
-         |  FROM f
-         |)
-         |SELECT file_name, min_val, max_val,
-         |  coalesce(min_val <= pm, false) AS overlaps_prev
-         |FROM w ORDER BY min_val, file_name""".stripMargin,
-
-    // q180: the same integerized coordinates summed relationally —
-    // per-pair products in exact BIGINT, the covariance numerator in
-    // HUGEINT, ONE cast to double.
-    "q180_embed_cov" ->
-      s"""WITH ev AS (
-         |  SELECT list_transform(embedding,
-         |      x -> CAST(floor(CAST(x AS DOUBLE) * 1e6 + 0.5) AS BIGINT))
-         |    AS xi
-         |  FROM embeddings
-         |  WHERE embedding IS NOT NULL AND len(embedding) = $EmbDims
-         |),
-         |n AS (SELECT count(*)::BIGINT AS n FROM ev),
-         |d AS (SELECT unnest(range(1, ${EmbDims + 1}))::BIGINT AS i),
-         |sums AS (
-         |  SELECT i, sum(xi[i])::BIGINT AS s FROM ev, d GROUP BY i
-         |),
-         |prods AS (
-         |  SELECT di.i AS i, dj.i AS j,
-         |    sum(xi[di.i] * xi[dj.i])::BIGINT AS sp
-         |  FROM ev, d di, d dj WHERE dj.i >= di.i GROUP BY 1, 2
-         |)
-         |SELECT p.i, p.j, n.n, si.s AS sum_i, sj.s AS sum_j,
-         |  p.sp AS sumprod,
-         |  ${Portable.sqlIntRatioSigned9(
-             "CAST(n.n AS HUGEINT) * p.sp - CAST(si.s AS HUGEINT) * sj.s",
-             "CAST(n.n AS HUGEINT) * n.n * 1000000000000")} AS cov
-         |FROM prods p
-         |JOIN sums si ON si.i = p.i
-         |JOIN sums sj ON sj.i = p.j
-         |CROSS JOIN n
-         |ORDER BY p.i, p.j""".stripMargin,
-
-    // q181: the same exact-integer ratio inside one ln per score (the
-    // q56 discipline); NPMI NULL at the one-bigram-corpus edge.
-    "q181_pmi_collocations" -> {
-      val ratio = "CAST(b.cnt_xy AS DOUBLE) * CAST(t_u AS DOUBLE)" +
-        " * CAST(t_u AS DOUBLE) / CAST(ux.c AS DOUBLE)" +
-        " / CAST(uy.c AS DOUBLE) / CAST(t_b AS DOUBLE)"
-      s"""WITH tok AS (SELECT string_split(text, ' ') AS t FROM documents),
-         |bp AS (
-         |  SELECT unnest(list_transform(range(1, len(t)),
-         |    i -> {'w1': t[i], 'w2': t[i + 1]})) AS p
-         |  FROM tok
-         |),
-         |big AS (
-         |  SELECT p.w1 AS w1, p.w2 AS w2, count(*)::BIGINT AS cnt_xy
-         |  FROM bp GROUP BY 1, 2
-         |),
-         |uni AS (
-         |  SELECT w, count(*)::BIGINT AS c
-         |  FROM (SELECT unnest(t) AS w FROM tok) GROUP BY w
-         |),
-         |tu AS (SELECT sum(c)::BIGINT AS t_u FROM uni),
-         |tb AS (SELECT sum(cnt_xy)::BIGINT AS t_b FROM big)
-         |SELECT b.w1, b.w2, b.cnt_xy, ux.c AS c_x, uy.c AS c_y,
-         |  round(CAST(CAST(floor(round(ln($ratio), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS pmi,
-         |  CASE WHEN b.cnt_xy < t_b THEN
-         |    round(CAST(CAST(floor(round(ln($ratio)
-         |      / -ln(CAST(b.cnt_xy AS DOUBLE) / CAST(t_b AS DOUBLE)), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9)
-         |  END AS npmi
-         |FROM big b JOIN uni ux ON ux.w = b.w1
-         |           JOIN uni uy ON uy.w = b.w2
-         |CROSS JOIN tu CROSS JOIN tb
-         |WHERE b.cnt_xy >= $PmiMinCount
-         |ORDER BY b.w1, b.w2""".stripMargin
-    },
-
-    // q188: per-transaction-distinct counts; each metric one pinned
-    // double chain over exact BIGINTs.
-    "q188_assoc_rules" ->
-      s"""WITH ti AS (
-         |  SELECT DISTINCT l_orderkey AS t, l_partkey AS i FROM lineitem
-         |  WHERE l_partkey < $TriPartMax
-         |),
-         |pc AS (
-         |  SELECT a.i AS a, b.i AS b, count(*)::BIGINT AS c_ab
-         |  FROM ti a JOIN ti b ON a.t = b.t AND a.i <> b.i
-         |  GROUP BY 1, 2 HAVING count(*) >= $AssocMinOrders
-         |),
-         |ic AS (SELECT i, count(*)::BIGINT AS c FROM ti GROUP BY i),
-         |n AS (SELECT count(DISTINCT t)::BIGINT AS n_orders FROM ti)
-         |SELECT p.a AS antecedent, p.b AS consequent, n.n_orders,
-         |  ia.c AS c_a, ib.c AS c_b, p.c_ab,
-         |  round(CAST(CAST(floor(round(CAST(p.c_ab AS DOUBLE) / CAST(n.n_orders AS DOUBLE), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9)
-         |    AS support,
-         |  round(CAST(CAST(floor(round(CAST(p.c_ab AS DOUBLE) / CAST(ia.c AS DOUBLE), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9)
-         |    AS confidence,
-         |  round(CAST(CAST(floor(round(CAST(n.n_orders AS DOUBLE) * CAST(p.c_ab AS DOUBLE)
-         |        / CAST(ia.c AS DOUBLE) / CAST(ib.c AS DOUBLE), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9)
-         |    AS lift
-         |FROM pc p JOIN ic ia ON ia.i = p.a JOIN ic ib ON ib.i = p.b
-         |CROSS JOIN n
-         |ORDER BY antecedent, consequent""".stripMargin,
-
-    // q189: the q169 fold hash on users; the argmax replayed as a
-    // row_number over (count DESC, next ASC); unseen states predict
-    // NULL on both sides.
-    "q189_markov_eval" ->
-      s"""WITH ev AS (
-         |  SELECT user_id, event_id, event_type, epoch_ns(ts) AS tns,
-         |    ${Portable.sqlHash(s"'$MarkovSalt'", "user_id")}
-         |      % $MarkovFolds AS fold
-         |  FROM events
-         |),
-         |pr AS (
-         |  SELECT fold,
-         |    lag(event_type) OVER (PARTITION BY user_id
-         |      ORDER BY tns, event_id) AS prev,
-         |    event_type AS next
-         |  FROM ev
-         |),
-         |p2 AS (SELECT * FROM pr WHERE prev IS NOT NULL),
-         |model AS (
-         |  SELECT prev, next AS predicted FROM (
-         |    SELECT prev, next,
-         |      row_number() OVER (PARTITION BY prev
-         |        ORDER BY count(*) DESC, next ASC) AS rn
-         |    FROM p2 WHERE fold <> 0 GROUP BY prev, next)
-         |  WHERE rn = 1
-         |)
-         |SELECT e.prev, m.predicted, count(*)::BIGINT AS n_transitions,
-         |  sum(CASE WHEN e.next = m.predicted THEN 1 ELSE 0 END)::BIGINT
-         |    AS n_hits,
-         |  ${Portable.sqlIntRatio9(
-             "sum(CASE WHEN e.next = m.predicted THEN 1 ELSE 0 END)",
-             "count(*)")}
-         |    AS hit_rate
-         |FROM p2 e LEFT JOIN model m USING (prev)
-         |WHERE e.fold = 0
-         |GROUP BY 1, 2 ORDER BY e.prev""".stripMargin,
-
-    // q190: the same integerized per-dim sums per side; means and the
-    // delta are the identical double chains.
-    "q190_embed_drift" -> {
-      def side(as: String, cond: String): String =
-        s"""e$as AS (
-           |  SELECT list_transform(embedding,
-           |      x -> CAST(floor(CAST(x AS DOUBLE) * 1e6 + 0.5) AS BIGINT))
-           |    AS xi
-           |  FROM embeddings
-           |  WHERE $cond AND embedding IS NOT NULL
-           |    AND len(embedding) = $EmbDims
-           |),
-           |n$as AS (SELECT count(*)::BIGINT AS n FROM e$as),
-           |s$as AS (
-           |  SELECT dd.d, sum(xi[dd.d])::BIGINT AS s
-           |  FROM e$as, dd GROUP BY 1
-           |)""".stripMargin
-      s"""WITH dd AS (SELECT unnest(range(1, ${EmbDims + 1}))::BIGINT AS d),
-         |${side("a", s"vec_id < $DriftSplitId")},
-         |${side("b", s"vec_id >= $DriftSplitId")}
-         |SELECT dd.d, na.n AS n_a, nb.n AS n_b,
-         |  ${Portable.sqlIntRatioSigned9("sa.s",
-             "CAST(na.n AS HUGEINT) * 1000000")} AS mean_a,
-         |  ${Portable.sqlIntRatioSigned9("sb.s",
-             "CAST(nb.n AS HUGEINT) * 1000000")} AS mean_b,
-         |  ${Portable.sqlIntRatioSigned9(
-             "CAST(sb.s AS HUGEINT) * na.n - CAST(sa.s AS HUGEINT) * nb.n",
-             "CAST(na.n AS HUGEINT) * nb.n * 1000000")} AS delta
-         |FROM dd JOIN sa ON sa.d = dd.d JOIN sb ON sb.d = dd.d
-         |CROSS JOIN na CROSS JOIN nb
-         |ORDER BY dd.d""".stripMargin
-    },
-
-    // q193: per-file envelopes from the same footer stats, the band in
-    // exact integer arithmetic, intersection = the planner's min/max
-    // pruning test.
-    "q193_skip_estimate" ->
-      s"""WITH cc AS (
-         |  SELECT replace(file_name, '${q193LayoutPath(SfToken)}/', '')
-         |      AS file_name,
-         |    CAST(stats_min_value AS BIGINT) AS mn,
-         |    CAST(stats_max_value AS BIGINT) AS mx
-         |  FROM parquet_metadata('${q193LayoutPath(SfToken)}/*.parquet')
-         |  WHERE path_in_schema = 'l_orderkey'
-         |),
-         |f AS (
-         |  SELECT file_name, min(mn)::BIGINT AS min_val,
-         |    max(mx)::BIGINT AS max_val
-         |  FROM cc GROUP BY 1
-         |),
-         |g AS (SELECT min(min_val)::BIGINT AS gmin,
-         |             max(max_val)::BIGINT AS gmax FROM f),
-         |b AS (
-         |  SELECT gmin + ((gmax - gmin) * $SkipBandLo) // $SkipBandDen
-         |      AS band_lo,
-         |    gmin + ((gmax - gmin) * $SkipBandHi) // $SkipBandDen
-         |      AS band_hi
-         |  FROM g
-         |)
-         |SELECT count(*)::BIGINT AS n_files, b.band_lo, b.band_hi,
-         |  sum(CASE WHEN f.min_val <= b.band_hi
-         |        AND f.max_val >= b.band_lo THEN 1 ELSE 0 END)::BIGINT
-         |    AS n_touched,
-         |  (count(*) - sum(CASE WHEN f.min_val <= b.band_hi
-         |        AND f.max_val >= b.band_lo THEN 1 ELSE 0 END))::BIGINT
-         |    AS n_skipped,
-         |  round(CAST(CAST(floor(round(CAST(count(*) - sum(CASE WHEN f.min_val <= b.band_hi
-         |        AND f.max_val >= b.band_lo THEN 1 ELSE 0 END) AS DOUBLE)
-         |      / CAST(count(*) AS DOUBLE), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS skip_ratio
-         |FROM f CROSS JOIN b
-         |GROUP BY b.band_lo, b.band_hi""".stripMargin,
-
-    // q194: the same keyed CMS cells; exact = sum of per-key count
-    // squares, estimate = min-over-rows inner product.
-    "q194_join_size" ->
-      s"""WITH ck AS (
-         |  SELECT l_orderkey AS k, count(*)::BIGINT AS cnt
-         |  FROM lineitem WHERE l_orderkey IS NOT NULL GROUP BY 1
-         |),
-         |ex AS (SELECT sum(cnt * cnt)::BIGINT AS join_size FROM ck),
-         |nn AS (SELECT count(l_orderkey)::BIGINT AS n FROM lineitem),
-         |cm AS (
-         |  SELECT rr.r,
-         |    ${Portable.sqlHash(s"'$CmsJoinSalt'", "rr.r", "l_orderkey")}
-         |      % $CmsJoinWidth AS c,
-         |    count(*)::BIGINT AS cnt
-         |  FROM lineitem,
-         |    (SELECT unnest(range(0, $CmsJoinDepth)) AS r) rr
-         |  WHERE l_orderkey IS NOT NULL GROUP BY 1, 2
-         |),
-         |ip AS (SELECT r, sum(cnt * cnt)::BIGINT AS ip FROM cm GROUP BY r),
-         |est AS (SELECT min(ip)::BIGINT AS est_size FROM ip)
-         |SELECT nn.n AS n_left, nn.n AS n_right, ex.join_size,
-         |  est.est_size,
-         |  (est.est_size - ex.join_size)::BIGINT AS overestimate,
-         |  ${Portable.sqlIntRatio9("est.est_size", "ex.join_size")}
-         |    AS ratio
-         |FROM ex CROSS JOIN est CROSS JOIN nn""".stripMargin,
-
-    // q204: one QI agg, one rollup — counts exact, one division.
-    "q204_k_anonymity" ->
-      s"""WITH c AS (
-         |  SELECT c_nationkey,
-         |    CAST(floor(c_acctbal / 1e3) AS BIGINT) AS bal_bucket,
-         |    c_mktsegment
-         |  FROM customer
-         |),
-         |g AS (
-         |  SELECT c_nationkey, bal_bucket, count(*)::BIGINT AS sz,
-         |    count(DISTINCT c_mktsegment)::BIGINT AS l
-         |  FROM c GROUP BY 1, 2
-         |)
-         |SELECT sum(sz)::BIGINT AS n_rows, count(*)::BIGINT AS n_groups,
-         |  min(sz)::BIGINT AS min_group_size,
-         |  sum(CASE WHEN sz < $KAnonK THEN 1 ELSE 0 END)::BIGINT
-         |    AS n_viol_groups,
-         |  sum(CASE WHEN sz < $KAnonK THEN sz ELSE 0 END)::BIGINT
-         |    AS n_viol_rows,
-         |  ${Portable.sqlIntRatio9(
-             s"sum(CASE WHEN sz < $KAnonK THEN sz ELSE 0 END)",
-             "sum(sz)")} AS viol_share,
-         |  min(l)::BIGINT AS min_l
-         |FROM g""".stripMargin,
-
-    // q205: the identical age -> pow chain per row, 9dp-rounded and
-    // integerized before the sum.
-    "q205_decayed_counts" ->
-      s"""WITH e AS (
-         |  SELECT event_type, epoch_ns(ts) // 1000000 AS ms FROM events
-         |),
-         |w AS (
-         |  SELECT event_type,
-         |    CAST(floor(round(pow(CAST(2 AS DOUBLE),
-         |      -(CAST($DecayAsOfMs - ms AS DOUBLE)
-         |        / CAST($DecayHalfLifeMs AS DOUBLE))), 9) * 1e9 + 0.5)
-         |      AS BIGINT) AS w9
-         |  FROM e WHERE ms <= $DecayAsOfMs
-         |)
-         |SELECT event_type, count(*)::BIGINT AS n_events,
-         |  round(CAST(CAST(floor(round(CAST(sum(w9) AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS decayed_mass,
-         |  ${Portable.sqlIntRatio9("sum(w9)",
-             "CAST(count(*) AS HUGEINT) * 1000000000")} AS recency
-         |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // q206: the oracle is deliberately the brute-force O(V²) join the
-    // engine avoids — a hash match certifies the segment-filter path
-    // is COMPLETE on real data, not just on the spec fixture.
-    "q206_fuzzy_names" ->
-      s"""WITH strs AS (
-         |  SELECT p_name AS s, count(*)::BIGINT AS n FROM part GROUP BY 1
-         |)
-         |SELECT a.s AS name_a, b.s AS name_b,
-         |  levenshtein(a.s, b.s)::BIGINT AS dist,
-         |  a.n AS n_a, b.n AS n_b
-         |FROM strs a JOIN strs b ON a.s < b.s
-         |WHERE levenshtein(a.s, b.s) BETWEEN 1 AND $ErMaxDist
-         |ORDER BY name_a, name_b""".stripMargin,
-
-    // q209: brute-force edges (the q206 oracle posture), recursive
-    // transitive closure (the q51 reach pattern), min-reachable rep,
-    // survivorship as a deterministic row_number window.
-    "q209_entity_resolution" ->
-      s"""WITH RECURSIVE strs AS (
-         |  SELECT p_name AS s, count(*)::BIGINT AS n FROM part GROUP BY 1
-         |),
-         |edges AS (
-         |  SELECT a.s AS x, b.s AS y FROM strs a JOIN strs b
-         |  ON a.s <> b.s AND levenshtein(a.s, b.s) <= $ErMaxDist
-         |),
-         |reach AS (
-         |  SELECT x AS id, x AS r FROM edges
-         |  UNION
-         |  SELECT e.x AS id, reach.r FROM edges e JOIN reach ON e.y = reach.id
-         |),
-         |cl AS (SELECT id, min(r) AS rep FROM reach GROUP BY 1),
-         |lab AS (
-         |  SELECT s.s AS name, s.n AS n_rows, coalesce(cl.rep, s.s) AS rep
-         |  FROM strs s LEFT JOIN cl ON cl.id = s.s
-         |),
-         |canon AS (
-         |  SELECT rep, name AS canonical,
-         |    row_number() OVER (PARTITION BY rep
-         |      ORDER BY n_rows DESC, name) AS rn
-         |  FROM lab
-         |),
-         |agg AS (
-         |  SELECT rep, count(*)::BIGINT AS n_variants,
-         |    sum(n_rows)::BIGINT AS cluster_rows
-         |  FROM lab GROUP BY 1
-         |)
-         |SELECT lab.name, lab.n_rows, c.canonical, a.n_variants,
-         |  a.cluster_rows
-         |FROM lab JOIN canon c ON lab.rep = c.rep AND c.rn = 1
-         |JOIN agg a ON lab.rep = a.rep
-         |ORDER BY lab.name""".stripMargin,
-
-    // q208: both rankings as q150's CTEs; a common pair first counts
-    // at k = max(rank_a, rank_b), so each contributes the literal
-    // weight suffix sum W9(max) — the integers come from the SAME
-    // rboSuffixW9 table the engine consumes.
-    "q208_rank_rbo" -> {
-      val suf = RecEval.rboSuffixW9(TopK, RboP)
-      s"""WITH ap AS (
-         |${exactTopKSqlOn(s"embedding[1:$TruncDims]")}
-         |), ex AS (
-         |$q16OracleSql
-         |),
-         |j AS (
-         |  SELECT ex.probe_id,
-         |    ([${suf.mkString(", ")}])
-         |      [greatest(ex.rnk, ap.rnk)::INT] AS w9
-         |  FROM ex JOIN ap
-         |    ON ex.probe_id = ap.probe_id AND ex.vec_id = ap.vec_id
-         |),
-         |ag AS (
-         |  SELECT probe_id, count(*)::BIGINT AS n_common,
-         |    sum(w9)::BIGINT AS r9
-         |  FROM j GROUP BY 1
-         |),
-         |pr AS (SELECT DISTINCT probe_id FROM ex)
-         |SELECT pr.probe_id,
-         |  coalesce(ag.n_common, 0)::BIGINT AS n_common,
-         |  round(CAST(CAST(floor(round(CAST(coalesce(ag.r9, 0) AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS rbo,
-         |  ${Portable.sqlIntRatio9("coalesce(ag.r9, 0)",
-             s"${suf.sum}")} AS rbo_norm
-         |FROM pr LEFT JOIN ag USING (probe_id)
-         |ORDER BY probe_id""".stripMargin
-    },
-
-    // q210: the winnowing chain CTE — identical hash, window frame,
-    // start filter.
-    "q210_winnow_fps" ->
-      s"""$winnowFpSqlCte
-         |SELECT doc_id, fp FROM fp ORDER BY doc_id, fp""".stripMargin,
-
-    // q211: df prune (HAVING over the distinct fingerprint frame),
-    // posting self-join, post-prune sizes — the q55 shape over the
-    // winnowed index.
-    "q211_winnow_overlap" ->
-      s"""$winnowFpSqlCte,
-         |kept AS (
-         |  SELECT f.doc_id, f.fp FROM fp f JOIN (
-         |    SELECT fp FROM fp GROUP BY 1
-         |    HAVING count(*) <= $WinnowMaxDf) d USING (fp)
-         |),
-         |sz AS (SELECT doc_id, count(*)::BIGINT AS s FROM kept GROUP BY 1),
-         |pr AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    count(*)::BIGINT AS n_shared
-         |  FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2 HAVING count(*) >= $WinnowMinShared
-         |)
-         |SELECT pr.id_a, pr.id_b, pr.n_shared, sa.s AS n_a, sb.s AS n_b,
-         |  ${Portable.sqlIntRatio9("pr.n_shared",
-             "least(sa.s, sb.s)")} AS containment
-         |FROM pr JOIN sz sa ON pr.id_a = sa.doc_id
-         |JOIN sz sb ON pr.id_b = sb.doc_id
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // q218: distinct-score CDF, descending cumulative windows, F1 as
-    // one EXACT integral division at 1e9 (no double round() anywhere —
-    // round(<raw double quotient>, 9) is driver-version-sensitive, the
-    // r9/r10 hash-fail class); best row via ORDER BY (f19, s9) DESC
-    // LIMIT 1, s9 recovered from the already-9dp-integerized score by
-    // one exact IEEE multiply + floor. q256 is the STREAM-fed twin:
-    // the Complete-mode count state re-derives this exact table, so
-    // the final micro-batch hashes against the SAME oracle.
-    "q218_threshold_sweep" -> thresholdSweepOracleSql,
-
-    "q256_threshold_sweep_stream" -> thresholdSweepOracleSql,
-
-    // q219: the descending CDF again; cut k = first distinct score
-    // whose cumulative count reaches ⌈kN/tiles⌉ (integer ceil-div).
-    "q219_gains_table" ->
-      s"""$qualityScoreSqlCtes,
-         |g AS (
-         |  SELECT quality_score AS v, count(*)::BIGINT AS n,
-         |    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS p
-         |  FROM qs GROUP BY 1
-         |),
-         |cdf AS (
-         |  SELECT v, sum(n) OVER w AS cum_n, sum(p) OVER w AS cum_p
-         |  FROM g
-         |  WINDOW w AS (ORDER BY v DESC ROWS BETWEEN
-         |    UNBOUNDED PRECEDING AND CURRENT ROW)
-         |),
-         |tot AS (SELECT max(cum_n)::BIGINT AS nn,
-         |        max(cum_p)::BIGINT AS pp FROM cdf),
-         |sp AS (SELECT nn, pp, unnest(range(1, 11)) AS tile FROM tot),
-         |sel AS (
-         |  SELECT sp.tile, sp.nn, sp.pp, min(cdf.cum_n) AS n
-         |  FROM sp JOIN cdf
-         |    ON cdf.cum_n >= (sp.tile * sp.nn + 9) // 10
-         |  GROUP BY 1, 2, 3
-         |)
-         |SELECT sel.tile, cdf.v AS threshold, cdf.cum_n::BIGINT AS n,
-         |  cdf.cum_p::BIGINT AS pos,
-         |  CASE WHEN sel.pp > 0 THEN
-         |    ${Portable.sqlIntRatio9("cdf.cum_p", "sel.pp")} END AS gain,
-         |  CASE WHEN sel.pp > 0 THEN
-         |    ${Portable.sqlIntRatio9(
-                "CAST(cdf.cum_p AS HUGEINT) * sel.nn",
-                "CAST(cdf.cum_n AS HUGEINT) * sel.pp")} END AS lift
-         |FROM sel JOIN cdf ON cdf.cum_n = sel.n
-         |ORDER BY sel.tile""".stripMargin,
-
-    // q220: the q199 midrank identity per source partition — 2×R1 as
-    // exact integers over each group's own distinct-score CDF.
-    "q220_auc_by_source" ->
-      s"""$qualityScoreSqlCtes,
-         |g AS (
-         |  SELECT source, quality_score AS v,
-         |    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS ca,
-         |    sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END)::BIGINT AS cb
-         |  FROM qs GROUP BY 1, 2
-         |),
-         |c AS (
-         |  SELECT source, ca, cb, ca + cb AS cnt,
-         |    coalesce(sum(ca + cb) OVER (PARTITION BY source ORDER BY v
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS cum_before
-         |  FROM g
-         |),
-         |a AS (
-         |  SELECT source, sum(ca)::BIGINT AS n_pos,
-         |    sum(cb)::BIGINT AS n_neg,
-         |    sum(ca * (2 * cum_before + cnt + 1))::BIGINT AS r2
-         |  FROM c GROUP BY 1
-         |)
-         |SELECT source, n_pos, n_neg,
-         |  (r2 - n_pos * (n_pos + 1))::BIGINT AS u2_pos,
-         |  CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-         |    ${Portable.sqlIntRatio9("r2 - n_pos * (n_pos + 1)",
-             "2 * CAST(n_pos AS HUGEINT) * n_neg")} END AS auc
-         |FROM a ORDER BY source""".stripMargin,
-
-    // q221: identical per-term integerized logs (floor(ln·1e9 + ½)
-    // LONG-summed), one exp on an identical double; at_risk off the
-    // duration-histogram CDF.
-    "q221_survival_curve" ->
-      s"""WITH u AS (
-         |  SELECT user_id,
-         |    min(epoch_ns(ts) // 3600000000000) AS f,
-         |    max(epoch_ns(ts) // 3600000000000) AS l
-         |  FROM events WHERE event_type = 'purchase' GROUP BY 1
-         |),
-         |lives AS (
-         |  SELECT (l - f)::BIGINT AS t,
-         |    (l <= (SELECT max(l) FROM u) - 72) AS died
-         |  FROM u
-         |),
-         |hist AS (
-         |  SELECT t,
-         |    sum(CASE WHEN died THEN 1 ELSE 0 END)::BIGINT AS deaths,
-         |    sum(CASE WHEN died THEN 0 ELSE 1 END)::BIGINT AS censored
-         |  FROM lives GROUP BY 1
-         |),
-         |r AS (
-         |  SELECT t, deaths, censored,
-         |    ((SELECT count(*) FROM lives)
-         |      - coalesce(sum(deaths + censored) OVER (ORDER BY t
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |        0))::BIGINT AS at_risk
-         |  FROM hist
-         |),
-         |k AS (
-         |  SELECT t, at_risk, deaths, censored,
-         |    sum(CASE WHEN deaths < at_risk THEN
-         |      CAST(floor(ln(CAST(at_risk - deaths AS DOUBLE)
-         |        / CAST(at_risk AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)
-         |      END) OVER (ORDER BY t) AS lns,
-         |    sum(CASE WHEN deaths < at_risk THEN
-         |      CAST(floor(CAST(deaths AS DOUBLE)
-         |        / (CAST(at_risk AS DOUBLE)
-         |           * CAST(at_risk - deaths AS DOUBLE)) * 1e9 + 0.5)
-         |        AS BIGINT) END) OVER (ORDER BY t) AS gw,
-         |    max(CASE WHEN deaths = at_risk THEN 1 ELSE 0 END)
-         |      OVER (ORDER BY t) AS dead
-         |  FROM r
-         |)
-         |SELECT t, at_risk, deaths, censored,
-         |  CASE WHEN dead = 1 THEN 0.0
-         |    ELSE ${Portable.sqlRatio9("exp(CAST(lns AS DOUBLE) / 1e9)")}
-         |    END AS survival,
-         |  CASE WHEN dead = 0 THEN
-         |    ${Portable.sqlRatio9("exp(CAST(lns AS DOUBLE) / 1e9)" +
-             " * sqrt(CAST(gw AS DOUBLE) / 1e9)")} END AS se
-         |FROM k ORDER BY t""".stripMargin,
-
-    // q217: the BETWEEN-join WAU is the oracle's O(days × user-days)
-    // luxury; the engine's explode+distinct computes the same set.
-    "q217_active_users" ->
-      s"""WITH ud AS (
-         |  SELECT DISTINCT user_id,
-         |    (epoch_ns(ts) // 86400000000000)::BIGINT AS day
-         |  FROM events
-         |),
-         |spine AS (
-         |  SELECT unnest(range((SELECT min(day) FROM ud),
-         |    (SELECT max(day) FROM ud) + 1)) AS day
-         |),
-         |dau AS (SELECT day, count(*)::BIGINT AS dau FROM ud GROUP BY 1),
-         |wau AS (
-         |  SELECT s.day, count(DISTINCT u.user_id)::BIGINT AS wau
-         |  FROM spine s JOIN ud u ON u.day BETWEEN s.day - 6 AND s.day
-         |  GROUP BY 1
-         |),
-         |nu AS (
-         |  SELECT day, count(*)::BIGINT AS new_users FROM (
-         |    SELECT user_id, min(day) AS day FROM ud GROUP BY 1)
-         |  GROUP BY 1
-         |)
-         |SELECT s.day, coalesce(dau.dau, 0)::BIGINT AS dau,
-         |  coalesce(wau.wau, 0)::BIGINT AS wau,
-         |  CASE WHEN coalesce(wau.wau, 0) > 0 THEN
-         |    ${Portable.sqlIntRatio9("coalesce(dau.dau, 0)", "wau.wau")}
-         |  END AS stickiness,
-         |  coalesce(nu.new_users, 0)::BIGINT AS new_users,
-         |  sum(coalesce(nu.new_users, 0))
-         |    OVER (ORDER BY s.day)::BIGINT AS cum_users
-         |FROM spine s LEFT JOIN dau ON s.day = dau.day
-         |LEFT JOIN wau ON s.day = wau.day
-         |LEFT JOIN nu ON s.day = nu.day
-         |ORDER BY s.day""".stripMargin,
-
-    // q215: identical moment sums (cross-products in DECIMAL), then
-    // the same pinned double chains — theta, adjusted means, adjusted
-    // variances, z — with the same positivity guards as NULLs.
-    "q215_cuped_ab" -> {
-      def dd(x: String) = s"CAST($x AS DOUBLE)"
-      val thN = dd("CAST(n AS DECIMAL(38,0))*sxy - " +
-        "CAST(sx AS DECIMAL(38,0))*CAST(sy AS DECIMAL(38,0))")
-      val thD = dd("CAST(n AS DECIMAL(38,0))*sxx - " +
-        "CAST(sx AS DECIMAL(38,0))*CAST(sx AS DECIMAL(38,0))")
-      val vyP = dd("CAST(n AS DECIMAL(38,0))*syy - " +
-        "CAST(sy AS DECIMAL(38,0))*CAST(sy AS DECIMAL(38,0))")
-      val theta = s"($thN / $thD)"
-      val xbar = s"(${dd("sx")} / ${dd("n")})"
-      def mean(sy: String, n: String) = s"(${dd(sy)} / ${dd(n)})"
-      def adj(sy: String, sx: String, n: String) =
-        s"(${mean(sy, n)} - $theta * (${mean(sx, n)} - $xbar))"
-      def cm(n: String, spq: String, sp: String, sq: String) =
-        dd(s"CAST($n AS DECIMAL(38,0))*$spq - $sp*$sq")
-      def varAdj(n: String, sxx: String, sxy: String, syy: String,
-                 sx: String, sy: String) =
-        s"((${cm(n, syy, sy, sy)} - CAST(2 AS DOUBLE) * $theta * " +
-          s"${cm(n, sxy, sx, sy)} + $theta * $theta * " +
-          s"${cm(n, sxx, sx, sx)}) / (${dd(n)} * ${dd(n)}))"
-      val vA = varAdj("n_a", "sxxa", "sxya", "syya", "sxa", "sya")
-      val vB = varAdj("n_b", "sxxb", "sxyb", "syyb", "sxb", "syb")
-      val seAdj = s"sqrt($vA / ${dd("n_a")} + $vB / ${dd("n_b")})"
-      val adjA = adj("sya", "sxa", "n_a")
-      val adjB = adj("syb", "sxb", "n_b")
-      val ok = s"(n > 0 AND $thD > CAST(0 AS DOUBLE))"
-      s"""WITH u AS (
-         |  SELECT user_id,
-         |    sum(CASE WHEN event_type = 'purchase'
-         |      AND epoch_ns(ts) < $CupedSplitNs THEN 1 ELSE 0
-         |      END)::BIGINT AS x,
-         |    sum(CASE WHEN event_type = 'purchase'
-         |      AND epoch_ns(ts) >= $CupedSplitNs THEN 1 ELSE 0
-         |      END)::BIGINT AS y,
-         |    ${Portable.sqlHash(s"'$AbSalt'", "user_id")} % 2 AS arm
-         |  FROM events GROUP BY user_id
-         |),
-         |m AS (
-         |  SELECT count(*)::BIGINT AS n, sum(x)::BIGINT AS sx,
-         |    sum(y)::BIGINT AS sy,
-         |    sum(CAST(x*x AS DECIMAL(38,0))) AS sxx,
-         |    sum(CAST(x*y AS DECIMAL(38,0))) AS sxy,
-         |    sum(CAST(y*y AS DECIMAL(38,0))) AS syy,
-         |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT AS n_a,
-         |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT AS n_b,
-         |    sum(CAST(CASE WHEN arm = 0 THEN x ELSE 0 END
-         |      AS DECIMAL(38,0))) AS sxa,
-         |    sum(CAST(CASE WHEN arm = 0 THEN y ELSE 0 END
-         |      AS DECIMAL(38,0))) AS sya,
-         |    sum(CAST(CASE WHEN arm = 1 THEN x ELSE 0 END
-         |      AS DECIMAL(38,0))) AS sxb,
-         |    sum(CAST(CASE WHEN arm = 1 THEN y ELSE 0 END
-         |      AS DECIMAL(38,0))) AS syb,
-         |    sum(CAST(CASE WHEN arm = 0 THEN x*x ELSE 0 END
-         |      AS DECIMAL(38,0))) AS sxxa,
-         |    sum(CAST(CASE WHEN arm = 0 THEN x*y ELSE 0 END
-         |      AS DECIMAL(38,0))) AS sxya,
-         |    sum(CAST(CASE WHEN arm = 0 THEN y*y ELSE 0 END
-         |      AS DECIMAL(38,0))) AS syya,
-         |    sum(CAST(CASE WHEN arm = 1 THEN x*x ELSE 0 END
-         |      AS DECIMAL(38,0))) AS sxxb,
-         |    sum(CAST(CASE WHEN arm = 1 THEN x*y ELSE 0 END
-         |      AS DECIMAL(38,0))) AS sxyb,
-         |    sum(CAST(CASE WHEN arm = 1 THEN y*y ELSE 0 END
-         |      AS DECIMAL(38,0))) AS syyb
-         |  FROM u
-         |)
-         |SELECT n_a, n_b,
-         |  CASE WHEN $ok THEN ${Portable.sqlIntRatioSigned9(
-              "CAST(n AS HUGEINT) * CAST(sxy AS HUGEINT)" +
-                " - CAST(sx AS HUGEINT) * CAST(sy AS HUGEINT)",
-              "CAST(n AS HUGEINT) * CAST(sxx AS HUGEINT)" +
-                " - CAST(sx AS HUGEINT) * CAST(sx AS HUGEINT)")}
-         |  END AS theta,
-         |  CASE WHEN n_a > 0
-         |    THEN ${Portable.sqlIntRatioSigned9("sya", "n_a")}
-         |    END AS mean_a,
-         |  CASE WHEN n_b > 0
-         |    THEN ${Portable.sqlIntRatioSigned9("syb", "n_b")}
-         |    END AS mean_b,
-         |  CASE WHEN $ok AND n_a > 0 THEN ${Portable.sqlRatio9(adjA)}
-         |    END AS adj_a,
-         |  CASE WHEN $ok AND n_b > 0 THEN ${Portable.sqlRatio9(adjB)}
-         |    END AS adj_b,
-         |  CASE WHEN $ok AND $vyP > CAST(0 AS DOUBLE)
-         |    THEN ${Portable.sqlRatio9(s"$thN * $thN / ($thD * $vyP)")}
-         |    END AS var_reduction,
-         |  CASE WHEN $ok AND n_a > 0 AND n_b > 0
-         |      AND $seAdj > CAST(0 AS DOUBLE)
-         |    THEN ${Portable.sqlRatio9(s"($adjA - $adjB) / $seAdj")}
-         |    END AS z_adj
-         |FROM m ORDER BY n_a""".stripMargin
-    },
-
-    // q214: the identical mine→prune→jump pipeline; the greedy chain
-    // is a recursive pointer-chase over the per-position argmax jump
-    // table (one jump per state — no aggregate in the recursion).
-    "q214_wordpiece_tokens" ->
-      s"""WITH RECURSIVE $wordpieceCtesSql,
-         |toks AS (
-         |  SELECT c.word, j.cnt,
-         |    CASE WHEN c.s = 1
-         |      THEN substring(c.word, CAST(c.s AS INT), CAST(j.jl AS INT))
-         |      ELSE '##' || substring(c.word, CAST(c.s AS INT),
-         |        CAST(j.jl AS INT)) END AS token
-         |  FROM chain c JOIN jump j ON j.word = c.word AND j.s = c.s
-         |)
-         |SELECT token, sum(cnt)::BIGINT AS n FROM toks GROUP BY 1
-         |ORDER BY n DESC, token LIMIT $WpTopOut""".stripMargin,
-
-    // q216: the q116 fertility rollup over the WordPiece segmentation
-    // — per-word token counts are the chain-state counts; words over
-    // the length cap fall back to character segmentation (the same
-    // OOV convention as Bpe.fertility).
-    "q216_wordpiece_fertility" ->
-      s"""WITH RECURSIVE $wordpieceCtesSql,
-         |-- chain carries the terminal state (s = len+1, no jump);
-         |-- pieces are the states that HAVE a jump
-         |wl AS (SELECT c.word, count(*)::BIGINT AS toks FROM chain c
-         |       JOIN jump j ON j.word = c.word AND j.s = c.s
-         |       GROUP BY 1),
-         |ftok AS (
-         |  SELECT source, lang, doc_id, t[i] AS word
-         |  FROM (SELECT source, lang, doc_id, string_split(text, ' ') AS t
-         |        FROM documents) _,
-         |       LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i) __
-         |  WHERE t[i] <> ''
-         |),
-         |fseg AS (
-         |  SELECT f.source, f.lang, f.doc_id,
-         |    length(f.word)::BIGINT AS chars,
-         |    coalesce(wl.toks, length(f.word))::BIGINT AS toks
-         |  FROM ftok f LEFT JOIN wl ON f.word = wl.word
-         |)
-         |SELECT source, lang, count(DISTINCT doc_id)::BIGINT AS n_docs,
-         |  count(*)::BIGINT AS n_words, sum(toks)::BIGINT AS n_tokens,
-         |  sum(chars)::BIGINT AS n_chars,
-         |  ${Portable.sqlIntRatio9("sum(toks)", "count(*)")} AS fertility,
-         |  ${Portable.sqlIntRatio9("sum(chars)", "sum(toks)")}
-         |    AS chars_per_token
-         |FROM fseg GROUP BY source, lang
-         |ORDER BY source, lang""".stripMargin,
-
-    // q212: the shared calibration-bucket CTE (exact DECIMAL sums of
-    // s9 and squared error), three pinned double chains.
-    "q212_reliability_diagram" ->
-      s"""$calibBinsSqlCte
-         |SELECT bin, n, pos,
-         |  ${Portable.sqlIntRatio9("ss",
-             "CAST(n AS HUGEINT) * 1000000000")} AS mean_score,
-         |  ${Portable.sqlIntRatio9("pos", "n")} AS frac_pos,
-         |  ${Portable.sqlIntRatio9("se",
-             "CAST(n AS HUGEINT) * 1000000000 * 1000000000")}
-         |    AS brier_bin
-         |FROM b ORDER BY bin""".stripMargin,
-
-    // q213: per-bucket REL/RES terms integerized at 1e9 then summed in
-    // BIGINT (the chi-square discipline — no order-dependent double
-    // accumulation), totals via one cross-joined 1-row frame.
-    "q213_brier_decomposition" ->
-      s"$calibBinsSqlCte,\n$brierDecompSqlTail",
-
-    // q276: the same decomposition over a SYNTHETIC 2M-row calibration
-    // frame (score = keyed-hash ‰, label = a second keyed draw below
-    // the first — both engines recompute the rows exactly) whose 5
-    // buckets each hold ~400k rows — PAST the 2.2e5 DECIMAL(38,0)
-    // operand bound, so the REL divide-before-square fallback FIRES
-    // under the gate (q213's real buckets never cross it).
-    "q276_brier_at_scale" ->
-      (s"""WITH ids AS (SELECT unnest(range(0, $BrierScaleN)) AS id),
-          |hs AS (
-          |  SELECT ${Portable.sqlHash("id", "'bscore'")} % 1000 AS k1,
-          |         ${Portable.sqlHash("id", "'blabel'")} % 1000 AS k2
-          |  FROM ids
-          |),
-          |bk AS (
-          |  SELECT least(floor((k1 / 1000.0) * $BrierScaleBins),
-          |      ${BrierScaleBins - 1})::BIGINT AS bin,
-          |    CAST(floor(round(k1 / 1000.0, 9) * 1e9 + 0.5) AS BIGINT)
-          |      AS s9,
-          |    CASE WHEN k2 < k1 THEN 1 ELSE 0 END AS y
-          |  FROM hs
-          |),
-          |b AS (
-          |  SELECT bin, count(*)::BIGINT AS n, sum(y)::BIGINT AS pos,
-          |    sum(CAST(s9 AS DECIMAL(38,0))) AS ss,
-          |    sum(CAST((s9 - 1000000000*y)*(s9 - 1000000000*y)
-          |      AS DECIMAL(38,0))) AS se
-          |  FROM bk GROUP BY 1
-          |),""".stripMargin + "\n" + brierDecompSqlTail),
-
-    // q207: the identical bucket agg, cumulative frame, integerized
-    // pooled-rate grid and min/max lattice — buckets are distinct so
-    // the default RANGE window frame equals Spark's ROWS frame.
-    "q207_isotonic_calibration" ->
-      s"""$qualityScoreSqlCtes,
-         |bk AS (
-         |  SELECT least(floor(quality_score * $IsoBins), ${IsoBins - 1})
-         |      ::BIGINT AS bucket,
-         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-         |  FROM qs
-         |),
-         |b AS (
-         |  SELECT bucket, count(*)::BIGINT AS n, sum(y)::BIGINT AS pos
-         |  FROM bk GROUP BY 1
-         |),
-         |c AS (
-         |  SELECT bucket, n, pos,
-         |    sum(n) OVER (ORDER BY bucket) AS cn,
-         |    sum(pos) OVER (ORDER BY bucket) AS cp
-         |  FROM b
-         |),
-         |grid AS (
-         |  SELECT i.bucket AS bi, j.bucket AS bj,
-         |    ${Portable.sqlIntRatioScaled("j.cp - (i.cp - i.pos)",
-              "j.cn - (i.cn - i.n)", 9)} AS r9
-         |  FROM c i JOIN c j ON i.bucket <= j.bucket
-         |),
-         |mn AS (
-         |  SELECT bb.bucket AS bkt, g.bi, min(g.r9) AS m
-         |  FROM grid g JOIN b bb
-         |    ON g.bi <= bb.bucket AND g.bj >= bb.bucket
-         |  GROUP BY 1, 2
-         |),
-         |f AS (SELECT bkt, max(m) AS f9 FROM mn GROUP BY 1)
-         |SELECT b.bucket, b.n, b.pos,
-         |  ${Portable.sqlIntRatio9("b.pos", "b.n")} AS raw_rate,
-         |  round(CAST(CAST(floor(round(CAST(f.f9 AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS fitted
-         |FROM b JOIN f ON b.bucket = f.bkt ORDER BY b.bucket""".stripMargin,
-
-    // q201: global-minus-group algebra over the same integerized sums.
-    "q201_loo_ablation" ->
-      s"""$qualityScoreSqlCtes,
-         |per AS (
-         |  SELECT source, count(*)::BIGINT AS n_g,
-         |    sum(CAST(floor(quality_score * 1e9 + 0.5)
-         |      AS BIGINT))::BIGINT AS sg
-         |  FROM qs GROUP BY source
-         |),
-         |tot AS (SELECT sum(n_g)::BIGINT AS n, sum(sg)::BIGINT AS s
-         |        FROM per)
-         |SELECT p.source, p.n_g,
-         |  ${Portable.sqlIntRatio9("p.sg",
-             "CAST(p.n_g AS HUGEINT) * 1000000000")} AS mean_g,
-         |  CASE WHEN t.n > p.n_g THEN
-         |    ${Portable.sqlIntRatio9("t.s - p.sg",
-             "CAST(t.n - p.n_g AS HUGEINT) * 1000000000")}
-         |  END AS mean_without,
-         |  CASE WHEN t.n > p.n_g THEN
-         |    ${Portable.sqlIntRatioSigned9(
-             "(CAST(t.s AS HUGEINT) - p.sg) * t.n" +
-               " - CAST(t.s AS HUGEINT) * (t.n - p.n_g)",
-             "CAST(t.n AS HUGEINT) * (t.n - p.n_g) * 1000000000")}
-         |  END AS delta
-         |FROM per p CROSS JOIN tot t
-         |ORDER BY delta DESC, p.source""".stripMargin,
-
-    // q202: the same kept-interval arithmetic over the per-source
-    // distinct-value CDF.
-    "q202_trimmed_mean" ->
-      s"""$qualityScoreSqlCtes,
-         |cdf AS (
-         |  SELECT source,
-         |    CAST(floor(quality_score * 1e9 + 0.5) AS BIGINT) AS vi,
-         |    count(*)::BIGINT AS c
-         |  FROM qs GROUP BY 1, 2
-         |),
-         |w AS (
-         |  SELECT source, vi, c,
-         |    sum(c) OVER (PARTITION BY source ORDER BY vi ROWS BETWEEN
-         |      UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum,
-         |    sum(c) OVER (PARTITION BY source)::BIGINT AS n
-         |  FROM cdf
-         |),
-         |kept AS (
-         |  SELECT source, n, vi,
-         |    greatest(0, least(cum, n - (n * $TrimNum) // $TrimDen)
-         |      - greatest(cum - c + 1, (n * $TrimNum) // $TrimDen + 1)
-         |      + 1)::BIGINT AS k
-         |  FROM w
-         |)
-         |SELECT source, max(n)::BIGINT AS n, sum(k)::BIGINT AS n_kept,
-         |  CASE WHEN sum(k) > 0 THEN
-         |    ${Portable.sqlIntRatioSigned9("sum(k * vi)",
-             "CAST(sum(k) AS HUGEINT) * 1000000000")}
-         |  END AS trimmed_mean
-         |FROM kept GROUP BY source ORDER BY source""".stripMargin,
-
-    // q203: two exact lower medians (rank ceil(n/2) order statistics)
-    // over integerized values, then the 3-MAD flag count.
-    "q203_mad_outliers" ->
-      s"""$qualityScoreSqlCtes,
-         |vi AS (
-         |  SELECT source,
-         |    CAST(floor(quality_score * 1e9 + 0.5) AS BIGINT) AS v
-         |  FROM qs
-         |),
-         |m2 AS (
-         |  SELECT source, v,
-         |    sum(c) OVER (PARTITION BY source ORDER BY v ROWS BETWEEN
-         |      UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum,
-         |    sum(c) OVER (PARTITION BY source)::BIGINT AS n
-         |  FROM (SELECT source, v, count(*)::BIGINT AS c FROM vi
-         |        GROUP BY 1, 2)
-         |),
-         |med AS (
-         |  SELECT source, min(v)::BIGINT AS med FROM m2
-         |  WHERE cum >= (n + 1) // 2 GROUP BY source
-         |),
-         |dv AS (
-         |  SELECT vi.source, abs(vi.v - med.med)::BIGINT AS d, med.med
-         |  FROM vi JOIN med USING (source)
-         |),
-         |d2 AS (
-         |  SELECT source, d,
-         |    sum(c) OVER (PARTITION BY source ORDER BY d ROWS BETWEEN
-         |      UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum,
-         |    sum(c) OVER (PARTITION BY source)::BIGINT AS n
-         |  FROM (SELECT source, d, count(*)::BIGINT AS c FROM dv
-         |        GROUP BY 1, 2)
-         |),
-         |mad AS (
-         |  SELECT source, min(d)::BIGINT AS mad FROM d2
-         |  WHERE cum >= (n + 1) // 2 GROUP BY source
-         |)
-         |SELECT dv.source, count(*)::BIGINT AS n,
-         |  round(CAST(CAST(floor(round(CAST(max(dv.med) AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS median,
-         |  round(CAST(CAST(floor(round(CAST(max(mad.mad) AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9) AS mad,
-         |  sum(CASE WHEN dv.d > $MadK * mad.mad THEN 1 ELSE 0
-         |    END)::BIGINT AS n_outliers
-         |FROM dv JOIN mad USING (source)
-         |GROUP BY dv.source ORDER BY dv.source""".stripMargin,
-
-    // q199: the q197 rank machinery on the en/non-en split, one
-    // division to AUC.
-    "q199_auc" ->
-      s"""$qualityScoreSqlCtes,
-         |j AS (
-         |  SELECT quality_score AS v,
-         |    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS ca,
-         |    sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END)::BIGINT AS cb
-         |  FROM qs GROUP BY 1
-         |),
-         |j2 AS (
-         |  SELECT v, ca, cb, ca + cb AS cnt,
-         |    coalesce(sum(ca + cb) OVER (ORDER BY v ROWS BETWEEN
-         |      UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-         |      AS cum_before
-         |  FROM j
-         |),
-         |ag AS (
-         |  SELECT sum(ca)::BIGINT AS n_a, sum(cb)::BIGINT AS n_b,
-         |    sum(ca * (2 * cum_before + cnt + 1))::BIGINT AS r2
-         |  FROM j2
-         |)
-         |SELECT n_a AS n_pos, n_b AS n_neg,
-         |  (r2 - n_a * (n_a + 1))::BIGINT AS u2_pos,
-         |  ${Portable.sqlIntRatio9("r2 - n_a * (n_a + 1)",
-             "2 * CAST(n_a AS HUGEINT) * n_b")} AS auc
-         |FROM ag""".stripMargin,
-
-    // q200: baseline decile boundaries as exact order statistics off
-    // the distinct-value CDF; bins by strictly-below boundary counts;
-    // per-bin terms in the classBalance integerization; any empty bin
-    // on either side nulls the statistic.
-    "q200_psi" -> psiOracleSql,
-
-    // q196: the order statistic at the exact-integer conformal rank;
-    // tie values make the rank's VALUE deterministic regardless of
-    // row_number tie order.
-    "q196_conformal_gate" ->
-      s"""$qualityScoreSqlCtes,
-         |r AS (
-         |  SELECT source, quality_score,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY quality_score) AS rk
-         |  FROM qs
-         |),
-         |kk AS (
-         |  SELECT source, count(*)::BIGINT AS n,
-         |    ((count(*) + 1) * ${ConformalAlphaDen - ConformalAlphaNum}
-         |      + ${ConformalAlphaDen - 1}) // $ConformalAlphaDen AS k
-         |  FROM qs GROUP BY source
-         |)
-         |SELECT kk.source, kk.n, kk.k::BIGINT AS k,
-         |  r.quality_score AS threshold
-         |FROM kk LEFT JOIN r ON r.source = kk.source AND r.rk = kk.k
-         |ORDER BY kk.source""".stripMargin,
-
-    // q197: the same 2x-rank integers (2.midrank = 2.cum_before +
-    // cnt + 1), tie-corrected variance as one exact ratio, one double
-    // chain to z.
-    "q197_mann_whitney" ->
-      s"""$qualityScoreSqlCtes,
-         |j AS (
-         |  SELECT quality_score AS v,
-         |    sum(CASE WHEN source = '$KsSourceA' THEN 1 ELSE 0
-         |      END)::BIGINT AS ca,
-         |    sum(CASE WHEN source <> '$KsSourceA' THEN 1 ELSE 0
-         |      END)::BIGINT AS cb
-         |  FROM qs GROUP BY 1
-         |),
-         |j2 AS (
-         |  SELECT v, ca, cb, ca + cb AS cnt,
-         |    coalesce(sum(ca + cb) OVER (ORDER BY v ROWS BETWEEN
-         |      UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-         |      AS cum_before
-         |  FROM j
-         |),
-         |ag AS (
-         |  SELECT sum(ca)::BIGINT AS n_a, sum(cb)::BIGINT AS n_b,
-         |    sum(ca * (2 * cum_before + cnt + 1))::BIGINT AS r2,
-         |    sum(cnt * cnt * cnt - cnt)::BIGINT AS t3
-         |  FROM j2
-         |),
-         |fin AS (
-         |  SELECT n_a, n_b,
-         |    (r2 - n_a * (n_a + 1))::BIGINT AS u2_a,
-         |    (n_a + n_b) AS nn, t3
-         |  FROM ag
-         |)
-         |SELECT n_a, n_b, u2_a,
-         |  CAST(u2_a AS DOUBLE) / 2.0 AS u_a,
-         |  CASE WHEN n_a * n_b * ((nn + 1) * nn * (nn - 1) - t3) > 0 THEN
-         |    round(CAST(CAST(floor(round((CAST(u2_a - n_a * n_b AS DOUBLE) / 2.0)
-         |      / sqrt(CAST(n_a * n_b * ((nn + 1) * nn * (nn - 1) - t3)
-         |               AS DOUBLE)
-         |             / CAST(12 * nn * (nn - 1) AS DOUBLE)), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9)
-         |  END AS z
-         |FROM fin""".stripMargin,
-
-    // q198: per-cell (O.N - r.c)^2/(N.r.c) in the pinned chain,
-    // integerized and summed exactly; margins as windows over the
-    // cell frame.
-    "q198_chi_square" ->
-      """WITH obs AS (
-        |  SELECT source AS a, lang AS b, count(*)::BIGINT AS o
-        |  FROM documents GROUP BY 1, 2
-        |),
-        |cells AS (
-        |  SELECT g.a, g.b, coalesce(obs.o, 0)::BIGINT AS o
-        |  FROM (SELECT ra.a, cb.b
-        |        FROM (SELECT DISTINCT a FROM obs) ra
-        |        CROSS JOIN (SELECT DISTINCT b FROM obs) cb) g
-        |  LEFT JOIN obs ON obs.a = g.a AND obs.b = g.b
-        |),
-        |m AS (
-        |  SELECT a, b, o,
-        |    sum(o) OVER (PARTITION BY a)::BIGINT AS r,
-        |    sum(o) OVER (PARTITION BY b)::BIGINT AS c
-        |  FROM cells
-        |),
-        |nn AS (SELECT count(*)::BIGINT AS n FROM documents),
-        |t AS (
-        |  SELECT a, b, CAST(floor(round(
-        |    CAST(o * nn.n - r * c AS DOUBLE)
-        |      * CAST(o * nn.n - r * c AS DOUBLE)
-        |      / (CAST(nn.n AS DOUBLE) * CAST(r AS DOUBLE)
-        |         * CAST(c AS DOUBLE)), 9) * 1e9 + 0.5) AS BIGINT) AS t9
-        |  FROM m CROSS JOIN nn
-        |),
-        |ag AS (
-        |  SELECT (SELECT n FROM nn) AS n,
-        |    count(DISTINCT a)::BIGINT AS n_rows,
-        |    count(DISTINCT b)::BIGINT AS n_cols,
-        |    sum(t9)::BIGINT AS chi9
-        |  FROM t
-        |)
-        |SELECT n, n_rows, n_cols,
-        |  ((n_rows - 1) * (n_cols - 1))::BIGINT AS dof,
-        |  CASE WHEN (n_rows - 1) * (n_cols - 1) > 0 THEN
-        |    round(CAST(CAST(floor(round(CAST(chi9 AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9)
-        |  END AS chi2,
-        |  CASE WHEN (n_rows - 1) * (n_cols - 1) > 0 THEN
-        |    round(CAST(CAST(floor(round(sqrt((CAST(chi9 AS DOUBLE) / 1e9)
-        |      / (CAST(n AS DOUBLE)
-        |         * CAST(least(n_rows - 1, n_cols - 1) AS DOUBLE))), 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9)
-        |  END AS cramers_v
-        |FROM ag""".stripMargin,
-
-    // q195: the per-group replay — group CDFs step-filled onto the
-    // replicated global value frame (own jump before the probe at
-    // equal v), gaps vs the complement in exact integers, per-group
-    // argmax with min-score ties.
-    "q195_ks_by_source" ->
-      s"""$qualityScoreSqlCtes,
-         |ga AS (
-         |  SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-         |    PRECEDING AND CURRENT ROW)::BIGINT AS cml
-         |  FROM (SELECT quality_score AS v, count(*)::BIGINT AS c
-         |        FROM qs GROUP BY 1)
-         |),
-         |nn AS (SELECT count(*)::BIGINT AS n FROM qs),
-         |pgc AS (
-         |  SELECT source, v, sum(c) OVER (PARTITION BY source ORDER BY v
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT
-         |    AS cg
-         |  FROM (SELECT source, quality_score AS v, count(*)::BIGINT AS c
-         |        FROM qs GROUP BY 1, 2)
-         |),
-         |gr AS (SELECT source, count(*)::BIGINT AS ng FROM qs
-         |       GROUP BY source),
-         |u AS (
-         |  SELECT g.source, g.ng, a.v, a.cml, 0 AS isg,
-         |    NULL::BIGINT AS cgv
-         |  FROM gr g CROSS JOIN ga a
-         |  UNION ALL
-         |  SELECT p.source, NULL::BIGINT, p.v, NULL::BIGINT, 1, p.cg
-         |  FROM pgc p
-         |),
-         |f AS (
-         |  SELECT source, ng, v, cml, isg,
-         |    coalesce(last_value(cgv IGNORE NULLS) OVER (
-         |      PARTITION BY source ORDER BY v, isg DESC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |      0)::BIGINT AS cg2
-         |  FROM u
-         |),
-         |dd AS (
-         |  SELECT source, ng, v,
-         |    abs(cg2 * (nn.n - ng) - (cml - cg2) * ng)::BIGINT AS d
-         |  FROM f CROSS JOIN nn WHERE isg = 0
-         |),
-         |top AS (
-         |  SELECT source, ng, v AS ks_at, d AS ks_num,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY d DESC, v ASC) AS rn
-         |  FROM dd QUALIFY rn = 1
-         |)
-         |SELECT t.source, t.ng AS n_g, t.ks_at, t.ks_num,
-         |  CASE WHEN nn.n - t.ng > 0 THEN
-         |    ${Portable.sqlIntRatio9("t.ks_num",
-             "CAST(t.ng AS HUGEINT) * (nn.n - t.ng)")}
-         |  END AS ks
-         |FROM top t CROSS JOIN nn
-         |ORDER BY ks DESC, t.source""".stripMargin,
-
-    // q191: both CDFs as inclusive running sums over distinct scores,
-    // step-filled through the merged value set (IGNORE NULLS last), the
-    // supremum as exact integer cross-products, min-score ties.
-    "q191_ks_drift" ->
-      s"""$qualityScoreSqlCtes,
-         |av AS (SELECT quality_score AS v FROM qs
-         |       WHERE source = '$KsSourceA'),
-         |bv AS (SELECT quality_score AS v FROM qs
-         |       WHERE source <> '$KsSourceA'),
-         |ca2 AS (
-         |  SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-         |    PRECEDING AND CURRENT ROW)::BIGINT AS cum
-         |  FROM (SELECT v, count(*)::BIGINT AS c FROM av GROUP BY v)
-         |),
-         |cb2 AS (
-         |  SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-         |    PRECEDING AND CURRENT ROW)::BIGINT AS cum
-         |  FROM (SELECT v, count(*)::BIGINT AS c FROM bv GROUP BY v)
-         |),
-         |na AS (SELECT count(*)::BIGINT AS n FROM av),
-         |nb AS (SELECT count(*)::BIGINT AS n FROM bv),
-         |mg AS (
-         |  SELECT v, ca2.cum AS ca, cb2.cum AS cb
-         |  FROM ca2 FULL JOIN cb2 USING (v)
-         |),
-         |f AS (
-         |  SELECT v,
-         |    coalesce(last_value(ca IGNORE NULLS) OVER w, 0)::BIGINT AS ca,
-         |    coalesce(last_value(cb IGNORE NULLS) OVER w, 0)::BIGINT AS cb
-         |  FROM mg WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED
-         |    PRECEDING AND CURRENT ROW)
-         |),
-         |g AS (
-         |  SELECT v, abs(ca * nb.n - cb * na.n)::BIGINT AS d
-         |  FROM f CROSS JOIN na CROSS JOIN nb
-         |),
-         |top AS (SELECT v, d FROM g ORDER BY d DESC, v ASC LIMIT 1)
-         |SELECT na.n AS n_a, nb.n AS n_b, top.v AS ks_at,
-         |  top.d AS ks_num,
-         |  ${Portable.sqlIntRatio9("top.d",
-             "CAST(na.n AS HUGEINT) * nb.n")} AS ks
-         |FROM top CROSS JOIN na CROSS JOIN nb""".stripMargin,
-
-    // q192: the identical pooled-z double chain over exact counts
-    // (IEEE sqrt is correctly rounded — portable); arms by the same
-    // keyed hash.
-    "q192_ab_test" -> {
-      val pA = "CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE)"
-      val pB = "CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE)"
-      val pp = "(CAST(conv_a + conv_b AS DOUBLE)" +
-        " / CAST(n_a + n_b AS DOUBLE))"
-      val se = s"sqrt($pp * (CAST(1 AS DOUBLE) - $pp)" +
-        " * (CAST(1 AS DOUBLE) / CAST(n_a AS DOUBLE)" +
-        " + CAST(1 AS DOUBLE) / CAST(n_b AS DOUBLE)))"
-      s"""WITH u AS (
-         |  SELECT user_id,
-         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-         |      END)::BIGINT AS conv,
-         |    ${Portable.sqlHash(s"'$AbSalt'", "user_id")} % 2 AS arm
-         |  FROM events GROUP BY user_id
-         |),
-         |w AS (
-         |  SELECT
-         |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT AS n_a,
-         |    sum(CASE WHEN arm = 0 THEN conv ELSE 0 END)::BIGINT AS conv_a,
-         |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT AS n_b,
-         |    sum(CASE WHEN arm = 1 THEN conv ELSE 0 END)::BIGINT AS conv_b
-         |  FROM u
-         |)
-         |SELECT n_a, conv_a, n_b, conv_b,
-         |  CASE WHEN n_a > 0 THEN
-         |    ${Portable.sqlIntRatio9("conv_a", "n_a")} END AS rate_a,
-         |  CASE WHEN n_b > 0 THEN
-         |    ${Portable.sqlIntRatio9("conv_b", "n_b")} END AS rate_b,
-         |  CASE WHEN $se > CAST(0 AS DOUBLE) THEN
-         |    ${Portable.sqlRatio9(s"($pA - $pB) / $se")}
-         |  END AS z,
-         |  coalesce(abs(CASE WHEN $se > CAST(0 AS DOUBLE) THEN
-         |    ${Portable.sqlRatio9(s"($pA - $pB) / $se")} END) >= 1.96,
-         |    false) AS significant
-         |FROM w""".stripMargin
-    },
-
-    // q185: per-label p·ln p integerized through the identical double
-    // chain, summed exactly; share/imbalance are single divisions of
-    // exact counts.
-    "q185_class_balance" ->
-      s"""WITH c AS (
-        |  SELECT label, count(*)::BIGINT AS n FROM embeddings
-        |  GROUP BY label
-        |),
-        |t AS (SELECT sum(n)::BIGINT AS t FROM c),
-        |pl AS (
-        |  SELECT label, n,
-        |    ${Portable.sqlIntRatio9("n", "t.t")} AS share,
-        |    CAST(floor(round(
-        |      (CAST(n AS DOUBLE) / CAST(t.t AS DOUBLE))
-        |        * ln(CAST(n AS DOUBLE) / CAST(t.t AS DOUBLE)), 9)
-        |      * 1e9 + 0.5) AS BIGINT) AS plogp
-        |  FROM c CROSS JOIN t
-        |)
-        |SELECT label, n, share,
-        |  round(CAST(CAST(floor(round(CAST(-(SELECT sum(plogp) FROM pl) AS DOUBLE) / 1e9, 9) * 1e9 + 0.5) AS BIGINT) AS DOUBLE) / 1e9, 9)
-        |    AS entropy,
-        |  ${Portable.sqlIntRatio9(
-             "(SELECT max(n) FROM c)", "(SELECT min(n) FROM c)")}
-        |    AS imbalance
-        |FROM pl ORDER BY label""".stripMargin,
-
-    // q186: the UNCHANGED q85 rank chain feeds the confusion cells;
-    // each metric is one division of exact integers (F1 in the
-    // single-fraction form).
-    "q186_classifier_report" ->
-      s"""$nbRankSqlCte,
-         |pr AS (
-         |  SELECT r.doc_id, d.lang AS t, r.label AS p
-         |  FROM rk r JOIN documents d ON d.doc_id = r.doc_id
-         |  WHERE r.rk = 1
-         |),
-         |cells AS (SELECT t, p, count(*)::BIGINT AS c FROM pr GROUP BY 1, 2),
-         |tpt AS (SELECT t AS label, c AS tp FROM cells WHERE t = p),
-         |bt AS (SELECT t AS label, sum(c)::BIGINT AS support
-         |       FROM cells GROUP BY 1),
-         |bp AS (SELECT p AS label, sum(c)::BIGINT AS predicted
-         |       FROM cells GROUP BY 1),
-         |j AS (
-         |  SELECT label,
-         |    coalesce(support, 0)::BIGINT AS support,
-         |    coalesce(tp, 0)::BIGINT AS tp,
-         |    (coalesce(predicted, 0) - coalesce(tp, 0))::BIGINT AS fp,
-         |    (coalesce(support, 0) - coalesce(tp, 0))::BIGINT AS fn
-         |  FROM bt FULL JOIN bp USING (label) LEFT JOIN tpt USING (label)
-         |)
-         |SELECT label, support, tp, fp, fn,
-         |  CASE WHEN tp + fp > 0 THEN
-         |    ${Portable.sqlIntRatio9("tp", "tp + fp")}
-         |  END AS precision,
-         |  CASE WHEN tp + fn > 0 THEN
-         |    ${Portable.sqlIntRatio9("tp", "tp + fn")}
-         |  END AS recall,
-         |  CASE WHEN 2 * tp + fp + fn > 0 THEN
-         |    ${Portable.sqlIntRatio9("2 * tp", "2 * tp + fp + fn")}
-         |  END AS f1
-         |FROM j ORDER BY label""".stripMargin,
-
-    // q187: DuckDB CUBE + GROUPING share Spark's bit convention
-    // (first dimension = MSB) — verified empirically, pinned here.
-    "q187_corpus_cube" ->
-      """SELECT source, lang,
-        |  GROUPING(source, lang)::BIGINT AS grouping_id,
-        |  count(*)::BIGINT AS n_docs,
-        |  coalesce(sum(len(string_split(text, ' '))), 0)::BIGINT
-        |    AS n_tokens
-        |FROM documents
-        |GROUP BY CUBE (source, lang)
-        |ORDER BY grouping_id, source, lang""".stripMargin,
-
-    // q184: distinct-score CDFs on both levels, the integer target
-    // index (rlo·(N−1)) // max(ng−1, 1), and the interval lookup —
-    // exact mirror of the engine's tie-aware mapping.
-    "q184_quantile_norm" ->
-      s"""$qualityScoreSqlCtes,
-         |g AS (
-         |  SELECT quality_score AS gs, count(*)::BIGINT AS gcnt
-         |  FROM qs GROUP BY 1
-         |),
-         |g2 AS (
-         |  SELECT gs, gcnt,
-         |    coalesce(sum(gcnt) OVER (ORDER BY gs
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |      0)::BIGINT AS glo
-         |  FROM g
-         |),
-         |nn AS (SELECT count(*)::BIGINT AS n FROM qs),
-         |pg AS (
-         |  SELECT source, quality_score, count(*)::BIGINT AS cnt
-         |  FROM qs GROUP BY 1, 2
-         |),
-         |pg2 AS (
-         |  SELECT source, quality_score,
-         |    coalesce(sum(cnt) OVER (PARTITION BY source
-         |      ORDER BY quality_score
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |      0)::BIGINT AS rlo,
-         |    sum(cnt) OVER (PARTITION BY source)::BIGINT AS ng
-         |  FROM pg
-         |),
-         |mp AS (
-         |  SELECT p.source, p.quality_score, g2.gs AS qn_score
-         |  FROM pg2 p CROSS JOIN nn JOIN g2
-         |    ON (p.rlo * (nn.n - 1)) // greatest(p.ng - 1, 1) >= g2.glo
-         |   AND (p.rlo * (nn.n - 1)) // greatest(p.ng - 1, 1)
-         |       < g2.glo + g2.gcnt
-         |)
-         |SELECT q.doc_id, q.source, q.quality_score, mp.qn_score
-         |FROM qs q JOIN mp USING (source, quality_score)
-         |ORDER BY q.doc_id""".stripMargin,
-
-    // q182: the greedy rounds unrolled (min-id seed; per round the
-    // not-yet-selected argmax of the min integerized distance, min-id
-    // ties — q168's replay discipline), then the q168-shaped argmin
-    // assignment and per-center radius.
-    "q182_kcenter_coreset" -> {
-      def round2(cenCte: String, dAs: String, nAs: String,
-                 rnd: Int): String =
-        s"""$dAs AS (
-           |  SELECT e.vec_id, min(${l2iSql("e.v", "c.v")}) AS d
-           |  FROM ev e CROSS JOIN $cenCte c
-           |  WHERE e.vec_id NOT IN (SELECT vec_id FROM $cenCte)
-           |  GROUP BY e.vec_id
-           |),
-           |$nAs AS (
-           |  SELECT $rnd::BIGINT AS round, e.vec_id, e.v FROM ev e
-           |  JOIN (SELECT vec_id FROM $dAs ORDER BY d DESC, vec_id
-           |        LIMIT 1) t USING (vec_id)
-           |)""".stripMargin
-      s"""WITH ev AS (
-         |  SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |c1 AS (SELECT 1::BIGINT AS round, vec_id, v FROM ev
-         |       ORDER BY vec_id LIMIT 1),
-         |${round2("c1", "d2", "n2", 2)},
-         |cen2 AS (SELECT * FROM c1 UNION ALL SELECT * FROM n2),
-         |${round2("cen2", "d3", "n3", 3)},
-         |cen3 AS (SELECT * FROM cen2 UNION ALL SELECT * FROM n3),
-         |${round2("cen3", "d4", "n4", 4)},
-         |cen4 AS (SELECT * FROM cen3 UNION ALL SELECT * FROM n4),
-         |asg AS (
-         |  SELECT vec_id, cid, d FROM (
-         |    SELECT e.vec_id, c.vec_id AS cid,
-         |      ${l2iSql("e.v", "c.v")} AS d,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${l2iSql("e.v", "c.v")}, c.vec_id) AS rn
-         |    FROM ev e CROSS JOIN cen4 c)
-         |  WHERE rn = 1
-         |),
-         |stats AS (
-         |  SELECT cid, count(*)::BIGINT AS n_assigned,
-         |    max(d)::BIGINT AS radius_i
-         |  FROM asg GROUP BY cid
-         |)
-         |SELECT c.round, c.vec_id, s.n_assigned, s.radius_i
-         |FROM cen4 c JOIN stats s ON s.cid = c.vec_id
-         |ORDER BY c.round""".stripMargin
-    }
-  )
+  def oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

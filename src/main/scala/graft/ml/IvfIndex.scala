@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.{Barrier, Portable, Similarity}
@@ -30,12 +30,11 @@ import graft.ops.{Barrier, Portable, Similarity}
   *    centroids broadcast, same argmin and tie rule, materialized behind
   *    [[graft.ops.Barrier.cut]].
   *
-  * Complements [[graft.ops.Ann]] (SRP-LSH, deterministic/oracle-able)
-  * and [[LshIndex]] (MLlib LSH): IVF adapts to the data distribution
-  * (learned centroids) where LSH is data-oblivious. Training is seeded
-  * and deterministic (the same seed gives the same centroids and
-  * assignments) but not replayed by the oracle — spec-verified, not
-  * oracle-backed.
+  * Complements [[graft.ops.Ann]] (SRP-LSH, deterministic/oracle-able):
+  * IVF adapts to the data distribution (learned centroids) where LSH is
+  * data-oblivious. Training is seeded and deterministic (the same seed
+  * gives the same centroids and assignments) but not replayed by the
+  * oracle — spec-verified, not oracle-backed.
   *
   * Scale posture: the index holds its inverted lists materialized, so
   * every search reads the checkpointed (vec_id, cell, v) table and never
@@ -59,9 +58,21 @@ object IvfIndex {
     * materialize the inverted lists (see the object doc). */
   def build(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
             seed: Long = 42L): Index = {
-    require(k >= 1, s"IvfIndex.build: k = $k, need at least one cell")
+    val (vecs, centres) = fit(corpus, idCol, vecCol, k, seed)
     val spark = corpus.sparkSession
-    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(centres)
+    val cellOf = udf((v: Seq[Double]) => nearest(v.toArray, bc.value))
+    val assignments = Barrier.cut(
+      vecs.select(col(idCol), cellOf(col("v")).as("cell"), col("v")))
+    Index(assignments, centroidTable(spark, centres))
+  }
+
+  /** The sample-and-fit half of [[build]]: the corpus as (id, v:
+    * array<double>) and the k centres trained on its seeded sample — one
+    * top-k job, no assignment pass. */
+  private def fit(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
+                  seed: Long): (DataFrame, Array[Array[Double]]) = {
+    require(k >= 1, s"IvfIndex.build: k = $k, need at least one cell")
     val vecs = corpus.select(col(idCol),
       transform(col(vecCol), _.cast("double")).as("v"))
     val sample = vecs
@@ -69,15 +80,15 @@ object IvfIndex {
       .limit(SamplePerCell * k).collect()
       .map(_.getSeq[Double](1).toArray)
     require(sample.nonEmpty, "IvfIndex.build: empty corpus")
-    val centres = train(sample, k, seed)
-    val bc = spark.sparkContext.broadcast(centres)
-    val cellOf = udf((v: Seq[Double]) => nearest(v.toArray, bc.value))
-    val assignments = Barrier.cut(
-      vecs.select(col(idCol), cellOf(col("v")).as("cell"), col("v")))
-    val centroids = centres.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
+    (vecs, train(sample, k, seed))
+  }
+
+  /** The centroid table (cell, c: array<double>) of `centres`. */
+  private def centroidTable(spark: SparkSession,
+                            centres: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    centres.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "c")
-    Index(assignments, centroids)
   }
 
   private def sqDist(a: Array[Double], b: Array[Double]): Double = {
@@ -186,14 +197,17 @@ object IvfIndex {
   /** SemDeDup with LEARNED centroids — the paper's actual recipe
     * (k-means cells, then within-cell duplicate pruning): the coarse
     * quantizer's centers feed [[graft.ops.Dedup.semanticDedup]] as the
-    * centroid frame. Seeded-deterministic but not replayed by the
-    * oracle (driver-side k-means on a sample), so this form is
-    * spec-verified while the fixed-centroid form carries the oracle
-    * (q73). Centers are cast back to float so within-cell cosines run
-    * the same float-array FoldDot path as the oracle'd form. */
+    * centroid frame. Only the quantizer is trained: the corpus is
+    * assigned once, inside the dedup, not by [[build]].
+    * Seeded-deterministic but not replayed by the oracle (k-means
+    * fitted locally on a sample), so this form is spec-verified while
+    * the fixed-centroid form carries the oracle (q73). Centers are cast
+    * back to float so within-cell cosines run the same float-array
+    * FoldDot path as the oracle'd form. */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
                     k: Int, tau: Double, seed: Long = 42L): DataFrame = {
-    val centers = build(corpus, idCol, vecCol, k, seed).centroids
+    val centers = centroidTable(corpus.sparkSession,
+        fit(corpus, idCol, vecCol, k, seed)._2)
       .select(col("cell").cast("long").as(idCol),
         transform(col("c"), _.cast("float")).as(vecCol))
     graft.ops.Dedup.semanticDedup(corpus, idCol, vecCol, centers, tau)

@@ -33,8 +33,9 @@ import org.apache.spark.sql.functions._
 object Kmeans {
 
   /** Hard assignment against the given centroids: (idCol, cluster).
-    * Broadcast centroids, map-side-combined argmin — identical tie
-    * policy to [[Quantize.ivfAssign]]. */
+    * Broadcast centroids, map-side-combined argmin, ties to the
+    * smaller centroid id; [[Quantize.ivfAssign]] is this, its column
+    * named `cell`. */
   def assign(df: DataFrame, idCol: String, vecCol: String,
              centroids: DataFrame): DataFrame = {
     val cen = centroids.select(col(idCol).as("__cid"),

@@ -33,9 +33,10 @@ object Pairs {
     * inv_freq))`). Two deliberate deviations from Keras defaults: we use
     * the full Euler–Mascheroni constant γ = 0.5772156649015329 where Keras
     * hardcodes 0.577, and our default `samplingFactor` is 1e-3 (Keras:
-    * 1e-5, tuned for 35k-word corpora — see SparkEntry.SamplingFactor),
-    * so keep probabilities differ slightly from Keras output. Index 0
-    * (UNK) gets keep probability 0 — Keras never samples padding.
+    * 1e-5, tuned for 35k-word corpora — see
+    * `Prod2VecQueries.SamplingFactor`), so keep probabilities differ
+    * slightly from Keras output. Index 0 (UNK) gets keep probability
+    * 0 — Keras never samples padding.
     *
     * Returns one row per idx in [0, size): (idx, keep_prob). Tiny table —
     * broadcast by construction.

@@ -186,19 +186,12 @@ object Quantize {
 
   /** IVF coarse assignment: every vector goes to its nearest coarse
     * centroid by the same integerized L2 (ties to the smaller cell id)
-    * — the inverted-file half of IVF-PQ. Broadcast centroids, map-side
-    * combined argmin; output (idCol, cell). */
+    * — the inverted-file half of IVF-PQ. [[Kmeans.assign]] against the
+    * coarse centroids; output (idCol, cell). */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
-                coarse: DataFrame): DataFrame = {
-    val cen = coarse.select(col(idCol).as("__cid"),
-      col(vecCol).as("__cv"))
-    df.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(cen))
-      .withColumn("__d", l2i(col(vecCol), col("__cv")))
-      .groupBy(col(idCol))
-      .agg(min_by(col("__cid"), struct(col("__d"), col("__cid")))
-        .as("cell"))
-  }
+                coarse: DataFrame): DataFrame =
+    Kmeans.assign(df, idCol, vecCol, coarse)
+      .withColumnRenamed("cluster", "cell")
 
   /** IVF-PQ search — the production ANN stack (FAISS's default index
     * family) composed from the two verified halves: the inverted file

@@ -172,7 +172,7 @@ object RecEval {
 
   /** Per-weight-table entries for [[rboAtDepth]]: w(k) = (1−p)·p^(k−1)/k
     * integerized at 1e9, and the suffix sums W9(m) = Σ_{k=m..d} w9(k).
-    * Exposed so the SparkEntry oracle embeds the IDENTICAL integers
+    * Exposed so the q208 oracle embeds the IDENTICAL integers
     * (the q170 NDCG recipe — log/pow tables computed once, both
     * engines consume literals). */
   def rboSuffixW9(depth: Int, p: Double): Seq[Long] = {

@@ -200,6 +200,39 @@ object Sources {
       .sortBy(bucketCol)
       .saveAsTable(table)
 
+  /** The footer scan under the parquet audits: lists every `.parquet`
+    * file below `dirPath` (recursively, sorted), fans the list out over
+    * at most 32 partitions, and opens each footer once, closing it after
+    * `read` turns (file path, footer) into rows. Returns the rows and
+    * the qualified root URI with a trailing `/`, whose length strips
+    * paths to root-relative names. */
+  private def footerScan[T: scala.reflect.ClassTag](spark: SparkSession,
+      dirPath: String)(
+      read: (String, org.apache.parquet.hadoop.metadata.ParquetMetadata) =>
+        Seq[T]): (org.apache.spark.rdd.RDD[T], String) = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(dirPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rootUri = fs.makeQualified(root).toString.stripSuffix("/") + "/"
+    val it = fs.listFiles(root, /* recursive = */ true)
+    val files = Iterator.continually(it)
+      .takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.endsWith(".parquet"))
+      .map(_.toString).toSeq.sorted
+    val rows = spark.sparkContext
+      .parallelize(files, math.max(1, math.min(files.size, 32)))
+      .mapPartitions { fit =>
+        val conf = new org.apache.hadoop.conf.Configuration()
+        fit.flatMap { p =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromPath(new Path(p), conf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try read(p, r.getFooter) finally r.close()
+        }
+      }
+    (rows, rootUri)
+  }
+
   /** Parquet LAYOUT audit — per file: row-group count, rows,
     * compressed/uncompressed bytes, straight from the footers. The
     * physical-layout health check a 100 TB table needs BEFORE anyone
@@ -220,34 +253,15 @@ object Sources {
     * audit shows per-partition layout for free. */
   def parquetLayoutAudit(spark: SparkSession, dirPath: String): DataFrame = {
     import spark.implicits._
-    import org.apache.hadoop.fs.Path
     import scala.jdk.CollectionConverters._
-    val root = new Path(dirPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootUri = fs.makeQualified(root).toString.stripSuffix("/") + "/"
-    val it = fs.listFiles(root, /* recursive = */ true)
-    val files = Iterator.continually(it)
-      .takeWhile(_.hasNext).map(_.next().getPath)
-      .filter(_.getName.endsWith(".parquet"))
-      .map(_.toString).toSeq.sorted
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 32)))
-      .mapPartitions { fit =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        fit.map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(p), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            val blocks = r.getFooter.getBlocks.asScala.toSeq
-            (p, blocks.size.toLong,
-              blocks.map(_.getRowCount).sum,
-              blocks.map(_.getCompressedSize).sum,
-              blocks.map(_.getTotalByteSize).sum)
-          } finally r.close()
-        }
-      }
-      .toDF("__p", "n_row_groups", "n_rows",
+    val (rows, rootUri) = footerScan(spark, dirPath) { (p, footer) =>
+      val blocks = footer.getBlocks.asScala.toSeq
+      Seq((p, blocks.size.toLong,
+        blocks.map(_.getRowCount).sum,
+        blocks.map(_.getCompressedSize).sum,
+        blocks.map(_.getTotalByteSize).sum))
+    }
+    rows.toDF("__p", "n_row_groups", "n_rows",
         "compressed_bytes", "uncompressed_bytes")
       .select(expr(s"substring(__p, ${rootUri.length + 1})")
           .as("file_name"),
@@ -318,39 +332,18 @@ object Sources {
   def parquetStatsAudit(spark: SparkSession, dirPath: String,
                         cols: Seq[String]): DataFrame = {
     import spark.implicits._
-    import org.apache.hadoop.fs.Path
     import scala.jdk.CollectionConverters._
-    val root = new Path(dirPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootUri = fs.makeQualified(root).toString.stripSuffix("/") + "/"
-    val it = fs.listFiles(root, /* recursive = */ true)
-    val files = Iterator.continually(it)
-      .takeWhile(_.hasNext).map(_.next().getPath)
-      .filter(_.getName.endsWith(".parquet"))
-      .map(_.toString).toSeq.sorted
     val wanted = cols.toSet
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 32)))
-      .mapPartitions { fit =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        fit.flatMap { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(p), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            r.getFooter.getBlocks.asScala
-              .flatMap(_.getColumns.asScala)
-              .filter(c => wanted.contains(c.getPath.toDotString))
-              .map { c =>
-                val s = c.getStatistics
-                (p, c.getPath.toDotString,
-                  s.genericGetMin.asInstanceOf[Number].longValue,
-                  s.genericGetMax.asInstanceOf[Number].longValue)
-              }.toSeq
-          } finally r.close()
-        }
-      }
-      .toDF("__p", "col_name", "mn", "mx")
+    val (rows, rootUri) = footerScan(spark, dirPath) { (p, footer) =>
+      footer.getBlocks.asScala
+        .flatMap(_.getColumns.asScala)
+        .filter(c => wanted.contains(c.getPath.toDotString))
+        .map(c => (p, c.getPath.toDotString,
+          c.getStatistics.genericGetMin.asInstanceOf[Number].longValue,
+          c.getStatistics.genericGetMax.asInstanceOf[Number].longValue))
+        .toSeq
+    }
+    rows.toDF("__p", "col_name", "mn", "mx")
       .groupBy(col("__p"), col("col_name"))
       .agg(min(col("mn")).as("min_val"), max(col("mx")).as("max_val"))
       .select(expr(s"substring(__p, ${rootUri.length + 1})")
@@ -495,41 +488,23 @@ object Sources {
     * plain physical types), matching DuckDB's column of the same name. */
   def parquetSchemaAudit(spark: SparkSession, dirPath: String): DataFrame = {
     import spark.implicits._
-    import org.apache.hadoop.fs.Path
     import scala.jdk.CollectionConverters._
-    val root = new Path(dirPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(root, /* recursive = */ true)
-    val files = Iterator.continually(it)
-      .takeWhile(_.hasNext).map(_.next().getPath)
-      .filter(_.getName.endsWith(".parquet"))
-      .map(_.toString).toSeq.sorted
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 32)))
-      .mapPartitions { fit =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        fit.flatMap { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(p), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            r.getFooter.getFileMetaData.getSchema.getColumns.asScala
-              .map { cd =>
-                val pt = cd.getPrimitiveType
-                // parquet-mr's enum spells the spec's BYTE_ARRAY as
-                // "BINARY"; report the format-spec name (what DuckDB
-                // and the Thrift definition both print).
-                val phys = pt.getPrimitiveTypeName.name match {
-                  case "BINARY" => "BYTE_ARRAY"
-                  case other    => other
-                }
-                (cd.getPath.last, phys,
-                  pt.getRepetition.name,
-                  Option(pt.getOriginalType).map(_.name).orNull)
-              }.toSeq
-          } finally r.close()
-        }
-      }
+    footerScan(spark, dirPath) { (_, footer) =>
+      footer.getFileMetaData.getSchema.getColumns.asScala
+        .map { cd =>
+          val pt = cd.getPrimitiveType
+          // parquet-mr's enum spells the spec's BYTE_ARRAY as
+          // "BINARY"; report the format-spec name (what DuckDB
+          // and the Thrift definition both print).
+          val phys = pt.getPrimitiveTypeName.name match {
+            case "BINARY" => "BYTE_ARRAY"
+            case other    => other
+          }
+          (cd.getPath.last, phys,
+            pt.getRepetition.name,
+            Option(pt.getOriginalType).map(_.name).orNull)
+        }.toSeq
+    }._1
       .toDF("field_name", "physical_type", "repetition", "converted_type")
       .distinct()
   }

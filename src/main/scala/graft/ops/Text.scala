@@ -79,21 +79,19 @@ object Text {
   def qualityScore(df: DataFrame, textCol: String): DataFrame =
     qualityScore(df, textCol, Nil)
 
-  /** The composite `quality_score` of [[qualityScore]] as ONE scalar
-    * column — same integral arithmetic, same NULL-on-empty guard —
-    * for consumers that need only the score (the curation funnel's
-    * quality gate computes it once into its persisted frame and
-    * filters on the stored value; no join, no second projection).
-    * Value-identical to `qualityScore(df, c)("quality_score")`
-    * (TextSpec pins it). */
+  /** The composite `quality_score` as ONE scalar column, NULL on empty
+    * text: [[qualityScore]] takes its score column from here, and
+    * consumers that need only the score use it directly (the curation
+    * funnel's quality gate computes it once into its persisted frame
+    * and filters on the stored value; no join, no second projection).
+    * TextSpec pins it equal to `qualityScore(df, c)("quality_score")`. */
   def qualityScoreColumn(t: Column): Column = {
-    val toks = tokens(t)
-    val nT = size(toks).cast("long")
-    val nC = length(t).cast("long")
-    val aC = nC - length(regexp_replace(t, "[a-z A-Z]", "")).cast("long")
-    val dC = nC - length(regexp_replace(t, "[0-9]", "")).cast("long")
-    val sC = segmentHits(t, EnStopwords)
-    val ok = when(nT >= 10 && nT <= 1000, lit(1L)).otherwise(lit(0L))
+    val (nT, nC, aC, dC, sC, ok) = qualityCounts(t)
+    // score = 0.4·ok + 0.3·a/L + 0.2·s/T + 0.1·(L−d)/L with cleared
+    // denominators — (4·ok·L·T + 3·a·T + 2·s·L + (L−d)·T)/(10·L·T) —
+    // so the composite is ONE exact integral division, clamped in
+    // integer land: no double round() of a raw quotient anywhere (the
+    // q218/q219 engine-version-sensitivity class).
     val dec = "decimal(38,0)"
     val num = lit(4L) * ok * nC.cast(dec) * nT +
       lit(3L) * aC.cast(dec) * nT + lit(2L) * sC.cast(dec) * nC +
@@ -101,7 +99,27 @@ object Text {
     val den = lit(10L) * nC.cast(dec) * nT
     val s9 = least(lit(1000000000L),
       greatest(lit(0L), Portable.intRatioScaled(num, den, 9)))
+    // intRatio9's contract is "caller guards den > 0": empty text has
+    // nC = 0 (and a null doc nulls nT), so the score short-circuits to
+    // NULL via when() instead of tripping ANSI DIVIDE_BY_ZERO
     when(nC > 0 && nT > 0, s9.cast("double") / lit(1e9))
+  }
+
+  /** The counts the quality score is built from: tokens, chars, alpha
+    * chars, digit chars, stopword hits, and the 10..1000-token length
+    * flag (1/0). */
+  private def qualityCounts(
+      t: Column): (Column, Column, Column, Column, Column, Column) = {
+    val nT = size(tokens(t)).cast("long")
+    val nC = length(t).cast("long")
+    val aC = nC - length(regexp_replace(t, "[a-z A-Z]", "")).cast("long")
+    val dC = nC - length(regexp_replace(t, "[0-9]", "")).cast("long")
+    // stopword hits via one codegen'd regex segment scan instead of the
+    // interpreted filter-isin HOF — value-identical ([[segmentHits]]),
+    // and this op runs on every curation gate's hot path
+    val sC = segmentHits(t, EnStopwords)
+    val ok = when(nT >= 10 && nT <= 1000, lit(1L)).otherwise(lit(0L))
+    (nT, nC, aC, dC, sC, ok)
   }
 
   /** [[repetitionStats]]'s `dup_ngram_ratio` as ONE scalar column over
@@ -132,41 +150,16 @@ object Text {
   def qualityScore(df: DataFrame, textCol: String,
                    keep: Seq[String]): DataFrame = {
     val t = col(textCol)
-    val toks = tokens(t)
-    val nT = size(toks).cast("long")
-    val nC = length(t).cast("long")
-    val aC = nC - length(regexp_replace(t, "[a-z A-Z]", "")).cast("long")
-    val dC = nC - length(regexp_replace(t, "[0-9]", "")).cast("long")
-    // stopword hits via one codegen'd regex segment scan instead of the
-    // interpreted filter-isin HOF — value-identical ([[segmentHits]]),
-    // and this op runs on every curation gate's hot path
-    val sC = segmentHits(t, EnStopwords)
-    val ok = when(nT >= 10 && nT <= 1000, lit(1L)).otherwise(lit(0L))
-    // score = 0.4·ok + 0.3·a/L + 0.2·s/T + 0.1·(L−d)/L with cleared
-    // denominators — (4·ok·L·T + 3·a·T + 2·s·L + (L−d)·T)/(10·L·T) —
-    // so the composite is ONE exact integral division, clamped in
-    // integer land: no double round() of a raw quotient anywhere (the
-    // q218/q219 driver-version-sensitivity class).
-    val dec = "decimal(38,0)"
-    val num = lit(4L) * ok * nC.cast(dec) * nT +
-      lit(3L) * aC.cast(dec) * nT + lit(2L) * sC.cast(dec) * nC +
-      (nC - dC).cast(dec) * nT
-    val den = lit(10L) * nC.cast(dec) * nT
-    val s9 = least(lit(1000000000L),
-      greatest(lit(0L), Portable.intRatioScaled(num, den, 9)))
-    // intRatio9's contract is "caller guards den > 0": empty text has
-    // nC = 0 (and a null doc nulls nT), so every ratio short-circuits
-    // to NULL via when() instead of tripping ANSI DIVIDE_BY_ZERO (the
-    // batch funnels filter empties upstream, but this is a public
-    // operator run over raw documents)
+    val (nT, nC, aC, dC, sC, ok) = qualityCounts(t)
+    // ratios guard their denominators like the score does: this is a
+    // public operator run over raw documents, empties included
     df.select(col("doc_id") +: keep.map(col) ++: Seq(
       nT.as("n_tokens"),
       when(nC > 0, Portable.intRatio9(aC, nC)).as("alpha_ratio"),
       when(nC > 0, Portable.intRatio9(dC, nC)).as("digit_ratio"),
       when(nT > 0, Portable.intRatio9(sC, nT)).as("stopword_ratio"),
       ok.as("len_ok"),
-      when(nC > 0 && nT > 0, s9.cast("double") / lit(1e9))
-        .as("quality_score")): _*)
+      qualityScoreColumn(t).as("quality_score")): _*)
   }
 
   /** Stopword profile per language for the n-gram/stopword language-ID

@@ -27,6 +27,15 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
+  test("semanticDedup trains the quantizer without build's assignment pass") {
+    val sites = jobSites("ivf-semdedup") {
+      IvfIndex.semanticDedup(emb, "vec_id", "embedding", k = 8, tau = 0.3) }
+    // the one barrier is Dedup.semanticDedup's own cell assignment
+    val cuts = sites.filter(s =>
+      s.startsWith("localCheckpoint at") && s.contains("Barrier.scala"))
+    assert(cuts.length == 1, s"${cuts.length} barrier jobs: ${sites.mkString("; ")}")
+  }
+
   test("the inverted lists are materialized: assignments read only checkpoints") {
     val qe = index.assignments.queryExecution
     val leaves = qe.optimizedPlan.collectLeaves()
