@@ -24,6 +24,21 @@ import org.apache.spark.sql.SparkSession
   *    scaled so a partition of the biggest shuffle fits in memory.
   *  - UTC + parquet nanos-as-long: the timestamp semantics every
   *    event-time operator and the DuckDB oracle agree on.
+  *  - [[LocalFsConfs]]: `file:` through [[ForkFreeLocalFileSystem]] and
+  *    [[ForkFreeLocalFs]]. Without `libhadoop.so`, Hadoop's local
+  *    filesystem starts a `chmod` process for every file, `.crc` file
+  *    and directory it creates, and four `readlink` processes per
+  *    `FileContext.rename`. Counted with JFR (`jdk.ProcessStart`) per
+  *    job of the perfbench workloads: 370 on `event_stream` (74
+  *    `chmod` + 296 `readlink`, most of each trigger's WAL and state
+  *    commit), 485 `chmod` on `corpus_curate`, 56 on `prod2vec_train`;
+  *    with these classes, none. The same files, `.crc` files and
+  *    permission bits land. Caveat: Hadoop caches `FileSystem`s by
+  *    scheme and user, not by conf, so a `file:` `FileSystem` made in
+  *    the JVM before the first session (a bare `FileSystem.get` with a
+  *    plain `Configuration`) keeps Hadoop's forking class for the
+  *    JVM's lifetime. `FileContext` reads the conf on each call and is
+  *    not affected.
   */
 object Sessions {
 
@@ -43,8 +58,15 @@ object Sessions {
       "spark.sql.files.maxPartitionBytes" -> maxPartitionBytes.toString,
       "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true") ++ LocalFsConfs
   }
+
+  /** The fork-free `file:` filesystem for both Hadoop APIs — part of
+    * [[recommendedConfs]], and the one map the spec session reads. */
+  private[graft] val LocalFsConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[ForkFreeLocalFs].getName)
 
   /** The one session posture of the graft mains (Bench, Verify, Smoke,
     * Profile, PlanDump, GenScale, CurateMain): [[recommendedConfs]] with

@@ -105,7 +105,7 @@ object Dedup {
       Literal(BloomFilter.optimalNumOfBits(expectedItems, fpp)))
       .toAggregateExpression()
     val bfBytes = hashes.select(ColumnBridge.column(bfAgg).as("__bf"))
-      .head.getAs[Array[Byte]](0)
+      .head().getAs[Array[Byte]](0)
     if (bfBytes == null) return df // empty index: nothing to drop
     val withH = df.withColumn("__h", md5(col(contentCol).cast("binary")))
     val mightContain = ColumnBridge.column(BloomFilterMightContain(
@@ -515,7 +515,7 @@ object Dedup {
       val m = dfs.agg(coalesce(
           sum(col("__df").cast("decimal(38,0)") * col("__df")),
           lit(0).cast("decimal(38,0)")).as("__m"))
-        .head.getDecimal(0)
+        .head().getDecimal(0)
       (dfs, BigDecimal(m))
     }
     var posts = allPosts

@@ -205,10 +205,10 @@ object Er {
     val longMass = pk.join(sk,
         pk("segh") === sk("__sh") && pk("i") === sk("__si") &&
           pk("l2") === sk("lb"))
-      .agg(sum(col("__ca") * col("__cb")).as("m")).head.getDecimal(0)
+      .agg(sum(col("__ca") * col("__cb")).as("m")).head().getDecimal(0)
     val shortRow = strs.agg(
       sum(when(col("l") <= k, 1L).otherwise(0L)).as("ns"),
-      sum(when(col("l") <= 2L * k, 1L).otherwise(0L)).as("np")).head
+      sum(when(col("l") <= 2L * k, 1L).otherwise(0L)).as("np")).head()
     val shortMass =
       if (shortRow.isNullAt(0)) BigDecimal(0)
       else BigDecimal(shortRow.getLong(0)) * BigDecimal(shortRow.getLong(1))

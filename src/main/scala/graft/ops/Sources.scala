@@ -307,7 +307,7 @@ object Sources {
   def writeZOrdered(df: DataFrame, path: String, colA: String,
                     colB: String, bits: Int, files: Int): Unit = {
     val b = df.agg(min(col(colA).cast("long")), max(col(colA).cast("long")),
-      min(col(colB).cast("long")), max(col(colB).cast("long"))).head
+      min(col(colB).cast("long")), max(col(colB).cast("long"))).head()
     def scaled(c: String, lo: Long, hi: Long): Column =
       (col(c).cast("long") - lit(lo)) * lit((1L << bits) - 1) /
         lit(math.max(1L, hi - lo))

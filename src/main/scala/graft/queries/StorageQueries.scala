@@ -371,7 +371,7 @@ private[graft] object StorageQueries {
       val path = q172LayoutPath(dir)
       Sources.writeParquet(t(s, dir, "lineitem").repartition(32), path)
       val audit = Sources.parquetLayoutAudit(s, path)
-      val total = audit.agg(sum(col("compressed_bytes"))).head.getLong(0)
+      val total = audit.agg(sum(col("compressed_bytes"))).head().getLong(0)
       Sources.compactionPlan(audit,
           math.max(1L, total / CompactTargetFrac))
         .orderBy("file_name")

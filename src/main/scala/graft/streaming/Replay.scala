@@ -204,7 +204,7 @@ private[graft] object Replay {
                                        delayMs: Long, widthMs: Long): Unit = {
     val s = ev.sparkSession
     ev.repartition(4).write.mode("overwrite").parquet(staged)
-    val maxTs = ev.agg(max(col("ts"))).head.getLong(0)
+    val maxTs = ev.agg(max(col("ts"))).head().getLong(0)
     val s1 = maxTs + (delayMs + 2 * widthMs) * 1000000L
     def listed() = new java.io.File(staged).listFiles()
       .filter(f => f.getName.endsWith(".parquet")).map(_.toPath).toSet

@@ -43,8 +43,13 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Built with the engine's `file:` filesystem ([[graft.conf.Sessions]]'
+    * `LocalFsConfs`): Hadoop caches the first `file:` `FileSystem` of
+    * the JVM for every later suite, so it must be the class the engine
+    * runs. */
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
+      .config(graft.conf.Sessions.LocalFsConfs)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

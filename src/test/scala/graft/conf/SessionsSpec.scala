@@ -1,8 +1,9 @@
 package graft.conf
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.net.URI
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 
-class SessionsSpec extends AnyFunSuite {
+class SessionsSpec extends graft.SparkSpec {
 
   test("recommendedConfs: the documented production contract, validated") {
     val c = Sessions.recommendedConfs(2048, 128L << 20)
@@ -20,6 +21,24 @@ class SessionsSpec extends AnyFunSuite {
       c("spark.sql.legacy.parquet.nanosAsLong") == "true")
     intercept[IllegalArgumentException] { Sessions.recommendedConfs(0, 1L << 30) }
     intercept[IllegalArgumentException] { Sessions.recommendedConfs(64, 1024L) }
+  }
+
+  test("recommendedConfs carries the fork-free file: classes; a session " +
+      "built with them resolves file: to them through both Hadoop APIs") {
+    val c = Sessions.recommendedConfs(4, 128L << 20)
+    assert(Sessions.LocalFsConfs.keySet == Set("spark.hadoop.fs.file.impl",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl"))
+    assert(Sessions.LocalFsConfs.forall { case (k, v) => c.get(k).contains(v) })
+    // the spec session is built with the same map (graft.SparkSpec)
+    val hc = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.get(URI.create("file:///"), hc)
+    assert(fs.getClass == classOf[ForkFreeLocalFileSystem])
+    assert(FileSystem.getLocal(hc).getRaw.getClass ==
+      classOf[ForkFreeRawLocalFileSystem])
+    val afs = FileContext.getLocalFSFileContext(hc).getDefaultFileSystem
+    assert(afs.getClass == classOf[ForkFreeLocalFs])
+    assert(afs.asInstanceOf[ForkFreeLocalFs].getRawFs.getClass ==
+      classOf[ForkFreeRawLocalFs])
   }
 
   // Comments are blanked first (graft.SourceScan), so a scaladoc that
