@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.ops.{Barrier, Dedup, Sampling, Sources, Text}
@@ -20,21 +20,25 @@ import graft.ops.{Barrier, Dedup, Sampling, Sources, Text}
   * Every stage is one of the library's spec'd/oracle'd operators; this
   * object only sequences them, so the whole funnel inherits their scale
   * posture: map-only gates, hash-keyed dedup (never all-pairs), in-
-  * partition chunk fan-out. The heavily-multi-read frames persist in
-  * BOTH modes: `normed` (every downstream branch hangs off it, and
-  * Spark plans are trees, not DAGs — unpersisted, the lazy chunk plan
-  * multiplied to ~120 source scans; one with the persist,
-  * accumulator-spec-pinned), `quality` (repetition gate + exact dedup
-  * + count each read it), the exact-dedup survivors (shingling,
-  * chunking, count), the shingle arrays (read three times inside the
-  * near-dedup — re-deriving the interpreted shingle HOF per read is
-  * the measured 2-4x trap), and the near-dedup survivors (chunking +
-  * count). The cheap single-join frames between them (`inLang`,
-  * `good`) persist only for the funnel counts' duration — caching
-  * them in the lazy path measured ~40% of q62's steady-state cost
-  * for a bounded ×2 recompute saving. Funnel mode unpersists the
-  * gates after the counts; everything still cached comes back via
-  * `Result.persisted`.
+  * partition chunk fan-out. The heavily-multi-read frames persist:
+  * `normed` (every downstream branch hangs off it, and Spark plans are
+  * trees, not DAGs — unpersisted, the chunk plan multiplied to ~120
+  * source scans; one with the persist, accumulator-spec-pinned), the
+  * exact-dedup survivors (shingling, chunking), the shingle arrays
+  * (read three times inside the near-dedup — re-deriving the
+  * interpreted shingle HOF per read is the measured 2-4x trap) and the
+  * near-dedup survivors (chunking + the sink's source join). The per-
+  * row gates are filters over `normed`'s stored columns and never
+  * cache — caching them measured ~40% of q62's steady-state cost for a
+  * bounded ×2 recompute saving.
+  *
+  * There is one evaluation path. The per-stage row counts (the funnel
+  * report) cost no job of their own: each stage carries an unnamed
+  * [[Observation]] counting the rows that flow through it, filled by
+  * whichever action first reads that frame — for a persisted frame the
+  * observation sits below the persist, so its count is taken once,
+  * when the cache fills. [[curateToParquet]] reads them after its sink
+  * write.
   */
 object CorpusPipeline {
 
@@ -147,49 +151,40 @@ object CorpusPipeline {
       // (CorpusPipelineSpec pins the law).
       storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
 
-  /** Final chunk table + the per-stage survivor counts (empty when
-    * `collectFunnel = false`) + every frame [[curate]] left persisted
-    * for the chunk table's benefit: a long-lived session should
-    * `result.persisted.foreach(_.unpersist())` once the chunks are
-    * consumed ([[curateToParquet]] does this itself after the sink
-    * write). `survivors` is the final post-dedup/scrub document frame
-    * (persisted; (doc_id, text, lang, source) with the funnel's
-    * normalized text) — the input [[exportShards]] consumes. */
+  /** Final chunk table + the per-stage survivor counts (filled by
+    * [[curateToParquet]]; empty from [[curate]]) + every frame
+    * [[curate]] left persisted for the chunk table's benefit: a
+    * long-lived session should `result.persisted.foreach(_.unpersist())`
+    * once the chunks are consumed ([[curateToParquet]] does this itself
+    * after the sink write). `survivors` is the final post-dedup/scrub
+    * document frame (persisted; (doc_id, text, lang, source) with the
+    * funnel's normalized text) — the input [[exportShards]] consumes. */
   case class Result(chunks: DataFrame, funnel: Seq[(String, Long)],
                     persisted: Seq[DataFrame] = Seq.empty,
                     packed: Option[DataFrame] = None,
                     survivors: Option[DataFrame] = None)
 
-  /** Run the funnel over a `documents`-shaped frame
-    * (doc_id, text, lang, source).
+  /** Build the funnel over a `documents`-shaped frame
+    * (doc_id, text, lang, source); `funnel` comes back empty (see
+    * [[curateToParquet]] for the report).
     *
-    * `collectFunnel = true` adds one count() action per stage boundary —
-    * the operational visibility every real curation run wants. The
-    * normalized frame and the two gate frames (language, quality) are
-    * persisted for the funnel's duration and unpersisted before
-    * returning, so every gate pipeline executes exactly ONCE: the
-    * languageId explode → broadcast-join → window chain runs once
-    * (during the language count) and each later count reads caches —
-    * the source is scanned exactly TWICE (input count + the normalize
-    * materialization), independent of funnel depth
-    * (CorpusPipelineSpec pins the bound with an accumulator-
-    * instrumented source). Pass `false` to skip the per-stage counts:
-    * the source is then scanned exactly ONCE in total (the persists
-    * are registered either way — spec-pinned). Note the near-dedup
-    * fixpoint still runs AT THE CALL in both modes ([[graft.ops.Barrier]]
-    * is eager; see README's API conventions).
+    * Lazy but for the barriers: the near-dedup fixpoint runs AT THE
+    * CALL ([[graft.ops.Barrier]] is eager; see README's API
+    * conventions), and so does one survivor-id barrier per
+    * corpus-aggregation gate (percentile, boilerplate, perplexity) —
+    * the price of never re-running an n-gram/NLL chain when dedup reads
+    * the gated frame twice. The source is scanned exactly ONCE in total:
+    * the first barrier fills the `normed` cache and every later read
+    * hits caches (CorpusPipelineSpec pins the bound with an
+    * accumulator-instrumented source).
     *
-    * The dedup-side persisted frames (survivors, shingles, exact — and
-    * in lazy mode with the repetition gate on, the quality frame) stay
-    * cached so the returned `chunks` stays cheap to consume; they are
-    * handed back in `Result.persisted` — unpersist them when done, or
-    * prefer [[curateToParquet]], which unpersists after the sink
-    * write. */
-  def curate(docs: DataFrame, cfg: Config = Config(),
-             collectFunnel: Boolean = true): Result = {
-    val f = curateFrames(docs, cfg, collectFunnel)
-    f.result.copy(persisted = f.persisted, survivors = Some(f.survivors))
-  }
+    * The persisted frames (normalized, exact, shingles, survivors — and
+    * the gated frame when the perplexity gate is on) stay cached so the
+    * returned `chunks` stays cheap to consume; they are handed back in
+    * `Result.persisted` — unpersist them when done, or prefer
+    * [[curateToParquet]], which unpersists after the sink write. */
+  def curate(docs: DataFrame, cfg: Config = Config()): Result =
+    curateFrames(docs, cfg)._1
 
   /** Funnel-to-training-shards EXPORT: the three individually
     * certified loader-side pieces composed behind one call over the
@@ -260,39 +255,53 @@ object CorpusPipeline {
     (packed, manifest)
   }
 
-  /** Internal hand-off between [[curate]] and [[curateToParquet]]:
-    * the result plus the final survivor frame (post near-dedup and,
-    * when configured, post decontamination; persisted — the sink's
-    * source-tag join reads it instead of re-scanning the input) and
-    * every still-persisted frame for the caller to unpersist. */
-  private case class Frames(result: Result, survivors: DataFrame,
-                            persisted: Seq[DataFrame])
-
   /** [[curate]] and land the chunk table as parquet partitioned by the
     * survivor's source — the layout downstream training readers prune
-    * on. The write materializes everything, so the internally persisted
-    * frames are unpersisted before returning (re-consuming the returned
-    * `chunks` afterwards re-derives the funnel; read the sink instead).
-    * The source tag joins in from the PERSISTED survivor frame (chunk
-    * doc_ids are exactly its ids), never by re-scanning the input. */
+    * on — then report the funnel. The write materializes everything,
+    * so the internally persisted frames are unpersisted before
+    * returning (re-consuming the returned `chunks` afterwards
+    * re-derives the funnel; read the sink instead). The source tag
+    * joins in from the PERSISTED survivor frame (chunk doc_ids are
+    * exactly its ids), never by re-scanning the input.
+    *
+    * Every funnel count is read from its stage's [[Observation]], which
+    * the barriers and the sink write have filled: no count job, except
+    * `packed_sequences` when `packSeqTokens` is set (the sink does not
+    * read the packed frame). */
   def curateToParquet(docs: DataFrame, outPath: String,
                       cfg: Config = Config()): Result = {
-    val f = curateFrames(docs, cfg, collectFunnel = true)
-    val withSource = f.result.chunks.join(
-      f.survivors.select(col("doc_id"), col("source")), Seq("doc_id"))
+    val (r, stages) = curateFrames(docs, cfg)
+    val withSource = r.chunks.join(
+      r.survivors.get.select(col("doc_id"), col("source")), Seq("doc_id"))
     Sources.writeParquetPartitioned(withSource, outPath, Seq("source"))
-    f.persisted.foreach(_.unpersist())
-    f.result
+    // an Observation completes asynchronously, after the action that
+    // first read its frame has ended: `get` blocks until then
+    val funnel = stages.map { case (stage, o) =>
+        stage -> o.get("rows").asInstanceOf[Long] } ++
+      r.packed.map(p => "packed_sequences" -> p.count())
+    r.persisted.foreach(_.unpersist())
+    Result(r.chunks, funnel, packed = r.packed)
   }
 
-  private def curateFrames(docs: DataFrame, cfg: Config,
-                           collectFunnel: Boolean): Frames = {
+  /** The funnel's frames, plus one row-count [[Observation]] per stage
+    * in funnel order. */
+  private def curateFrames(docs: DataFrame, cfg: Config)
+      : (Result, Seq[(String, Observation)]) = {
+    // stages are built in funnel order, so the Observations are too
+    val stages = Seq.newBuilder[(String, Observation)]
+    def observed(stage: String, df: DataFrame): DataFrame = {
+      val o = Observation()
+      stages += stage -> o
+      df.observe(o, count(lit(1)).as("rows"))
+    }
+    val input = observed("input", docs)
+
     // optional PII scrub FIRST — before normalize, which strips the
     // very characters the URL/email patterns match on (see Config doc).
     // Column-level mask inside the projection: no join, no extra scan.
     val scrubbed =
-      if (!cfg.scrubPii) docs
-      else docs.select(col("doc_id"), Text.piiMasked(col("text")).as("text"),
+      if (!cfg.scrubPii) input
+      else input.select(col("doc_id"), Text.piiMasked(col("text")).as("text"),
         col("lang"), col("source"))
 
     // normalize next so the gates, dedup shingles and chunks all see
@@ -312,10 +321,9 @@ object CorpusPipeline {
     // barrier: filters over InMemoryTableScan read stored values, so
     // no Catalyst rule can duplicate the kernels (the streaming twin
     // uses [[graft.functions.Stable]] for the same guarantee).
-    // ALWAYS persist-registered (persist is metadata; in lazy mode
-    // nothing materializes before the fixpoint construction): Spark
+    // Persisted (nothing materializes before the first barrier): Spark
     // plans are trees, not DAGs, and every downstream branch hangs off
-    // this frame — unpersisted, the lazy chunk plan multiplied to ~120
+    // this frame — unpersisted, the chunk plan multiplied to ~120
     // SOURCE SCANS (measured at sf0.01; one scan with the persist,
     // accumulator-spec-pinned).
     // `__t` rides a lower projection so the gram HOF's element_at
@@ -335,9 +343,9 @@ object CorpusPipeline {
       case Some(_) => withToks.withColumn("__g",
         Text.shinglesAll(col("__t"), cfg.repetitionN))
     }
-    val normed = withGrams
+    val normed = observed("normalized_non_empty", withGrams
       .select(Seq("doc_id", "text", "lang", "source").map(col) ++
-        gateCols: _*)
+        gateCols: _*))
       .persist(cfg.storageLevel)
 
     // language gate on the n-gram-profile PREDICTION, not the source-
@@ -345,8 +353,8 @@ object CorpusPipeline {
     // [[Text.langIdTextColumn]] is the spec-pinned map-only twin of
     // the relational [[Text.languageId]] — same prediction, same
     // tiebreak, zero shuffles.
-    val inLang = normed.filter(
-      col("__pred_lang").isin(cfg.keepLangs.toSeq: _*))
+    val inLang = observed("language", normed.filter(
+      col("__pred_lang").isin(cfg.keepLangs.toSeq: _*)))
 
     // quality gate: length/alpha/stopword/digit composite, stored in
     // `__q` — the absolute cut is a pure filter. With `minQualityPct`
@@ -356,13 +364,13 @@ object CorpusPipeline {
     // ALL in-lang docs (a genuine corpus aggregation — the one quality
     // path that keeps its join), so one source's score inflation never
     // crowds out another's documents.
-    val quality = cfg.minQualityPct match {
+    val quality = observed("quality", cfg.minQualityPct match {
       case None => inLang.filter(col("__q") >= cfg.minQuality)
       case Some(pct) =>
-        // survivor ids behind a [[Barrier]] in BOTH modes: the gate
-        // output is no longer persisted (it is a join over the cached
-        // normed frame), so the rank aggregation would otherwise
-        // re-run once per downstream read (exact dedup reads ×2)
+        // survivor ids behind a [[Barrier]]: the gate output is not
+        // persisted (it is a join over the cached normed frame), so the
+        // rank aggregation would otherwise re-run once per downstream
+        // read (exact dedup reads ×2)
         val ranked = Barrier.cut(Text.scorePercentiles(
             inLang.select(col("doc_id"), col("source"),
               col("__q").as("quality_score")),
@@ -371,7 +379,7 @@ object CorpusPipeline {
             col("pct_rank") >= pct)
           .select("doc_id"))
         inLang.join(ranked, Seq("doc_id"))
-    }
+    })
 
     // optional C4-style blocklist gate: drop any document containing a
     // blocklisted token — the one-line any-hit filter over the row's
@@ -381,8 +389,8 @@ object CorpusPipeline {
       case None => quality
       case Some(terms) =>
         val lst = typedLit(terms.distinct)
-        quality.filter(!exists(Text.tokens(col("text")),
-          t => array_contains(lst, t)))
+        observed("blocklist", quality.filter(!exists(Text.tokens(col("text")),
+          t => array_contains(lst, t))))
     }
 
     // optional Gopher duplication gate: drop degenerate-repetition docs
@@ -394,25 +402,24 @@ object CorpusPipeline {
     val good = cfg.maxDupNgramRatio match {
       case None => clean
       case Some(maxDup) =>
-        clean.filter(col("__dup").isNull || col("__dup") <= maxDup)
+        observed("repetition",
+          clean.filter(col("__dup").isNull || col("__dup") <= maxDup))
     }
 
     // optional cross-document boilerplate gate: drop docs that are
     // mostly corpus-wide boilerplate grams (df > boilerMaxDf). Reads
-    // its input twice (stats + join) over the cached parents — the
-    // same bounded-x2 contract as the repetition gate above.
+    // its input twice (stats + join) over the cached parents; the
+    // survivor ids pass a [[Barrier]], so downstream multi-reads never
+    // re-run the n-gram chain.
     val gated = cfg.maxBoilerRatio match {
       case None => good
       case Some(maxB) =>
-        val ids = Text.boilerplateStats(good, "text", cfg.boilerN,
-            cfg.boilerMaxDf)
+        val ids = Barrier.cut(Text.boilerplateStats(good, "text",
+            cfg.boilerN, cfg.boilerMaxDf)
           .filter(col("boiler_ratio").isNull ||
             col("boiler_ratio") <= maxB)
-          .select("doc_id")
-        val surv = good.join(
-          if (collectFunnel) ids else Barrier.cut(ids), Seq("doc_id"))
-        if (collectFunnel) surv.persist(cfg.storageLevel)
-        else surv
+          .select("doc_id"))
+        observed("boilerplate", good.join(ids, Seq("doc_id")))
     }
 
     // optional CCNet perplexity-tier gate: per-language NLL tiers over
@@ -427,24 +434,18 @@ object CorpusPipeline {
       case Some(keep) =>
         // the NLL model + tier join read `gated` five times (tf explode,
         // token total, lang join, survivor join, downstream dedup) — at
-        // ×3-per-read gate-chain re-derivation that compounds, so in
-        // lazy mode the gate frame persists here (funnel mode already
-        // persists it; `ne quality` guards the no-gates case where it
-        // IS the always-persisted quality frame). Registered in
-        // `extraPersisted` for caller unpersist. The tier-survivor IDS
-        // additionally pass a [[Barrier]] in lazy mode (see the
-        // repetition gate note), so downstream multi-reads never re-run
-        // the NLL/ntile chain.
-        if (!collectFunnel && (gated ne quality))
-          gated.persist(cfg.storageLevel)
-        val ids = Text.perplexityBuckets(gated, "text", "lang",
+        // ×3-per-read gate-chain re-derivation that compounds, so the
+        // gate frame persists here when an optional gate stands between
+        // it and the quality filter (handed back in `persisted`). The
+        // tier-survivor IDS pass a [[Barrier]] (see the boilerplate
+        // gate), so downstream multi-reads never re-run the NLL/ntile
+        // chain.
+        if (gated ne quality) gated.persist(cfg.storageLevel)
+        val ids = Barrier.cut(Text.perplexityBuckets(gated, "text", "lang",
             cfg.pplBuckets)
           .filter(col("bucket").isin(keep.toSeq: _*))
-          .select("doc_id")
-        val surv = gated.join(
-          if (collectFunnel) ids else Barrier.cut(ids), Seq("doc_id"))
-        if (collectFunnel) surv.persist(cfg.storageLevel)
-        else surv
+          .select("doc_id"))
+        observed("perplexity", gated.join(ids, Seq("doc_id")))
     }
 
     // exact dedup (hash-groupBy, deterministic min-id survivor), then
@@ -455,12 +456,13 @@ object CorpusPipeline {
     // the extra bytes never ride a dedup shuffle.
     val postGates = tiered.select(
       col("doc_id"), col("text"), col("lang"), col("source"))
-    val exact = Dedup.dedupExact(postGates, "doc_id", "text")
+    val exact = observed("exact_dedup",
+        Dedup.dedupExact(postGates, "doc_id", "text"))
       .persist(cfg.storageLevel)
     val shingled = exact.select(col("doc_id"),
         Text.shingles(Text.tokens(col("text")), cfg.shingleN).as("shingles"))
       .persist(cfg.storageLevel)
-    val near = (if (!cfg.keepBestQuality)
+    val near = observed("near_dedup", if (!cfg.keepBestQuality)
         Dedup.dedupNearClustered(exact, "doc_id", shingled,
           cfg.minhashPerms, cfg.bands, cfg.rowsPerBand, cfg.jaccardTau)
       else {
@@ -481,7 +483,7 @@ object CorpusPipeline {
     // scrub+normalize chain, and the training side reuses the cached
     // `shingled` frame (restricted to near survivors) — no re-shingling.
     // Persisted like its dedup siblings: the anti-join is read by the
-    // chunk build and the funnel count.
+    // chunk build and the sink's source join.
     val decon = cfg.evalDocs match {
       case None => near
       case Some(eval) =>
@@ -499,7 +501,8 @@ object CorpusPipeline {
             evalShingled, "doc_id",
             cfg.contaminationMinShared, cfg.broadcastEval)
           .select(col("doc_id")).distinct()
-        near.join(drops, Seq("doc_id"), "left_anti")
+        observed("decontaminated",
+            near.join(drops, Seq("doc_id"), "left_anti"))
           .persist(cfg.storageLevel)
     }
 
@@ -508,75 +511,38 @@ object CorpusPipeline {
     // surviving corpus; docs scrubbed to nothing drop. Eager (the op's
     // internal barrier), like the near-dedup fixpoint before it; reads
     // the persisted survivor frame once. The scrubbed frame persists
-    // because chunking, packing, the sink's source join and the funnel
-    // count all read it.
+    // because chunking, packing and the sink's source join all read it.
     val spanScrubbed = cfg.scrubSpanK match {
       case None => decon
       case Some(k) =>
         val s = Dedup.scrubRepeatedSpans(decon, "doc_id", "text", k)
           .filter(length(col("text_scrubbed")) > 0)
           .select(col("doc_id"), col("text_scrubbed").as("text"))
-        decon.drop("text").join(s, Seq("doc_id"))
+        observed("span_scrub", decon.drop("text").join(s, Seq("doc_id")))
           .persist(cfg.storageLevel)
     }
 
-    val chunks = Text.chunk(spanScrubbed, "text", cfg.chunkTokens)
+    val chunks = observed("chunks",
+      Text.chunk(spanScrubbed, "text", cfg.chunkTokens))
     // optional packed-sequence consumer — reads the same persisted
     // survivor frame as the chunker; no extra funnel stages upstream
     val packed = cfg.packSeqTokens.map(l =>
       graft.ops.Sampling.pack(spanScrubbed, "doc_id", "text", l,
         cfg.packShards, cfg.packSalt))
 
-    val funnel =
-      if (!collectFunnel) Seq.empty
-      else {
-        // count order matters: `exact` (persisted) materializes from the
-        // cached gates BEFORE they unpersist, so nothing downstream ever
-        // re-runs a gate pipeline
-        val gateCounts = Seq("quality" -> quality.count()) ++
-          (if (cfg.blocklist.isEmpty) Seq.empty
-           else Seq("blocklist" -> clean.count())) ++
-          (if (cfg.maxDupNgramRatio.isEmpty) Seq.empty
-           else Seq("repetition" -> good.count())) ++
-          (if (cfg.maxBoilerRatio.isEmpty) Seq.empty
-           else Seq("boilerplate" -> gated.count())) ++
-          (if (cfg.pplKeepTiers.isEmpty) Seq.empty
-           else Seq("perplexity" -> tiered.count()))
-        val scrubCounts =
-          (if (cfg.evalDocs.isEmpty) Seq.empty
-           else Seq("decontaminated" -> decon.count())) ++
-          (if (cfg.scrubSpanK.isEmpty) Seq.empty
-           else Seq("span_scrub" -> spanScrubbed.count()))
-        val counts = Seq(
-          "input" -> docs.count(),
-          "normalized_non_empty" -> normed.count(),
-          "language" -> inLang.count()) ++ gateCounts ++ Seq(
-          "exact_dedup" -> exact.count(),
-          "near_dedup" -> near.count()) ++ scrubCounts ++ Seq(
-          "chunks" -> chunks.count()) ++
-          packed.map(p => "packed_sequences" -> p.count()).toSeq
-        // only the corpus-aggregation gates (boilerplate, perplexity)
-        // persist their outputs now — the per-row gates are filters
-        // over the normed cache and have nothing to unpersist
-        if (tiered ne gated) tiered.unpersist()
-        if (gated ne good) gated.unpersist()
-        normed.unpersist()
-        counts
-      }
-    // lazy mode keeps normed cached (the one always-persisted
-    // multi-read frame — every gate filter reads its stored columns) —
-    // hand it to the caller alongside the dedup-side frames for
-    // unpersist after consumption
-    val extraPersisted =
-      if (collectFunnel) Seq.empty
-      else Seq(normed) ++
-        (if (cfg.pplKeepTiers.isDefined && (gated ne quality)) Seq(gated)
-         else Seq.empty)
+    // normed is the always-persisted multi-read frame (every gate filter
+    // reads its stored columns); the rest are the persisted gate and
+    // dedup-side frames, for the caller to unpersist after consumption
+    val gatePersisted =
+      if (cfg.pplKeepTiers.isDefined && (gated ne quality)) Seq(gated)
+      else Seq.empty
     val deconPersisted = if (decon ne near) Seq(decon) else Seq.empty
     val scrubPersisted =
       if (spanScrubbed ne decon) Seq(spanScrubbed) else Seq.empty
-    Frames(Result(chunks, funnel, packed = packed), spanScrubbed,
-      scrubPersisted ++ deconPersisted ++ Seq(near, shingled, exact) ++
-        extraPersisted)
+    (Result(chunks, Seq.empty,
+        scrubPersisted ++ deconPersisted ++ Seq(near, shingled, exact,
+          normed) ++ gatePersisted,
+        packed, Some(spanScrubbed)),
+      stages.result())
   }
 }

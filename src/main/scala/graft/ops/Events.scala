@@ -428,13 +428,10 @@ object Events {
     * user-keyed at every step.
     *
     * EAGERNESS — the one deviation from the library's lazy-everywhere
-    * convention (see README's API conventions): with `eager = true`
-    * (default) the k stage materializations run AT THE CALL — k Spark
-    * jobs before any action on the result, and with a checkpoint dir
-    * set, k reliable checkpoint writes. Callers composing a funnel
-    * frame they may never evaluate should pass `eager = false`: fully
-    * lazy, identical rows (EventsSpec pins equality), at the price of
-    * the O(k²) prefix re-derivation when the union finally runs.
+    * convention (see README's API conventions): the k stage
+    * materializations run AT THE CALL — k Spark jobs before any action
+    * on the result, and with a checkpoint dir set, k reliable
+    * checkpoint writes.
     *
     * Skew caveat (same as every user-keyed sibling): the per-stage
     * join and min-agg key on user_id, so one pathologically hot user's
@@ -442,29 +439,8 @@ object Events {
     * the JOIN against a hot user's events ever dominates, pre-aggregate
     * events to (user, type, min ts-after-candidates) or salt the key —
     * see [[Pairs.saltedCounts]] for the two-stage salted shape. */
-  def funnel(events: DataFrame, stages: Seq[String],
-             eager: Boolean = true): DataFrame = {
-    require(stages.nonEmpty, "stages must be non-empty")
-    require(stages.distinct.size == stages.size,
-      s"stages must be distinct: ${stages.mkString(",")}")
-    def barrier(df: DataFrame): DataFrame =
-      if (eager) Barrier.cut(df) else df
-    def stageRow(idx: Long, st: String, reach: DataFrame): DataFrame =
-      reach.agg(count(lit(1)).as("n_users"))
-        .select(lit(idx).as("stage_idx"), lit(st).as("stage"),
-          col("n_users"))
-    var reach = barrier(events.filter(col("event_type") === stages.head)
-      .groupBy(col("user_id")).agg(min(col("ts")).as("__rt")))
-    var rows = stageRow(1L, stages.head, reach)
-    for ((st, i) <- stages.tail.zipWithIndex) {
-      reach = barrier(events.filter(col("event_type") === st)
-        .join(reach, Seq("user_id"))
-        .filter(col("ts") > col("__rt"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("__rt")))
-      rows = rows.union(stageRow(i + 2L, st, reach))
-    }
-    rows
-  }
+  def funnel(events: DataFrame, stages: Seq[String]): DataFrame =
+    stageChain(events, stages, None)
 
   /** [[funnel]] with an ATTRIBUTION WINDOW — stage k+1 counts a user
     * only when their first qualifying event lands within `maxGapMs` of
@@ -475,30 +451,36 @@ object Events {
     * The windowed reach time chains: stage k+2's window starts at the
     * first WINDOWED stage-k+1 event. Gap compares ms-floors of the ns
     * event times (the [[sessionize]] duration rule — survives sub-ms
-    * read truncation); same stage-chain shape, eagerness contract and
-    * skew caveat as [[funnel]], whose scaladoc is the reference — the
+    * read truncation); same stage-chain shape, eagerness and skew
+    * caveat as [[funnel]], whose scaladoc is the reference — the
     * window predicate on the tail-stage filter is the ONLY delta. */
   def funnelWindowed(events: DataFrame, stages: Seq[String],
-                     maxGapMs: Long, eager: Boolean = true): DataFrame = {
+                     maxGapMs: Long): DataFrame = {
+    require(maxGapMs >= 0, s"maxGapMs must be >= 0, got $maxGapMs")
+    stageChain(events, stages, Some(maxGapMs))
+  }
+
+  /** The [[funnel]] stage chain; `maxGapMs` adds [[funnelWindowed]]'s
+    * window predicate to every tail stage. */
+  private def stageChain(events: DataFrame, stages: Seq[String],
+                         maxGapMs: Option[Long]): DataFrame = {
     require(stages.nonEmpty, "stages must be non-empty")
     require(stages.distinct.size == stages.size,
       s"stages must be distinct: ${stages.mkString(",")}")
-    require(maxGapMs >= 0, s"maxGapMs must be >= 0, got $maxGapMs")
-    def barrier(df: DataFrame): DataFrame =
-      if (eager) Barrier.cut(df) else df
     def stageRow(idx: Long, st: String, reach: DataFrame): DataFrame =
       reach.agg(count(lit(1)).as("n_users"))
         .select(lit(idx).as("stage_idx"), lit(st).as("stage"),
           col("n_users"))
-    var reach = barrier(events.filter(col("event_type") === stages.head)
+    val after = maxGapMs.fold(col("ts") > col("__rt"))(gap =>
+      col("ts") > col("__rt") &&
+        (expr("ts div 1000000") - expr("__rt div 1000000")) <= gap)
+    var reach = Barrier.cut(events.filter(col("event_type") === stages.head)
       .groupBy(col("user_id")).agg(min(col("ts")).as("__rt")))
     var rows = stageRow(1L, stages.head, reach)
     for ((st, i) <- stages.tail.zipWithIndex) {
-      reach = barrier(events.filter(col("event_type") === st)
+      reach = Barrier.cut(events.filter(col("event_type") === st)
         .join(reach, Seq("user_id"))
-        .filter(col("ts") > col("__rt") &&
-          (expr("ts div 1000000") - expr("__rt div 1000000"))
-            <= maxGapMs)
+        .filter(after)
         .groupBy(col("user_id")).agg(min(col("ts")).as("__rt")))
       rows = rows.union(stageRow(i + 2L, st, reach))
     }

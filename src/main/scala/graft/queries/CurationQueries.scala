@@ -607,12 +607,10 @@ private[graft] object CurationQueries {
     // gate → exact dedup → clustered near-dedup → 64-token chunking)
     // with the pinned q62 Config, hash-matched on the final chunk
     // table — the integration check no per-stage oracle can give.
-    // collectFunnel=false keeps the whole thing one lazy pipeline; the
-    // frames curate persists internally (survivors/shingles — all
+    // The frames curate persists internally (survivors/shingles — all
     // survivor-sized) stay cached for the query's lifetime.
     Query("q62_corpus_curate", (s, dir) => {
-      CorpusPipeline.curate(t(s, dir, "documents"), CurateCfg,
-        collectFunnel = false).chunks
+      CorpusPipeline.curate(t(s, dir, "documents"), CurateCfg).chunks
         .orderBy("doc_id", "chunk_idx")
     },
     // q62: the WHOLE curation funnel as one CTE chain — each stage is
@@ -633,8 +631,7 @@ private[graft] object CurationQueries {
     // A manifest hash match certifies the entire raw-docs →
     // training-shards product end to end — the one-call loader story.
     Query("q274_corpus_export", (s, dir) => {
-      val r = CorpusPipeline.curate(t(s, dir, "documents"), CurateCfg,
-        collectFunnel = false)
+      val r = CorpusPipeline.curate(t(s, dir, "documents"), CurateCfg)
       val (_, manifest) = CorpusPipeline.exportShards(r.survivors.get,
         EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
         PackShards)
@@ -648,8 +645,7 @@ private[graft] object CurationQueries {
     Query("q93_corpus_curate_ppl", (s, dir) => {
       val cfg = CurateCfg.copy(
         pplKeepTiers = Some(CuratePplTiers), pplBuckets = PplBuckets)
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
-        collectFunnel = false).chunks
+      CorpusPipeline.curate(t(s, dir, "documents"), cfg).chunks
         .orderBy("doc_id", "chunk_idx")
     },
     // q93: the shared funnel chain with the perplexity-tier CTEs
@@ -661,8 +657,7 @@ private[graft] object CurationQueries {
     // cluster keeps its highest-quality copy instead of its min id.
     Query("q98_corpus_curate_best", (s, dir) => {
       val cfg = CurateCfg.copy(keepBestQuality = true)
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
-        collectFunnel = false).chunks
+      CorpusPipeline.curate(t(s, dir, "documents"), cfg).chunks
         .orderBy("doc_id", "chunk_idx")
     },
     // q98: the shared funnel chain with the keepBestQuality survivor
@@ -674,8 +669,7 @@ private[graft] object CurationQueries {
     // the quality gate: keep each source's top (1 - pct) slice.
     Query("q102_corpus_curate_pct", (s, dir) => {
       val cfg = CurateCfg.copy(minQualityPct = Some(CurateMinQualityPct))
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
-        collectFunnel = false).chunks
+      CorpusPipeline.curate(t(s, dir, "documents"), cfg).chunks
         .orderBy("doc_id", "chunk_idx")
     },
       s"""${curateOracleCtesWith(pplGate = false, pctGate = true)},
@@ -686,8 +680,7 @@ private[graft] object CurationQueries {
     // spans removed, first occurrence kept) before the chunker reads it.
     Query("q80_corpus_curate_scrubbed", (s, dir) => {
       val cfg = CurateCfg.copy(scrubSpanK = Some(CurateScrubK))
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
-        collectFunnel = false).chunks
+      CorpusPipeline.curate(t(s, dir, "documents"), cfg).chunks
         .orderBy("doc_id", "chunk_idx")
     },
     // q80: the q62 survivor chain, passed through the q78-style span
@@ -707,7 +700,7 @@ private[graft] object CurationQueries {
         evalDocs = Some(docs.filter(col("doc_id") < EvalSetDocs)
           .select(col("doc_id"), col("text"))),
         contaminationMinShared = ContaminationMinShared)
-      CorpusPipeline.curate(docs, cfg, collectFunnel = false).chunks
+      CorpusPipeline.curate(docs, cfg).chunks
         .orderBy("doc_id", "chunk_idx")
     },
     // q70: q62's funnel + the decontamination stage between near-dedup
@@ -745,8 +738,7 @@ private[graft] object CurationQueries {
     Query("q77_corpus_curate_packed", (s, dir) => {
       val cfg = CurateCfg.copy(
         packSeqTokens = Some(PackSeqTokens), packShards = PackShards)
-      CorpusPipeline.curate(t(s, dir, "documents"), cfg,
-        collectFunnel = false).packed.get
+      CorpusPipeline.curate(t(s, dir, "documents"), cfg).packed.get
         .orderBy("shard", "seq_idx")
     },
     // q77: the q62 survivor chain, consumed by the q67 packing tail

@@ -656,8 +656,7 @@ object StreamOps {
       use: DataFrame => Unit): Unit = {
     val atRest = spark.read.parquet(atRestDir)
       .select("doc_id", "text", "lang", "source")
-    val r = graft.app.CorpusPipeline.curate(atRest, cfg,
-      collectFunnel = false)
+    val r = graft.app.CorpusPipeline.curate(atRest, cfg)
     val (_, manifest) = graft.app.CorpusPipeline.exportShards(
       r.survivors.get, weights, tokenBudget, realizeSalt, seqTokens,
       shards)

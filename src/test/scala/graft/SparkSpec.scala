@@ -10,21 +10,36 @@ trait SparkSpec extends AnyFunSuite {
 
   /** Call sites of the Spark jobs `body` starts, in start order (each
     * job's result stage is named for its call site): a listener over a
-    * job group, drained by a marker job. */
+    * job group, drained by a marker job. A job that a SQL execution
+    * runs also names, in brackets, the call site of the action that
+    * started the execution — adaptive execution submits its stages
+    * from a thread pool, so their own call site names no caller. */
   def jobSites(group: String)(body: => Unit): Seq[String] = {
     import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler._
     val sc = spark.sparkContext
     val marker = "at SparkSpec.scala"
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    val execSites =
+      new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          execSites.put(s.executionId.toString, s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
             e.properties.getProperty("spark.jobGroup.id") == group)
-          sites.add(e.stageInfos.maxBy(_.stageId).name)
+          sites.add(e.stageInfos.maxBy(_.stageId).name +
+            Option(e.properties.getProperty("spark.sql.execution.id"))
+              .flatMap(id => Option(execSites.get(id)))
+              .fold("")(site => s" [$site]"))
     }
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
+    // no group description: a SQL execution then takes its caller's
+    // call site as its description
+    sc.setJobGroup(group, null)
     try {
       body
       // the listener bus delivers in order: once the marker job is

@@ -2,14 +2,27 @@ package graft.app
 
 import graft.SparkSpec
 import graft.ops.Text
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CorpusPipelineSpec extends SparkSpec {
 
   private def docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
 
+  /** [[CorpusPipeline.curateToParquet]] into a fresh directory: the
+    * result (with its funnel) and the chunk table read back from the
+    * sink. */
+  private def curated(d: DataFrame,
+                      cfg: CorpusPipeline.Config = CorpusPipeline.Config())
+      : (CorpusPipeline.Result, DataFrame) = {
+    val out = java.nio.file.Files.createTempDirectory("graft-curate")
+      .toString
+    val r = CorpusPipeline.curateToParquet(d, out, cfg)
+    (r, spark.read.parquet(out))
+  }
+
   test("curate: monotone funnel, budgeted normalized chunks, dup-free survivors") {
-    val r = CorpusPipeline.curate(docs)
+    val (r, chunks) = curated(docs)
     val f = r.funnel.toMap
     val order = Seq("input", "normalized_non_empty", "language", "quality",
       "exact_dedup", "near_dedup")
@@ -20,10 +33,10 @@ class CorpusPipelineSpec extends SparkSpec {
     // every surviving doc is non-empty, so it yields >= 1 chunk
     assert(f("chunks") >= f("near_dedup"))
     // chunk budget respected, no empty chunks
-    assert(r.chunks.filter(col("n_tokens") > 64 || col("n_tokens") <= 0)
+    assert(chunks.filter(col("n_tokens") > 64 || col("n_tokens") <= 0)
       .count() == 0)
     // chunk doc_ids are exactly the near-dedup survivors
-    val survivors = r.chunks.select("doc_id").distinct()
+    val survivors = chunks.select("doc_id").distinct()
     assert(survivors.count() == f("near_dedup"))
     // survivors are exact-dup free on normalized text
     val texts = docs.join(survivors, Seq("doc_id"))
@@ -31,43 +44,34 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(texts.count() == texts.distinct().count())
   }
 
-  test("curate: funnel counts run each gate pipeline once (source scanned 2x)") {
+  test("curateToParquet: funnel collected with the source scanned once") {
     // instrument the source: accumulator ticks once per row READ, so
-    // (value / rows) = full source scans. With normalize + both gate
-    // frames persisted for the funnel's duration the source is read
-    // exactly twice — the input count and the normalize
-    // materialization — independent of funnel depth (the unpersisted
-    // form re-ran the languageId pipeline, which alone reads its input
-    // three times, for three of the seven counts).
+    // (value / rows) = full source scans. Each stage's count is an
+    // Observation filled by the action that first reads its frame, so
+    // the funnel costs no scan of its own: the one source scan fills
+    // the normalized cache, and every later read hits caches.
     val base = docs.collect().toSeq
     val n = base.length
     val acc = spark.sparkContext.longAccumulator("corpus-source-rows")
     val src = spark.createDataFrame(
       spark.sparkContext.parallelize(base, 4).map { r => acc.add(1); r },
       docs.schema)
-    val r = CorpusPipeline.curate(src)
+    val (r, _) = curated(src)
+    assert(r.funnel.toMap.apply("input") == n)
     assert(r.funnel.toMap.apply("near_dedup") > 0)
-    assert(acc.value == 2L * n,
-      s"source scanned ${acc.value.toDouble / n}x, want 2x")
+    assert(acc.value == n, s"source scanned ${acc.value.toDouble / n}x, want 1x")
     // counts must match the un-instrumented run bit-for-bit
-    assert(r.funnel == CorpusPipeline.curate(docs).funnel)
+    assert(r.funnel == curated(docs)._1.funnel)
   }
 
-  test("curate lazy mode: source scanned exactly once end-to-end") {
-    // Spark plans are trees, not DAGs: without the gate persists the
-    // lazy chunk plan multiplied to ~120 source-scan references. With
-    // them, construction (the eager near-dedup fixpoint) fills the
-    // caches off ONE source scan and the chunk action reads caches.
-    val base = docs.collect().toSeq
-    val n = base.length
-    val acc = spark.sparkContext.longAccumulator("lazy-source-rows")
-    val src = spark.createDataFrame(
-      spark.sparkContext.parallelize(base, 4).map { r => acc.add(1); r },
-      docs.schema)
-    val r = CorpusPipeline.curate(src, collectFunnel = false)
-    assert(r.chunks.count() > 0)
-    assert(acc.value == n, s"source scanned ${acc.value.toDouble / n}x, want 1x")
-    r.persisted.foreach(_.unpersist())
+  test("curateToParquet: the funnel starts no job of its own") {
+    // with the default config the jobs are the barriers' and the sink
+    // write's; none has its call site in CorpusPipeline.scala (a count
+    // per stage did)
+    val sites = jobSites("curate-sites") { curated(docs) }
+    assert(sites.exists(_.contains("Sources.scala")), sites.mkString("\n"))
+    val own = sites.filter(_.contains("CorpusPipeline.scala"))
+    assert(own.isEmpty, own.mkString("\n"))
   }
 
   test("curate: PII scrub and repetition gate drop what the base gates cannot see") {
@@ -88,17 +92,17 @@ class CorpusPipelineSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang", "source")
     val cfg = CorpusPipeline.Config(minQuality = 0.3,
       scrubPii = true, maxDupNgramRatio = Some(0.5))
-    val r = CorpusPipeline.curate(corpus, cfg)
+    val (r, chunks) = curated(corpus, cfg)
     val f = r.funnel.toMap
     // the funnel gained the repetition stage, and it dropped exactly doc 2
     assert(f("quality") == 3 && f("repetition") == 2,
       s"funnel: ${r.funnel}")
-    val survivors = r.chunks.select("doc_id").distinct()
+    val survivors = chunks.select("doc_id").distinct()
       .as[Long].collect().toSet
     assert(survivors == Set(1L, 3L))
     // doc 3's PII never reaches the chunk table: the mask ran before
     // normalize, so the placeholders (not the raw address) got normalized
-    val doc3 = r.chunks.filter($"doc_id" === 3L)
+    val doc3 = chunks.filter($"doc_id" === 3L)
       .select("chunk").as[String].collect().mkString(" ")
     assert(!doc3.contains("bob") && !doc3.contains("spam example com")
       && !doc3.contains("1234567890"), doc3)
@@ -125,17 +129,11 @@ class CorpusPipelineSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang", "source")
     val cfg = CorpusPipeline.Config(minQuality = 0.3,
       maxBoilerRatio = Some(0.5), boilerN = 2, boilerMaxDf = 2L)
-    val r = CorpusPipeline.curate(corpus, cfg)
+    val (r, chunks) = curated(corpus, cfg)
     val f = r.funnel.toMap
     assert(f("quality") == 5 && f("boilerplate") == 4, s"funnel: ${r.funnel}")
-    val survivors = r.chunks.select("doc_id").distinct().as[Long].collect().toSet
+    val survivors = chunks.select("doc_id").distinct().as[Long].collect().toSet
     assert(survivors == Set(1L, 2L, 3L, 5L))
-    // lazy mode: same chunk rows, no funnel
-    val lazyR = CorpusPipeline.curate(corpus, cfg, collectFunnel = false)
-    assert(lazyR.funnel.isEmpty)
-    assert(lazyR.chunks.collect().toSet == r.chunks.collect().toSet)
-    lazyR.persisted.foreach(_.unpersist())
-    r.persisted.foreach(_.unpersist())
   }
 
   test("curate: blocklist gate drops any doc with a listed token, clean docs pass") {
@@ -154,22 +152,15 @@ class CorpusPipelineSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang", "source")
     val cfg = CorpusPipeline.Config(minQuality = 0.3,
       blocklist = Some(Seq("casino", "lottery")))
-    val r = CorpusPipeline.curate(corpus, cfg)
+    val (r, chunks) = curated(corpus, cfg)
     val f = r.funnel.toMap
     assert(f("quality") == 4 && f("blocklist") == 2, s"funnel: ${r.funnel}")
-    val survivors = r.chunks.select("doc_id").distinct().as[Long].collect().toSet
+    val survivors = chunks.select("doc_id").distinct().as[Long].collect().toSet
     assert(survivors == Set(1L, 2L))
-    // lazy mode: same chunk rows, no funnel
-    val lazyR = CorpusPipeline.curate(corpus, cfg, collectFunnel = false)
-    assert(lazyR.funnel.isEmpty)
-    assert(lazyR.chunks.collect().toSet == r.chunks.collect().toSet)
-    lazyR.persisted.foreach(_.unpersist())
-    r.persisted.foreach(_.unpersist())
   }
 
   test("curate: perplexity-tier gate keeps head+middle, drops the tail third") {
-    import spark.implicits._
-    val r = CorpusPipeline.curate(docs, CorpusPipeline.Config(
+    val (r, _) = curated(docs, CorpusPipeline.Config(
       pplKeepTiers = Some(Set("head", "middle"))))
     val f = r.funnel.toMap
     assert(f.contains("perplexity"), s"funnel: ${r.funnel}")
@@ -180,17 +171,11 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(math.abs(f("perplexity") - 2.0 * f("quality") / 3) <= 2 * langs,
       s"kept ${f("perplexity")} of ${f("quality")}")
     assert(f("exact_dedup") <= f("perplexity"))
-    // lazy mode agrees with funnel mode
-    val lazyR = CorpusPipeline.curate(docs, CorpusPipeline.Config(
-      pplKeepTiers = Some(Set("head", "middle"))), collectFunnel = false)
-    assert(lazyR.chunks.collect().toSet == r.chunks.collect().toSet)
-    lazyR.persisted.foreach(_.unpersist())
-    r.persisted.foreach(_.unpersist())
   }
 
   test("curate: keepBestQuality keeps one survivor per cluster, never lower total quality") {
-    val base = CorpusPipeline.curate(docs)
-    val best = CorpusPipeline.curate(docs,
+    val (base, baseChunks) = curated(docs)
+    val (best, bestChunks) = curated(docs,
       CorpusPipeline.Config(keepBestQuality = true))
     val fb = base.funnel.toMap
     val fq = best.funnel.toMap
@@ -199,21 +184,19 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(fq("exact_dedup") == fb("exact_dedup"))
     // per cluster the best policy picks the max-quality member, so the
     // summed survivor quality can never be below the min-id policy's
-    def totalQuality(r: CorpusPipeline.Result): Double = {
-      val surv = r.chunks.select("doc_id").distinct()
+    def totalQuality(chunks: DataFrame): Double = {
+      val surv = chunks.select("doc_id").distinct()
       val normed = docs.join(surv, Seq("doc_id"))
         .select(col("doc_id"), Text.normalize(col("text")).as("text"))
       Text.qualityScore(normed, "text")
         .agg(sum("quality_score")).head().getDouble(0)
     }
-    assert(totalQuality(best) >= totalQuality(base) - 1e-9)
-    best.persisted.foreach(_.unpersist())
-    base.persisted.foreach(_.unpersist())
+    assert(totalQuality(bestChunks) >= totalQuality(baseChunks) - 1e-9)
   }
 
   test("curate: minQualityPct tightens the quality gate per source; pct 0 is the absolute gate") {
-    val base = CorpusPipeline.curate(docs)
-    val cut = CorpusPipeline.curate(docs,
+    val (base, baseChunks) = curated(docs)
+    val (cut, cutChunks) = curated(docs,
       CorpusPipeline.Config(minQualityPct = Some(0.5)))
     val fb = base.funnel.toMap
     val fc = cut.funnel.toMap
@@ -222,15 +205,14 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(fc("quality") < fb("quality"),
       s"pct cut did not drop anything (${fc("quality")})")
     // survivors of the tightened gate are a subset of the base gate's
-    val extra = cut.chunks.select("doc_id")
-      .except(base.chunks.select("doc_id")).count()
+    val extra = cutChunks.select("doc_id")
+      .except(baseChunks.select("doc_id")).count()
     assert(extra == 0, s"$extra pct-gate docs not in the base funnel")
     // pct = 0.0 degenerates to the absolute-only gate (every rank >= 0)
-    val zero = CorpusPipeline.curate(docs,
+    val (zero, _) = curated(docs,
       CorpusPipeline.Config(minQualityPct = Some(0.0)))
     val fz = zero.funnel.toMap
     assert(fz("quality") == fb("quality"))
-    Seq(base, cut, zero).foreach(_.persisted.foreach(_.unpersist()))
   }
 
   test("curate: span-scrub stage rewrites a planted cross-survivor span") {
@@ -252,13 +234,13 @@ class CorpusPipelineSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang", "source")
     val cfg = CorpusPipeline.Config(minQuality = 0.0, jaccardTau = 0.9,
       scrubSpanK = Some(3))
-    val r = CorpusPipeline.curate(corpus, cfg)
+    val (r, chunks) = curated(corpus, cfg)
     val f = r.funnel.toMap
     assert(f("near_dedup") == 3 && f("span_scrub") == 3, s"funnel: ${r.funnel}")
     assert(f("span_scrub") <= f("near_dedup"))
     // chunk text for doc 2 lost the shared run; doc 1 (first occurrence)
     // and doc 3 (clean) kept theirs verbatim
-    val chunkText = r.chunks.groupBy("doc_id")
+    val chunkText = chunks.groupBy("doc_id")
       .agg(concat_ws(" ", sort_array(collect_list(
         struct(col("chunk_idx"), col("chunk")))).getField("chunk"))
         .as("t"))
@@ -267,7 +249,6 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(chunkText(2L) == "is the bird and a fish of the sea " +
       "red green blue cyan magenta yellow black white pink gray")
     assert(chunkText(3L).contains("solo words only"))
-    r.persisted.foreach(_.unpersist())
   }
 
   test("curate: eval-scrub stage drops a planted benchmark leak, funnel stays monotone") {
@@ -290,34 +271,33 @@ class CorpusPipelineSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val cfg = CorpusPipeline.Config(minQuality = 0.3,
       evalDocs = Some(eval), contaminationMinShared = 5L)
-    val r = CorpusPipeline.curate(corpus, cfg)
+    val (r, chunks) = curated(corpus, cfg)
     val f = r.funnel.toMap
     // the funnel gained the decontamination stage and it dropped
     // exactly the leaked doc; monotonicity holds through it
     assert(f("near_dedup") == 2 && f("decontaminated") == 1,
       s"funnel: ${r.funnel}")
     assert(f("decontaminated") <= f("near_dedup"))
-    val survivors = r.chunks.select("doc_id").distinct()
+    val survivors = chunks.select("doc_id").distinct()
       .as[Long].collect().toSet
     assert(survivors == Set(1L))
     // both broadcast paths agree
-    val rs = CorpusPipeline.curate(corpus, cfg.copy(broadcastEval = false))
-    assert(rs.funnel == r.funnel)
-    // the persisted handles are real: every frame is cached now, and
+    assert(curated(corpus, cfg.copy(broadcastEval = false))._1.funnel ==
+      r.funnel)
+    // curate's persisted handles are real: every frame is cached, and
     // unpersisting through the handle releases it
-    assert(r.persisted.nonEmpty &&
-      r.persisted.forall(_.storageLevel.useMemory))
-    r.persisted.foreach(_.unpersist(blocking = true))
-    assert(r.persisted.forall(_.storageLevel ==
+    val held = CorpusPipeline.curate(corpus, cfg).persisted
+    assert(held.nonEmpty && held.forall(_.storageLevel.useMemory))
+    held.foreach(_.unpersist(blocking = true))
+    assert(held.forall(_.storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE))
-    rs.persisted.foreach(_.unpersist())
   }
 
   test("curate: optional packed-sequence consumer conserves survivor tokens") {
     import spark.implicits._
     val L = 32
     val cfg = CorpusPipeline.Config(packSeqTokens = Some(L), packShards = 4)
-    val r = CorpusPipeline.curate(docs, cfg)
+    val (r, chunks) = curated(docs, cfg)
     val f = r.funnel.toMap
     assert(f.contains("packed_sequences") && f("packed_sequences") > 0,
       s"funnel: ${r.funnel}")
@@ -325,7 +305,7 @@ class CorpusPipelineSpec extends SparkSpec {
       .as[(Long, Long, Long, String)].collect()
     assert(packed.length == f("packed_sequences"))
     // zero token loss: packed totals equal the survivors' token totals
-    val survivorTokens = r.chunks.select("doc_id").distinct()
+    val survivorTokens = chunks.select("doc_id").distinct()
       .join(docs, "doc_id").select(size(split(
         graft.ops.Text.normalize(col("text")), " ")).cast("long").as("n"))
       .as[Long].collect().sum
@@ -337,18 +317,15 @@ class CorpusPipelineSpec extends SparkSpec {
       assert(sorted.last._3 <= L)
     }
     // the chunk table is unchanged by the packing option
-    val plain = CorpusPipeline.curate(docs, cfg.copy(packSeqTokens = None))
+    val (plain, plainChunks) = curated(docs, cfg.copy(packSeqTokens = None))
     assert(plain.packed.isEmpty)
-    assert(plain.chunks.collect().toSet == r.chunks.collect().toSet)
-    plain.persisted.foreach(_.unpersist())
-    r.persisted.foreach(_.unpersist())
+    assert(plainChunks.collect().toSet == chunks.collect().toSet)
   }
 
   test("exportShards: manifest totals equal the packed frame; epoch " +
       "mass realized per plan; content hash pins sequence content") {
     import spark.implicits._
-    val r = CorpusPipeline.curate(docs, CorpusPipeline.Config(),
-      collectFunnel = false)
+    val r = CorpusPipeline.curate(docs)
     // every source weighted 1 so the plan is non-degenerate
     val srcs = r.survivors.get.select("source").distinct()
       .as[String].collect()
@@ -401,7 +378,7 @@ class CorpusPipelineSpec extends SparkSpec {
       maxDupNgramRatio = Some(SparkEntry.CurateMaxDupRatio),
       repetitionN = SparkEntry.RepetitionN)
     def run(): Seq[org.apache.spark.sql.Row] = {
-      val r = CorpusPipeline.curate(docs, cfg, collectFunnel = false)
+      val r = CorpusPipeline.curate(docs, cfg)
       val rows = r.chunks.orderBy("doc_id", "chunk_idx").collect().toSeq
       r.persisted.foreach(_.unpersist(false))
       rows

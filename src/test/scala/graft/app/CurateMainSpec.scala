@@ -62,10 +62,13 @@ class CurateMainSpec extends SparkSpec {
 
   test("funnel counts and chunk hashes are storage-level-invariant") {
     def run(lvl: StorageLevel) = {
-      val r = CorpusPipeline.curate(docs,
+      val out = java.nio.file.Files.createTempDirectory("curate-lvl")
+        .toString
+      val r = CorpusPipeline.curateToParquet(docs, out,
         CorpusPipeline.Config(storageLevel = lvl))
-      val h = r.chunks
-        .select(xxhash64(r.chunks.columns.toIndexedSeq.map(col): _*)
+      val chunks = spark.read.parquet(out)
+      val h = chunks
+        .select(xxhash64(chunks.columns.toIndexedSeq.map(col): _*)
           .as("__h"))
         .agg(bit_xor(col("__h"))).collect()(0).getLong(0)
       (r.funnel, h)

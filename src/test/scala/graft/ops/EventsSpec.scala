@@ -283,20 +283,6 @@ class EventsSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Events.retention(re, 0L) }
   }
 
-  test("funnel: eager=false builds a lazy frame with identical rows") {
-    val stages = Seq("click", "view")
-    val eager = Events.funnel(ev, stages).orderBy("stage_idx")
-      .as[(Long, String, Long)].collect().toSeq
-    val lazyF = Events.funnel(ev, stages, eager = false)
-    // lazy mode must not have materialized anything at construction:
-    // the plan still contains the raw aggregation chain, not a
-    // checkpointed RDD scan
-    val p = lazyF.queryExecution.optimizedPlan.toString
-    assert(!p.contains("ExistingRDD") && !p.contains("LogicalRDD"), p)
-    assert(lazyF.orderBy("stage_idx")
-      .as[(Long, String, Long)].collect().toSeq == eager)
-  }
-
   test("retention: pre-1970 timestamps use FLOOR period math (sign-safe)") {
     val D = 24L * H // 1 day in ns
     // user 1's first event is 1ns BEFORE the epoch: truncate-toward-zero

@@ -54,7 +54,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("M6: bestRow picks global minimum") {
     val df = Seq(("a", 3.0), ("b", 1.0), ("c", 2.0)).toDF("job", "objective")
-    assert(Similarity.bestRow(df, "objective").head.getString(0) == "b")
+    assert(Similarity.bestRow(df, "objective").head().getString(0) == "b")
   }
 
   test("M7: withIteration assigns dense 1..n in order") {

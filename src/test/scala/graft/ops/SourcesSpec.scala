@@ -112,10 +112,10 @@ class SourcesSpec extends SparkSpec {
     assert(m.count() == 8)
     // manifest totals = corpus totals (every doc in exactly one shard)
     val totals = m.agg(org.apache.spark.sql.functions.sum("n_docs"),
-      org.apache.spark.sql.functions.sum("n_chars")).head
+      org.apache.spark.sql.functions.sum("n_chars")).head()
     assert(totals.getLong(0) == docs.count())
     assert(totals.getLong(1) == docs.agg(org.apache.spark.sql.functions
-      .sum(org.apache.spark.sql.functions.length(col("text")))).head.getLong(0))
+      .sum(org.apache.spark.sql.functions.length(col("text")))).head().getLong(0))
   }
 
   test("parquetLayoutAudit: footers account for every row and file; " +
@@ -186,7 +186,7 @@ class SourcesSpec extends SparkSpec {
       .createTempDirectory("graft-compact").toString
     li.repartition(16).write.parquet(s"$base/frag")
     val audit = Sources.parquetLayoutAudit(spark, s"$base/frag")
-    val total = audit.agg(fsum("compressed_bytes")).head.getLong(0)
+    val total = audit.agg(fsum("compressed_bytes")).head().getLong(0)
     val target = total / 3
     val plan = Sources.compactionPlan(audit, target)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -207,7 +207,7 @@ class SourcesSpec extends SparkSpec {
     }
     // execute: one rewrite task per group
     groups.foreach { case (g, fs) =>
-      spark.read.parquet(fs.map(f => s"$base/frag/${f._1}"): _*)
+      spark.read.parquet(fs.map(f => s"$base/frag/${f._1}").toIndexedSeq: _*)
         .coalesce(1).write.mode("append").parquet(s"$base/compacted")
     }
     assert(spark.read.parquet(s"$base/compacted").count() == li.count())
@@ -219,7 +219,7 @@ class SourcesSpec extends SparkSpec {
       "tiles BOTH dimensions where a 1-D sort bounds only its own") {
     import spark.implicits._
     val code = Seq((5L, 3L)).toDF("a", "b")
-      .select(Sources.zorderCode(col("a"), col("b"), 3)).head.getLong(0)
+      .select(Sources.zorderCode(col("a"), col("b"), 3)).head().getLong(0)
     assert(code == 27L) // 101 ⨯ 011 → 011011
     val li = Sources.table(spark, sf("sf0.001"), "lineitem")
     val base = java.nio.file.Files
@@ -234,7 +234,7 @@ class SourcesSpec extends SparkSpec {
     // a stats-pruning scan skip under each layout?
     def overlapping(dir: String): Long = {
       import org.apache.spark.sql.functions.{min, max}
-      val bounds = li.agg(min("l_partkey"), max("l_partkey")).head
+      val bounds = li.agg(min("l_partkey"), max("l_partkey")).head()
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
       val (bandLo, bandHi) = (lo + (hi - lo) * 2 / 5, lo + (hi - lo) * 3 / 5)
       Sources.parquetStatsAudit(spark, dir, Seq("l_partkey"))

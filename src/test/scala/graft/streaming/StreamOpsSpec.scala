@@ -882,8 +882,7 @@ class StreamOpsSpec extends SparkSpec {
     StreamOps.refreshExport(spark, atRest, cfg, weights, 200L, "rs", 8, 2) {
       m => refreshed = m.orderBy("shard").collect().toSeq }
     val r = CorpusPipeline.curate(
-      (b1 ++ b2).toDF("doc_id", "text", "lang", "source"), cfg,
-      collectFunnel = false)
+      (b1 ++ b2).toDF("doc_id", "text", "lang", "source"), cfg)
     val (_, bm) = CorpusPipeline.exportShards(r.survivors.get, weights,
       200L, "rs", 8, 2)
     val batchManifest = bm.orderBy("shard").collect().toSeq
