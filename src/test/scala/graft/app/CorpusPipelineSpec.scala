@@ -64,6 +64,24 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(r.funnel == curated(docs)._1.funnel)
   }
 
+  test("curate lazy mode: source scanned exactly once end-to-end") {
+    // curate has only the lazy evaluation mode. Spark plans are trees,
+    // not DAGs: without the gate persists the lazy chunk plan
+    // multiplied to ~120 source-scan references. With them,
+    // construction (the eager near-dedup fixpoint) fills the caches
+    // off ONE source scan and the chunk action reads caches.
+    val base = docs.collect().toSeq
+    val n = base.length
+    val acc = spark.sparkContext.longAccumulator("lazy-source-rows")
+    val src = spark.createDataFrame(
+      spark.sparkContext.parallelize(base, 4).map { r => acc.add(1); r },
+      docs.schema)
+    val r = CorpusPipeline.curate(src)
+    assert(r.chunks.count() > 0)
+    assert(acc.value == n, s"source scanned ${acc.value.toDouble / n}x, want 1x")
+    r.persisted.foreach(_.unpersist())
+  }
+
   test("curateToParquet: the funnel starts no job of its own") {
     // with the default config the jobs are the barriers' and the sink
     // write's; none has its call site in CorpusPipeline.scala (a count
