@@ -33,12 +33,14 @@ import graft.ops.{Barrier, Dedup, Sampling, Sources, Text}
   * bounded ×2 recompute saving.
   *
   * There is one evaluation path. The per-stage row counts (the funnel
-  * report) cost no job of their own: each stage carries an unnamed
-  * [[Observation]] counting the rows that flow through it, filled by
-  * whichever action first reads that frame — for a persisted frame the
-  * observation sits below the persist, so its count is taken once,
-  * when the cache fills. [[curateToParquet]] reads them after its sink
-  * write.
+  * report, [[curateToParquet]] only) cost no job of their own: there
+  * each stage carries an unnamed [[Observation]] counting the rows that
+  * flow through it, filled by whichever action first reads that frame —
+  * for a persisted frame the observation sits below the persist, so its
+  * count is taken once, when the cache fills. [[curate]]'s frames carry
+  * none: its callers never read a count, and an observed plan would
+  * neither match an earlier call's cached frames nor codegen across the
+  * observation.
   */
 object CorpusPipeline {
 
@@ -184,7 +186,7 @@ object CorpusPipeline {
     * `Result.persisted` — unpersist them when done, or prefer
     * [[curateToParquet]], which unpersists after the sink write. */
   def curate(docs: DataFrame, cfg: Config = Config()): Result =
-    curateFrames(docs, cfg)._1
+    curateFrames(docs, cfg, (_, df) => df)
 
   /** Funnel-to-training-shards EXPORT: the three individually
     * certified loader-side pieces composed behind one call over the
@@ -267,33 +269,40 @@ object CorpusPipeline {
     * Every funnel count is read from its stage's [[Observation]], which
     * the barriers and the sink write have filled: no count job, except
     * `packed_sequences` when `packSeqTokens` is set (the sink does not
-    * read the packed frame). */
+    * read the packed frame). The `chunks` count observes the written
+    * frame itself, so the write always runs it. */
   def curateToParquet(docs: DataFrame, outPath: String,
                       cfg: Config = Config()): Result = {
-    val (r, stages) = curateFrames(docs, cfg)
-    val withSource = r.chunks.join(
-      r.survivors.get.select(col("doc_id"), col("source")), Seq("doc_id"))
+    // the stages are built in funnel order, so the Observations are too
+    val stages = Seq.newBuilder[(String, DataFrame, Observation)]
+    def observed(stage: String, df: DataFrame): DataFrame = {
+      val o = Observation()
+      val tapped = df.observe(o, count(lit(1)).as("rows"))
+      stages += ((stage, tapped, o))
+      tapped
+    }
+    val r = curateFrames(docs, cfg, observed)
+    val withSource = observed("chunks", r.chunks.join(
+      r.survivors.get.select(col("doc_id"), col("source")), Seq("doc_id")))
     Sources.writeParquetPartitioned(withSource, outPath, Seq("source"))
-    // an Observation completes asynchronously, after the action that
-    // first read its frame has ended: `get` blocks until then
-    val funnel = stages.map { case (stage, o) =>
-        stage -> o.get("rows").asInstanceOf[Long] } ++
-      r.packed.map(p => "packed_sequences" -> p.count())
+    // An Observation completes asynchronously, after the action that
+    // first read its frame has ended: `get` blocks until then. It
+    // completes with an EMPTY row when that action planned the frame but
+    // never ran it (adaptive execution replaces a join that has an empty
+    // side by an empty relation); only such a stage is counted by a job.
+    val funnel = stages.result().map { case (stage, df, o) =>
+        stage -> o.get.get("rows").fold(df.count())(_.asInstanceOf[Long])
+      } ++ r.packed.map(p => "packed_sequences" -> p.count())
     r.persisted.foreach(_.unpersist())
     Result(r.chunks, funnel, packed = r.packed)
   }
 
-  /** The funnel's frames, plus one row-count [[Observation]] per stage
-    * in funnel order. */
-  private def curateFrames(docs: DataFrame, cfg: Config)
-      : (Result, Seq[(String, Observation)]) = {
-    // stages are built in funnel order, so the Observations are too
-    val stages = Seq.newBuilder[(String, Observation)]
-    def observed(stage: String, df: DataFrame): DataFrame = {
-      val o = Observation()
-      stages += stage -> o
-      df.observe(o, count(lit(1)).as("rows"))
-    }
+  /** The funnel's frames; `observed(stage, frame)` is applied to each
+    * stage's frame, in funnel order, and its result used in the frame's
+    * place (identity for [[curate]]). */
+  private def curateFrames(docs: DataFrame, cfg: Config,
+                           observed: (String, DataFrame) => DataFrame)
+      : Result = {
     val input = observed("input", docs)
 
     // optional PII scrub FIRST — before normalize, which strips the
@@ -522,8 +531,7 @@ object CorpusPipeline {
           .persist(cfg.storageLevel)
     }
 
-    val chunks = observed("chunks",
-      Text.chunk(spanScrubbed, "text", cfg.chunkTokens))
+    val chunks = Text.chunk(spanScrubbed, "text", cfg.chunkTokens)
     // optional packed-sequence consumer — reads the same persisted
     // survivor frame as the chunker; no extra funnel stages upstream
     val packed = cfg.packSeqTokens.map(l =>
@@ -539,10 +547,9 @@ object CorpusPipeline {
     val deconPersisted = if (decon ne near) Seq(decon) else Seq.empty
     val scrubPersisted =
       if (spanScrubbed ne decon) Seq(spanScrubbed) else Seq.empty
-    (Result(chunks, Seq.empty,
-        scrubPersisted ++ deconPersisted ++ Seq(near, shingled, exact,
-          normed) ++ gatePersisted,
-        packed, Some(spanScrubbed)),
-      stages.result())
+    Result(chunks, Seq.empty,
+      scrubPersisted ++ deconPersisted ++ Seq(near, shingled, exact,
+        normed) ++ gatePersisted,
+      packed, Some(spanScrubbed))
   }
 }

@@ -92,6 +92,31 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(own.isEmpty, own.mkString("\n"))
   }
 
+  test("curateToParquet: nothing survives the language gate, the funnel " +
+      "reads zeros") {
+    // every stage after the language gate runs on an empty frame; the
+    // sink's join over an empty side may be planned away, and the
+    // stages it reads first must still report their (zero) counts
+    val n = docs.count()
+    val nonEmpty = docs.filter(length(Text.normalize(col("text"))) > 0)
+      .count()
+    def funnel(cfg: CorpusPipeline.Config): Seq[(String, Long)] =
+      CorpusPipeline.curateToParquet(docs, java.nio.file.Files
+        .createTempDirectory("graft-curate-empty").toString, cfg).funnel
+    assert(funnel(CorpusPipeline.Config(keepLangs = Set("zz"))) == Seq(
+      "input" -> n, "normalized_non_empty" -> nonEmpty, "language" -> 0L,
+      "quality" -> 0L, "exact_dedup" -> 0L, "near_dedup" -> 0L,
+      "chunks" -> 0L))
+    val full = CorpusPipeline.Config(keepLangs = Set("zz"),
+      evalDocs = Some(docs.limit(3).select("doc_id", "text")),
+      scrubSpanK = Some(8), packSeqTokens = Some(32))
+    assert(funnel(full) == Seq(
+      "input" -> n, "normalized_non_empty" -> nonEmpty, "language" -> 0L,
+      "quality" -> 0L, "exact_dedup" -> 0L, "near_dedup" -> 0L,
+      "decontaminated" -> 0L, "span_scrub" -> 0L, "chunks" -> 0L,
+      "packed_sequences" -> 0L))
+  }
+
   test("curate: PII scrub and repetition gate drop what the base gates cannot see") {
     import spark.implicits._
     // long enough to pass the length gate (>= 10 tokens), English

@@ -834,6 +834,42 @@ class StreamOpsSpec extends SparkSpec {
       "never-in-stream cadence changed the final manifest")
   }
 
+  test("refreshExport: repeated refreshes over one at-rest set agree, and " +
+      "the curate plans they read carry no Observation") {
+    import graft.app.CorpusPipeline
+    import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+    val cfg = CorpusPipeline.Config(minQuality = 0.0, jaccardTau = 0.9,
+      chunkTokens = 8)
+    val atRest = java.nio.file.Files
+      .createTempDirectory("graft_export_refresh").toString
+    Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the barn",
+        "en", "s0"),
+      (2L, "a tall ship sails across the wide ocean while sailors watch",
+        "en", "s1"),
+      (3L, "the old library keeps a rare map of ancient roads and trade",
+        "en", "s0")).toDF("doc_id", "text", "lang", "source")
+      .write.mode("overwrite").parquet(atRest)
+    // the at-least-once stream calls this once per micro-batch: an
+    // Observation in the plan would register per call and, where its
+    // frame never runs, never complete
+    val refreshes = Seq.fill(3) {
+      var rows: Seq[org.apache.spark.sql.Row] = Seq.empty
+      var observed = true
+      StreamOps.refreshExport(spark, atRest, cfg,
+          Map("s0" -> 0.5, "s1" -> 0.5), 200L, "rs", 8, 2) { m =>
+        observed = m.queryExecution.logical
+          .find(_.isInstanceOf[CollectMetrics]).isDefined
+        rows = m.orderBy("shard").collect().toSeq
+      }
+      (rows, observed)
+    }
+    assert(refreshes.head._1.nonEmpty)
+    assert(refreshes.map(_._1).distinct.size == 1,
+      "repeated refreshes over one at-rest set disagree")
+    assert(!refreshes.exists(_._2), "curate's plan carries an Observation")
+  }
+
   test("exportStream kill/recover: a checkpointed restart converges the " +
       "at-rest set and final manifest to the one-shot batch export — " +
       "the idempotent batchId landing under an ACTUAL restart") {
