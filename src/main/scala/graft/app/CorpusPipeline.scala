@@ -170,7 +170,7 @@ object CorpusPipeline {
     * (doc_id, text, lang, source); `funnel` comes back empty (see
     * [[curateToParquet]] for the report).
     *
-    * Lazy but for the barriers: the near-dedup fixpoint runs AT THE
+    * Lazy but for the barriers: near-dedup clustering runs AT THE
     * CALL ([[graft.ops.Barrier]] is eager; see README's API
     * conventions), and so does one survivor-id barrier per
     * corpus-aggregation gate (percentile, boilerplate, perplexity) —
@@ -518,7 +518,7 @@ object CorpusPipeline {
     // optional repeated-span scrub: rewrite survivor text, removing
     // k-token spans whose first occurrence lives elsewhere in the
     // surviving corpus; docs scrubbed to nothing drop. Eager (the op's
-    // internal barrier), like the near-dedup fixpoint before it; reads
+    // internal barrier), like near-dedup clustering before it; reads
     // the persisted survivor frame once. The scrubbed frame persists
     // because chunking, packing and the sink's source join all read it.
     val spanScrubbed = cfg.scrubSpanK match {

@@ -37,10 +37,12 @@ import org.apache.spark.storage.StorageLevel
   * deletes out-of-scope reliable checkpoint files ONLY when
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
   * false — the conf is read at SparkContext creation). Long-running
-  * fixpoints ([[Dedup.nearDupClusters]]) write one checkpoint per
-  * round, so set that conf (or point the checkpoint dir at storage you
-  * clear between runs) on multi-hour production sessions; otherwise
-  * checkpoint storage grows with iteration count until the app exits.
+  * fixpoints write checkpoints per round ([[Graph]]'s PageRank one,
+  * [[Dedup.nearDupClusters]] two once its edge list is over the driver
+  * budget), so set that conf (or point the checkpoint dir at storage
+  * you clear between runs) on multi-hour production sessions;
+  * otherwise checkpoint storage grows with iteration count until the
+  * app exits.
   */
 object Barrier {
 

@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for LLM-training-data pipelines (SURVEY.md
   * §7.4): exact (content-hash groupBy), MinHash+LSH near-dup, SimHash
@@ -802,47 +806,115 @@ object Dedup {
     * of a component when only (b,c) and (a,c) verified — clustering
     * keeps exactly min(a,b,c); DedupSpec contrasts them).
     *
-    * Algorithm: iterative min-label propagation with path halving.
-    * Labels start as the vertex id; each round every vertex takes the
-    * min of its own and its neighbors' labels, then jumps to its
-    * label's label (labels only decrease and always name a component
-    * member, so the jump stays inside the component). The jump halves
-    * pointer-chain depth each round, so rounds needed are
-    * O(log diameter) — web-scale dup chains (shingle drift) converge
-    * in a handful of rounds where plain propagation would need
-    * diameter rounds. Stops when no label changed; throws if `maxIters`
-    * rounds pass without convergence (non-minimal labels would silently
-    * break the cluster contract downstream).
+    * Two paths, one answer. The edge list (both directions of each
+    * pair) passes a [[Barrier]] first, then one bounded probe
+    * `limit(2·B + 1).collect()` decides, with B = 2^18 undirected
+    * pairs:
     *
-    * Scale posture: per round, one hash join of labels onto the edge
-    * list keyed on vertex id + one min-groupBy — both shuffle only the
-    * (vertex, label) pairs, never document contents. Labels pass a
-    * [[Barrier]] each round: the convergence action doesn't recompute
-    * the chain, lineage doesn't double per iteration, and in LOCAL
-    * checkpoint mode out-of-scope round RDDs are reclaimed by the
-    * ContextCleaner. With a checkpoint directory set the barriers are
-    * RELIABLE checkpoints — a lost executor on a multi-hour cluster run
-    * recomputes nothing (set one for production dedup; the
-    * executor-local fallback dies with the executor) — but reliable
+    *  - the probe fits (≤ 2·B directed edges) → union-find on the
+    *    driver, returned as a local frame: no further job. Driver heap
+    *    at the bound: 2^19 collected rows × ~200 B (the row, its two
+    *    boxed ids or short strings, the vertex index entry) ≈ 100 MB.
+    *    Each root links to the smaller one, compared as Spark's `min`
+    *    compares the id type: integral ids numerically, strings in
+    *    UTF-8 byte order (not `String.compareTo`, which orders UTF-16
+    *    units: U+FFFD vs U+1F600 flip). Any other id type takes the
+    *    distributed path.
+    *  - the edge list is over the budget (or the id type is not one the
+    *    driver orders) → iterative min-label propagation with path
+    *    halving. Labels start as the vertex id; each round every vertex
+    *    takes the min of its own and its neighbors' labels, then jumps
+    *    to its label's label (labels only decrease and always name a
+    *    component member, so the jump stays inside the component). The
+    *    jump halves pointer-chain depth each round, so rounds needed are
+    *    O(log diameter). Stops when no label changed; throws if
+    *    `maxIters` rounds pass without convergence (non-minimal labels
+    *    would silently break the cluster contract downstream).
+    *    `maxIters` bounds these rounds only; the driver path has none.
+    *
+    * Scale posture of the rounds: per round, one hash join of labels
+    * onto the edge list keyed on vertex id + one min-groupBy — both
+    * shuffle only the (vertex, label) pairs, never document contents.
+    * Labels pass two [[Barrier]]s and one tiny convergence action per
+    * round. With a checkpoint directory set the barriers are RELIABLE
+    * checkpoints (a lost executor recomputes nothing), but reliable
     * checkpoint FILES of superseded rounds are deleted only when
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
-    * false; read at context creation): set it, or budget checkpoint
-    * storage ∝ rounds — see the [[Barrier]] scaladoc.
-    * The convergence check is one tiny action per round on a
-    * |vertices|-row frame — the standard trade for a data-dependent
-    * fixpoint. */
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` — see the
+    * [[Barrier]] scaladoc. Reference for finishing in memory once the
+    * graph fits: Kiveris et al., "Connected Components in MapReduce and
+    * Beyond" (SoCC 2014). */
   def nearDupClusters(verifiedPairs: DataFrame, idCol: String,
-                      maxIters: Int = 30): DataFrame = {
+                      maxIters: Int = 30): DataFrame =
+    nearDupClusters(verifiedPairs, idCol, maxIters, DriverEdgeBudget)
+
+  /** Undirected pairs the driver path of [[nearDupClusters]] takes. */
+  private val DriverEdgeBudget = 1 << 18
+
+  /** [[nearDupClusters]] with the driver budget as a parameter: 0 sends
+    * any non-empty edge list to the distributed rounds. */
+  private[graft] def nearDupClusters(verifiedPairs: DataFrame, idCol: String,
+                                     maxIters: Int,
+                                     edgeBudget: Int): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     // undirected: propagate across the edge in both directions.
-    // Checkpointed FIRST: the edge list joins into every round, and
-    // without the barrier each iteration would recompute the whole
-    // upstream pipeline that produced the pairs (for the q51 wiring
-    // that's the full MinHash→LSH→Jaccard chain — measured 5x the
-    // entire query cost at sf0.1).
+    // Checkpointed FIRST: the probe and every round read the edge list,
+    // and without the barrier each would recompute the whole upstream
+    // pipeline that produced the pairs (for the q51 wiring that's the
+    // full MinHash→LSH→Jaccard chain — measured 5x the entire query
+    // cost at sf0.1).
     val edges = Barrier.cut(
       verifiedPairs.select(col("id_a").as("__src"), col("id_b").as("__dst"))
         .union(verifiedPairs.select(col("id_b").as("__src"), col("id_a").as("__dst"))))
+    val id = edges.schema("__src")
+    val probe = driverOrdering(id.dataType)
+      .map(ord => (ord, edges.limit(2 * edgeBudget + 1).collect()))
+    probe match {
+      case Some((ord, fits)) if fits.length <= 2 * edgeBudget =>
+        edges.sparkSession.createDataFrame(unionFind(fits, ord).asJava,
+          new StructType().add(idCol, id.dataType, id.nullable)
+            .add("cluster_rep", id.dataType, id.nullable))
+      case _ => labelRounds(edges, idCol, maxIters)
+    }
+  }
+
+  /** How Spark's `min` orders an id type, where the driver can replay
+    * it exactly: integral types numerically, UTF8_BINARY strings by
+    * their UTF-8 bytes. */
+  private def driverOrdering(dt: DataType): Option[Ordering[Any]] = dt match {
+    case LongType | IntegerType | ShortType | ByteType =>
+      Some(Ordering.by((v: Any) => v.asInstanceOf[Number].longValue))
+    case s: StringType if s.collationId == StringType.collationId =>
+      Some(Ordering.fromLessThan[UTF8String](_.binaryCompare(_) < 0)
+        .on((v: Any) => UTF8String.fromString(v.asInstanceOf[String])))
+    case _ => None
+  }
+
+  /** (vertex, component minimum) for every vertex of the (__src, __dst)
+    * edges, by union-find over the vertices ranked in `ord`: each root
+    * links to the smaller rank, so a root is its component's minimum.
+    * An edge with a null end joins nothing, as in the rounds' joins. */
+  private def unionFind(edges: Array[Row], ord: Ordering[Any]): Seq[Row] = {
+    val live = edges.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val ids = live.flatMap(r => Array(r.get(0), r.get(1))).distinct.sorted(ord)
+    val rank = ids.iterator.zipWithIndex.toMap
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    live.foreach { r =>
+      val a = find(rank(r.get(0)))
+      val b = find(rank(r.get(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    ids.indices.map(i => Row(ids(i), ids(find(i))))
+  }
+
+  /** The distributed path of [[nearDupClusters]]: min-label propagation
+    * rounds with path halving over the checkpointed edge list. */
+  private def labelRounds(edges: DataFrame, idCol: String,
+                          maxIters: Int): DataFrame = {
     var labels = Barrier.cut(edges.select(col("__src").as("__v")).distinct()
       .withColumn("__lbl", col("__v")))
     // one propagation round: (next labels, did any label change)
@@ -1195,7 +1267,6 @@ object Dedup {
     * plane; weights computed once driver-side (see [[srpBuckets]]). */
   private def srpBucketExpr(dim: Int, vecCol: String,
                             planes: Int, planeOffset: Int): Column = {
-    import org.apache.spark.unsafe.types.UTF8String
     val weights: Seq[Seq[Double]] = (0 until planes).map { p =>
       (1 to dim).map { i =>
         val h = graft.functions.Hash60.compute(Array(

@@ -272,11 +272,13 @@ object Er {
     * frame. Unmatched names are their own canonical (n_variants = 1).
     *
     * 100 TB posture: every stage is vocab-bounded — candidate pairs
-    * from the loss-free segment join, components via the same
-    * path-halving label propagation the near-dup clusterer uses
-    * ([[Dedup.nearDupClusters]]; checkpoint-barriered, ~log2(diameter)
-    * rounds), survivorship one agg + one window over the distinct-name
-    * frame. The row frame is touched only by the caller's final join.
+    * from the loss-free segment join, components via the near-dup
+    * clusterer ([[Dedup.nearDupClusters]]: union-find on the driver
+    * while the match graph fits its edge budget, checkpoint-barriered
+    * path-halving rounds past it; names compare in UTF-8 byte order, as
+    * Spark's `min` does), survivorship one agg + one window over the
+    * distinct-name frame. The row frame is touched only by the caller's
+    * final join.
     *
     * Inherits [[editJoin]]'s candidate-mass pre-flight: over budget it
     * throws unless `autoSample = true`, in which case the match graph

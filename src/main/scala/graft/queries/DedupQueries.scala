@@ -488,7 +488,8 @@ private[graft] object DedupQueries {
          |ORDER BY d.doc_id""".stripMargin),
 
     // Near-dup cluster-representative table: connected components (min-id
-    // label propagation to fixpoint) over the Jaccard-verified pair list —
+    // labels; union-find on the driver within its edge budget, label
+    // propagation to fixpoint past it) over the Jaccard-verified pair list —
     // the transitive complement of q43's greedy drop policy.
     Query("q51_near_dup_clusters", (s, dir) => {
       Dedup.nearDupClusters(lshPairs(s, dir), "doc_id")

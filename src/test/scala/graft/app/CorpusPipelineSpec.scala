@@ -92,6 +92,22 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(own.isEmpty, own.mkString("\n"))
   }
 
+  test("curateToParquet: near-dup clusters finish on the driver, with no " +
+      "round counts and fewer barrier calls") {
+    // the verified pairs fit the driver budget, so nearDupClusters
+    // makes its edge cut and one probe, and no propagation round (two
+    // barriers and a convergence count each). With the rounds, this
+    // fixture made 4 round counts, 11 barrier calls and 39 barrier
+    // jobs. A job's result-stage name counts one job per barrier CALL;
+    // the bracketed execution site counts every job of the barrier.
+    val sites = jobSites("curate-cc") { curated(docs) }
+    val counts = sites.filter(_.contains("count at Dedup.scala"))
+    assert(counts.isEmpty, counts.mkString("\n"))
+    val barrier = "localCheckpoint at Barrier.scala"
+    assert(sites.count(_.startsWith(barrier)) < 11, sites.mkString("\n"))
+    assert(sites.count(_.contains(barrier)) < 39, sites.mkString("\n"))
+  }
+
   test("curateToParquet: nothing survives the language gate, the funnel " +
       "reads zeros") {
     // every stage after the language gate runs on an empty frame; the

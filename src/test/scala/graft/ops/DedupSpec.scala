@@ -1,7 +1,10 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -66,13 +69,28 @@ class DedupSpec extends SparkSpec {
     assert((all -- survivors).forall(d => survivors.exists(_ < d)))
   }
 
+  /** [[Dedup.nearDupClusters]] on both paths — the distributed rounds
+    * (driver budget 0) and the driver's union-find (the default budget,
+    * answered as a local frame) — asserting they agree on the id type
+    * and on every row; returns the driver path's frame. */
+  private def bothPaths(pairs: DataFrame, idCol: String = "doc_id",
+                        maxIters: Int = 30): DataFrame = {
+    val rounds = Dedup.nearDupClusters(pairs, idCol, maxIters, 0)
+    val driver = Dedup.nearDupClusters(pairs, idCol, maxIters)
+    assert(driver.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(driver.schema.map(f => (f.name, f.dataType)) ==
+      rounds.schema.map(f => (f.name, f.dataType)))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    assert(rows(driver) == rows(rounds))
+    driver
+  }
+
   test("nearDupClusters: transitive min-id labels; fixpoint past one hop") {
     // chain 1-2-3-4 (diameter 3: needs >1 propagation round) + pair 10-11
     // + isolated vertex never in an edge (absent from the output)
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val labels = Dedup.nearDupClusters(pairs, "doc_id")
-      .as[(Long, Long)].collect().toMap
+    val labels = bothPaths(pairs).as[(Long, Long)].collect().toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L))
   }
@@ -81,8 +99,7 @@ class DedupSpec extends SparkSpec {
     // 60-vertex chain: plain propagation needs 59 rounds — far past the
     // maxIters=8 given here; path halving converges within it
     val chain = (0L until 59L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = Dedup.nearDupClusters(chain, "doc_id", maxIters = 8)
-      .as[(Long, Long)].collect()
+    val labels = bothPaths(chain, maxIters = 8).as[(Long, Long)].collect()
     assert(labels.length == 60)
     assert(labels.forall(_._2 == 0L))
   }
@@ -90,16 +107,16 @@ class DedupSpec extends SparkSpec {
   test("nearDupClusters: reliable-checkpoint mode (checkpoint dir set) is identical") {
     // with a checkpoint dir the fixpoint's barriers become RELIABLE
     // checkpoints (cluster-grade: survives executor loss); labels must
-    // be bit-identical to the executor-local default
+    // be bit-identical to the executor-local default. Budget 0: the
+    // distributed rounds, where the barriers are.
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val local = Dedup.nearDupClusters(pairs, "doc_id")
-      .as[(Long, Long)].collect().sorted.toSeq
+    val local = bothPaths(pairs).as[(Long, Long)].collect().sorted.toSeq
     val sc = spark.sparkContext
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
     try {
       sc.setCheckpointDir(dir.toString)
-      val reliable = Dedup.nearDupClusters(pairs, "doc_id")
+      val reliable = Dedup.nearDupClusters(pairs, "doc_id", 30, 0)
         .as[(Long, Long)].collect().sorted.toSeq
       assert(reliable == local)
       // the reliable store was actually written (checkpoint() ran, not
@@ -109,6 +126,53 @@ class DedupSpec extends SparkSpec {
         else Option(f.listFiles).toSeq.flatten.flatMap(rddDirs)
       assert(rddDirs(dir.toFile).nonEmpty, s"no rdd checkpoints under $dir")
     } finally org.apache.spark.GraftCheckpointBridge.set(sc, None)
+  }
+
+  test("nearDupClusters: seeded random chains, stars and pairs agree on both paths") {
+    // components of three shapes over shuffled ids, so a component's
+    // minimum sits anywhere in it: chains (long diameter), stars (one
+    // hub of high degree) and isolated pairs; a few hundred edges
+    val rng = new scala.util.Random(17)
+    val ids = rng.shuffle((1L to 2000L).toVector).iterator
+    val comps = Seq.fill(12)(Vector.fill(2 + rng.nextInt(30))(ids.next())) ++
+      Seq.fill(8)(Vector.fill(2 + rng.nextInt(25))(ids.next())) ++
+      Seq.fill(40)(Vector.fill(2)(ids.next()))
+    val chains = comps.take(12).flatMap(c => c.zip(c.tail))
+    val stars = comps.slice(12, 20).flatMap(c => c.tail.map(c.head -> _))
+    val pairs = comps.drop(20).map(c => (c(0), c(1)))
+    val edges = rng.shuffle(chains ++ stars ++ pairs)
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+    assert(edges.length > 200)
+    val labels = bothPaths(edges.toDF("id_a", "id_b"))
+      .as[(Long, Long)].collect().toMap
+    val want = comps.flatMap(c => c.map(_ -> c.min)).toMap
+    assert(labels == want)
+  }
+
+  test("nearDupClusters: an empty pair list gives an empty frame of the id type") {
+    val none = bothPaths(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    assert(none.isEmpty)
+    assert(none.schema.map(_.dataType) == Seq(LongType, LongType))
+    val noNames = bothPaths(Seq.empty[(String, String)].toDF("id_a", "id_b"),
+      "name")
+    assert(noNames.isEmpty)
+    assert(noNames.columns.toSeq == Seq("name", "cluster_rep"))
+    assert(noNames.schema.map(_.dataType) == Seq(StringType, StringType))
+  }
+
+  test("nearDupClusters: string reps are Spark's min, in UTF-8 byte order") {
+    // U+FFFD < U+1F600 as code points and as UTF-8 bytes (EF BF BD vs
+    // F0 9F 98 80), but the emoji's UTF-16 lead surrogate (D83D) sorts
+    // below FFFD, so String.compareTo picks the emoji
+    val (fffd, emoji) = ("\uFFFD", "\uD83D\uDE00")
+    assert(emoji.compareTo(fffd) < 0)
+    val pairs = Seq((fffd, emoji), ("b", "a")).toDF("id_a", "id_b")
+    val sparkMin = Seq(fffd, emoji).toDF("name")
+      .agg(min($"name")).as[String].head()
+    assert(sparkMin == fffd)
+    val labels = bothPaths(pairs, "name").as[(String, String)].collect().toMap
+    assert(labels == Map(fffd -> sparkMin, emoji -> sparkMin,
+      "a" -> "a", "b" -> "a"))
   }
 
   test("Barrier.cut reliable mode materializes the source exactly ONCE") {
@@ -144,8 +208,7 @@ class DedupSpec extends SparkSpec {
     val greedySurvivors = Set(1L, 2L, 3L) --
       pairs.select("id_b").as[Long].collect().toSet
     assert(greedySurvivors == Set(1L, 2L))
-    val labels = Dedup.nearDupClusters(pairs, "doc_id")
-      .as[(Long, Long)].collect().toMap
+    val labels = bothPaths(pairs).as[(Long, Long)].collect().toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
     assert(labels.values.toSet.size == 1) // exactly one rep for the component
   }
@@ -503,7 +566,7 @@ class DedupSpec extends SparkSpec {
     val docs = Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")
     // component {1,2,3} via pairs (1,2),(2,3); 4 and 5 unpaired
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val clusters = Dedup.nearDupClusters(pairs, "doc_id")
+    val clusters = bothPaths(pairs)
     val r = Dedup.softDedupWeights(docs, "doc_id", clusters)
       .as[(Long, Long, Long, Double)].collect()
       .map(x => x._1 -> ((x._2, x._3, x._4))).toMap
@@ -520,7 +583,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "source")
     // one cluster {1,2,3} (rep 1) spanning sources a and b
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val clusters = Dedup.nearDupClusters(pairs, "doc_id")
+    val clusters = bothPaths(pairs)
     val r = Dedup.dupStats(docs, "doc_id", "source", clusters)
       .select($"source", $"n_docs", $"n_dup_docs", $"n_post_dedup",
         $"dup_rate")
@@ -538,7 +601,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "score")
     // component {1,2,3}: 2 and 3 tie at 0.9 -> 2 survives; 4,5 singletons
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val clusters = Dedup.nearDupClusters(pairs, "doc_id")
+    val clusters = bothPaths(pairs)
     val r = Dedup.dedupNearClusteredBest(docs, "doc_id", "score", clusters)
       .select($"doc_id", $"cluster_rep").as[(Long, Long)].collect().toMap
     assert(r == Map(2L -> 1L, 4L -> 4L, 5L -> 5L))
@@ -547,7 +610,7 @@ class DedupSpec extends SparkSpec {
   test("leakageFreeSplit: clusters never straddle; frac 0/1 degenerate; md5 rule") {
     val docs = Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val clusters = Dedup.nearDupClusters(pairs, "doc_id")
+    val clusters = bothPaths(pairs)
     val r = Dedup.leakageFreeSplit(docs, "doc_id", clusters, 0.25)
       .as[(Long, Long, String)].collect().map(x => x._1 -> ((x._2, x._3))).toMap
     assert(r.keySet == Set(1L, 2L, 3L, 4L, 5L))
