@@ -335,18 +335,25 @@ object CorpusPipeline {
     // this frame — unpersisted, the chunk plan multiplied to ~120
     // SOURCE SCANS (measured at sf0.01; one scan with the persist,
     // accumulator-spec-pinned).
-    // `__t` rides a lower projection so the gram HOF's element_at
-    // references share ONE split (the fingerprints trap); it is NOT
-    // part of the persisted schema.
+    // The normalized text is fenced with [[graft.functions.Stable]]:
+    // otherwise Catalyst pushes the non-empty filter below this
+    // projection, and the pushed predicate normalizes every row a
+    // second time. `__t` and `__s` ride a lower projection so that the
+    // gram HOF's element_at references share ONE split (the fingerprints
+    // trap) and both gate columns read ONE
+    // [[graft.functions.TextSignals]] pass; neither is part of the
+    // persisted schema.
     val normedBase = scrubbed.select(col("doc_id"),
-        Text.normalize(col("text")).as("text"), col("lang"), col("source"))
+        graft.functions.Stable.col(Text.normalize(col("text"))).as("text"),
+        col("lang"), col("source"))
       .filter(length(col("text")) > 0)
     val gateCols = Seq(
-        Text.langIdTextColumn(col("text")).as("__pred_lang"),
-        Text.qualityScoreColumn(col("text")).as("__q")) ++
+        Text.langOf(col("__s")).as("__pred_lang"),
+        Text.qualityScoreOf(col("__s")).as("__q")) ++
       cfg.maxDupNgramRatio.map(_ =>
         Text.dupNgramRatioFromGrams(col("__g")).as("__dup")).toSeq
     val withToks = normedBase.withColumn("__t", Text.tokens(col("text")))
+      .withColumn("__s", graft.functions.TextSignals.col(col("text")))
     val withGrams = cfg.maxDupNgramRatio match {
       case None => withToks
       case Some(_) => withToks.withColumn("__g",

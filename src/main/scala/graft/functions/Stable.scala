@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.DataType
   * on a projected column is pushed below the `Project` by substituting
   * the column's FULL defining expression into the predicate, and
   * `CollapseProject` inlines aliases into consumers — so an expensive
-  * per-row kernel (the language-ID fold, the quality-score composite)
+  * per-row kernel (normalization, the language-ID and quality signals)
   * referenced by a gate filter is evaluated once for the pushed-down
   * predicate and AGAIN for the surviving row's projection. On the
   * streaming curate chain, where no cache can sit between the gates,

@@ -808,8 +808,8 @@ object Dedup {
     *
     * Two paths, one answer. The edge list (both directions of each
     * pair) passes a [[Barrier]] first, then one bounded probe
-    * `limit(2·B + 1).collect()` decides, with B = 2^18 undirected
-    * pairs:
+    * `coalesce(1).limit(2·B + 1).collect()` (one job) decides, with
+    * B = 2^18 undirected pairs:
     *
     *  - the probe fits (≤ 2·B directed edges) → union-find on the
     *    driver, returned as a local frame: no further job. Driver heap
@@ -866,8 +866,11 @@ object Dedup {
       verifiedPairs.select(col("id_a").as("__src"), col("id_b").as("__dst"))
         .union(verifiedPairs.select(col("id_b").as("__src"), col("id_a").as("__dst"))))
     val id = edges.schema("__src")
+    // read through one partition, so the probe is one job: over the
+    // checkpoint's own partitions the limit scans the first one, then
+    // scales up to the rest in a second job
     val probe = driverOrdering(id.dataType)
-      .map(ord => (ord, edges.limit(2 * edgeBudget + 1).collect()))
+      .map(ord => (ord, edges.coalesce(1).limit(2 * edgeBudget + 1).collect()))
     probe match {
       case Some((ord, fits)) if fits.length <= 2 * edgeBudget =>
         edges.sparkSession.createDataFrame(unionFind(fits, ord).asJava,

@@ -85,8 +85,13 @@ object Text {
     * funnel's quality gate computes it once into its persisted frame
     * and filters on the stored value; no join, no second projection).
     * TextSpec pins it equal to `qualityScore(df, c)("quality_score")`. */
-  def qualityScoreColumn(t: Column): Column = {
-    val (nT, nC, aC, dC, sC, ok) = qualityCounts(t)
+  def qualityScoreColumn(t: Column): Column =
+    qualityScoreOf(graft.functions.TextSignals.col(t))
+
+  /** [[qualityScoreColumn]] over a [[graft.functions.TextSignals]]
+    * struct — lets the funnel compute the struct once per row. */
+  private[graft] def qualityScoreOf(signals: Column): Column = {
+    val (nT, nC, aC, dC, sC, ok) = qualityCounts(signals)
     // score = 0.4·ok + 0.3·a/L + 0.2·s/T + 0.1·(L−d)/L with cleared
     // denominators — (4·ok·L·T + 3·a·T + 2·s·L + (L−d)·T)/(10·L·T) —
     // so the composite is ONE exact integral division, clamped in
@@ -105,21 +110,19 @@ object Text {
     when(nC > 0 && nT > 0, s9.cast("double") / lit(1e9))
   }
 
-  /** The counts the quality score is built from: tokens, chars, alpha
-    * chars, digit chars, stopword hits, and the 10..1000-token length
-    * flag (1/0). */
+  /** The counts the quality score is built from — tokens, chars, alpha
+    * chars (`[a-z A-Z]`, the space included), digit chars, stopword hits,
+    * and the 10..1000-token length flag (1/0) — read off one
+    * [[graft.functions.TextSignals]] struct. A NULL document has NULL
+    * counts, except its token count, which is `size(NULL)`: NULL under
+    * ANSI, −1 without. */
   private def qualityCounts(
-      t: Column): (Column, Column, Column, Column, Column, Column) = {
-    val nT = size(tokens(t)).cast("long")
-    val nC = length(t).cast("long")
-    val aC = nC - length(regexp_replace(t, "[a-z A-Z]", "")).cast("long")
-    val dC = nC - length(regexp_replace(t, "[0-9]", "")).cast("long")
-    // stopword hits via one codegen'd regex segment scan instead of the
-    // interpreted filter-isin HOF — value-identical ([[segmentHits]]),
-    // and this op runs on every curation gate's hot path
-    val sC = segmentHits(t, EnStopwords)
+      s: Column): (Column, Column, Column, Column, Column, Column) = {
+    val nT = coalesce(s.getField("n_tokens"),
+      size(lit(null).cast("array<string>")).cast("long"))
     val ok = when(nT >= 10 && nT <= 1000, lit(1L)).otherwise(lit(0L))
-    (nT, nC, aC, dC, sC, ok)
+    (nT, s.getField("n_chars"), s.getField("n_alpha"),
+      s.getField("n_digit"), s.getField("n_stop"), ok)
   }
 
   /** [[repetitionStats]]'s `dup_ngram_ratio` as ONE scalar column over
@@ -149,8 +152,8 @@ object Text {
     * a corpus-sized join back to the metadata. */
   def qualityScore(df: DataFrame, textCol: String,
                    keep: Seq[String]): DataFrame = {
-    val t = col(textCol)
-    val (nT, nC, aC, dC, sC, ok) = qualityCounts(t)
+    val sig = graft.functions.TextSignals.col(col(textCol))
+    val (nT, nC, aC, dC, sC, ok) = qualityCounts(sig)
     // ratios guard their denominators like the score does: this is a
     // public operator run over raw documents, empties included
     df.select(col("doc_id") +: keep.map(col) ++: Seq(
@@ -159,7 +162,7 @@ object Text {
       when(nC > 0, Portable.intRatio9(dC, nC)).as("digit_ratio"),
       when(nT > 0, Portable.intRatio9(sC, nT)).as("stopword_ratio"),
       ok.as("len_ok"),
-      qualityScoreColumn(t).as("quality_score")): _*)
+      qualityScoreOf(sig).as("quality_score")): _*)
   }
 
   /** Stopword profile per language for the n-gram/stopword language-ID
@@ -203,40 +206,18 @@ object Text {
         col("lang"))
   }
 
-  /** Count of `split(text, " ")` segments exactly equal to one of
-    * `words`, as a pure codegen'd expression: a segment equals w iff
-    * the padded string `' ' + text + ' '` contains `' w '` at that
-    * position, so `regexp_count` with space lookarounds counts EXACT
-    * token membership — for ANY text, not just normalized text
-    * (consecutive spaces make empty segments, which no non-empty word
-    * matches; a tab or newline glued to a word fails the lookaround
-    * exactly as it fails `==`). Replaces the interpreted
-    * `size(filter(toks, isin))` HOF — one native regex scan of the
-    * string instead of an array traversal + array allocation per call
-    * (the r15 streaming-gate measurement: the 5-language HOF fold
-    * alone cost 1.5 s over the sf0.1 corpus). `words` must be
-    * non-empty, space-free and regex-meta-free (the profile/stopword
-    * lists are). */
-  private[graft] def segmentHits(text: Column, words: Seq[String]): Column =
-    regexp_count(concat(lit(" "), text, lit(" ")),
-      lit(words.mkString("(?<= )(", "|", ")(?= )"))).cast("long")
+  /** Map-only TEXT form of [[languageId]]: the profile hits of every
+    * `split(text, " ")` segment and their argmax (count DESC, lang ASC,
+    * 'und' when no profile word occurs), counted in the one byte pass of
+    * [[graft.functions.TextSignals]]. TextSpec pins equality with the
+    * relational form on the full fixture corpus. */
+  def langIdTextColumn(text: Column): Column =
+    langOf(graft.functions.TextSignals.col(text))
 
-  /** Map-only TEXT form of [[languageId]] — hit counts via
-    * [[segmentHits]] (one codegen'd regex scan per profile language);
-    * the argmax folds in ascending language order with a strict `>`,
-    * which reproduces [[languageId]]'s (count DESC, lang ASC) tiebreak
-    * and its 'und' fallback exactly (TextSpec pins equality on the
-    * full fixture corpus). */
-  def langIdTextColumn(text: Column): Column = {
-    val byLang = LangProfile.groupBy(_._1).view
-      .mapValues(_.map(_._2)).toSeq.sortBy(_._1)
-    byLang.foldLeft(struct(lit(0L).as("n"), lit("und").as("l"))) {
-      case (acc, (lg, ws)) =>
-        val n = segmentHits(text, ws)
-        when(n > acc.getField("n"),
-          struct(n.as("n"), lit(lg).as("l"))).otherwise(acc)
-    }.getField("l")
-  }
+  /** [[langIdTextColumn]] over a [[graft.functions.TextSignals]] struct
+    * ('und' for a NULL document). */
+  private[graft] def langOf(signals: Column): Column =
+    coalesce(signals.getField("lang"), lit("und"))
 
   /** Map-only column form of [[languageId]] — the STREAM-SAFE language
     * gate: no explode, no aggregation, no window, so it runs inside a
@@ -250,32 +231,30 @@ object Text {
   def langIdColumn(toks: Column): Column =
     langIdTextColumn(array_join(toks, " "))
 
-  /** C4-style text normalization: lowercase, non-alphanumeric → space,
-    * collapse space runs, trim. Pure per-row scalar chain (map-only),
-    * identical regex semantics in the DuckDB oracle (its regexp_replace
-    * needs the 'g' flag; Spark's replaces all matches by default). */
+  /** C4-style text normalization: Spark's `lower`, then the
+    * `[a-z0-9]+` runs joined by single spaces
+    * ([[graft.functions.AsciiFold]], one byte pass) — byte-identical to
+    * the regex chain `trim(regexp_replace(regexp_replace(lower(t),
+    * "[^a-z0-9 ]", " "), " +", " "))`, which the DuckDB oracle runs
+    * (its regexp_replace needs the 'g' flag) and TextSpec keeps as the
+    * reference. Map-only. */
   def normalize(text: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(lower(text), "[^a-z0-9 ]", " "), " +", " "))
+    graft.functions.AsciiFold.col(lower(text))
 
   /** Token-budget document chunking — the training-data step that turns
     * documents into ≤ chunkTokens-token training rows on whitespace
-    * boundaries. Per-row array expression (tokens materialized once in
-    * their own projection — no re-split per chunk), chunks exploded to
+    * boundaries. Tokens materialize once in their own projection; one
+    * native loop ([[graft.functions.TokenChunks]]) cuts each row's
+    * `(chunk, n_toks)` structs, exploded to
     * (doc_id, chunk_idx, n_tokens, chunk); the fan-out stays inside the
     * partition, no shuffle. Every doc emits ≥ 1 chunk (split() never
-    * yields an empty array, so the sequence bound is always ≥ 0 — no
-    * descending-sequence trap). */
+    * yields an empty array). */
   def chunk(df: DataFrame, textCol: String, chunkTokens: Int): DataFrame = {
     require(chunkTokens > 0, s"chunkTokens must be > 0, got $chunkTokens")
-    val c = chunkTokens
-    val chunks = expr(
-      s"""transform(sequence(0, (size(__t) + ${c - 1}) div $c - 1),
-         |  i -> struct(
-         |    concat_ws(' ', slice(__t, i * $c + 1, $c)) AS chunk,
-         |    size(slice(__t, i * $c + 1, $c)) AS n_toks))""".stripMargin)
     df.select(col("doc_id"), tokens(col(textCol)).as("__t"))
-      .select(col("doc_id"), posexplode_outer(chunks).as(Seq("chunk_idx", "ch")))
+      .select(col("doc_id"), posexplode_outer(
+          graft.functions.TokenChunks.col(col("__t"), chunkTokens))
+        .as(Seq("chunk_idx", "ch")))
       .filter(col("ch").isNotNull)
       .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
         col("ch.n_toks").cast("long").as("n_tokens"),

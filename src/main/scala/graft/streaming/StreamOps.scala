@@ -421,7 +421,7 @@ object StreamOps {
     * is the
     * SAME column expression the batch funnel uses, chosen in its
     * map-only form ([[graft.ops.Text.piiMasked]], `normalize`,
-    * `langIdColumn`, `qualityScore`), so the stage is fully STATELESS:
+    * `langIdTextColumn`, `qualityScore`), so the stage is fully STATELESS:
     * no watermark needed, nothing accumulates, append mode works, and
     * a batch frame through this function gives bit-identical rows
     * (spec-pinned) — one code path for backfill and ingest.
@@ -450,13 +450,16 @@ object StreamOps {
     // [[graft.functions.Stable]]: without it, Catalyst pushes each
     // gate's filter below the projection that computes its column by
     // substituting the FULL kernel expression into the predicate, so
-    // the language fold and the quality composite each evaluated once
+    // the language and quality-score kernels each evaluated once
     // for the pushed filter and again for the surviving row — measured
     // 3.3x the single-evaluation cost over the sf0.1 corpus (no cache
     // can sit between gates in a streaming pipeline, so the fence is
     // the streaming twin of the batch funnel's persisted gate frame).
+    // The normalized text is fenced for the same reason: the pushed
+    // non-empty filter would normalize each row twice.
     val normed = scrubbed
-      .withColumn("text", Text.normalize(col("text")))
+      .withColumn("text",
+        graft.functions.Stable.col(Text.normalize(col("text"))))
       .filter(length(col("text")) > 0)
       .withColumn("pred_lang",
         graft.functions.Stable.col(Text.langIdTextColumn(col("text"))))

@@ -106,6 +106,53 @@ class CorpusPipelineSpec extends SparkSpec {
     val barrier = "localCheckpoint at Barrier.scala"
     assert(sites.count(_.startsWith(barrier)) < 11, sites.mkString("\n"))
     assert(sites.count(_.contains(barrier)) < 39, sites.mkString("\n"))
+    // the driver probe reads the edges through one partition: one job
+    // (a limit over the checkpoint's partitions scaled up in a second)
+    assert(sites.count(_.startsWith("collect at Dedup.scala")) == 1,
+      sites.mkString("\n"))
+  }
+
+  /** The persisted gate frame of a default [[CorpusPipeline.curate]] of
+    * the parquet fixture, unpersisted again so that its plan is planned
+    * in full rather than read from the cache. */
+  private def gateFrame(): DataFrame = {
+    val r = CorpusPipeline.curate(docs)
+    val normed = r.persisted.find(_.columns.contains("__pred_lang")).get
+    r.persisted.foreach(_.unpersist(blocking = true))
+    normed.select("*")
+  }
+
+  test("curate: the gate frame normalizes once and reads one signals pass " +
+      "per row") {
+    // a filter on the normalized text, pushed below the projection
+    // that normalizes, would normalize a second time; each normalize
+    // holds one `lower`
+    val plan = gateFrame().queryExecution.optimizedPlan
+    val exprs = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case e => e })
+    assert(exprs.count(_.prettyName == "lower") == 1, plan.toString)
+    assert(exprs.count(_.prettyName == "text_signals") == 1, plan.toString)
+  }
+
+  test("curate: every whole-stage-codegen method of the gate stage stays " +
+      "within HotSpot's 8,000-byte compile limit") {
+    // the parquet source keeps the projection in generated code (a
+    // local relation is evaluated by the optimizer); without adaptive
+    // execution the executed plan holds the final codegen stages
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val stages = org.apache.spark.sql.execution.debug.codegenStringSeq(
+        gateFrame().queryExecution.executedPlan)
+      assert(stages.exists(_._1.contains("lower(")), stages.map(_._1))
+      info(s"largest generated method: " +
+        s"${stages.map(_._3.maxMethodCodeSize).max} bytes")
+      stages.foreach { case (subtree, _, stats) =>
+        assert(stats.maxMethodCodeSize <= 8000,
+          s"${stats.maxMethodCodeSize} bytes in\n$subtree")
+      }
+    } finally spark.conf.set(key, was)
   }
 
   test("curateToParquet: nothing survives the language gate, the funnel " +

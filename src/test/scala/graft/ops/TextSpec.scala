@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class TextSpec extends SparkSpec {
@@ -765,5 +766,155 @@ class TextSpec extends SparkSpec {
     assert(r(1)._2 == 3L && r(1)._3 == 1L && r(1)._4 == 7L)
     val g2 = 0.39 * 3.0 / 1.0 + 11.8 * 7.0 / 3.0 - 15.59
     assert(math.abs(r(1)._5 - g2) < 1e-8)
+  }
+
+  // ---- the regex and higher-order forms the native text kernels
+  // replaced, kept as the reference their laws compare against ----
+
+  /** `split(text, " ")` segments equal to one of `words`: a regex count
+    * with space lookarounds over the space-padded text. */
+  private def segmentHitsRef(text: Column, words: Seq[String]): Column =
+    regexp_count(concat(lit(" "), text, lit(" ")),
+      lit(words.mkString("(?<= )(", "|", ")(?= )"))).cast("long")
+
+  /** The per-language fold: hit counts in ascending language order, a
+    * strict `>` keeping the earlier language on ties, 'und' at zero. */
+  private def langIdRef(text: Column): Column = {
+    val byLang = Text.LangProfile.groupBy(_._1).view
+      .mapValues(_.map(_._2)).toSeq.sortBy(_._1)
+    byLang.foldLeft(struct(lit(0L).as("n"), lit("und").as("l"))) {
+      case (acc, (lg, ws)) =>
+        val n = segmentHitsRef(text, ws)
+        when(n > acc.getField("n"),
+          struct(n.as("n"), lit(lg).as("l"))).otherwise(acc)
+    }.getField("l")
+  }
+
+  private def normalizeRef(text: Column): Column =
+    trim(regexp_replace(
+      regexp_replace(lower(text), "[^a-z0-9 ]", " "), " +", " "))
+
+  /** `Text.qualityScore(df, "text")`'s columns over the regex counts. */
+  private def qualityRef(t: Column): Seq[Column] = {
+    val nT = size(Text.tokens(t)).cast("long")
+    val nC = length(t).cast("long")
+    val aC = nC - length(regexp_replace(t, "[a-z A-Z]", "")).cast("long")
+    val dC = nC - length(regexp_replace(t, "[0-9]", "")).cast("long")
+    val sC = segmentHitsRef(t, Text.EnStopwords)
+    val ok = when(nT >= 10 && nT <= 1000, lit(1L)).otherwise(lit(0L))
+    val dec = "decimal(38,0)"
+    val num = lit(4L) * ok * nC.cast(dec) * nT +
+      lit(3L) * aC.cast(dec) * nT + lit(2L) * sC.cast(dec) * nC +
+      (nC - dC).cast(dec) * nT
+    val den = lit(10L) * nC.cast(dec) * nT
+    val s9 = least(lit(1000000000L),
+      greatest(lit(0L), Portable.intRatioScaled(num, den, 9)))
+    Seq(nT.as("n_tokens"),
+      when(nC > 0, Portable.intRatio9(aC, nC)).as("alpha_ratio"),
+      when(nC > 0, Portable.intRatio9(dC, nC)).as("digit_ratio"),
+      when(nT > 0, Portable.intRatio9(sC, nT)).as("stopword_ratio"),
+      ok.as("len_ok"),
+      when(nC > 0 && nT > 0, s9.cast("double") / lit(1e9)).as("quality_score"))
+  }
+
+  /** `Text.chunk` as the `transform(sequence(…))` higher-order form. */
+  private def chunkRef(df: DataFrame, c: Int): DataFrame = {
+    val chunks = expr(
+      s"""transform(sequence(0, (size(__t) + ${c - 1}) div $c - 1),
+         |  i -> struct(
+         |    concat_ws(' ', slice(__t, i * $c + 1, $c)) AS chunk,
+         |    size(slice(__t, i * $c + 1, $c)) AS n_toks))""".stripMargin)
+    df.select(col("doc_id"), Text.tokens(col("text")).as("__t"))
+      .select(col("doc_id"), posexplode_outer(chunks).as(Seq("chunk_idx", "ch")))
+      .filter(col("ch").isNotNull)
+      .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
+        col("ch.n_toks").cast("long").as("n_tokens"),
+        col("ch.chunk").as("chunk"))
+  }
+
+  /** Text edge cases for the kernel laws. */
+  private def edgeDocs: DataFrame = Seq(
+    "", null, " ", "  ", "the", " the cat ", "the  cat", "  leading the",
+    "trailing a  ", "the\tcat\nand a dog", "the\ta", "a\n", "\u0000 the",
+    "café naïve ÀÉÎ 東京 the", "𝔘𝔫𝔦 😀 the 😀", "\u212A \u212Aelvin",
+    "\u0130stanbul İİ i\u0307", "的 是 了 在 不 的", "的是 了",
+    "le les le la", "les", "a an an a", "an", "the there them thee",
+    "der the", "le el", "el le", "y es", "und und the the", "42 007 3.14 1e9",
+    "THE Der LES", "the, a. and; of", "Hello,   WORLD!! 42x ",
+    "a b c d e f g h i j", "a b c d e f g h i j k", "x" * 40
+  ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+
+  private def corpusDocs: DataFrame =
+    spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+      .select("doc_id", "text")
+
+  /** `body` with ANSI on, then with it off; the conf is restored. */
+  private def bothAnsi(body: String => Unit): Unit = {
+    val key = "spark.sql.ansi.enabled"
+    val was = spark.conf.get(key)
+    try Seq("true", "false").foreach { v => spark.conf.set(key, v); body(v) }
+    finally spark.conf.set(key, was)
+  }
+
+  private def rows(df: DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(_.toString)
+
+  test("text kernels: the signals kernel equals its regex forms — language, " +
+      "quality counts and score, NULL under both ANSI modes") {
+    Seq(edgeDocs, corpusDocs).foreach { d =>
+      bothAnsi { ansi =>
+        assert(rows(d.select(col("doc_id"),
+            Text.langIdTextColumn(col("text")),
+            Text.qualityScoreColumn(col("text")))) ==
+          rows(d.select(col("doc_id"), langIdRef(col("text")),
+            qualityRef(col("text")).last)), s"ansi=$ansi")
+        assert(rows(Text.qualityScore(d, "text")) ==
+          rows(d.select(col("doc_id") +: qualityRef(col("text")): _*)),
+          s"ansi=$ansi")
+      }
+    }
+    // the hand cases reach every branch: ties, prefixes, zh, 'und'
+    val lang = edgeDocs.select(col("text"), Text.langIdTextColumn(col("text")))
+      .as[(String, String)].collect().toMap
+    assert(lang("der the") == "de" && lang("le el") == "es" &&
+      lang("el le") == "es" && lang("的 是 了 在 不 的") == "zh" &&
+      lang("les") == "fr" && lang("an") == "und" && lang("THE Der LES") == "und")
+    assert(lang.get(null).contains("und"))
+  }
+
+  test("text kernels: normalize's ASCII fold equals the regex chain " +
+      "(multi-byte, supplementary, KELVIN SIGN and U+0130 through lower)") {
+    Seq(edgeDocs, corpusDocs).foreach { d =>
+      bothAnsi { ansi =>
+        assert(rows(d.select(col("doc_id"), Text.normalize(col("text")))) ==
+          rows(d.select(col("doc_id"), normalizeRef(col("text")))), s"ansi=$ansi")
+      }
+    }
+    val n = edgeDocs.select(col("text"), Text.normalize(col("text")))
+      .as[(String, String)].collect().toMap
+    assert(n("\u212A \u212Aelvin") == "k kelvin") // lower maps K-sign to 'k'
+    assert(n("Hello,   WORLD!! 42x ") == "hello world 42x")
+    assert(n("café naïve ÀÉÎ 東京 the") == "caf na ve the")
+  }
+
+  test("text kernels: the chunk kernel equals the transform(sequence) form " +
+      "at chunk sizes 1, c and c + 1, NULL under both ANSI modes") {
+    Seq(1, 3, 10, 64).foreach { c =>
+      bothAnsi { ansi =>
+        assert(rows(Text.chunk(edgeDocs, "text", c)) ==
+          rows(chunkRef(edgeDocs, c)), s"c=$c ansi=$ansi")
+      }
+    }
+    // documents of 1, c and c + 1 tokens
+    val c = 4
+    val d = Seq("w", "w x y z", "w x y z v").zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    assert(rows(Text.chunk(d, "text", c)) == rows(chunkRef(d, c)))
+    assert(Text.chunk(d, "text", c).groupBy("doc_id").count()
+      .as[(Long, Long)].collect().toMap == Map(0L -> 1L, 1L -> 1L, 2L -> 2L))
+    Seq(3, 64).foreach { c =>
+      assert(rows(Text.chunk(corpusDocs, "text", c)) ==
+        rows(chunkRef(corpusDocs, c)), s"corpus c=$c")
+    }
   }
 }

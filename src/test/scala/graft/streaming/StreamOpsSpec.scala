@@ -335,6 +335,19 @@ class StreamOpsSpec extends SparkSpec {
       r.getAs[Double]("quality_score") >= 0.6)
   }
 
+  test("curateStream: each row is normalized once") {
+    // a non-empty filter pushed below the normalizing projection would
+    // normalize every row a second time; each normalize holds one
+    // `lower`. A parquet source keeps the plan (the optimizer evaluates
+    // a local relation's projections itself).
+    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+    val plan = StreamOps.curateStream(docs, Set("en"), 0.6)
+      .queryExecution.optimizedPlan
+    val lowers = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case e if e.prettyName == "lower" => e })
+    assert(lowers.size == 1, plan.toString)
+  }
+
   test("curateStream: blocklist gate drops any-hit rows on the stream, batch twin identical") {
     implicit val sqlCtx = spark.sqlContext
     val rows = Seq(
