@@ -181,7 +181,7 @@ object SparkEntry {
        |)""".stripMargin
 
   /** [[shingleCtesFrom]] + MinHash signatures (no WITH prefix).
-    * Kernel-lockstep with [[graft.functions.MinHashSig]]: ONE md5-based
+    * Kernel-lockstep with [[graft.functions.MinHashMix]]: ONE md5-based
     * [[Portable.sqlHash]] per shingle, then per-permutation
     * (a·h + b) mod (2^61 − 1) mixes in exact HUGEINT arithmetic — the
     * coefficient literals come from the very same

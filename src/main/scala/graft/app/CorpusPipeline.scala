@@ -303,6 +303,14 @@ object CorpusPipeline {
   private def curateFrames(docs: DataFrame, cfg: Config,
                            observed: (String, DataFrame) => DataFrame)
       : Result = {
+    // every frame the funnel persists, in persist order, handed back in
+    // `Result.persisted` for the caller to unpersist after consumption
+    val persisted = Seq.newBuilder[DataFrame]
+    def persist(df: DataFrame): DataFrame = {
+      persisted += df
+      df.persist(cfg.storageLevel)
+    }
+
     val input = observed("input", docs)
 
     // optional PII scrub FIRST — before normalize, which strips the
@@ -359,10 +367,9 @@ object CorpusPipeline {
       case Some(_) => withToks.withColumn("__g",
         Text.shinglesAll(col("__t"), cfg.repetitionN))
     }
-    val normed = observed("normalized_non_empty", withGrams
+    val normed = persist(observed("normalized_non_empty", withGrams
       .select(Seq("doc_id", "text", "lang", "source").map(col) ++
-        gateCols: _*))
-      .persist(cfg.storageLevel)
+        gateCols: _*)))
 
     // language gate on the n-gram-profile PREDICTION, not the source-
     // provided tag (at corpus scale the tag is missing or wrong).
@@ -456,7 +463,7 @@ object CorpusPipeline {
         // tier-survivor IDS pass a [[Barrier]] (see the boilerplate
         // gate), so downstream multi-reads never re-run the NLL/ntile
         // chain.
-        if (gated ne quality) gated.persist(cfg.storageLevel)
+        if (gated ne quality) persist(gated)
         val ids = Barrier.cut(Text.perplexityBuckets(gated, "text", "lang",
             cfg.pplBuckets)
           .filter(col("bucket").isin(keep.toSeq: _*))
@@ -472,13 +479,11 @@ object CorpusPipeline {
     // the extra bytes never ride a dedup shuffle.
     val postGates = tiered.select(
       col("doc_id"), col("text"), col("lang"), col("source"))
-    val exact = observed("exact_dedup",
-        Dedup.dedupExact(postGates, "doc_id", "text"))
-      .persist(cfg.storageLevel)
-    val shingled = exact.select(col("doc_id"),
-        Text.shingles(Text.tokens(col("text")), cfg.shingleN).as("shingles"))
-      .persist(cfg.storageLevel)
-    val near = observed("near_dedup", if (!cfg.keepBestQuality)
+    val exact = persist(observed("exact_dedup",
+        Dedup.dedupExact(postGates, "doc_id", "text")))
+    val shingled = persist(exact.select(col("doc_id"),
+        Text.shingles(Text.tokens(col("text")), cfg.shingleN).as("shingles")))
+    val near = persist(observed("near_dedup", if (!cfg.keepBestQuality)
         Dedup.dedupNearClustered(exact, "doc_id", shingled,
           cfg.minhashPerms, cfg.bands, cfg.rowsPerBand, cfg.jaccardTau)
       else {
@@ -492,7 +497,7 @@ object CorpusPipeline {
         Dedup.dedupNearClusteredBest(scored, "doc_id", "quality_score",
             Dedup.nearDupClusters(verified, "doc_id"))
           .drop("quality_score", "cluster_rep")
-      }).persist(cfg.storageLevel)
+      }))
 
     // optional benchmark decontamination: drop survivors sharing too
     // many shingles with the eval set. Eval text passes the SAME
@@ -517,9 +522,8 @@ object CorpusPipeline {
             evalShingled, "doc_id",
             cfg.contaminationMinShared, cfg.broadcastEval)
           .select(col("doc_id")).distinct()
-        observed("decontaminated",
-            near.join(drops, Seq("doc_id"), "left_anti"))
-          .persist(cfg.storageLevel)
+        persist(observed("decontaminated",
+            near.join(drops, Seq("doc_id"), "left_anti")))
     }
 
     // optional repeated-span scrub: rewrite survivor text, removing
@@ -534,8 +538,8 @@ object CorpusPipeline {
         val s = Dedup.scrubRepeatedSpans(decon, "doc_id", "text", k)
           .filter(length(col("text_scrubbed")) > 0)
           .select(col("doc_id"), col("text_scrubbed").as("text"))
-        observed("span_scrub", decon.drop("text").join(s, Seq("doc_id")))
-          .persist(cfg.storageLevel)
+        persist(observed("span_scrub",
+          decon.drop("text").join(s, Seq("doc_id"))))
     }
 
     val chunks = Text.chunk(spanScrubbed, "text", cfg.chunkTokens)
@@ -545,18 +549,6 @@ object CorpusPipeline {
       graft.ops.Sampling.pack(spanScrubbed, "doc_id", "text", l,
         cfg.packShards, cfg.packSalt))
 
-    // normed is the always-persisted multi-read frame (every gate filter
-    // reads its stored columns); the rest are the persisted gate and
-    // dedup-side frames, for the caller to unpersist after consumption
-    val gatePersisted =
-      if (cfg.pplKeepTiers.isDefined && (gated ne quality)) Seq(gated)
-      else Seq.empty
-    val deconPersisted = if (decon ne near) Seq(decon) else Seq.empty
-    val scrubPersisted =
-      if (spanScrubbed ne decon) Seq(spanScrubbed) else Seq.empty
-    Result(chunks, Seq.empty,
-      scrubPersisted ++ deconPersisted ++ Seq(near, shingled, exact,
-        normed) ++ gatePersisted,
-      packed, Some(spanScrubbed))
+    Result(chunks, Seq.empty, persisted.result(), packed, Some(spanScrubbed))
   }
 }

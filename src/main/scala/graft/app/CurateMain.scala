@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
+import graft.conf.ConfigLoader.{asMap, bool, dbl, int, long, section, str,
+  strList}
 import org.yaml.snakeyaml.Yaml
-import scala.jdk.CollectionConverters._
 
 /** `spark-submit`-able entry point for the LLM curation funnel — the
   * operational twin of [[graft.app.Pipeline]] (which drives the
@@ -74,67 +75,54 @@ object CurateMain {
     if (!preExisting) spark.stop()
   }
 
+  /** The `curate:` keys [[configFromYaml]] reads. */
+  private val CurateKeys = Set("keep_langs", "min_quality", "shingle_n",
+    "minhash_perms", "bands", "rows_per_band", "jaccard_tau", "chunk_tokens",
+    "scrub_pii", "max_dup_ngram_ratio", "repetition_n", "max_boiler_ratio",
+    "boiler_n", "boiler_max_df", "min_quality_pct", "blocklist",
+    "ppl_keep_tiers", "ppl_buckets", "keep_best_quality", "scrub_span_k",
+    "pack_seq_tokens", "pack_shards", "pack_salt", "storage_level")
+
   /** Parse the `curate:` section of a YAML document into a
-    * [[CorpusPipeline.Config]] — absent keys keep the case-class
-    * defaults (the [[graft.conf.ConfigLoader]] convention); present
-    * values hit the operators' own `require`s at use. */
+    * [[CorpusPipeline.Config]] through [[ConfigLoader]]'s YAML helpers —
+    * absent keys keep the case-class defaults; present values hit the
+    * operators' own `require`s at use. An unknown key, a `curate:` value
+    * that is not a mapping, or a value of the wrong type fails with an
+    * IllegalArgumentException that names the key. */
   def configFromYaml(text: String): CorpusPipeline.Config = {
-    val root = Option(new Yaml().load[Object](text)) match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asScala.map { case (k, v) =>
-          k.toString -> v.asInstanceOf[Object] }.toMap
-      case _ => Map.empty[String, Object]
-    }
-    val c = root.get("curate") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asScala.map { case (k, v) =>
-          k.toString -> v.asInstanceOf[Object] }.toMap
-      case _ => Map.empty[String, Object]
-    }
+    val c = section(asMap(new Yaml().load[Object](text)), "curate")
+    val unknown = c.keySet -- CurateKeys
+    require(unknown.isEmpty,
+      s"curate: unknown keys ${unknown.toSeq.sorted.mkString(", ")}")
     val d = CorpusPipeline.Config()
-    def int(k: String, dflt: Int) =
-      c.get(k).map(_.asInstanceOf[Number].intValue).getOrElse(dflt)
-    def lng(k: String, dflt: Long) =
-      c.get(k).map(_.asInstanceOf[Number].longValue).getOrElse(dflt)
-    def dbl(k: String, dflt: Double) =
-      c.get(k).map(_.asInstanceOf[Number].doubleValue).getOrElse(dflt)
-    def bool(k: String, dflt: Boolean) =
-      c.get(k).map(_.asInstanceOf[Boolean].booleanValue).getOrElse(dflt)
-    def str(k: String) = c.get(k).map(_.toString)
-    def strs(k: String): Option[Seq[String]] = c.get(k).map {
-      case l: java.util.List[_] => l.asScala.toSeq.map(_.toString)
-      case one => Seq(one.toString)
-    }
-    def optDbl(k: String) =
-      c.get(k).map(_.asInstanceOf[Number].doubleValue)
-    def optInt(k: String) =
-      c.get(k).map(_.asInstanceOf[Number].intValue)
+    def optDbl(k: String) = c.get(k).map(_ => dbl(c, k, 0.0))
+    def optInt(k: String) = c.get(k).map(_ => int(c, k, 0))
     CorpusPipeline.Config(
-      keepLangs = strs("keep_langs").map(_.toSet)
+      keepLangs = strList(c, "keep_langs").map(_.toSet)
         .getOrElse(d.keepLangs),
-      minQuality = dbl("min_quality", d.minQuality),
-      shingleN = int("shingle_n", d.shingleN),
-      minhashPerms = int("minhash_perms", d.minhashPerms),
-      bands = int("bands", d.bands),
-      rowsPerBand = int("rows_per_band", d.rowsPerBand),
-      jaccardTau = dbl("jaccard_tau", d.jaccardTau),
-      chunkTokens = int("chunk_tokens", d.chunkTokens),
-      scrubPii = bool("scrub_pii", d.scrubPii),
+      minQuality = dbl(c, "min_quality", d.minQuality),
+      shingleN = int(c, "shingle_n", d.shingleN),
+      minhashPerms = int(c, "minhash_perms", d.minhashPerms),
+      bands = int(c, "bands", d.bands),
+      rowsPerBand = int(c, "rows_per_band", d.rowsPerBand),
+      jaccardTau = dbl(c, "jaccard_tau", d.jaccardTau),
+      chunkTokens = int(c, "chunk_tokens", d.chunkTokens),
+      scrubPii = bool(c, "scrub_pii", d.scrubPii),
       maxDupNgramRatio = optDbl("max_dup_ngram_ratio"),
-      repetitionN = int("repetition_n", d.repetitionN),
+      repetitionN = int(c, "repetition_n", d.repetitionN),
       maxBoilerRatio = optDbl("max_boiler_ratio"),
-      boilerN = int("boiler_n", d.boilerN),
-      boilerMaxDf = lng("boiler_max_df", d.boilerMaxDf),
+      boilerN = int(c, "boiler_n", d.boilerN),
+      boilerMaxDf = long(c, "boiler_max_df", d.boilerMaxDf),
       minQualityPct = optDbl("min_quality_pct"),
-      blocklist = strs("blocklist"),
-      pplKeepTiers = strs("ppl_keep_tiers").map(_.toSet),
-      pplBuckets = int("ppl_buckets", d.pplBuckets),
-      keepBestQuality = bool("keep_best_quality", d.keepBestQuality),
+      blocklist = strList(c, "blocklist"),
+      pplKeepTiers = strList(c, "ppl_keep_tiers").map(_.toSet),
+      pplBuckets = int(c, "ppl_buckets", d.pplBuckets),
+      keepBestQuality = bool(c, "keep_best_quality", d.keepBestQuality),
       scrubSpanK = optInt("scrub_span_k"),
       packSeqTokens = optInt("pack_seq_tokens"),
-      packShards = int("pack_shards", d.packShards),
-      packSalt = str("pack_salt").getOrElse(d.packSalt),
-      storageLevel = str("storage_level")
+      packShards = int(c, "pack_shards", d.packShards),
+      packSalt = str(c, "pack_salt").getOrElse(d.packSalt),
+      storageLevel = str(c, "storage_level")
         .map(StorageLevel.fromString).getOrElse(d.storageLevel))
   }
 }

@@ -4,70 +4,25 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native MinHash signature: ONE [[Hash60]] digest per shingle, then
-  * `numPerms` cheap universal-hash mixes over that 60-bit base — the
-  * classic (a·h + b) mod p permutation family (Carter–Wegman; Broder,
-  * "On the resemblance and containment of documents", 1997) with
-  * p = 2^61 − 1, evaluated as one tight codegen'd loop per row.
-  *
-  * Replaces the round-12 kernel, which paid one full MD5 digest per
-  * (shingle, permutation) — 16 digests per shingle at 16 perms; the
-  * 5M-doc funnel run's thread sampling billed the map side almost
-  * entirely to those digests. This form pays exactly one digest per
-  * shingle plus numPerms multiply-mod mixes (a few ns each), and it
-  * also removes the signature pipeline's explode + groupBy SHUFFLE:
-  * the whole signature is computed inside the row's projection, so
-  * MinHash→LSH now shuffles only band rows.
+/** The MinHash permutation family shared by the engine and its oracle:
+  * one [[Hash60]] digest per shingle, then per permutation p the
+  * universal-hash mix `(coefA(p) · h + coefB(p)) mod (2^61 − 1)` —
+  * the classic (a·h + b) mod p family (Carter–Wegman; Broder, "On the
+  * resemblance and containment of documents", 1997). The engine applies
+  * it through [[MinHashMix]] inside [[graft.ops.Dedup.minhashSignatures]]'
+  * explode + min-aggregate shape.
   *
   * Portability (the engine's oracle-lockstep discipline,
-  * [[graft.ops.Portable]]): the mix is exact 61-bit integer math —
-  * `(coefA(p) · h + coefB(p)) mod (2^61 − 1)` — which DuckDB computes
-  * bit-identically in HUGEINT; the coefficient constants derive from
-  * [[Hash60]] of ("minhash_a", p)/("minhash_b", p) so both engines
-  * inline the very same literals (the oracle SQL is generated from
-  * [[coefA]]/[[coefB]]). A spec pins the Mersenne-fold fast path
-  * against BigInt reference arithmetic.
-  *
-  * Null semantics mirror the explode+min form this replaces: null
-  * array, empty array, or all-null elements → null (a document with no
-  * shingles has no definable signature — callers filter); null
-  * ELEMENTS are skipped.
+  * [[graft.ops.Portable]]): the mix is exact 61-bit integer math, which
+  * DuckDB computes bit-identically in HUGEINT; the coefficient
+  * constants derive from [[Hash60]] of ("minhash_a", p)/("minhash_b", p)
+  * so both engines inline the very same literals (the oracle SQL is
+  * generated from [[coefA]]/[[coefB]]). A spec pins the Mersenne-fold
+  * fast path against BigInt reference arithmetic.
   */
-case class MinHashSig(child: Expression, numPerms: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if numPerms >= 1 =>
-      TypeCheckResult.TypeCheckSuccess
-    case ArrayType(StringType, _) =>
-      TypeCheckResult.TypeCheckFailure(s"numPerms must be >= 1, got $numPerms")
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig expects array<string>, got ${t.simpleString}")
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    MinHashSig.compute(a.asInstanceOf[ArrayData], numPerms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val boxed = ctx.freshName("mhSig")
-      s"""org.apache.spark.sql.catalyst.util.ArrayData $boxed =
-         |  graft.functions.MinHashSig.compute($a, $numPerms);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed; }""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MinHashSig {
 
   /** The Mersenne prime 2^61 − 1 — the mix's modulus in BOTH engines. */
@@ -116,42 +71,6 @@ object MinHashSig {
     r = (r & Prime) + (r >>> 61)
     if (r >= Prime) r -= Prime
     r
-  }
-
-  /** One digest per element, `numPerms` running minima; null when no
-    * non-null element exists (no signature is definable). Called from
-    * both interpreted eval and generated code. */
-  def compute(arr: ArrayData, numPerms: Int): ArrayData = {
-    ensure(numPerms)
-    val as = cachedA
-    val bs = cachedB
-    val mins = new Array[Long](numPerms)
-    java.util.Arrays.fill(mins, Long.MaxValue)
-    val one = new Array[UTF8String](1)
-    var any = false
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        any = true
-        one(0) = arr.getUTF8String(i)
-        val base = Hash60.compute(one)
-        var p = 0
-        while (p < numPerms) {
-          val v = mix(base, as(p), bs(p))
-          if (v < mins(p)) mins(p) = v
-          p += 1
-        }
-      }
-      i += 1
-    }
-    if (!any) null else new GenericArrayData(mins)
-  }
-
-  /** Column-API entry. */
-  def apply(a: Column, numPerms: Int)(implicit d: DummyImplicit): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(MinHashSig(ColumnBridge.expression(a), numPerms))
   }
 }
 

@@ -170,8 +170,8 @@ object Dedup {
     * codegen higher-order-function bodies, ~2x), the round-4..12
     * explode form with one FULL MD5 digest per (shingle, perm) — 16x
     * the digests at 16 perms, the thread-sampled map-side bill of the
-    * 5M-doc funnel run — and a fully MAP-ONLY per-row
-    * [[graft.functions.MinHashSig]] projection, which priced the
+    * 5M-doc funnel run — and a fully MAP-ONLY per-row signature
+    * expression (one array<bigint> per document), which priced the
     * digests right but REGRESSED the q43/q51 near-dup family ~4x:
     * without the groupBy there is no exchange below the band
     * self-join, so each join side re-derived the whole

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkEntry._
 import graft.ops._
 import graft.streaming.{Replay, StreamOps}
-import graft.streaming.Replay.{distinctKeys, withStreamStatePartitions}
+import graft.streaming.Replay.withStatePartitions
 
 /** Streaming: the batch forms of the StreamOps interval join and
   * near-dedup gate (q54, q124), and the certifications (q255–q270,
@@ -117,9 +117,7 @@ private[graft] object StreamQueries {
     // twin law under the driver's gate.
     Query("q256_threshold_sweep_stream", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      // state = one row per distinct 9-dp quality score; the document
-      // count (a metadata-only parquet count) is its cheap upper bound
-      withStreamStatePartitions(s, docs.count()) {
+      withStatePartitions(s) {
         Replay.replay(docs, "q256") { sdf =>
           val scored = Text.qualityScore(sdf, "text", Seq("lang"))
             .select(col("lang"), col("quality_score"))
@@ -147,8 +145,7 @@ private[graft] object StreamQueries {
       val ev = Sources.eventsNs(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      // flatMapGroupsWithState keys on event_type — probe that domain
-      withStreamStatePartitions(s, distinctKeys(ev, col("event_type"))) {
+      withStatePartitions(s) {
         Replay.replayWithSentinels(ev, "q257", ReplayDelayMs, WindowMs) {
           sdf =>
             Replay.toMemory(StreamOps.robustAnomalyStream(sdf, WindowMs,
@@ -175,9 +172,7 @@ private[graft] object StreamQueries {
       val ev = Sources.eventsNs(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      // state = one row per open (tumbling window, event_type) pair
-      withStreamStatePartitions(s, distinctKeys(ev,
-        expr(s"ts div ${WindowMs * 1000000L}"), col("event_type"))) {
+      withStatePartitions(s) {
         Replay.replayWithSentinels(ev, "q261", ReplayDelayMs, WindowMs) {
           sdf =>
             Replay.toMemory(StreamOps.windowedCounts(sdf,
@@ -211,8 +206,7 @@ private[graft] object StreamQueries {
       val ev = Sources.eventsNs(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      // session-window state is per-user — probe the user domain
-      withStreamStatePartitions(s, distinctKeys(ev, col("user_id"))) {
+      withStatePartitions(s) {
         Replay.replayWithSentinels(ev, "q262", ReplayDelayMs, SessionGapMs) {
           sdf =>
             // NOTE: no post-agg filter — a comparison filter above a
@@ -275,8 +269,7 @@ private[graft] object StreamQueries {
       val ev = Sources.eventsNs(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type"))
-      // scd2 keyed state is per-user — probe the user domain
-      withStreamStatePartitions(s, distinctKeys(ev, col("user_id"))) {
+      withStatePartitions(s) {
         val slices = 4
         val cnt = ev.count()
         // certification plumbing: one bounded fixture-sized sort to cut
@@ -329,9 +322,7 @@ private[graft] object StreamQueries {
       val ev = Sources.eventsNs(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      // join state buffers WHOLE ROWS per side under the 60-day
-      // watermark, so the row count (not a key domain) sizes the stores
-      withStreamStatePartitions(s, ev.count()) {
+      withStatePartitions(s) {
         Replay.replay(ev, "q259_l", files = 2) { l =>
           Replay.replay(ev, "q259_r", files = 2) { r =>
             Replay.toMemory(StreamOps.intervalJoin(
@@ -370,12 +361,8 @@ private[graft] object StreamQueries {
     // path, certified end to end against a batch oracle.
     Query("q260_curate_stream_incremental", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      // stateless gates, but the per-trigger stream-static anti join
-      // pays the exchange tax — size it to the index's key domain,
-      // bounded by the document count (metadata-only parquet count);
-      // floor 1: no state store here, so fewer exchange tasks is pure
-      // win (see withStreamStatePartitions)
-      withStreamStatePartitions(s, docs.count(), floor = 1) {
+      // no state store: one partition for the stream-static anti join
+      withStatePartitions(s, 1) {
         // stored-index-at-rest: the hash index re-enters the anti join
         // every micro-batch — persist it once
         val idx = docs
@@ -469,11 +456,7 @@ private[graft] object StreamQueries {
         .filter(col("source") =!= KsSourceA)
         .select(col("quality_score"))
         .persist()
-      // stream state = one row per distinct 9-dp score; the persisted
-      // baseline shares the stream's score domain, so probing it both
-      // sizes the stores and pre-materializes the cache
-      withStreamStatePartitions(s,
-        distinctKeys(baseline, col("quality_score"))) {
+      withStatePartitions(s) {
         try Replay.replay(docs, "q264") { sdf =>
           val scored = Text.qualityScore(sdf, "text", Seq("source"))
             .filter(col("source") === KsSourceA)
@@ -498,9 +481,7 @@ private[graft] object StreamQueries {
       val ev = Sources.eventsNs(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      // Complete-mode state is one row per (day, user) — probe that
-      withStreamStatePartitions(s, distinctKeys(ev,
-        expr("ts div 86400000000000"), col("user_id"))) {
+      withStatePartitions(s) {
         Replay.replay(ev, "q265") { sdf =>
           Replay.lastBatch(s)(StreamOps.sprtStream(sdf, "purchase",
             SprtP0, SprtP1, SprtAlpha, SprtBeta))
@@ -516,9 +497,7 @@ private[graft] object StreamQueries {
     // law (q249) running continuously.
     Query("q266_corpus_report_stream", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      // monoid state is one row per (source, lang) slice — probe that
-      withStreamStatePartitions(s,
-        distinctKeys(docs, col("source"), col("lang"))) {
+      withStatePartitions(s) {
         Replay.replay(docs, "q266") { sdf =>
           Replay.lastBatch(s)(StreamOps.corpusReportStream(sdf,
             "source", "lang", "text"))
@@ -544,9 +523,7 @@ private[graft] object StreamQueries {
           col("event_type"))
         .withColumn("content",
           concat_ws("#", col("user_id"), col("event_type")))
-      // dedup state is one row per distinct content key — probe it
-      withStreamStatePartitions(s,
-        distinctKeys(ev, col("user_id"), col("event_type"))) {
+      withStatePartitions(s) {
         Replay.replay(ev, "q267") { sdf =>
           Replay.toMemory(StreamOps.dedupStream(sdf, "content", "60 days")
             .select(col("content_hash")), "q267")
@@ -574,8 +551,7 @@ private[graft] object StreamQueries {
       val ev = Sources.eventsNs(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      // flatMapGroupsWithState keys on event_type — probe that domain
-      withStreamStatePartitions(s, distinctKeys(ev, col("event_type"))) {
+      withStatePartitions(s) {
         Replay.replayWithSentinels(ev, "q268", ReplayDelayMs, WindowMs) {
           sdf =>
             Replay.toMemory(StreamOps.anomalyStream(sdf, WindowMs,
@@ -601,8 +577,7 @@ private[graft] object StreamQueries {
       import scala.jdk.CollectionConverters._
       val ev = Sources.eventsNs(s, dir)
         .select(col("user_id"), col("value"))
-      // mapGroupsWithState keys on user_id — probe the user domain
-      withStreamStatePartitions(s, distinctKeys(ev, col("user_id"))) {
+      withStatePartitions(s) {
         val finalState = new java.util.concurrent.ConcurrentHashMap[
           Long, (Long, Double)]()
         Replay.replay(ev, "q269") { sdf =>
@@ -633,11 +608,9 @@ private[graft] object StreamQueries {
     // sink must equal the batch run — q124's own oracle.
     Query("q270_near_dedup_stream_live", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      // stateless, but the per-trigger band joins against the static
-      // index pay the exchange tax — size to the index side's rows
-      // (metadata-only parquet count); floor 1: no state store, fewer
-      // exchange tasks is pure win (measured 5.2 → 3.5 s)
-      withStreamStatePartitions(s, docs.count(), floor = 1) {
+      // no state store: one partition for the band joins against the
+      // static index
+      withStatePartitions(s, 1) {
         // the static SimHash index re-enters the band join every
         // micro-batch — persist it once (the stored-index-at-rest
         // posture; without it each trigger re-fingerprints the corpus)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
@@ -114,79 +114,36 @@ private[graft] object Replay {
       drain(wire((batch, _) => keep(batch)).start())
     }
 
-  /** State-store keys one shuffle partition is sized to hold: small
-    * enough that a store's per-micro-batch delta write + commit stays
-    * one small file and its in-memory map a few MB, large enough that a
-    * fixture-scale stream (10^1..10^5 keys) runs 1–2 stores instead of
-    * one per core. The derived count never exceeds the session's
-    * `spark.sql.shuffle.partitions`: a 10^9-key stream asks for ~15k
-    * stores and gets the session setting, so a production deployment
-    * sizes its state by sizing that setting. */
-  private val StreamStateKeysPerPartition = 65536L
-
   /** Run `body` (a stream-start/processAllAvailable harness) with
-    * `spark.sql.shuffle.partitions` sized to the stream's STATE KEY
-    * CARDINALITY, restoring the session value after (r15 optimization,
-    * r16 derivation).
+    * `spark.sql.shuffle.partitions` at `min(n, session setting)`,
+    * restoring the session value after, also when `body` throws.
     *
     * Why: a stateful micro-batch operator instantiates one state store
-    * per shuffle partition, and EVERY store pays a delta-file write +
+    * per shuffle partition, and every store pays a delta-file write +
     * commit per micro-batch — cost proportional to the partition
-    * count, not the data (measured on the q261 replay shape: 5.6–12.4 s
-    * at 32 partitions vs 2.8–3.2 s at 2, same rows, same results).
-    * Stream-static joins pay the same per-trigger exchange tax. This
-    * is the guide's fewer-larger-partitions rule (§2.2) applied to
-    * state stores: `keyCard` is the harness's own (cheap) probe of its
-    * state key domain — an `approx_count_distinct` over the key
-    * columns of the batch frame it is about to stage, or a row-count
-    * upper bound where the key is a computed column — and the store
-    * count is ⌈keyCard / [[StreamStateKeysPerPartition]]⌉ clamped to
-    * [min(`floor`, session setting), session setting]. The r15
-    * constant 4 was honest only for the fixture's key space; the
-    * derivation grows with the key space up to the session's
-    * `spark.sql.shuffle.partitions`, which is its ceiling.
+    * count, not the data — and a stream-static join pays the same
+    * per-trigger exchange tax. Two measured counts:
+    *   - 4 (the default) for stateful operators: below it the saved
+    *     commits no longer pay for the lost compute parallelism
+    *     (q259's stream-stream interval join: 8.1 s at 2 partitions,
+    *     5.7 s at 4);
+    *   - 1 for the stateless stream-static gates (q260, q270), whose
+    *     only cost is the exchange: q270 3.5 s at 1 partition against
+    *     5.2 s.
+    * The session setting stays the ceiling, so a production deployment
+    * sizes its state by sizing `spark.sql.shuffle.partitions`.
     *
-    * The count is decided ONCE per query, at its first start: Spark
-    * records `spark.sql.shuffle.partitions` in the checkpoint's offset
-    * log, and a stateful query restarted from that checkpoint keeps its
-    * first start's state partition count whatever the session says at
-    * restart (StreamOpsSpec pins it) — so this sizing applies to a
-    * fresh checkpoint only; resizing a running stream's state means a
-    * new checkpoint.
-    *
-    * Why the default floor is 4 and not 1: a STATEFUL operator's
-    * per-trigger work (join probes, session merges, timeout scans) is
-    * parallelized by the same partition count that prices the store
-    * commits, and below ~4 the saved delta-file commits no longer pay
-    * for the lost compute parallelism — measured on this fixture:
-    * q259's stream-stream interval join read 8.1 s at the derived 2
-    * partitions vs 5.7 s at 4; q262's session windows 5.6 s at 1 vs
-    * 4.5 s at 4 (while 32 partitions cost 5.6–12.4 s — the r15
-    * finding stands). Harnesses with NO state store (stateless gate
-    * chains whose wrapper exists only for the per-trigger
-    * stream-static exchange tax) pass `floor = 1` — for them fewer
-    * exchange tasks is pure win (q270 5.2 → 3.5 s at 1 partition).
-    * States are hash-partitioned, so the setting changes layout,
-    * never results — the oracle gates pin that. Never raises above
-    * the session's batch setting, so Bench's lower-core
-    * runs keep their proportions. */
-  def withStreamStatePartitions[A](s: SparkSession,
-                                   keyCard: => Long,
-                                   floor: Int = 4)(body: => A): A = {
+    * The count is fixed at a query's first start: Spark records
+    * `spark.sql.shuffle.partitions` in the checkpoint's offset log, and
+    * a stateful query restarted from that checkpoint keeps it whatever
+    * the session says at restart (StreamOpsSpec pins it). States are
+    * hash-partitioned, so the setting changes layout, never results. */
+  def withStatePartitions[A](s: SparkSession, n: Int = 4)(body: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val n = math.max(math.min(floor, prev.toInt),
-      math.ceil(keyCard.toDouble / StreamStateKeysPerPartition).toInt)
     s.conf.set("spark.sql.shuffle.partitions", math.min(n, prev.toInt).toString)
     try body
     finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
-
-  /** The [[withStreamStatePartitions]] key probe for a real key-column
-    * set: one map-side-combined HLL aggregate over the key columns —
-    * a pruned-scan pass, ~1% of the stream run it sizes. */
-  def distinctKeys(df: DataFrame, keys: Column*): Long =
-    df.agg(approx_count_distinct(struct(keys: _*)).as("c"))
-      .head().getLong(0)
 
   /** Stage the 5-column events frame into `staged` as 4 parquet files
     * plus two far-future sentinel rows (user_id −1 / event_type

@@ -60,6 +60,27 @@ class CurateMainSpec extends SparkSpec {
       CorpusPipeline.Config())
   }
 
+  /** `configFromYaml(yaml)` fails with an IllegalArgumentException that
+    * names `key`. */
+  private def rejects(yaml: String, key: String): Unit = {
+    val e = intercept[IllegalArgumentException](CurateMain.configFromYaml(yaml))
+    assert(e.getMessage.contains(key), e.getMessage)
+  }
+
+  test("configFromYaml: a value of the wrong type fails naming its key") {
+    rejects("curate:\n  min_quality: high\n", "min_quality")
+    rejects("curate:\n  scrub_pii: maybe\n", "scrub_pii")
+    rejects("curate:\n  boiler_max_df: lots\n", "boiler_max_df")
+    rejects("curate:\n  scrub_span_k: [1]\n", "scrub_span_k")
+  }
+
+  test("configFromYaml: a misspelled key or a curate value that is not a " +
+      "mapping fails instead of falling back to the defaults") {
+    rejects("curate:\n  min_qualty: 0.9\n", "min_qualty")
+    rejects("curate: [min_quality]\n", "curate")
+    rejects("curate: 0.9\n", "curate")
+  }
+
   test("funnel counts and chunk hashes are storage-level-invariant") {
     def run(lvl: StorageLevel) = {
       val out = java.nio.file.Files.createTempDirectory("curate-lvl")

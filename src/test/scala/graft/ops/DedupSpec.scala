@@ -104,6 +104,21 @@ class DedupSpec extends SparkSpec {
     assert(labels.forall(_._2 == 0L))
   }
 
+  test("nearDupClusters: the rounds fail loudly when capped before the " +
+      "fixpoint, and reach it at the default cap") {
+    // 64-vertex chain on the rounds path (budget 0): one round leaves
+    // non-minimal labels, which must not come back as clusters
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val err = intercept[IllegalStateException] {
+      Dedup.nearDupClusters(chain, "doc_id", 1, 0).collect()
+    }
+    assert(err.getMessage.contains("maxIters"), err.getMessage)
+    val labels = Dedup.nearDupClusters(chain, "doc_id", 30, 0) // default cap
+      .as[(Long, Long)].collect()
+    assert(labels.length == 64)
+    assert(labels.forall(_._2 == 0L))
+  }
+
   test("nearDupClusters: reliable-checkpoint mode (checkpoint dir set) is identical") {
     // with a checkpoint dir the fixpoint's barriers become RELIABLE
     // checkpoints (cluster-grade: survives executor loss); labels must

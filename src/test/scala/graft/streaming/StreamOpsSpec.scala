@@ -543,7 +543,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("a stateful query restarted from its checkpoint keeps its first " +
       "start's state partition count, whatever the session says") {
-    // the withStreamStatePartitions contract: state sizing is decided
+    // the Replay.withStatePartitions contract: state sizing is decided
     // at a query's first start — Spark restores the checkpointed
     // spark.sql.shuffle.partitions on restart
     implicit val sqlCtx = spark.sqlContext
