@@ -115,9 +115,8 @@ object CorpusPipeline {
     * any eval doc is dropped. The eval text passes the SAME scrub +
     * normalize chain as the corpus, so shingles compare like with
     * like. The stage sits after near-dedup so the posting join sees
-    * the already-deduped (smallest) corpus. `broadcastEval = false`
-    * is the large-eval-corpus escape hatch — see
-    * [[Dedup.contamination]]. */
+    * the already-deduped (smallest) corpus; the eval side is
+    * broadcast ([[Dedup.contamination]]). */
   case class Config(
       keepLangs: Set[String] = Set("en"),
       minQuality: Double = 0.5,
@@ -140,7 +139,6 @@ object CorpusPipeline {
       keepBestQuality: Boolean = false,
       evalDocs: Option[DataFrame] = None,
       contaminationMinShared: Long = 5L,
-      broadcastEval: Boolean = true,
       scrubSpanK: Option[Int] = None,
       packSeqTokens: Option[Int] = None,
       packShards: Int = 16,
@@ -520,7 +518,7 @@ object CorpusPipeline {
         val drops = Dedup.contamination(
             shingled.join(near.select(col("doc_id")), Seq("doc_id")),
             evalShingled, "doc_id",
-            cfg.contaminationMinShared, cfg.broadcastEval)
+            cfg.contaminationMinShared)
           .select(col("doc_id")).distinct()
         persist(observed("decontaminated",
             near.join(drops, Seq("doc_id"), "left_anti")))

@@ -2,8 +2,8 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.InternalRow
@@ -107,20 +107,5 @@ object Hash60 {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(
       Hash60(cols.map(c => ColumnBridge.expression(c.cast("string"))).toSeq))
-  }
-
-  /** SQL function name for use inside `expr(...)` strings (higher-order
-    * function lambdas can't reach the Column API). */
-  val FuncName = "graft_hash60"
-
-  /** Idempotently register [[FuncName]] in the session's function
-    * registry so `expr(s"$FuncName(a, b)")` resolves. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(FuncName,
-      (exprs: Seq[Expression]) =>
-        Hash60(exprs.map(e =>
-          if (e.dataType == StringType) e else Cast(e, StringType))),
-      "built-in")
   }
 }

@@ -58,20 +58,6 @@ object IvfIndex {
     * materialize the inverted lists (see the object doc). */
   def build(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
             seed: Long = 42L): Index = {
-    val (vecs, centres) = fit(corpus, idCol, vecCol, k, seed)
-    val spark = corpus.sparkSession
-    val bc = spark.sparkContext.broadcast(centres)
-    val cellOf = udf((v: Seq[Double]) => nearest(v.toArray, bc.value))
-    val assignments = Barrier.cut(
-      vecs.select(col(idCol), cellOf(col("v")).as("cell"), col("v")))
-    Index(assignments, centroidTable(spark, centres))
-  }
-
-  /** The sample-and-fit half of [[build]]: the corpus as (id, v:
-    * array<double>) and the k centres trained on its seeded sample — one
-    * top-k job, no assignment pass. */
-  private def fit(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-                  seed: Long): (DataFrame, Array[Array[Double]]) = {
     require(k >= 1, s"IvfIndex.build: k = $k, need at least one cell")
     val vecs = corpus.select(col(idCol),
       transform(col(vecCol), _.cast("double")).as("v"))
@@ -80,7 +66,13 @@ object IvfIndex {
       .limit(SamplePerCell * k).collect()
       .map(_.getSeq[Double](1).toArray)
     require(sample.nonEmpty, "IvfIndex.build: empty corpus")
-    (vecs, train(sample, k, seed))
+    val centres = train(sample, k, seed)
+    val spark = corpus.sparkSession
+    val bc = spark.sparkContext.broadcast(centres)
+    val cellOf = udf((v: Seq[Double]) => nearest(v.toArray, bc.value))
+    val assignments = Barrier.cut(
+      vecs.select(col(idCol), cellOf(col("v")).as("cell"), col("v")))
+    Index(assignments, centroidTable(spark, centres))
   }
 
   /** The centroid table (cell, c: array<double>) of `centres`. */
@@ -192,24 +184,5 @@ object IvfIndex {
         Window.partitionBy(col("probe_id")).orderBy(desc("cos"), asc(idCol))))
       .filter(col("rnk") <= topK)
       .select(col("probe_id"), col(idCol).as("vec_id"), col("cos"), col("rnk"))
-  }
-
-  /** SemDeDup with LEARNED centroids — the paper's actual recipe
-    * (k-means cells, then within-cell duplicate pruning): the coarse
-    * quantizer's centers feed [[graft.ops.Dedup.semanticDedup]] as the
-    * centroid frame. Only the quantizer is trained: the corpus is
-    * assigned once, inside the dedup, not by [[build]].
-    * Seeded-deterministic but not replayed by the oracle (k-means
-    * fitted locally on a sample), so this form is spec-verified while
-    * the fixed-centroid form carries the oracle (q73). Centers are cast
-    * back to float so within-cell cosines run the same float-array
-    * FoldDot path as the oracle'd form. */
-  def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
-                    k: Int, tau: Double, seed: Long = 42L): DataFrame = {
-    val centers = centroidTable(corpus.sparkSession,
-        fit(corpus, idCol, vecCol, k, seed)._2)
-      .select(col("cell").cast("long").as(idCol),
-        transform(col("c"), _.cast("float")).as(vecCol))
-    graft.ops.Dedup.semanticDedup(corpus, idCol, vecCol, centers, tau)
   }
 }

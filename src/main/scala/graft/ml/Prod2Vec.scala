@@ -111,8 +111,7 @@ object Prod2Vec {
   /** M5–M7: grid "tuning" — fit each candidate, score it with an
     * intrinsic objective, return the runs table with `iteration` in
     * start order plus the best row. Grid ≠ the reference's SageMaker
-    * Bayesian search; [[tuneSearch]] is the sequential model-based
-    * (TPE) strategy over the same space that closes that deviation.
+    * Bayesian search — a documented deviation (SURVEY.md M5).
     *
     * Objective (minimized): negative mean cosine between the model's
     * embeddings of the `coPairs` (target_pid, neighbor_pid) ground-truth
@@ -132,8 +131,7 @@ object Prod2Vec {
   }
 
   /** The tuning objective (minimized): negative mean cosine of the
-    * co-purchase ground-truth pairs under the candidate's embeddings —
-    * shared by grid [[tune]] and the TPE [[tuneSearch]]. */
+    * co-purchase ground-truth pairs under the candidate's embeddings. */
   private def evalObjective(basketDf: DataFrame, p: Params,
                             coPairs: DataFrame): Double = {
     val emb = embeddings(train(basketDf, p))
@@ -147,138 +145,5 @@ object Prod2Vec {
       .select(Similarity.cosine(col("v_a"), col("v_b")).as("cos"))
       .agg(avg("cos")).head().getDouble(0)
     -meanCos
-  }
-
-  /** M5 without the deviation: sequential model-based search over the
-    * SAME candidate space as [[tune]] — the public Tree-structured
-    * Parzen Estimator recipe (Bergstra et al., NeurIPS'11, the
-    * Hyperopt/SageMaker-class Bayesian strategy the reference's DAG
-    * configures at `dags/prod2vec_train_dag.py:156-188`), over an
-    * enumerated candidate space:
-    *
-    * 1. evaluate `initRandom` seeded-random candidates (the warmup
-    *    Bayesian search needs before densities mean anything);
-    * 2. each further step splits the observed runs at the γ = 25%
-    *    objective quantile into good/bad sets, models each as a product
-    *    of per-dimension categorical densities with add-one smoothing
-    *    (the discrete Parzen estimator), and evaluates the UNSEEN
-    *    candidate maximizing l_good(x)/g_bad(x) — expected-improvement
-    *    surrogate, exploitation where good runs cluster, smoothing
-    *    keeps exploration alive;
-    *
-    * The CONTINUOUS `stepSize` axis is searched natively: discretize
-    * the range with [[logGrid]] (the reference's
-    * `learning_rate ∈ [1e-4, 1e-3]` becomes a dense log-spaced axis)
-    * and the densities score [[quantileBucket]] membership rather than
-    * exact float equality, so evidence from one good rate transfers to
-    * its quantile neighbors — the 1-D Parzen window of continuous TPE,
-    * realized as equal-count bins. The Prod2VecSpec convergence law
-    * drives this against a closed-form objective: with budget ≪ |space|
-    * the search concentrates its evaluations in the optimum's bucket.
-    * 3. stops at `budget` evaluations (≤ one training per step, the
-    *    actual cost unit) and returns the same (runs table, best row)
-    *    shape as [[tune]] — iteration = evaluation order.
-    *
-    * Deterministic: the only randomness is the seeded warmup draw, so a
-    * (space, budget, seed) triple replays exactly; with budget ≥ |space|
-    * the search is exhaustive and the best row EQUALS grid [[tune]]'s
-    * (the Prod2VecSpec law). Driver-paced like every trainer here; each
-    * step is one Spark training job, the TPE bookkeeping is O(|space|)
-    * driver arithmetic. */
-  def tuneSearch(basketDf: DataFrame, space: Seq[Params],
-                 coPairs: DataFrame, budget: Int, seed: Long = 42L,
-                 initRandom: Int = 3): (DataFrame, DataFrame) = {
-    val spark = basketDf.sparkSession
-    import spark.implicits._
-    val evaluated =
-      tpeOrder(space, budget, seed, initRandom)(
-        p => evalObjective(basketDf, p, coPairs))
-    val runs = evaluated.zipWithIndex.map { case ((i, obj), step) =>
-      val p = space(i)
-      (s"run_dim${p.vectorSize}_lr${p.stepSize}", obj, step.toLong)
-    }.toDF("job_name", "objective", "start_ms")
-    val table = Similarity.withIteration(runs, "start_ms")
-      .withColumn("iteration", col("iteration").cast("long"))
-    (table, Similarity.bestRow(table, "objective"))
-  }
-
-  /** Deterministic log-spaced grid over [lo, hi] — the dense
-    * discretization that turns a continuous range (the reference's
-    * `learning_rate ∈ [1e-4, 1e-3]`, `prod2vec_config.yaml:49-55`)
-    * into a TPE-searchable candidate axis. Endpoints included. */
-  def logGrid(lo: Double, hi: Double, n: Int): Seq[Double] = {
-    require(lo > 0 && hi > lo, s"need 0 < lo < hi, got [$lo, $hi]")
-    require(n >= 2, s"need n >= 2 grid points, got $n")
-    (0 until n).map(i =>
-      math.exp(math.log(lo) + (math.log(hi) - math.log(lo)) * i / (n - 1)))
-  }
-
-  /** Quantile bucket of a continuous dimension's value within the
-    * candidate space's OWN empirical distribution: rank among the
-    * sorted distinct values, folded onto at most `buckets` equal-count
-    * bins. This is what makes a densely discretized continuous axis
-    * (e.g. [[logGrid]]'s 16 learning rates) searchable: the Parzen
-    * densities score BUCKET membership, so evidence from one good rate
-    * transfers to its quantile neighbors instead of every float being
-    * its own lonely category. With ≤ `buckets` distinct values each
-    * value keeps its own bucket — the discrete-categorical behavior
-    * (and every existing law) is the degenerate case. */
-  private[graft] def quantileBucket(values: Seq[Double], v: Double,
-                                    buckets: Int = 4): Int = {
-    val sorted = values.distinct.sorted
-    val r = sorted.indexOf(v)
-    require(r >= 0, s"value $v not in the candidate space's dimension")
-    r * math.min(buckets, sorted.size) / sorted.size
-  }
-
-  /** The TPE search core, Spark-free: returns the (space index,
-    * objective) evaluations in evaluation order. Extracted so the
-    * search dynamics — warmup, γ-split, bucketed densities,
-    * convergence — are law-checkable against a closed-form objective
-    * without training a model per step. */
-  private[graft] def tpeOrder(space: Seq[Params], budget: Int, seed: Long,
-                              initRandom: Int)(
-                              objective: Params => Double): Seq[(Int, Double)] = {
-    require(space.nonEmpty, "tuneSearch needs a non-empty space")
-    require(budget >= 1, s"budget must be >= 1, got $budget")
-    val rnd = new scala.util.Random(seed)
-    val n = math.min(budget, space.size)
-    // per-dimension views of a candidate (the tree structure — here one
-    // flat level): categorical densities per dimension, with the
-    // continuous stepSize axis quantile-bucketed against the space's
-    // own distribution (integer axes stay exact categories — their
-    // candidate counts are small by construction)
-    val stepVals = space.map(_.stepSize)
-    def dims(p: Params): Seq[(String, String)] = Seq(
-      "vectorSize" -> p.vectorSize.toString,
-      "windowSize" -> p.windowSize.toString,
-      "maxIter" -> p.maxIter.toString,
-      "minCount" -> p.minCount.toString,
-      "stepSize" -> quantileBucket(stepVals, p.stepSize).toString,
-      "maxSentenceLength" -> p.maxSentenceLength.toString)
-    val warmup = rnd.shuffle(space.indices.toList).take(math.min(initRandom, n))
-    val evaluated = scala.collection.mutable.LinkedHashMap.empty[Int, Double]
-    warmup.foreach { i => evaluated(i) = objective(space(i)) }
-    while (evaluated.size < n) {
-      val obs = evaluated.toSeq
-      // γ-quantile split: the best ~25% (at least 1) are "good"
-      val sorted = obs.sortBy(_._2)
-      val nGood = math.max(1, (sorted.size * 0.25).toInt)
-      val good = sorted.take(nGood).map(_._1)
-      val bad = sorted.drop(nGood).map(_._1)
-      def density(members: Seq[Int])(cand: Params): Double =
-        dims(cand).map { case (d, v) =>
-          val cnt = members.count(i => dims(space(i)).contains(d -> v))
-          val distinct = space.map(p => dims(p).toMap.apply(d)).distinct.size
-          (cnt + 1.0) / (members.size + distinct.toDouble)
-        }.product
-      val l = density(good) _
-      val g = density(bad) _
-      val next = space.indices
-        .filterNot(evaluated.contains)
-        .maxBy(i => (l(space(i)) / g(space(i)), -i)) // deterministic tie
-      evaluated(next) = objective(space(next))
-    }
-    evaluated.toSeq
   }
 }

@@ -1,13 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Basket construction (SURVEY.md §2.4 A1, §2.5 A6', §2.2 P7).
+/** Basket construction (SURVEY.md §2.4 A1). The reference's shuffle
+  * and length cap (A6', P7) live in [[Pairs.orderedBaskets]].
   *
   * Reference: `pipeline/data_preprocessing/data_prep.py:17-44`
-  * (`create_prod_lists` — pandas groupby → list-of-lists) and
-  * `data_prep.py:156-160` (`random.shuffle` + `[0:max_basket_length]`).
+  * (`create_prod_lists` — pandas groupby → list-of-lists).
   *
   * Spark shape: one hash aggregation keyed on the basket id. At 100 TB this
   * is the pipeline's first shuffle; everything downstream that is keyed on
@@ -16,62 +16,14 @@ import org.apache.spark.sql.functions._
   */
 object Baskets {
 
-  /** A1: group-collect — one row per basket, items as an array column.
-    * Collect order is nondeterministic (both here and in pandas groupby
-    * under parallel read), so callers that depend on order must impose one:
-    * [[sortedBaskets]] for a canonical form, [[shuffledDeterministic]] for
-    * the reference's randomized order.
-    */
-  def collect(df: DataFrame, basketCol: String, itemCol: String): DataFrame =
-    df.groupBy(col(basketCol))
-      .agg(collect_list(col(itemCol)).as("basket"))
-
   /** A1 canonical variant: items sorted ascending within the basket —
     * deterministic, oracle-friendly. */
   def sortedBaskets(df: DataFrame, basketCol: String, itemCol: String): DataFrame =
     df.groupBy(col(basketCol))
       .agg(sort_array(collect_list(col(itemCol))).as("basket"))
 
-  /** A1 sequence variant: items ordered by an explicit position column
-    * (e.g. `l_linenumber`, `add_to_cart_order`) — the deterministic stand-in
-    * for "basket order as scanned". */
-  def sequenceBaskets(df: DataFrame, basketCol: String, itemCol: String,
-                      posCol: String): DataFrame =
-    df.groupBy(col(basketCol))
-      .agg(array_sort(collect_list(
-          struct(col(posCol).as("__pos"), col(itemCol).as("__item"))))
-        .getField("__item").as("basket"))
-
-  /** A6': seeded deterministic shuffle of an array column.
-    *
-    * The reference does `random.shuffle(sequence)` (`data_prep.py:156-157`)
-    * — order is irrelevant semantically, the shuffle just randomizes which
-    * neighbors fall inside the skip-gram window. We sort elements by a
-    * seeded 64-bit hash of (basket key, element): same distributional
-    * effect, bit-for-bit reproducible across runs and cluster sizes (no
-    * RNG state tied to partitioning) — and, because the hash does NOT
-    * depend on the input array's order, reproducible even when the input
-    * order is itself nondeterministic (e.g. raw [[collect]] output).
-    *
-    * Duplicate elements hash identically and become interchangeable
-    * identical `(h, x)` structs — any permutation of them is the same
-    * array, so the output is still well-defined.
-    */
-  def shuffledDeterministic(df: DataFrame, basketCol: String,
-                            basketArr: String = "basket",
-                            seed: Long = 42L): DataFrame =
-    // (hash, item) structs sorted by (hash, item), then project item out.
-    df.withColumn(basketArr,
-      expr(s"transform(array_sort(transform($basketArr, x -> " +
-        s"struct(xxhash64($basketCol, x, ${seed}L) AS h, x AS item))), s -> s.item)"))
-
-  /** P7: basket truncation — `sequence[0:max_basket_length]`
-    * (`data_prep.py:160`, cap 50 from `config/prod2vec_config.yaml:28`). */
-  def truncate(df: DataFrame, basketArr: String, maxLen: Int): DataFrame =
-    df.withColumn(basketArr, slice(col(basketArr), 1, maxLen))
-
   /** Basket length distribution — the sanity profile a data team reads
-    * before choosing [[truncate]]'s cap (q222): one row per distinct
+    * before choosing a basket-length cap (q222): one row per distinct
     * basket size with the basket count. One map-side-combined groupBy
     * over sizes already in hand — no re-scan of the item stream. */
   def lengthHistogram(baskets: DataFrame, basketArr: String = "basket"): DataFrame =

@@ -481,22 +481,15 @@ object Dedup {
     * launches, its mass Σ_sh df² (over the maxDf-surviving shingles —
     * an upper bound on candidate rows; self-matches counted here,
     * excluded by the join) is priced from the posting-count frame. If
-    * it exceeds `maxCandidatePairs` the join does NOT run: with
-    * `autoSample = false` (default) the call throws, naming the
-    * measured mass and the escape hatches (tighten maxDf — the skew
-    * lever removes mass quadratically per hot shingle — raise the
-    * budget, sample, or use the banded path); with `autoSample =
-    * true` the DOCUMENT set is deterministically subsampled
-    * (xxhash64(id, seed) bucket filter) by √(budget/mass) per round
-    * until the re-measured mass fits, and the result is the exact
-    * Jaccard join OF THE SAMPLED corpus — the q119/q145 sample-only
-    * audit contract (measured: the exact chain went 32–43× across the
-    * sf1→sf10 decade while the banded path it audits stayed ~4×). */
+    * it exceeds `maxCandidatePairs` the join does NOT run: the call
+    * throws, naming the measured mass and the escape hatches (tighten
+    * maxDf — the skew lever removes mass quadratically per hot
+    * shingle — raise the budget, or use the banded path; measured:
+    * the exact chain went 32–43× across the sf1→sf10 decade while the
+    * banded path it audits stayed ~4×). */
   def jaccardPairsExact(shingled: DataFrame, idCol: String, tau: Double,
                         maxDf: Long,
-                        maxCandidatePairs: Long = Er.DefaultMaxCandidatePairs,
-                        autoSample: Boolean = false,
-                        sampleSeed: Long = 42L): DataFrame = {
+                        maxCandidatePairs: Long = Er.DefaultMaxCandidatePairs): DataFrame = {
     require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
     require(maxCandidatePairs >= 1,
       s"maxCandidatePairs must be >= 1, got $maxCandidatePairs")
@@ -507,52 +500,27 @@ object Dedup {
     // explode_OUTER + isNotNull, never bare explode: the non-outer form
     // pushes a Filter that re-derives the whole shingle HOF per row
     // (measured 13x this stage's cost at sf0.1)
-    val allPosts = Barrier.cut(shingled
+    val posts = Barrier.cut(shingled
       .select(col(idCol), explode_outer(col("shingles")).as("__sh"))
       .filter(col("__sh").isNotNull))
     // posting-count frame (shingle-bounded, barriered: read by the mass
     // agg and the df filter) + the exactly-priced join mass
-    def priced(posts: DataFrame): (DataFrame, BigDecimal) = {
-      val dfs = Barrier.cut(posts.groupBy(col("__sh"))
-        .agg(count(lit(1)).as("__df"))
-        .filter(col("__df") <= maxDf))
-      val m = dfs.agg(coalesce(
-          sum(col("__df").cast("decimal(38,0)") * col("__df")),
-          lit(0).cast("decimal(38,0)")).as("__m"))
-        .head().getDecimal(0)
-      (dfs, BigDecimal(m))
-    }
-    var posts = allPosts
-    var (dfs, mass) = priced(posts)
-    var fraction = 1.0
-    var rounds = 0
-    while (mass > BigDecimal(maxCandidatePairs)) {
-      if (!autoSample) throw new IllegalArgumentException(
+    val dfs = Barrier.cut(posts.groupBy(col("__sh"))
+      .agg(count(lit(1)).as("__df"))
+      .filter(col("__df") <= maxDf))
+    val mass = BigDecimal(dfs.agg(coalesce(
+        sum(col("__df").cast("decimal(38,0)") * col("__df")),
+        lit(0).cast("decimal(38,0)")).as("__m"))
+      .head().getDecimal(0))
+    if (mass > BigDecimal(maxCandidatePairs))
+      throw new IllegalArgumentException(
         s"jaccardPairsExact pre-flight: the posting self-join would " +
           s"generate $mass candidate rows, over the budget of " +
-          s"$maxCandidatePairs. The exact audit is sample-only at this " +
-          "corpus size: tighten maxDf (each pruned hot shingle removes " +
-          "df² mass), pass autoSample = true to run it on a " +
-          "deterministic uniform document sample, raise " +
-          "maxCandidatePairs if the cluster can pay for the shuffle, " +
-          "or use the banded path (minhashSignatures/lshCandidatePairs" +
-          "/jaccardVerify), which scales linearly.")
-      rounds += 1
-      require(rounds <= 8, "jaccardPairsExact auto-sample did not " +
-        s"converge in 8 rounds (mass $mass vs budget " +
-        s"$maxCandidatePairs) — the shingle universe is too skewed for " +
-        "a uniform document sample; tighten maxDf or use the banded " +
-        "path instead")
-      // pair mass scales ~fraction² for a self-join; 0.9 safety margin
-      fraction *= math.max(1e-6, 0.9 *
-        math.sqrt((BigDecimal(maxCandidatePairs) / mass).toDouble))
-      posts = Barrier.cut(allPosts.filter(
-        pmod(xxhash64(col(idCol), lit(sampleSeed)), lit(1000000000L)) <
-          lit(math.max(1L, math.ceil(fraction * 1e9).toLong))))
-      val r = priced(posts)
-      dfs = r._1
-      mass = r._2
-    }
+          s"$maxCandidatePairs. Tighten maxDf (each pruned hot shingle " +
+          "removes df² mass), raise maxCandidatePairs if the cluster " +
+          "can pay for the shuffle, or use the banded path " +
+          "(minhashSignatures/lshCandidatePairs/jaccardVerify), which " +
+          "scales linearly.")
     val kept = posts.join(dfs.select(col("__sh")), Seq("__sh"))
     // shingle arrays are distinct per doc, so |A| = the doc's post count
     // — counted over KEPT posts, the same universe as the intersection
@@ -663,22 +631,14 @@ object Dedup {
     * pair; feed the distinct ids to a left-anti join to scrub.
     *
     * 100 TB posture: the EVAL side is benchmark-sized by definition, so
-    * by default its posting list broadcasts — the training corpus meets
-    * it in a map-side broadcast hash join and NEVER shuffles
-    * document-sized data; the only aggregation is the (train, eval)
-    * pair count, bounded by matches, not corpus size (PlanSpec pins the
+    * its posting list broadcasts — the training corpus meets it in a
+    * map-side broadcast hash join and NEVER shuffles document-sized
+    * data; the only aggregation is the (train, eval) pair count,
+    * bounded by matches, not corpus size (PlanSpec pins the
     * broadcast). Exact counting over distinct shingles — no MinHash
-    * recall loss, the property a decontamination audit needs.
-    *
-    * `broadcastEval = false` is the escape hatch for a LARGE held-out
-    * corpus (one whose posting list would not fit the driver): the hint
-    * is dropped and the join shuffles both sides on the shingle —
-    * identical output (DedupSpec pins equality of the two paths), no
-    * driver OOM, at the price of shuffling the training posting list
-    * once. */
+    * recall loss, the property a decontamination audit needs. */
   def contamination(shingledTrain: DataFrame, shingledEval: DataFrame,
-                    idCol: String, minShared: Long,
-                    broadcastEval: Boolean = true): DataFrame = {
+                    idCol: String, minShared: Long): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     // explode_OUTER + isNotNull — the Generate-pushdown trap (see
     // jaccardPairsExact)
@@ -687,7 +647,7 @@ object Dedup {
       .filter(col("__sh").isNotNull)
     val evalPosts = posts(shingledEval, "eval_id")
     posts(shingledTrain, idCol)
-      .join(if (broadcastEval) broadcast(evalPosts) else evalPosts, Seq("__sh"))
+      .join(broadcast(evalPosts), Seq("__sh"))
       .groupBy(col(idCol), col("eval_id"))
       .agg(count(lit(1)).as("shared_ngrams"))
       .filter(col("shared_ngrams") >= minShared)
@@ -703,19 +663,18 @@ object Dedup {
     * `minShared = m` bar would flag. One run prices EVERY candidate
     * threshold; without it each bar costs its own contamination pass.
     *
-    * Shape: [[contamination]]'s posting join at minShared = 1 (same
-    * `broadcastEval` contract — the training corpus never shuffles in
-    * broadcast mode), one doc-keyed max agg, one count rollup keyed on
-    * the shared-count value, and the cumulative as a window over that
-    * compact frame (rows ≤ the largest eval document's shingle count —
-    * an audited-bounded global window like the vocab-sized ones). */
+    * Shape: [[contamination]]'s posting join at minShared = 1 (the
+    * training corpus never shuffles), one doc-keyed max agg, one count
+    * rollup keyed on the shared-count value, and the cumulative as a
+    * window over that compact frame (rows ≤ the largest eval
+    * document's shingle count — an audited-bounded global window like
+    * the vocab-sized ones). */
   def contaminationSensitivity(shingledTrain: DataFrame,
-                               shingledEval: DataFrame, idCol: String,
-                               broadcastEval: Boolean = true): DataFrame = {
+                               shingledEval: DataFrame, idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("max_shared").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    contamination(shingledTrain, shingledEval, idCol, 1L, broadcastEval)
+    contamination(shingledTrain, shingledEval, idCol, 1L)
       .groupBy(col(idCol)).agg(max(col("shared_ngrams")).as("max_shared"))
       .groupBy(col("max_shared")).agg(count(lit(1)).as("n_docs"))
       .withColumn("cum_docs_ge", sum(col("n_docs")).over(w))
@@ -737,16 +696,13 @@ object Dedup {
     * the ≤|spine| matched-shingle set. That hit set joins back to the
     * per-doc eval posts (both eval-sized, one doc-keyed agg). The
     * training corpus is read once, filtered map-side, and contributes
-    * no corpus-sized shuffle — same posture as [[contamination]],
-    * with the same `broadcastEval = false` escape hatch for an eval
-    * set too large to broadcast.
+    * no corpus-sized shuffle — same posture as [[contamination]].
     *
     * Output: one row per eval document —
     * (eval_id, n_shingles, n_contaminated, coverage); shingle-less
     * docs report counts 0 and a NULL coverage (never 0/0). */
   def contaminationCoverage(shingledTrain: DataFrame,
-                            shingledEval: DataFrame, idCol: String,
-                            broadcastEval: Boolean = true): DataFrame = {
+                            shingledEval: DataFrame, idCol: String): DataFrame = {
     // explode_OUTER + isNotNull — the Generate-pushdown trap (see
     // jaccardPairsExact); the eval posts feed two consumers (spine and
     // coverage agg), so they pass a Barrier and materialize once
@@ -757,8 +713,7 @@ object Dedup {
     val hit = shingledTrain
       .select(explode_outer(col("shingles")).as("__sh"))
       .filter(col("__sh").isNotNull)
-      .join(if (broadcastEval) broadcast(evalSpine) else evalSpine,
-        Seq("__sh"), "left_semi")
+      .join(broadcast(evalSpine), Seq("__sh"), "left_semi")
       .distinct()
     val per = evalPosts
       .join(hit.withColumn("__hit", lit(1L)), Seq("__sh"), "left")

@@ -41,13 +41,12 @@ object Er {
     * worst case (a low-entropy catalog where every name shares
     * segments); 2e9 candidate pairs ≈ a few hundred GB of shuffled
     * id-pair tuples — the point where the exact audit stops being an
-    * audit and starts being the job. Beyond it, callers must opt into
-    * [[editJoin]]'s `autoSample` escape hatch (a deterministic uniform
-    * name sample sized to the budget), raise the budget explicitly,
-    * or use the banded near-dup path ([[Dedup]] MinHash/LSH), which
-    * scales linearly. Measured basis: the sf1 decade fixture's 197k
-    * part names generate 92M candidates; the sf10 run (~2M names)
-    * DNF'd a 48 GB single JVM — the budget trips between the two. */
+    * audit and starts being the job. Beyond it, callers must raise the
+    * budget explicitly or use the banded near-dup path ([[Dedup]]
+    * MinHash/LSH), which scales linearly. Measured basis: the sf1
+    * decade fixture's 197k part names generate 92M candidates; the
+    * sf10 run (~2M names) DNF'd a 48 GB single JVM — the budget trips
+    * between the two. */
   val DefaultMaxCandidatePairs: Long = 2000000000L
 
   /** Segment start (1-based) for segment `i` of a length-`l` string
@@ -85,18 +84,10 @@ object Er {
     * (vocab-bounded) key-count frames — the [[Quality.joinFanout]]
     * two-agg form on the segment join key, plus the short-pool cross
     * size. If it exceeds `maxCandidatePairs` the join does NOT run:
-    * with `autoSample = false` (default) the call throws, naming the
-    * measured mass and the escape hatches; with `autoSample = true`
-    * the distinct-NAME catalog is deterministically subsampled
-    * (xxhash64(name, seed) bucket filter — stable across partitionings
-    * and runs) by √(budget/mass) per round until the re-measured mass
-    * fits, and the result is the exact, complete edit join OF THE
-    * SAMPLED CATALOG — the documented sample-only audit contract for
-    * catalogs whose exact all-pairs audit is quadratic. */
+    * the call throws, naming the measured mass and the escape
+    * hatches. */
   def editJoin(df: DataFrame, strCol: String, k: Int,
-               maxCandidatePairs: Long = DefaultMaxCandidatePairs,
-               autoSample: Boolean = false,
-               sampleSeed: Long = 42L): DataFrame = {
+               maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame = {
     require(k >= 1, s"edit-distance threshold k must be >= 1, got $k")
     require(maxCandidatePairs >= 1,
       s"maxCandidatePairs must be >= 1, got $maxCandidatePairs")
@@ -122,33 +113,15 @@ object Er {
           .cast("long"))
         .repartition(col("id")))
 
-    var strs = all
-    var cand = candidateFrames(strs, k)
-    var fraction = 1.0
-    var rounds = 0
-    while (cand.mass > BigDecimal(maxCandidatePairs)) {
-      if (!autoSample) throw new IllegalArgumentException(
+    val cand = candidateFrames(all, k)
+    if (cand.mass > BigDecimal(maxCandidatePairs))
+      throw new IllegalArgumentException(
         s"editJoin pre-flight: the segment join would generate " +
           s"${cand.mass} candidate pairs, over the budget of " +
-          s"$maxCandidatePairs. The exact audit is sample-only at this " +
-          "catalog size: pass autoSample = true to run it on a " +
-          "deterministic uniform name sample, raise maxCandidatePairs " +
+          s"$maxCandidatePairs. Raise maxCandidatePairs " +
           "if the cluster can pay for the shuffle, or use the banded " +
           "near-dup path (Dedup MinHash/LSH), which scales linearly.")
-      rounds += 1
-      require(rounds <= 8, "editJoin auto-sample did not converge in 8 " +
-        s"rounds (mass ${cand.mass} vs budget $maxCandidatePairs) — the " +
-        "catalog is too skewed for a uniform sample; use the banded " +
-        "near-dup path instead")
-      // pair mass scales ~fraction² for a self-join; 0.9 safety margin
-      fraction *= math.max(1e-6, 0.9 *
-        math.sqrt((BigDecimal(maxCandidatePairs) / cand.mass).toDouble))
-      strs = Barrier.cut(all.filter(
-        pmod(xxhash64(col("s"), lit(sampleSeed)), lit(1000000000L)) <
-          lit(math.max(1L, math.ceil(fraction * 1e9).toLong))))
-      cand = candidateFrames(strs, k)
-    }
-    verifiedPairs(strs, cand, k)
+    verifiedPairs(all, cand, k)
   }
 
   /** The two candidate-generation frames plus their exactly-priced
@@ -281,19 +254,14 @@ object Er {
     * final join.
     *
     * Inherits [[editJoin]]'s candidate-mass pre-flight: over budget it
-    * throws unless `autoSample = true`, in which case the match graph
-    * comes from the sampled-catalog edit join — unsampled names stay
-    * their own canonical (the sample-only audit contract; full-catalog
-    * resolution at that scale belongs to the banded near-dup path). */
+    * throws (full-catalog resolution at that scale belongs to the
+    * banded near-dup path). */
   def resolveEntities(df: DataFrame, strCol: String, k: Int,
-                      maxCandidatePairs: Long = DefaultMaxCandidatePairs,
-                      autoSample: Boolean = false,
-                      sampleSeed: Long = 42L): DataFrame = {
+                      maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val strs = df.groupBy(col(strCol).as("name"))
       .agg(count(lit(1)).as("n_rows"))
-    val pairs = editJoin(df, strCol, k, maxCandidatePairs, autoSample,
-        sampleSeed)
+    val pairs = editJoin(df, strCol, k, maxCandidatePairs)
       .select(col("name_a").as("id_a"), col("name_b").as("id_b"))
     val clusters = Dedup.nearDupClusters(pairs, "name")
     val labeled = strs.join(clusters, Seq("name"), "left")

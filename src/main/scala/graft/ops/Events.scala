@@ -386,27 +386,6 @@ object Events {
         count(lit(1)).as("n")): _*)
   }
 
-  /** [[quantileProfile]]'s scale twin: `percentile_approx` (Greenwald-
-    * Khanna sketch) instead of exact order statistics. The exact form
-    * buffers every value of a group on one task; the sketch is a
-    * mergeable partial aggregate with O(accuracy) memory per group —
-    * the swap to reach for when a single event_type carries billions of
-    * rows. Guarantee: rank error ≤ n/accuracy (EventsSpec proves the
-    * bound against the exact profile on the fixture). Spec-only: DuckDB's
-    * approx_quantile is a different sketch, so no oracle parity. */
-  def quantileProfileApprox(events: DataFrame, probs: Seq[Double],
-                            accuracy: Int): DataFrame = {
-    require(accuracy >= 1, s"accuracy must be >= 1, got $accuracy")
-    val qs = quantileCols(probs).map { case (p, name) =>
-      expr(s"percentile_approx(value, ${p}D, $accuracy)").as(name)
-    }
-    events.groupBy(col("event_type"))
-      .agg(qs.head, qs.tail ++ Seq(
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"),
-        count(lit(1)).as("n")): _*)
-  }
-
   /** Sequential conversion funnel: for the ordered `stages` event
     * types, a user reaches stage k iff they have a stage-k event
     * STRICTLY AFTER the time they reached stage k−1 (first-occurrence

@@ -229,18 +229,19 @@ object Graph {
       .union(e.select(col("hi").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
     val orig = Barrier.cut(degrees(e0))
+    var prev = e0
     var edges = e0
-    var lastRemoved = 0L
     for (_ <- 1 to rounds) {
       val keep = degrees(edges).filter(col("deg") >= k)
         .select(col("id"))
-      val next = Barrier.cut(edges
+      prev = edges
+      edges = Barrier.cut(edges
         .join(keep.withColumnRenamed("id", "lo"), Seq("lo"), "left_semi")
         .join(keep.withColumnRenamed("id", "hi"), Seq("hi"), "left_semi")
         .select(col("lo"), col("hi")))
-      lastRemoved = edges.count() - next.count()
-      edges = next
     }
+    // only the last round decides `converged`: two counts per call
+    val lastRemoved = prev.count() - edges.count()
     val core = degrees(edges).filter(col("deg") >= k).select(col("id"))
     orig
       .join(core.withColumn("__in", lit(true)), Seq("id"), "left")

@@ -48,7 +48,7 @@ object Kmeans {
         .as("cluster"))
   }
 
-  /** The Lloyd-update pooling sums shared by [[step]] and
+  /** The Lloyd-update pooling sums shared by [[fit]]'s step and
     * [[Quantize.pqTrain]] — per-dimension exact-LONG sums of the
     * 1e9-integerized coordinates, [[Similarity.meanPoolEmbeddings]]'s
     * arithmetic verbatim (sum order is commutative over longs, the one
@@ -78,11 +78,6 @@ object Kmeans {
     * one whole extra corpus shuffle per Lloyd step. Arithmetic is
     * meanPoolEmbeddings' verbatim ([[poolSums]]/[[poolMean]]), so the
     * centroids are bit-identical. */
-  def step(df: DataFrame, idCol: String, vecCol: String,
-           centroids: DataFrame): DataFrame =
-    stepWithDim(df, idCol, vecCol, centroids,
-      df.select(size(col(vecCol)).as("n")).head().getInt(0))
-
   private def stepWithDim(df: DataFrame, idCol: String, vecCol: String,
                           centroids: DataFrame, dim: Int): DataFrame = {
     val cen = centroids.select(col(idCol).as("__cid"),

@@ -2,9 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** Data-quality gates (SURVEY.md §2.7 Q1-Q5).
+/** Data-quality gates (SURVEY.md §2.7 Q1, Q3, Q5 — the three the
+  * pipeline runs; Q4's dtype check is [[Sources.parquetSchemaAudit]]).
   *
   * Reference: `pipeline/data_preprocessing/data_quality_checks.py:7-133` —
   * five hard-fail assertions wired as an Airflow stage
@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   * (`check_product_counts` hard-codes fixture-specific ranges at
   * `data_quality_checks.py:49-57`).
   *
-  * Scale posture: Q3/Q4 are metadata-only (no job). Q1/Q2/Q5 are single
+  * Scale posture: Q3 is metadata-only (no job). Q1/Q5 are single
   * aggregations (Q1 over all its columns at once); [[report]] fuses all
   * column null-counts into ONE pass over the data instead of a count()
   * per column.
@@ -35,35 +35,9 @@ object Quality {
       }
     }
 
-  /** Q2: `check_product_counts` — distinct count within an exclusive range
-    * (`data_quality_checks.py:29-57`). */
-  def checkDistinctInRange(df: DataFrame, column: String,
-                           lo: Long, hi: Long): Unit = {
-    val n = df.select(countDistinct(col(column))).head().getLong(0)
-    if (n <= lo || n >= hi)
-      throw QualityError(
-        s"distinct($column) = $n outside exclusive range ($lo, $hi)")
-  }
-
-  /** Q2 at 100 TB: exact `countDistinct` shuffles every distinct value to
-    * one aggregation — on a high-cardinality column of a 100 TB table
-    * that is the gate's own bottleneck. HyperLogLog++
-    * (`approx_count_distinct`) is map-side-combinable constant-size
-    * sketch state; `rsd` is the standard-error knob (default 5%). The
-    * caller widens the (lo, hi) gate by the expected error — a GATE
-    * wants "order of magnitude sane", not exactness. */
-  def checkDistinctInRangeApprox(df: DataFrame, column: String,
-                                 lo: Long, hi: Long,
-                                 rsd: Double = 0.05): Unit = {
-    val n = df.select(approx_count_distinct(col(column), rsd)).head().getLong(0)
-    if (n <= lo || n >= hi)
-      throw QualityError(
-        s"approx_distinct($column) = $n (rsd=$rsd) outside exclusive range ($lo, $hi)")
-  }
-
   /** Q3: `check_column_counts` — column arity (metadata only, no job;
     * `data_quality_checks.py:60-83`). The storage-level oracle-verified
-    * form of this gate and [[checkSchema]]'s is
+    * form of this gate and of Q4's dtype check is
     * [[graft.ops.Sources.parquetSchemaAudit]] (q160): what the files
     * declare, independent of the reader. */
   def checkColumnCount(df: DataFrame, expected: Int): Unit =
@@ -71,15 +45,6 @@ object Quality {
       throw QualityError(
         s"expected $expected columns, found ${df.columns.length}: " +
           df.columns.mkString(","))
-
-  /** Q4: `check_dtypes` — schema equality by (name → type), nullability
-    * ignored like the pandas dtype map (`data_quality_checks.py:86-109`). */
-  def checkSchema(df: DataFrame, expected: StructType): Unit = {
-    val got = df.schema.map(f => f.name -> f.dataType).toMap
-    val want = expected.map(f => f.name -> f.dataType).toMap
-    if (got != want)
-      throw QualityError(s"schema mismatch: got $got, want $want")
-  }
 
   /** Q5: `check_records_in_products_dict` — primary-key uniqueness; pandas
     * `to_dict` silently collapses duplicate keys, the check catches that
@@ -2122,31 +2087,16 @@ object Quality {
     *
     * The choice is physical-only: salted counts are algebraic, so ANY
     * salt count yields identical values (the PairsSpec law) — which is
-    * why an ESTIMATE is safe. `sampleOneIn` > 1 profiles a deterministic
-    * 1-in-N row sample (keyed hash over the whole row, no RNG) — shares
-    * are scale-free so the estimate converges fast; at 100 TB run the
-    * pre-flight at sampleOneIn ≈ 100+ and the probe costs 1% of a scan.
-    * The 1-row collect is a bounded driver probe (best-run contract). */
-  def autoSalts(df: DataFrame, keyCols: Seq[String], parallelism: Int,
-                sampleOneIn: Int = 1): Int = {
+    * why an ESTIMATE is safe. The probe projects ONLY the key columns,
+    * so column pruning reaches its scan. The 1-row collect is a bounded
+    * driver probe (best-run contract). */
+  def autoSalts(df: DataFrame, keyCols: Seq[String], parallelism: Int): Int = {
     require(parallelism >= 1, s"parallelism must be >= 1, got $parallelism")
-    require(sampleOneIn >= 1, s"sampleOneIn must be >= 1, got $sampleOneIn")
     // '\\u0001' separator: composite keys must not alias ("ab","c" vs
     // "a","bc"); an alias would only merge keys and over-provision
     // salts, but there is no reason to accept even that
     val key = concat_ws("\u0001", keyCols.map(col): _*).as("__key")
-    // unsampled probes project ONLY the key columns, so column pruning
-    // reaches the probe's scan; the row hash (over every column — rows
-    // need no id) exists only on the sampled path
-    val sampled =
-      if (sampleOneIn == 1) df.select(key)
-      else df
-        .select(key,
-          Portable.seededHash(df.columns.toIndexedSeq.map(col): _*)
-            .as("__h"))
-        .filter(pmod(col("__h"), lit(sampleOneIn.toLong)) === 0)
-        .select(col("__key"))
-    val probe = keySkew(sampled, "__key")
+    val probe = keySkew(df.select(key), "__key")
       .select(col("max_key_share"), col("n_rows")).collect()
     if (probe.isEmpty || probe(0).isNullAt(0)) 1
     else {

@@ -395,15 +395,6 @@ object Sampling {
           .as("rate"))
   }
 
-  def ratesForTargets(df: DataFrame, sourceCol: String, textCol: String,
-                      targets: DataFrame): DataFrame =
-    df.groupBy(col(sourceCol))
-      .agg(sum(size(Text.tokens(col(textCol))).cast("long")).as("__cur"))
-      .join(targets, Seq(sourceCol))
-      .select(col(sourceCol),
-        least(lit(1.0), col("target_tokens").cast("double") / col("__cur"))
-          .as("rate"))
-
   /** Token-stream packing (the GPT-2-style pre-training layout):
     * concatenate every document's tokens into one stream and cut it
     * into fixed `seqTokens`-token training sequences, documents

@@ -69,9 +69,7 @@ object Similarity {
   /** [[coPurchaseTopK]] with the salt count CHOSEN by the
     * [[Quality.autoSalts]] skew pre-flight instead of supplied by the
     * caller — the production wiring for a pair stream whose skew is
-    * unknown: probe the (target, context) key's mass (`sampleOneIn`
-    * thins the probe deterministically — at 100 TB run it at 100+ so
-    * the pre-flight costs ~1% of a scan), take
+    * unknown: probe the (target, context) key's mass, take
     * ⌈max_key_share × parallelism⌉ salts clamped to the `floorSalts`..
     * parallelism band, and run the salted two-stage count with it.
     * Values are identical for every salt choice (the saltedCounts law),
@@ -80,8 +78,7 @@ object Similarity {
     * which is why the oracle-gated q14 keeps an explicit constant and
     * this form is its own gated query (q147). */
   def coPurchaseTopKAuto(pairs: DataFrame, k: Int, parallelism: Int,
-                         floorSalts: Int = 1,
-                         sampleOneIn: Int = 1): DataFrame = {
+                         floorSalts: Int = 1): DataFrame = {
     // The probe and the salted count are TWO consumers of the pair
     // lineage (encode join → basket window → skip-gram self-join) —
     // materialize it once behind a barrier so the pre-flight costs a
@@ -90,7 +87,7 @@ object Similarity {
     // invariant either way, so this changes plan shape only.
     val cut = graft.ops.Barrier.cut(pairs)
     val salts = math.max(floorSalts, Quality.autoSalts(
-      cut, Seq("target", "context"), parallelism, sampleOneIn))
+      cut, Seq("target", "context"), parallelism))
     coPurchaseTopK(cut, k, salts)
   }
 

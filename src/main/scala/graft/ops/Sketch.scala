@@ -166,22 +166,6 @@ object Sketch {
       .agg(max(col("rho")).as("max_rho"))
   }
 
-  /** Merge two register tables by pairwise max — the composition that
-    * makes HLL the right distinct-counter for a sharded/incremental
-    * corpus: registers of day N+1 merge into the running table without
-    * touching day ≤ N's data, and registers of disjoint shards built
-    * independently merge into exactly the whole-corpus table
-    * (law-checked in SketchSpec). Works in Structured Streaming
-    * unchanged: `groupBy(key, bucket).max` needs NO watermark to stay
-    * bounded, because the state is ≤ m rows per key BY CONSTRUCTION —
-    * the rare streaming aggregation whose state does not grow with the
-    * stream (StreamOpsSpec runs [[hllRegisters]] itself as a streaming
-    * query and asserts the final table equals the batch one). */
-  def hllMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("key"), col("bucket"))
-      .agg(max(col("max_rho")).as("max_rho"))
-
   /** Per-key raw HLL estimate from a register table — the serving-side
     * half of [[hllAudit]] (same exact-BIGINT harmonic sum, same fixed
     * IEEE op sequence; see there for the determinism and small-range

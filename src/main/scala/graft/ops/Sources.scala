@@ -28,13 +28,6 @@ object Sources {
     StructField("add_to_cart_order", LongType, nullable = true),
     StructField("reordered", LongType, nullable = true)))
 
-  /** Catalog dim schema — `products.csv` (`data_quality_checks.py:175-183`). */
-  val productsSchema: StructType = StructType(Seq(
-    StructField("product_id", LongType, nullable = false),
-    StructField("product_name", StringType, nullable = true),
-    StructField("aisle_id", LongType, nullable = true),
-    StructField("department_id", LongType, nullable = true)))
-
   /** S1: header CSV scan with a pinned schema (no inference). */
   def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).option("header", "true").csv(path)

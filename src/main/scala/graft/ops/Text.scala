@@ -219,18 +219,6 @@ object Text {
   private[graft] def langOf(signals: Column): Column =
     coalesce(signals.getField("lang"), lit("und"))
 
-  /** Map-only column form of [[languageId]] — the STREAM-SAFE language
-    * gate: no explode, no aggregation, no window, so it runs inside a
-    * `writeStream` pipeline in append mode where the relational form
-    * (groupBy + rank) cannot. Token-array compatibility wrapper over
-    * [[langIdTextColumn]]: `array_join(toks, " ")` reconstructs the
-    * exact space-delimited segment list the counts are defined over
-    * (tokens never contain a space — they came from splitting on it),
-    * so the two forms are value-identical; callers holding the TEXT
-    * should call [[langIdTextColumn]] directly and skip the join. */
-  def langIdColumn(toks: Column): Column =
-    langIdTextColumn(array_join(toks, " "))
-
   /** C4-style text normalization: Spark's `lower`, then the
     * `[a-z0-9]+` runs joined by single spaces
     * ([[graft.functions.AsciiFold]], one byte pass) — byte-identical to

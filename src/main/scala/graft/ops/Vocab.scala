@@ -28,11 +28,6 @@ object Vocab {
     * (`data_prep.py:82-83`: `dictionary` seeded with `UNK → 0`). */
   val UnkIndex: Int = 0
 
-  /** Sentinel key for the UNK row in the vocab table (the reference uses
-    * the string "UNK" in a heterogeneous list; we keep the key column
-    * typed and use -1, which cannot collide with a real id). */
-  val UnkKey: Long = -1L
-
   /** A2: frequency count + top-(K-1), tiebreak (count DESC, id ASC).
     * Output: (product_id, cnt) — the `count` list sans its UNK head row. */
   def topK(df: DataFrame, itemCol: String, numProds: Int): DataFrame =
@@ -53,20 +48,6 @@ object Vocab {
     vocabCounts.withColumn("idx",
       row_number().over(Window.orderBy(desc("cnt"), asc("product_id"))))
 
-  /** A2+A3+A4 combined: full vocab table including the UNK row at idx 0
-    * carrying the OOV occurrence count (`count[0][1] = unk_count`,
-    * `data_prep.py:103`). */
-  def build(df: DataFrame, itemCol: String, numProds: Int): DataFrame = {
-    val vocab = withIndex(topK(df, itemCol, numProds))
-    val unkCnt = df.join(
-        broadcast(vocab.select(col("product_id").as("__vk"))),
-        df(itemCol) === col("__vk"), "left_anti")
-      .agg(count(lit(1)).as("cnt"))
-      .select(lit(UnkKey).as("product_id"), col("cnt"),
-        lit(UnkIndex).as("idx"))
-    unkCnt.unionByName(vocab)
-  }
-
   /** J4 + A4: integer-encode a fact table through the vocab with UNK → 0.
     *
     * The pandas per-element `dictionary[prod] if prod in dictionary else 0`
@@ -81,8 +62,4 @@ object Vocab {
       .withColumn("idx", coalesce(col("idx"), lit(UnkIndex)))
       .drop("__vk")
   }
-
-  /** A4 standalone: count of OOV occurrences in a fact column. */
-  def unkCount(df: DataFrame, itemCol: String, vocab: DataFrame): Long =
-    encode(df, itemCol, vocab).filter(col("idx") === UnkIndex).count()
 }

@@ -652,30 +652,17 @@ private[graft] object StreamQueries {
 
     // q274's export composed into the STREAMING story: raw documents
     // ride a micro-batched file stream into exportStream, which appends
-    // each batch to a documents-at-rest dir and re-derives the whole
-    // funnel + exportShards over everything at rest (the landing-zone
-    // posture — a global packer is a batch view over data at rest, not
-    // executor state). Every refresh is a certified snapshot of the
-    // corpus-so-far; the FINAL refresh (all 4 files ingested) must
-    // equal the one-shot batch export bit-for-bit — q274's own oracle
-    // hashes the streamed manifest. Closes the last batch/stream
-    // asymmetry: every public stage now has a streaming twin.
+    // each batch to a documents-at-rest dir (the landing-zone posture —
+    // a global packer is a batch view over data at rest, not executor
+    // state). After ingest, one refreshExport derives the whole funnel
+    // + exportShards over everything at rest; it must equal the
+    // one-shot batch export bit-for-bit — q274's own oracle hashes the
+    // streamed manifest.
     Query("q277_corpus_export_stream", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      // Production refresh cadence (r15 optimization): the landing
-      // writes run per trigger as before, but the funnel + export
-      // re-derivation — a full batch export per refresh — runs ON
-      // DEMAND once, after ingest, instead of once per micro-batch
-      // (refreshEvery = 0, the never-in-stream cadence). The manifest
-      // is a pure function of the at-rest SET (the Rq277b spec law),
-      // so the on-demand refresh is bit-identical to the last
-      // per-trigger refresh the previous harness collected — same
-      // rows, same hash — for ONE funnel derivation instead of four.
       Replay.replay(docs, "q277") { sdf =>
         Replay.withTempDir("q277_at_rest") { atRest =>
-          Replay.drain(StreamOps.exportStream(sdf, atRest, CurateCfg,
-            EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
-            PackShards, refreshEvery = 0) { (_, _) => () }.start())
+          Replay.drain(StreamOps.exportStream(sdf, atRest).start())
           Replay.lastFrame(s, "final refresh produced no manifest") {
             keep => StreamOps.refreshExport(s, atRest, CurateCfg,
               EpochWeights, EpochBudget, EpochRealizeSalt, PackSeqTokens,
@@ -684,8 +671,8 @@ private[graft] object StreamQueries {
         }
       }.orderBy("shard")
     },
-    // q277 streams raw documents into micro-batch ingest and re-derives
-    // the funnel+export over everything at rest — its FINAL refresh must
+    // q277 lands raw documents through micro-batch ingest and derives
+    // the funnel+export over everything at rest — that refresh must
     // equal the one-shot batch export over the same documents, so the
     // batch entry's oracle is its oracle, verbatim.
       corpusExportOracleSql),

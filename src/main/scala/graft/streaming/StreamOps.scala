@@ -585,12 +585,11 @@ object StreamOps {
       }
   }
 
-  /** Streaming twin of the batch funnel-to-shards export (q274): raw
-    * documents ingest as micro-batches APPENDING to a documents-at-rest
-    * location, and each micro-batch re-derives the whole
-    * [[graft.app.CorpusPipeline.curate]] funnel +
-    * [[graft.app.CorpusPipeline.exportShards]] over everything at rest,
-    * handing the refreshed (manifest, batchId) to `sink`.
+  /** Streaming ingest half of the batch funnel-to-shards export
+    * (q274): raw documents land as micro-batches APPENDING to a
+    * documents-at-rest location; [[refreshExport]] then derives the
+    * whole [[graft.app.CorpusPipeline.curate]] funnel +
+    * [[graft.app.CorpusPipeline.exportShards]] over everything at rest.
     *
     * Why the state lives in the at-rest table and not in stream state:
     * the export's tail is a GLOBAL packer (hash-priority packing over
@@ -602,56 +601,26 @@ object StreamOps {
     * is at-least-once, so a checkpointed restart replays the last
     * batch; the overwrite makes the replay a no-op, the standard
     * foreachBatch exactly-once pattern), and the export is a
-    * deterministic BATCH VIEW over data at rest, re-derived per
-    * refresh. Because every stage is a pure function of the at-rest
-    * SET (keyed-hash epoch realization, hash-priority packing, pinned
-    * survivorship), arrival order and batch boundaries cannot change a
-    * refresh — and the final refresh equals the one-shot batch export
-    * over the same documents bit-for-bit (the q277 gate, q274's own
-    * oracle).
-    *
-    * Intermediate refreshes are each internally consistent manifests of
-    * the corpus-so-far (a training run launched between refreshes sees
-    * a certified snapshot); they are NOT prefixes of the final manifest
-    * — near-dedup and epoch factors legitimately shift as the corpus
-    * grows. The funnel's persisted frames are unpersisted after each
-    * refresh so block-manager state does not accumulate across
-    * batches.
-    *
-    * `refreshEvery` separates the certification cadence from the
-    * production posture: per-trigger re-derivation (the default, 1) is
-    * what lets q277 hash every snapshot, but at scale a refresh costs
-    * a full batch export, so a production stream refreshes every N
-    * batches — or never in-stream (`refreshEvery = 0`), calling
-    * [[refreshExport]] on demand. Skipping refreshes cannot change any
-    * later one: the manifest is a pure function of the at-rest set,
-    * which the landing writes maintain regardless (the Rq277b spec
-    * law, pinned for both the every-N and the never-in-stream
-    * cadence). */
-  def exportStream(docs: DataFrame, atRestDir: String,
-                   cfg: graft.app.CorpusPipeline.Config,
-                   weights: Map[String, Double], tokenBudget: Long,
-                   realizeSalt: String, seqTokens: Int, shards: Int,
-                   refreshEvery: Int = 1)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    require(refreshEvery >= 0,
-      s"refreshEvery must be >= 0 (0 = never in-stream), got $refreshEvery")
+    * deterministic BATCH VIEW over data at rest. Because every stage is
+    * a pure function of the at-rest SET (keyed-hash epoch realization,
+    * hash-priority packing, pinned survivorship), arrival order and
+    * batch boundaries cannot change a refresh — and a refresh after the
+    * last batch equals the one-shot batch export over the same
+    * documents bit-for-bit (the q277 gate, q274's own oracle). */
+  def exportStream(docs: DataFrame, atRestDir: String): DataStreamWriter[Row] =
     docs.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         batch.write.mode("overwrite").parquet(s"$atRestDir/batch=$id")
-        if (refreshEvery > 0 && id % refreshEvery == 0)
-          refreshExport(batch.sparkSession, atRestDir, cfg, weights,
-            tokenBudget, realizeSalt, seqTokens, shards)(sink(_, id))
       }
-  }
 
   /** On-demand refresh of the landing-zone export: derive the funnel +
     * shard manifest over everything at rest under `atRestDir` (the
     * batchId-subdir layout [[exportStream]] maintains), hand it to
-    * `use`, then unpersist the funnel's cached frames. A pure function
-    * of the at-rest set — calling it at any point between (or instead
-    * of) in-stream refreshes yields exactly the manifest an in-stream
-    * refresh would have produced over the same landed batches. */
+    * `use`, then unpersist the funnel's cached frames, so block-manager
+    * state does not accumulate across refreshes. A pure function of the
+    * at-rest set: a refresh between batches is an internally consistent
+    * manifest of the corpus-so-far (not a prefix of the final one —
+    * near-dedup and epoch factors shift as the corpus grows). */
   def refreshExport(spark: SparkSession, atRestDir: String,
                     cfg: graft.app.CorpusPipeline.Config,
                     weights: Map[String, Double], tokenBudget: Long,

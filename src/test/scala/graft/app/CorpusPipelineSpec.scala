@@ -387,9 +387,6 @@ class CorpusPipelineSpec extends SparkSpec {
     val survivors = chunks.select("doc_id").distinct()
       .as[Long].collect().toSet
     assert(survivors == Set(1L))
-    // both broadcast paths agree
-    assert(curated(corpus, cfg.copy(broadcastEval = false))._1.funnel ==
-      r.funnel)
     // curate's persisted handles are real: every frame is cached, and
     // unpersisting through the handle releases it
     val held = CorpusPipeline.curate(corpus, cfg).persisted

@@ -45,9 +45,8 @@ class SessionsSpec extends graft.SparkSpec {
   // names the builder does not count. The match spans layout
   // (`SparkSession\n.builder()`) and also catches the
   // `SparkSession.Builder` class and a selector import of `builder`.
-  // Limits: a `//` or `/*` inside a string literal is read as a comment
-  // start, and a bare `builder()` after a wildcard
-  // `import SparkSession._` is not caught.
+  // Limit: a bare `builder()` after a wildcard `import SparkSession._`
+  // is not caught.
   private val builderCall =
     raw"SparkSession\s*\.\s*(?:\{[^}]*)?\b[Bb]uilder\b".r
   private def buildsSession(src: String): Boolean =

@@ -34,17 +34,6 @@ class Hash60Spec extends SparkSpec {
     assert(single == withNull)
   }
 
-  test("registered SQL function resolves inside higher-order lambdas") {
-    Hash60.register(spark)
-    val r = spark.sql(
-      s"SELECT transform(sequence(0, 2), p -> ${Hash60.FuncName}('k', p)) AS hs")
-      .as[Seq[Long]].head()
-    val direct = (0 to 2).map(p =>
-      Seq(("k", p)).toDF("s", "p")
-        .select(Portable.composedSeededHash($"s", $"p")).head().getLong(0))
-    assert(r == direct)
-  }
-
   test("whole-stage codegen path: equal to composed chain on fixture scan") {
     // parquet-backed input (local rows constant-fold before codegen runs)
     val li = graft.ops.Sources.table(spark, sf("sf0.001"), "lineitem")

@@ -27,15 +27,6 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
-  test("semanticDedup trains the quantizer without build's assignment pass") {
-    val sites = jobSites("ivf-semdedup") {
-      IvfIndex.semanticDedup(emb, "vec_id", "embedding", k = 8, tau = 0.3) }
-    // the one barrier is Dedup.semanticDedup's own cell assignment
-    val cuts = sites.filter(s =>
-      s.startsWith("localCheckpoint at") && s.contains("Barrier.scala"))
-    assert(cuts.length == 1, s"${cuts.length} barrier jobs: ${sites.mkString("; ")}")
-  }
-
   test("the inverted lists are materialized: assignments read only checkpoints") {
     val qe = index.assignments.queryExecution
     val leaves = qe.optimizedPlan.collectLeaves()
@@ -104,34 +95,5 @@ class IvfIndexSpec extends SparkSpec {
       nprobe = 4, topK = 5)
     val rec = Ann.recallAgainstExact(approx, exact)
     assert(rec > 0.3, s"IVF recall $rec suspiciously low")
-  }
-
-  test("semanticDedup with learned centroids: keep-min within cells, deterministic") {
-    val kept = IvfIndex.semanticDedup(emb, "vec_id", "embedding",
-      k = 8, tau = 0.3)
-    val ids = kept.select("vec_id").as[Long].collect().toSet
-    assert(ids.nonEmpty && ids.size < emb.count(),
-      s"gate dropped nothing (${ids.size} of ${emb.count()})")
-    // same seed -> identical survivor set
-    val again = IvfIndex.semanticDedup(emb, "vec_id", "embedding",
-      k = 8, tau = 0.3).select("vec_id").as[Long].collect().toSet
-    assert(again == ids)
-    // unreachable tau keeps everything
-    val all = IvfIndex.semanticDedup(emb, "vec_id", "embedding",
-      k = 8, tau = 1.1).count()
-    assert(all == emb.count())
-    // policy audit: every dropped id has a smaller same-cluster
-    // neighbor at cos >= tau (recompute the evidence directly)
-    val assign = graft.ops.Dedup.semanticAssign(emb, "vec_id", "embedding",
-      IvfIndex.build(emb, "vec_id", "embedding", 8).centroids
-        .select($"cell".cast("long").as("vec_id"),
-          transform($"c", _.cast("float")).as("embedding")))
-      .select($"vec_id", $"embedding", $"cluster")
-    val a = assign.select($"cluster", $"vec_id".as("ida"), $"embedding".as("va"))
-    val b = assign.select($"cluster", $"vec_id".as("idb"), $"embedding".as("vb"))
-    val dominated = a.join(b, "cluster").filter($"ida" < $"idb")
-      .filter(round(Similarity.cosine($"va", $"vb"), 9) >= 0.3)
-      .select($"idb").as[Long].collect().toSet
-    assert(ids == assign.select("vec_id").as[Long].collect().toSet -- dominated)
   }
 }

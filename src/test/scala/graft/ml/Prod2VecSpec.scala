@@ -140,75 +140,4 @@ class Prod2VecSpec extends SparkSpec {
     val bestObj = best.head().getAs[Double]("objective")
     assert(bestObj == rows.map(_.getAs[Double]("objective")).min)
   }
-
-  test("M5 TPE search: exhaustive budget finds the grid optimum; " +
-      "bounded budget explores distinct candidates deterministically") {
-    val coPairs = Seq((1L, 2L), (3L, 4L)).toDF("target_pid", "neighbor_pid")
-    val space = for {
-      dim <- Seq(4, 8); lr <- Seq(0.025, 0.05)
-    } yield Prod2Vec.Params(vectorSize = dim, stepSize = lr,
-      maxIter = 1, numPartitions = 1)
-    val bs = basketDf.orderBy("order_id").limit(200)
-    // single-partition seeded training => objectives are reproducible,
-    // so grid and search evaluate the SAME numbers per candidate
-    val (_, gridBest) = Prod2Vec.tune(bs, space, coPairs)
-    val (tpeTable, tpeBest) =
-      Prod2Vec.tuneSearch(bs, space, coPairs, budget = space.size)
-    assert(tpeTable.count() == space.size)   // exhaustive at full budget
-    assert(tpeBest.head().getAs[Double]("objective") ==
-      gridBest.head().getAs[Double]("objective"))
-    // bounded budget: evaluates exactly `budget` distinct candidates
-    val (t3, b3) = Prod2Vec.tuneSearch(bs, space, coPairs, budget = 3)
-    val jobs = t3.select("job_name").as[String].collect().toSeq
-    assert(jobs.length == 3 && jobs.distinct.length == 3)
-    assert(b3.head().getAs[Double]("objective") ==
-      t3.agg(min($"objective")).as[Double].head())
-    // deterministic replay: same (space, budget, seed) -> same table
-    val (t3b, _) = Prod2Vec.tuneSearch(bs, space, coPairs, budget = 3)
-    assert(t3b.orderBy("iteration").collect().toSeq ==
-      t3.orderBy("iteration").collect().toSeq)
-  }
-
-  test("M5 continuous TPE: logGrid + quantile buckets make a dense " +
-      "learning-rate axis searchable; budget << |space| converges to the " +
-      "optimum's bucket on a closed-form objective") {
-    // the reference's continuous range (prod2vec_config.yaml:49-55),
-    // densely discretized: 16 log-spaced rates in [1e-4, 1e-3]
-    val grid = Prod2Vec.logGrid(1e-4, 1e-3, 16)
-    assert(grid.length == 16)
-    assert(math.abs(grid.head - 1e-4) < 1e-15 &&
-      math.abs(grid.last - 1e-3) < 1e-15)
-    val ratios = grid.sliding(2).map { case Seq(a, b) => b / a }.toSeq
-    assert(ratios.forall(r => math.abs(r - ratios.head) < 1e-9))
-    // 16 values fold onto 4 equal-count, order-preserving buckets
-    assert(grid.map(v => Prod2Vec.quantileBucket(grid, v)) ==
-      (0 until 16).map(_ / 4))
-    // <= `buckets` distinct values keep their own bucket — the discrete
-    // case degenerates to the old exact-category behavior
-    assert(Seq(0.025, 0.05).map(v =>
-      Prod2Vec.quantileBucket(Seq(0.025, 0.05), v)) == Seq(0, 1))
-    // convergence law on the Spark-free core: quadratic-in-log objective
-    // with its minimum at 3e-4 (k = 7, the last point of bucket 1);
-    // 8 of 16 evaluations, 5-point warmup (TPE needs real warmup before
-    // densities mean anything — 3 points put the whole good-set in one
-    // lucky bucket)
-    val space = grid.map(lr => Prod2Vec.Params(stepSize = lr))
-    def obj(p: Prod2Vec.Params): Double =
-      math.pow(math.log(p.stepSize) - math.log(3e-4), 2)
-    val order = Prod2Vec.tpeOrder(space, budget = 8, seed = 42L,
-      initRandom = 5)(obj)
-    assert(order.length == 8 && order.map(_._1).distinct.length == 8)
-    val bucketOf = (i: Int) => Prod2Vec.quantileBucket(grid, grid(i))
-    val trueBest = space.indices.minBy(i => obj(space(i)))
-    // half the budget finds the EXACT argmin of the 16-point axis...
-    assert(order.minBy(_._2)._1 == trueBest)
-    // ...because the guided steps exhaust the optimum's bucket: every
-    // bucket-1 candidate is evaluated within the 8 evals (uniform
-    // 8-of-16 exploration gives that only ~14% of the time)
-    val b1 = space.indices.filter(i => bucketOf(i) == bucketOf(trueBest))
-    assert(b1.forall(i => order.exists(_._1 == i)))
-    // replay determinism holds for the continuous axis too
-    assert(Prod2Vec.tpeOrder(space, budget = 8, seed = 42L,
-      initRandom = 5)(obj) == order)
-  }
 }

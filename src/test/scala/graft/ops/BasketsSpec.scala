@@ -3,8 +3,8 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Pins basket semantics from the reference (`data_prep.py:17-44,156-160`):
-  * group-collect, truncation cap, deterministic shuffle invariants. */
+/** Pins basket semantics from the reference (`data_prep.py:17-44`):
+  * group-collect, and Apriori triple mining. */
 class BasketsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -21,48 +21,6 @@ class BasketsSpec extends SparkSpec {
     assert(b.length === 3)
     assert(b(0).getAs[Seq[Long]]("basket") === Seq(10L))
     assert(b(1).getAs[Seq[Long]]("basket") === Seq(10L, 20L, 20L, 30L))
-  }
-
-  test("A1 sequence variant: order by explicit position column") {
-    val df = Seq((1L, 5L, 3), (1L, 7L, 1), (1L, 6L, 2))
-      .toDF("order_id", "product_id", "pos")
-    val b = Baskets.sequenceBaskets(df, "order_id", "product_id", "pos")
-      .collect()(0).getSeq[Long](1).toList
-    assert(b === Seq(7L, 6L, 5L))
-  }
-
-  test("P7 truncate: caps basket length, keeps prefix") {
-    val b = Baskets.truncate(
-      Baskets.sequenceBaskets(mini, "order_id", "product_id", "product_id"),
-      "basket", 5)
-    val lens = b.select(size($"basket")).as[Int].collect()
-    assert(lens.forall(_ <= 5))
-    val long = b.filter($"order_id" === 3L)
-      .collect()(0).getSeq[Long](1).toList
-    assert(long === Seq(1L, 2L, 3L, 4L, 5L)) // prefix of pos-sorted sequence
-  }
-
-  test("A6' deterministic shuffle: multiset-invariant and reproducible") {
-    val base = Baskets.sortedBaskets(mini, "order_id", "product_id")
-    val s1 = Baskets.shuffledDeterministic(base, "order_id", "basket", 42L)
-    val s2 = Baskets.shuffledDeterministic(base, "order_id", "basket", 42L)
-    val a1 = s1.orderBy("order_id").collect().map(_.getSeq[Long](1).toList)
-    val a2 = s2.orderBy("order_id").collect().map(_.getSeq[Long](1).toList)
-    assert(a1.toSeq === a2.toSeq) // same seed → identical order
-    val orig = base.orderBy("order_id").collect().map(_.getSeq[Long](1).toList)
-    assert(a1.map(_.sorted).toSeq === orig.map(_.sorted).toSeq) // multiset kept
-    // a different seed must reorder at least one multi-item basket
-    val s3 = Baskets.shuffledDeterministic(base, "order_id", "basket", 7L)
-      .orderBy("order_id").collect().map(_.getSeq[Long](1).toList)
-    assert(a1.zip(s3).exists { case (x, y) => x != y } ||
-      a1.forall(_.length <= 1))
-  }
-
-  test("A6' shuffle does not collapse duplicate elements") {
-    val base = Baskets.sortedBaskets(mini, "order_id", "product_id")
-    val shuffled = Baskets.shuffledDeterministic(base, "order_id")
-    val sizes = shuffled.select(size($"basket")).as[Int].collect().sorted
-    assert(sizes.toSeq === Seq(1, 4, 7))
   }
 
   test("frequentTriples: exact support counting; Apriori prune is " +

@@ -288,26 +288,6 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("contamination: shuffle-join fallback (broadcastEval=false) is identical") {
-    val sh = docs.select($"doc_id",
-      Text.shingles(Text.tokens($"text"), 3).as("shingles"))
-    val evalSh = sh.filter($"doc_id" === 1L)
-    val viaBroadcast = Dedup.contamination(sh, evalSh, "doc_id", 3L)
-    val viaShuffle = Dedup.contamination(sh, evalSh, "doc_id", 3L,
-      broadcastEval = false)
-    assert(viaShuffle.as[(Long, Long, Long)].collect().toSet ==
-      viaBroadcast.as[(Long, Long, Long)].collect().toSet)
-    // the knob really controls the hint (a fixture-sized eval side may
-    // still AUTO-broadcast by size stats — that adaptive choice is the
-    // planner's; what the knob must guarantee is that nothing FORCES a
-    // driver-side build when the eval corpus is large)
-    def hinted(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.analyzed.collect {
-        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-      }.nonEmpty
-    assert(hinted(viaBroadcast) && !hinted(viaShuffle))
-  }
-
   test("incremental dedup: batch scrubbed against the corpus; in-batch dups survive") {
     // existing corpus = docs 1-5; incoming batch re-crawls an exact copy
     // of 1 (id 10), a near variant of 1 (id 11), a fresh doc (id 12),
@@ -429,8 +409,8 @@ class DedupSpec extends SparkSpec {
     assert(restricted == Set((1L, 2L, math.round(1.0 / 3 * 1e9) / 1e9)))
   }
 
-  test("jaccardPairsExact: candidate-mass pre-flight refuses over budget, " +
-      "prices exactly, and auto-samples deterministically") {
+  test("jaccardPairsExact: candidate-mass pre-flight refuses over budget " +
+      "and prices exactly") {
     val sh = docs.select($"doc_id",
       Text.shingles(Text.tokens($"text"), 3).as("shingles"))
     // exact price of the fixture's posting join: sum df^2 over df<=maxDf
@@ -452,23 +432,6 @@ class DedupSpec extends SparkSpec {
     val default = Dedup.jaccardPairsExact(sh, "doc_id", 0.5, maxDf = 1000L)
       .as[(Long, Long, Double)].collect().toSet
     assert(guarded == default)
-    // autoSample: completes under a tight budget on a SUBSET of docs;
-    // every surviving pair exists in the full exact result, and the
-    // sampled doc set is the deterministic hash-bucket filter (both
-    // sides of each emitted pair survived the same filter)
-    val sampled = Dedup.jaccardPairsExact(sh, "doc_id", 0.0 + 1e-9,
-        maxDf = 1000L, maxCandidatePairs = massTruth / 4,
-        autoSample = true)
-      .as[(Long, Long, Double)].collect().toSet
-    val full = Dedup.jaccardPairsExact(sh, "doc_id", 0.0 + 1e-9,
-        maxDf = 1000L).as[(Long, Long, Double)].collect().toSet
-    assert(sampled.subsetOf(full))
-    // determinism: the same call yields the same sample
-    val again = Dedup.jaccardPairsExact(sh, "doc_id", 0.0 + 1e-9,
-        maxDf = 1000L, maxCandidatePairs = massTruth / 4,
-        autoSample = true)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(again == sampled)
   }
 
   test("containmentPairsExact: finds subset duplication jaccard dilutes; >= jaccard law") {
@@ -666,13 +629,6 @@ class DedupSpec extends SparkSpec {
     val d5 = r(1)
     assert(d5.getLong(0) == 5L && d5.getLong(1) == 0L && d5.getLong(2) == 0L)
     assert(d5.isNullAt(3))
-    // both-path parity: the shuffle fallback computes the identical frame
-    val shuffled = Dedup.contaminationCoverage(
-        sh.filter($"doc_id" === 3L || $"doc_id" === 4L),
-        sh.filter($"doc_id" === 1L || $"doc_id" === 5L), "doc_id",
-        broadcastEval = false)
-      .orderBy("eval_id").collect()
-    assert(shuffled.sameElements(r))
   }
 
   test("bloom-prefiltered incremental dedup ≡ the plain anti-join; empty index no-op") {

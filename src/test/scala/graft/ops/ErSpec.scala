@@ -71,8 +71,7 @@ class ErSpec extends SparkSpec {
   }
 
   test("editJoin pre-flight: tight budget throws naming the measured " +
-      "mass; generous budget is a no-op; autoSample returns the exact " +
-      "join of a deterministic name sample (subset of brute force)") {
+      "mass; generous budget is a no-op") {
     val names = Seq(
       "cat", "cart", "carts", "bat", "cast",
       "red bolt", "old bolt", "red bolts", "redd bolt",
@@ -81,50 +80,33 @@ class ErSpec extends SparkSpec {
     val df = names.flatMap(n => Seq(n, n)).toDF("name")
     val full = brute(df, "name", 2)
 
-    // tight budget, no escape hatch: the join must NOT run
+    // tight budget: the join must NOT run
     val ex = intercept[IllegalArgumentException] {
       Er.editJoin(df, "name", 2, maxCandidatePairs = 1L).count()
     }
     assert(ex.getMessage.contains("pre-flight") &&
-      ex.getMessage.contains("autoSample"), ex.getMessage)
+      ex.getMessage.contains("candidate pairs, over the budget of 1."),
+      ex.getMessage)
 
     // generous budget: pre-flight passes, result identical to brute
     val g = Er.editJoin(df, "name", 2, maxCandidatePairs = 1000000L)
       .select(col("name_a"), col("name_b"), col("dist"))
       .as[(String, String, Long)].collect().toSet
     assert(g == full)
-
-    // autoSample under the tight budget: runs, is deterministic, and
-    // every surviving pair is a true pair of the FULL catalog (the
-    // sampled-catalog join can only lose pairs, never invent them)
-    val s1 = Er.editJoin(df, "name", 2, maxCandidatePairs = 4L,
-        autoSample = true)
-      .select(col("name_a"), col("name_b"), col("dist"))
-      .as[(String, String, Long)].collect().toSet
-    assert(s1.subsetOf(full), s"sampled pairs must be true pairs: $s1")
-    val s2 = Er.editJoin(df.repartition(7), "name", 2,
-        maxCandidatePairs = 4L, autoSample = true)
-      .select(col("name_a"), col("name_b"), col("dist"))
-      .as[(String, String, Long)].collect().toSet
-    assert(s2 == s1, "auto-sample must be deterministic across " +
-      "partitionings (hash-bucket filter, not bernoulli sample)")
   }
 
-  test("resolveEntities pre-flight: tight budget throws without the " +
-      "escape hatch; with autoSample every name still resolves (the " +
-      "unsampled stay self-canonical)") {
+  test("resolveEntities pre-flight: tight budget throws; a budget that " +
+      "fits resolves every name") {
     val df = (Seq.fill(3)("bolt") ++ Seq("bolts", "boltss") ++
       Seq.fill(2)("ring") ++ Seq.fill(2)("rings") ++ Seq("xylophone"))
       .toDF("name")
     intercept[IllegalArgumentException] {
       Er.resolveEntities(df, "name", 1, maxCandidatePairs = 1L).count()
     }
-    val r = Er.resolveEntities(df, "name", 1, maxCandidatePairs = 2L,
-        autoSample = true)
+    val r = Er.resolveEntities(df, "name", 1, maxCandidatePairs = 1000000L)
       .as[(String, Long, String, Long, Long)].collect()
     assert(r.map(_._1).toSet ==
-      Set("bolt", "bolts", "boltss", "ring", "rings", "xylophone"),
-      "every distinct name resolves even when sampled out of the join")
+      Set("bolt", "bolts", "boltss", "ring", "rings", "xylophone"))
     assert(r.forall { case (_, n, _, nv, cr) => n >= 1 && nv >= 1 && cr >= n })
   }
 

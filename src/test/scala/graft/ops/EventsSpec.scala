@@ -135,34 +135,6 @@ class EventsSpec extends SparkSpec {
     assert(view.getDouble(1) == 4.0)
   }
 
-  test("quantileProfileApprox: rank error within the sketch's n/accuracy bound") {
-    val events = spark.read.parquet(sf("sf0.001") + "/events.parquet")
-    val probs = Seq(0.25, 0.5, 0.95)
-    val acc = 100 // deliberately coarse so the bound is the interesting part
-    val approx = Events.quantileProfileApprox(events, probs, acc)
-      .collect().map(r => r.getString(0) -> r).toMap
-    val vals = events.select($"event_type", $"value").as[(String, Double)]
-      .collect().groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    for ((tpe, sortedVals) <- vals; (p, i) <- probs.zipWithIndex) {
-      val n = sortedVals.length
-      val got = approx(tpe).getDouble(1 + i)
-      // the value percentile_approx returned must sit within n/acc ranks
-      // of the target rank p*n (GK guarantee; +1 absorbs discreteness)
-      val rank = sortedVals.count(_ <= got)
-      val err = math.abs(rank - p * n)
-      assert(err <= n.toDouble / acc + 1,
-        s"$tpe p$p: value $got at rank $rank of $n, err $err")
-    }
-    // min/max/count agree with the exact profile exactly
-    val exact = Events.quantileProfile(events, probs)
-      .collect().map(r => r.getString(0) -> r).toMap
-    for (tpe <- vals.keys) {
-      assert(approx(tpe).getDouble(4) == exact(tpe).getDouble(4))
-      assert(approx(tpe).getDouble(5) == exact(tpe).getDouble(5))
-      assert(approx(tpe).getLong(6) == exact(tpe).getLong(6))
-    }
-  }
-
   test("funnel: strict first-occurrence ordering; same-ts does not advance") {
     val fe = Seq(
       // user 1: full ordered funnel
@@ -249,9 +221,6 @@ class EventsSpec extends SparkSpec {
     // 0.125 and 0.13 both label as p13 -> ambiguous output column
     intercept[IllegalArgumentException] {
       Events.quantileProfile(ev, Seq(0.125, 0.13))
-    }
-    intercept[IllegalArgumentException] {
-      Events.quantileProfileApprox(ev, Seq(0.5), 0)
     }
   }
 

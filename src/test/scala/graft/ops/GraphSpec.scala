@@ -170,6 +170,28 @@ class GraphSpec extends SparkSpec {
     assert(k3.forall(!_._3) && k3.forall(_._4))
   }
 
+  test("kCore: a path still peeling in its last round reports " +
+      "converged = false; the convergence check counts once per call") {
+    // 1-2-3-4-5 at k = 2: round 1 drops the two end edges, leaving 2-3-4
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
+    val r = Graph.kCore(path, "a", "b", k = 2, rounds = 1)
+      .orderBy("id").as[(Long, Long, Boolean, Boolean)].collect()
+    assert(r.map(x => (x._1, x._3)).toSeq == Seq((1L, false), (2L, false),
+      (3L, true), (4L, false), (5L, false)))
+    assert(r.forall(!_._4), "the last round removed edges")
+    // three rounds peel the whole path; the third removes nothing
+    val full = Graph.kCore(path, "a", "b", k = 2, rounds = 3)
+      .as[(Long, Long, Boolean, Boolean)].collect()
+    assert(full.forall(x => !x._3 && x._4))
+    // a 4-cycle is its own 2-core: every round keeps the same edges, so
+    // each count reads the same frame and starts the same jobs
+    val cyc = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("a", "b")
+    def counts(rounds: Int) = jobSites(s"kcore-count-$rounds") {
+      Graph.kCore(cyc, "a", "b", k = 2, rounds = rounds)
+    }.count(_.contains("count at Graph.scala"))
+    assert(counts(1) > 0 && counts(4) == counts(1))
+  }
+
   test("hits: one round of the 2-hub star matches hand-computed " +
       "integer floors; L1 mass within floor loss of 1") {
     // o1 -> {p1, p2}, o2 -> {p1}: a1 = (2/3, 1/3);

@@ -18,7 +18,7 @@ class KmeansSpec extends SparkSpec {
       0L -> Seq(1f, 1f),      // wins rows 1,2
       1L -> Seq(11f, 9f),     // wins rows 3,4
       2L -> Seq(500f, 500f))  // wins nothing
-    val cen = Kmeans.step(data, "vec_id", "embedding", init)
+    val cen = Kmeans.fit(data, "vec_id", "embedding", init, iters = 1)
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
     assert(cen(0L) == Seq(1f, 0f))
     assert(cen(1L) == Seq(11f, 10f))

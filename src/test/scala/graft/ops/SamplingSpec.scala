@@ -96,21 +96,6 @@ class SamplingSpec extends SparkSpec {
     }
   }
 
-  test("ratesForTargets: rate = min(1, target/current); absent sources drop") {
-    // s0 has 5+3+4+2 = 14 tokens, s1 has 6+3 = 9, s2 has 2
-    val targets = Seq(("s0", 7L), ("s1", 100L)).toDF("source", "target_tokens")
-    val rates = Sampling.ratesForTargets(corpus, "source", "text", targets)
-      .as[(String, Double)].collect().toMap
-    assert(math.abs(rates("s0") - 0.5) < 1e-9) // 7/14
-    assert(rates("s1") == 1.0)                 // target above current: capped
-    assert(!rates.contains("s2"))              // absent from the spec
-    // composes with domainMix: s2 drops entirely, s1 fully kept
-    val kept = Sampling.domainMix(corpus, "doc_id", "source",
-      Sampling.ratesForTargets(corpus, "source", "text", targets), "t")
-      .select("doc_id").as[Long].collect().toSet
-    assert(Set(5L, 6L).subsetOf(kept) && !kept.contains(7L))
-  }
-
   test("ratesForTemperature: p ∝ n^α, rates capped, α=1 is natural sampling") {
     // n: a=100 tokens, b=400 tokens; α=0.5 → w=10,20 → p=1/3,2/3;
     // T=150 → rate_a=min(1,150·(1/3)/100)=0.5, rate_b=min(1,150·(2/3)/400)=0.25

@@ -265,20 +265,20 @@ class TextSpec extends SparkSpec {
       "v1.2.3 is not an ip; 555-12-4567 is not a phone; 100 1000 10000 stay")
   }
 
-  test("langIdColumn: map-only form equals languageId everywhere") {
+  test("langIdTextColumn: map-only form equals languageId everywhere") {
     // the 4-doc fixture covers the 'und' fallback; the 500-doc corpus
     // pins the argmax + tiebreak against the relational form at scale
     val rel4 = Text.languageId(docs, "text")
       .select($"doc_id", $"pred_lang").as[(Long, String)].collect().toMap
     val col4 = docs.select($"doc_id",
-        Text.langIdColumn(Text.tokens($"text")).as("pred_lang"))
+        Text.langIdTextColumn($"text").as("pred_lang"))
       .as[(Long, String)].collect().toMap
     assert(col4 == rel4)
     val corpus = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val rel = Text.languageId(corpus, "text")
       .select($"doc_id", $"pred_lang").as[(Long, String)].collect().toMap
     val colF = corpus.select($"doc_id",
-        Text.langIdColumn(Text.tokens($"text")).as("pred_lang"))
+        Text.langIdTextColumn($"text").as("pred_lang"))
       .as[(Long, String)].collect().toMap
     assert(colF == rel)
   }

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Pins vocab semantics (`data_prep.py:47-105`): top-K with deterministic
-  * tiebreak (SURVEY N2), UNK-at-0 reservation, OOV recode + unk_count. */
+  * tiebreak (SURVEY N2), UNK-at-0 reservation, OOV recode. */
 class VocabSpec extends SparkSpec {
   import spark.implicits._
 
@@ -26,16 +26,6 @@ class VocabSpec extends SparkSpec {
     assert(v.toSeq === Seq((30L, 1), (10L, 2), (20L, 3), (40L, 4)))
   }
 
-  test("A2+A3+A4 build: UNK row at idx 0 carries OOV count") {
-    val v = Vocab.build(ties, "product_id", 3) // keeps top-2: 30, 10
-    val rows = v.orderBy("idx").collect()
-      .map(r => (r.getAs[Long]("product_id"), r.getAs[Long]("cnt"),
-        r.getAs[Int]("idx")))
-    assert(rows(0) === ((Vocab.UnkKey, 4L, 0))) // 20,20,50,40 are OOV
-    assert(rows(1) === ((30L, 3L, 1)))
-    assert(rows(2) === ((10L, 2L, 2)))
-  }
-
   test("J4 encode: in-vocab → dense idx, OOV → 0") {
     val vocab = Vocab.withIndex(Vocab.topK(ties, "product_id", 3))
     val enc = Vocab.encode(ties, "product_id", vocab)
@@ -44,11 +34,6 @@ class VocabSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(got.toSeq === Seq((10L, 2, 2L), (20L, 0, 2L), (30L, 1, 3L),
       (40L, 0, 1L), (50L, 0, 1L)))
-  }
-
-  test("A4 unkCount matches the reference's per-occurrence counting") {
-    val vocab = Vocab.withIndex(Vocab.topK(ties, "product_id", 3))
-    assert(Vocab.unkCount(ties, "product_id", vocab) === 4L)
   }
 
   test("vocab of fixture lineitem: idx dense, no gaps, UNK absent") {

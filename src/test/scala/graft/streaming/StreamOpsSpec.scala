@@ -596,19 +596,6 @@ class StreamOpsSpec extends SparkSpec {
       // state bound: at most m = 16 registers per key, ever
       assert(stream.groupBy(_._1).forall(_._2.size <= 16))
     } finally q.stop()
-    // and the day-shard composition: merge(regs(day1), regs(day2)) is
-    // exactly regs(all), so estimates from merged shards match too
-    val day1 = Sketch.hllRegisters(rows.take(2).toDF("doc_id", "text", "lang"),
-      "text", "lang", 4, "s")
-    val day2 = Sketch.hllRegisters(rows.drop(2).toDF("doc_id", "text", "lang"),
-      "text", "lang", 4, "s")
-    val whole = Sketch.hllRegisters(rows.toDF("doc_id", "text", "lang"),
-      "text", "lang", 4, "s")
-    val mergedEst = Sketch.hllEstimate(Sketch.hllMerge(day1, day2), 4)
-      .as[(String, Long, Double)].collect().toSet
-    val wholeEst = Sketch.hllEstimate(whole, 4)
-      .as[(String, Long, Double)].collect().toSet
-    assert(mergedEst == wholeEst)
   }
 
   test("scd2Stream: emitted closed versions across micro-batches " +
@@ -768,9 +755,8 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("exportStream: idempotent batchId landing (a replayed micro-batch " +
-      "cannot duplicate documents at rest) and the Rq277b cadence law " +
-      "(skipped refreshes leave the on-demand manifest equal to " +
-      "per-trigger refreshing)") {
+      "cannot duplicate documents at rest), and refreshExport over the " +
+      "landed set equals the one-shot batch export") {
     implicit val sqlCtx = spark.sqlContext
     import graft.app.CorpusPipeline
     val cfg = CorpusPipeline.Config(minQuality = 0.0, jaccardTau = 0.9,
@@ -786,65 +772,46 @@ class StreamOpsSpec extends SparkSpec {
         "en", "s0"),
       (4L, "machines hum in the workshop as gears turn and belts whir on",
         "en", "s1"))
-    def runStream(refreshEvery: Int)
-        : (String, Seq[org.apache.spark.sql.Row], Int) = {
-      val atRest = java.nio.file.Files
-        .createTempDirectory("graft_export_stream").toString
-      val in = MemoryStream[(Long, String, String, String)]
-      @volatile var last: Seq[org.apache.spark.sql.Row] = Seq.empty
-      var refreshes = 0
-      val q = StreamOps.exportStream(
-          in.toDF().toDF("doc_id", "text", "lang", "source"),
-          atRest, cfg, weights, tokenBudget = 200L, realizeSalt = "rs",
-          seqTokens = 8, shards = 2, refreshEvery = refreshEvery) {
-          (manifest, _) =>
-            refreshes += 1
-            last = manifest.orderBy("shard").collect().toSeq
-        }.start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      (atRest, last, refreshes)
+    val atRest = java.nio.file.Files
+      .createTempDirectory("graft_export_stream").toString
+    val in = MemoryStream[(Long, String, String, String)]
+    val q = StreamOps.exportStream(
+      in.toDF().toDF("doc_id", "text", "lang", "source"), atRest).start()
+    try {
+      in.addData(b1: _*); q.processAllAvailable()
+      in.addData(b2: _*); q.processAllAvailable()
+    } finally q.stop()
+    def refreshed(): Seq[org.apache.spark.sql.Row] = {
+      var rows: Seq[org.apache.spark.sql.Row] = Seq.empty
+      StreamOps.refreshExport(spark, atRest, cfg, weights, 200L, "rs", 8, 2) {
+        m => rows = m.orderBy("shard").collect().toSeq }
+      rows
     }
-    val (dirA, perTrigger, nA) = runStream(1)
-    assert(nA == 2 && perTrigger.nonEmpty)
     // landing layout: one batch=<id> subdir per micro-batch, and the
     // at-rest SET is exactly the input docs — no duplicate landings
-    val atRestDocs = spark.read.parquet(dirA)
+    val batchDirs = new java.io.File(atRest).list()
+      .filter(_.startsWith("batch=")).sorted.toSeq
+    assert(batchDirs == Seq("batch=0", "batch=1"), batchDirs)
+    val atRestDocs = spark.read.parquet(atRest)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(atRestDocs == Seq(1L, 2L, 3L, 4L))
+    // the refresh over the landed set equals the one-shot batch export
+    val streamed = refreshed()
+    val r = CorpusPipeline.curate(
+      (b1 ++ b2).toDF("doc_id", "text", "lang", "source"), cfg)
+    val (_, bm) = CorpusPipeline.exportShards(r.survivors.get, weights,
+      200L, "rs", 8, 2)
+    val batchManifest = bm.orderBy("shard").collect().toSeq
+    r.persisted.foreach(_.unpersist(blocking = false))
+    assert(streamed.nonEmpty && streamed == batchManifest,
+      "landed-set refresh diverged from the one-shot batch export")
     // idempotence under foreachBatch's at-least-once contract: re-land
     // batch 0 verbatim (what a checkpointed restart replay does) — the
     // overwrite makes it a no-op, so the refreshed manifest is unchanged
     b1.toDF("doc_id", "text", "lang", "source")
-      .write.mode("overwrite").parquet(s"$dirA/batch=0")
-    var replayed: Seq[org.apache.spark.sql.Row] = Seq.empty
-    StreamOps.refreshExport(spark, dirA, cfg, weights, 200L, "rs", 8, 2) {
-      m => replayed = m.orderBy("shard").collect().toSeq }
-    assert(replayed == perTrigger,
+      .write.mode("overwrite").parquet(s"$atRest/batch=0")
+    assert(refreshed() == streamed,
       "replayed batch landing changed the manifest")
-    // cadence law: refreshEvery larger than the batch count skips every
-    // in-stream refresh after batch 0; the on-demand refresh over the
-    // landed set equals the per-trigger stream's final manifest — the
-    // manifest is a pure function of the at-rest set
-    val (dirB, _, nB) = runStream(1000)
-    assert(nB == 1) // only batch 0 (0 % 1000 == 0) refreshed in-stream
-    var onDemand: Seq[org.apache.spark.sql.Row] = Seq.empty
-    StreamOps.refreshExport(spark, dirB, cfg, weights, 200L, "rs", 8, 2) {
-      m => onDemand = m.orderBy("shard").collect().toSeq }
-    assert(onDemand == perTrigger,
-      "skipped in-stream refreshes changed the final manifest")
-    // never-in-stream cadence (refreshEvery = 0, the q277 production
-    // posture): zero in-stream refreshes, landing still maintained,
-    // on-demand refresh still equals the per-trigger stream's manifest
-    val (dirC, _, nC) = runStream(0)
-    assert(nC == 0, s"refreshEvery=0 must never refresh in-stream, got $nC")
-    var onDemand0: Seq[org.apache.spark.sql.Row] = Seq.empty
-    StreamOps.refreshExport(spark, dirC, cfg, weights, 200L, "rs", 8, 2) {
-      m => onDemand0 = m.orderBy("shard").collect().toSeq }
-    assert(onDemand0 == perTrigger,
-      "never-in-stream cadence changed the final manifest")
   }
 
   test("refreshExport: repeated refreshes over one at-rest set agree, and " +
@@ -863,9 +830,9 @@ class StreamOpsSpec extends SparkSpec {
       (3L, "the old library keeps a rare map of ancient roads and trade",
         "en", "s0")).toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(atRest)
-    // the at-least-once stream calls this once per micro-batch: an
-    // Observation in the plan would register per call and, where its
-    // frame never runs, never complete
+    // a refresh may run many times over one session: an Observation in
+    // the plan would register per call and, where its frame never runs,
+    // never complete
     val refreshes = Seq.fill(3) {
       var rows: Seq[org.apache.spark.sql.Row] = Seq.empty
       var observed = true
@@ -907,9 +874,7 @@ class StreamOpsSpec extends SparkSpec {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_export_kr_ckpt").toString
     def start() = StreamOps.exportStream(
-        in.toDF().toDF("doc_id", "text", "lang", "source"),
-        atRest, cfg, weights, tokenBudget = 200L, realizeSalt = "rs",
-        seqTokens = 8, shards = 2) { (_, _) => () }
+        in.toDF().toDF("doc_id", "text", "lang", "source"), atRest)
       .option("checkpointLocation", ckpt)
       .start()
     val q1 = start()
