@@ -193,7 +193,8 @@ object CorpusPipeline {
     * SURVIVORS' own token mass, realized into repeated copies
     * ([[graft.ops.Sampling.applyEpochFactors]], q114; copy identity
     * doc_id·1024 + epoch_copy, the q143 packing-determinism rule), cut
-    * into fixed training sequences ([[graft.ops.Sampling.pack]], q67),
+    * into fixed training sequences ([[graft.ops.Sampling.pack]], q67,
+    * salt "pack"),
     * and summarized per shard ([[graft.ops.Sources.shardManifest]],
     * q107) with a per-shard order-independent content hash — so one
     * manifest hash certifies the ENTIRE raw-docs → training-shards
@@ -206,8 +207,7 @@ object CorpusPipeline {
     * rollup of the packed frame — nothing corpus-sized moves twice. */
   def exportShards(survivors: DataFrame, weights: Map[String, Double],
                    tokenBudget: Long, realizeSalt: String,
-                   seqTokens: Int, shards: Int,
-                   packSalt: String = "pack"): (DataFrame, DataFrame) = {
+                   seqTokens: Int, shards: Int): (DataFrame, DataFrame) = {
     val src = survivors.select(col("doc_id"), col("source"), col("text"))
     // The epoch plan is ≤ |sources| rows but its input is a corpus-
     // sized token-count groupBy — collect it ONCE into a LocalRelation
@@ -236,7 +236,7 @@ object CorpusPipeline {
       .select((col("doc_id") * 1024 + col("epoch_copy")).as("doc_id"),
         col("text"))
     val packed = Sampling.pack(realized, "doc_id", "text", seqTokens,
-      shards, packSalt)
+      shards, "pack")
     // ONE shard-keyed aggregation producing the manifest columns AND
     // the content hash (r15): the previous shardManifest + groupBy +
     // join shape aggregated `packed` twice and re-ran the packer's

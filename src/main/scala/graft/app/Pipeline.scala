@@ -89,6 +89,10 @@ object Pipeline {
 
     // ---- branch (§3.2): train once, or tune the grid and keep the best
     val basketTokens = Prod2Vec.baskets(lineitem)
+    val base = Prod2Vec.Params(vectorSize = config.train.embeddingDim,
+      windowSize = config.preprocess.trainWindowSize,
+      maxIter = config.train.epochs, stepSize = config.train.learningRate,
+      maxSentenceLength = config.preprocess.maxBasketLength)
     val (model, tuningTable) =
       if (config.hpoEnabled) {
         val coPairs = Similarity.coPurchaseTopK(pairs, 1)
@@ -98,10 +102,7 @@ object Pipeline {
             col("product_id").as("neighbor_pid"))), Seq("context"))
           .select("target_pid", "neighbor_pid")
         val grid = config.tune.draws.map { case (d, lr) =>
-          Prod2Vec.Params(vectorSize = d, stepSize = lr,
-            windowSize = config.preprocess.trainWindowSize,
-            maxIter = config.train.epochs,
-            maxSentenceLength = config.preprocess.maxBasketLength)
+          base.copy(vectorSize = d, stepSize = lr)
         }
         val (table, best) = Prod2Vec.tune(basketTokens, grid, coPairs)
         val bestName = best.head().getAs[String]("job_name")
@@ -111,13 +112,7 @@ object Pipeline {
           .head().getAs[Long]("start_ms").toInt)
         Sources.writeParquet(table, s"$outDir/tuning")
         (Prod2Vec.train(basketTokens, bestParams), Some(table))
-      } else {
-        val p = Prod2Vec.Params(vectorSize = config.train.embeddingDim,
-          windowSize = config.preprocess.trainWindowSize,
-          maxIter = config.train.epochs, stepSize = config.train.learningRate,
-          maxSentenceLength = config.preprocess.maxBasketLength)
-        (Prod2Vec.train(basketTokens, p), None)
-      }
+      } else (Prod2Vec.train(basketTokens, base), None)
 
     // ---- persist (S8): the train/post-process handoff artifact --------
     Prod2Vec.save(model, modelPath(outDir))

@@ -51,8 +51,9 @@ final case class TrainConfig(
   *    ranges [dims.min, dims.max] (integer-uniform) ×
   *    [learningRates.min, learningRates.max] (uniform), the same
   *    search distribution the reference's tuner samples from, made
-  *    reproducible: job i's params are a pure function of (salt, i),
-  *    so a re-run explores the identical sequence.
+  *    reproducible: job i's params are a pure function of i (hashed
+  *    under the fixed salt "hpo"), so a re-run explores the identical
+  *    sequence.
   */
 final case class TuneConfig(
     dims: Seq[Int] = Seq(8, 16),
@@ -67,14 +68,14 @@ final case class TuneConfig(
   def grid: Seq[(Int, Double)] =
     (for { d <- dims; lr <- learningRates } yield (d, lr)).take(maxJobs)
   /** Seeded random search (see class doc). */
-  def randomDraws(salt: String = "hpo"): Seq[(Int, Double)] = {
+  private def randomDraws: Seq[(Int, Double)] = {
     import org.apache.spark.unsafe.types.UTF8String
     val (dMin, dMax) = (dims.min, dims.max)
     val (lrMin, lrMax) = (learningRates.min, learningRates.max)
     (0 until maxJobs).map { i =>
       def u(tag: String): Double =
         graft.functions.Hash60.compute(Array(
-          UTF8String.fromString(salt), UTF8String.fromString(tag),
+          UTF8String.fromString("hpo"), UTF8String.fromString(tag),
           UTF8String.fromString(i.toString))) / graft.ops.Portable.TwoPow60
       val d = math.min(dMax, dMin + (u("dim") * (dMax - dMin + 1)).toInt)
       (d, lrMin + u("lr") * (lrMax - lrMin))
@@ -82,7 +83,7 @@ final case class TuneConfig(
   }
   /** The job list the configured strategy yields. */
   def draws: Seq[(Int, Double)] =
-    if (strategy == "random") randomDraws() else grid
+    if (strategy == "random") randomDraws else grid
 }
 
 /** Full engine config with the HPO branch flag

@@ -16,7 +16,7 @@ import graft.ops.{Barrier, Portable, Similarity}
   * once, on the driver, on a bounded sample, and the corpus is then
   * added in one assignment pass.
   *  - Sample: at most 256·k vectors (FAISS's `max_points_per_centroid`),
-  *    the first in [[graft.ops.Portable.seededHash]]`(id, seed)` order —
+  *    the first in [[graft.ops.Portable.seededHash]]`(id, 42)` order —
   *    one top-k job, no count. Driver memory is bounded by the sample,
   *    256·k × dim doubles, whatever the corpus size.
   *  - Fit: seeded k-means++ init, then Lloyd in double squared L2 until
@@ -32,9 +32,9 @@ import graft.ops.{Barrier, Portable, Similarity}
   *
   * Complements [[graft.ops.Ann]] (SRP-LSH, deterministic/oracle-able):
   * IVF adapts to the data distribution (learned centroids) where LSH is
-  * data-oblivious. Training is seeded and deterministic (the same seed
-  * gives the same centroids and assignments) but not replayed by the
-  * oracle — spec-verified, not oracle-backed.
+  * data-oblivious. Training is seeded (seed 42) and deterministic (the
+  * same corpus gives the same centroids and assignments) but not
+  * replayed by the oracle — spec-verified, not oracle-backed.
   *
   * Scale posture: the index holds its inverted lists materialized, so
   * every search reads the checkpointed (vec_id, cell, v) table and never
@@ -48,6 +48,8 @@ object IvfIndex {
   private val SamplePerCell = 256
   /** MLlib KMeans' default `maxIter`. */
   private val MaxRounds = 20
+  /** Seed of the sample order and the k-means++ init. */
+  private val Seed = 42L
 
   /** Assignment table (vec_id, cell, v: array<double>) + centroid table
     * (cell, c: array<double>). */
@@ -56,17 +58,17 @@ object IvfIndex {
   /** Build the index: fit the coarse quantizer on a seeded sample of at
     * most 256·k vectors, then assign every vector to its cell and
     * materialize the inverted lists (see the object doc). */
-  def build(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-            seed: Long = 42L): Index = {
+  def build(corpus: DataFrame, idCol: String, vecCol: String,
+            k: Int): Index = {
     require(k >= 1, s"IvfIndex.build: k = $k, need at least one cell")
     val vecs = corpus.select(col(idCol),
       transform(col(vecCol), _.cast("double")).as("v"))
     val sample = vecs
-      .orderBy(Portable.seededHash(col(idCol), lit(seed)), col(idCol))
+      .orderBy(Portable.seededHash(col(idCol), lit(Seed)), col(idCol))
       .limit(SamplePerCell * k).collect()
       .map(_.getSeq[Double](1).toArray)
     require(sample.nonEmpty, "IvfIndex.build: empty corpus")
-    val centres = train(sample, k, seed)
+    val centres = train(sample, k, Seed)
     val spark = corpus.sparkSession
     val bc = spark.sparkContext.broadcast(centres)
     val cellOf = udf((v: Seq[Double]) => nearest(v.toArray, bc.value))

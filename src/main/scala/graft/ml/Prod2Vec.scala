@@ -33,7 +33,7 @@ object Prod2Vec {
     * training cost exactly like [[graft.ops.Pairs.orderedBaskets]]'s
     * truncation bounds pair generation. Default matches MLlib's own
     * (1000), so existing training paths are byte-identical unless a cap
-    * is configured. */
+    * is configured. Every fit is seeded with 42 (see [[estimator]]). */
   case class Params(
       vectorSize: Int = 16,
       windowSize: Int = 4,      // train_window_size (N1: config wins over README)
@@ -41,7 +41,6 @@ object Prod2Vec {
       minCount: Int = 2,
       stepSize: Double = 0.025, // learning_rate
       numPartitions: Int = 8,
-      seed: Long = 42L,
       maxSentenceLength: Int = 1000)
 
   /** A1 for the trainer: baskets as string-token sequences (Word2Vec
@@ -68,7 +67,7 @@ object Prod2Vec {
       .setMinCount(p.minCount)
       .setStepSize(p.stepSize)
       .setNumPartitions(p.numPartitions)
-      .setSeed(p.seed)
+      .setSeed(42L)
       .setMaxSentenceLength(p.maxSentenceLength)
 
   /** M1+M2: build and fit the embedding model. */

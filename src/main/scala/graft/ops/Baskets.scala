@@ -24,10 +24,11 @@ object Baskets {
 
   /** Basket length distribution — the sanity profile a data team reads
     * before choosing a basket-length cap (q222): one row per distinct
-    * basket size with the basket count. One map-side-combined groupBy
-    * over sizes already in hand — no re-scan of the item stream. */
-  def lengthHistogram(baskets: DataFrame, basketArr: String = "basket"): DataFrame =
-    baskets.select(size(col(basketArr)).cast("long").as("basket_len"))
+    * size of the `basket` array column with the basket count. One
+    * map-side-combined groupBy over sizes already in hand — no re-scan
+    * of the item stream. */
+  def lengthHistogram(baskets: DataFrame): DataFrame =
+    baskets.select(size(col("basket")).cast("long").as("basket_len"))
       .groupBy("basket_len").agg(count(lit(1)).as("n_baskets"))
 
   /** Frequent item triples by the Apriori level-wise prune (Agrawal &

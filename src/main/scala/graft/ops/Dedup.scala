@@ -66,9 +66,9 @@ object Dedup {
     * hashes proves "definitely new" map-side with zero shuffle. Rows
     * whose hash the filter rejects CANNOT be in the index (no false
     * negatives) and skip the join entirely; only Bloom-positive rows
-    * (true dups + the `fpp` false-positive sliver) reach the exact
+    * (true dups + the 1% false-positive sliver) reach the exact
     * anti-join verify, so the join's streamed side shrinks from |batch|
-    * to ~|dups| + fpp·|batch|. Output is EXACTLY [[dedupExactAgainst]]
+    * to ~|dups| + 0.01·|batch|. Output is EXACTLY [[dedupExactAgainst]]
     * (the verify join removes Bloom false positives) — the sketch only
     * prunes work, never changes the answer; a spec pins the equality
     * and the oracle hash-checks it end-to-end (q105).
@@ -81,8 +81,8 @@ object Dedup {
     * machinery Spark's runtime-filter optimization injects for shuffle
     * joins, applied deliberately because we know the join is an
     * anti-join on a stored index. Size it honestly: `expectedItems` ≈
-    * the index's distinct-hash count; bits = optimalNumOfBits(n, fpp)
-    * (~1.2 GiB at 10^9 items / 1% fpp — driver and every executor hold
+    * the index's distinct-hash count; bits = optimalNumOfBits(n, 0.01)
+    * (~1.2 GiB at 10^9 items — driver and every executor hold
     * one copy, the broadcast-dim budget). The index side itself is
     * scanned twice (once building the filter, once as the verify join's
     * build side) but only its 16-byte hash column — at rest that IS the
@@ -92,21 +92,19 @@ object Dedup {
     * (nothing to drop), matching the anti-join. */
   def dedupExactAgainstBloom(df: DataFrame, existing: DataFrame,
                              idCol: String, contentCol: String,
-                             expectedItems: Long = 1L << 20,
-                             fpp: Double = 0.01): DataFrame = {
+                             expectedItems: Long = 1L << 20): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graftbridge.ColumnBridge
     import org.apache.spark.sql.types.BinaryType
     import org.apache.spark.util.sketch.BloomFilter
     require(expectedItems >= 1, s"expectedItems must be >= 1, got $expectedItems")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1), got $fpp")
     val hashes = existing
       .select(md5(col(contentCol).cast("binary")).as("__h")).distinct()
     val bfAgg = new BloomFilterAggregate(
       ColumnBridge.expression(xxhash64(col("__h"))),
       Literal(expectedItems),
-      Literal(BloomFilter.optimalNumOfBits(expectedItems, fpp)))
+      Literal(BloomFilter.optimalNumOfBits(expectedItems, 0.01)))
       .toAggregateExpression()
     val bfBytes = hashes.select(ColumnBridge.column(bfAgg).as("__bf"))
       .head().getAs[Array[Byte]](0)
@@ -384,24 +382,24 @@ object Dedup {
     * costs: from a similarity pair list ([[jaccardPairsExact]] /
     * [[jaccardVerify]] output, unfiltered or low-τ), each document
     * collapses to its MAXIMUM pair similarity, histogrammed into
-    * `buckets` equal τ bins with a descending cumulative — row
+    * 20 equal τ bins (0.05 wide) with a descending cumulative — row
     * (tau_floor, n_docs, cum_docs_ge) says "raising the dedup
     * threshold to tau_floor would touch cum_docs_ge documents". The
     * tuning curve a data team reads before committing a τ to the
     * curation funnel, where the per-τ survivor count would otherwise
     * cost one clustering run per candidate value.
     *
-    * Bucket boundaries are floor(max_jaccard · buckets) on the
+    * Bucket boundaries are floor(max_jaccard · 20) on the
     * 9dp-rounded jaccard. The multiply itself is IEEE double (e.g.
     * 0.35 · 20 = 6.999…, binning one bucket low) — cross-engine parity
     * holds because both engines evaluate the IDENTICAL expression on
     * identical 9dp inputs, not because the edge placement is exact;
     * a reader who needs exact edges should bin on the integer 9dp
     * representation instead. Shape: one explode + id-keyed max over
-    * the ALREADY-BOUNDED pair list, a `buckets`-row histogram, and a
-    * cumulative window over ≤ buckets+1 rows. */
-  def dedupSensitivity(pairs: DataFrame, buckets: Int = 20): DataFrame = {
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
+    * the ALREADY-BOUNDED pair list, a 20-row histogram, and a
+    * cumulative window over ≤ 21 rows. */
+  def dedupSensitivity(pairs: DataFrame): DataFrame = {
+    val buckets = 20
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("bucket").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -782,10 +780,10 @@ object Dedup {
     *    to its label's label (labels only decrease and always name a
     *    component member, so the jump stays inside the component). The
     *    jump halves pointer-chain depth each round, so rounds needed are
-    *    O(log diameter). Stops when no label changed; throws if
-    *    `maxIters` rounds pass without convergence (non-minimal labels
-    *    would silently break the cluster contract downstream).
-    *    `maxIters` bounds these rounds only; the driver path has none.
+    *    O(log diameter). Stops when no label changed; throws if 30
+    *    rounds pass without convergence (non-minimal labels would
+    *    silently break the cluster contract downstream). The cap
+    *    bounds these rounds only; the driver path has none.
     *
     * Scale posture of the rounds: per round, one hash join of labels
     * onto the edge list keyed on vertex id + one min-groupBy — both
@@ -798,15 +796,15 @@ object Dedup {
     * [[Barrier]] scaladoc. Reference for finishing in memory once the
     * graph fits: Kiveris et al., "Connected Components in MapReduce and
     * Beyond" (SoCC 2014). */
-  def nearDupClusters(verifiedPairs: DataFrame, idCol: String,
-                      maxIters: Int = 30): DataFrame =
-    nearDupClusters(verifiedPairs, idCol, maxIters, DriverEdgeBudget)
+  def nearDupClusters(verifiedPairs: DataFrame, idCol: String): DataFrame =
+    nearDupClusters(verifiedPairs, idCol, 30, DriverEdgeBudget)
 
   /** Undirected pairs the driver path of [[nearDupClusters]] takes. */
   private val DriverEdgeBudget = 1 << 18
 
-  /** [[nearDupClusters]] with the driver budget as a parameter: 0 sends
-    * any non-empty edge list to the distributed rounds. */
+  /** [[nearDupClusters]] with the round cap and the driver budget as
+    * parameters: budget 0 sends any non-empty edge list to the
+    * distributed rounds. */
   private[graft] def nearDupClusters(verifiedPairs: DataFrame, idCol: String,
                                      maxIters: Int,
                                      edgeBudget: Int): DataFrame = {
@@ -929,10 +927,10 @@ object Dedup {
     * rep — removal is one left-anti join keyed on id, same as
     * [[dedupNear]]. */
   def dedupNearClustered(df: DataFrame, idCol: String, shingled: DataFrame,
-                         numPerms: Int, bands: Int, rpb: Int, tau: Double,
-                         maxIters: Int = 30): DataFrame = {
+                         numPerms: Int, bands: Int, rpb: Int,
+                         tau: Double): DataFrame = {
     val verified = nearDupPairs(shingled, idCol, numPerms, bands, rpb, tau)
-    val drops = nearDupClusters(verified, idCol, maxIters)
+    val drops = nearDupClusters(verified, idCol)
       .filter(col(idCol) =!= col("cluster_rep"))
       .select(col(idCol))
     df.join(drops, Seq(idCol), "left_anti")
@@ -1182,7 +1180,7 @@ object Dedup {
   // ---- embedding-cosine -------------------------------------------------
 
   /** Sign-random-projection bucket per vector: bit p = (v · w_p ≥ 0) with
-    * plane weights w_p[i] = unif(planeOffset + p, i) − 0.5 derived from
+    * plane weights w_p[i] = unif(p, i) − 0.5 derived from
     * the portable hash (no RNG state — reproducible and oracle-able).
     * Map-only.
     *
@@ -1204,15 +1202,12 @@ object Dedup {
     * candidate joins stay near-linear only when
     * planes ≈ log2(N / targetBucketSize). A fixture-sized default would
     * be a scale trap, so `planes` is a required argument; for recall,
-    * OR multiple independent tables via `planeOffset` (table t passes
-    * offset t·planes — distinct contiguous plane ranges, so table 0 is
-    * bit-identical to the single-table form; see
+    * OR multiple independent tables with [[srpBucketsMulti]] (see
     * [[graft.ops.Ann.annTopKMulti]]) rather than lowering `planes`. */
   def srpBuckets(df: DataFrame, idCol: String, vecCol: String,
-                 planes: Int, planeOffset: Int = 0,
-                 carry: Seq[String] = Nil): DataFrame =
+                 planes: Int, carry: Seq[String] = Nil): DataFrame =
     df.select(col(idCol) +: carry.map(col) :+ col(vecCol) :+
-      srpBucketExpr(probeDim(df, vecCol), vecCol, planes, planeOffset)
+      srpBucketExpr(probeDim(df, vecCol), vecCol, planes, 0)
         .as("bucket"): _*)
 
   /** Vector dimension probed from a SINGLE row (limit-1 job, never a

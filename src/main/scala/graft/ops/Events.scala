@@ -1080,9 +1080,10 @@ object Events {
     * Zero standard error (pooled rate 0 or 1, or an empty arm) yields
     * NULL z. Shape: one distinct-user agg keyed by user (conversion =
     * max over the user's events), one 2-row rollup. Returns ONE row:
-    * (n_a, n_b, conv_a, conv_b, rate_a, rate_b, z, significant). */
-  def abTest(events: DataFrame, convType: String, salt: String,
-             zCrit: Double = 1.96): DataFrame = {
+    * (n_a, n_b, conv_a, conv_b, rate_a, rate_b, z, significant), with
+    * significant = |z| ≥ 1.96 (two-sided 5%). */
+  def abTest(events: DataFrame, convType: String,
+             salt: String): DataFrame = {
     val arm = pmod(Portable.seededHash(lit(salt), col("user_id")), lit(2L))
     val users = events
       .groupBy(col("user_id"))
@@ -1114,7 +1115,7 @@ object Events {
       .withColumn("z", when(col("n_a") > 0 && col("n_b") > 0 && se > 0.0,
         Portable.ratio9((pA - pB) / se)))
       .withColumn("significant",
-        coalesce(abs(col("z")) >= zCrit, lit(false)))
+        coalesce(abs(col("z")) >= 1.96, lit(false)))
   }
 
   /** Next-event prediction evaluation — the [[transitionMatrix]]

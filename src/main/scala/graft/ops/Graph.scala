@@ -47,15 +47,14 @@ object Graph {
 
   /** PageRank over an undirected pair list (each edge once, any
     * orientation). Returns (id, r) with r the scaled-integer rank —
-    * r/scale ≈ the PageRank probability. `dampPct` is the damping
-    * factor in percent (the classic 0.85 → 85). Nodes are the edge
+    * r/scale ≈ the PageRank probability, at the classic damping
+    * factor 0.85 (integer percent: 85/100). Nodes are the edge
     * endpoints; isolated vertices don't participate (no edges → no
     * rank flow — filter them in, degree 0, would just hold teleport
     * mass). */
   def pageRank(pairs: DataFrame, aCol: String, bCol: String, iters: Int,
-               scale: Long = 1000000000000L, dampPct: Int = 85): DataFrame = {
+               scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(dampPct >= 0 && dampPct <= 100, s"dampPct in [0,100], got $dampPct")
     require(scale > 0, s"scale must be positive, got $scale")
     // materialize the INPUT edge list first: Spark plans are trees, so
     // without this cut an expensive upstream (e.g. the tf-idf pair
@@ -80,7 +79,7 @@ object Graph {
         .groupBy("dst").agg(sum("c").as("s"))
       r = Barrier.cut(flows.crossJoin(broadcast(n))
         .selectExpr("dst AS id",
-          s"((${100 - dampPct} * $base) div 100) + (($dampPct * s) div 100) AS r"))
+          s"((15 * $base) div 100) + ((85 * s) div 100) AS r"))
     }
     r
   }

@@ -53,53 +53,6 @@ object Multimodal {
       struct(length(col(contentCol).cast("binary")).cast("long").as("n_bytes"),
         col("lang"), col("source")).as("meta"))
 
-  /** Payload table from a real media directory via Spark's `binaryFile`
-    * source — the production entry point ([[payloads]] is the
-    * text-column twin for the fixture tables). Emits the same
-    * (doc_id, payload, meta) shape, so [[metaTable]] / [[resize]] /
-    * [[sampleFrames]] / [[extractFeatures]] run unchanged on either.
-    *
-    * doc_id is a hash of the dir-RELATIVE path: stable when the same
-    * corpus mounts at a different prefix, yet unique across
-    * subdirectories (same-named files under `recursiveFileLookup` must
-    * not collide); `meta.source` keeps the relative path for
-    * traceability, `meta.lang` is null (unknown for raw media).
-    *
-    * 100 TB posture: binaryFile assigns whole files to partitions
-    * (a file never splits), reads are map-only, and media directories
-    * should be filtered at the source via its `pathGlobFilter` /
-    * `recursiveFileLookup` options rather than a post-scan filter —
-    * pass them through `options`. */
-  def payloadsFromDir(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      options: Map[String, String] = Map.empty): DataFrame = {
-    // `path` arrives fully qualified (e.g. file:/...); qualify `dir` the
-    // same way so the relative path is an exact fixed-length strip. That
-    // strip is only sound under a real directory — a glob or file path
-    // would misalign it into colliding/garbage ids, so reject those
-    // loudly (filter WITHIN a dir via pathGlobFilter in `options`).
-    val hp = new org.apache.hadoop.fs.Path(dir)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    val isDir =
-      try fs.getFileStatus(hp).isDirectory
-      catch { case _: java.io.FileNotFoundException => false }
-    require(isDir,
-      s"payloadsFromDir expects an existing directory (not a glob/file): $dir")
-    val qualified = fs.makeQualified(hp).toString
-    val prefix = if (qualified.endsWith("/")) qualified else qualified + "/"
-    // +1: SQL substring is 1-based; codePointCount because Spark's
-    // substring counts code points while String.length counts UTF-16
-    // units (they differ on non-BMP directory names)
-    val rel = expr(
-      s"substring(path, ${prefix.codePointCount(0, prefix.length) + 1})")
-    spark.read.format("binaryFile").options(options).load(dir)
-      .select(
-        xxhash64(rel).as("doc_id"),
-        col("content").as("payload"),
-        struct(col("length").cast("long").as("n_bytes"),
-          lit(null).cast("string").as("lang"),
-          rel.as("source")).as("meta"))
-  }
-
   /** Metadata extraction over the binary payload — size, content hash,
     * magic-bytes prefix. Map-only scalar expressions (oracle-able). */
   def metaTable(payloadDf: DataFrame): DataFrame =

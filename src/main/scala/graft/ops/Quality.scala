@@ -633,7 +633,7 @@ object Quality {
     * fill-in, or a clamped range bend it.
     *
     * The digit extraction never touches floats or logs: the value
-    * integerizes at `dp` decimals (exact for fixed-point money), and
+    * integerizes at 2 decimals (cents, exact for fixed-point money), and
     * the first digit of a nonneg LONG is its first decimal-string
     * character — integer-to-string is exact in every engine. All 9
     * digit rows emit (the χ² zero-cell lesson); `excess` is the exact
@@ -642,12 +642,9 @@ object Quality {
     * Shape: one digit-keyed agg (9 groups, map-side combined), the
     * 9-row literal grid joined in, a 1-row total broadcast. Returns
     * 9 rows: (digit, observed, n, share, benford_p, excess). */
-  def benfordAudit(df: DataFrame, valueCol: String,
-                   dp: Int = 2): DataFrame = {
-    require(dp >= 0 && dp <= 6, s"dp must be in [0,6], got $dp")
+  def benfordAudit(df: DataFrame, valueCol: String): DataFrame = {
     import df.sparkSession.implicits._
-    val s = math.pow(10.0, dp.toDouble)
-    val v = floor(round(col(valueCol).cast("double"), dp) * lit(s) +
+    val v = floor(round(col(valueCol).cast("double"), 2) * lit(100.0) +
       lit(0.5)).cast("long")
     val counted = df
       .select(v.as("__v")).filter(col("__v") > 0L)
@@ -1753,16 +1750,14 @@ object Quality {
     * d×d) matrix is the input to any eigen/whitening step — the
     * distributed part, done here, is the one pass over the corpus.
     *
-    * Numeric contract: coordinates integerize at `unitScale` (the
+    * Numeric contract: coordinates integerize at s = 10^6 (the
     * floor(x·s + ½) discipline), per-pair products and sums accumulate
     * in exact LONG, and the covariance numerator n·Σxy − Σx·Σy forms
     * per pair in 128-bit-safe arithmetic downstream of the output's
     * exact integer columns — so the matrix is bit-reproducible across
     * partitionings and engines. Capacity budget: n·(max|x|·s)² must
-    * stay below 2^63 (documented, not checked per-row) — at s = 10^6
-    * and unit-ish coordinates that is ~2·10^6 rows per aggregation;
-    * beyond that, drop `unitScale` a decade per 100× rows (precision
-    * is a knob, exactness is not).
+    * stay below 2^63 (documented, not checked per-row) — for unit-ish
+    * coordinates that is ~2·10^6 rows per aggregation.
     *
     * Shape — the RowMatrix Gramian pattern (one of the rare genuinely
     * imperative per-partition kernels): each partition accumulates its
@@ -1773,14 +1768,13 @@ object Quality {
     * EAGER: the pass runs at call time. Returns (i ≤ j 1-based, n,
     * sum_i, sum_j, sumprod, cov) with cov = (n·Σxy − Σx·Σy)/(n²·s²)
     * at 9 dp. */
-  def embeddingCovariance(df: DataFrame, vecCol: String, dims: Int,
-                          unitScale: Long = 1000000L): DataFrame = {
+  def embeddingCovariance(df: DataFrame, vecCol: String,
+                          dims: Int): DataFrame = {
     require(dims >= 1 && dims <= 512, s"dims must be in [1,512], got $dims")
-    require(unitScale >= 1L, s"unitScale must be >= 1, got $unitScale")
     val spark = df.sparkSession
     val d = dims
     val nTri = d * (d + 1) / 2
-    val s = unitScale.toDouble
+    val s = 1e6
     val (n, sums, prods) = df
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === d)
       .select(col(vecCol).cast("array<double>"))

@@ -166,14 +166,32 @@ object Quantize {
   def pqAdcTopKFrom(df: DataFrame, idCol: String, vecCol: String,
                     probes: DataFrame, m: Int, w: Int,
                     codebooks: DataFrame, k: Int): DataFrame = {
-    val codes = pqCodesFrom(df, idCol, vecCol, m, w, codebooks)
-    val tab = subspaces(probes, idCol, vecCol, m, w, "probe_id", "pv")
+    adcTopK(pqCodesFrom(df, idCol, vecCol, m, w, codebooks), idCol,
+      adcTable(probes, idCol, vecCol, m, w, codebooks), k)
+  }
+
+  /** The ADC distance table (probe_id, s, cid, __d): each probe's
+    * sub-vectors against every codeword of their subspace. */
+  private def adcTable(probes: DataFrame, idCol: String, vecCol: String,
+                       m: Int, w: Int, codebooks: DataFrame): DataFrame =
+    subspaces(probes, idCol, vecCol, m, w, "probe_id", "pv")
       .join(codebooks, Seq("s"))
       .select(col("probe_id"), col("s"), col("cid"),
         l2i(col("pv"), col("cv")).as("__d"))
-    codes.join(broadcast(tab),
-        codes("s") === tab("s") && codes("code") === tab("cid"))
-      .select(col("probe_id"), codes(idCol).as("vec_id"), col("__d"))
+
+  /** The ADC ranking: candidate codes (idCol, s, code) look up their
+    * distances in the broadcast table `tab` — per probe, or only for the
+    * probe_id a candidate carries when IVF gated it — summed per
+    * (probe, vec), self-matches dropped, the k nearest ranked with ties
+    * to the smaller vec_id. Returns (probe_id, vec_id, rnk ≤ k). */
+  private def adcTopK(cand: DataFrame, idCol: String, tab: DataFrame,
+                      k: Int): DataFrame = {
+    val onCode = cand("s") === tab("s") && cand("code") === tab("cid")
+    cand.join(broadcast(tab),
+        if (cand.columns.contains("probe_id"))
+          cand("probe_id") === tab("probe_id") && onCode
+        else onCode)
+      .select(tab("probe_id"), cand(idCol).as("vec_id"), tab("__d"))
       .groupBy(col("probe_id"), col("vec_id"))
       .agg(sum(col("__d")).as("__ad"))
       .filter(col("vec_id") =!= col("probe_id"))
@@ -223,24 +241,9 @@ object Quantize {
       .filter(col("__r") <= nprobe)
       .select(col("probe_id"), col("__cid").as("cell"))
     val pqCen = subspaces(centroids, idCol, vecCol, m, w, "cid", "cv")
-    val tab = subspaces(probes, idCol, vecCol, m, w, "probe_id", "pv")
-      .join(pqCen, Seq("s"))
-      .select(col("probe_id"), col("s"), col("cid"),
-        l2i(col("pv"), col("cv")).as("__d"))
     val cand = codes.join(cells, Seq(idCol))
       .join(broadcast(probeCells), Seq("cell"))
-    cand.join(broadcast(tab),
-        cand("probe_id") === tab("probe_id") && cand("s") === tab("s")
-          && cand("code") === tab("cid"))
-      .select(cand("probe_id"), cand(idCol).as("vec_id"), tab("__d"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(sum(col("__d")).as("__ad"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("probe_id"))
-          .orderBy(col("__ad"), col("vec_id"))))
-      .filter(col("rnk") <= k)
-      .select(col("probe_id"), col("vec_id"), col("rnk"))
+    adcTopK(cand, idCol, adcTable(probes, idCol, vecCol, m, w, pqCen), k)
   }
 
   /** The [[ivfPqTopK]] nprobe SWEEP with the shared frames factored
@@ -279,27 +282,13 @@ object Quantize {
       .filter(col("__r") <= nprobes.max)
       .select(col("probe_id"), col("__cid").as("cell"), col("__r")))
     val pqCen = subspaces(centroids, idCol, vecCol, m, w, "cid", "cv")
-    val tab = cut(subspaces(probes, idCol, vecCol, m, w, "probe_id", "pv")
-      .join(pqCen, Seq("s"))
-      .select(col("probe_id"), col("s"), col("cid"),
-        l2i(col("pv"), col("cv")).as("__d")))
+    val tab = cut(adcTable(probes, idCol, vecCol, m, w, pqCen))
     val coded = cut(codes.join(cells, Seq(idCol)))
     nprobes.map { np =>
       val probeCells = rankedCells.filter(col("__r") <= np)
         .select(col("probe_id"), col("cell"))
-      val cand = coded.join(broadcast(probeCells), Seq("cell"))
-      np -> cand.join(broadcast(tab),
-          cand("probe_id") === tab("probe_id") && cand("s") === tab("s")
-            && cand("code") === tab("cid"))
-        .select(cand("probe_id"), cand(idCol).as("vec_id"), tab("__d"))
-        .groupBy(col("probe_id"), col("vec_id"))
-        .agg(sum(col("__d")).as("__ad"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("rnk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("probe_id"))
-            .orderBy(col("__ad"), col("vec_id"))))
-        .filter(col("rnk") <= k)
-        .select(col("probe_id"), col("vec_id"), col("rnk"))
+      np -> adcTopK(coded.join(broadcast(probeCells), Seq("cell")), idCol,
+        tab, k)
     }
   }
 

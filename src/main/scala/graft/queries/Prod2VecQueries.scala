@@ -368,26 +368,31 @@ private[graft] object Prod2VecQueries {
     },
     // q229: the q177 edge build, then the synchronous peel unrolled
     // round-for-round; membership from the final round's degrees,
-    // converged = the last round removed nothing.
+    // converged = the last round removed nothing. Each round reads the
+    // previous round's CTEs more than once, so DuckDB, which inlines a
+    // CTE at every reference, re-derived the edge build a number of
+    // times exponential in the round count: 281.6 s on sf0.01 (DuckDB
+    // 1.0, 4-core host). Materialized, each CTE runs once: 0.02 s.
     {
       def degs(e: String, d: String) =
-        s"""$d AS (
+        s"""$d AS MATERIALIZED (
            |  SELECT id, count(*)::BIGINT AS deg FROM (
            |    SELECT lo AS id FROM $e UNION ALL SELECT hi FROM $e) _
            |  GROUP BY id
            |)""".stripMargin
       def round(i: Int) =
-        s"""k$i AS (SELECT id FROM d${i - 1} WHERE deg >= $KCoreK),
-           |e$i AS (
+        s"""k$i AS MATERIALIZED (
+           |  SELECT id FROM d${i - 1} WHERE deg >= $KCoreK),
+           |e$i AS MATERIALIZED (
            |  SELECT e.lo, e.hi FROM e${i - 1} e
            |  JOIN k$i a ON e.lo = a.id JOIN k$i b ON e.hi = b.id
            |),
            |${degs(s"e$i", s"d$i")}""".stripMargin
-      s"""WITH lp AS (
+      s"""WITH lp AS MATERIALIZED (
          |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p
          |  FROM lineitem WHERE l_partkey < $TriPartMax
          |),
-         |e0 AS (
+         |e0 AS MATERIALIZED (
          |  SELECT DISTINCT a.p AS lo, b.p AS hi
          |  FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p
          |),

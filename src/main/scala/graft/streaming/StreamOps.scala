@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
@@ -104,55 +104,24 @@ object StreamOps {
     * would close). */
   def anomalyStream(events: DataFrame, widthMs: Long, trailing: Int,
                     zThresh: Double, watermark: String): Dataset[AnomRow] = {
-    require(widthMs >= 1, s"widthMs must be >= 1, got $widthMs")
-    require(trailing >= 2, s"trailing must be >= 2, got $trailing")
     require(zThresh > 0, s"zThresh must be > 0, got $zThresh")
     val spark = events.sparkSession
     import spark.implicits._
     val k = trailing.toLong
     def r9(x: Double): Double =
       BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-    withEventTime(events)
-      .withWatermark("event_time", watermark)
-      .select(col("event_type").as("k"),
-        expr(s"""(((ts - pmod(ts, 1000000)) div 1000000)
-                 | - pmod((ts - pmod(ts, 1000000)) div 1000000, $widthMs))
-                 |""".stripMargin).cast("long").as("w"),
-        col("event_time"))
-      .as[AnomIn]
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[AnomState, AnomRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, rows, state) =>
-          val st = state.getOption.getOrElse(AnomState(Nil, Nil))
-          val open = collection.mutable.Map(st.open: _*)
-          rows.foreach { r => open(r.w) = open.getOrElse(r.w, 0L) + 1L }
-          val wm = state.getCurrentWatermarkMs()
-          val (closed, stillOpen) = open.toSeq.partition(_._1 + widthMs <= wm)
-          var hist = st.hist
-          val out = closed.sortBy(_._1).flatMap { case (w, c) =>
-            val row = if (hist.size == trailing) {
-              val s = hist.sum
-              val ss = hist.map(x => x * x).sum
-              val varNum = ss * k - s * s
-              val mean = s.toDouble / k
-              val variance = varNum.toDouble / (k * k)
-              val zOpt = if (varNum > 0)
-                Some((c.toDouble - mean) / math.sqrt(variance)) else None
-              val anom = zOpt.map(z => math.abs(z) >= zThresh)
-                .getOrElse(c * k != s)
-              Some(AnomRow(key, w, c, r9(mean), r9(variance),
-                zOpt.map(r9), anom))
-            } else None
-            hist = (hist :+ c).takeRight(trailing)
-            row
-          }
-          state.update(AnomState(stillOpen.sortBy(_._1), hist))
-          if (stillOpen.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(stillOpen.map(_._1).min + widthMs, wm + 1))
-          out.iterator
-      }
+    closedWindows(events, widthMs, trailing, watermark) { (key, w, c, hist) =>
+      val s = hist.sum
+      val ss = hist.map(x => x * x).sum
+      val varNum = ss * k - s * s
+      val mean = s.toDouble / k
+      val variance = varNum.toDouble / (k * k)
+      val zOpt = if (varNum > 0)
+        Some((c.toDouble - mean) / math.sqrt(variance)) else None
+      val anom = zOpt.map(z => math.abs(z) >= zThresh)
+        .getOrElse(c * k != s)
+      AnomRow(key, w, c, r9(mean), r9(variance), zOpt.map(r9), anom)
+    }
   }
 
   case class RobustAnomRow(event_type: String, window_start_ms: Long,
@@ -171,14 +140,38 @@ object StreamOps {
   def robustAnomalyStream(events: DataFrame, widthMs: Long,
                           trailing: Int, kNum: Long, kDen: Long,
                           watermark: String): Dataset[RobustAnomRow] = {
-    require(widthMs >= 1, s"widthMs must be >= 1, got $widthMs")
-    require(trailing >= 2 && trailing % 2 == 0,
-      s"trailing must be even >= 2, got $trailing")
+    require(trailing % 2 == 0, s"trailing must be even, got $trailing")
     require(kNum >= 1 && kDen >= 1, s"k must be positive, got $kNum/$kDen")
     val spark = events.sparkSession
     import spark.implicits._
     def med2(sorted: IndexedSeq[Long]): Long =
       sorted(trailing / 2 - 1) + sorted(trailing / 2)
+    closedWindows(events, widthMs, trailing, watermark) { (key, w, c, hist) =>
+      val sorted = hist.sorted.toIndexedSeq
+      val m2 = med2(sorted)
+      val devs = sorted.map(x => math.abs(2L * x - m2)).sorted
+      val dm2 = med2(devs)
+      val dx = math.abs(2L * c - m2)
+      val anom = if (dm2 > 0L) 2L * dx * kDen >= kNum * dm2
+                 else dx > 0L
+      RobustAnomRow(key, w, c, m2.toDouble / 2.0, dm2.toDouble / 4.0, anom)
+    }
+  }
+
+  /** The state machine both anomaly streams share: per event type,
+    * `widthMs` tumbling-window counts stay open until the window's end
+    * passes the watermark, then close in window order; each closed
+    * window is scored by `score(type, window start, count, trail)` once
+    * the trail holds the previous `trailing` closed counts, and joins
+    * the trail. Windows close on the next batch touching the key or on
+    * an event-time timeout set to the earliest open window's end. */
+  private def closedWindows[R: Encoder](events: DataFrame, widthMs: Long,
+      trailing: Int, watermark: String)(
+      score: (String, Long, Long, Seq[Long]) => R): Dataset[R] = {
+    require(widthMs >= 1, s"widthMs must be >= 1, got $widthMs")
+    require(trailing >= 2, s"trailing must be >= 2, got $trailing")
+    val spark = events.sparkSession
+    import spark.implicits._
     withEventTime(events)
       .withWatermark("event_time", watermark)
       .select(col("event_type").as("k"),
@@ -188,7 +181,7 @@ object StreamOps {
         col("event_time"))
       .as[AnomIn]
       .groupByKey(_.k)
-      .flatMapGroupsWithState[AnomState, RobustAnomRow](
+      .flatMapGroupsWithState[AnomState, R](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key, rows, state) =>
           val st = state.getOption.getOrElse(AnomState(Nil, Nil))
@@ -198,17 +191,8 @@ object StreamOps {
           val (closed, stillOpen) = open.toSeq.partition(_._1 + widthMs <= wm)
           var hist = st.hist
           val out = closed.sortBy(_._1).flatMap { case (w, c) =>
-            val row = if (hist.size == trailing) {
-              val sorted = hist.sorted.toIndexedSeq
-              val m2 = med2(sorted)
-              val devs = sorted.map(x => math.abs(2L * x - m2)).sorted
-              val dm2 = med2(devs)
-              val dx = math.abs(2L * c - m2)
-              val anom = if (dm2 > 0L) 2L * dx * kDen >= kNum * dm2
-                         else dx > 0L
-              Some(RobustAnomRow(key, w, c, m2.toDouble / 2.0,
-                dm2.toDouble / 4.0, anom))
-            } else None
+            val row =
+              if (hist.size == trailing) Some(score(key, w, c, hist)) else None
             hist = (hist :+ c).takeRight(trailing)
             row
           }
@@ -411,41 +395,29 @@ object StreamOps {
   }
 
   /** Streaming ingest curation — the continuous-arrival twin of
-    * [[graft.app.CorpusPipeline]]'s gate prefix: optional PII scrub →
-    * normalize (+ non-empty) → language gate → quality gate → optional
-    * blocklist gate (any-hit drop, the list a codegen literal) →
-    * optional exact dedup against the static corpus index → optional
-    * NEAR dedup against the static SimHash index
-    * ([[dedupNearStreamAgainst]], cheapest-gate-first after the exact
-    * hash join). Every gate
-    * is the
-    * SAME column expression the batch funnel uses, chosen in its
-    * map-only form ([[graft.ops.Text.piiMasked]], `normalize`,
-    * `langIdTextColumn`, `qualityScore`), so the stage is fully STATELESS:
-    * no watermark needed, nothing accumulates, append mode works, and
-    * a batch frame through this function gives bit-identical rows
-    * (spec-pinned) — one code path for backfill and ingest.
+    * [[graft.app.CorpusPipeline]]'s gate prefix: normalize (+ non-empty)
+    * → language gate → quality gate → optional exact dedup against the
+    * static corpus index. Every gate is the SAME column expression the
+    * batch funnel uses, chosen in its map-only form (`normalize`,
+    * `langIdTextColumn`, `qualityScore`), so the stage is fully
+    * STATELESS: no watermark needed, nothing accumulates, append mode
+    * works, and a batch frame through this function gives bit-identical
+    * rows (spec-pinned) — one code path for backfill and ingest.
     *
     * What it deliberately does NOT do on the stream: IN-STREAM dedup,
     * exact or near (state-bearing — compose [[dedupStream]] with a
     * watermark for that), and chunking/packing (batch-shaped
-    * consumers). `existingHashes` is the stored content-hash index
-    * ([[graft.ops.Dedup.exactGroups]] output at rest); the anti-join
-    * against it is stateless on the stream side.
+    * consumers); near dedup against a static SimHash index composes
+    * with [[dedupNearStreamAgainst]]. `existingHashes` is the stored
+    * content-hash index ([[graft.ops.Dedup.exactGroups]] output at
+    * rest); the anti-join against it is stateless on the stream side.
     *
-    * Output: the input columns (text normalized/scrubbed) plus
-    * pred_lang and the quality columns, plus content_hash when the
-    * index gate is on. */
+    * Output: the input columns (text normalized) plus pred_lang and the
+    * quality columns, plus content_hash when the index gate is on. */
   def curateStream(docs: DataFrame, keepLangs: Set[String],
-                   minQuality: Double, scrubPii: Boolean = false,
-                   existingHashes: Option[DataFrame] = None,
-                   blocklist: Option[Seq[String]] = None,
-                   nearIndex: Option[DataFrame] = None,
-                   nearMaxHam: Int = 2): DataFrame = {
+                   minQuality: Double,
+                   existingHashes: Option[DataFrame] = None): DataFrame = {
     import graft.ops.Text
-    val scrubbed =
-      if (!scrubPii) docs
-      else docs.withColumn("text", Text.piiMasked(col("text")))
     // The expensive per-row gate kernels are fenced with
     // [[graft.functions.Stable]]: without it, Catalyst pushes each
     // gate's filter below the projection that computes its column by
@@ -457,7 +429,7 @@ object StreamOps {
     // the streaming twin of the batch funnel's persisted gate frame).
     // The normalized text is fenced for the same reason: the pushed
     // non-empty filter would normalize each row twice.
-    val normed = scrubbed
+    val normed = docs
       .withColumn("text",
         graft.functions.Stable.col(Text.normalize(col("text"))))
       .filter(length(col("text")) > 0)
@@ -469,21 +441,7 @@ object StreamOps {
       .withColumn("quality_score",
         graft.functions.Stable.col(col("quality_score")))
       .filter(col("quality_score") >= minQuality)
-    // blocklist gate in its per-row form (the batch funnel's any-hit
-    // rule over the SAME literal list) — exists() over the row's own
-    // tokens, stateless like every other gate here
-    val clean = blocklist.fold(scored) { terms =>
-      val lst = typedLit(terms.distinct)
-      scored.filter(!exists(Text.tokens(col("text")),
-        t => array_contains(lst, t)))
-    }
-    // exact gate first (16-byte hash equi-join), then the near gate
-    // (band joins + hamming scan) on what survives — cheapest filter
-    // first, both stateless
-    val exactClean =
-      existingHashes.fold(clean)(h => dedupStreamAgainst(clean, "text", h))
-    nearIndex.fold(exactClean)(idx =>
-      dedupNearStreamAgainst(exactClean, "text", idx, nearMaxHam))
+    existingHashes.fold(scored)(h => dedupStreamAgainst(scored, "text", h))
   }
 
   /** Streaming twin of [[graft.ops.Quality.thresholdSweep]] — the

@@ -36,13 +36,13 @@ class Prod2VecSpec extends SparkSpec {
 
   test("P7 trainer analog: every Params field reaches the MLlib estimator") {
     val p = Prod2Vec.Params(vectorSize = 12, windowSize = 3, maxIter = 2,
-      minCount = 5, stepSize = 0.01, numPartitions = 4, seed = 9L,
+      minCount = 5, stepSize = 0.01, numPartitions = 4,
       maxSentenceLength = 50)
     val est = Prod2Vec.estimator(p)
     assert(est.getVectorSize == 12 && est.getWindowSize == 3
       && est.getMaxIter == 2 && est.getMinCount == 5
       && est.getStepSize == 0.01 && est.getNumPartitions == 4
-      && est.getSeed == 9L)
+      && est.getSeed == 42L)
     assert(est.getMaxSentenceLength == 50) // basket cap applied to training
     // default Params leave MLlib's own sentence cap untouched (q37 stable)
     assert(Prod2Vec.estimator(Prod2Vec.Params()).getMaxSentenceLength == 1000)

@@ -76,7 +76,7 @@ class DedupSpec extends SparkSpec {
   private def bothPaths(pairs: DataFrame, idCol: String = "doc_id",
                         maxIters: Int = 30): DataFrame = {
     val rounds = Dedup.nearDupClusters(pairs, idCol, maxIters, 0)
-    val driver = Dedup.nearDupClusters(pairs, idCol, maxIters)
+    val driver = Dedup.nearDupClusters(pairs, idCol)
     assert(driver.queryExecution.analyzed.isInstanceOf[LocalRelation])
     assert(driver.schema.map(f => (f.name, f.dataType)) ==
       rounds.schema.map(f => (f.name, f.dataType)))
@@ -636,13 +636,17 @@ class DedupSpec extends SparkSpec {
     val batch = docs.filter($"doc_id" >= 2L)
     val plain = Dedup.dedupExactAgainst(batch, existing, "doc_id", "text")
       .select("doc_id").as[Long].collect().sorted
-    // tight fpp AND a sloppy 50% fpp: false positives route through the
-    // verify join and never change the answer
-    for (fpp <- Seq(0.01, 0.5)) {
-      val bloom = Dedup.dedupExactAgainstBloom(batch, existing, "doc_id",
-          "text", expectedItems = 16, fpp = fpp)
+    // a right-sized filter, and a one-item filter fed 256 more texts:
+    // saturated, it passes every batch row as a false positive to the
+    // verify join, which never changes the answer
+    val filler = (1 to 256).map(i => (-i.toLong, s"filler $i"))
+      .toDF("doc_id", "text")
+    for ((index, items) <- Seq((existing, 16L),
+        (existing.unionByName(filler), 1L))) {
+      val bloom = Dedup.dedupExactAgainstBloom(batch, index, "doc_id",
+          "text", expectedItems = items)
         .select("doc_id").as[Long].collect().sorted
-      assert(bloom.sameElements(plain), s"fpp=$fpp: ${bloom.toSeq}")
+      assert(bloom.sameElements(plain), s"expectedItems=$items: ${bloom.toSeq}")
     }
     assert(plain.sameElements(Array(3L, 4L, 5L))) // 2 is an exact dup of 1
     // empty index: the filter aggregate is null, the batch passes through
@@ -688,7 +692,7 @@ class DedupSpec extends SparkSpec {
       (1L, 2L, 0.9), (1L, 3L, 0.52), (3L, 4L, 0.4),
       (4L, 3L, 0.52), (5L, 6L, 0.12)
     ).toDF("id_a", "id_b", "jaccard")
-    val r = Dedup.dedupSensitivity(pairs, buckets = 20)
+    val r = Dedup.dedupSensitivity(pairs)
       .orderBy("tau_floor")
       .as[(Double, Long, Long)].collect()
     assert(r.toSeq == Seq((0.1, 2L, 6L), (0.5, 2L, 4L), (0.9, 2L, 2L)))

@@ -22,51 +22,6 @@ class MultimodalSpec extends SparkSpec {
     assert(r == 11L)
   }
 
-  test("payloadsFromDir: binaryFile ingest feeds meta/features unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-media")
-    java.nio.file.Files.write(dir.resolve("a.bin"),
-      "hello world".getBytes("UTF-8"))
-    java.nio.file.Files.write(dir.resolve("b.bin"),
-      Array.tabulate[Byte](32)(i => i.toByte))
-    val p = Multimodal.payloadsFromDir(spark, dir.toString)
-    assert(p.schema("payload").dataType == BinaryType)
-    val meta = Multimodal.metaTable(p)
-      .select("source", "n_bytes", "content_md5")
-      .as[(String, Long, String)].collect().map(r => r._1 -> r).toMap
-    assert(meta("a.bin")._2 == 11L)
-    assert(meta("b.bin")._2 == 32L)
-    // same bytes as the text-column twin → same md5 (shared pipeline)
-    val twin = Multimodal.metaTable(Multimodal.payloads(
-      Seq((1L, "hello world", "en", "s1")).toDF("doc_id", "text", "lang", "source"),
-      "doc_id", "text"))
-      .select("content_md5").as[String].head()
-    assert(meta("a.bin")._3 == twin)
-    // ids hash the dir-relative path: distinct per file, stable across
-    // reads, and same-named files in different subdirectories DON'T
-    // collide under recursiveFileLookup
-    val ids = p.select("doc_id").as[Long].collect()
-    assert(ids.distinct.length == 2)
-    assert(Multimodal.payloadsFromDir(spark, dir.toString)
-      .select("doc_id").as[Long].collect().sorted.sameElements(ids.sorted))
-    java.nio.file.Files.createDirectory(dir.resolve("sub"))
-    java.nio.file.Files.write(dir.resolve("sub/a.bin"),
-      "different bytes".getBytes("UTF-8"))
-    val recIds = Multimodal.payloadsFromDir(spark, dir.toString,
-      Map("recursiveFileLookup" -> "true")).select("doc_id").as[Long].collect()
-    assert(recIds.distinct.length == 3)
-    // globs/files would misalign the relative-path strip — rejected loudly
-    intercept[IllegalArgumentException] {
-      Multimodal.payloadsFromDir(spark, dir.toString + "/*.bin")
-    }
-    intercept[IllegalArgumentException] {
-      Multimodal.payloadsFromDir(spark, dir.resolve("a.bin").toString)
-    }
-    // features flow through the stub extractor with correct sizes
-    val feats = Multimodal.extractFeatures(p).collect()
-    assert(feats.map(_.n_bytes).sorted.sameElements(Array(11L, 32L)))
-    assert(feats.forall(_.features.length == 16))
-  }
-
   test("metaTable: size, md5, magic prefix") {
     val m = Multimodal.metaTable(Multimodal.payloads(docs, "doc_id", "text"))
       .orderBy("doc_id").collect()

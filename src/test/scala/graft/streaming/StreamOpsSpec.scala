@@ -313,8 +313,7 @@ class StreamOpsSpec extends SparkSpec {
         "the same!", "en", "s0"),          // normalizes into the index -> drop
       (5L, "!!! ??? ...", "en", "s0"))     // normalize-empty -> drop
     def run(df: org.apache.spark.sql.DataFrame) =
-      StreamOps.curateStream(df, Set("en"), 0.6,
-        scrubPii = false, existingHashes = Some(index))
+      StreamOps.curateStream(df, Set("en"), 0.6, existingHashes = Some(index))
     val in = MemoryStream[(Long, String, String, String)]
     val q = StreamOps.toMemorySink(
       run(in.toDF().toDF("doc_id", "text", "lang", "source")),
@@ -346,67 +345,6 @@ class StreamOpsSpec extends SparkSpec {
     val lowers = plan.collect { case p => p.expressions }.flatten
       .flatMap(_.collect { case e if e.prettyName == "lower" => e })
     assert(lowers.size == 1, plan.toString)
-  }
-
-  test("curateStream: blocklist gate drops any-hit rows on the stream, batch twin identical") {
-    implicit val sqlCtx = spark.sqlContext
-    val rows = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog and then the " +
-        "other fox follows along the river bank", "en", "s0"), // survives
-      (2L, "the casino opened late and the quick crowd walked in from " +
-        "the river bank to see the show begin", "en", "s0"))   // blocklist
-    def run(df: org.apache.spark.sql.DataFrame) =
-      StreamOps.curateStream(df, Set("en"), 0.6,
-        blocklist = Some(Seq("casino", "lottery")))
-    val in = MemoryStream[(Long, String, String, String)]
-    val q = StreamOps.toMemorySink(
-      run(in.toDF().toDF("doc_id", "text", "lang", "source")),
-      "curate_stream_bl", OutputMode.Append)
-    val streamed = try {
-      in.addData(rows: _*); q.processAllAvailable()
-      spark.table("curate_stream_bl").collect().toSet
-    } finally q.stop()
-    val batch = run(rows.toDF("doc_id", "text", "lang", "source"))
-      .collect().toSet
-    assert(streamed == batch)
-    assert(streamed.map(_.getAs[Long]("doc_id")) == Set(1L))
-  }
-
-  test("curateStream: near-dedup gate drops a one-word edit of the corpus, batch twin identical") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.{Dedup, Text}
-    val corpusText = "the known corpus document body is here and the " +
-      "words stay the same for all time in this place"
-    // the index is built over NORMALIZED corpus text — the same form
-    // the gate chain compares in
-    val index = Dedup.simhashes(
-      Seq((100L, corpusText)).toDF("doc_id", "text")
-        .withColumn("text", Text.normalize(col("text"))),
-      "doc_id", "text")
-    val rows = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog and then the " +
-        "other fox follows along the river bank", "en", "s0"), // survives
-      // normalizes onto the corpus text (case/punct differences only)
-      // -> hamming 0 against the index; SimHash distance of a real
-      // word edit is content-dependent, so the deterministic fixture
-      // pins the gate at the distance every corpus member sits at
-      (2L, "The KNOWN corpus document body is here, and the words stay " +
-        "the same for all time in this place!", "en", "s0"))   // dup
-    def run(df: org.apache.spark.sql.DataFrame) =
-      StreamOps.curateStream(df, Set("en"), 0.6,
-        nearIndex = Some(index), nearMaxHam = 3)
-    val in = MemoryStream[(Long, String, String, String)]
-    val q = StreamOps.toMemorySink(
-      run(in.toDF().toDF("doc_id", "text", "lang", "source")),
-      "curate_stream_nd", OutputMode.Append)
-    val streamed = try {
-      in.addData(rows: _*); q.processAllAvailable()
-      spark.table("curate_stream_nd").collect().toSet
-    } finally q.stop()
-    val batch = run(rows.toDF("doc_id", "text", "lang", "source"))
-      .collect().toSet
-    assert(streamed == batch)
-    assert(streamed.map(_.getAs[Long]("doc_id")) == Set(1L))
   }
 
   test("anomalyStream: windows close on watermark; rows equal the batch twin") {
