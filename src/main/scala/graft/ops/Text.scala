@@ -220,14 +220,17 @@ object Text {
     coalesce(signals.getField("lang"), lit("und"))
 
   /** C4-style text normalization: Spark's `lower`, then the
-    * `[a-z0-9]+` runs joined by single spaces
-    * ([[graft.functions.AsciiFold]], one byte pass) — byte-identical to
-    * the regex chain `trim(regexp_replace(regexp_replace(lower(t),
+    * `[a-z0-9]+` runs joined by single spaces — byte-identical to the
+    * regex chain `trim(regexp_replace(regexp_replace(lower(t),
     * "[^a-z0-9 ]", " "), " +", " "))`, which the DuckDB oracle runs
     * (its regexp_replace needs the 'g' flag) and TextSpec keeps as the
-    * reference. Map-only. */
+    * reference, under either `spark.sql.icu.caseMappings.enabled`.
+    * One expression: [[graft.functions.AsciiFold]] lower-cases with
+    * `lower`'s own mapping instead of planning a `Lower` node, whose
+    * first use in a JVM builds an ICU title-case table over every code
+    * point (see its doc). Map-only. */
   def normalize(text: Column): Column =
-    graft.functions.AsciiFold.col(lower(text))
+    graft.functions.AsciiFold.col(text)
 
   /** Token-budget document chunking — the training-data step that turns
     * documents into ≤ chunkTokens-token training rows on whitespace

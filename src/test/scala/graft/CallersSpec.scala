@@ -3,10 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source laws: every public def of the library objects under `ops/`,
-  * `ml/`, `app/` and `streaming/` has a caller in `src/main/scala` or
-  * `perfbench/src`, and every default-valued parameter of one is passed
-  * by some such call, so code and options that only specs reach do not
-  * pile up.
+  * `ml/`, `app/`, `streaming/` and `conf/` has a caller in
+  * `src/main/scala` or `perfbench/src`, and every default-valued
+  * parameter of one is passed by some such call, so code and options
+  * that only specs reach do not pile up.
   *
   * The sources are scanned with comments and literal text blanked. A
   * call site is `Object.name` anywhere, `name` unqualified in its own
@@ -46,7 +46,7 @@ class CallersSpec extends AnyFunSuite {
     "Dedup.jaccardPairsExact.maxCandidatePairs" ->
       "the candidate-mass refusal is safety code; DedupSpec trips it")
 
-  private val packages = Seq("ops", "ml", "app", "streaming")
+  private val packages = Seq("ops", "ml", "app", "streaming", "conf")
   private val objectDecl = raw"(?m)^object\s+(\w+)".r
   private val publicDef =
     raw"(?m)^  (?:(?:final|override|implicit)\s+)*def\s+(\w+)".r
@@ -196,7 +196,7 @@ class CallersSpec extends AnyFunSuite {
         "val t = s\"\"\"  ${k(\"\"\" \"\"\")}  \"\"\"; val c = ' '")
   }
 
-  test("every public def of ops/, ml/, app/ and streaming/ has a caller " +
+  test("every public def of ops/, ml/, app/, streaming/ and conf/ has a caller " +
       "in src/main or perfbench/src, or an allowlisted reason") {
     assert(declared.size > 100, s"scan found only ${declared.size} defs")
     val dead = (uncalled -- allowlist.keySet).toSeq.sorted

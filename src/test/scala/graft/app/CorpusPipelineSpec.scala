@@ -126,11 +126,11 @@ class CorpusPipelineSpec extends SparkSpec {
       "per row") {
     // a filter on the normalized text, pushed below the projection
     // that normalizes, would normalize a second time; each normalize
-    // holds one `lower`
+    // is one `ascii_fold`
     val plan = gateFrame().queryExecution.optimizedPlan
     val exprs = plan.collect { case p => p.expressions }.flatten
       .flatMap(_.collect { case e => e })
-    assert(exprs.count(_.prettyName == "lower") == 1, plan.toString)
+    assert(exprs.count(_.prettyName == "ascii_fold") == 1, plan.toString)
     assert(exprs.count(_.prettyName == "text_signals") == 1, plan.toString)
   }
 
@@ -145,7 +145,7 @@ class CorpusPipelineSpec extends SparkSpec {
     try {
       val stages = org.apache.spark.sql.execution.debug.codegenStringSeq(
         gateFrame().queryExecution.executedPlan)
-      assert(stages.exists(_._1.contains("lower(")), stages.map(_._1))
+      assert(stages.exists(_._1.contains("ascii_fold(")), stages.map(_._1))
       info(s"largest generated method: " +
         s"${stages.map(_._3.maxMethodCodeSize).max} bytes")
       stages.foreach { case (subtree, _, stats) =>

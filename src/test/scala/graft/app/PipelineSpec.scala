@@ -59,4 +59,24 @@ class PipelineSpec extends SparkSpec {
       TrainConfig(validSize = 100, validWindow = 10)
     }
   }
+
+  test("random search strategy: in-range, deterministic, budget-sized") {
+    val t = TuneConfig(dims = Seq(100, 1024),
+      learningRates = Seq(0.0001, 0.001), maxJobs = 7, strategy = "random")
+    val draws = t.draws
+    assert(draws.size == 7)
+    draws.foreach { case (d, lr) =>
+      assert(d >= 100 && d <= 1024, s"dim out of range: $d")
+      assert(lr >= 0.0001 && lr <= 0.001, s"lr out of range: $lr")
+    }
+    // deterministic re-draw
+    assert(t.draws == draws)
+    // the continuous range is actually explored (not endpoint-pinned)
+    assert(draws.map(_._2).distinct.size > 1)
+    // default stays grid; bad strategy rejected
+    assert(TuneConfig().strategy == "grid")
+    intercept[IllegalArgumentException] {
+      TuneConfig(strategy = "bayesian")
+    }
+  }
 }

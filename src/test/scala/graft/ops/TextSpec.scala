@@ -848,13 +848,17 @@ class TextSpec extends SparkSpec {
     spark.read.parquet(sf("sf0.001") + "/documents.parquet")
       .select("doc_id", "text")
 
-  /** `body` with ANSI on, then with it off; the conf is restored. */
-  private def bothAnsi(body: String => Unit): Unit = {
-    val key = "spark.sql.ansi.enabled"
+  /** `body` with the boolean conf `key` true, then false; the conf is
+    * restored. */
+  private def bothValues(key: String)(body: String => Unit): Unit = {
     val was = spark.conf.get(key)
     try Seq("true", "false").foreach { v => spark.conf.set(key, v); body(v) }
     finally spark.conf.set(key, was)
   }
+
+  /** `body` with ANSI on, then with it off. */
+  private def bothAnsi(body: String => Unit): Unit =
+    bothValues("spark.sql.ansi.enabled")(body)
 
   private def rows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
@@ -882,12 +886,26 @@ class TextSpec extends SparkSpec {
     assert(lang.get(null).contains("und"))
   }
 
+  /** Hand cases for the case-mapping kernel: invalid UTF-8 (a lone lead
+    * byte before ASCII, a 0xFF), U+0130, U+212A, Chinese only, symbols
+    * only, empty and NULL. */
+  private def caseDocs: DataFrame =
+    Seq((100L, "41C328FF"), (101L, "C3415A"), (102L, "FF20424F"))
+      .toDF("doc_id", "hex")
+      .select(col("doc_id"), unhex(col("hex")).cast("string").as("text"))
+      .union(Seq[(Long, String)]((103L, "\u0130"), (104L, "\u212A"),
+        (105L, "东京 北京"), (106L, "!?#$% &*() -- ..."), (107L, ""),
+        (108L, null)).toDF("doc_id", "text"))
+
   test("text kernels: normalize's ASCII fold equals the regex chain " +
       "(multi-byte, supplementary, KELVIN SIGN and U+0130 through lower)") {
-    Seq(edgeDocs, corpusDocs).foreach { d =>
-      bothAnsi { ansi =>
-        assert(rows(d.select(col("doc_id"), Text.normalize(col("text")))) ==
-          rows(d.select(col("doc_id"), normalizeRef(col("text")))), s"ansi=$ansi")
+    Seq(edgeDocs, corpusDocs, caseDocs).foreach { d =>
+      bothValues("spark.sql.icu.caseMappings.enabled") { icu =>
+        bothAnsi { ansi =>
+          assert(rows(d.select(col("doc_id"), Text.normalize(col("text")))) ==
+            rows(d.select(col("doc_id"), normalizeRef(col("text")))),
+            s"icu=$icu ansi=$ansi")
+        }
       }
     }
     val n = edgeDocs.select(col("text"), Text.normalize(col("text")))
@@ -895,6 +913,36 @@ class TextSpec extends SparkSpec {
     assert(n("\u212A \u212Aelvin") == "k kelvin") // lower maps K-sign to 'k'
     assert(n("Hello,   WORLD!! 42x ") == "hello world 42x")
     assert(n("café naïve ÀÉÎ 東京 the") == "caf na ve the")
+    val h = caseDocs.select(col("doc_id"), Text.normalize(col("text")))
+      .as[(Long, String)].collect().toMap
+    assert(h(100L) == "a" && h(101L) == "az" && h(102L) == "bo")
+    assert(h(103L) == "i" && h(104L) == "k") // U+0130 lowers to i + U+0307
+    assert(h(105L) == "" && h(106L) == "" && h(107L) == "")
+    assert(h(108L) == null)
+  }
+
+  test("text kernels: no case-mapping node is left on the curation path") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, InitCap, Lower, Upper}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    def caseMap(e: Expression) = e.exists {
+      case _: Lower | _: Upper | _: InitCap => true
+      case _ => false
+    }
+    def found(p: LogicalPlan): Boolean =
+      p.exists(_.expressions.exists(caseMap)) || p.subqueries.exists(found)
+    val norm = Text.normalize(col("text"))
+    assert(!caseMap(org.apache.spark.sql.graftbridge.ColumnBridge
+      .expression(norm)))
+    assert(found(edgeDocs.select(lower(col("text"))).queryExecution.analyzed))
+    val r = graft.app.CorpusPipeline.curate(
+      spark.read.parquet(sf("sf0.001") + "/documents.parquet"))
+    try {
+      val frames = Seq(r.chunks) ++ r.persisted ++ r.packed ++ r.survivors
+      assert(frames.size > 2)
+      frames.foreach { f =>
+        assert(!found(f.queryExecution.analyzed), f.queryExecution.analyzed)
+      }
+    } finally r.persisted.foreach(_.unpersist())
   }
 
   test("text kernels: the chunk kernel equals the transform(sequence) form " +

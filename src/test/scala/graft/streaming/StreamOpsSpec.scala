@@ -336,15 +336,15 @@ class StreamOpsSpec extends SparkSpec {
 
   test("curateStream: each row is normalized once") {
     // a non-empty filter pushed below the normalizing projection would
-    // normalize every row a second time; each normalize holds one
-    // `lower`. A parquet source keeps the plan (the optimizer evaluates
-    // a local relation's projections itself).
+    // normalize every row a second time; each normalize is one
+    // `ascii_fold`. A parquet source keeps the plan (the optimizer
+    // evaluates a local relation's projections itself).
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val plan = StreamOps.curateStream(docs, Set("en"), 0.6)
       .queryExecution.optimizedPlan
-    val lowers = plan.collect { case p => p.expressions }.flatten
-      .flatMap(_.collect { case e if e.prettyName == "lower" => e })
-    assert(lowers.size == 1, plan.toString)
+    val folds = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case e if e.prettyName == "ascii_fold" => e })
+    assert(folds.size == 1, plan.toString)
   }
 
   test("anomalyStream: windows close on watermark; rows equal the batch twin") {
